@@ -201,14 +201,6 @@ object Bench {
     val qs = results.map { case (k, (m, _)) => s"\"" + k + "\":" + fmt(m) }
       .mkString("{", ",", "}")
     val total = results.values.collect { case (m, _) if m >= 0 => m }.sum
-    // raw per-run triples ride INSIDE the artifact file (not only the
-    // stderr line): two rounds in a row a contaminated driver run
-    // produced a 6-17x phantom regression that needed a judge re-run to
-    // adjudicate because the artifact kept only the median — with the
-    // triples committed, one inflated run is self-evident from the file
-    val rawJson = results.map { case (k, (_, runs)) =>
-      s"\"" + k + "\":" + runs.map(r => f"$r%.4f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
     // Per-query medians: to STDERR (visible next to the raw-runs line)
     // and to a committed artifact file so regressions stay diffable
     // across rounds without depending on the driver's stdout tail.
@@ -217,10 +209,13 @@ object Bench {
     // 2,000-char stdout tail and truncates the "metric":"total" PREFIX,
     // leaving parsed=null. So the single stdout line is totals-only
     // (~100 chars — safely inside the tail at any query count).
+    // the raw per-run triples ride INSIDE the artifact too: with them
+    // committed, one contaminated (inflated) run is self-evident from
+    // the file, not only from the stderr line
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},""" +
       f""""calib_sec":$calibSec%.3f,"calib0_sec":$calib0Sec%.3f,""" +
-      s""""queries":$qs,"runs":$rawJson,"sf":"$sfDir"}"""
+      s""""queries":$qs,"runs":$raw,"sf":"$sfDir"}"""
     // distinct tag so `grep '"metric":"total"'` uniquely matches the
     // compact contract line (this one carries the ~3k-char median map)
     System.err.println(

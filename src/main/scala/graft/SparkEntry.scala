@@ -118,7 +118,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_star_join")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Built once per JVM. A `lazy val`, not a `val`: its initializer
+    * compiles to its own method, keeping the closure literal out of the
+    * object initializer and its 64 KB method limit.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- hypothesis testing (round-10 fifth wave) ---------------------
 

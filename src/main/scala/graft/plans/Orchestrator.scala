@@ -26,8 +26,11 @@ object Orchestrator {
 
   /** Run the fact chain for one snapshot of `events`-shaped data:
     * process -> curate -> popularity -> bin-pack (the next cycle's
-    * partition assignment). When `layerRoot` is given, processed and
-    * curated layers are persisted as snapshot-partitioned parquet.
+    * partition assignment). When `layerRoot` is given, the curated layer
+    * is persisted as snapshot-partitioned parquet that keeps every
+    * earlier snapshot (a re-run replaces only its own snapshots), and
+    * `curated`, `popularity` and `packPlan` read back only the
+    * snapshots in `raw`.
     */
   def runSnapshot(spark: SparkSession, raw: DataFrame,
                   layerRoot: Option[String] = None,
@@ -36,9 +39,7 @@ object Orchestrator {
     val curatedAll = SnapshotPipeline.curateEvents(processed)
 
     val curated = layerRoot match {
-      case Some(root) =>
-        Layers.writePartitioned(curatedAll, s"$root/curated_events")
-        Layers.readPartitioned(spark, s"$root/curated_events")
+      case Some(root) => Layers.writeSnapshots(curatedAll, s"$root/curated_events")
       case None => curatedAll
     }
 

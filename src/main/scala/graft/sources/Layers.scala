@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -74,6 +75,37 @@ object Layers {
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String] = Seq("day_date_id", "time_of_day_id")): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+
+  /** Snapshot-partitioned write that KEEPS the layer's other snapshots,
+    * then the read-back of exactly the snapshots written. `df` lands in
+    * `<path>/_staging` (partition discovery skips `_` dirs); each
+    * `day_date_id=…/time_of_day_id=…` dir written there then replaces
+    * its namesake in the layer (`PathIO.swapInto`). A re-run of a
+    * snapshot therefore replaces only that snapshot, and the layer
+    * accumulates every snapshot ever written — the reference's "layer
+    * is the replayable log" property, which a static overwrite of the
+    * whole layer loses.
+    */
+  def writeSnapshots(df: DataFrame, path: String): DataFrame = {
+    val spark = df.sparkSession
+    val staging = s"$path/_staging"
+    writePartitioned(df, staging)
+    val glob = new Path(s"$staging/day_date_id=*/time_of_day_id=*")
+    val dirs = Option(glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .globStatus(glob)).toSeq.flatten
+      .map(s => s"${s.getPath.getParent.getName}/${s.getPath.getName}")
+    dirs.foreach(d => PathIO.swapInto(spark, s"$staging/$d", s"$path/$d"))
+    PathIO.deleteDir(spark, staging)
+    if (dirs.isEmpty) {
+      // nothing written: the zero-row frame in the layer's column order
+      val parts = Seq("day_date_id", "time_of_day_id")
+      df.select((df.columns.filterNot(parts.contains) ++ parts).map(col): _*)
+        .limit(0)
+    } else {
+      spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+      spark.read.option("basePath", path).parquet(dirs.map(d => s"$path/$d"): _*)
+    }
+  }
 
   /** Read back a snapshot-partitioned layer with the partition columns
     * kept as STRINGS. Spark's partition-column type inference would turn

@@ -31,14 +31,16 @@ object PathIO {
   }
 
   /** Atomic-ish directory swap: rename `next` over `target` (delete the
-    * old target first). One write instead of write + copy, and no stale
-    * `.next` directory left behind.
+    * old target first, create its parent if missing). One write instead
+    * of write + copy, and no stale `.next` directory left behind. The
+    * rename result is CHECKED (Hadoop reports failure by boolean).
     */
   def swapInto(spark: SparkSession, next: String, target: String): Unit = {
     val f = fs(spark, target)
     val t = new Path(target)
     if (f.exists(t)) f.delete(t, true)
-    f.rename(new Path(next), t)
+    f.mkdirs(t.getParent)
+    require(f.rename(new Path(next), t), s"failed to move $next into place at $t")
   }
 
   /** Durable state replacement: write `df` to `target.next`, move the

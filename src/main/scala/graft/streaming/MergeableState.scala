@@ -1,0 +1,105 @@
+package graft.streaming
+
+import graft.sources.PathIO
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+
+/** The one merge-and-commit path of the additive streaming twins: a
+  * state table keyed by `keys`, whose every other column folds a batch
+  * partial in by one per-column monoid (`Sum`, `Max`, `Min`).
+  *
+  * Correctness rests on that monoid: the per-key merge is associative
+  * and commutative, so the state equals the one-shot table under ANY
+  * batch split — each twin's `Streaming*Spec` pins it for its columns.
+  * The join is null-safe on every key (NULL keys form real groups, as
+  * in the batch operators' groupBy), and the empty state is the
+  * partial's own zero-row frame, so the first commit records exactly
+  * the partial's schema.
+  *
+  * Commit protocol: merge → materialize (`localCheckpoint`) → sink →
+  * `PathIO.writeSwap`. A merge that is never committed leaves the
+  * state untouched, so a replayed batch after a failed sink merges
+  * against the same pre-batch totals and cannot double-count.
+  *
+  * Twins whose merge is not a per-column monoid (Budget's
+  * screen-then-spend, Burstiness's boundary gap, Drift's registered
+  * baseline) keep their own state logic and share only `accept` or
+  * `PathIO.writeSwap`.
+  */
+object MergeableState {
+
+  /** How one value column folds the batch side `b` into the state side
+    * `s` of a matched or one-sided key.
+    */
+  sealed trait Merge { def apply(s: Column, b: Column): Column }
+
+  /** Missing side counts as zero; the sum is cast back to `dataType`
+    * (a DECIMAL state keeps its scale across merges).
+    */
+  final case class Sum(dataType: String) extends Merge {
+    def apply(s: Column, b: Column): Column =
+      (coalesce(s, lit(0).cast(dataType)) + coalesce(b, lit(0).cast(dataType)))
+        .cast(dataType)
+  }
+
+  /** Long maximum with a missing side as 0 (0/1 indicator state). */
+  case object Max extends Merge {
+    def apply(s: Column, b: Column): Column =
+      greatest(coalesce(s, lit(0L)), coalesce(b, lit(0L)))
+  }
+
+  /** Minimum of the present sides (`least` skips NULLs). */
+  case object Min extends Merge {
+    def apply(s: Column, b: Column): Column = least(s, b)
+  }
+
+  /** Batch-side alias prefix inside the merge join. */
+  private val prefix = "__ms_"
+
+  /** Fold one batch's per-key `partial` (columns already named as in
+    * the state) into the state at `statePath`; returns the post-merge
+    * table (keys, then the merged columns in `merges` order). Pure:
+    * nothing is written until `accept` or `sink` commits it.
+    */
+  def merge(partial: DataFrame, keys: Seq[String],
+            merges: Seq[(String, Merge)], statePath: String): DataFrame = {
+    val names = keys ++ merges.map(_._1)
+    // Spark's analyzer is case-insensitive: compare lowercased
+    val lower = names.map(_.toLowerCase)
+    require(keys.nonEmpty && lower.distinct == lower &&
+      !lower.exists(_.startsWith(prefix)),
+      s"a state needs at least one key and distinct columns free of the " +
+        s"'$prefix' prefix: keys $keys, columns $names")
+    val p = partial.select(names.map(col): _*)
+    val state = PathIO.readSwapState(partial.sparkSession, statePath, p.limit(0))
+    def b(c: String) = col(prefix + c)
+    state.join(p.select(names.map(c => col(c).as(prefix + c)): _*),
+        keys.map(k => col(k) <=> b(k)).reduce(_ && _), "full_outer")
+      .select(keys.map(k => coalesce(col(k), b(k)).as(k)) ++
+        merges.map { case (c, m) => m(col(c), b(c)).as(c) }: _*)
+  }
+
+  /** Materialize `merged`, swap it in as the state, and return the
+    * materialized frame (which stays readable after the swap).
+    */
+  def accept(merged: DataFrame, statePath: String): DataFrame = {
+    val out = merged.localCheckpoint(true)
+    PathIO.writeSwap(out, statePath)
+    out
+  }
+
+  /** Streaming sink: per micro-batch, merge, hand the materialized
+    * state to `emit`, and commit only after `emit` succeeds.
+    */
+  def sink(stream: DataFrame, statePath: String)
+          (mergeBatch: DataFrame => DataFrame)
+          (emit: DataFrame => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val merged = mergeBatch(batch).localCheckpoint(true)
+        emit(merged)
+        PathIO.writeSwap(merged, statePath)
+      }
+}

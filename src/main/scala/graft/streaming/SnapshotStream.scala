@@ -2,6 +2,8 @@ package graft.streaming
 
 import graft.functions.TimeFns
 import graft.operators.{Relational, SnapshotPipeline}
+import graft.sources.PathIO
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -29,14 +31,27 @@ object SnapshotStream {
     * new object in layer N triggers layer N+1; the file source's listing
     * + checkpoint replaces the SNS choreography with effectively-once
     * semantics).
+    *
+    * The directory the source watches (the first glob component, else
+    * `path` itself) must have an existing parent when the stream
+    * starts: a watch under a missing or unmounted root would stream
+    * zero rows and report success. A glob that matches no files yet is
+    * legitimate — the layer fills as snapshots land.
     */
   def readJsonLayer(spark: SparkSession, path: String, schema: StructType,
-                    maxFilesPerTrigger: Int = 100): DataFrame =
+                    maxFilesPerTrigger: Int = 100): DataFrame = {
+    val watched = Iterator.iterate(new Path(path))(_.getParent)
+      .takeWhile(_ != null).filter(p => p.getName.exists("*?[{".contains(_)))
+      .toSeq.lastOption.getOrElse(new Path(path))
+    val parent = watched.getParent
+    require(parent == null || PathIO.exists(spark, parent.toString),
+      s"raw layer $path: parent directory $parent does not exist")
     spark.readStream
       .schema(schema)
       .option("multiLine", true)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(path)
+  }
 
   /** Snapshot-key assignment on a stream — same arithmetic expression as
     * batch (nearest 15-min slot; no time-dim join, no state).

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * `Metrics.twoProportionZ` of the concatenated batches — both read
   * through the shared `Metrics.twoProportionZFromCounts` closing.
   * NULL keys/arms/outcomes are dropped (the batch operator's view).
-  * Commit protocol is the shared `PathIO.writeSwap` retry discipline,
+  * Commit protocol is the shared `MergeableState` retry discipline,
   * so a replayed batch after a failed sink cannot double-count.
   *
   * Scale shape per batch: one conditional hash aggregate on the key
@@ -32,52 +32,31 @@ object StreamingAbTest {
 
   /** Merge one batch's arm counts into the state; returns the
     * post-merge per-key table (key, n_a, k_a, n_b, k_b). Caller must
-    * materialize before `commit` (acceptBatch does).
+    * materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, keyCol: String, armCol: String,
                  successCol: String, statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val arm1 = when(col(armCol).cast("long") =!= 0L, 1L).otherwise(0L)
     val succ = when(col(successCol).cast("long") =!= 0L, 1L).otherwise(0L)
     val partial = batch
       .filter(col(keyCol).isNotNull && col(armCol).isNotNull &&
         col(successCol).isNotNull)
-      .groupBy(col(keyCol).as("__k"))
-      .agg(sum(lit(1L) - arm1).cast("long").as("__na"),
-        sum((lit(1L) - arm1) * succ).cast("long").as("__ka"),
-        sum(arm1).cast("long").as("__nb"),
-        sum(arm1 * succ).cast("long").as("__kb"))
-    val empty = partial.limit(0)
-      .select(col("__k").as(keyCol), col("__na").as("n_a"),
-        col("__ka").as("k_a"), col("__nb").as("n_b"),
-        col("__kb").as("k_b"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial, col(keyCol) <=> col("__k"), "full_outer")
-      .select(coalesce(col(keyCol), col("__k")).as(keyCol),
-        (coalesce(col("n_a"), lit(0L)) + coalesce(col("__na"), lit(0L)))
-          .cast("long").as("n_a"),
-        (coalesce(col("k_a"), lit(0L)) + coalesce(col("__ka"), lit(0L)))
-          .cast("long").as("k_a"),
-        (coalesce(col("n_b"), lit(0L)) + coalesce(col("__nb"), lit(0L)))
-          .cast("long").as("n_b"),
-        (coalesce(col("k_b"), lit(0L)) + coalesce(col("__kb"), lit(0L)))
-          .cast("long").as("k_b"))
+      .groupBy(col(keyCol))
+      .agg(sum(lit(1L) - arm1).cast("long").as("n_a"),
+        sum((lit(1L) - arm1) * succ).cast("long").as("k_a"),
+        sum(arm1).cast("long").as("n_b"),
+        sum(arm1 * succ).cast("long").as("k_b"))
+    MergeableState.merge(partial, Seq(keyCol),
+      Seq("n_a", "k_a", "n_b", "k_b").map(_ -> Sum("long")), statePath)
   }
-
-  /** Swap in the merged arm-count table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-key arm-count table.
     */
   def acceptBatch(batch: DataFrame, keyCol: String, armCol: String,
-                  successCol: String, statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, keyCol, armCol, successCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  successCol: String, statePath: String): DataFrame =
+    MergeableState.accept(
+      mergeBatch(batch, keyCol, armCol, successCol, statePath), statePath)
 
   /** The significance card over the maintained state — q287's test
     * derived through the SAME `Metrics.twoProportionZFromCounts`

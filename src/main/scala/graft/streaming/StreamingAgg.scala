@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -20,58 +20,33 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * State discipline follows `StreamingBudget`: the MV is ONE parquet
   * row per key (bounded by key cardinality, not stream volume),
-  * committed via `PathIO.writeSwap` AFTER the returned frame is
+  * committed by `MergeableState` AFTER the returned frame is
   * materialized, with `readSwapState` healing interrupted swaps — a
   * replayed batch merges against the pre-commit totals, so retries
   * cannot double-count.
   */
 object StreamingAgg {
 
-  private val reserved = Set("__d", "__e", "__n", "__t")
-
   /** Merge one batch of raw events into the MV state; returns the
-    * post-merge MV. Caller must materialize the result before `commit`
+    * post-merge MV. Caller must materialize the result before committing
     * (acceptBatch/aggSink do).
     */
   def mergeBatch(batch: DataFrame, tsCol: String, typeCol: String,
                  valueCol: String, statePath: String): DataFrame = {
-    val clash = batch.columns.toSet.intersect(reserved)
-    require(clash.isEmpty,
-      s"batch columns collide with StreamingAgg bookkeeping names: $clash")
-    val spark = batch.sparkSession
     val partial = batch
-      .groupBy(date_format(col(tsCol), "yyyy-MM-dd").as("__d"),
-        col(typeCol).as("__e"))
-      .agg(count(lit(1)).as("__n"),
-        sum(col(valueCol).cast("decimal(18,2)")).as("__t"))
-    val empty = partial.limit(0)
-      .select(col("__d").as("day"), col("__e").as("event_type"),
-        col("__n").as("n"), col("__t").as("total"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("day") <=> col("__d") && col("event_type") <=> col("__e"),
-        "full_outer")
-      .select(
-        coalesce(col("day"), col("__d")).as("day"),
-        coalesce(col("event_type"), col("__e")).as("event_type"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("__n"), lit(0L))).as("n"),
-        (coalesce(col("total"), lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
-          + coalesce(col("__t"), lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)")))
-          .cast("decimal(18,2)").as("total"))
+      .groupBy(date_format(col(tsCol), "yyyy-MM-dd").as("day"),
+        col(typeCol).as("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col(valueCol).cast("decimal(18,2)")).as("total"))
+    MergeableState.merge(partial, Seq("day", "event_type"),
+      Seq("n" -> Sum("long"), "total" -> Sum("decimal(18,2)")), statePath)
   }
-
-  /** Swap in the merged MV (call AFTER materializing it). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized MV. */
   def acceptBatch(batch: DataFrame, tsCol: String, typeCol: String,
-                  valueCol: String, statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, tsCol, typeCol, valueCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  valueCol: String, statePath: String): DataFrame =
+    MergeableState.accept(
+      mergeBatch(batch, tsCol, typeCol, valueCol, statePath), statePath)
 
   /** Streaming sink: maintain the MV per micro-batch, hand the
     * post-merge MV to `sink`, commit only after it succeeds.
@@ -79,12 +54,6 @@ object StreamingAgg {
   def aggSink(stream: DataFrame, tsCol: String, typeCol: String,
               valueCol: String, statePath: String,
               sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeBatch(batch, tsCol, typeCol, valueCol, statePath)
-          .localCheckpoint(true)
-        sink(merged)
-        commit(statePath, merged)
-      }
+    MergeableState.sink(stream, statePath)(
+      mergeBatch(_, tsCol, typeCol, valueCol, statePath))(sink)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * correctness story and is require()-free by design — the CALLER's
   * batching defines basket closure.
   *
-  * Commit protocol is the shared `PathIO.writeSwap` retry discipline:
+  * Commit protocol is the shared `MergeableState` retry discipline:
   * merge → materialize → commit, so a replayed batch after a failed
   * sink cannot double-count. Scale shape per batch: the bounded
   * per-basket pair expansion plus one (item_a, item_b) full-outer
@@ -32,15 +32,12 @@ object StreamingBasket {
 
   /** Merge one batch's basket pair counts into the state; returns the
     * post-merge pair table (item_a, item_b, n_ab). Caller must
-    * materialize before `commit` (acceptBatch does). No reserved-name
-    * guard is needed: the first select projects the batch down to the
-    * two bookkeeping aliases, so caller columns cannot collide. NULL
-    * basket or item rows are dropped (a NULL basket key would weld all
-    * keyless rows into one phantom basket — see Basket.pairAffinity).
+    * materialize before committing (acceptBatch does). NULL basket or
+    * item rows are dropped (a NULL basket key would weld all keyless
+    * rows into one phantom basket — see Basket.pairAffinity).
     */
   def mergeBatch(batch: DataFrame, basketCol: String, itemCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = batch
       .filter(col(basketCol).isNotNull && col(itemCol).isNotNull)
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
@@ -49,34 +46,17 @@ object StreamingBasket {
       .agg(array_sort(collect_set(col("__i"))).as("__ids"))
       .filter(size(col("__ids")) > 1)
       .select(explode(graft.expressions.GraftFunctions.pairCombos(col("__ids"))).as("p"))
-      .groupBy(col("p.id_a").as("__na"), col("p.id_b").as("__nb"))
-      .agg(count(lit(1)).as("__n"))
-    val empty = partial.limit(0)
-      .select(col("__na").as("item_a"), col("__nb").as("item_b"),
-        col("__n").as("n_ab"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("item_a") <=> col("__na") && col("item_b") <=> col("__nb"),
-        "full_outer")
-      .select(
-        coalesce(col("item_a"), col("__na")).as("item_a"),
-        coalesce(col("item_b"), col("__nb")).as("item_b"),
-        (coalesce(col("n_ab"), lit(0L)) + coalesce(col("__n"), lit(0L)))
-          .cast("long").as("n_ab"))
+      .groupBy(col("p.id_a").as("item_a"), col("p.id_b").as("item_b"))
+      .agg(count(lit(1)).as("n_ab"))
+    MergeableState.merge(partial, Seq("item_a", "item_b"),
+      Seq("n_ab" -> Sum("long")), statePath)
   }
-
-  /** Swap in the merged pair table (call AFTER materializing it). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge pair table.
     */
   def acceptBatch(batch: DataFrame, basketCol: String, itemCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, basketCol, itemCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, basketCol, itemCol, statePath),
+      statePath)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Bootstrap
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,74 +20,40 @@ import org.apache.spark.sql.functions._
   * and the card reads through the SAME
   * `Bootstrap.poissonBootstrapFromReplicates` closing — q388 shares
   * q355's oracle verbatim. Commit protocol is the shared
-  * `PathIO.writeSwap` retry discipline.
+  * `MergeableState` retry discipline.
   *
   * Scale shape per batch: the reps× fan collapses in one hash
   * aggregate; state is one row per (group, replicate).
   */
 object StreamingBootstrap {
 
-  /** One batch's per-(group, replicate) partial sums, through the
-    * batch operator's exact fan path ([[Bootstrap.poissonReplicateSums]]
-    * — the 5-uniforms-per-digest scheme, shared so batch and stream
-    * can never diverge on a weight).
-    */
-  private def replicatePartials(batch: DataFrame, groupCol: String,
-                                keyCol: String, valCol: String,
-                                reps: Int, tag: String): DataFrame =
-    Bootstrap.poissonReplicateSums(batch, groupCol, keyCol, valCol,
-        reps, tag)
-      .select(col(groupCol).as("__g"), col("b").as("__b"),
-        col("n_rows").as("__bn"), col("sx").as("__bsx"),
-        col("w").as("__bw"), col("__swx").as("__bswx"))
-
   /** Merge one batch's replicate sums into the state; returns the
     * post-merge per-(group, replicate) table (grp, b, n, sx, w, swx).
-    * Caller must materialize before `commit` (acceptBatch does).
+    * Caller must materialize before committing (acceptBatch does). The
+    * batch partials come through the batch operator's exact fan path
+    * ([[Bootstrap.poissonReplicateSums]] — the 5-uniforms-per-digest
+    * scheme, shared so batch and stream can never diverge on a weight).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, keyCol: String,
                  valCol: String, statePath: String, reps: Int = 32,
                  tag: String = "pb"): DataFrame = {
-    val spark = batch.sparkSession
-    val partial = replicatePartials(batch, groupCol, keyCol, valCol,
-      reps, tag)
-    val empty = partial.limit(0)
-      .select(col("__g").as("grp"), col("__b").as("b"),
-        col("__bn").as("n"), col("__bsx").as("sx"), col("__bw").as("w"),
-        col("__bswx").as("swx"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("grp") <=> col("__g") && col("b") <=> col("__b"),
-        "full_outer")
-      .select(coalesce(col("grp"), col("__g")).as("grp"),
-        coalesce(col("b"), col("__b")).as("b"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("__bn"), lit(0L)))
-          .cast("long").as("n"),
-        (coalesce(col("sx"), lit(0).cast("decimal(38,2)")) +
-          coalesce(col("__bsx"), lit(0).cast("decimal(38,2)")))
-          .cast("decimal(38,2)").as("sx"),
-        (coalesce(col("w"), lit(0L)) + coalesce(col("__bw"), lit(0L)))
-          .cast("long").as("w"),
-        (coalesce(col("swx"), lit(0).cast("decimal(38,2)")) +
-          coalesce(col("__bswx"), lit(0).cast("decimal(38,2)")))
-          .cast("decimal(38,2)").as("swx"))
+    val partial = Bootstrap.poissonReplicateSums(batch, groupCol, keyCol,
+        valCol, reps, tag)
+      .select(col(groupCol).as("grp"), col("b"), col("n_rows").as("n"),
+        col("sx"), col("w"), col("__swx").as("swx"))
+    MergeableState.merge(partial, Seq("grp", "b"),
+      Seq("n" -> Sum("long"), "sx" -> Sum("decimal(38,2)"),
+        "w" -> Sum("long"), "swx" -> Sum("decimal(38,2)")), statePath)
   }
-
-  /** Swap in the merged replicate table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-(group, replicate) table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, keyCol: String,
                   valCol: String, statePath: String, reps: Int = 32,
-                  tag: String = "pb"): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, keyCol, valCol, statePath,
-      reps, tag).localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  tag: String = "pb"): DataFrame =
+    MergeableState.accept(mergeBatch(batch, groupCol, keyCol, valCol,
+      statePath, reps, tag), statePath)
 
   /** The bootstrap card over the maintained state — q355's screen,
     * derived through the SAME

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * through the shared `Resample.burstinessFromStats` closing, so
   * live and batch cards cannot diverge.
   *
-  * Commit protocol is the shared `PathIO.writeSwap` retry
+  * Commit protocol is the shared `MergeableState` retry
   * discipline: merge → materialize → commit, so a replayed batch
   * after a failed sink cannot double-count. Scale shape per batch:
   * the `gapStats` window+aggregate on the batch (batch-sized), one
@@ -41,7 +41,7 @@ object StreamingBurstiness {
 
   /** Merge one batch's gap statistics into the state; returns the
     * post-merge per-key table (key, n_events, n_gaps, s, q,
-    * first_ts, last_ts). Caller must materialize before `commit`
+    * first_ts, last_ts). Caller must materialize before committing
     * (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, keyCol: String, tsCol: String,
@@ -87,22 +87,13 @@ object StreamingBurstiness {
       .toDF("key", "n_events", "n_gaps", "s", "q", "first_ts", "last_ts")
   }
 
-  /** Swap in the merged gap-statistic table (call AFTER
-    * materializing).
-    */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
-
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-key gap-statistic table.
     */
   def acceptBatch(batch: DataFrame, keyCol: String, tsCol: String,
-                  tieCol: String, statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, keyCol, tsCol, tieCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  tieCol: String, statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, keyCol, tsCol, tieCol, statePath),
+      statePath)
 
   /** The burstiness card over the maintained state — q322's screen
     * (key, n_events, n_gaps, mean_gap_s, b), derived through the SAME

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Max
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (`StreamingCaptureSpec` pins both). The card reads through the
   * SAME `Profile.chapmanFromIndicators` closing the batch operator
   * uses — q373 shares q366's oracle verbatim. Commit protocol is the
-  * shared `PathIO.writeSwap` retry discipline.
+  * shared `MergeableState` retry discipline.
   *
   * Scale shape per batch: one hash aggregate on (group, key), one
   * full-outer equi-join into the state; state is one row per
@@ -30,47 +30,28 @@ object StreamingCapture {
 
   /** Merge one batch's capture indicators into the state; returns the
     * post-merge per-(group, key) table (grp, key, ia, ib). Caller
-    * must materialize before `commit` (acceptBatch does).
+    * must materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, keyCol: String,
                  inACol: String, inBCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = batch
       .filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
-      .groupBy(col(groupCol).as("__g"), col(keyCol).as("__k"))
-      .agg(max(col(inACol).cast("long")).as("__ba"),
-        max(col(inBCol).cast("long")).as("__bb"))
-    val empty = partial.limit(0)
-      .select(col("__g").as("grp"), col("__k").as("key"),
-        col("__ba").as("ia"), col("__bb").as("ib"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("grp") <=> col("__g") && col("key") <=> col("__k"),
-        "full_outer")
-      .select(coalesce(col("grp"), col("__g")).as("grp"),
-        coalesce(col("key"), col("__k")).as("key"),
-        greatest(coalesce(col("ia"), lit(0L)),
-          coalesce(col("__ba"), lit(0L))).as("ia"),
-        greatest(coalesce(col("ib"), lit(0L)),
-          coalesce(col("__bb"), lit(0L))).as("ib"))
+      .groupBy(col(groupCol).as("grp"), col(keyCol).as("key"))
+      .agg(max(col(inACol).cast("long")).as("ia"),
+        max(col(inBCol).cast("long")).as("ib"))
+    MergeableState.merge(partial, Seq("grp", "key"),
+      Seq("ia" -> Max, "ib" -> Max), statePath)
   }
-
-  /** Swap in the merged indicator table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-(group, key) indicator table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, keyCol: String,
                   inACol: String, inBCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, keyCol, inACol, inBCol,
-      statePath).localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, groupCol, keyCol, inACol,
+      inBCol, statePath), statePath)
 
   /** The Chapman card over the maintained state — q366's estimate,
     * derived through the SAME `Profile.chapmanFromIndicators` closing

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (`StreamingConcurrencySpec` pins it) and the derived card equals
   * `Resample.concurrency` of the concatenated intervals — both read
   * through the shared `Resample.concurrencyFromDeltas` closing.
-  * Commit protocol is the shared `PathIO.writeSwap` retry discipline,
+  * Commit protocol is the shared `MergeableState` retry discipline,
   * so a replayed batch after a failed sink cannot double-count.
   *
   * Scale shape per batch: one day-keyed hash aggregate over 2×batch
@@ -32,43 +32,30 @@ object StreamingConcurrency {
 
   /** Merge one batch's interval deltas into the state; returns the
     * post-merge per-day table (day, delta). Caller must materialize
-    * before `commit` (acceptBatch does).
+    * before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, startCol: String, endCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val iv = batch
       .filter(col(startCol).isNotNull && col(endCol).isNotNull &&
         col(endCol).cast("long") > col(startCol).cast("long"))
     val partial = iv
-      .select(col(startCol).cast("long").as("__day"), lit(1L).as("__d"))
-      .unionAll(iv.select(col(endCol).cast("long").as("__day"),
+      .select(col(startCol).cast("long").as("day"), lit(1L).as("__d"))
+      .unionAll(iv.select(col(endCol).cast("long").as("day"),
         lit(-1L).as("__d")))
-      .groupBy(col("__day"))
-      .agg(sum(col("__d")).cast("long").as("__delta"))
-    val empty = partial.limit(0)
-      .select(col("__day").as("day"), col("__delta").as("delta"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial, col("day") <=> col("__day"), "full_outer")
-      .select(coalesce(col("day"), col("__day")).as("day"),
-        (coalesce(col("delta"), lit(0L)) +
-          coalesce(col("__delta"), lit(0L))).cast("long").as("delta"))
+      .groupBy(col("day"))
+      .agg(sum(col("__d")).cast("long").as("delta"))
+    MergeableState.merge(partial, Seq("day"), Seq("delta" -> Sum("long")),
+      statePath)
   }
-
-  /** Swap in the merged delta table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-day delta table.
     */
   def acceptBatch(batch: DataFrame, startCol: String, endCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, startCol, endCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, startCol, endCol, statePath),
+      statePath)
 
   /** The in-flight card over the maintained state — q291's sweep-line
     * counts derived through the SAME `Resample.concurrencyFromDeltas`

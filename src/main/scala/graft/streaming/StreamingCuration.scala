@@ -129,12 +129,11 @@ object StreamingCuration {
   /** Screen one batch through all five stages. Pure — persists nothing.
     *
     * `idCol` contract: non-null, unique per row (it is the corpus'
-    * primary key everywhere this runs). For the record — round-15
-    * advisor note — the keep-first window orders ascending with nulls
-    * FIRST, so a null-id doc would win its hash group and a group of
-    * all-null ids would survive, where the pre-round-15 min-per-hash
-    * filter dropped null-id rows outright; this matches the batch
-    * `Dedup.dropExactDups` policy, which is the intended semantics.
+    * primary key everywhere this runs). The non-null half is ENFORCED:
+    * the keep-first window orders ascending with nulls FIRST, so a
+    * null-id doc would silently win its hash group — instead a null id
+    * among the gated docs fails the batch, checked inside the hash
+    * projection (no extra pass).
     *
     * @return (accepted rows, their content hashes, their band keys) —
     *         the two key frames are what `commit` appends on success
@@ -179,7 +178,10 @@ object StreamingCuration {
     // raw text would let case-insensitively-equal short docs (too few
     // tokens for MinHash band keys to rescue) slip past both the
     // intra-batch keep-first and the persisted cross-batch state table
-    val hashed = gated.withColumn("__h", md5(lower(col(textCol))))
+    val hashed = gated.withColumn("__h", coalesce(
+      assert_true(col(idCol).isNotNull,
+        lit(s"StreamingCuration: null $idCol — the id column must be non-null")),
+      md5(lower(col(textCol)))))
     val knownHashes = graft.sources.PathIO.readParquetOrEmpty(
       spark, s"$statePath/exact", hashed.select(col("__h")).limit(0))
     // checkpoint: this subtree (gates + hash anti-join + keep-first) is

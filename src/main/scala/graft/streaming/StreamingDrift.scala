@@ -40,12 +40,10 @@ object StreamingDrift {
 
   /** Build + commit the baseline histogram from a reference frame. */
   def registerBaseline(ref: DataFrame, valCol: String,
-                       statePath: String): Unit = {
-    val hist = ref.select(logBin(col(valCol)).as("bin"))
-      .groupBy(col("bin")).agg(count(lit(1)).cast("long").as("cb"))
-      .localCheckpoint(true)
-    PathIO.writeSwap(hist, statePath)
-  }
+                       statePath: String): Unit =
+    MergeableState.accept(ref.select(logBin(col(valCol)).as("bin"))
+      .groupBy(col("bin")).agg(count(lit(1)).cast("long").as("cb")),
+      statePath)
 
   /** Score one batch against the registered baseline: a single row
     * (n_rows, n_bins, psi). n_bins is the union-domain bin count the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * (`StreamingEssSpec` pins it). The card reads through the SAME
   * `Sampling.essFromStats` closing the batch operator uses — q347
   * shares q344's oracle verbatim. Commit protocol is the shared
-  * `PathIO.writeSwap` retry discipline.
+  * `MergeableState` retry discipline.
   *
   * Scale shape per batch: one hash aggregate on the group key, one
   * full-outer equi-join into the state; state is one row per group
@@ -30,49 +30,30 @@ object StreamingEss {
 
   /** Merge one batch's weight statistics into the state; returns the
     * post-merge per-group table (grp, n, s, q). Caller must
-    * materialize before `commit` (acceptBatch does).
+    * materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, weightCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = batch
       .filter(col(groupCol).isNotNull && col(weightCol).isNotNull &&
         col(weightCol) > 0)
-      .groupBy(col(groupCol).as("__g"))
-      .agg(count(lit(1)).cast("long").as("__n"),
-        sum(col(weightCol).cast("decimal(28,6)")).as("__bs"),
+      .groupBy(col(groupCol).as("grp"))
+      .agg(count(lit(1)).cast("long").as("n"),
+        sum(col(weightCol).cast("decimal(28,6)")).as("s"),
         sum((col(weightCol) * col(weightCol)).cast("decimal(38,6)"))
-          .as("__bq"))
-    val empty = partial.limit(0)
-      .select(col("__g").as("grp"), col("__n").as("n"),
-        col("__bs").as("s"), col("__bq").as("q"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial, col("grp") <=> col("__g"), "full_outer")
-      .select(coalesce(col("grp"), col("__g")).as("grp"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("__n"), lit(0L)))
-          .cast("long").as("n"),
-        (coalesce(col("s"), lit(0).cast("decimal(28,6)")) +
-          coalesce(col("__bs"), lit(0).cast("decimal(28,6)")))
-          .cast("decimal(28,6)").as("s"),
-        (coalesce(col("q"), lit(0).cast("decimal(38,6)")) +
-          coalesce(col("__bq"), lit(0).cast("decimal(38,6)")))
-          .cast("decimal(38,6)").as("q"))
+          .as("q"))
+    MergeableState.merge(partial, Seq("grp"),
+      Seq("n" -> Sum("long"), "s" -> Sum("decimal(28,6)"),
+        "q" -> Sum("decimal(38,6)")), statePath)
   }
-
-  /** Swap in the merged statistic table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-group statistic table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, weightCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, weightCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, groupCol, weightCol, statePath),
+      statePath)
 
   /** The ESS card over the maintained state — q344's screen, derived
     * through the SAME `Sampling.essFromStats` closing the batch

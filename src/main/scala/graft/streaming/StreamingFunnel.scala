@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Min
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * (min-merge is idempotent on replayed events), and the card's
   * equivalence to the one-shot first-occurrence computation.
   *
-  * Commit protocol is the shared `PathIO.writeSwap` retry discipline:
+  * Commit protocol is the shared `MergeableState` retry discipline:
   * merge → materialize → commit. Scale shape per batch: one (user,
   * step) min aggregate (batch-sized), full-outer-merged into the state
   * on the (user, step) key — an equi-join AQE skew-splits if one user
@@ -45,46 +45,30 @@ object StreamingFunnel {
 
   /** Merge one batch's per-(user, step) earliest micros into the
     * state; returns the post-merge state (user, et, tus). Caller must
-    * materialize before `commit` (acceptBatch does).
+    * materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, userCol: String, tsCol: String,
                  typeCol: String, steps: Seq[String],
                  statePath: String): DataFrame = {
     checkSteps(steps)
-    val spark = batch.sparkSession
     val partial = batch
       .filter(col(typeCol).isin(steps: _*) && col(userCol).isNotNull)
-      .select(col(userCol).as("__pu"), col(typeCol).as("__pe"),
-        unix_micros(col(tsCol)).as("__pt"))
-      .groupBy(col("__pu"), col("__pe"))
-      .agg(min(col("__pt")).as("__pt2"))
-    val empty = partial.limit(0)
-      .select(col("__pu").as("user"), col("__pe").as("et"),
-        col("__pt2").as("tus"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("user") === col("__pu") && col("et") === col("__pe"),
-        "full_outer")
-      .select(coalesce(col("user"), col("__pu")).as("user"),
-        coalesce(col("et"), col("__pe")).as("et"),
-        least(col("tus"), col("__pt2")).as("tus"))
+      .select(col(userCol).as("user"), col(typeCol).as("et"),
+        unix_micros(col(tsCol)).as("tus"))
+      .groupBy(col("user"), col("et"))
+      .agg(min(col("tus")).as("tus"))
+    MergeableState.merge(partial, Seq("user", "et"), Seq("tus" -> Min),
+      statePath)
   }
-
-  /** Swap in the merged state (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge state.
     */
   def acceptBatch(batch: DataFrame, userCol: String, tsCol: String,
                   typeCol: String, steps: Seq[String],
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, userCol, tsCol, typeCol, steps, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(
+      mergeBatch(batch, userCol, tsCol, typeCol, steps, statePath), statePath)
 
   /** The funnel card over the maintained (user, et, tus) state: one
     * row per step with the count of users whose first-occurrence chain

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * concatenated batches. NULL quasi values form real equivalence
   * classes (groupBy keeps them; the merge join is null-safe) — the
   * batch operator's view. Commit protocol is the shared
-  * `PathIO.writeSwap` retry discipline: merge → materialize → commit,
+  * `MergeableState` retry discipline: merge → materialize → commit,
   * so a replayed batch after a failed sink cannot double-count.
   *
   * Scale shape per batch: one hash aggregate on the quasi tuple
@@ -33,56 +33,26 @@ import org.apache.spark.sql.functions._
   */
 object StreamingKAnonymity {
 
-  private def partialName(c: String) = "__p_" + c
-
-  private def checkCols(quasiCols: Seq[String]): Unit = {
-    require(quasiCols.nonEmpty, "quasiCols must be non-empty")
-    // Spark's analyzer is case-insensitive: compare lowercased
-    val lower = quasiCols.map(_.toLowerCase)
-    require(lower.distinct == lower, s"duplicate quasiCols: $quasiCols")
-    val clash = lower.filter(c => c == "n" || c.startsWith("__p_"))
-    require(clash.isEmpty,
-      s"quasi columns collide with StreamingKAnonymity bookkeeping names: $clash")
-  }
-
   /** Merge one batch's class counts into the state; returns the
     * post-merge class-size table (quasiCols..., n). Caller must
-    * materialize before `commit` (acceptBatch does).
+    * materialize before committing (acceptBatch does). The merge
+    * rejects an empty, repeated or `n`-named (any case) quasi column.
     */
   def mergeBatch(batch: DataFrame, quasiCols: Seq[String],
                  statePath: String): DataFrame = {
-    checkCols(quasiCols)
-    val spark = batch.sparkSession
     val partial = batch
-      .groupBy(quasiCols.map(c => col(c).as(partialName(c))): _*)
-      .agg(count(lit(1)).as(partialName("n")))
-    val empty = partial.limit(0)
-      .select(quasiCols.map(c => col(partialName(c)).as(c)) :+
-        col(partialName("n")).as("n"): _*)
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        quasiCols.map(c => col(c) <=> col(partialName(c))).reduce(_ && _),
-        "full_outer")
-      .select(quasiCols.map(c =>
-        coalesce(col(c), col(partialName(c))).as(c)) :+
-        (coalesce(col("n"), lit(0L)) +
-          coalesce(col(partialName("n")), lit(0L))).cast("long").as("n"): _*)
+      .groupBy(quasiCols.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+    MergeableState.merge(partial, quasiCols, Seq("n" -> Sum("long")),
+      statePath)
   }
-
-  /** Swap in the merged class-size table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge class-size table.
     */
   def acceptBatch(batch: DataFrame, quasiCols: Seq[String],
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, quasiCols, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, quasiCols, statePath), statePath)
 
   /** The k-anonymity release card over the maintained state — q226's
     * histogram (class_size, n_classes, n_rows, violates_k), derived

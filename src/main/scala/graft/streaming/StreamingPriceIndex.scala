@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,51 +27,27 @@ object StreamingPriceIndex {
 
   /** Merge one batch's revenue/quantity cells into the state; returns
     * the post-merge cell table (grp, item, era, rev, qty). Caller
-    * must materialize before `commit` (acceptBatch does).
+    * must materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, itemCol: String,
                  eraCol: String, priceCol: String, qtyCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = graft.operators.Pareto
       .priceCells(batch, groupCol, itemCol, eraCol, priceCol, qtyCol)
-      .select(col("__g"), col("__i"), col("__e"),
-        col("__rev").as("__brev"), col("__qty").as("__bqty"))
-    val empty = partial.limit(0)
       .select(col("__g").as("grp"), col("__i").as("item"),
-        col("__e").as("era"), col("__brev").as("rev"),
-        col("__bqty").as("qty"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("grp") <=> col("__g") && col("item") <=> col("__i") &&
-          col("era") <=> col("__e"),
-        "full_outer")
-      .select(coalesce(col("grp"), col("__g")).as("grp"),
-        coalesce(col("item"), col("__i")).as("item"),
-        coalesce(col("era"), col("__e")).as("era"),
-        (coalesce(col("rev"), lit(0).cast("decimal(38,2)")) +
-          coalesce(col("__brev"), lit(0).cast("decimal(38,2)")))
-          .cast("decimal(38,2)").as("rev"),
-        (coalesce(col("qty"), lit(0).cast("decimal(38,2)")) +
-          coalesce(col("__bqty"), lit(0).cast("decimal(38,2)")))
-          .cast("decimal(38,2)").as("qty"))
+        col("__e").as("era"), col("__rev").as("rev"), col("__qty").as("qty"))
+    MergeableState.merge(partial, Seq("grp", "item", "era"),
+      Seq("rev", "qty").map(_ -> Sum("decimal(38,2)")), statePath)
   }
-
-  /** Swap in the merged cell table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge cell table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, itemCol: String,
                   eraCol: String, priceCol: String, qtyCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, itemCol, eraCol, priceCol,
-      qtyCol, statePath).localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, groupCol, itemCol, eraCol,
+      priceCol, qtyCol, statePath), statePath)
 
   /** The index card over the maintained state — q382's screen,
     * derived through the SAME `Pareto.priceIndicesFromCells` closing

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   * move a user's cohort EARLIER — the card self-corrects rather than
   * freezing a wrong first week.
   *
-  * Commit protocol is the shared `PathIO.writeSwap` retry discipline:
+  * Commit protocol is the shared `MergeableState` retry discipline:
   * merge → materialize → commit. Scale shape per batch: one distinct
   * (user, week) aggregate (batch-sized), full-outer-merged into the
   * state on the (user, week) key. State is ≤ |users| · |weeks| rows —
@@ -31,11 +32,11 @@ import org.apache.spark.sql.functions._
 object StreamingRetention {
 
   /** Merge one batch's (user, period) presence counts into the state;
-    * returns the post-merge state (user, week, n — the period column
-    * keeps its historical name whatever the grain). `grainDays` sets
-    * the period width: 7 (default) = the retention monitor's weeks,
-    * 1 = daily presence, the state [[activesView]] reads. Caller must
-    * materialize before `commit` (acceptBatch does).
+    * returns the post-merge state (user, week, n, grain — the period
+    * column keeps its historical name whatever the grain). `grainDays`
+    * sets the period width: 7 (default) = the retention monitor's
+    * weeks, 1 = daily presence, the state [[activesView]] reads. Caller
+    * must materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, userCol: String, tsCol: String,
                  statePath: String, grainDays: Int = 7): DataFrame = {
@@ -43,49 +44,36 @@ object StreamingRetention {
     val spark = batch.sparkSession
     val partial = batch
       .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(userCol).as("__pu"),
+      .select(col(userCol).as("user"),
         call_function("div", unix_micros(col(tsCol)), lit(86400000000L))
           .as("__pd"))
-      .select(col("__pu"),
+      .select(col("user"),
         call_function("div", col("__pd"), lit(grainDays.toLong))
-          .as("__pw"))
-      .groupBy(col("__pu"), col("__pw"))
-      .agg(count(lit(1)).as("__pn"))
-    val empty = partial.limit(0)
-      .select(col("__pu").as("user"), col("__pw").as("week"),
-        col("__pn").as("n"), lit(grainDays.toLong).as("grain"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
+          .as("week"))
+      .groupBy(col("user"), col("week"))
+      .agg(count(lit(1)).as("n"))
+    val merged = MergeableState.merge(partial, Seq("user", "week"),
+      Seq("n" -> Sum("long")), statePath)
     // the state RECORDS its grain: merging day-ids into a week-grain
     // state (or vice versa) would silently weld two period keyspaces,
-    // so a mismatch fails loudly here instead
-    val existing = state.select(col("grain")).limit(1).collect()
-    require(existing.isEmpty || existing(0).getLong(0) == grainDays.toLong,
-      s"state at $statePath has grain ${existing.headOption.map(_.getLong(0))
-        .getOrElse("?")} days; this merge uses $grainDays")
-    state.join(partial,
-        col("user") === col("__pu") && col("week") === col("__pw"),
-        "full_outer")
-      .select(coalesce(col("user"), col("__pu")).as("user"),
-        coalesce(col("week"), col("__pw")).as("week"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("__pn"), lit(0L)))
-          .cast("long").as("n"),
-        lit(grainDays.toLong).as("grain"))
+    // so a mismatch fails loudly here instead (read after the merge,
+    // whose state read heals an interrupted swap first)
+    val recorded = if (!PathIO.exists(spark, statePath)) None
+      else spark.read.parquet(statePath).select(col("grain")).limit(1)
+        .collect().headOption.map(_.getLong(0))
+    require(recorded.forall(_ == grainDays.toLong),
+      s"state at $statePath has grain ${recorded.getOrElse("?")} days; " +
+        s"this merge uses $grainDays")
+    merged.withColumn("grain", lit(grainDays.toLong))
   }
-
-  /** Swap in the merged state (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge state.
     */
   def acceptBatch(batch: DataFrame, userCol: String, tsCol: String,
-                  statePath: String, grainDays: Int = 7): DataFrame = {
-    val merged = mergeBatch(batch, userCol, tsCol, statePath, grainDays)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String, grainDays: Int = 7): DataFrame =
+    MergeableState.accept(
+      mergeBatch(batch, userCol, tsCol, statePath, grainDays), statePath)
 
   /** The retention card over the maintained (user, week, n) state:
     * cohort week = the user's min active week (derived here, so late

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (`StreamingRiskSpec` pins it). The card reads through the SAME
   * `Hypothesis.riskCardFromCells` closing the batch operator uses —
   * live and batch cards cannot diverge (q342 shares q326's oracle
-  * verbatim). Commit protocol is the shared `PathIO.writeSwap` retry
+  * verbatim). Commit protocol is the shared `MergeableState` retry
   * discipline: merge → materialize → commit, so a replayed batch
   * after a failed sink cannot double-count.
   *
@@ -32,52 +32,31 @@ object StreamingRisk {
 
   /** Merge one batch's 2×2 cells into the state; returns the
     * post-merge per-group table (grp, n11, n10, n01, n00). Caller
-    * must materialize before `commit` (acceptBatch does).
+    * must materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, exposedCol: String,
                  outcomeCol: String, statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val e = col(exposedCol).cast("long") =!= 0L
     val o = col(outcomeCol).cast("long") =!= 0L
     val partial = batch
       .filter(col(groupCol).isNotNull && col(exposedCol).isNotNull &&
         col(outcomeCol).isNotNull)
-      .groupBy(col(groupCol).as("__g"))
-      .agg(sum(when(e && o, 1L).otherwise(0L)).cast("long").as("__c11"),
-        sum(when(e && !o, 1L).otherwise(0L)).cast("long").as("__c10"),
-        sum(when(!e && o, 1L).otherwise(0L)).cast("long").as("__c01"),
-        sum(when(!e && !o, 1L).otherwise(0L)).cast("long").as("__c00"))
-    val empty = partial.limit(0)
-      .select(col("__g").as("grp"), col("__c11").as("n11"),
-        col("__c10").as("n10"), col("__c01").as("n01"),
-        col("__c00").as("n00"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial, col("grp") <=> col("__g"), "full_outer")
-      .select(coalesce(col("grp"), col("__g")).as("grp"),
-        (coalesce(col("n11"), lit(0L)) + coalesce(col("__c11"), lit(0L)))
-          .cast("long").as("n11"),
-        (coalesce(col("n10"), lit(0L)) + coalesce(col("__c10"), lit(0L)))
-          .cast("long").as("n10"),
-        (coalesce(col("n01"), lit(0L)) + coalesce(col("__c01"), lit(0L)))
-          .cast("long").as("n01"),
-        (coalesce(col("n00"), lit(0L)) + coalesce(col("__c00"), lit(0L)))
-          .cast("long").as("n00"))
+      .groupBy(col(groupCol).as("grp"))
+      .agg(sum(when(e && o, 1L).otherwise(0L)).cast("long").as("n11"),
+        sum(when(e && !o, 1L).otherwise(0L)).cast("long").as("n10"),
+        sum(when(!e && o, 1L).otherwise(0L)).cast("long").as("n01"),
+        sum(when(!e && !o, 1L).otherwise(0L)).cast("long").as("n00"))
+    MergeableState.merge(partial, Seq("grp"),
+      Seq("n11", "n10", "n01", "n00").map(_ -> Sum("long")), statePath)
   }
-
-  /** Swap in the merged cell table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-group cell table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, exposedCol: String,
-                  outcomeCol: String, statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, exposedCol, outcomeCol,
-      statePath).localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  outcomeCol: String, statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, groupCol, exposedCol,
+      outcomeCol, statePath), statePath)
 
   /** The risk card over the maintained state — q326's screen, derived
     * through the SAME `Hypothesis.riskCardFromCells` closing the

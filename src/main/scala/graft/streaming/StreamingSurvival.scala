@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * arrives as a NEW observation — retract the censored row first
   * (emit a compensating batch) or snapshot upstream per the CDC
   * contract; the state itself is append-additive. Commit protocol is
-  * the shared `PathIO.writeSwap` retry discipline: merge →
+  * the shared `MergeableState` retry discipline: merge →
   * materialize → commit, so a replayed batch after a failed sink
   * cannot double-count.
   *
@@ -36,48 +36,31 @@ object StreamingSurvival {
 
   /** Merge one batch's per-duration counts into the state; returns
     * the post-merge (duration, n_events, n_censored) table. Caller
-    * must materialize before `commit` (acceptBatch does). NULL and
+    * must materialize before committing (acceptBatch does). NULL and
     * negative durations and NULL event flags are dropped (the batch
     * `Survival` hygiene).
     */
   def mergeBatch(batch: DataFrame, durationCol: String, eventCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = batch
       .filter(col(durationCol).isNotNull && col(eventCol).isNotNull &&
         col(durationCol) >= 0)
-      .select(col(durationCol).cast("long").as("__d"),
+      .select(col(durationCol).cast("long").as("duration"),
         when(col(eventCol).cast("long") =!= 0L, 1L).otherwise(0L).as("__e"))
-      .groupBy(col("__d"))
-      .agg(sum(col("__e")).cast("long").as("__ne"),
-        (count(lit(1)) - sum(col("__e"))).cast("long").as("__nc"))
-    val empty = partial.limit(0)
-      .select(col("__d").as("duration"), col("__ne").as("n_events"),
-        col("__nc").as("n_censored"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial, col("duration") <=> col("__d"), "full_outer")
-      .select(
-        coalesce(col("duration"), col("__d")).as("duration"),
-        (coalesce(col("n_events"), lit(0L)) +
-          coalesce(col("__ne"), lit(0L))).cast("long").as("n_events"),
-        (coalesce(col("n_censored"), lit(0L)) +
-          coalesce(col("__nc"), lit(0L))).cast("long").as("n_censored"))
+      .groupBy(col("duration"))
+      .agg(sum(col("__e")).cast("long").as("n_events"),
+        (count(lit(1)) - sum(col("__e"))).cast("long").as("n_censored"))
+    MergeableState.merge(partial, Seq("duration"),
+      Seq("n_events", "n_censored").map(_ -> Sum("long")), statePath)
   }
-
-  /** Swap in the merged count table (call AFTER materializing it). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge count table.
     */
   def acceptBatch(batch: DataFrame, durationCol: String, eventCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, durationCol, eventCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, durationCol, eventCol, statePath),
+      statePath)
 
   /** The live Kaplan–Meier curve over the maintained state. */
   def kmView(counts: DataFrame, bucketWidth: Long = 4096L): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * `Pareto.excessMoments` fan, so the DECIMAL casts match to the
   * digit), and the card reads through the SAME
   * `Pareto.meanExcessFromMoments` closing — q379 shares q368's oracle
-  * verbatim. Commit protocol is the shared `PathIO.writeSwap` retry
+  * verbatim. Commit protocol is the shared `MergeableState` retry
   * discipline.
   *
   * Scale shape per batch: the thresholds×rows fan collapses in one
@@ -28,49 +28,26 @@ object StreamingTail {
 
   /** Merge one batch's excess moments into the state; returns the
     * post-merge per-(group, threshold) table (grp, u, n, se, sq).
-    * Caller must materialize before `commit` (acceptBatch does).
+    * Caller must materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, valCol: String,
                  thresholds: Seq[Double], statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = graft.operators.Pareto
       .excessMoments(batch, groupCol, valCol, thresholds)
-      .select(col("__g"), col("u").as("__u"),
-        col("n_exceed").as("__bn"), col("__se").as("__bse"),
-        col("__sq").as("__bsq"))
-    val empty = partial.limit(0)
-      .select(col("__g").as("grp"), col("__u").as("u"),
-        col("__bn").as("n"), col("__bse").as("se"), col("__bsq").as("sq"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("grp") <=> col("__g") && col("u") <=> col("__u"),
-        "full_outer")
-      .select(coalesce(col("grp"), col("__g")).as("grp"),
-        coalesce(col("u"), col("__u")).as("u"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("__bn"), lit(0L)))
-          .cast("long").as("n"),
-        (coalesce(col("se"), lit(0).cast("decimal(38,2)")) +
-          coalesce(col("__bse"), lit(0).cast("decimal(38,2)")))
-          .cast("decimal(38,2)").as("se"),
-        (coalesce(col("sq"), lit(0).cast("decimal(38,4)")) +
-          coalesce(col("__bsq"), lit(0).cast("decimal(38,4)")))
-          .cast("decimal(38,4)").as("sq"))
+      .select(col("__g").as("grp"), col("u"), col("n_exceed").as("n"),
+        col("__se").as("se"), col("__sq").as("sq"))
+    MergeableState.merge(partial, Seq("grp", "u"),
+      Seq("n" -> Sum("long"), "se" -> Sum("decimal(38,2)"),
+        "sq" -> Sum("decimal(38,4)")), statePath)
   }
-
-  /** Swap in the merged moment table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-(group, threshold) moment table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, valCol: String,
-                  thresholds: Seq[Double], statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, valCol, thresholds, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  thresholds: Seq[Double], statePath: String): DataFrame =
+    MergeableState.accept(
+      mergeBatch(batch, groupCol, valCol, thresholds, statePath), statePath)
 
   /** The mean-excess/GPD card over the maintained state — q368's
     * screen, derived through the SAME `Pareto.meanExcessFromMoments`

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextFns
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * the one-shot batch count table under ANY batch split
   * (`StreamingTopKSpec` pins it), and the derived top-k therefore
   * equals q134-family batch answers. Commit protocol is the shared
-  * `PathIO.writeSwap` retry discipline: merge → materialize → sink →
+  * `MergeableState` retry discipline: merge → materialize → sink →
   * commit, so a replayed batch after a failed sink cannot
   * double-count.
   *
@@ -32,51 +32,28 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object StreamingTopK {
 
-  private val reserved = Set("__g", "__t", "__n")
-
   /** Merge one batch's term counts into the state; returns the
-    * post-merge count table (group, term, n). Caller must materialize
-    * before `commit` (acceptBatch/topkSink do).
+    * post-merge count table (grp, term, n). Caller must materialize
+    * before committing (acceptBatch/topkSink do).
     */
   def mergeBatch(batch: DataFrame, textCol: String, groupCol: String,
                  statePath: String): DataFrame = {
-    val clash = batch.columns.toSet.intersect(reserved)
-    require(clash.isEmpty,
-      s"batch columns collide with StreamingTopK bookkeeping names: $clash")
-    val spark = batch.sparkSession
     val partial = batch
-      .select(col(groupCol).as("__g"),
-        explode(TextFns.tokens(col(textCol))).as("__t"))
-      .groupBy(col("__g"), col("__t"))
-      .agg(count(lit(1)).as("__n"))
-    val empty = partial.limit(0)
-      .select(col("__g").as("grp"), col("__t").as("term"),
-        col("__n").as("n"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col("grp") <=> col("__g") && col("term") <=> col("__t"),
-        "full_outer")
-      .select(
-        coalesce(col("grp"), col("__g")).as("grp"),
-        coalesce(col("term"), col("__t")).as("term"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("__n"), lit(0L)))
-          .cast("long").as("n"))
+      .select(col(groupCol).as("grp"),
+        explode(TextFns.tokens(col(textCol))).as("term"))
+      .groupBy(col("grp"), col("term"))
+      .agg(count(lit(1)).as("n"))
+    MergeableState.merge(partial, Seq("grp", "term"), Seq("n" -> Sum("long")),
+      statePath)
   }
-
-  /** Swap in the merged count table (call AFTER materializing it). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge count table.
     */
   def acceptBatch(batch: DataFrame, textCol: String, groupCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, textCol, groupCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, textCol, groupCol, statePath),
+      statePath)
 
   /** Exact top-k view of a count table: k best terms per group under
     * the total (n desc, term) order — rank-limited window, so the
@@ -97,12 +74,6 @@ object StreamingTopK {
   def topkSink(stream: DataFrame, textCol: String, groupCol: String,
                statePath: String, k: Int,
                sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeBatch(batch, textCol, groupCol, statePath)
-          .localCheckpoint(true)
-        sink(topK(merged, k))
-        commit(statePath, merged)
-      }
+    MergeableState.sink(stream, statePath)(
+      mergeBatch(_, textCol, groupCol, statePath))(m => sink(topK(m, k)))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * through the shared `Profile.topKDriftFromTotals` closing, so the
   * two cannot diverge. NULL groups/arms/keys/values are dropped (the
   * batch operator's view). Commit protocol is the shared
-  * `PathIO.writeSwap` retry discipline: merge → materialize →
+  * `MergeableState` retry discipline: merge → materialize →
   * commit, so a replayed batch after a failed sink cannot
   * double-count.
   *
@@ -36,12 +36,11 @@ object StreamingTopKDrift {
 
   /** Merge one batch's per-key value totals into the state; returns
     * the post-merge totals table (`groupCol`, arm, key, tot). Caller
-    * must materialize before `commit` (acceptBatch does).
+    * must materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, groupCol: String, armCol: String,
                  keyCol: String, valCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val arm = when(col(armCol).cast("long") =!= 0L, 1L).otherwise(0L)
     val partial = batch
       .filter(col(groupCol).isNotNull && col(armCol).isNotNull &&
@@ -49,38 +48,21 @@ object StreamingTopKDrift {
       .select(col(groupCol).as("__g"), arm.as("__arm"),
         col(keyCol).as("__key"),
         col(valCol).cast("decimal(18,2)").as("__v"))
-      .groupBy(col("__g"), col("__arm"), col("__key"))
-      .agg(sum(col("__v")).cast("decimal(38,2)").as("__tot"))
-    val empty = partial.limit(0)
-      .select(col("__g").as(groupCol), col("__arm").as("arm"),
-        col("__key").as("key"), col("__tot").as("tot"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial,
-        col(groupCol) <=> col("__g") && col("arm") <=> col("__arm") &&
-          col("key") <=> col("__key"), "full_outer")
-      .select(coalesce(col(groupCol), col("__g")).as(groupCol),
-        coalesce(col("arm"), col("__arm")).cast("long").as("arm"),
-        coalesce(col("key"), col("__key")).as("key"),
-        (coalesce(col("tot"), lit(0).cast("decimal(38,2)")) +
-          coalesce(col("__tot"), lit(0).cast("decimal(38,2)")))
-          .cast("decimal(38,2)").as("tot"))
+      .groupBy(col("__g").as(groupCol), col("__arm").as("arm"),
+        col("__key").as("key"))
+      .agg(sum(col("__v")).cast("decimal(38,2)").as("tot"))
+    MergeableState.merge(partial, Seq(groupCol, "arm", "key"),
+      Seq("tot" -> Sum("decimal(38,2)")), statePath)
   }
-
-  /** Swap in the merged totals table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge totals table.
     */
   def acceptBatch(batch: DataFrame, groupCol: String, armCol: String,
                   keyCol: String, valCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, groupCol, armCol, keyCol, valCol,
-      statePath).localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, groupCol, armCol, keyCol, valCol,
+      statePath), statePath)
 
   /** The drift card over the maintained state — `Profile.topKDrift`'s
     * output, derived on demand through the SAME

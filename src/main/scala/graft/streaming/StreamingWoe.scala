@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.PathIO
+import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * both read through the shared `Metrics.woeIvFromCounts` closing, so
   * the two cannot diverge. NULL bins and NULL labels are dropped (the
   * batch operator's view). Commit protocol is the shared
-  * `PathIO.writeSwap` retry discipline: merge → materialize → commit,
+  * `MergeableState` retry discipline: merge → materialize → commit,
   * so a replayed batch after a failed sink cannot double-count.
   *
   * Scale shape per batch: one hash aggregate on the bin key
@@ -34,44 +34,28 @@ object StreamingWoe {
 
   /** Merge one batch's class counts into the state; returns the
     * post-merge per-bin table (bin, n_pos, n_neg). Caller must
-    * materialize before `commit` (acceptBatch does).
+    * materialize before committing (acceptBatch does).
     */
   def mergeBatch(batch: DataFrame, binCol: String, labelCol: String,
                  statePath: String): DataFrame = {
-    val spark = batch.sparkSession
     val partial = batch
       .filter(col(binCol).isNotNull && col(labelCol).isNotNull)
-      .select(col(binCol).as("__bin"),
+      .select(col(binCol).as("bin"),
         when(col(labelCol).cast("long") =!= 0L, 1L).otherwise(0L).as("__y"))
-      .groupBy(col("__bin"))
-      .agg(sum(col("__y")).cast("long").as("__p"),
-        sum(lit(1L) - col("__y")).cast("long").as("__n"))
-    val empty = partial.limit(0)
-      .select(col("__bin").as("bin"), col("__p").as("n_pos"),
-        col("__n").as("n_neg"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
-    state.join(partial, col("bin") <=> col("__bin"), "full_outer")
-      .select(coalesce(col("bin"), col("__bin")).as("bin"),
-        (coalesce(col("n_pos"), lit(0L)) + coalesce(col("__p"), lit(0L)))
-          .cast("long").as("n_pos"),
-        (coalesce(col("n_neg"), lit(0L)) + coalesce(col("__n"), lit(0L)))
-          .cast("long").as("n_neg"))
+      .groupBy(col("bin"))
+      .agg(sum(col("__y")).cast("long").as("n_pos"),
+        sum(lit(1L) - col("__y")).cast("long").as("n_neg"))
+    MergeableState.merge(partial, Seq("bin"),
+      Seq("n_pos", "n_neg").map(_ -> Sum("long")), statePath)
   }
-
-  /** Swap in the merged class-count table (call AFTER materializing). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
 
   /** Merge + commit for batch callers; returns the materialized
     * post-merge per-bin class-count table.
     */
   def acceptBatch(batch: DataFrame, binCol: String, labelCol: String,
-                  statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, binCol, labelCol, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged
-  }
+                  statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, binCol, labelCol, statePath),
+      statePath)
 
   /** The WoE/IV card over the maintained state — q283's screen
     * (bin, n_pos, n_neg, woe, iv_contrib), derived on demand through

@@ -37,6 +37,37 @@ class OrchestratorSpec extends SparkSpec {
     res.packPlan.filter("group_id >= 2").count() shouldBe 0
   }
 
+  test("the curated layer keeps every snapshot; each cycle reads only its own") {
+    val root = Files.createTempDirectory("layers2").toString
+    val layer = s"$root/curated_events"
+    def snapshotDirs = new java.io.File(layer).listFiles().toSeq
+      .filter(_.getName.startsWith("day_date_id="))
+      .flatMap(_.listFiles().toSeq.map(_.getName)).sorted
+    val s1 = events((1L, "2026-01-11 17:01:00", 10L, "a"),
+      (2L, "2026-01-11 17:01:10", 11L, "a"), (3L, "2026-01-11 17:01:20", 12L, "b"))
+    Orchestrator.runSnapshot(spark, s1, Some(root), numGroups = 2, cap = 10L)
+    val s2 = events((4L, "2026-01-11 17:31:00", 20L, "c"),
+      (5L, "2026-01-11 17:31:10", 21L, "c"))
+    val r2 = Orchestrator.runSnapshot(spark, s2, Some(root), numGroups = 2, cap = 10L)
+    snapshotDirs.size shouldBe 2
+    // the second cycle's outputs are scoped to the second snapshot
+    r2.curated.count() shouldBe 2
+    r2.popularity.collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
+      Array(("c", 2L))
+    r2.packPlan.collect().map(_.getString(0)).toSeq shouldBe Seq("c")
+    // a re-run replaces only its own snapshot
+    val s2b = events((6L, "2026-01-11 17:31:00", 20L, "d"))
+    Orchestrator.runSnapshot(spark, s2b, Some(root), numGroups = 2, cap = 10L)
+    snapshotDirs.size shouldBe 2
+    // an empty cycle writes nothing and reads back nothing
+    val r0 = Orchestrator.runSnapshot(spark, events(), Some(root), numGroups = 2, cap = 10L)
+    (r0.curated.count(), r0.packPlan.count()) shouldBe ((0L, 0L))
+    r0.curated.columns.toSeq shouldBe r2.curated.columns.toSeq
+    graft.sources.Layers.readPartitioned(spark, layer)
+      .groupBy("time_of_day_id").count().collect().map(_.getLong(1)).sorted shouldBe
+      Array(1L, 3L)
+  }
+
   test("dimension upsert persists across snapshots, emits delta only") {
     val dim = Files.createTempDirectory("dim").toString + "/users"
     val s1 = events((1L, "2026-01-11 17:00:00", 10L, "a"),
