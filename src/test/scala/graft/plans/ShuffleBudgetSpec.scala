@@ -1,10 +1,6 @@
 package graft.plans
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Metrics-based shuffle-byte budget gate over the ENTIRE query
   * surface — the quantitative companion to `QueryPlanSpec`'s shape
@@ -17,14 +13,16 @@ import java.util.concurrent.atomic.AtomicLong
   * payload regression fails CI with a number, not a slow cluster.
   *
   * Accounting is a SparkListener summing `shuffleWriteMetrics
-  * .bytesWritten` over all task ends — deliberately NOT the final
-  * plan's SQLMetrics, because the iterative operators (PageRank, HITS,
-  * BPE, k-means, streaming state builds) run their heavy shuffles
-  * EAGERLY behind `localCheckpoint` during construction, outside the
-  * returned plan. The listener sees every job the entry runs.
-  * Event-bus quiescence uses a marker job (a shuffle-free 1-partition
-  * RDD count): the bus is FIFO, so once the marker's job-end is
-  * processed every prior task-end has been tallied.
+  * .bytesWritten` over task ends — deliberately NOT the final plan's
+  * SQLMetrics, because the iterative operators (PageRank, HITS, BPE,
+  * k-means, streaming state builds) run their heavy shuffles EAGERLY
+  * behind `localCheckpoint` during construction, outside the returned
+  * plan. `ShuffleTally` charges a query with the tasks of the jobs it
+  * started (tagged by a local property that AQE's stage jobs inherit)
+  * and reads its total only once all of those jobs have ended: under
+  * AQE a query's `count()` can return while a stage it no longer needs
+  * is still writing (q382's self-join ends as soon as its empty era-0
+  * side is known), and those bytes belong to that query, not the next.
   *
   * Budgets live in `src/test/resources/shuffle_budgets_sf0.01.json` as
   * RAW recorded bytes (diffable across rounds); the assertion allows
@@ -43,34 +41,6 @@ class ShuffleBudgetSpec extends SparkSpec {
     "src/test/resources/shuffle_budgets_sf0.01.json").getAbsoluteFile
   private val record = sys.env.get("SPARK_GRAFT_RECORD_BUDGETS").contains("1")
 
-  private object tally extends SparkListener {
-    val bytes = new AtomicLong(0L)
-    private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    @volatile private var latch: CountDownLatch = _
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      if (js.properties != null && "__graft_budget_marker__" ==
-        js.properties.getProperty("spark.job.description"))
-        markerJobs.add(js.jobId)
-    override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      if (markerJobs.remove(je.jobId)) {
-        val l = latch; if (l != null) l.countDown()
-      }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-    /** Block until the listener has processed every event posted so
-      * far (FIFO bus + a marker job that itself shuffles nothing).
-      */
-    def drain(): Unit = {
-      latch = new CountDownLatch(1)
-      spark.sparkContext.setJobDescription("__graft_budget_marker__")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(latch.await(60, TimeUnit.SECONDS), "listener bus drain timed out")
-    }
-  }
-
   private def measured(): Map[String, Long] = {
     assume(new java.io.File(s"$sfDir/lineitem.parquet").exists())
     // record mode honors SPARK_GRAFT_QUERIES so a change adding a few
@@ -86,16 +56,15 @@ class ShuffleBudgetSpec extends SparkSpec {
         SparkEntry.queries.filter { case (n, _) => qs(n) }
       case None => SparkEntry.queries
     }
-    spark.sparkContext.addSparkListener(tally)
-    try selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      tally.drain()
-      tally.bytes.set(0L)
-      fn(spark, sfDir).count()
-      spark.catalog.clearCache() // q46-style internal persists must not leak
-      tally.drain()
-      name -> tally.bytes.get()
-    }.toMap
-    finally spark.sparkContext.removeSparkListener(tally)
+    ShuffleTally.using(spark) { tally =>
+      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val (_, bytes) = tally.measure(name) {
+          fn(spark, sfDir).count()
+          spark.catalog.clearCache() // q46-style internal persists must not leak
+        }
+        name -> bytes
+      }.toMap
+    }
   }
 
   private def readBudgets(): Map[String, Long] = {

@@ -1,11 +1,8 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicLong
 
 /** Skewed-key stress gate — the complement to `ShuffleBudgetSpec`,
   * which measures BYTES and is blind to their DISTRIBUTION: a shuffle
@@ -62,30 +59,21 @@ class SkewStressSpec extends SparkSpec {
       col("id"),
       (col("id") % 97).cast("double").as("v"))
 
-  private object tally extends SparkListener {
-    val bytes = new AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-
   /** (seconds, shuffleBytes) for the FASTER of two runs — one repeat
     * is enough to shed a cold-cache first execution without turning
     * the spec into a benchmark.
     */
-  private def measure(f: => Long): (Double, Long) = {
-    spark.sparkContext.addSparkListener(tally)
-    try {
+  private def measure(f: => Long): (Double, Long) =
+    ShuffleTally.using(spark) { tally =>
       val runs = Seq.fill(2) {
-        tally.bytes.set(0L)
-        val t0 = System.nanoTime()
-        f
-        ((System.nanoTime() - t0) / 1e9, tally.bytes.get())
+        tally.measure("skew-stress run") {
+          val t0 = System.nanoTime()
+          f
+          (System.nanoTime() - t0) / 1e9
+        }
       }
       runs.minBy(_._1)
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
+    }
 
   private def withinEnvelope(what: String, skew: (Double, Long),
                              base: (Double, Long)): Unit = {
