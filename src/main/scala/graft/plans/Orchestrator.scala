@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.operators.{Relational, SnapshotPipeline, StreamsEtl}
-import graft.sources.Layers
+import graft.sources.{Layers, PathIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,14 +52,19 @@ object Orchestrator {
   /** Dimension upsert step for one snapshot (users-style chain):
     * incoming keys folded into the persisted dim, delta returned
     * (reference §3.2; empty delta short-circuits the write — F6).
+    *
+    * The dim is read with `incoming`'s schema (no schema-inference job)
+    * and must hold exactly `incoming`'s columns, else
+    * `IllegalArgumentException`. The rewrite is coalesced to one file
+    * per `spark.sql.files.maxPartitionBytes` of stored dim, so repeated
+    * upserts neither add a file each nor run a task per stale file.
     */
   def upsertDim(spark: SparkSession, incoming: DataFrame, dimPath: String,
                 keys: Seq[String]): DataFrame = {
     // absent dim = first snapshot; any OTHER read failure must propagate
     // (treating it as "empty" would overwrite the accumulated dim with
     // one batch's rows — silent state loss)
-    val current = graft.sources.PathIO.readSwapState(
-      spark, dimPath, incoming.limit(0))
+    val current = PathIO.readSwapStateAs(spark, dimPath, incoming.schema)
     // localCheckpoint cuts the lineage back to materialized partitions:
     // the delta must stay readable AFTER the dim swap below replaces the
     // files its plan would otherwise re-scan
@@ -68,7 +73,9 @@ object Orchestrator {
     if (!delta.isEmpty) {
       // shared durable state replacement: move-aside + checked renames
       // (PathIO.writeSwap), same discipline as StreamingBudget.commit
-      graft.sources.PathIO.writeSwap(current.unionByName(delta), dimPath)
+      val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+      val files = math.max(1L, (PathIO.dataBytes(spark, dimPath) + maxBytes - 1) / maxBytes)
+      PathIO.writeSwap(current.unionByName(delta).coalesce(files.toInt), dimPath)
     }
     delta
   }

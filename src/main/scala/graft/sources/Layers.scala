@@ -96,14 +96,16 @@ object Layers {
       .map(s => s"${s.getPath.getParent.getName}/${s.getPath.getName}")
     dirs.foreach(d => PathIO.swapInto(spark, s"$staging/$d", s"$path/$d"))
     PathIO.deleteDir(spark, staging)
-    if (dirs.isEmpty) {
-      // nothing written: the zero-row frame in the layer's column order
-      val parts = Seq("day_date_id", "time_of_day_id")
-      df.select((df.columns.filterNot(parts.contains) ++ parts).map(col): _*)
-        .limit(0)
-    } else {
+    // the layer's column order: data columns, then the partition keys
+    val parts = Seq("day_date_id", "time_of_day_id")
+    val layout = df.select((df.columns.filterNot(parts.contains) ++ parts).map(col): _*)
+    if (dirs.isEmpty) layout.limit(0) // nothing written: the zero-row frame
+    else {
+      // the frame was just written, so its schema is the files': read
+      // with it and skip the schema-inference job
       spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      spark.read.option("basePath", path).parquet(dirs.map(d => s"$path/$d"): _*)
+      spark.read.schema(layout.schema).option("basePath", path)
+        .parquet(dirs.map(d => s"$path/$d"): _*)
     }
   }
 
@@ -232,7 +234,11 @@ object Layers {
     * Re-running a succeeded load leaves the table unchanged.
     *
     * The target is created from the stage's column types when missing,
-    * so `createTableColumnTypes` in `props` applies to both.
+    * so `createTableColumnTypes` in `props` applies to both. The same
+    * transaction indexes the new target on (`day_date_id`,
+    * `time_of_day_id`), so the snapshot delete touches only that
+    * snapshot's rows instead of scanning a fact table that grows by a
+    * snapshot every 15 minutes.
     */
   def loadSnapshotJdbc(df: DataFrame, url: String, table: String,
                        props: java.util.Properties,
@@ -261,8 +267,11 @@ object Layers {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
       try {
-        if (!tableExists(conn, table))
+        if (!tableExists(conn, table)) {
           st.executeUpdate(s"CREATE TABLE $table AS SELECT * FROM $stage WITH NO DATA")
+          st.executeUpdate(
+            s"""CREATE INDEX ${table}__slot ON $table ("day_date_id", "time_of_day_id")""")
+        }
         val del = conn.prepareStatement(
           s"""DELETE FROM $table WHERE "day_date_id" = ? AND "time_of_day_id" = ?""")
         try { del.setString(1, dayDateId); del.setString(2, timeOfDayId); del.executeUpdate() }

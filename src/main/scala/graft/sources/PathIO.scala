@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Small filesystem helpers for state tables. A bare
   * `try read catch { _ => empty }` is a data-loss hazard: a TRANSIENT
@@ -102,6 +106,62 @@ object PathIO {
                     empty: => DataFrame): DataFrame = {
     healSwap(spark, target)
     readParquetOrEmpty(spark, target, empty)
+  }
+
+  /** `readSwapState` for a table whose schema the caller knows, with no
+    * schema-inference job: the table is read with `schema`. A
+    * schema-given read would silently null a column the table lacks and
+    * drop one it has extra, so the schema Spark stored in one data
+    * file's footer (read on the driver) must first have exactly
+    * `schema`'s column names and types, else `IllegalArgumentException`.
+    * An absent table reads as `schema`'s empty frame.
+    */
+  def readSwapStateAs(spark: SparkSession, target: String,
+                      schema: StructType): DataFrame = {
+    healSwap(spark, target)
+    if (!exists(spark, target))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else {
+      dataFiles(spark, target).headOption.foreach { f =>
+        val stored = footerSchema(spark, f)
+        val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+        def cols(s: StructType) = s.fields.toSeq.map { c =>
+          (if (caseSensitive) c.name else c.name.toLowerCase(java.util.Locale.ROOT), c.dataType.sql)
+        }.sorted
+        require(cols(stored) == cols(schema),
+          s"state table $target holds ${stored.toDDL}; the caller expects ${schema.toDDL}")
+      }
+      spark.read.schema(schema).parquet(target)
+    }
+  }
+
+  /** Total bytes of a table directory's data files; 0 when absent. */
+  def dataBytes(spark: SparkSession, path: String): Long =
+    dataFiles(spark, path).map(_.getLen).sum
+
+  /** The data files directly under `path` (Spark's `_`/`.` side files
+    * excluded), listed on the driver; empty when the path is absent.
+    */
+  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val f = fs(spark, path)
+    if (!f.exists(p)) Nil
+    else f.listStatus(p).toSeq.filter(s => s.isFile && !"_.".contains(s.getPath.getName.head))
+  }
+
+  /** The schema stored in a parquet file's footer: Spark's own row
+    * schema when Spark wrote the file, else the parquet schema
+    * converted. Read on the driver.
+    */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+    } finally reader.close()
   }
 
   /** The healing half of `readSwapState`, callable on its own (e.g.

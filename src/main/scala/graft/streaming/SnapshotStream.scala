@@ -19,8 +19,13 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale notes: state stores are keyed by the dedup/window keys and
   * bounded by the watermark — at 96 snapshots/day and a 30-minute
-  * watermark, state holds ~2 snapshots of keys regardless of history
-  * length. The dimension upsert holds NO stream state at all: it
+  * watermark, the dedup state holds the keys of the micro-batch's own
+  * snapshots and of those within twice the delay (~4 snapshots) of the
+  * previous micro-batch's newest event, regardless of history length. A
+  * 22-cycle backfill drained 4 snapshots per micro-batch ends with
+  * 54,600 dedup rows (8 snapshots of 6,825 keys); a dedup that never
+  * evicts held 150,150, every key of all 22 cycles. The dimension
+  * upsert holds NO stream state at all: it
   * anti-joins each micro-batch against the persisted dim (foreachBatch),
   * which keeps state inspectable and identical to the batch semantics
   * (reference D3/J4).
@@ -37,6 +42,15 @@ object SnapshotStream {
     * starts: a watch under a missing or unmounted root would stream
     * zero rows and report success. A glob that matches no files yet is
     * legitimate — the layer fills as snapshots land.
+    *
+    * Each micro-batch re-stats its (at most `maxFilesPerTrigger`) files
+    * through an in-memory file index, which lists with one Spark task
+    * per path once the paths exceed
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32): a
+    * 100-task job per micro-batch for files the source has already
+    * listed. The session conf is raised to at least `maxFilesPerTrigger`
+    * (never lowered) so those stats stay on the driver; a query clones
+    * the session's conf when it starts, so this must precede `start()`.
     */
   def readJsonLayer(spark: SparkSession, path: String, schema: StructType,
                     maxFilesPerTrigger: Int = 100): DataFrame = {
@@ -46,6 +60,9 @@ object SnapshotStream {
     val parent = watched.getParent
     require(parent == null || PathIO.exists(spark, parent.toString),
       s"raw layer $path: parent directory $parent does not exist")
+    val listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    if (spark.conf.get(listing).toInt < maxFilesPerTrigger)
+      spark.conf.set(listing, maxFilesPerTrigger.toLong)
     spark.readStream
       .schema(schema)
       .option("multiLine", true)
@@ -111,15 +128,26 @@ object SnapshotStream {
     *
     * The batch chain dedups with a min-event-id window (deterministic
     * keep-first); streaming can't run arbitrary windows, so the PK dedup
-    * is the watermarked `dropDuplicates` state store instead (reference
-    * D2 streaming semantics: within one snapshot, duplicate PK rows are
-    * equivalent shard overlaps, so which one survives is immaterial).
+    * is a watermarked state store instead (reference D2 streaming
+    * semantics: within one snapshot, duplicate PK rows are equivalent
+    * shard overlaps, so which one survives is immaterial).
+    *
+    * The dedup is `dropDuplicatesWithinWatermark` (`dropDuplicates` on
+    * keys without the event-time column never evicts): a key's first
+    * row is kept, and any later row with the same key is dropped until
+    * the watermark passes that first row's `ts` plus `watermark`; then
+    * the key's state is evicted. Every copy of a key lies in one
+    * 15-minute slot, well inside the 30-minute delay, so a copy that
+    * arrives after the eviction is already behind the watermark. Rows
+    * behind the watermark are dropped as late (the query's
+    * `numRowsDroppedByWatermark`): the delay is the stream's lateness
+    * bound.
     */
   def curatedStream(events: DataFrame, watermark: String = "30 minutes"): DataFrame =
     SnapshotPipeline.curateProjection(
       SnapshotPipeline.processEvents(events)
         .withWatermark("ts", watermark)
-        .dropDuplicates(Seq("user_id", "day_date_id", "time_of_day_id")))
+        .dropDuplicatesWithinWatermark(Seq("user_id", "day_date_id", "time_of_day_id")))
 
   /** Streaming gap-based sessions via Spark's native session_window —
     * the streaming counterpart of operators.Sessionize (same gap

@@ -80,4 +80,43 @@ class OrchestratorSpec extends SparkSpec {
     d2.collect().map(_.getLong(0)) shouldBe Array(12L)
     spark.read.parquet(dim).count() shouldBe 3
   }
+
+  test("repeated dimension upserts leave the dim in one parquet file") {
+    val dim = Files.createTempDirectory("dim_files").toString + "/users"
+    (0 until 5).foreach { i =>
+      val keys = events((i.toLong, "2026-01-11 17:00:00", 100L + i, "a"),
+        (10L + i, "2026-01-11 17:00:01", 200L + i, "a")).select("user_id")
+      Orchestrator.upsertDim(spark, keys, dim, Seq("user_id"))
+    }
+    new java.io.File(dim).list().count(_.endsWith(".parquet")) shouldBe 1
+    spark.read.parquet(dim).count() shouldBe 10
+  }
+
+  test("an upsert whose columns differ from the stored dim fails") {
+    import org.apache.spark.sql.functions.col
+    val dim = Files.createTempDirectory("dim_mismatch").toString + "/users"
+    Orchestrator.upsertDim(spark,
+      events((1L, "2026-01-11 17:00:00", 10L, "a")).select("user_id"), dim, Seq("user_id"))
+    val next = events((2L, "2026-01-11 17:15:00", 11L, "b"))
+    // an extra column, and a renamed one
+    an[Exception] should be thrownBy
+      Orchestrator.upsertDim(spark, next.select("user_id", "event_type"), dim, Seq("user_id"))
+    an[Exception] should be thrownBy
+      Orchestrator.upsertDim(spark, next.select(col("user_id").as("uid")), dim, Seq("uid"))
+    spark.read.parquet(dim).collect().map(_.getLong(0)) shouldBe Array(10L)
+  }
+
+  test("an upsert that changes a dim column's type fails and leaves the dim as it was") {
+    import org.apache.spark.sql.functions.col
+    val dim = Files.createTempDirectory("dim_retyped").toString + "/users"
+    Orchestrator.upsertDim(spark,
+      events((1L, "2026-01-11 17:00:00", 10L, "a")).select("user_id"), dim, Seq("user_id"))
+    val retyped = events((2L, "2026-01-11 17:15:00", 11L, "b"))
+      .select(col("user_id").cast("string").as("user_id"))
+    val e = the[IllegalArgumentException] thrownBy
+      Orchestrator.upsertDim(spark, retyped, dim, Seq("user_id"))
+    e.getMessage should include("user_id")
+    spark.read.parquet(dim).schema("user_id").dataType shouldBe LongType
+    spark.read.parquet(dim).collect().map(_.getLong(0)) shouldBe Array(10L)
+  }
 }

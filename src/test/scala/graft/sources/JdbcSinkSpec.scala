@@ -93,6 +93,22 @@ class JdbcSinkSpec extends SparkSpec {
     back.select("user_id").collect().map(_.getString(0)).sorted shouldBe (1 to 5).map(i => s"u$i").sorted
   }
 
+  test("the first load indexes the target on both snapshot columns") {
+    val table = "users_slot_index"
+    Layers.loadSnapshotJdbc(snapshot("20230101", "0930", 1 to 3), url, table, props, "20230101", "0930")
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      // Derby stores unquoted identifiers in upper case
+      val idx = conn.getMetaData.getIndexInfo(null, null, table.toUpperCase, false, false)
+      val byIndex = try Iterator.continually(idx).takeWhile(_.next())
+          .map(r => (r.getString("INDEX_NAME"), r.getShort("ORDINAL_POSITION"), r.getString("COLUMN_NAME")))
+          .toList
+        finally idx.close()
+      val indexed = byIndex.groupBy(_._1).values.map(_.sortBy(_._2).map(_._3)).toSeq
+      indexed should contain(List("day_date_id", "time_of_day_id"))
+    } finally conn.close()
+  }
+
   test("re-loading the same snapshot is idempotent; a new snapshot appends") {
     val table = "users_idem"
     val snap1 = snapshot("20230101", "0930", 1 to 5)

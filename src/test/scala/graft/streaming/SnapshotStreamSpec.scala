@@ -60,6 +60,41 @@ class SnapshotStreamSpec extends SparkSpec {
     streamed.count() shouldBe 2
   }
 
+  test("curated dedup state is evicted as the watermark passes each slot") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[Ev]
+    // A key's state lives until the watermark (newest ts - delay, as of
+    // the previous micro-batch) passes its first ts + delay: with a
+    // 15-minute delay and one 15-minute slot per micro-batch, at most
+    // the keys of the last 3 slots remain.
+    val q = SnapshotStream.curatedStream(in.toDF(), watermark = "15 minutes")
+      .writeStream.format("memory").queryName("curated_evicted")
+      .outputMode("append").start()
+    val users = 5
+    val start = ts("2026-01-11 17:00:00").getTime
+    var id = 0L
+    def row(slot: Int, u: Int, minute: Int) = {
+      id += 1
+      Ev(id, new Timestamp(start + (slot * 15L + minute) * 60000L), u.toLong, "stream", 4.0,
+        """{"k": 1}""")
+    }
+    val slots = 8
+    val stateRows = (0 until slots).map { k =>
+      // slot k's keys, plus a copy of user 1's slot k-1 row re-sent
+      // later in that slot, still inside the delay
+      val resent = if (k > 0) Seq(row(k - 1, 1, 7)) else Nil
+      in.addData((1 to users).map(u => row(k, u, u)) ++ resent: _*)
+      q.processAllAvailable()
+      q.lastProgress.stateOperators.head.numRowsTotal
+    }
+    q.stop()
+    all(stateRows) should be <= (3L * users)
+    // each slot keeps exactly its own keys: every re-sent copy was dropped
+    spark.table("curated_evicted").groupBy("time_of_day_id").count()
+      .collect().map(_.getLong(1)).toSeq shouldBe Seq.fill(slots)(users.toLong)
+  }
+
   test("windowed popularity emits per-window counts after watermark") {
     implicit val sq = spark.sqlContext
     import spark.implicits._

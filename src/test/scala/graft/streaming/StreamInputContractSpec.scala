@@ -36,6 +36,38 @@ class StreamInputContractSpec extends SparkSpec {
     e.getMessage should include("no_such_root")
   }
 
+  test("a raw-layer micro-batch stats its files on the driver, with no listing job") {
+    val dir = Files.createTempDirectory("raw_40").toString
+    val ckpt = Files.createTempDirectory("raw_40_ck").toString
+    (1 to 40).foreach { i =>
+      Files.writeString(java.nio.file.Paths.get(dir, f"shard$i%02d.json"),
+        s"""{"day_date_id": "20260111", "time_of_day_id": "1700", "data": [{"id": "$i"}]}""")
+    }
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    @volatile var rows = 0L
+    try {
+      val raw = SnapshotStream.readJsonLayer(spark, dir, Schemas.envelope(Schemas.rawStream))
+      SnapshotStream.runOnce(raw.writeStream.foreachBatch(
+        (b: org.apache.spark.sql.DataFrame, _: Long) => rows += b.count()), ckpt)
+      // a marker job: once the listener has seen it, it has seen every
+      // job posted before it
+      sc.setJobDescription("listing-check-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.contains("listing-check-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    rows shouldBe 40L
+    jobs.contains("listing-check-marker") shouldBe true
+    jobs.toArray.map(_.toString).filter(_.startsWith("Listing leaf files")) shouldBe empty
+  }
+
   test("a raw-layer glob with no files yet is legal and streams zero rows") {
     val dir = Files.createTempDirectory("raw_empty").toString
     val ckpt = Files.createTempDirectory("raw_empty_ck").toString
