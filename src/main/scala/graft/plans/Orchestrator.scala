@@ -64,7 +64,7 @@ object Orchestrator {
     // absent dim = first snapshot; any OTHER read failure must propagate
     // (treating it as "empty" would overwrite the accumulated dim with
     // one batch's rows — silent state loss)
-    val current = PathIO.readSwapStateAs(spark, dimPath, incoming.schema)
+    val current = PathIO.readSwapState(spark, dimPath, incoming.schema)
     // localCheckpoint cuts the lineage back to materialized partitions:
     // the delta must stay readable AFTER the dim swap below replaces the
     // files its plan would otherwise re-scan

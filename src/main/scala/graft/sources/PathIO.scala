@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Small filesystem helpers for state tables. A bare
   * `try read catch { _ => empty }` is a data-loss hazard: a TRANSIENT
@@ -20,12 +20,6 @@ object PathIO {
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
-
-  /** Read a parquet state table, or return `empty` ONLY when the path
-    * does not exist. Any other failure propagates.
-    */
-  def readParquetOrEmpty(spark: SparkSession, path: String, empty: => DataFrame): DataFrame =
-    if (exists(spark, path)) spark.read.parquet(path) else empty
 
   /** Delete a directory tree if present (state-partition retirement). */
   def deleteDir(spark: SparkSession, path: String): Unit = {
@@ -53,7 +47,7 @@ object PathIO {
     * state exists under a recoverable name — a crash can strand an
     * `.old`/`.next` directory but never leaves the target's history
     * unrecoverable, which matters because a MISSING state path reads
-    * as legitimate "no state yet" (`readParquetOrEmpty`) and would
+    * as legitimate "no state yet" (`readSwapState`) and would
     * silently reset whatever the state accumulates. Rename results are
     * CHECKED: Hadoop `FileSystem.rename` reports failure by boolean,
     * not exception.
@@ -92,44 +86,46 @@ object PathIO {
     if (hadTarget) f.delete(old, true)
   }
 
-  /** Read a `writeSwap`-managed state table, healing an interrupted
-    * swap: if the target is missing but `.old` exists (a crash fell
-    * between the two renames), the aside copy IS the current state —
-    * restore it before reading. Without this, the crash window would
-    * read as "no state yet" and silently reset the table.
+  /** THE read of a state table (dims and every streaming state), with
+    * no Spark job:
+    *   1. heal an interrupted swap: if the target is missing but `.old`
+    *      exists (a crash fell between `writeSwap`'s two renames), the
+    *      aside copy IS the current state — restore it before reading.
+    *      Without this, the crash window would read as "no state yet"
+    *      and silently reset the table;
+    *   2. an absent table reads as `schema`'s empty frame;
+    *   3. a present table must store exactly `schema`'s column names
+    *      and types, checked on the driver against one data file's
+    *      footer (partition columns — `k=v` directories — against the
+    *      path), else `IllegalArgumentException` naming both schemas. A
+    *      schema-given read would otherwise silently null a column the
+    *      table lacks and drop one it has extra;
+    *   4. the table is read with `schema`, so no schema-inference job
+    *      runs.
     *
     * Subject to the writeSwap CONCURRENCY CONTRACT above: never call
     * while a writeSwap on the same target may be in flight — healing
     * would race the swap's transient target-missing window.
     */
   def readSwapState(spark: SparkSession, target: String,
-                    empty: => DataFrame): DataFrame = {
-    healSwap(spark, target)
-    readParquetOrEmpty(spark, target, empty)
-  }
-
-  /** `readSwapState` for a table whose schema the caller knows, with no
-    * schema-inference job: the table is read with `schema`. A
-    * schema-given read would silently null a column the table lacks and
-    * drop one it has extra, so the schema Spark stored in one data
-    * file's footer (read on the driver) must first have exactly
-    * `schema`'s column names and types, else `IllegalArgumentException`.
-    * An absent table reads as `schema`'s empty frame.
-    */
-  def readSwapStateAs(spark: SparkSession, target: String,
-                      schema: StructType): DataFrame = {
+                    schema: StructType): DataFrame = {
     healSwap(spark, target)
     if (!exists(spark, target))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else {
-      dataFiles(spark, target).headOption.foreach { f =>
-        val stored = footerSchema(spark, f)
-        val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
-        def cols(s: StructType) = s.fields.toSeq.map { c =>
-          (if (caseSensitive) c.name else c.name.toLowerCase(java.util.Locale.ROOT), c.dataType.sql)
-        }.sorted
-        require(cols(stored) == cols(schema),
-          s"state table $target holds ${stored.toDDL}; the caller expects ${schema.toDDL}")
+      dataFiles(spark, target).take(1).foreach { file =>
+        val norm: String => String =
+          if (spark.sessionState.conf.caseSensitiveAnalysis) identity
+          else _.toLowerCase(java.util.Locale.ROOT)
+        val depth = file.getPath.depth - fs(spark, target).makeQualified(new Path(target)).depth
+        val parts = Iterator.iterate(file.getPath.getParent)(_.getParent).take(depth - 1)
+          .map(d => norm(d.getName.takeWhile(_ != '='))).toSeq
+        val stored = footerSchema(spark, file)
+        val (partCols, dataCols) = schema.fields.partition(c => parts.contains(norm(c.name)))
+        def cols(s: Seq[StructField]) = s.map(c => (norm(c.name), c.dataType.sql)).sorted
+        require(partCols.length == parts.length && cols(stored.fields) == cols(dataCols),
+          s"state table $target holds ${stored.toDDL}${parts.map(p => s", partition $p").mkString}; " +
+            s"the caller expects ${schema.toDDL}")
       }
       spark.read.schema(schema).parquet(target)
     }
@@ -139,14 +135,16 @@ object PathIO {
   def dataBytes(spark: SparkSession, path: String): Long =
     dataFiles(spark, path).map(_.getLen).sum
 
-  /** The data files directly under `path` (Spark's `_`/`.` side files
-    * excluded), listed on the driver; empty when the path is absent.
+  /** The data files under `path`, partition directories included
+    * (Spark's `_`/`.` side files and directories excluded), listed
+    * lazily on the driver; empty when the path is absent.
     */
-  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
-    val p = new Path(path)
+  private def dataFiles(spark: SparkSession, path: String): Iterator[FileStatus] = {
     val f = fs(spark, path)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq.filter(s => s.isFile && !"_.".contains(s.getPath.getName.head))
+    def under(dir: Path): Iterator[FileStatus] =
+      f.listStatus(dir).iterator.filterNot(s => "_.".contains(s.getPath.getName.head))
+        .flatMap(s => if (s.isDirectory) under(s.getPath) else Iterator(s))
+    if (!f.exists(new Path(path))) Iterator.empty else under(new Path(path))
   }
 
   /** The schema stored in a parquet file's footer: Spark's own row

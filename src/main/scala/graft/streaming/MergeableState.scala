@@ -4,6 +4,7 @@ import graft.sources.PathIO
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** The one merge-and-commit path of the additive streaming twins: a
   * state table keyed by `keys`, whose every other column folds a batch
@@ -13,9 +14,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * and commutative, so the state equals the one-shot table under ANY
   * batch split — each twin's `Streaming*Spec` pins it for its columns.
   * The join is null-safe on every key (NULL keys form real groups, as
-  * in the batch operators' groupBy), and the empty state is the
-  * partial's own zero-row frame, so the first commit records exactly
-  * the partial's schema.
+  * in the batch operators' groupBy). The state stores exactly
+  * [[stateSchema]]: the keys with the partial's types, then each merged
+  * column with its merge's output type — `Max` stores BIGINT whatever
+  * integral type the partial carries — and is read with it.
   *
   * Commit protocol: merge → materialize (`localCheckpoint`) → sink →
   * `PathIO.writeSwap`. A merge that is never committed leaves the
@@ -72,13 +74,23 @@ object MergeableState {
       s"a state needs at least one key and distinct columns free of the " +
         s"'$prefix' prefix: keys $keys, columns $names")
     val p = partial.select(names.map(col): _*)
-    val state = PathIO.readSwapState(partial.sparkSession, statePath, p.limit(0))
+    val state = PathIO.readSwapState(partial.sparkSession, statePath,
+      stateSchema(p, keys, merges))
     def b(c: String) = col(prefix + c)
     state.join(p.select(names.map(c => col(c).as(prefix + c)): _*),
         keys.map(k => col(k) <=> b(k)).reduce(_ && _), "full_outer")
       .select(keys.map(k => coalesce(col(k), b(k)).as(k)) ++
         merges.map { case (c, m) => m(col(c), b(c)).as(c) }: _*)
   }
+
+  /** The schema a state merging `partial` stores (analysis only, no
+    * job): `keys` with the partial's types, then each merged column
+    * with its merge's output type.
+    */
+  private[streaming] def stateSchema(partial: DataFrame, keys: Seq[String],
+                                     merges: Seq[(String, Merge)]): StructType =
+    partial.select(keys.map(col) ++
+      merges.map { case (c, m) => m(col(c), col(c)).as(c) }: _*).schema
 
   /** Materialize `merged`, swap it in as the state, and return the
     * materialized frame (which stays readable after the swap).

@@ -58,7 +58,7 @@ object StreamingBudget {
         s"(same guard discipline as AsOfJoin): $clash")
     val spark = batch.sparkSession
     val spent = PathIO.readSwapState(spark, statePath,
-        batch.select(col(groupCol), lit(0L).as("spent")).limit(0))
+        batch.select(col(groupCol), lit(0L).as("spent")).schema)
       .withColumnRenamed(groupCol, "__grp")
     val w = Window.partitionBy(col(groupCol))
       .orderBy(Sampling.saltedOrderKey("budget", col(keyCol)), col(keyCol))

@@ -50,11 +50,8 @@ object StreamingBurstiness {
     val partial = graft.operators.Resample
       .gapStats(batch, keyCol, tsCol, tieCol)
       .toDF("__k", "__ne", "__ng", "__s", "__q", "__min_ts", "__max_ts")
-    val empty = partial.limit(0)
-      .select(col("__k").as("key"), col("__ne").as("n_events"),
-        col("__ng").as("n_gaps"), col("__s").as("s"), col("__q").as("q"),
-        col("__min_ts").as("first_ts"), col("__max_ts").as("last_ts"))
-    val state = PathIO.readSwapState(spark, statePath, empty)
+    val state = PathIO.readSwapState(spark, statePath,
+      partial.toDF("key", "n_events", "n_gaps", "s", "q", "first_ts", "last_ts").schema)
     // boundary gap: batch's first second minus the state's last —
     // defined only when the key exists on both sides; negative means
     // an out-of-order batch and RAISES (the ordered-batch contract)

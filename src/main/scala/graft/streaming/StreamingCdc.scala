@@ -20,39 +20,34 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * (the tombstone's higher order wins; this is exactly why deletes
   * must be persisted, not filtered, in state).
   *
-  * State discipline follows `StreamingAgg`: one parquet row per key
-  * (bounded by key cardinality, not stream volume), swap-committed
-  * AFTER the merged frame is materialized, `readSwapState` healing
-  * interrupted swaps — a replayed batch re-merges idempotently (max
-  * of max is max).
+  * State discipline is the shared `MergeableState` commit (accept /
+  * sink): one parquet row per key (bounded by key cardinality, not
+  * stream volume), swap-committed AFTER the merged frame is
+  * materialized, `readSwapState` healing interrupted swaps — a
+  * replayed batch re-merges idempotently (max of max is max). Only
+  * the merge differs from the additive twins: a per-key keep-last,
+  * not a per-column monoid.
   */
 object StreamingCdc {
 
   /** Merge one changelog batch into the CDC state; returns the merged
-    * FULL state (tombstones included). Caller materializes before
-    * `commit` (acceptBatch does).
+    * FULL state (tombstones included). Pure: `MergeableState.accept`
+    * or `sink` materializes and commits it.
     */
   def mergeBatch(batch: DataFrame, keyCol: String, orderCols: Seq[String],
                  statePath: String): DataFrame = {
     val spark = batch.sparkSession
     val ord = orderCols.map(col)
     val batchLast = Relational.keepLast(batch, keyCol, ord)
-    val state = PathIO.readSwapState(spark, statePath, batchLast.limit(0))
+    val state = PathIO.readSwapState(spark, statePath, batchLast.schema)
     Relational.keepLast(state.unionByName(batchLast), keyCol, ord)
   }
 
-  /** Swap in the merged state (call AFTER materializing it). */
-  def commit(statePath: String, merged: DataFrame): Unit =
-    PathIO.writeSwap(merged, statePath)
-
   /** Merge + commit; returns the LIVE VIEW (tombstones filtered). */
   def acceptBatch(batch: DataFrame, keyCol: String, orderCols: Seq[String],
-                  isDelete: Column, statePath: String): DataFrame = {
-    val merged = mergeBatch(batch, keyCol, orderCols, statePath)
-      .localCheckpoint(true)
-    commit(statePath, merged)
-    merged.filter(!isDelete)
-  }
+                  isDelete: Column, statePath: String): DataFrame =
+    MergeableState.accept(mergeBatch(batch, keyCol, orderCols, statePath), statePath)
+      .filter(!isDelete)
 
   /** Streaming sink: maintain CDC state per micro-batch, hand the live
     * view to `sink`, commit only after it succeeds.
@@ -60,12 +55,6 @@ object StreamingCdc {
   def cdcSink(stream: DataFrame, keyCol: String, orderCols: Seq[String],
               isDelete: Column, statePath: String,
               sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeBatch(batch, keyCol, orderCols, statePath)
-          .localCheckpoint(true)
-        sink(merged.filter(!isDelete))
-        commit(statePath, merged)
-      }
+    MergeableState.sink(stream, statePath)(
+      mergeBatch(_, keyCol, orderCols, statePath))(m => sink(m.filter(!isDelete)))
 }

@@ -5,6 +5,7 @@ import graft.sources.PathIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /** Incrementally maintained connected components over a STREAM of
   * candidate-pair edges — the cluster table of a continuously-ingested
@@ -84,19 +85,13 @@ object StreamingComponents {
       return labeling(spark, statePath, e.schema("id_a").dataType)
     }
 
-    // the bucket partition column's read-back type depends on session
-    // conf (partition type inference yields int/long; with inference
-    // disabled — which `Layers.readLayer` sets — it's a string):
-    // normalize to int so unions and collects below are type-stable.
     // Persisted for the tick: three consumers (touched detection, the
     // touched sub-state, the carried co-residents) would otherwise
     // each re-list and re-scan the bucket directories — at thousands
     // of buckets the listing alone dominates a sparse tick.
-    val state = PathIO.readParquetOrEmpty(spark, statePath,
+    val state = PathIO.readSwapState(spark, statePath,
         e.select(col("id_a").as("node"), col("id_a").as("component"),
-          lit(0).as("bucket")).limit(0))
-      .withColumn("bucket", col("bucket").cast("int"))
-      .persist()
+          lit(0).as("bucket")).schema).persist()
 
     val endpoints = e.select(explode(array(col("id_a"), col("id_b"))).as("node"))
       .distinct()
@@ -158,16 +153,13 @@ object StreamingComponents {
     result
   }
 
-  /** The current full labeling (node, component). */
+  /** The current full labeling (node, component). The state stores
+    * `bucket` as its INT partition column.
+    */
   def labeling(spark: SparkSession, statePath: String,
-               idType: org.apache.spark.sql.types.DataType
-                 = org.apache.spark.sql.types.LongType): DataFrame =
-    PathIO.readParquetOrEmpty(spark, statePath,
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", idType),
-            org.apache.spark.sql.types.StructField("component", idType),
-            org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType)))))
+               idType: DataType = LongType): DataFrame =
+    PathIO.readSwapState(spark, statePath, new StructType()
+        .add("node", idType).add("component", idType).add("bucket", IntegerType))
       .select("node", "component")
 
   /** Streaming sink: fold each micro-batch of edges into the state

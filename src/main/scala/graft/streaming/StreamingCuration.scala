@@ -43,10 +43,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object StreamingCuration {
 
-  private def emptyGrams(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Int)].toDF("gram", "n")
-  }
+  private val evalGramSchema =
+    new org.apache.spark.sql.types.StructType().add("gram", "string").add("n", "int")
 
   /** Driver-side cache of the collected eval-gram table, keyed by the
     * swap directory's committed file listing: re-collect ONLY when a
@@ -81,8 +79,7 @@ object StreamingCuration {
     if (hit != null && hit._1 == fp) (hit._2, hit._3, hit._4)
     else {
       gramStateReads.incrementAndGet()
-      val rows = graft.sources.PathIO.readParquetOrEmpty(
-        spark, path, emptyGrams(spark)).collect()
+      val rows = graft.sources.PathIO.readSwapState(spark, path, evalGramSchema).collect()
       val set = new java.util.HashSet[String](rows.length * 2)
       rows.foreach(r => set.add(r.getString(0)))
       val n = if (rows.isEmpty) 0 else rows(0).getInt(1)
@@ -182,8 +179,8 @@ object StreamingCuration {
       assert_true(col(idCol).isNotNull,
         lit(s"StreamingCuration: null $idCol — the id column must be non-null")),
       md5(lower(col(textCol)))))
-    val knownHashes = graft.sources.PathIO.readParquetOrEmpty(
-      spark, s"$statePath/exact", hashed.select(col("__h")).limit(0))
+    val knownHashes = graft.sources.PathIO.readSwapState(
+      spark, s"$statePath/exact", hashed.select(col("__h")).schema)
     // checkpoint: this subtree (gates + hash anti-join + keep-first) is
     // read by THREE consumers — the band-key materialization, the
     // accepted anti-join, and the hash commit — and would re-run per

@@ -54,8 +54,7 @@ object StreamingDedup {
 
     // absent table = legitimately empty state; real read errors propagate
     // (a swallowed transient error would re-accept known near-dups)
-    val known = graft.sources.PathIO.readParquetOrEmpty(
-      spark, bandTablePath, keys.limit(0))
+    val known = graft.sources.PathIO.readSwapState(spark, bandTablePath, keys.schema)
 
     // reject: collides with the accepted corpus...
     val hitsCorpus = keys.join(known, Seq("band_key"), "left_semi")

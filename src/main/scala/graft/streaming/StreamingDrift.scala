@@ -55,9 +55,7 @@ object StreamingDrift {
     val spark = batch.sparkSession
     val cur = batch.select(logBin(col(valCol)).as("__bin"))
       .groupBy(col("__bin")).agg(count(lit(1)).cast("long").as("__ca"))
-    val empty = cur.limit(0)
-      .select(col("__bin").as("bin"), col("__ca").as("cb"))
-    val base = PathIO.readSwapState(spark, statePath, empty)
+    val base = PathIO.readSwapState(spark, statePath, cur.toDF("bin", "cb").schema)
     val joined = base.join(cur, col("bin") <=> col("__bin"), "full_outer")
       .select(coalesce(col("bin"), col("__bin")).as("bin"),
         coalesce(col("cb"), lit(0L)).as("cb"),

@@ -62,8 +62,7 @@ object StreamingEmbedDedup {
           .as("band_key"))
       .localCheckpoint(true)
 
-    val known = graft.sources.PathIO.readParquetOrEmpty(
-      spark, bandTablePath, keys.limit(0))
+    val known = graft.sources.PathIO.readSwapState(spark, bandTablePath, keys.schema)
 
     val hitsCorpus = keys.join(known, Seq("band_key"), "left_semi")
       .select(col("doc")).distinct()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.PathIO
-import graft.streaming.MergeableState.Sum
+import graft.streaming.MergeableState.{Max, Sum}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,19 +52,19 @@ object StreamingRetention {
           .as("week"))
       .groupBy(col("user"), col("week"))
       .agg(count(lit(1)).as("n"))
-    val merged = MergeableState.merge(partial, Seq("user", "week"),
-      Seq("n" -> Sum("long")), statePath)
+      .withColumn("grain", lit(grainDays.toLong))
+    val keys = Seq("user", "week")
+    val merges = Seq("n" -> Sum("long"), "grain" -> Max)
     // the state RECORDS its grain: merging day-ids into a week-grain
     // state (or vice versa) would silently weld two period keyspaces,
-    // so a mismatch fails loudly here instead (read after the merge,
-    // whose state read heals an interrupted swap first)
-    val recorded = if (!PathIO.exists(spark, statePath)) None
-      else spark.read.parquet(statePath).select(col("grain")).limit(1)
-        .collect().headOption.map(_.getLong(0))
+    // so a mismatch fails loudly here instead
+    val recorded = PathIO.readSwapState(spark, statePath,
+        MergeableState.stateSchema(partial, keys, merges))
+      .select(col("grain")).limit(1).collect().headOption.map(_.getLong(0))
     require(recorded.forall(_ == grainDays.toLong),
       s"state at $statePath has grain ${recorded.getOrElse("?")} days; " +
         s"this merge uses $grainDays")
-    merged.withColumn("grain", lit(grainDays.toLong))
+    MergeableState.merge(partial, keys, merges, statePath)
   }
 
   /** Merge + commit for batch callers; returns the materialized

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
-/** Per-measurement shuffle-write byte tally for the metric specs
-  * (`ShuffleBudgetSpec`, `SkewStressSpec`).
+/** Per-measurement shuffle-write byte and job tally for the metric
+  * specs (`ShuffleBudgetSpec`, `SkewStressSpec`, `PathIOSpec`).
   *
   * Attribution: every job a measured body starts carries a local
   * property naming the measurement. Jobs started from other threads
@@ -37,6 +37,7 @@ final class ShuffleTally private (spark: SparkSession) extends SparkListener {
   private val stageOwner = new ConcurrentHashMap[Int, String]()
   private val liveJobs = new ConcurrentHashMap[Int, String]()
   private val bytes = new ConcurrentHashMap[String, AtomicLong]()
+  private val jobs = new ConcurrentHashMap[String, AtomicInteger]()
   private val markerJobs = ConcurrentHashMap.newKeySet[Int]()
   private val serial = new AtomicInteger(0)
   @volatile private var latch: CountDownLatch = _
@@ -47,6 +48,7 @@ final class ShuffleTally private (spark: SparkSession) extends SparkListener {
     val owner = if (props == null) null else props.getProperty(OwnerKey)
     if (owner != null) {
       liveJobs.put(js.jobId, owner)
+      val n = jobs.get(owner); if (n != null) n.incrementAndGet()
       // a stage shared with an earlier job keeps its first owner
       js.stageIds.foreach(stageOwner.putIfAbsent(_, owner))
     }
@@ -83,10 +85,23 @@ final class ShuffleTally private (spark: SparkSession) extends SparkListener {
     * Fails naming `label` if they have not ended within `JobWaitSec`.
     */
   def measure[A](label: String)(body: => A): (A, Long) = {
+    val (result, b, _) = tally(label)(body)
+    (result, b)
+  }
+
+  /** `measure`, returning the number of Spark jobs `body` started. */
+  def jobCount[A](label: String)(body: => A): (A, Int) = {
+    val (result, _, n) = tally(label)(body)
+    (result, n)
+  }
+
+  private def tally[A](label: String)(body: => A): (A, Long, Int) = {
     val sc = spark.sparkContext
     val owner = s"$label#${serial.incrementAndGet()}"
     val acc = new AtomicLong(0L)
+    val n = new AtomicInteger(0)
     bytes.put(owner, acc)
+    jobs.put(owner, n)
     val prior = sc.getLocalProperty(OwnerKey)
     sc.setLocalProperty(OwnerKey, owner)
     val result = try body finally sc.setLocalProperty(OwnerKey, prior)
@@ -99,8 +114,9 @@ final class ShuffleTally private (spark: SparkSession) extends SparkListener {
     }
     drain() // every task-end of those jobs has been tallied
     bytes.remove(owner)
+    jobs.remove(owner)
     stageOwner.values.removeIf(_ == owner)
-    (result, acc.get())
+    (result, acc.get(), n.get())
   }
 }
 

@@ -65,6 +65,17 @@ class MergeableStateSpec extends SparkSpec {
     spark.read.parquet(st).collect().map(_.getLong(1)) shouldBe Array(2L)
   }
 
+  test("a Max over an INT partial commits BIGINT, and the next merge reads it") {
+    val st = tmp()
+    def ints(rows: (String, Int)*) = rows.toDF("k", "ia")
+    MergeableState.accept(MergeableState.merge(ints(("a", 0), ("b", 1)),
+      Seq("k"), Seq("ia" -> Max), st), st)
+    spark.read.parquet(st).schema("ia").dataType.simpleString shouldBe "bigint"
+    MergeableState.accept(MergeableState.merge(ints(("a", 1), ("c", 0)),
+      Seq("k"), Seq("ia" -> Max), st), st)
+      .as[(String, Long)].collect().toMap shouldBe Map("a" -> 1L, "b" -> 1L, "c" -> 0L)
+  }
+
   test("duplicate, prefixed or keyless state columns are rejected") {
     val p = Seq(("a", 1L)).toDF("k", "n")
     an[IllegalArgumentException] should be thrownBy
@@ -87,5 +98,18 @@ class MergeableStateSpec extends SparkSpec {
     e.getMessage should include("grain 1")
     StreamingRetention.mergeBatch(ev, "user_id", "ts", st, grainDays = 1)
       .select("n", "grain").as[(Long, Long)].collect() shouldBe Array((2L, 1L))
+  }
+
+  test("retention refuses a day-grain merge into a week-grain state") {
+    val st = tmp()
+    val ev = Seq(("u1", java.sql.Timestamp.valueOf("2026-01-05 10:00:00")))
+      .toDF("user_id", "ts")
+    StreamingRetention.acceptBatch(ev, "user_id", "ts", st)
+    // the grain is a merged column: the state stores exactly keys ++ merges
+    spark.read.parquet(st).columns shouldBe Array("user", "week", "n", "grain")
+    val e = intercept[IllegalArgumentException] {
+      StreamingRetention.mergeBatch(ev, "user_id", "ts", st, grainDays = 1)
+    }
+    e.getMessage should include("grain 7")
   }
 }
