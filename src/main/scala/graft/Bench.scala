@@ -38,8 +38,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    val only = SparkEntry.requestedQueries
     // Parallelism must scale with DATA, not stay pinned to the CPU
     // count: a fixed 32-partition shuffle was the proven cause of
     // every super-linear sf0.1→sf1.0 exponent (q289 1.35→0.84 and
@@ -158,25 +157,10 @@ object Bench {
       // and delete the run's per-invocation streaming state dirs: 900
       // invocations would otherwise pile thousands of parquet state
       // dirs into the OS temp root for the box to carry across rounds
-      SparkEntry.drainInvocationStateDirs().foreach { dir =>
-        // NonFatal only (an InterruptedException must still cancel),
-        // and failures print — a silently dead cleanup would let the
-        // /tmp pile-up this hook exists to prevent come back unseen
-        try graft.sources.PathIO.deleteDir(spark, dir)
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] state-dir cleanup failed for $dir: ${e.getMessage}")
-        }
-      }
+      SparkEntry.deleteInvocationStateDirs(spark, "bench")
       dt
     }
-    // a typo'd name in the subset env var must fail loudly — an all-miss
-    // filter would otherwise print total=0 and look like a fast run
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty)
-      sys.error(s"[bench] unknown queries in SPARK_GRAFT_QUERIES: ${unknown.mkString(",")}")
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
+    val selected = SparkEntry.selectedQueries("bench")
     if (selected.isEmpty) sys.error("[bench] SPARK_GRAFT_QUERIES selected zero queries")
     // SPARK_GRAFT_BENCH_RUNS (default 3): a 100×-scale probe cannot
     // afford triplicate runs of multi-minute queries; with 1 the

@@ -1,14 +1,16 @@
 package graft
 
-import graft.functions.{TextFns, TimeFns, VectorFns}
-import graft.operators.{Dedup, Relational, Similarity, SnapshotPipeline}
-import graft.plans.BinPacking
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — one `queries` entry per operator from SURVEY.md §2
   * plus the training-data-pipeline extensions; `oracleSql` holds the
   * DuckDB-equivalent SQL for the hash-compare correctness gate.
+  *
+  * Each query is one [[graft.queries.Entry]] — its Spark body and its
+  * oracle side by side — in the family file of package `graft.queries`
+  * that holds its operator tier. This object only assembles the
+  * families into the two contract maps.
   *
   * Numeric discipline for cross-engine hash equality: additive aggregates
   * run over DECIMAL(18,2|4) (exact, associative — immune to partial-agg
@@ -18,13783 +20,95 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Memoized table row count per (dir, table). q143 sizes its
-    * candidate budget from the corpus size; running `docs.count()`
-    * inside the query closure charged an extra Spark action to every
-    * timed bench run (3× per bench). Counts are immutable for a given
-    * test-data dir, so one count per JVM is exact — the map holds one
-    * Long per (dir, table) ever touched, bounded by the catalog size.
+  /** Every contract query, family by family. Names must be distinct:
+    * the maps below are keyed by name, so a repeated name would
+    * silently drop one query — and the hash gate with it.
     */
-  private val rowCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  private def rowCount(s: SparkSession, dir: String, name: String): Long =
-    rowCounts.computeIfAbsent((dir, name), { _ =>
-      java.lang.Long.valueOf(t(s, dir, name).count())
-    }).longValue()
-
-  /** Exact sum of a double measure: decimal-sum then double. */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    round(sum(c.cast(s"decimal(18,$scale)")).cast("double"), scale)
-
-  /** Engine-portable rounding of a DOUBLE: floor(x*10^s + 0.5)/10^s.
-    * Spark's round() (BigDecimal HALF_UP on shortest-repr) and DuckDB's
-    * (scaled nearbyint) disagree on values one ulp from a .5 boundary;
-    * this formula is pure IEEE ops, so identical inputs give identical
-    * outputs in any engine. Used on BOTH sides of every double-valued
-    * oracle compare.
-    */
-  private def pround(c: Column, scale: Int): Column = {
-    val f = math.pow(10, scale)
-    floor(c * f + 0.5) / f
-  }
-
-  /** Committed batch-0 streaming state, built once per (query,
-    * session, data dir): Bench invokes each entry three times, and
-    * rebuilding + re-committing BOTH streaming ticks from a fresh
-    * temp dir each run timed harness setup, not the operator
-    * (round-9 tail audit on q223). A fixture is read-only after
-    * construction — invocations merge against it with the operator's
-    * mergeBatch, which never writes.
-    */
-  private val stateFixtures =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), String]]()
-
-  private def stateFixture(tag: String, s: SparkSession, d: String)
-                          (build: String => Unit): String = {
-    // WEAKLY keyed by session so a stopped SparkSession (and its map
-    // of temp-dir paths) is GC-reclaimable instead of pinned for the
-    // JVM's lifetime; the dirs themselves live under the OS temp root
-    val perSession = stateFixtures.synchronized {
-      var m = stateFixtures.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-        stateFixtures.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent((tag, d), { _ =>
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft_${tag}_state").toString + "/state"
-      build(p)
-      p
-    })
-  }
-
-  /** Per-invocation streaming state dirs created by entries since the
-    * last drain. Unlike `stateFixture` dirs (read-only, shared by all
-    * three Bench runs of a query), these are created FRESH on every
-    * invocation — a three-run 300-query bench would otherwise leave
-    * thousands of parquet state dirs in the OS temp root (~3k dirs
-    * observed after a few rounds of local runs). The harness drains
-    * and deletes after each timed run; nothing else reads a drained
-    * path (each invocation's dir dies with the invocation).
-    */
-  private val invocationStateDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def invocationStateDir(tag: String, leaf: String): String = {
-    val p = java.nio.file.Files
-      .createTempDirectory(s"graft_${tag}_state").toString
-    invocationStateDirs.add(p)
-    p + "/" + leaf
-  }
-
-  /** Drain the per-invocation state dirs created since the last call
-    * (harness cleanup hook — see [[invocationStateDirs]]).
-    */
-  private[graft] def drainInvocationStateDirs(): Seq[String] = {
-    val b = Seq.newBuilder[String]
-    var p = invocationStateDirs.poll()
-    while (p != null) { b += p; p = invocationStateDirs.poll() }
-    b.result()
+  private[graft] lazy val entries: Seq[Entry] = {
+    val all = Seq(
+      HypothesisQueries.entries,
+      HypothesisMetricsQueries.entries,
+      RelationalQueries.entries,
+      RelationalTextQueries.entries,
+      PipelineTextQueries.entries,
+      PipelineSimilarityQueries.entries,
+      PipelineStreamingQueries.entries,
+      PipelineSamplingQueries.entries,
+      PipelineProfileQueries.entries,
+      PipelineRelationalQueries.entries,
+      ResamplingQueries.entries,
+      SeriesDiagnosticsQueries.entries,
+      VarianceTrendQueries.entries,
+      RetrievalLinkageQueries.entries,
+      ReliabilityTailQueries.entries,
+      SeriesStructureQueries.entries,
+      AssociationQueries.entries,
+      KeywordingQueries.entries,
+      ExplainedVarianceQueries.entries,
+      MultipleTestingQueries.entries,
+      LiveIndexQueries.entries).flatten
+    val repeated = all.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(repeated.isEmpty,
+      s"contract query names must be distinct: ${repeated.toSeq.sorted.mkString(",")}")
+    all
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q03_star_join")(spark, "/root/testdata/sf0.001")
 
-  /** Built once per JVM. A `lazy val`, not a `val`: its initializer
-    * compiles to its own method, keeping the closure literal out of the
-    * object initializer and its 64 KB method limit.
-    */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- hypothesis testing (round-10 fifth wave) ---------------------
-
-    // distribution-free A/B on a continuous metric: Mann–Whitney
-    // rank-sum of event value per event type, arms = user-id parity (a
-    // null experiment, so significance should be rare); midrank ties
-    // from the per-value count table, significance decided by exact
-    // cross-multiplied DECIMAL(38,0) — never the rounded z
-    "q298_mann_whitney" -> ((s, d) =>
-      operators.Hypothesis.mannWhitneyU(
-        t(s, d, "events").select(col("event_type"),
-          (col("user_id") % 2).cast("long").as("arm"), col("value")),
-        "event_type", "arm", "value")),
-
-    // monotone association of two ordinal columns per return flag:
-    // Kendall tau-b from the (quantity, discount-pct) contingency —
-    // C−D exact via the bounded cells self-join, ties kept doubled so
-    // no division ever happens before the final double
-    "q299_kendall_tau" -> ((s, d) =>
-      operators.Hypothesis.kendallTau(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          col("l_quantity").cast("long").as("qty"),
-          (col("l_discount").cast("decimal(4,2)") * 100).cast("long")
-            .as("disc_pct")),
-        "l_returnflag", "qty", "disc_pct")),
-
-    // effect size behind a rank test: does a deep discount move the
-    // quantity DISTRIBUTION, and by how much? Cliff's delta per
-    // return flag (arms = discount >= 5%), delta from the exact
-    // midrank A = 2U−n_a·n_b, magnitude via integer
-    // cross-multiplication against the Romano thresholds
-    "q300_cliffs_delta" -> ((s, d) =>
-      operators.Hypothesis.cliffsDelta(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("arm"),
-          col("l_quantity").cast("long").as("qty")),
-        "l_returnflag", "arm", "qty")),
-
-    // k-arm rank ANOVA: does event value differ across three user-id
-    // cohorts per event type? (a null experiment — significance
-    // should be rare.) Midranks from the per-value table; the exact
-    // micro-unit quotient split keeps Σ R²/n integral, so the χ²
-    // comparison runs in DECIMAL(38,0) with a raise-on-borderline
-    // band instead of a rounded double
-    "q301_kruskal_wallis" -> ((s, d) =>
-      operators.Hypothesis.kruskalWallis(
-        t(s, d, "events").select(col("event_type"),
-          (col("user_id") % 3).cast("long").as("arm"), col("value")),
-        "event_type", "arm", "value")),
-
-    // label-quality audit: does the stored language tag agree with
-    // the recomputed marker-token language id beyond chance? Cohen's
-    // kappa per source — numerator/denominator exact DECIMAL(38,0)
-    // rationals in the confusion-cell counts, Landis–Koch strength
-    // band by 5·A vs k·B cross-multiplication
-    "q303_cohens_kappa" -> ((s, d) =>
-      operators.Metrics.cohensKappa(
-        t(s, d, "documents").select(col("source"),
-          col("lang").as("lang_actual"),
-          functions.TextFns.langId(col("text")).as("lang_pred")),
-        "source", "lang_actual", "lang_pred")),
-
-    // distribution drift in VALUE units: exact 1-D Wasserstein
-    // between open and non-open line items' quantity distributions
-    // per return flag — |cumA·n_b − cumB·n_a| exact, one fixed-order
-    // double per grid step into a DECIMAL(18,6) sum
-    "q304_wasserstein" -> ((s, d) =>
-      operators.Profile.wasserstein1d(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          when(col("l_linestatus") === "O", 1L).otherwise(0L).as("arm"),
-          col("l_quantity")),
-        "l_returnflag", "arm", "l_quantity")),
-
-    // graph proximity to a known batch: personalized PageRank over
-    // the q127 near-dup candidate graph, restart mass confined to
-    // the doc_id % 7 seed set — same BIGINT fixpoint, unrolled-CTE
-    // oracle, 4 rounds
-    "q305_personalized_pagerank" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      operators.PageRank.personalizedRanks(
-        Dedup.minhashCandidates(docs, "text", "doc_id"),
-        docs.filter(col("doc_id") % 7 === 0).select(col("doc_id")),
-        iterations = 4)
-    }),
-
-    // graded ranking quality: does event value rank the high-grade
-    // events first? NDCG@10 per event type (grades = user-id mod 4,
-    // a null model, so ndcg should sit near the random baseline);
-    // 2^rel−1 exact BIGINT gains, discounts as SHARED double
-    // literals (no engine log), WindowGroupLimit top-k shape
-    "q306_ndcg" -> ((s, d) =>
-      operators.Metrics.ndcgAtK(
-        t(s, d, "events").select(col("event_type"), col("value"),
-          col("event_id"), (col("user_id") % 4).as("rel")),
-        "event_type", "value", "event_id", "rel", k = 10)),
-
-    // navigation quality: how high does the first every-7th event
-    // rank per (event type, user-bucket) query? MRR per event type,
-    // misses counting 0 — first ranks exact BIGINT, 1/rank pround6
-    // into a DECIMAL(18,6) sum
-    "q307_mrr" -> ((s, d) =>
-      operators.Metrics.meanReciprocalRank(
-        t(s, d, "events").select(col("event_type"),
-          (col("user_id") % 50).as("qq"), col("value"), col("event_id"),
-          when(col("event_id") % 7 === 0, 1L).otherwise(0L).as("rel")),
-        "event_type", "qq", "value", "event_id", "rel")),
-
-    // three language 'raters' voting per document (stored tag, marker
-    // lang-id, trigram lang-id): Fleiss' kappa per source — cubic
-    // rationals exact in DECIMAL(38,0), Landis–Koch band by
-    // cross-multiplication, M-guard raises near capacity
-    "q308_fleiss_kappa" -> ((s, d) =>
-      operators.Metrics.fleissKappa(
-        t(s, d, "documents").select(col("source"), col("doc_id"),
-          col("lang").as("r1"),
-          functions.TextFns.langId(col("text")).as("r2"),
-          functions.TextFns.langIdNgram(col("text")).as("r3")),
-        "source", "doc_id", Seq("r1", "r2", "r3"))),
-
-    // weekly-cycle screen: eta² of daily event counts across the 7
-    // epoch-day-mod-7 groups per event type — the kruskalWallis
-    // micro-unit split keeps the seasonal flag an exact DECIMAL
-    // comparison against the 0.2 threshold
-    "q309_weekday_seasonality" -> ((s, d) =>
-      operators.Resample.weekdaySeasonality(
-        t(s, d, "events"), "event_type", "ts")),
-
-    // is a seasonal model worth it? sum |x_d − x_{d−7}| vs
-    // |x_d − x_{d−1}| over each type's daily counts — all-BIGINT
-    // error sums, one closing double ratio
-    "q310_seasonal_naive" -> ((s, d) =>
-      operators.Resample.seasonalNaiveError(
-        t(s, d, "events"), "event_type", "ts")),
-
-    // leaderboard stability: top-50 parts by revenue, 1995+ vs
-    // before, per return flag — set intersection and Jaccard in
-    // exact ppm, no doubles anywhere
-    "q311_topk_drift" -> ((s, d) =>
-      operators.Profile.topKDrift(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          when(year(col("l_shipdate")) >= 1995, 1L).otherwise(0L)
-            .as("arm"),
-          col("l_partkey"), col("l_extendedprice")),
-        "l_returnflag", "arm", "l_partkey", "l_extendedprice", k = 50)),
-
-    // paired filter-flip audit: deep-discount vs high-tax 'keep'
-    // decisions on the same line items — McNemar over the discordant
-    // cells only, significance by exact DECIMAL cross-multiplication
-    "q312_mcnemar" -> ((s, d) =>
-      operators.Hypothesis.mcnemar(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("a"),
-          when(col("l_tax") >= 0.05, 1L).otherwise(0L).as("b")),
-        "l_returnflag", "a", "b")),
-
-    // three paired screens per document (length, English, token
-    // budget): Cochran's Q per source — binary data keeps every term
-    // integral, so significance is fully exact against chi2_2
-    "q313_cochran_q" -> ((s, d) =>
-      operators.Hypothesis.cochranQ(
-        t(s, d, "documents").select(col("source"),
-          when(col("n_chars") > 200, 1L).otherwise(0L).as("t1"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("t2"),
-          when(functions.TextFns.bpeishTokenCount(col("text")) > 40, 1L)
-            .otherwise(0L).as("t3")),
-        "source", Seq("t1", "t2", "t3"))),
-
-    // does the return rate TREND with the discount band? Cochran-
-    // Armitage over cent buckets per line status — one-degree
-    // monotone alternative, exact cross-multiplied significance
-    "q314_cochran_armitage" -> ((s, d) =>
-      operators.Hypothesis.cochranArmitage(
-        t(s, d, "lineitem").select(col("l_linestatus"),
-          (col("l_discount").cast("decimal(4,2)") * 100).cast("long")
-            .as("bucket"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("ret")),
-        "l_linestatus", "bucket", "ret")),
-
-    // q311's leaderboard card maintained LIVE: two order-parity ticks
-    // fold per-key DECIMAL totals into swap-managed state; the view
-    // reads through the SHARED topKDriftFromTotals closing, so the
-    // streamed card provably equals the one-shot card (same oracle)
-    "q315_streaming_topk_drift" -> ((s, d) => {
-      val st = invocationStateDir("q315", "totals")
-      val li = t(s, d, "lineitem").select(col("l_returnflag"),
-        when(year(col("l_shipdate")) >= 1995, 1L).otherwise(0L)
-          .as("arm"),
-        col("l_partkey"), col("l_extendedprice"), col("l_orderkey"))
-      def tick(p: Int) = streaming.StreamingTopKDrift.acceptBatch(
-        li.filter(col("l_orderkey") % 2 === p), "l_returnflag", "arm",
-        "l_partkey", "l_extendedprice", st)
-      tick(0)
-      val merged = tick(1)
-      streaming.StreamingTopKDrift.driftView(merged, "l_returnflag",
-        k = 50)
-    }),
-
-    // is the banding config any good? precision/recall/F1 of the q21
-    // MinHash candidate pairs against the exact-duplicate truth
-    // pairs — all-BIGINT set arithmetic, ppm floor divisions
-    "q316_linkage_quality" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      operators.Metrics.linkageQuality(
-        Dedup.minhashCandidates(docs, "text", "doc_id"),
-        Dedup.exactDupPairs(docs, "text", "doc_id"))
-    }),
-
-    // can the doc-shard layout grow 16 -> 20 without a full rewrite?
-    // churn under modulo vs rendezvous placement, both on the md5
-    // house hash — rendezvous should move ~ 4/20 of keys, modulo
-    // nearly everything; exact ppm integers, one row
-    "q317_reshard_churn" -> ((s, d) =>
-      operators.Packing.reshardChurn(
-        t(s, d, "documents"), "doc_id", 16, 20)),
-
-    // monotone recalibration of event value against a user-bucket
-    // label: the PAV fit via the interval-minimax identity over the
-    // B² bin grid — every pooled rate one double division of exact
-    // prefix differences, maxBins raise-guarded
-    "q318_isotonic_calibration" -> ((s, d) =>
-      operators.Metrics.isotonicCalibration(
-        t(s, d, "events").select(col("event_type"), col("value"),
-          when(col("user_id") % 3 === 0, 1L).otherwise(0L).as("y")),
-        "event_type", "value", "y", binWidth = 25.0)),
-
-    // is the value honest as a probability-like score? ECE + Brier
-    // reliability/resolution/uncertainty per event type — per-bin
-    // fixed-order doubles from exact DECIMAL/BIGINT sums, pround6
-    // into order-free DECIMAL(18,6)
-    "q319_calibration_card" -> ((s, d) =>
-      operators.Metrics.calibrationCard(
-        t(s, d, "events").select(col("event_type"), col("value"),
-          when(col("user_id") % 3 === 0, 1L).otherwise(0L).as("y")),
-        "event_type", "value", "y", binWidth = 25.0)),
-
-    // operating-point table: precision/recall/F1 at five fixed value
-    // cutoffs per event type — conditional BIGINT counts off ONE
-    // pass, exact ppm floor divisions
-    "q320_pr_curve" -> ((s, d) =>
-      operators.Metrics.prCurve(
-        t(s, d, "events").select(col("event_type"), col("value"),
-          when(col("user_id") % 3 === 0, 1L).otherwise(0L).as("y")),
-        "event_type", "value", "y", Seq(50L, 100L, 200L, 300L, 400L))),
-
-    // how predictable is the NEXT action given the current one?
-    // per-state conditional entropy over q148's sessionized pairs —
-    // labelEntropy's per-term pround6 discipline
-    "q321_next_entropy" -> ((s, d) =>
-      operators.Sessionize.nextActionEntropy(t(s, d, "events"),
-        "user_id", "ts", "event_type", "event_id", gapSeconds = 3600)),
-
-    // metronome or bursts? B = (sigma−mu)/(sigma+mu) over per-user
-    // inter-event gaps — ONE sqrt over an exact integer, everything
-    // else BIGINT/DECIMAL
-    "q322_burstiness" -> ((s, d) =>
-      operators.Resample.burstiness(t(s, d, "events"),
-        "user_id", "ts", "event_id")),
-
-    // longest same-action run per user (gaps-and-islands): the
-    // automation screen; champion streak tie-broken by (action,
-    // island) so the row is engine-exact
-    "q323_streaks" -> ((s, d) =>
-      operators.Sessionize.streaks(t(s, d, "events"),
-        "user_id", "ts", "event_type", "event_id")),
-
-    // how much vocabulary is each source still hiding? Chao1 /
-    // Good-Turing coverage / Simpson / Shannon per source — exact
-    // spectrum integers, fixed-order doubles, labelEntropy discipline
-    // on the shannon sum
-    "q324_vocab_richness" -> ((s, d) =>
-      operators.TfIdf.vocabRichness(t(s, d, "documents"),
-        "text", "source")),
-
-    // is the even/odd-user value shift big enough to CARE about?
-    // Cohen's d + Hedges g per event type over exact DECIMAL moment
-    // sums — the magnitude companion to q298's significance
-    "q325_effect_size" -> ((s, d) =>
-      operators.Hypothesis.effectSize(
-        t(s, d, "events").select(col("event_type"),
-          pmod(col("user_id"), lit(2L)).as("arm"), col("value")),
-        "event_type", "arm", "value")),
-
-    // does a deep discount change the RETURN risk? 2x2 odds-ratio /
-    // relative-risk / risk-difference card per line status — every
-    // ratio an exact floored micro-unit quotient, no doubles at all
-    "q326_risk_card" -> ((s, d) =>
-      operators.Hypothesis.riskCard(
-        t(s, d, "lineitem").select(col("l_linestatus"),
-          when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("exposed"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("outcome")),
-        "l_linestatus", "exposed", "outcome")),
-
-    // average retained days inside the first 1000 — the one-number
-    // summary of q232's churn curve via the jump decomposition
-    // tau − Σ J_i(tau − t_i): no curve-ordering window, plain sums
-    // over the same log-space prefix chain
-    "q327_rmst" -> ((s, d) =>
-      operators.Survival.rmst(
-        t(s, d, "orders")
-          .groupBy(col("o_custkey"))
-          .agg(min(col("o_orderdate")).as("__first"),
-            max(col("o_orderdate")).as("__last"))
-          .select(
-            datediff(col("__last"), col("__first")).cast("long").as("dur"),
-            when(col("__last") < lit("1998-03-01").cast("date"), 1L)
-              .otherwise(0L).as("churned")),
-        "dur", "churned", tau = 1000L, bucketWidth = 256L)),
-
-    // do the first three line positions of an order get systematically
-    // different quantities? Friedman over per-order doubled midranks,
-    // sliced 4 ways by order-key hash — the slices should agree
-    "q328_friedman" -> ((s, d) =>
-      operators.Hypothesis.friedman(
-        t(s, d, "lineitem")
-          .groupBy(col("l_orderkey"))
-          .agg(
-            max(when(col("l_linenumber") === 1, col("l_quantity"))).as("t1"),
-            max(when(col("l_linenumber") === 2, col("l_quantity"))).as("t2"),
-            max(when(col("l_linenumber") === 3, col("l_quantity"))).as("t3"))
-          .filter(col("t1").isNotNull && col("t2").isNotNull &&
-            col("t3").isNotNull)
-          .select(pmod(col("l_orderkey"), lit(4L)).as("slice"),
-            col("t1"), col("t2"), col("t3")),
-        "slice", Seq("t1", "t2", "t3"))),
-
-    // which near-dup pairs did the q21 banding MISS? common-neighbor
-    // and Adamic-Adar completion over the candidate graph, hub-capped
-    // middles, wedge bound pre-estimated and refused past 10M
-    "q329_link_prediction" -> ((s, d) =>
-      operators.Triangles.linkPrediction(
-        Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id",
-          bands = 3, rowsPerBand = 2),
-        "id_a", "id_b")),
-
-    // textbook prose or boilerplate? pooled Flesch / FK-grade per
-    // source from exact word/sentence/vowel-run counts — row-local
-    // regexp counting, one hash aggregate, no explode
-    "q330_readability" -> ((s, d) =>
-      operators.TfIdf.readability(t(s, d, "documents"),
-        "text", "source")),
-
-    // the q322 cadence screen kept live: per-key gap statistics merge
-    // additively across time-ordered batches (one stitched boundary
-    // gap per key), card via the shared burstinessFromStats closing
-    "q331_streaming_burstiness" -> ((s, d) => {
-      val st = invocationStateDir("q331", "gapstats")
-      val ev = t(s, d, "events")
-      val cut = lit("2024-01-15").cast("timestamp")
-      streaming.StreamingBurstiness.acceptBatch(
-        ev.filter(col("ts") < cut), "user_id", "ts", "event_id", st)
-      val merged = streaming.StreamingBurstiness.acceptBatch(
-        ev.filter(col("ts") >= cut), "user_id", "ts", "event_id", st)
-      streaming.StreamingBurstiness.burstinessView(merged, "user_id")
-    }),
-
-    // did the even/odd-user arms draw from the same value histogram?
-    // Bhattacharyya + Hellinger per event type — the metric-valued
-    // drift distance beside q146's PSI, no smoothing needed
-    "q333_hellinger" -> ((s, d) =>
-      operators.Profile.hellinger(
-        t(s, d, "events").select(col("event_type"),
-          pmod(col("user_id"), lit(2L)).as("arm"), col("value")),
-        "event_type", "arm", "value")),
-
-    // does each source carry ONE language (homogeneity) and each
-    // language live in ONE source (completeness)? V-measure per
-    // length band — the entropy-calibrated upgrade of q184's purity
-    "q334_v_measure" -> ((s, d) =>
-      operators.Metrics.vMeasure(
-        t(s, d, "documents").select(
-          when(col("n_chars") > 250, "long").otherwise("short")
-            .as("band"),
-          col("source"), col("lang")),
-        "band", "source", "lang")),
-
-    // how heavy is the order-revenue tail? Hill estimator over the
-    // top-500 order statistics — ties excluded by VALUE, so the
-    // estimate is order-deterministic
-    "q335_hill_tail" -> ((s, d) =>
-      operators.Pareto.hillTail(t(s, d, "orders"),
-        "o_totalprice", "o_orderkey", k = 500)),
-
-    // where does the evidence stand NOW? Wald SPRT per event type on
-    // the high-value rate — boundaries and LLR coefficients computed
-    // once as shortest-roundtrip doubles, shared with the oracle
-    "q336_sprt" -> ((s, d) =>
-      operators.Hypothesis.sprt(
-        t(s, d, "events").select(col("event_type"),
-          when(col("value") > 100.0, 1L).otherwise(0L).as("hi")),
-        "event_type", "hi", p0 = 0.25, p1 = 0.35)),
-
-    // does deep discount associate with high tax AFTER controlling
-    // for line status? CMH pooled 2x2 evidence per return flag —
-    // micro-unit E/V floors, bracketed exact significance
-    "q337_cmh" -> ((s, d) =>
-      operators.Hypothesis.cmh(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          col("l_linestatus"),
-          when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("exposed"),
-          when(col("l_tax") >= 0.05, 1L).otherwise(0L).as("outcome")),
-        "l_returnflag", "l_linestatus", "exposed", "outcome")),
-
-    // is daily activity trending per event type? Mann-Kendall over
-    // the daily-count series — S from the kendall pair machinery,
-    // tie-corrected 18V fully integral, continuity-corrected z
-    "q338_mann_kendall" -> ((s, d) =>
-      operators.Hypothesis.mannKendall(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            call_function("div", col("ts").cast("long"), lit(86400L))
-              .as("day"))
-          .agg(count(lit(1)).cast("long").as("cnt")),
-        "event_type", "day", "cnt")),
-
-    // did the event RATE change between the month's first 14 days and
-    // the rest? two-window Poisson score test per event type, exact
-    // integral significance over caller-supplied exposures
-    "q339_rate_test" -> ((s, d) =>
-      operators.Hypothesis.poissonRateTest(
-        t(s, d, "events").select(col("event_type"),
-          when(col("ts") >= lit("2024-01-15").cast("timestamp"), 1L)
-            .otherwise(0L).as("arm")),
-        "event_type", "arm",
-        exposure0 = 14L * 86400L, exposure1 = 17L * 86400L)),
-
-    // where should a fixed audit budget land? Neyman allocation of
-    // 1000 samples per order status across priority strata — big AND
-    // volatile strata earn samples
-    "q340_neyman_allocation" -> ((s, d) =>
-      operators.Sampling.neymanAllocation(t(s, d, "orders"),
-        "o_orderstatus", "o_orderpriority", "o_totalprice",
-        totalN = 1000L)),
-
-    // by what day has half the cohort churned? the q232 curve's
-    // headline number — one order-free min over the KM output
-    "q341_median_survival" -> ((s, d) =>
-      operators.Survival.medianSurvival(
-        t(s, d, "orders")
-          .groupBy(col("o_custkey"))
-          .agg(min(col("o_orderdate")).as("__first"),
-            max(col("o_orderdate")).as("__last"))
-          .select(
-            datediff(col("__last"), col("__first")).cast("long").as("dur"),
-            when(col("__last") < lit("1998-03-01").cast("date"), 1L)
-              .otherwise(0L).as("churned")),
-        "dur", "churned", bucketWidth = 256L)),
-
-    // q326's risk card kept live: additive 2x2 cells per group across
-    // any batch split, card via the shared riskCardFromCells closing
-    "q342_streaming_risk" -> ((s, d) => {
-      val st = invocationStateDir("q342", "cells")
-      val li = t(s, d, "lineitem").select(col("l_linestatus"),
-        when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("exposed"),
-        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("outcome"),
-        col("l_orderkey"))
-      streaming.StreamingRisk.acceptBatch(
-        li.filter(col("l_orderkey") % 2 === 0), "l_linestatus",
-        "exposed", "outcome", st)
-      val merged = streaming.StreamingRisk.acceptBatch(
-        li.filter(col("l_orderkey") % 2 === 1), "l_linestatus",
-        "exposed", "outcome", st)
-      streaming.StreamingRisk.riskView(merged, "l_linestatus")
-    }),
-
-    // does order priority associate with line status, and HOW
-    // strongly? Cramer's V per return flag — the categorical effect
-    // size beside q252's chi-square
-
-    "q343_cramers_v" -> ((s, d) =>
-      operators.Profile.cramersV(
-        t(s, d, "lineitem")
-          .join(t(s, d, "orders").select(col("o_orderkey"),
-            col("o_orderpriority")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_returnflag"), col("o_orderpriority"),
-            col("l_linestatus")),
-        "l_returnflag", "o_orderpriority", "l_linestatus")),
-
-    // how much statistical information does the length-weighted corpus
-    // really carry? ESS/(n) per source over n_chars weights — equal
-    // weights = n, one whale = 1
-    "q344_ess" -> ((s, d) =>
-      operators.Sampling.effectiveSampleSize(
-        t(s, d, "documents").select(col("source"), col("n_chars")),
-        "source", "n_chars")),
-
-    // WHERE in the distribution did the arms diverge? side-by-side
-    // exact interpolated quantiles + per-quantile shift, riding the
-    // pinned percentile ≡ quantile_cont parity
-    "q345_qq_shift" -> ((s, d) =>
-      operators.Metrics.qqShift(
-        t(s, d, "events").select(col("event_type"),
-          pmod(col("user_id"), lit(2L)).as("arm"), col("value")),
-        "event_type", "arm", "value",
-        qs = Seq(0.1, 0.25, 0.5, 0.75, 0.9))),
-
-    // do quantity, price, and discount carry the same signal? one-pass
-    // Pearson matrix per return flag over exact decimal moment sums
-    "q346_pearson_matrix" -> ((s, d) =>
-      operators.Profile.pearsonMatrix(t(s, d, "lineitem"),
-        "l_returnflag",
-        Seq("l_quantity", "l_extendedprice", "l_discount"))),
-
-    // q344's mixture health check kept live: additive (n, Σw, Σw²)
-    // per source, card via the shared essFromStats closing
-    "q347_streaming_ess" -> ((s, d) => {
-      val st = invocationStateDir("q347", "wstats")
-      val docs = t(s, d, "documents").select(col("source"),
-        col("n_chars"), col("doc_id"))
-      streaming.StreamingEss.acceptBatch(
-        docs.filter(col("doc_id") % 2 === 0), "source", "n_chars", st)
-      val merged = streaming.StreamingEss.acceptBatch(
-        docs.filter(col("doc_id") % 2 === 1), "source", "n_chars", st)
-      streaming.StreamingEss.essView(merged, "source")
-    }),
-
-    // is the price–discount correlation real, or is it just quantity?
-    // first-order partial correlation per return flag, computed from
-    // RAW r's over exact moment sums
-    "q348_partial_correlation" -> ((s, d) =>
-      operators.Profile.partialCorrelation(t(s, d, "lineitem"),
-        "l_returnflag", "l_extendedprice", "l_discount", "l_quantity")),
-
-    // which sources share a VOICE? Burrows' Delta over top-50
-    // function-word z-profiles — low delta = same template/author,
-    // the style companion to near-dup detection
-    "q349_burrows_delta" -> ((s, d) =>
-      operators.TfIdf.burrowsDelta(t(s, d, "documents"),
-        "text", "source", topK = 50)),
-
-    // which words does each source use significantly MORE than the
-    // rest? Dunning G² keyness top-10, over-representation gated by
-    // exact integer cross-multiplication
-    "q350_keyness" -> ((s, d) =>
-      operators.TfIdf.keyness(t(s, d, "documents"),
-        "text", "source", k = 10)),
-
-    // and HOW BIG is the q337 association? Mantel-Haenszel pooled
-    // odds ratio per return flag — micro-unit stratum terms, one
-    // exact closing ppm division
-    "q351_mh_odds_ratio" -> ((s, d) =>
-      operators.Hypothesis.mhOddsRatio(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          col("l_linestatus"),
-          when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("exposed"),
-          when(col("l_tax") >= 0.05, 1L).otherwise(0L).as("outcome")),
-        "l_returnflag", "l_linestatus", "exposed", "outcome")),
-
-    // did the top-50 revenue parts CHANGE between eras? rank-biased
-    // overlap per line status — head-weighted, unlike q311's flat
-    // jaccard; suffix-sum constants shared with the oracle
-    "q352_rbo" -> ((s, d) =>
-      operators.Metrics.rbo(
-        t(s, d, "lineitem").select(col("l_linestatus"),
-          when(year(col("l_shipdate")) >= 1995, 1L).otherwise(0L)
-            .as("arm"),
-          col("l_partkey"), col("l_extendedprice")),
-        "l_linestatus", "arm", "l_partkey", "l_extendedprice",
-        k = 50, p = 0.9)),
-
-    // which top words belong to NO source? Juilland's D over the
-    // shared G x K frequency grid — 1 = a true function word, near 0
-    // = a topic word hiding behind raw frequency
-    "q353_lexical_dispersion" -> ((s, d) =>
-      operators.TfIdf.lexicalDispersion(t(s, d, "documents"),
-        "text", "source", topK = 50)),
-
-    // human, cron, or bot farm? hour-of-day activity entropy per
-    // user — the third behavioral lens beside q322's burstiness and
-    // q323's streaks
-    "q354_hour_entropy" -> ((s, d) =>
-      operators.Sessionize.hourEntropy(t(s, d, "events"),
-        "user_id", "ts")),
-
-    // how unequal is customer revenue WITHIN each market segment?
-    // Theil-T + MLD over per-customer revenue — the decomposable
-    // inequality pair next to q285's Gini
-    "q332_theil_index" -> ((s, d) =>
-      operators.Pareto.theil(
-        t(s, d, "orders")
-          .groupBy(col("o_custkey"))
-          .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
-            .as("revenue"))
-          .join(t(s, d, "customer")
-            .select(col("c_custkey"), col("c_mktsegment")),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment"), col("revenue")),
-        "c_mktsegment", "revenue")),
-
-    // do BUILDING-segment customers churn differently? two-arm
-    // log-rank over the q232 churn observations: O−E and V as exact
-    // DECIMAL(18,6) sums of pround6 hypergeometric contributions,
-    // significance decided entirely in DECIMAL against the χ²₁ 5%
-    // critical value
-    "q302_logrank" -> ((s, d) => {
-      val cust = t(s, d, "customer").select(col("c_custkey"),
-        when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L)
-          .as("arm"))
-      val obs = t(s, d, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("__first"),
-          max(col("o_orderdate")).as("__last"))
-        .select(col("o_custkey"),
-          datediff(col("__last"), col("__first")).cast("long").as("dur"),
-          when(col("__last") < lit("1998-03-01").cast("date"), 1L)
-            .otherwise(0L).as("churned"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      operators.Survival.logRank(obs, "dur", "churned", "arm",
-        bucketWidth = 256L)
-    }),
-
-    // ---- core relational (SURVEY §2.2-2.7) ----------------------------
-
-    "q01_pricing_summary" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("sum_disc_price"),
-          pround(sum(col("l_discount").cast("decimal(18,6)")).cast("double")
-            / count(lit(1)), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    "q02_filter_project" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .filter(col("l_returnflag") === "R" && col("l_quantity") > 45)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-    }),
-
-    "q03_star_join" -> ((s, d) => {
-      t(s, d, "orders")
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(col("o_orderkey")).as("n_orders"),
-          dsum(col("o_totalprice")).as("total_spend"))
-    }),
-
-    "q04_left_join_agg" -> ((s, d) => {
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(count(col("o_orderkey")).as("num_orders"),
-          round(coalesce(sum(col("o_totalprice").cast("decimal(18,2)")), lit(0))
-            .cast("double"), 2).as("total_spend"))
-    }),
-
-    "q05_anti_join" -> ((s, d) => {
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    }),
-
-    "q06_semi_join" -> ((s, d) => {
-      t(s, d, "customer")
-        .join(t(s, d, "orders").filter(col("o_orderstatus") === "F"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_mktsegment")
-    }),
-
-    "q07_distinct" -> ((s, d) =>
-      t(s, d, "orders").select("o_orderstatus", "o_orderpriority").distinct()),
-
-    "q08_keep_first" -> ((s, d) => {
-      Dedup.keepFirst(t(s, d, "events"), Seq("user_id"), Seq(col("event_id").desc))
-        .select("user_id", "event_id", "event_type", "value")
-    }),
-
-    "q09_topk" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(dsum(col("l_quantity")).as("total_qty"))
-        .orderBy(col("total_qty").desc, col("p_brand").asc)
-        .limit(10)
-    }),
-
-    "q10_running_sum" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "orders").select(col("o_custkey"), col("o_orderkey"),
-        round(sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
-          .cast("double"), 2).as("running_spend"))
-    }),
-
-    "q11_sentinel_fill" -> ((s, d) => {
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          Relational.sentinelFill(col("lang"), "notavailable").as("lang_id"))
-    }),
-
-    "q12_explode_tokens" -> ((s, d) => {
-      // explode the raw split and drop empties as a ROW filter — the
-      // array-lambda form (explode(tokens(...))) puts an interpreted
-      // filter() in the scan projection; this shape is all codegen
-      t(s, d, "documents")
-        .select(explode(split(lower(col("text")), "\\s+")).as("token"))
-        .filter(col("token") =!= "")
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token").asc)
-        .limit(20)
-    }),
-
-    "q13_snapshot_slots" -> ((s, d) => {
-      t(s, d, "events")
-        .select(TimeFns.snapshotDayId(col("ts")).as("day_date_id"),
-          TimeFns.snapshotTimeId(col("ts")).as("time_of_day_id"))
-        .groupBy("day_date_id", "time_of_day_id")
-        .agg(count(lit(1)).as("n_events"))
-    }),
-
-    // tz-aware snapshot slots (reference X8): UTC event time -> Pacific
-    // wall clock; local 23:53+ rolls to the NEXT day's "0000", otherwise
-    // nearest same-day slot with first-win ties and a "2345" clamp
-    "q62_pacific_slots" -> ((s, d) => {
-      t(s, d, "events")
-        .select(TimeFns.snapshotDayId(col("ts"), "US/Pacific").as("day_date_id"),
-          TimeFns.snapshotTimeId(col("ts"), "US/Pacific").as("time_of_day_id"))
-        .groupBy("day_date_id", "time_of_day_id")
-        .agg(count(lit(1)).as("n_events"))
-    }),
-
-    "q14_union_na" -> ((s, d) => {
-      t(s, d, "documents").select(col("lang").as("lang_id")).distinct()
-        .unionByName(s.range(1).select(lit("NA").as("lang_id")))
-    }),
-
-    "q15_positional_zip" -> ((s, d) => {
-      val c = t(s, d, "customer")
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc).limit(100)
-      val sup = t(s, d, "supplier")
-        .orderBy(col("s_acctbal").desc, col("s_suppkey").asc).limit(100)
-      Relational.positionalZip(
-          c, Seq(col("c_acctbal").desc, col("c_custkey").asc),
-          sup, Seq(col("s_acctbal").desc, col("s_suppkey").asc))
-        .select("rn", "c_name", "s_name")
-    }),
-
-    "q16_upsert_delta" -> ((s, d) => {
-      val split = lit("2024-01-15").cast("timestamp")
-      val ev = t(s, d, "events")
-      Relational.upsertDelta(
-        ev.filter(col("ts") >= split).select("user_id").distinct(),
-        ev.filter(col("ts") < split).select("user_id").distinct(),
-        Seq("user_id"))
-    }),
-
-    "q17_tumbling_window" -> ((s, d) => {
-      t(s, d, "events")
-        .groupBy(window(col("ts"), "15 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("win_start"),
-          col("event_type"), col("n"))
-    }),
-
-    "q18_bin_packing" -> ((s, d) => {
-      val weights = t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand").agg(count(lit(1)).as("cnt"))
-      BinPacking.packDF(s, weights, "p_brand", "cnt", numGroups = 5, cap = 10000L)
-    }),
-
-    "q19_snapshot_chain" -> ((s, d) => {
-      SnapshotPipeline.popularity(
-        SnapshotPipeline.curateEvents(
-          SnapshotPipeline.processEvents(t(s, d, "events"))))
-    }),
-
-    "q36_json_extract" -> ((s, d) => {
-      t(s, d, "events").select(col("event_id"),
-        from_json(col("props"), SnapshotPipeline.propsSchema).getField("k").as("prop_k"))
-    }),
-
-    "q37_upsert_keep_first" -> ((s, d) => {
-      val split = lit("2024-01-15").cast("timestamp")
-      val ev = t(s, d, "events")
-      def firstType(f: DataFrame) = Dedup.keepFirst(
-        f.select("user_id", "event_type", "event_id"),
-        Seq("user_id"), Seq(col("event_id").asc)).select("user_id", "event_type")
-      Relational.upsertKeepFirst(
-        firstType(ev.filter(col("ts") < split)),
-        firstType(ev.filter(col("ts") >= split)), Seq("user_id"))
-    }),
-
-    "q38_day_dates_dim" -> ((s, _) =>
-      operators.Dimensions.dayDates(s, 2025, 2027)),
-
-    "q39_time_of_day_dim" -> ((s, _) =>
-      operators.Dimensions.timeOfDay(s)),
-
-    "q40_sessions" -> ((s, d) => {
-      operators.Sessionize.sessions(t(s, d, "events"), "user_id", "ts", gapSeconds = 3600)
-        .select(col("user_id"), col("session_id"),
-          unix_timestamp(col("session_start")).as("start_s"),
-          unix_timestamp(col("session_end")).as("end_s"),
-          col("n_events"))
-    }),
-
-    // native session_window sessions (the streaming sessionizer's
-    // batch path — same code, same oracle-pinned boundary semantics:
-    // gap >= 3600 splits, session_end = last event + gap)
-    "q101_session_window" -> ((s, d) =>
-      streaming.StreamingSessionize.sessions(
-          t(s, d, "events"), "user_id", "ts", gapSeconds = 3600)
-        .select(col("user_id"),
-          unix_micros(col("session_start")).as("start_us"),
-          unix_micros(col("session_end")).as("end_us"),
-          col("n_events"))),
-
-    // SCD2 dimension merge: each user's pre-split first event type is
-    // the open version; the post-split first event closes it (when the
-    // type changed) and opens a new one — history-keeping maintenance
-    // the reference's insert-only upsert (q37) cannot express
-    "q109_scd2_dim" -> ((s, d) => {
-      val split = lit("2024-01-15").cast("timestamp")
-      val ev = t(s, d, "events")
-      def firstRow(f: org.apache.spark.sql.DataFrame) = Dedup.keepFirst(
-        f.select("user_id", "event_type", "event_id", "ts"),
-        Seq("user_id"), Seq(col("event_id").asc))
-      val cur = firstRow(ev.filter(col("ts") < split))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("valid_from"),
-          lit(null).cast("long").as("valid_to"))
-      val inc = firstRow(ev.filter(col("ts") >= split))
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("eff"))
-      operators.Dimensions.scd2Merge(cur, inc, "user_id", "event_type", "eff")
-    }),
-
-    // the range join SCD2 exists for: every event attributed to the
-    // dimension version in effect at its timestamp (half-open
-    // validity), unattributed events kept as the null bucket
-    "q110_point_in_time" -> ((s, d) => {
-      val versions = queries("q109_scd2_dim")(s, d)
-        .withColumnRenamed("event_type", "dim_type")
-      val facts = t(s, d, "events")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"))
-      operators.Dimensions.pointInTime(
-          facts, versions, "user_id", "ts_us", Seq("dim_type"))
-        .groupBy("dim_type").agg(count(lit(1)).as("n_events"))
-    }),
-
-    // Gopher-style duplicate-LINE screens (q67 is the n-gram half):
-    // one native scan-projection pass, no shuffle. The test corpus is
-    // single-line, so the query line-ifies deterministically (space
-    // runs -> '\n') to exercise duplicate counting; real multi-line
-    // semantics ('\r\n', exact-byte compare) are pinned by
-    // LineDupStatsSpec. keep thresholds compare the PROUNDED
-    // fractions so an engine-boundary ulp can't flip the decision.
-    "q111_line_dup_screen" -> ((s, d) => {
-      val lineified = regexp_replace(col("text"), " +", "\n")
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.expressions.GraftFunctions.lineDupStats(lineified).as("st"))
-        .select(col("doc_id"),
-          col("st.n_lines").cast("long").as("n_lines"),
-          pround(when(col("st.n_lines") > 0,
-              (col("st.n_lines") - col("st.n_distinct")).cast("double") /
-                col("st.n_lines")).otherwise(lit(0.0)), 4).as("dup_line_frac"),
-          pround(when(col("st.line_chars") > 0,
-              col("st.dup_chars").cast("double") / col("st.line_chars"))
-            .otherwise(lit(0.0)), 4).as("dup_char_frac"))
-        .withColumn("keep",
-          when(col("dup_line_frac") <= 0.3 && col("dup_char_frac") <= 0.2, 1L)
-            .otherwise(0L))
-    }),
-
-    // temperature-scaled mixture (UniMax recipe) at tau=2: sqrt is the
-    // one power IEEE rounds exactly on both engines, so the shares
-    // hash-match; general tau is spec-covered in SamplingSpec
-    "q112_temperature_mix" -> ((s, d) =>
-      operators.Sampling.temperatureMixture(
-          t(s, d, "documents").select(col("source"),
-            TextFns.bpeishTokenCount(col("text")).as("n")),
-          "source", col("n"), temperature = 2.0)
-        .select(col("source"), col("n_tokens"),
-          pround(col("p"), 4).as("p"),
-          pround(col("epochs"), 4).as("epochs"))),
-
-    // tokenizer fertility per language: sub-word tokens per whitespace
-    // word + chars per sub-word token — the stats a tokenizer audit
-    // reads before committing a vocab to a multilingual corpus
-    "q113_fertility_by_lang" -> ((s, d) =>
-      t(s, d, "documents").groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFns.wsTokenCount(col("text"))).cast("long").as("ws_tokens"),
-          sum(TextFns.bpeishTokenCount(col("text"))).cast("long").as("bpe_tokens"),
-          sum(col("n_chars")).cast("long").as("sum_chars"))
-        .select(col("lang"), col("n_docs"), col("ws_tokens"), col("bpe_tokens"),
-          pround(when(col("ws_tokens") > 0,
-              col("bpe_tokens").cast("double") / col("ws_tokens"))
-            .otherwise(lit(0.0)), 4).as("fertility"),
-          pround(when(col("bpe_tokens") > 0,
-              col("sum_chars").cast("double") / col("bpe_tokens"))
-            .otherwise(lit(0.0)), 4).as("chars_per_token"))),
-
-    // length-based curriculum assignment: quartile phases over the
-    // sub-word token count (the standard easy->hard ordering signal),
-    // exact interpolated bounds as a ONE-ROW broadcast aggregate —
-    // same percentile≡quantile_cont parity q41/q107 rely on
-    "q114_curriculum_phases" -> ((s, d) => {
-      val tok = t(s, d, "documents").select(col("doc_id"),
-        TextFns.bpeishTokenCount(col("text")).as("n_tokens"))
-      val bounds = tok.agg(
-        expr("percentile(n_tokens, 0.25)").as("__q1"),
-        expr("percentile(n_tokens, 0.5)").as("__q2"),
-        expr("percentile(n_tokens, 0.75)").as("__q3"))
-      tok.join(broadcast(bounds))
-        .select(col("doc_id"), col("n_tokens"),
-          (when(col("n_tokens") > col("__q1"), 1L).otherwise(0L) +
-            when(col("n_tokens") > col("__q2"), 1L).otherwise(0L) +
-            when(col("n_tokens") > col("__q3"), 1L).otherwise(0L)).as("phase"))
-    }),
-
-    // per-source dataset card: the summary table a curator reads
-    // before admitting a source — volume, mean quality (decimal-summed
-    // for engine-order independence), exact-dup rate, language purity
-    "q115_source_report" -> ((s, d) => {
-      val perDoc = t(s, d, "documents").select(col("source"), col("lang"),
-        TextFns.bpeishTokenCount(col("text")).as("n"),
-        TextFns.qualityScore(col("text")).cast("decimal(18,8)").as("q"),
-        md5(lower(col("text"))).as("h"))
-      val base = perDoc.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum("n").cast("long").as("n_tokens"),
-        sum("q").as("__qsum"),
-        countDistinct(col("h")).as("__nd"))
-      val langTop = perDoc.groupBy("source", "lang")
-        .agg(count(lit(1)).as("c"))
-        .groupBy("source").agg(max("c").as("__top"))
-      base.join(langTop, "source")
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          pround(col("__qsum").cast("double") / col("n_docs"), 4).as("mean_quality"),
-          pround((col("n_docs") - col("__nd")).cast("double") / col("n_docs"), 4).as("dup_rate"),
-          pround(col("__top").cast("double") / col("n_docs"), 4).as("top_lang_share"))
-    }),
-
-    // leakage-safe splits: a near-dup pair straddling train/test leaks
-    // the answer into training, so the split key is the doc's CONNECTED
-    // COMPONENT representative in the MinHash candidate graph (q21's
-    // bands, q65's labeling) — every near-dup cluster lands whole in
-    // one split; singletons fall back to their own id
-    "q116_leakage_safe_splits" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = Dedup.minhashCandidates(docs, "text", "doc_id")
-      val comp = operators.Components.connectedComponents(pairs)
-        .withColumnRenamed("node", "doc_id")
-      val withRep = docs.select(col("doc_id"))
-        .join(comp, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("rep"))
-      operators.Sampling.datasetSplit(withRep, "rep")
-        .select(col("doc_id"), col("rep"), col("split"))
-    }),
-
-    // q93's mixture PLAN materialized: per-source keep fractions turn
-    // into a deterministic per-doc filter (content-stable hash bucket
-    // vs the basis-point keep threshold) — the step that actually
-    // produces the rebalanced corpus, reported per source
-    "q117_mixture_apply" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("source"),
-        TextFns.bpeishTokenCount(col("text")).as("n"))
-      val plan = operators.Sampling.mixturePlan(docs, "source", col("n"),
-          Map("src0" -> 4.0, "src1" -> 2.0, "src2" -> 1.0, "src3" -> 1.0))
-        .select(col("source"),
-          floor(col("keep_frac") * 10000 + 0.5).cast("long").as("__keep_bp"))
-      docs.join(broadcast(plan), "source")
-        .filter(operators.Sampling.hashBucket(col("doc_id"), 10000) < col("__keep_bp"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_kept"), sum("n").cast("long").as("tok_kept"))
-    }),
-
-    // corpus-level n-gram novelty: the fraction of a doc's distinct
-    // trigrams appearing NOWHERE else — low novelty flags boilerplate
-    // and templated text that per-doc repetition screens (q67/q111)
-    // can't see. Document-frequency join, the q66/q77 shape (partial
-    // agg on the gram key; AQE splits hot grams)
-    "q118_gram_novelty" -> ((s, d) => {
-      val grams = t(s, d, "documents").select(col("doc_id"),
-        explode(graft.expressions.GraftFunctions
-          .distinctWordShingles(col("text"), 3)).as("g"))
-      val dfreq = grams.groupBy("g").agg(count(lit(1)).as("__df"))
-      val perDoc = grams.join(dfreq, "g").groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_grams"),
-          sum(when(col("__df") === 1, 1L).otherwise(0L)).cast("long").as("n_unique"))
-      t(s, d, "documents").select(col("doc_id"))
-        .join(perDoc, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-          coalesce(col("n_unique"), lit(0L)).as("n_unique"),
-          pround(when(col("n_grams") > 0,
-              col("n_unique").cast("double") / col("n_grams"))
-            .otherwise(lit(0.0)), 4).as("novelty"))
-    }),
-
-    // character-distribution gibberish screen: one-pass native
-    // CharStats in the scan projection (no character explode — that
-    // shape shuffles ~5× the token volume). Derived screens are
-    // RATIONAL in the counts (top-char share; Simpson concentration
-    // 1 − Σp²) — no Shannon/libm log, so the oracle reproduces the
-    // doubles exactly. keep thresholds compare PROUNDED values so an
-    // engine-boundary ulp can't flip the decision.
-    "q119_char_stats" -> ((s, d) => {
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.expressions.GraftFunctions.charStats(col("text")).as("st"))
-        .select(col("doc_id"),
-          col("st.n_cp").cast("long").as("n_cp"),
-          col("st.n_distinct").cast("long").as("n_distinct"),
-          pround(when(col("st.n_cp") > 0,
-              col("st.top_cnt").cast("double") / col("st.n_cp"))
-            .otherwise(lit(0.0)), 4).as("top_share"),
-          pround(when(col("st.n_cp") > 0,
-              lit(1.0) - col("st.sum_sq").cast("double") /
-                (col("st.n_cp").cast("double") * col("st.n_cp")))
-            .otherwise(lit(0.0)), 4).as("simpson"))
-        .withColumn("keep",
-          when(col("top_share") <= 0.4 && col("simpson") >= 0.5, 1L)
-            .otherwise(0L))
-    }),
-
-    // per-source token-concentration card: type-token ratio + top-10
-    // share straight off one (source, term) aggregate — the Zipf-head
-    // health check, kept rational (no log-log slope) for portability
-    "q120_token_concentration" -> ((s, d) =>
-      operators.TfIdf.tokenConcentration(
-          t(s, d, "documents"), "text", "source", k = 10)
-        .select(col("source"), col("n_tokens"), col("n_types"),
-          pround(col("ttr"), 4).as("ttr"),
-          pround(col("top_share"), 4).as("top_share"))),
-
-    // token-aligned sliding windows (size 32, stride 24): the LM
-    // training counterpart of q72's character chunks — emission stops
-    // at the first window reaching the doc's end (no suffix-repeat
-    // tail windows)
-    "q121_token_windows" -> ((s, d) =>
-      operators.Packing.tokenWindows(
-        t(s, d, "documents"), "text", "doc_id", size = 32, stride = 24)),
-
-    // quality-proxy audit: Spearman rho between doc length and lexical
-    // diversity (per-doc type-token ratio), per source — row_number
-    // ranks with doc_id tie-break keep the statistic integer until one
-    // final division
-    "q122_rank_correlation" -> ((s, d) => {
-      val toks = graft.functions.TextFns.tokens(col("text"))
-      val withTtr = t(s, d, "documents")
-        .select(col("source"), col("doc_id"), col("n_chars"),
-          when(size(toks) > 0,
-            size(array_distinct(toks)).cast("double") / size(toks))
-            .otherwise(lit(0.0)).as("ttr"))
-      operators.Profile.rankCorrelation(
-          withTtr, "source", "n_chars", "ttr", "doc_id")
-        .select(col("source"), col("n_docs"),
-          pround(col("rho"), 4).as("rho"))
-    }),
-
-    // per-label embedding diversity WITHOUT pairs: mean pairwise
-    // squared distance via 2(E||x||^2 - ||Ex||^2) on x2^20 fixed-point
-    // integer sums — O(n*d), the audit that is O(n^2*d) done naively
-    "q123_embed_diversity" -> ((s, d) =>
-      operators.Similarity.meanPairwiseSqDist(
-          t(s, d, "embeddings"), "label", "embedding")
-        .select(col("label"), col("n_vecs"),
-          pround(col("mean_sq_dist"), 6).as("mean_sq_dist"))),
-
-    // canonical selection: near-dup clusters keep their BEST doc by the
-    // q31 quality score (desc, id asc) instead of keep-min-id — one
-    // max_by hash aggregate, no per-cluster sort window
-    "q124_canonical_reps" -> ((s, d) =>
-      Dedup.canonicalReps(t(s, d, "documents"), "text", "doc_id",
-          TextFns.qualityScore(col("text")))
-        .select(col("cluster"), col("rep_id"), col("n_members"),
-          pround(col("rep_quality"), 4).as("rep_quality"))),
-
-    // doc-inside-doc screen: per banded candidate pair, shingle-set
-    // containment (inter / min set size) alongside Jaccard; `contained`
-    // flags the engulfed pairs near-dup dedup would NOT collapse
-    "q125_containment" -> ((s, d) =>
-      Dedup.containmentPairs(t(s, d, "documents"), "text", "doc_id")
-        .select(col("id_a"), col("id_b"),
-          pround(col("containment"), 4).as("containment"),
-          pround(col("jaccard"), 4).as("jaccard"),
-          col("contained"))),
-
-    // LSH cost/skew audit: per band, bucket count + max bucket + the
-    // implied candidate-pair expansion — hot-bucket detection priced
-    // as one groupBy BEFORE any pairwise work
-    "q126_band_buckets" -> ((s, d) =>
-      Dedup.bandBucketStats(t(s, d, "documents"), "text", "doc_id")),
-
-    // near-dup graph authority: 5 rounds of integer-surfer PageRank
-    // over the banded candidate graph — all-BIGINT floor arithmetic,
-    // so the fixpoint is engine- and partitioning-exact
-    "q127_pagerank" -> ((s, d) =>
-      operators.PageRank.ranks(
-        Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id"))),
-
-    // behavioral-sequence grams: top-20 within-session action trigrams
-    // (q40's session assignment, total (ts, event_id) order, no
-    // cross-session sequences)
-    "q128_behavior_grams" -> ((s, d) =>
-      operators.Sessionize.behaviorTrigrams(t(s, d, "events"),
-        "user_id", "ts", "event_type", "event_id",
-        gapSeconds = 3600, k = 20)),
-
-    // model-based keep/drop gate in integer basis points: a linear
-    // quality classifier whose score is BIGINT-exact on any engine
-    "q129_linear_quality" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-          TextFns.linearQualityScore(col("text")).as("score"))
-        .withColumn("keep", when(col("score") >= 1000L, 1L).otherwise(0L))),
-
-    // attribution interval join: ALL clicks in the hour before each
-    // purchase (vs q28's nearest-one as-of) — equi join on user with a
-    // residual time-range predicate, the stream-stream join shape
-    "q130_attribution" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("c_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("p_ts"))
-      operators.IntervalJoin.within(clicks, purchases, "user_id",
-          "c_ts", "p_ts", maxLagSeconds = 3600)
-        .select("user_id", "click_id", "purchase_id")
-    }),
-
-    // LSH S-curve calibration: signature agreement count x true-Jaccard
-    // decile over the candidate pairs — the is-my-threshold-right table
-    "q131_minhash_calibration" -> ((s, d) =>
-      Dedup.minhashCalibration(t(s, d, "documents"), "text", "doc_id")),
-
-    // cross-group neighbor mining (bitext-mining shape): each probe's
-    // best neighbor with a DIFFERENT label; threshold keeps the output
-    // pairs-not-noise
-    "q132_cross_mining" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.crossGroupTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "embedding", "label", k = 1, minCosine = 0.1)
-        .withColumn("cos_sim", pround(col("cos_sim"), 4))
-    }),
-
-    // exact heavy hitters: terms holding >= 3% of a source's token
-    // volume — integer cross-multiplication share test, no window
-    "q134_heavy_hitters" -> ((s, d) =>
-      operators.TfIdf.heavyHitters(
-        t(s, d, "documents"), "text", "source", minShareBp = 300L)),
-
-    // deterministic epoch shuffle: 2 epochs x 8 shards of fresh
-    // content-stable assignments — multi-epoch order variety without
-    // RNG state, scan-resident
-    "q135_epoch_shuffle" -> ((s, d) =>
-      operators.Sampling.epochShards(
-        t(s, d, "documents"), "doc_id", epochs = 2, shards = 8)),
-
-    // operational SLA profile: exact daily p50/p95 value bands per
-    // event type (percentile ≡ quantile_cont parity, as q41/q114)
-    "q136_daily_bands" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          pround(expr("percentile(value, 0.5)"), 4).as("p50"),
-          pround(expr("percentile(value, 0.95)"), 4).as("p95"))),
-
-    // attribution rate: share of purchases with >= 1 click in the
-    // trailing hour (q130's join aggregated per day, basis points via
-    // integer division)
-    "q137_attribution_rate" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("p_ts"))
-      val attributed = operators.IntervalJoin.within(
-          clicks, purchases, "user_id", "c_ts", "p_ts", 3600)
-        .select("purchase_id").distinct().withColumn("__attr", lit(1L))
-      purchases.join(attributed, Seq("purchase_id"), "left")
-        .groupBy(date_format(col("p_ts"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as("n_purchases"),
-          sum(coalesce(col("__attr"), lit(0L))).cast("long").as("n_attributed"))
-        .select(col("day"), col("n_purchases"), col("n_attributed"),
-          call_function("div", col("n_attributed") * 10000L,
-            col("n_purchases")).as("rate_bp"))
-    }),
-
-    // context-length planning: power-of-two token-length histogram per
-    // source; the exponent is exact integer (length of the binary
-    // representation), no libm log2 near-boundary risk
-    "q138_length_histogram" -> ((s, d) => {
-      val n = TextFns.wsTokenCount(col("text"))
-      t(s, d, "documents").select(col("source"), n.as("n_tok"))
-        .withColumn("log2_bucket",
-          when(col("n_tok") > 0,
-            (length(bin(col("n_tok"))) - 1).cast("long")).otherwise(lit(-1L)))
-        .groupBy(col("source"), col("log2_bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast("long").as("n_tokens"))
-    }),
-
-    // exact-complete set-similarity self-join over word 3-shingle
-    // sets: prefix filtering (AllPairs) guarantees every Jaccard >=
-    // 0.5 pair is a candidate — recall 1.0 where q21's banding is
-    // probabilistic; shingles (not raw tokens) keep the set space
-    // discriminative on this small-vocab corpus
-    // the candidate budget is sized PER DOCUMENT (×400), not as an
-    // absolute count: under replica isolation the per-doc candidate
-    // density is SF-invariant (~373/doc on this corpus — the sf10
-    // probe's 186M candidates at 500k docs tripped the old fixed 10M
-    // bound while the true output stayed linear), so a per-doc budget
-    // accepts any healthy SF and the guard still refuses a
-    // self-similarity explosion at the same density it always did.
-    // The count is memoized per (dir, table) — not an action charged
-    // to every timed run — and floored at 1 so an empty corpus yields
-    // an empty result instead of tripping the guard's require()
-    "q143_prefix_join" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.prefixFilterPairs(docs, "text", "doc_id",
-          minJaccard = 0.5, shingleN = 3,
-          maxCandidates = math.max(1L, 400L * rowCount(s, d, "documents")))
-        .withColumn("jaccard", pround(col("jaccard"), 4))
-    }),
-
-    // whale concentration: share of each nation's order revenue held
-    // by its top-1% customers (ceil(n/100), min 1), in basis points —
-    // decimal-exact spends, integer-exact rank cut
-    "q169_revenue_concentration" -> ((s, d) => {
-      val spend = t(s, d, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("__spend"))
-      val byNation = spend
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), col("o_custkey"), col("__spend"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("n_name"))
-        .orderBy(col("__spend").desc, col("o_custkey"))
-      val counts = byNation.groupBy(col("n_name"))
-        .agg(count(lit(1)).cast("long").as("__n"))
-      byNation
-        .withColumn("__rk", row_number().over(w))
-        .join(broadcast(counts), "n_name")
-        .withColumn("__k", greatest(ceil(col("__n") / 100.0).cast("long"), lit(1L)))
-        .groupBy(col("n_name"))
-        .agg(max(col("__n")).as("n_customers"), max(col("__k")).as("n_top"),
-          floor(sum(when(col("__rk") <= col("__k"), col("__spend"))
-              .otherwise(lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)")))
-              .cast("double") * 10000.0 /
-            sum(col("__spend")).cast("double")).cast("long").as("top_share_bp"))
-    }),
-
-    // ops report: week-over-week volume deltas per event type in
-    // integer basis points (weeks = epoch-day div 7, engine-exact)
-    "q167_wow_delta" -> ((s, d) => {
-      val weekly = t(s, d, "events")
-        .groupBy(col("event_type"),
-          call_function("div", unix_date(to_date(col("ts"))), lit(7L))
-            .as("week"))
-        .agg(count(lit(1)).cast("long").as("n"))
-      weekly.alias("c")
-        .join(weekly.alias("p"),
-          col("p.event_type") === col("c.event_type") &&
-            col("p.week") === col("c.week") - 1L)
-        .select(col("c.event_type").as("event_type"), col("c.week").as("week"),
-          col("c.n").as("n"), col("p.n").as("n_prev"),
-          // deltas go NEGATIVE: integer div truncates toward zero on
-          // Spark but floors on DuckDB — floor of the exact double
-          // ratio is identical on both
-          floor(((col("c.n") - col("p.n")) * 10000L).cast("double") /
-            greatest(col("p.n"), lit(1L)).cast("double"))
-            .cast("long").as("delta_bp"))
-    }),
-
-    // which event types co-occur in the same session? distinct-type
-    // pairs per session, support in basis points of all sessions
-    "q168_type_affinity" -> ((s, d) => {
-      val sess = operators.Sessionize.withSessionIds(t(s, d, "events"),
-          "user_id", "ts", gapSeconds = 3600)
-        .select(concat_ws("#", col("user_id"), col("session_id")).as("sid"),
-          col("event_type"))
-        .distinct()
-      val total = sess.agg(countDistinct(col("sid")).cast("long").as("__tot"))
-      sess.groupBy(col("sid"))
-        .agg(array_sort(collect_set(col("event_type"))).as("ts2"))
-        .filter(size(col("ts2")) > 1)
-        .select(explode(graft.expressions.GraftFunctions.pairCombos(col("ts2"))).as("p"))
-        .groupBy(col("p.id_a").as("type_a"), col("p.id_b").as("type_b"))
-        .agg(count(lit(1)).cast("long").as("n_both"))
-        .crossJoin(broadcast(total))
-        .withColumn("support_bp",
-          call_function("div", col("n_both") * 10000L, col("__tot")))
-        .drop("__tot")
-    }),
-
-    // curation knob table: per source, acceptance rate (bp) of the
-    // integer linear gate at each candidate threshold — the sweep a
-    // pipeline reads before pinning its cut
-    "q165_quality_sweep" -> ((s, d) => {
-      val scored = t(s, d, "documents").select(col("source"),
-        TextFns.linearQualityScore(col("text")).as("score"))
-      val thresholds = Seq(0L, 500L, 1000L, 1500L, 2000L, 2500L)
-      scored
-        .select(col("source"), col("score"),
-          explode(array(thresholds.map(lit): _*)).as("threshold"))
-        .groupBy(col("source"), col("threshold"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("score") >= col("threshold"), 1L).otherwise(0L))
-            .cast("long").as("n_keep"))
-        .withColumn("keep_bp",
-          call_function("div", col("n_keep") * 10000L, col("n_docs")))
-    }),
-
-    // embedding norm health per label: exact mean (decimal-summed,
-    // x2^20 fixed point) + p50/p95 of L2 norms
-    "q166_norm_bands" -> ((s, d) => {
-      val n = t(s, d, "embeddings").select(col("label"),
-        functions.VectorFns.l2Norm(col("embedding")).as("nrm"))
-      n.groupBy(col("label"))
-        .agg(count(lit(1)).as("n_vecs"),
-          pround(sum(floor(col("nrm") * 1048576.0 + 0.5).cast("long"))
-              .cast("double") / (count(lit(1)) * 1048576.0).cast("double"), 4)
-            .as("mean_norm"),
-          pround(expr("percentile(nrm, 0.5)"), 4).as("p50_norm"),
-          pround(expr("percentile(nrm, 0.95)"), 4).as("p95_norm"))
-    }),
-
-    // is daily volume rising? OLS slope per type from exact decimal/
-    // BIGINT sums — one engine-exact division
-    "q163_trend_slope" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("event_type"),
-          unix_date(to_date(col("ts"))).as("x"))
-        .agg(sum(col("value").cast("decimal(18,2)")).as("y"))
-      operators.Resample.trendSlope(daily, "event_type", "x", "y")
-        .select(col("event_type"), col("n").as("n_days"),
-          pround(col("slope"), 6).as("slope"))
-    }),
-
-    // how fast do clicks convert? per-day p50/p95 of the purchase's
-    // NEAREST preceding click lag (q130's join, max-reduced)
-    "q164_conversion_lag" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("p_ts"))
-      operators.IntervalJoin.within(clicks, purchases, "user_id",
-          "c_ts", "p_ts", maxLagSeconds = 3600)
-        .groupBy(col("purchase_id"), col("p_ts"))
-        .agg(max(col("c_ts")).as("c_ts"))
-        .select(date_format(col("p_ts"), "yyyy-MM-dd").as("day"),
-          (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts")))
-            .as("lag_s"))
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n_conv"),
-          pround(expr("percentile(lag_s, 0.5)"), 4).as("p50_lag"),
-          pround(expr("percentile(lag_s, 0.95)"), 4).as("p95_lag"))
-    }),
-
-    // synthetic-data diversity audit: distinct-1/2/3 per source in
-    // integer basis points (mode collapse shows as a low ratio)
-    "q161_distinct_n" -> ((s, d) =>
-      operators.TfIdf.distinctNgramRatios(t(s, d, "documents"), "text",
-        "source", maxN = 3)),
-
-    // robust per-dimension normalization table: exact median + MAD
-    // per embedding dimension (MAD ~ 0 = dead dimension)
-    "q162_embed_robust" -> ((s, d) =>
-      operators.Similarity.robustDimStats(t(s, d, "embeddings"), "embedding")
-        .select(col("dim").cast("long").as("dim"), col("n"),
-          pround(col("med"), 4).as("med"), pround(col("mad"), 4).as("mad"))),
-
-    // q154's compaction maintained across two micro-batches; final
-    // view must equal one-shot compaction under any split
-    "q159_streaming_cdc" -> ((s, d) => {
-      val st = invocationStateDir("q159", "cdc")
-      val ev = t(s, d, "events")
-      def tick(p: Int) = streaming.StreamingCdc.acceptBatch(
-        ev.filter(col("event_id") % 2 === p), "user_id",
-        Seq("ts", "event_id"), col("event_type") === "purchase", st)
-      tick(0)
-      tick(1).select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_type"),
-        unix_micros(col("ts")).as("ts_us"), col("value"))
-    }),
-
-    // TPC-H Q5 shape: six-way star join, local-supplier condition,
-    // region + year filters, decimal-exact revenue
-    "q160_region_volume" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, d, "supplier"),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(t(s, d, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA" &&
-          col("o_orderdate") >= lit("1996-01-01") &&
-          col("o_orderdate") < lit("1997-01-01"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)
-            .as("revenue"))),
-
-    // tokenizer induction actually run: 5 BPE merges learned in
-    // sequence over the vocabulary-bounded word table
-    "q158_bpe_merges" -> ((s, d) =>
-      operators.Bpe.learnMerges(t(s, d, "documents"), "text", rounds = 5)),
-
-    // anomaly baseline: per-type EWMA over the daily decimal-exact
-    // value sums; ordered fold, alpha = 0.5 (exact halvings)
-    "q156_ewma" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("dv"))
-      operators.Resample.ewma(daily, "event_type", "day", "dv", alpha = 0.5)
-        .select(col("event_type"), col("n_points").as("n_days"),
-          pround(col("last_val"), 2).as("last_day"),
-          pround(col("ewma"), 4).as("ewma"))
-    }),
-
-    // clustering structure of the q21 candidate graph: per-node
-    // triangle counts (dense boilerplate families close triangles)
-    "q157_triangles" -> ((s, d) =>
-      operators.Triangles.nodeTriangleCounts(
-        Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id",
-          bands = 3, rowsPerBand = 2),
-        "id_a", "id_b")),
-
-    // conditional fluency: mean log10 Laplace-smoothed bigram
-    // probability per doc (q90's unigram score with sequence structure)
-    "q152_bigram_lm" -> ((s, d) =>
-      operators.TfIdf.lmScore2(t(s, d, "documents"), "text", "doc_id")
-        .select(col("doc").as("doc_id"), col("n_bigrams"),
-          pround(col("lm2_score"), 4).as("lm2_score"))),
-
-    // embedding-space health: per-label centroid distance from the
-    // global centroid (the representation-drift card next to q146)
-    "q153_centroid_drift" -> ((s, d) =>
-      operators.Similarity.centroidDrift(t(s, d, "embeddings"),
-          "embedding", "label")
-        .select(col("label"), col("n_vecs"),
-          pround(col("drift"), 4).as("drift"))),
-
-    // CDC changelog compaction: last op per user wins under the total
-    // (ts, event_id) order; a trailing 'purchase' is a tombstone
-    "q154_cdc_compact" -> ((s, d) =>
-      operators.Relational.cdcCompact(t(s, d, "events"), "user_id",
-          Seq(col("ts"), col("event_id")),
-          col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"),
-          unix_micros(col("ts")).as("ts_us"), col("value"))),
-
-    // token-weighted median doc length per source: integer-exact
-    // selection (2*cumsum >= total), no interpolation
-    "q155_weighted_median" -> ((s, d) =>
-      operators.Profile.weightedMedian(
-        t(s, d, "documents").select(col("source"), col("doc_id"),
-          col("n_chars"), TextFns.wsTokenCount(col("text")).as("n_tok")),
-        "n_chars", "n_tok", "source", "doc_id")),
-
-    // streaming drift monitor: register a baseline token-count
-    // histogram (even doc_ids), score two odd-id batches against it
-    "q151_streaming_drift" -> ((s, d) => {
-      val st = invocationStateDir("q151", "baseline")
-      val v = t(s, d, "documents").select(col("doc_id"),
-        size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-      streaming.StreamingDrift.registerBaseline(
-        v.filter(col("doc_id") % 2 === 0), "n_tok", st)
-      def screen(m: Int) = streaming.StreamingDrift
-        .screenBatch(v.filter(col("doc_id") % 4 === m), "n_tok", st)
-        .withColumn("batch", lit(s"b$m"))
-      screen(1).unionByName(screen(3))
-        .select(col("batch"), col("n_rows"), col("n_bins"), col("psi"))
-    }),
-
-    // do the model gate (q129) and the length heuristic agree beyond
-    // chance? 2x2 confusion + kappa as ONE exact-integer division
-    "q149_rater_kappa" -> ((s, d) =>
-      operators.Audit.cohenKappa(
-        t(s, d, "documents").select(col("source"),
-          when(TextFns.linearQualityScore(col("text")) >= 1000L, 1L)
-            .otherwise(0L).as("ra"),
-          when(TextFns.wsTokenCount(col("text")) >= 20L, 1L)
-            .otherwise(0L).as("rb")),
-        "source", "ra", "rb")),
-
-    // day-over-day active-user stability: overlap + Jaccard in basis
-    // points (a population swap shows even when volumes look flat)
-    "q150_dau_overlap" -> ((s, d) =>
-      operators.Cohorts.dailyOverlap(t(s, d, "events"), "user_id", "ts")),
-
-    // per-source drift score vs the corpus baseline: PSI over
-    // power-of-two token-count bins, Laplace-smoothed, decimal-summed
-    "q146_psi_drift" -> ((s, d) =>
-      operators.Profile.psi(
-          t(s, d, "documents").select(col("source"),
-            size(TextFns.tokens(col("text"))).cast("long").as("n_tok")),
-          "n_tok", "source")
-        .withColumnRenamed("grp", "source")),
-
-    // MOSS-style winnowing: doc pairs sharing >= 2 selected
-    // fingerprints (min md5 of each 4-window over char 8-grams);
-    // fingerprints in > 20 docs are boilerplate and dropped
-    "q147_winnow_pairs" -> ((s, d) =>
-      Dedup.winnowedPairs(t(s, d, "documents"), "text", "doc_id",
-        k = 8, w = 4, minShared = 2, maxDf = 20)),
-
-    // within-session Markov transition matrix; probabilities in
-    // integer basis points so the table is engine-exact
-    "q148_transitions" -> ((s, d) =>
-      operators.Sessionize.transitionMatrix(t(s, d, "events"),
-        "user_id", "ts", "event_type", "event_id", gapSeconds = 3600)),
-
-    // record-linkage: each part's nearest other part by edit distance,
-    // blocked on the first name token (quadratic only within a block)
-    "q144_fuzzy_match" -> ((s, d) =>
-      operators.FuzzyJoin.nearestMatch(t(s, d, "part"), "p_name",
-        "p_partkey", maxDist = 3)),
-
-    // collocation mining: top-40 token pairs by document-cooccurrence
-    // PMI; ranked on the raw rational ratio (bit-reproducible), log10
-    // only in the displayed score
-    "q145_pmi_pairs" -> ((s, d) =>
-      operators.TfIdf.pmiPairs(t(s, d, "documents"), "text", "doc_id",
-          minDf = 5, k = 40)
-        .withColumn("pmi", pround(col("pmi"), 4))),
-
-    // cross-source-fair filtering primitive: each doc's quality
-    // percentile WITHIN its source, in integer basis points (a global
-    // threshold over pct_bp drops the same fraction of every source)
-    "q141_quality_percentile" -> ((s, d) => {
-      val base = t(s, d, "documents")
-        .select(col("doc_id"), col("source"),
-          TextFns.qualityScore(col("text")).as("__q"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("__q"), col("doc_id"))
-      val counts = base.groupBy("source").agg(count(lit(1)).as("__n"))
-      base.withColumn("__rn", row_number().over(w))
-        .join(broadcast(counts), "source")
-        .select(col("doc_id"), col("source"),
-          call_function("div", (col("__rn") - 1L) * 10000L,
-            greatest(col("__n") - 1L, lit(1L))).as("pct_bp"))
-    }),
-
-    // incremental materialized view: the (day, event_type) aggregate
-    // maintained across two micro-batches must equal the one-shot
-    // batch aggregate — additive partials, decimal-summed
-    "q142_streaming_daily_agg" -> ((s, d) => {
-      val st = invocationStateDir("q142", "mv")
-      val ev = t(s, d, "events")
-      def tick(p: Int) = streaming.StreamingAgg.acceptBatch(
-        ev.filter(col("event_id") % 2 === p), "ts", "event_type", "value", st)
-      tick(0)
-      tick(1).select(col("day"), col("event_type"), col("n"),
-        pround(col("total").cast("double"), 2).as("total"))
-    }),
-
-    // Z-order clustering key (OPTIMIZE ZORDER BY shape): bit
-    // interleave of (orderkey, partkey) — write-sorted by this key,
-    // parquet min/max prune on BOTH columns
-    "q139_zorder_key" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
-          plans.ZOrder.morton2(col("l_orderkey"), col("l_partkey"))
-            .as("zkey"))),
-
-    // sliding-window aggregates (1h window, 15min slide): Spark's
-    // native window() vs the oracle's 4-covering-slot restatement —
-    // the streaming windowing semantics verified relationally
-    "q140_sliding_window" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"))
-        .select(unix_timestamp(col("w.start")).as("window_start"),
-          col("n_events"), col("n_users"))),
-
-    // reproducibility audit: per-shard order-independent content
-    // checksums — re-runs, replications, and migrations must reproduce
-    // these exactly; commutative sums make them partitioning-free
-    "q133_shard_checksums" -> ((s, d) =>
-      t(s, d, "documents")
-        .select((col("doc_id") % 16).as("shard"), col("doc_id"),
-          col("n_chars"),
-          // first 60 bits of md5(text), folded mod a prime so the
-          // per-shard SUM stays far inside BIGINT at any shard size
-          (conv(substring(md5(col("text")), 1, 15), 16, 10)
-            .cast("long") % 1000000007L).as("h"))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("h")).as("content_checksum"),
-          sum(col("n_chars")).as("char_checksum"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))),
-
-    "q41_median" -> ((s, d) => {
-      t(s, d, "events").groupBy("event_type")
-        .agg(pround(expr("percentile(value, 0.5)"), 4).as("median_value"))
-    }),
-
-    "q42_stats_exact" -> ((s, d) => {
-      // moments from EXACT decimal sums, finished in double with one
-      // fixed operation order — partial-agg ordering can't perturb them
-      val n = count(lit(1)).cast("double")
-      val sx = sum(col("value").cast("decimal(28,2)")).cast("double")
-      val sxx = sum((col("value") * col("value")).cast("decimal(28,4)")).cast("double")
-      t(s, d, "events").groupBy("event_type")
-        .agg(n.cast("long").as("n"),
-          pround(sx / n, 4).as("mean_value"),
-          pround(sqrt(sxx / n - (sx / n) * (sx / n)), 4).as("stddev_pop"))
-    }),
-
-    "q43_histogram" -> ((s, d) => {
-      t(s, d, "events")
-        .groupBy(floor(col("value") / 10).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // composed curation pipeline (quality -> language -> exact dedup ->
-    // near dedup); the default transitive keep policy resolves one
-    // survivor per connected candidate component, and the oracle
-    // reproduces it with the unrolled hash-to-min contraction
-    // (ccUnrolledSql) — the whole chain stays SQL-expressible and
-    // hash-checked.
-    // The pipeline's internal persist must not outlive this call (a
-    // long-lived driver would strand one cached corpus per invocation,
-    // and CacheManager's plan matching would silently serve run 1's
-    // cache to run 2's "fresh" execution) — so materialize the result
-    // off the cache with an eager localCheckpoint, then release it.
-    // Checkpoint blocks are reclaimed by the ContextCleaner when the
-    // returned frame is dropped.
-    "q46_curation_pipeline" -> ((s, d) => {
-      val res = operators.CurationPipeline.run(t(s, d, "documents"), "text",
-        "doc_id", withAudit = false)
-      val out = res.kept.select("doc_id", "lang", "n_chars")
-        .localCheckpoint(eager = true)
-      res.unpersist()
-      out
-    }),
-
-    // the same curation semantics THROUGH the streaming screen, on one
-    // batch against fresh state: gates + hash-table exact dedup +
-    // band-key near dedup with intra-batch transitive resolution. One
-    // batch from fresh state equals q46's batch pipeline by
-    // construction (shared gate predicates, shared nearDupLosers keep
-    // policy), so it shares q46's oracle. State lands in a
-    // per-invocation temp dir; acceptBatch materializes the result
-    // eagerly before committing state.
-    "q64_streaming_curation" -> ((s, d) => {
-      val state = invocationStateDir("q64", "state")
-      streaming.StreamingCuration.acceptBatch(
-          t(s, d, "documents"), "text", "doc_id", state)
-        .select("doc_id", "lang", "n_chars")
-    }),
-
-    // q64's screen with the decontamination stage armed: every 10th doc
-    // plays the benchmark (its distinct 3-word shingles become the
-    // persisted eval-gram table), the rest stream through the full
-    // five-stage screen. n=3 matches q66's rationale for short
-    // synthetic docs; EAGER like q64/q82 (registerEvalSet commits the
-    // gram table before the screen runs)
-    "q87_streaming_decontamination" -> ((s, d) => {
-      val state = invocationStateDir("q87", "state")
-      val docs = t(s, d, "documents")
-      streaming.StreamingCuration.registerEvalSet(
-        docs.filter(col("doc_id") % 10 === 0), "text", state, n = 3)
-      streaming.StreamingCuration.acceptBatch(
-          docs.filter(col("doc_id") % 10 =!= 0), "text", "doc_id", state)
-        .select("doc_id", "lang", "n_chars")
-    }),
-
-    "q47_hash_sample" -> ((s, d) =>
-      operators.Sampling.deterministicSample(t(s, d, "documents"), "doc_id", 25)
-        .select("doc_id", "lang")),
-
-    "q48_dataset_split" -> ((s, d) =>
-      operators.Sampling.datasetSplit(t(s, d, "documents"), "doc_id")
-        .groupBy("split").agg(count(lit(1)).as("n"))),
-
-    "q49_lag_delta" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      t(s, d, "events").select(col("event_id"), col("user_id"),
-        pround(col("value") - lag(col("value"), 1).over(w), 4).as("delta"))
-    }),
-
-    "q50_ntile" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("event_type").orderBy(col("value"), col("event_id"))
-      t(s, d, "events").select(col("event_id"), col("event_type"),
-        ntile(4).over(w).as("quartile"))
-    }),
-
-    "q51_first_last" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, d, "events").select(col("event_id"), col("user_id"),
-        first(col("event_type")).over(w).as("first_type"),
-        last(col("event_type")).over(w).as("last_type"))
-    }),
-
-    "q52_collect" -> ((s, d) => {
-      t(s, d, "events").groupBy("user_id")
-        .agg(array_sort(collect_set(col("event_type"))).as("types"),
-          count(lit(1)).as("n"))
-        .select(col("user_id"), concat_ws(",", col("types")).as("types"), col("n"))
-    }),
-
-    "q53_intersect" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      ev.filter(col("event_type") === "click").select("user_id")
-        .intersect(ev.filter(col("event_type") === "purchase").select("user_id"))
-    }),
-
-    "q59_except" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      ev.filter(col("event_type") === "view").select("user_id")
-        .except(ev.filter(col("event_type") === "purchase").select("user_id"))
-    }),
-
-    "q60_union_distinct" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      ev.filter(col("value") > 180).select("user_id")
-        .union(ev.filter(col("event_type") === "signup").select("user_id"))
-        .distinct()
-    }),
-
-    "q61_grouping_sets" -> ((s, d) => {
-      t(s, d, "events")
-        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-        .groupingSets(Seq(Seq(col("event_type")), Seq(col("day"))),
-          col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          coalesce(col("day"), lit("ALL")).as("day"), col("n"))
-    }),
-
-    "q54_monthly_orders" -> ((s, d) => {
-      t(s, d, "orders")
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("total"))
-    }),
-
-    "q55_cube" -> ((s, d) => {
-      t(s, d, "events")
-        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-        .cube(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          coalesce(col("day"), lit("ALL")).as("day"), col("n"))
-    }),
-
-    // rows-only: sketch aggregates (HLL++ distinct, approximate
-    // percentile) — estimates are engine-specific by construction
-    "q56_sketches" -> ((s, d) => {
-      t(s, d, "events").groupBy("event_type")
-        .agg(approx_count_distinct(col("user_id")).as("approx_users"),
-          percentile_approx(col("value"), lit(0.95), lit(1000)).as("p95_value"),
-          count(lit(1)).as("n"))
-    }),
-
-    "q44_pivot" -> ((s, d) => {
-      t(s, d, "events")
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "purchase", "error", "signup", "view"))
-        .agg(count(lit(1)))
-        // fill ONLY the pivoted count columns — a blanket fill would also
-        // rewrite a null group key to 0, colliding with real user 0
-        .na.fill(0L, Seq("click", "purchase", "error", "signup", "view"))
-    }),
-
-    "q45_rollup" -> ((s, d) => {
-      t(s, d, "events")
-        .rollup(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          dsum(col("value")).as("total_value"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          col("n"), col("total_value"))
-    }),
-
-    // ---- training-data pipeline: dedup / similarity / text -------------
-
-    "q20_exact_dedup" -> ((s, d) =>
-      Dedup.exactClusters(t(s, d, "documents"), "text", "doc_id")),
-
-    "q21_minhash_pairs" -> ((s, d) =>
-      Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id",
-        bands = 3, rowsPerBand = 2)),
-
-    "q22_simhash" -> ((s, d) => {
-      // native per-row signature expression (SimHash16Sig) — identical
-      // values to the oracle's unnest+vote form, no explode, no shuffle.
-      // Token-less docs have a null signature and are dropped, same
-      // absence semantics as the oracle's unnest.
-      Dedup.simhashSignatures(t(s, d, "documents"), "text", "doc_id")
-        .select(col("doc").as("doc_id"), col("sig").as("simhash"))
-    }),
-
-    "q23_jaccard_verify" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.ngramJaccard(docs, "text", "doc_id",
-        Dedup.minhashCandidates(docs, "text", "doc_id", bands = 3, rowsPerBand = 2))
-    }),
-
-    "q24_ann_bruteforce" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "embedding", k = 3)
-        .withColumn("cos_sim", pround(col("cos_sim"), 4))
-    }),
-
-    "q25_ann_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "embedding", "label", k = 3, nprobe = 2)
-        .withColumn("cos_sim", pround(col("cos_sim"), 4))
-    }),
-
-    // learned-cell IVF, GRADUATED to a hash oracle (round 11): the
-    // replayable spherical-Lloyd fit (deterministic smallest-id init,
-    // two unrollable assignment rounds) replaces the MLlib k-means||
-    // fit in the ENTRY — the oracle replays both rounds as CTEs, the
-    // PageRank discipline. `kmeansIvfTopK` (the MLlib path) remains
-    // the production alternative, recall-gated in SimilaritySpec.
-    "q34_ann_kmeans" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.sphericalLloydIvfTopK(emb.filter(col("vec_id") < 10),
-          emb, "vec_id", "embedding", k = 3, nCells = 8, nprobe = 3,
-          iters = 2)
-        .withColumn("cos_sim", pround(col("cos_sim"), 4))
-    }),
-
-    // ANN preprocessing: center on the corpus mean, L2-normalize;
-    // output pins the distance-to-mean and the first normalized
-    // component so the oracle hashes the whole transform
-    "q105_embed_center" -> ((s, d) =>
-      operators.Similarity.centerAndNormalize(
-          t(s, d, "embeddings"), "vec_id", "embedding")
-        .select(col("vec_id"),
-          pround(col("center_dist"), 4).as("center_dist"),
-          // guarded: ANSI element_at throws on an empty vector, where
-          // the oracle's cv[1] quietly yields null
-          pround(when(size(col("embedding_cn")) > 0,
-            element_at(col("embedding_cn"), 1)), 4).as("first_dim"))),
-
-    // streaming embedding near-dup: two ticks (vec_id parity), each
-    // screened against accepted band keys; q26's banding constants so
-    // the oracle reuses the literal plane SQL
-    "q108_streaming_embed_dedup" -> ((s, d) => {
-      val state = invocationStateDir("q108", "bands")
-      val emb = t(s, d, "embeddings")
-      def tick(parity: Int) = streaming.StreamingEmbedDedup.acceptBatch(
-        emb.filter(col("vec_id") % 2 === parity), "embedding", "vec_id",
-        state, bands = 4, planesPerBand = 8, dims = 64)
-      tick(0).unionByName(tick(1)).select("vec_id")
-    }),
-
-    // int8 quantization audit: per-vector reconstruction RMSE and max
-    // abs error against the corpus' per-dim uint8 grid
-    "q106_quantize_error" -> ((s, d) =>
-      operators.Similarity.quantizeError8(
-          t(s, d, "embeddings"), "vec_id", "embedding")
-        .select(col("vec_id"),
-          pround(col("rmse"), 6).as("rmse"),
-          pround(col("max_abs_err"), 6).as("max_abs_err"))),
-
-    // minCosine is calibrated to the synthetic embeddings (max pairwise
-    // cosine ~0.51, no planted near-dups): 0.3 keeps the gate NON-vacuous
-    // (>0 pairs at sf0.01) so an all-rows-dropped regression can't pass.
-    // planesPerBand=8 fits this tiny corpus (band 0 reproduces the
-    // pre-banding 8-plane bucket, so candidates only GROW vs round 3);
-    // the library default is 16 planes/band — the 100-TB shape.
-    "q26_embedding_neardup" -> ((s, d) =>
-      Dedup.embeddingNearDups(t(s, d, "embeddings"), "embedding", "vec_id",
-          bands = 4, planesPerBand = 8, dims = 64, minCosine = 0.3)
-        .withColumn("cosine", pround(col("cosine"), 4))),
-
-    "q27_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairs(t(s, d, "documents"), "text", "doc_id", maxHamming = 3)),
-
-    "q28_asof_join" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("user_id"), col("ts"))
-      operators.AsOfJoin.backward(clicks, purchases, Seq("user_id"), "ts",
-          Map("p_event_id" -> "purchase_id"))
-        .select("event_id", "user_id", "purchase_id")
-    }),
-
-    // nearest-in-time as-of with the reference's ±450s slot band
-    // (reference J6 is a NEAREST argmin, not backward-only; ties keep
-    // the backward match — the argmin's first-win scan order)
-    "q63_asof_nearest" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("user_id"), col("ts"))
-      operators.AsOfJoin.asof(clicks, purchases, Seq("user_id"), "ts",
-          Map("p_event_id" -> "purchase_id"),
-          direction = "nearest", toleranceSeconds = Some(450))
-        .select("event_id", "user_id", "purchase_id")
-    }),
-
-    // rows-only check (binary media payloads have no SQL oracle): real
-    // javax.imageio PNG decode + javax.sound WAV decode + RIFF/AVI
-    // MJPEG demux over a deterministic synthetic media table. GRADUATED
-    // to a real DuckDB oracle in round 15: every decode path still runs
-    // (PNG pixels, WAV frames, AVI demux + JPEG frames), and the
-    // projection keeps exactly the columns an engine WITHOUT the codecs
-    // can recompute from the generation recipe — PNG pixel stats are
-    // lossless (the gradient formula IS the decoded luminance), WAV
-    // PCM is a replayable LCG, AVI dims/duration are the avih header
-    // the generator wrote. What stays codec-private — deflate'd PNG
-    // byte sizes, lossy JPEG pixels — is NULLed here and remains
-    // content-pinned by MultimodalSpec, so the oracle checks decode
-    // CORRECTNESS, not encoder byte-for-byte artifacts.
-    "q29_media_features" -> ((s, _) =>
-      operators.Multimodal.extractFeatures(
-          operators.Multimodal.syntheticMedia(s, 200), dims = 16, batchSize = 32)
-        .select(col("media_id"), col("kind"), col("width"), col("height"),
-          col("sample_rate"), col("duration_ms"),
-          when(col("kind") === "audio", col("n_bytes")).as("wav_bytes"),
-          when(col("kind") =!= "video",
-            pround(element_at(col("features"), 1).cast("double"), 4)).as("f0"))),
-
-    // rows-only: the DSv2 deterministic replay source feeding the full
-    // snapshot chain — no files, rows derived from (seed, partition, i)
-    "q35_replay_pipeline" -> ((s, _) => {
-      val events = s.read.format("graft.sources.ReplaySource")
-        .option("rows", 20000).option("partitions", 16).option("seed", 42)
-        .load()
-      SnapshotPipeline.popularity(
-        SnapshotPipeline.curateEvents(SnapshotPipeline.processEvents(events)))
-    }),
-
-    "q30_lang_id" -> ((s, d) => {
-      t(s, d, "documents").select(col("doc_id"), col("lang").as("lang_actual"),
-        TextFns.langId(col("text")).as("lang_pred"))
-    }),
-
-    "q57_lang_id_ngram" -> ((s, d) => {
-      t(s, d, "documents").select(col("doc_id"), col("lang").as("lang_actual"),
-        TextFns.langIdNgram(col("text")).as("lang_pred"))
-    }),
-
-    "q58_pii_counts" -> ((s, d) => {
-      t(s, d, "documents").select(col("doc_id"),
-        TextFns.emailCount(col("text")).as("n_emails"),
-        TextFns.urlCount(col("text")).as("n_urls"))
-    }),
-
-    "q31_quality_score" -> ((s, d) => {
-      t(s, d, "documents").select(
-        col("doc_id"),
-        TextFns.wsTokenCount(col("text")).as("n_tokens"),
-        pround(TextFns.stopwordRatio(col("text")), 4).as("stopword_ratio"),
-        pround(TextFns.avgTokenLen(col("text")), 4).as("avg_token_len"),
-        pround(TextFns.punctRatio(col("text")), 4).as("punct_ratio"),
-        pround(TextFns.qualityScore(col("text")), 4).as("quality"))
-    }),
-
-    "q32_token_count" -> ((s, d) => {
-      t(s, d, "documents").select(
-        col("doc_id"),
-        TextFns.wsTokenCount(col("text")).as("ws_tokens"),
-        TextFns.bpeishTokenCount(col("text")).as("bpeish_tokens"))
-    }),
-
-    "q33_fingerprint" -> ((s, d) => {
-      t(s, d, "documents").select(
-        col("doc_id"),
-        TextFns.fingerprint(col("text"), 8).as("fp"),
-        graft.expressions.GraftFunctions.distinctGramCount(col("text"), 8)
-          .cast("long").as("n_grams"))
-    }),
-
-    // transitive dedup closure over a planted candidate graph: chain
-    // edges doc_id -> doc_id+1 wherever doc_id % 8 < 5 build 6-node
-    // paths, so the ends of each chain NEVER share an edge and only
-    // transitive propagation (min-label + pointer jumping) can collapse
-    // them — exactly the A~B~C case pairwise resolution misses. The
-    // result frame is an eager localCheckpoint; its blocks are released
-    // by the ContextCleaner once the caller drops it (q46 discipline).
-    // localEdgeLimit = 0: this is the DISTRIBUTED algorithm's
-    // verification query — at test scale factors the graph is small
-    // enough that the driver union-find fast path would otherwise
-    // answer, and the iterative min-label + pointer-jumping loop is
-    // the code a 100-TB run exercises
-    "q65_components" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .filter(col("doc_id") % 8 < 5)
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-      operators.Components.connectedComponents(edges, localEdgeLimit = 0L)
-    }),
-
-    // benchmark decontamination: every-10th doc plays the eval set; the
-    // remaining corpus reports how many of its distinct word trigrams
-    // appear anywhere in the eval set (n=3 explicitly — the operator
-    // default is the GPT-3-style 13-gram, far too selective for these
-    // short synthetic docs)
-    "q66_decontamination" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      operators.Decontamination.overlap(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "text", "doc_id", n = 3)
-    }),
-
-    // cross-source near-dup matrix: q21's candidate pairs attributed
-    // to unordered source pairs — which feeds copy which
-    "q94_source_overlap" -> ((s, d) =>
-      operators.Dedup.crossSourceOverlap(
-        t(s, d, "documents"), "text", "doc_id", "source",
-        bands = 3, rowsPerBand = 2)),
-
-    // mixture-rebalancing plan: target recipe 4:2:1:1 over four
-    // sources (the rest dropped); keep fractions for the
-    // downsample-only re-mix, binding source at 100%
-    "q93_mixture_plan" -> ((s, d) =>
-      operators.Sampling.mixturePlan(
-          t(s, d, "documents"), "source",
-          functions.TextFns.bpeishTokenCount(col("text")),
-          Map("src0" -> 4.0, "src1" -> 2.0, "src2" -> 1.0, "src3" -> 1.0))
-        .select(col("source"), col("n_tokens"),
-          pround(col("share"), 4).as("share"),
-          pround(col("target_share"), 4).as("target_share"),
-          pround(col("keep_frac"), 4).as("keep_frac"))),
-
-    // the BPE merge statistic: top adjacent char pairs weighted by
-    // word frequency — one corpus pass builds the vocab, pair counting
-    // runs vocabulary-bounded
-    "q92_bpe_pairs" -> ((s, d) =>
-      operators.Bpe.pairStats(t(s, d, "documents"), "text", k = 30)),
-
-    // fixed-size training shards over the decorrelated shuffle order:
-    // the per-shard balance table (doc and token totals) a writer
-    // checks before publishing an epoch
-    "q91_shard_balance" -> ((s, d) =>
-      operators.Packing.shardByRank(
-          t(s, d, "documents")
-            .withColumn("n", functions.TextFns.bpeishTokenCount(col("text")))
-            .select("doc_id", "n"),
-          keyCol = "doc_id", shardSize = 64L, hexPrefix = 2)
-        .groupBy("shard_id")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("tok_total"))),
-
-    // unigram-LM fluency score (perplexity-filter stand-in): mean
-    // log10 corpus frequency of each doc's tokens
-    "q90_lm_score" -> ((s, d) =>
-      operators.TfIdf.lmScore(t(s, d, "documents"), "text", "doc_id")
-        .select(col("doc_id"), col("n_tokens"),
-          pround(col("lm_score"), 4).as("lm_score"))),
-
-    // the contamination report from the benchmark's side: per eval
-    // example (every 10th doc), how many of its distinct trigrams the
-    // remaining corpus holds — the "is this benchmark still
-    // trustworthy" table, complementing q66's per-train-doc view
-    "q89_eval_contamination" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      operators.Decontamination.evalContamination(
-          docs.filter(col("doc_id") % 10 =!= 0),
-          docs.filter(col("doc_id") % 10 === 0),
-          "text", "doc_id", n = 3)
-        .select(col("eval_id"), col("n_grams"), col("n_contaminated"),
-          pround(col("contamination_rate"), 4).as("contamination_rate"))
-    }),
-
-    // paragraph-level exact dedup with reassembly (RefinedWeb/C4
-    // boilerplate removal): the synthetic texts have no newlines, so
-    // " line " plays the paragraph separator — occurrences segment
-    // each doc into 1-6 "paragraphs", 6% of which repeat across docs
-    // at sf0.001
-    "q88_paragraph_dedup" -> ((s, d) =>
-      operators.Dedup.dedupParagraphs(
-        t(s, d, "documents"), "text", "doc_id", sep = " line ")),
-
-    // within-document span cleanup: same machinery as q88 but scoped
-    // per doc — repeated "paragraphs" inside one doc collapse, while
-    // cross-doc repeats survive
-    "q103_paragraph_dedup_local" -> ((s, d) =>
-      operators.Dedup.dedupParagraphs(
-        t(s, d, "documents"), "text", "doc_id", sep = " line ",
-        global = false)),
-
-    // within-doc n-gram repetition stats (Gopher repetition-gate
-    // signals) via the native one-pass expression; the oracle is the
-    // relational explode -> count-per-gram -> re-aggregate form the
-    // expression replaces (which shuffles the corpus' gram volume twice)
-    "q67_word_gram_stats" -> ((s, d) => {
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.expressions.GraftFunctions.wordGramStats(col("text"), 3).as("st"))
-        .select(col("doc_id"),
-          col("st.n_grams").cast("long").as("n_grams"),
-          col("st.n_distinct").cast("long").as("n_distinct"),
-          col("st.top_count").cast("long").as("top_count"))
-    }),
-
-    // stratified deterministic sampling — domain rebalancing by the
-    // same content-stable md5 bucket arithmetic as q47/q48
-    "q68_stratified_sample" -> ((s, d) =>
-      operators.Sampling.stratifiedSample(t(s, d, "documents"), "doc_id", "lang",
-        Map("en" -> 60, "de" -> 20), defaultPct = 5)
-        .select("doc_id", "lang")),
-
-    // incrementally maintained components: q65's edge set split into
-    // two batches — batch 1 builds two separate clusters per 6-chain
-    // ({8k..8k+2} and {8k+3..8k+5}), batch 2's bridge edge (8k+2,8k+3)
-    // MERGES the two existing clusters — then the final state labeling
-    // must equal the one-shot solve, so q69 shares q65's oracle. State
-    // lands in a per-invocation temp dir.
-    "q69_streaming_components" -> ((s, d) => {
-      val st = invocationStateDir("q69", "components")
-      def part(cond: org.apache.spark.sql.Column) =
-        t(s, d, "documents").filter(cond)
-          .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-      val m8 = col("doc_id") % 8
-      // nBuckets sized to the test SF (the default 256 is a 100-TB
-      // setting; at thousands of nodes it only multiplies file count)
-      streaming.StreamingComponents.acceptEdges(
-        part(m8 < 2 || (m8 >= 3 && m8 < 5)), st, nBuckets = 16)
-      streaming.StreamingComponents.acceptEdges(part(m8 === 2), st, nBuckets = 16)
-      streaming.StreamingComponents.labeling(s, st)
-    }),
-
-    // transitive clusters over the embedding near-dup graph — the
-    // ANN-side composition of banding + components (its text-side twin
-    // is q46's near-dup stage): SRP band candidates verified by cosine
-    // become edges, one survivor label (min vec_id) per cluster
-    "q70_embedding_components" -> ((s, d) => {
-      val pairs = operators.Dedup.embeddingNearDups(
-        t(s, d, "embeddings"), "embedding", "vec_id",
-        bands = 4, planesPerBand = 8, dims = 64, minCosine = 0.3)
-      operators.Components.connectedComponents(pairs)
-    }),
-
-    // concat-and-chunk sequence packing: per-source token streams cut
-    // into 256-token context windows; each doc reports its window and
-    // offset. Token counts are q32's verified bpe-ish tokenizer, so the
-    // oracle only adds the running-sum arithmetic.
-    "q71_pack_windows" -> ((s, d) =>
-      operators.Packing.packByConcat(
-        t(s, d, "documents").select("doc_id", "source", "text"),
-        functions.TextFns.bpeishTokenCount(col("text")), budget = 256L,
-        shardCol = "source", orderCol = "doc_id")
-        .select("doc_id", "source", "n_tokens", "pack_seq", "pack_offset")),
-
-    // overlapping fixed-width character chunking (RAG / long-doc
-    // pretraining shape): 200-char windows every 150 chars, chunk
-    // payload carried as md5 for downstream chunk-level exact dedup
-    "q72_chunk_docs" -> ((s, d) =>
-      operators.Packing.chunkDocs(
-        t(s, d, "documents"), "text", "doc_id", size = 200, stride = 150)),
-
-    // per-domain cap: at most 15 docs per source, chosen by the
-    // content-stable hash order (reproducible pseudo-random subset,
-    // not scan order); WindowGroupLimit keeps the shuffle O(groups*cap)
-    "q73_domain_caps" -> ((s, d) =>
-      operators.Sampling.capPerGroup(
-        t(s, d, "documents").select("doc_id", "source"),
-        keyCol = "doc_id", groupCol = "source", cap = 15)),
-
-    // PII redaction — email spans then URLs rewritten to typed
-    // placeholders with the same portable regexes q58 counts with; the
-    // oracle reproduces the rewritten text byte-for-byte
-    "q74_pii_redaction" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        functions.TextFns.redactPii(col("text")).as("redacted"))),
-
-    // token-budget subsampling: each source contributes docs in
-    // content-stable hash order until 1000 bpe-ish tokens are spent
-    // (q73's row-cap sibling, stated in trainer units)
-    "q75_token_budget" -> ((s, d) =>
-      operators.Sampling.tokenBudgetSample(
-        t(s, d, "documents").select("doc_id", "source", "text"),
-        keyCol = "doc_id", groupCol = "source",
-        tokensCol = functions.TextFns.bpeishTokenCount(col("text")),
-        budget = 1000L)
-        .select("doc_id", "source")),
-
-    // deterministic global shuffle: contiguous [0,n) training-order
-    // rank by content-stable hash, computed via hash-prefix buckets +
-    // broadcast offsets — no single-partition window anywhere (the
-    // oracle's global row_number is the semantics, not the plan)
-    "q76_shuffle_rank" -> ((s, d) =>
-      operators.Sampling.shuffleRank(
-        t(s, d, "documents").select("doc_id", "source"),
-        keyCol = "doc_id", hexPrefix = 2)
-        .select("doc_id", "shuffle_rank")),
-
-    // per-doc salient terms by tf-idf: one (doc,term) aggregate reused
-    // for document frequencies, corpus size as a broadcast one-row agg,
-    // top-3 via rank-limited window; rational smoothed idf so the
-    // 4-decimal score hash is engine-portable (see TfIdf scaladoc)
-    "q77_tfidf_terms" -> ((s, d) =>
-      operators.TfIdf.topTerms(t(s, d, "documents"), "text", "doc_id", k = 3)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          pround(col("score"), 4).as("score"))),
-
-    // cross-doc duplicate 5-word spans (exact-substring-dedup candidate
-    // stage): native distinct-shingle expansion, one span aggregate
-    "q78_dup_spans" -> ((s, d) =>
-      operators.Dedup.dupSpans(t(s, d, "documents"), "text", "doc_id",
-        n = 5, minDocs = 2)),
-
-    // daily cohort retention over the event stream: one distinct-
-    // activity frame feeds cohort assignment and the d1/d7 survival
-    // counts (conditional countDistincts, no per-offset joins)
-    "q79_retention" -> ((s, d) =>
-      operators.Cohorts.retention(t(s, d, "events"), "user_id", "ts",
-        offsets = Seq(1, 7))),
-
-    // ordered signup -> click -> purchase funnel; strictly-after
-    // comparisons on microsecond epochs (engine-portable resolution)
-    "q80_funnel" -> ((s, d) =>
-      operators.Cohorts.funnel(t(s, d, "events"), "user_id", "ts",
-        "event_type", steps = Seq("signup", "click", "purchase"))),
-
-    // single-scan table profile of orders; the double column is cast
-    // to DECIMAL first so min/max render identically across engines
-    "q81_profile" -> ((s, d) =>
-      operators.Profile.profile(
-        t(s, d, "orders").withColumn("o_totalprice",
-          col("o_totalprice").cast("decimal(18,2)")),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"))),
-
-    // cross-batch token budgets: documents arrive in two ticks (doc_id
-    // parity), each screened against the per-source tokens already
-    // spent — the oracle restates the two-phase admission explicitly
-    // (phase-1 window, spent totals, phase-2 window with offset).
-    // EAGER BY NECESSITY: tick 2 budgets against state tick 1 COMMITS,
-    // so both acceptBatch calls (localCheckpoint + state swap) run when
-    // the builder is invoked, and the returned frame re-reads their
-    // checkpointed results. A harness that times only the returned
-    // plan's execution therefore measures state-read cost, not the
-    // screen itself — Bench times the builder call + the action
-    // together, so its q82 number includes the real work.
-    "q82_streaming_budget" -> ((s, d) => {
-      val st = invocationStateDir("q82", "spent")
-      val toks = t(s, d, "documents")
-        .withColumn("n", functions.TextFns.bpeishTokenCount(col("text")))
-        .select("doc_id", "source", "n")
-      def tick(parity: Int) = streaming.StreamingBudget.acceptBatch(
-        toks.filter(col("doc_id") % 2 === parity),
-        "doc_id", "source", col("n"), budget = 1000L, st)
-      tick(0).unionByName(tick(1)).select("doc_id", "source")
-    }),
-
-    // daily gap-fill resample of the event stream: per-user epoch-
-    // aligned grid, latest value carried forward by the verified as-of
-    // operator; slots before a user's first event stay null
-    "q83_gap_fill" -> ((s, d) =>
-      operators.Resample.gapFill(
-        t(s, d, "events"), "user_id", "ts",
-        Map("value" -> "value_filled"), stepSeconds = 86400L)
-        .select(col("user_id"), col("slot"),
-          pround(col("value_filled"), 4).as("value_filled"))),
-
-    // referential-integrity audit over the whole star schema: null FK
-    // keys and orphans reported separately per relation
-    "q84_ri_audit" -> ((s, d) =>
-      operators.Audit.fkOrphans(Seq(
-        ("lineitem.orderkey", t(s, d, "lineitem"), "l_orderkey",
-          t(s, d, "orders"), "o_orderkey"),
-        ("lineitem.partkey", t(s, d, "lineitem"), "l_partkey",
-          t(s, d, "part"), "p_partkey"),
-        ("lineitem.suppkey", t(s, d, "lineitem"), "l_suppkey",
-          t(s, d, "supplier"), "s_suppkey"),
-        ("orders.custkey", t(s, d, "orders"), "o_custkey",
-          t(s, d, "customer"), "c_custkey"),
-        ("customer.nationkey", t(s, d, "customer"), "c_nationkey",
-          t(s, d, "nation"), "n_nationkey"),
-        ("supplier.nationkey", t(s, d, "supplier"), "s_nationkey",
-          t(s, d, "nation"), "n_nationkey"),
-        ("nation.regionkey", t(s, d, "nation"), "n_regionkey",
-          t(s, d, "region"), "r_regionkey")))),
-
-    // vocabulary coverage: top-50 corpus terms as the vocab (ties cut
-    // deterministically by term), per-doc OOV counts and rate
-    "q85_oov_rates" -> ((s, d) =>
-      operators.TfIdf.oovRates(t(s, d, "documents"), "text", "doc_id",
-        vocabSize = 50)
-        .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-          pround(col("oov_rate"), 4).as("oov_rate"))),
-
-    // dup-cluster size histogram over q65's component assignment: a
-    // few huge clusters vs a long tail of pairs need different
-    // remediation
-    "q95_cluster_sizes" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .filter(col("doc_id") % 8 < 5)
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-      operators.Components.sizeHistogram(
-        operators.Components.connectedComponents(edges, localEdgeLimit = 0L))
-    }),
-
-    // exact per-source quantile table of bpe-ish token counts: the
-    // distribution profile behind mixture/budget decisions
-    "q97_quantile_table" -> ((s, d) =>
-      operators.Profile.quantileTable(
-          t(s, d, "documents")
-            .select(col("source"),
-              functions.TextFns.bpeishTokenCount(col("text"))
-                .cast("double").as("n_tok")),
-          "n_tok", "source", qs = Seq(0.1, 0.5, 0.9))
-        .select(col("source"), col("q"), pround(col("value"), 4).as("value"))),
-
-    // near-dup ROI report: per transitive candidate component, the
-    // surviving doc, cluster size, and tokens the collapse saves —
-    // composes q21's candidates, q65's components, q32's token count
-    "q98_dedup_roi" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = operators.Dedup.minhashCandidates(
-        docs, "text", "doc_id", bands = 3, rowsPerBand = 2)
-      val comp = operators.Components.connectedComponents(pairs)
-      val toks = docs.select(col("doc_id").as("node"),
-        functions.TextFns.bpeishTokenCount(col("text")).as("__n"))
-      comp.join(toks, "node")
-        .groupBy(col("component"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("node")).as("survivor_id"),
-          sum(when(col("node") =!= col("component"), col("__n"))
-            .otherwise(0L)).as("tokens_dropped"))
-    }),
-
-    // robust per-type outlier audit on event values: modified z-score
-    // against median/MAD (q86's verified primitives), z = 2 sigma
-    "q96_robust_outliers" -> ((s, d) =>
-      operators.Profile.robustOutliers(
-        t(s, d, "events"), "value", "event_type", z = 2.0)),
-
-    // canonical normalization pass: the dedup-prep transform, output
-    // as (id, normalized length, content hash) so the oracle pins the
-    // exact normalized bytes without shipping them twice
-    "q104_normalize" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-        char_length(functions.TextFns.normalize(col("text"))).cast("long")
-          .as("norm_len"),
-        md5(functions.TextFns.normalize(col("text"))).as("norm_md5"))),
-
-    // C4-style blocklist screen: per-source doc counts vs docs hitting
-    // the blocklist (one native tally over the anchored alternation)
-    "q102_blocklist_screen" -> ((s, d) =>
-      t(s, d, "documents")
-        .withColumn("__hits",
-          functions.TextFns.blocklistCount(col("text"),
-            Seq("slow", "dup", "error")))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("__hits") > 0, 1L).otherwise(0L)).as("n_blocked"),
-          sum(col("__hits")).as("n_hits"))),
-
-    // vocabulary drift between the even/odd corpus halves: top terms
-    // by absolute token-share shift (the distribution-drift monitor)
-    "q100_vocab_drift" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      operators.TfIdf.vocabDrift(
-          docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 === 1),
-          "text", k = 20)
-        .select(col("term"),
-          pround(col("share_a"), 6).as("share_a"),
-          pround(col("share_b"), 6).as("share_b"),
-          pround(col("delta"), 6).as("delta"))
-    }),
-
-    // event-time lateness histogram in arrival order (watermark-delay
-    // sizing): distributed prefix-max, no single-partition window
-    "q99_lateness_audit" -> ((s, d) =>
-      operators.Audit.latenessAudit(
-        t(s, d, "events"), "ts", "event_id",
-        boundsSeconds = Seq(60L, 900L))),
-
-    // per-type winsorization report: clamp counts and the tamed mean
-    // (decimal-summed so the hash is order-independent)
-    "q107_winsorize" -> ((s, d) =>
-      operators.Profile.winsorize(
-          t(s, d, "events"), "value", "event_type", loQ = 0.05, hiQ = 0.95)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("__clamped") === -1, 1L).otherwise(0L)).as("n_low"),
-          sum(when(col("__clamped") === 1, 1L).otherwise(0L)).as("n_high"),
-          pround(sum(col("value_w").cast("decimal(18,6)")).cast("double")
-            / count(lit(1)), 4).as("mean_w"))),
-
-    // robust dispersion: median absolute deviation per event type —
-    // the exact interpolated percentile (q41's verified primitive)
-    // applied twice, group medians broadcast back between passes
-    "q86_mad" -> ((s, d) => {
-      val ev = t(s, d, "events").select(col("event_type"), col("value"))
-      val med = ev.groupBy("event_type")
-        .agg(expr("percentile(value, 0.5)").as("__med"))
-      ev.join(broadcast(med), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(pround(expr("percentile(abs(value - __med), 0.5)"), 4).as("mad"))
-    }),
-
-    // order-count distribution (TPC-H Q13 shape): how many customers
-    // placed exactly k orders — the two-level aggregate whose first
-    // level keeps the per-customer fan-in on the shuffle keys and whose
-    // second collapses to the tiny counts-of-counts table
-    "q170_custdist" -> ((s, d) => {
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).cast("long").as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).cast("long").as("custdist"))
-    }),
-
-    // promo revenue share per ship month (TPC-H Q14 shape): revenue is
-    // decimal-exact; share in integer basis points via floor of the
-    // exact double ratio; part is the broadcast dimension
-    "q171_promo_share" -> ((s, d) => {
-      val rev = (col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .cast("decimal(18,4)")
-      t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
-        .agg(
-          pround(sum(when(col("p_type") === "PROMO", rev)
-            .otherwise(lit(java.math.BigDecimal.ZERO).cast("decimal(18,4)")))
-            .cast("double"), 2).as("promo_rev"),
-          pround(sum(rev).cast("double"), 2).as("total_rev"),
-          floor(sum(when(col("p_type") === "PROMO", rev)
-              .otherwise(lit(java.math.BigDecimal.ZERO).cast("decimal(18,4)")))
-              .cast("double") * 10000.0 / sum(rev).cast("double"))
-            .cast("long").as("promo_bp"))
-    }),
-
-    // seasonality screen: lag-1 autocorrelation of daily volume per
-    // event type — BIGINT-exact sums, IEEE-exact sqrt, one division
-    "q172_autocorr" -> ((s, d) =>
-      operators.Resample.autocorr1(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            unix_date(to_date(col("ts"))).cast("long").as("day"))
-          .agg(count(lit(1)).cast("long").as("n")),
-        "event_type", "day", "n")
-        .select(col("event_type"), col("n_pairs"),
-          pround(col("r1"), 6).as("r1"))),
-
-    // hot-key audit before the customer join: Gini of orders-per-
-    // customer fan-in per priority class, windowless counts-of-counts
-    "q173_key_skew" -> ((s, d) =>
-      operators.Profile.keySkew(
-        t(s, d, "orders"), "o_custkey", "o_orderpriority")),
-
-    // Zipf-tail card: types + token mass per power-of-two frequency
-    // class (hapax = class 0); two hash aggregates, no windows
-    "q174_freq_spectrum" -> ((s, d) =>
-      operators.TfIdf.freqSpectrum(t(s, d, "documents"), "text", "source")),
-
-    // is quality anti-correlated with duplication? exact-dup rate per
-    // linear-quality band — score bands via floor of the exact double
-    // ratio (negative-safe), dup membership by md5 multiplicity
-    "q175_dup_lift" -> ((s, d) => {
-      val scored = t(s, d, "documents").select(
-        col("doc_id"),
-        floor(TextFns.linearQualityScore(col("text")).cast("double") / 500.0)
-          .cast("long").as("band"),
-        md5(col("text")).as("__h"))
-      val mult = scored.groupBy(col("__h"))
-        .agg(count(lit(1)).cast("long").as("__n"))
-      scored.join(mult, "__h")
-        .groupBy(col("band"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(when(col("__n") > 1L, 1L).otherwise(0L)).cast("long")
-            .as("n_dup"))
-        .select(col("band"), col("n_docs"), col("n_dup"),
-          call_function("div", col("n_dup") * 10000L, col("n_docs"))
-            .as("dup_bp"))
-    }),
-
-    // graph-density screen: the 2-core of the banded candidate graph
-    // (4 peeling rounds — fixpoint on this corpus, spec-asserted) —
-    // duplicate FAMILIES survive, hub-and-spoke collision stars peel
-    "q176_kcore" -> ((s, d) =>
-      operators.KCore.kcore(
-        Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id"),
-        k = 2, rounds = 4)),
-
-    // streaming exact top-k terms per source: additive (group, term)
-    // count state across two batches ≡ the one-shot table (additivity,
-    // spec-pinned), then the rank-limited view — ranks may REORDER as
-    // counts accrue, which windowed approximations lose
-    "q177_streaming_topk" -> ((s, d) => {
-      val st = invocationStateDir("q177", "state")
-      val docs = t(s, d, "documents")
-      streaming.StreamingTopK.acceptBatch(
-        docs.filter(col("doc_id") % 2 === 0), "text", "source", st)
-      val merged = streaming.StreamingTopK.acceptBatch(
-        docs.filter(col("doc_id") % 2 === 1), "text", "source", st)
-      streaming.StreamingTopK.topK(merged, k = 5)
-        .withColumnRenamed("grp", "source")
-    }),
-
-    // multi-probe SRP ANN: each query probes its home bucket + all 6
-    // Hamming-1 buckets — recall recovered query-side while the
-    // corpus index stays one bucket per vector
-    "q178_multiprobe_srp" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.srpMultiProbeTopK(emb.filter(col("vec_id") < 10), emb,
-          "vec_id", "embedding", k = 3, planes = 6, dims = 64)
-        .withColumn("cos_sim", pround(col("cos_sim"), 4))
-    }),
-
-    // TPC-H Q17 shape (decorrelated): revenue from lineitems under 20%
-    // of their part's average quantity — the avg threshold as a
-    // cross-multiplied DECIMAL compare (qty*5*n < sum_qty), no division
-    "q179_small_order_parts" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val avgq = li.groupBy(col("l_partkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("__sq"),
-          count(lit(1)).cast("long").as("__n"))
-      li.join(avgq, "l_partkey")
-        .filter(col("l_quantity").cast("decimal(18,2)") * 5L * col("__n")
-          < col("__sq"))
-        .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).cast("long").as("n_small"),
-          dsum(col("l_extendedprice")).as("small_revenue"))
-    }),
-
-    // what am I about to delete: per near-dup cluster size, keeper,
-    // quality and length spread — the pre-dedup review card (integer
-    // quality, so the whole row set is hash-exact)
-    "q180_cluster_audit" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // default localEdgeLimit: the banded candidate set is far under
-      // the 2M-edge bound here, so the union-find fast path applies
-      // (q65/q69 pin the distributed min-label path explicitly)
-      val comp = operators.Components.connectedComponents(
-        Dedup.minhashCandidates(docs, "text", "doc_id"))
-      comp.join(docs.select(col("doc_id").as("node"),
-          TextFns.linearQualityScore(col("text")).as("__q"), col("n_chars")),
-          "node")
-        .groupBy(col("component"))
-        .agg(count(lit(1)).cast("long").as("size"),
-          min(col("node")).as("keeper"),
-          min(col("__q")).cast("long").as("min_quality"),
-          max(col("__q")).cast("long").as("max_quality"),
-          min(col("n_chars")).cast("long").as("min_chars"),
-          max(col("n_chars")).cast("long").as("max_chars"))
-    }),
-
-    // TPC-H Q22 shape: above-average-balance customers with no orders
-    // per name suffix — the decorrelated scalar-subquery threshold as
-    // a cross-multiplied DECIMAL compare, then an anti-join
-    "q197_idle_balances" -> ((s, d) => {
-      val cust = t(s, d, "customer")
-      val thr = cust.filter(col("c_acctbal") > 0.0)
-        .agg(sum(col("c_acctbal").cast("decimal(18,2)")).as("__s"),
-          count(lit(1)).cast("long").as("__n"))
-      cust.crossJoin(broadcast(thr))
-        .filter(col("c_acctbal").cast("decimal(18,2)") * col("__n") > col("__s"))
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"),
-          "left_anti")
-        .groupBy(expr("substring(c_name, length(c_name), 1)").as("name_digit"))
-        .agg(count(lit(1)).cast("long").as("n_cust"),
-          dsum(col("c_acctbal")).as("total_bal"))
-    }),
-
-    // skew-aware enrichment: the hot-key/cold-key two-path join —
-    // detected hot users take a broadcast path AQE cannot choose
-    // declaratively; result is identical to the plain join (which IS
-    // the oracle), whatever the tie-broken hot set
-    "q198_skew_enriched" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val cust = t(s, d, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val hot = operators.SkewJoin.topKeys(ev, Seq("user_id"), 5)
-      operators.SkewJoin.hotColdJoin(ev, cust, Seq("user_id"), hot)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).cast("long").as("n_events"),
-          dsum(col("value")).as("total_value"))
-    }),
-
-    // rolling 7-day distinct users (WAU): windowed COUNT DISTINCT has
-    // no decomposable aggregate — the correct distributed shape is the
-    // bounded 7x day-explode of the DAILY-DISTINCT pair table
-    "q199_rolling_wau" -> ((s, d) => {
-      val du = t(s, d, "events")
-        .select(unix_date(to_date(col("ts"))).cast("long").as("day"),
-          col("user_id"))
-        .distinct()
-      val days = du.select(col("day")).distinct()
-      du.withColumn("report_day",
-          explode(sequence(col("day"), col("day") + 6L)))
-        .join(days.withColumnRenamed("day", "report_day"),
-          Seq("report_day"), "left_semi")
-        .groupBy(col("report_day"))
-        .agg(countDistinct(col("user_id")).cast("long").as("wau"))
-    }),
-
-    // hub-structure card: degree assortativity of the candidate graph
-    // — Pearson over (deg(u), deg(v)) per directed edge; negative =
-    // hub-and-spoke (collision stars), positive = clique families.
-    // BIGINT-exact sums, IEEE sqrt, one division (q172's machinery)
-    "q195_assortativity" -> ((s, d) => {
-      val cand = Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id")
-      val edges = cand.select(explode(array(
-          struct(col("id_a").as("src"), col("id_b").as("dst")),
-          struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-        .select(col("e.src"), col("e.dst"))
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg"))
-      val agg = edges
-        .join(deg.select(col("src"), col("deg").as("__dx")), "src")
-        .join(deg.select(col("src").as("dst"), col("deg").as("__dy")), "dst")
-        .agg(count(lit(1)).cast("long").as("n_edges"),
-          sum(col("__dx")).cast("long").as("__sx"),
-          sum(col("__dy")).cast("long").as("__sy"),
-          sum(col("__dx") * col("__dy")).cast("long").as("__sxy"),
-          sum(col("__dx") * col("__dx")).cast("long").as("__sxx"),
-          sum(col("__dy") * col("__dy")).cast("long").as("__syy"))
-      val num = (col("n_edges") * col("__sxy") - col("__sx") * col("__sy"))
-        .cast("double")
-      val dx = (col("n_edges") * col("__sxx") - col("__sx") * col("__sx"))
-        .cast("double")
-      val dy = (col("n_edges") * col("__syy") - col("__sy") * col("__sy"))
-        .cast("double")
-      agg.select(col("n_edges"),
-        pround(when(dx > 0.0 && dy > 0.0, num / (sqrt(dx) * sqrt(dy)))
-          .otherwise(lit(0.0)), 6).as("assortativity"))
-    }),
-
-    // golden-record merge: q144's fuzzy matches as edges, transitive
-    // components, one canonical record per entity cluster
-    "q196_golden_record" -> ((s, d) => {
-      val part = t(s, d, "part")
-      val pairs = operators.FuzzyJoin
-        .nearestMatch(part, "p_name", "p_partkey", maxDist = 3)
-        .select(col("id").as("id_a"), col("match_id").as("id_b"))
-      operators.Components.connectedComponents(pairs)
-        .join(part.select(col("p_partkey").as("node"),
-          lower(trim(col("p_name"))).as("__nm")), "node")
-        .groupBy(col("component"))
-        .agg(count(lit(1)).cast("long").as("n_records"),
-          min(col("__nm")).as("canonical_name"))
-    }),
-
-    // ops card: daily session bounce rate (single-event sessions)
-    "q192_bounce_rate" -> ((s, d) =>
-      operators.Sessionize.sessions(t(s, d, "events"), "user_id", "ts",
-          gapSeconds = 3600)
-        .groupBy(date_format(col("session_start"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).cast("long").as("n_sessions"),
-          sum(when(col("n_events") === 1L, 1L).otherwise(0L)).cast("long")
-            .as("n_bounce"))
-        .withColumn("bounce_bp",
-          call_function("div", col("n_bounce") * 10000L, col("n_sessions")))),
-
-    // tokenizer-budget knob: corpus token coverage at three vocab
-    // sizes — each cut is a TakeOrderedAndProject over the ONE
-    // checkpointed vocabulary-bounded count table
-    "q193_vocab_coverage" -> ((s, d) => {
-      val cnt = t(s, d, "documents")
-        .select(explode(TextFns.tokens(col("text"))).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).cast("long").as("__c"))
-        .localCheckpoint(true)
-      val tot = cnt.agg(sum(col("__c")).cast("long").as("__tot"))
-      Seq(100, 1000, 5000).map { k =>
-        cnt.orderBy(col("__c").desc, col("term")).limit(k)
-          .agg(sum(col("__c")).cast("long").as("covered"))
-          .select(lit(k.toLong).as("vocab_size"), col("covered"))
-      }.reduce(_ unionByName _)
-        .crossJoin(broadcast(tot))
-        .select(col("vocab_size"), col("covered"),
-          call_function("div", col("covered") * 10000L, col("__tot"))
-            .as("coverage_bp"))
-    }),
-
-    // layout planner: exact range-partition boundaries (the
-    // repartitionByRange / SORTED-BY table a writer needs) at octile
-    // cuts of the fact key — quantile_cont parity through the SAME R-7
-    // positions + interpolation as percentile(). Round 15: computed by
-    // the pruned exact-quantile machinery instead of `percentile()`,
-    // whose single aggregate buffers every value of the table in one
-    // OpenHashMap per partition and merges them — exact but
-    // memory-bound, the one aggregate in the suite that could not
-    // survive a 10^11-row fact table. exactQuantiles scans once into
-    // bounded buckets, prunes to the ≤ 2·7 rank-owning buckets, and
-    // refines; 12.2 → 2.1 s at sf1.0, identical hashes (the octile
-    // fracs are dyadic, so both interpolations are exact).
-    "q194_range_boundaries" -> ((s, d) => {
-      val qs = (1 to 7).map(_ / 8.0)
-      operators.Metrics.exactQuantiles(t(s, d, "lineitem"), "l_orderkey",
-          qs, bucketWidth = 65536.0)
-        .select((col("q") * 8).cast("long").as("bucket"),
-          col("value").as("boundary"))
-    }),
-
-    // train/eval firewall: hash split, then drop from TRAIN anything
-    // sharing a distinct 3-shingle with the test slice — the static
-    // make-your-own-eval-safe op (q116 guards near-dup leakage; this
-    // guards verbatim n-gram leakage)
-    "q189_firewalled_split" -> ((s, d) => {
-      val split = operators.Sampling.datasetSplit(
-        t(s, d, "documents"), "doc_id")
-      val clean = operators.Decontamination.decontaminate(
-        split.filter(col("split") === "train"),
-        split.filter(col("split") === "test").select("doc_id", "text"),
-        "text", "doc_id", n = 3)
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).cast("long").as("n_docs"))
-        .join(broadcast(clean
-            .agg(count(lit(1)).cast("long").as("__clean"))
-            .withColumn("split", lit("train"))),
-          Seq("split"), "left")
-        .select(col("split"), col("n_docs"),
-          coalesce(col("__clean"), col("n_docs")).as("n_after_firewall"))
-    }),
-
-    // which near-dup verifier disagrees: per banded candidate pair the
-    // three screens (Jaccard >= 0.5, SimHash Hamming <= 3, containment
-    // >= 0.8) as INTEGER-exact flags, cross-tabbed — 3i >= na+nb and
-    // 5i >= 4·min(na,nb) are cross-multiplied, divisionless
-    "q190_verifier_matrix" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cand = Dedup.minhashCandidates(docs, "text", "doc_id")
-      val sets = docs.select(col("doc_id").as("doc"),
-        graft.expressions.GraftFunctions.distinctWordShingles(col("text"), 3)
-          .as("sh"))
-      val withSets = cand
-        .join(sets.withColumnRenamed("doc", "id_a")
-          .withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sets.withColumnRenamed("doc", "id_b")
-          .withColumnRenamed("sh", "sh_b"), "id_b")
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("__i"),
-          size(col("sh_a")).cast("long").as("__na"),
-          size(col("sh_b")).cast("long").as("__nb"))
-      val packed = Dedup.simhashSignatures64(docs, "text", "doc_id")
-        .select(col("doc"),
-          (0 until 4).map(b => shiftleft(col(s"s$b"), 16 * b))
-            .reduce(_ bitwiseOR _).as("__sig"))
-      withSets
-        .join(packed.select(col("doc").as("id_a"), col("__sig").as("__pa")), "id_a")
-        .join(packed.select(col("doc").as("id_b"), col("__sig").as("__pb")), "id_b")
-        .select(
-          when(col("__i") * 3L >= col("__na") + col("__nb"), 1L)
-            .otherwise(0L).as("jaccard_05"),
-          when(bit_count(col("__pa").bitwiseXOR(col("__pb"))) <= 3, 1L)
-            .otherwise(0L).as("hamming_3"),
-          when(col("__i") * 5L >= least(col("__na"), col("__nb")) * 4L, 1L)
-            .otherwise(0L).as("containment_08"))
-        .groupBy(col("jaccard_05"), col("hamming_3"), col("containment_08"))
-        .agg(count(lit(1)).cast("long").as("n_pairs"))
-    }),
-
-    // TPC-H Q19 shape: disjunctive (brand, size, quantity-band)
-    // predicate groups — the OR-of-ANDs pushdown workout
-    "q191_disjunctive_pricing" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 10) &&
-            col("l_quantity").between(1, 15)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(5, 25) &&
-            col("l_quantity").between(10, 30)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(10, 40) &&
-            col("l_quantity").between(20, 45)))
-        .agg(count(lit(1)).cast("long").as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
-            .as("revenue"))),
-
-    // trailing 7-day volume per type: a RANGE-frame window over the
-    // daily aggregate — value-based framing (a missing day still
-    // shortens the window), distinct from q10's rows-frame running sum
-    "q187_rolling_7d" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("event_type"),
-          unix_date(to_date(col("ts"))).cast("long").as("day"))
-        .agg(count(lit(1)).cast("long").as("n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type")).orderBy(col("day"))
-        .rangeBetween(-6, 0)
-      daily.withColumn("n_7d", sum(col("n")).over(w).cast("long"))
-    }),
-
-    // dedup knob table: pair and touched-doc counts of the ONE banded
-    // candidate set at four Jaccard thresholds — read before pinning
-    // a cut (q165's sweep idea applied to near-dup)
-    "q188_threshold_sweep" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = Dedup.ngramJaccard(docs, "text", "doc_id",
-        Dedup.minhashCandidates(docs, "text", "doc_id",
-          bands = 3, rowsPerBand = 2))
-      pairs
-        .select(col("id_a"), col("id_b"), col("jaccard"),
-          explode(array(lit(0.3), lit(0.5), lit(0.7), lit(0.9)))
-            .as("threshold"))
-        .filter(col("jaccard") >= col("threshold"))
-        .select(col("threshold"),
-          explode(array(col("id_a"), col("id_b"))).as("__doc"))
-        .groupBy(col("threshold"))
-        .agg((count(lit(1)) / 2).cast("long").as("n_pairs"),
-          countDistinct(col("__doc")).cast("long").as("n_docs"))
-    }),
-
-    // binless drift: exact two-sample KS per source vs the corpus —
-    // the max CDF gap found entirely in BIGINT cross-multiplication
-    "q183_ks_drift" -> ((s, d) =>
-      operators.Profile.ksByGroup(
-        t(s, d, "documents").select(col("source"),
-          TextFns.bpeishTokenCount(col("text")).as("__tok")),
-        "__tok", "source")
-        .withColumnRenamed("grp", "source")),
-
-    // purity card: conditional language entropy per source — exact
-    // integer count ratios, pround6 contributions, DECIMAL sum
-    "q184_lang_purity" -> ((s, d) =>
-      operators.Profile.labelEntropy(t(s, d, "documents"), "lang", "source")
-        .withColumnRenamed("grp", "source")),
-
-    // order-cadence bands: p50/p90 inter-order gap days per segment
-    // under the total (date, orderkey) per-customer order
-    "q185_order_cadence" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, d, "orders")
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment"), col("o_custkey"), col("o_orderkey"),
-          col("o_orderdate"))
-        .withColumn("__prev", lag(col("o_orderdate"), 1).over(w))
-        .filter(col("__prev").isNotNull)
-        .withColumn("__gap",
-          (unix_date(to_date(col("o_orderdate"))) -
-            unix_date(to_date(col("__prev")))).cast("long"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).cast("long").as("n_gaps"),
-          pround(expr("percentile(__gap, 0.5)"), 4).as("p50_days"),
-          pround(expr("percentile(__gap, 0.9)"), 4).as("p90_days"))
-    }),
-
-    // Benford leading-digit screen on order totals — the synthetic-/
-    // fabricated-data tripwire; expected shares are integer constants
-    // (they sum to exactly 10000 bp), observed shares integer-divided
-    "q186_benford" -> ((s, d) => {
-      val expBp = Seq(3010L, 1761L, 1249L, 969L, 792L, 669L, 580L, 512L, 458L)
-      val digit = substring(floor(col("o_totalprice")).cast("long")
-        .cast("string"), 1, 1).cast("long")
-      val n = t(s, d, "orders")
-        .select(digit.as("digit"))
-        .groupBy(col("digit"))
-        .agg(count(lit(1)).cast("long").as("n"))
-      n.crossJoin(broadcast(n.agg(sum(col("n")).cast("long").as("__N"))))
-        .select(col("digit"), col("n"),
-          call_function("div", col("n") * 10000L, col("__N")).as("obs_bp"),
-          element_at(array(expBp.map(lit): _*), col("digit").cast("int"))
-            .as("exp_bp"))
-        .withColumn("dev_bp", col("obs_bp") - col("exp_bp"))
-    }),
-
-    // representation-collapse screen: dominant second-moment direction
-    // by INTEGER power iteration — quantized components, BIGINT matrix
-    // sums, max-abs renormalization; engine-exact where float PCA
-    // never is (driver holds only the 64x64 matrix)
-    "q182_dominant_direction" -> ((s, d) =>
-      operators.Pca.dominantDirection(
-        t(s, d, "embeddings"), "embedding", dims = 64)),
-
-    // the manifest handed to the trainer: per (epoch, shard) doc and
-    // token totals of the q135 deterministic shuffle plan
-    "q181_epoch_manifest" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      operators.Sampling.epochShards(docs, "doc_id", epochs = 2, shards = 8)
-        .join(docs.select(col("doc_id"),
-          TextFns.bpeishTokenCount(col("text")).as("__t")), "doc_id")
-        .groupBy(col("epoch"), col("shard"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("__t")).cast("long").as("n_tokens"))
-    }),
-
-    // ranking-function suite on a deterministic per-segment total
-    // order (acctbal DESC, custkey): ntile quartiles, percent_rank,
-    // cume_dist — tie-free by the unique-key suffix so every value is
-    // rational and engine-exact; partitioned by segment, so the window
-    // state is the usual per-group slice, never a global sort
-    // (complements q50's plain ntile: the relative-position functions)
-    "q200_rank_suite" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("c_mktsegment"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, d, "customer")
-        .select(col("c_mktsegment").as("segment"), col("c_custkey"),
-          col("c_acctbal"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          pround(percent_rank().over(w), 6).as("pct_rank"),
-          pround(cume_dist().over(w), 6).as("cume"))
-    }),
-
-    // TPC-H Q4 shape: per-priority count of orders with at least one
-    // late lineitem — EXISTS as a LEFT SEMI join whose condition is
-    // the equi-key plus the non-equi lateness predicate (the semi
-    // join dedups multi-late orders without a distinct)
-    "q201_late_exists" -> ((s, d) =>
-      t(s, d, "orders")
-        .join(t(s, d, "lineitem").select(col("l_orderkey"), col("l_shipdate")),
-          col("o_orderkey") === col("l_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).cast("long").as("n_late_orders"))),
-
-    // TPC-H Q7 shape: cross-nation trade volume by (supplier nation,
-    // customer nation, year). The two nation legs are broadcast; the
-    // cross-nation inequality filters on the KEYS before either
-    // dimension join runs
-    "q202_nation_volume" -> ((s, d) => {
-      val n1 = broadcast(t(s, d, "nation")
-        .select(col("n_nationkey").as("__snk"), col("n_name").as("supp_nation")))
-      val n2 = broadcast(t(s, d, "nation")
-        .select(col("n_nationkey").as("__cnk"), col("n_name").as("cust_nation")))
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .filter(col("s_nationkey") =!= col("c_nationkey"))
-        .join(n1, col("s_nationkey") === col("__snk"))
-        .join(n2, col("c_nationkey") === col("__cnk"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("o_orderdate")).cast("long").as("year"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)
-            .as("volume"))
-    }),
-
-    // TPC-H Q11 shape: parts whose revenue exceeds 1.25x the average
-    // part's — the HAVING-vs-scalar-subquery pattern decorrelated to
-    // a broadcast of ONE (total, count) row, compared by integer
-    // cross-multiplication on exact DECIMALs (rev*4n > 5*total)
-    "q203_part_concentration" -> ((s, d) => {
-      val pr = t(s, d, "lineitem")
-        .groupBy(col("l_partkey"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).as("__rev"))
-      val tot = pr.agg(sum(col("__rev")).as("__tot"),
-        count(lit(1)).cast("long").as("__n"))
-      pr.crossJoin(broadcast(tot))
-        .filter(col("__rev") * col("__n") * 4 > col("__tot") * 5)
-        .select(col("l_partkey"),
-          round(col("__rev").cast("double"), 4).as("part_value"))
-    }),
-
-    // TPC-H Q15 shape: the top-revenue supplier(s) of one quarter —
-    // max as a one-row broadcast, selection by exact DECIMAL equality
-    // (double equality would be a cross-engine hazard; decimal is not)
-    "q204_top_supplier" -> ((s, d) => {
-      val rev = t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1996-04-01"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).as("__rev"))
-      val mx = rev.agg(max(col("__rev")).as("__mx"))
-      rev.crossJoin(broadcast(mx))
-        .filter(col("__rev") === col("__mx"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          round(col("__rev").cast("double"), 4).as("total_revenue"))
-    }),
-
-    // TPC-H Q18 shape: large-volume orders — the grouped-HAVING IN
-    // subquery as an aggregate-then-join (the decorrelated plan
-    // Catalyst would produce); quantity summed in DECIMAL
-    "q205_big_orders" -> ((s, d) => {
-      val oq = t(s, d, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("__qty"))
-        .filter(col("__qty") > 250)
-      t(s, d, "orders")
-        .join(oq, col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          col("o_totalprice"),
-          round(col("__qty").cast("double"), 2).as("total_qty"))
-    }),
-
-    // TPC-H Q21 shape: suppliers who were the SOLE late shipper on a
-    // multi-supplier order — the EXISTS/NOT-EXISTS pair restated as
-    // two hash aggregates over (order, supplier) lateness flags; no
-    // correlated re-scans of lineitem
-    // Round 15: the per-order qualifier (>= 2 suppliers, exactly one
-    // late) is a WINDOW over the per-(order, supplier) aggregate, not
-    // a second aggregate + semi-join — the old shape consumed `ps` in
-    // two branches, so the lineitem⋈orders join + aggregate reduced
-    // twice and the semi-join added an exchange; same rows out.
-    "q206_sole_late_supplier" -> ((s, d) => {
-      val ps = t(s, d, "lineitem")
-        .join(t(s, d, "orders").select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey"), col("l_suppkey"))
-        .agg(max(when(col("l_shipdate") >
-          col("o_orderdate") + expr("INTERVAL 45 DAYS"), 1L).otherwise(0L))
-          .as("__late"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_orderkey"))
-      ps.withColumn("__ns", count(lit(1)).over(w))
-        .withColumn("__nl", sum(col("__late")).over(w))
-        .filter(col("__ns") >= 2 && col("__nl") === 1 &&
-          col("__late") === 1L)
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).cast("long").as("n_orders"))
-    }),
-
-    // TPC-H Q16 shape: supplier census per (brand, size) with a NOT-IN
-    // exclusion — distinct (part, supplier) pairs from the fact table
-    // (the partsupp stand-in), negative-balance suppliers removed by
-    // an anti-join, then COUNT DISTINCT per group
-    "q207_supplier_census" -> ((s, d) => {
-      val psup = t(s, d, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-      val excluded = t(s, d, "supplier")
-        .filter(col("s_acctbal") < 0.0).select(col("s_suppkey"))
-      psup.join(excluded, col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(t(s, d, "part"), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_size"))
-        .agg(count_distinct(col("l_suppkey")).cast("long").as("supplier_cnt"))
-    }),
-
-    // TPC-H Q20 shape inverted to a per-part dominance audit: the
-    // suppliers shipping MORE THAN HALF of a part's total quantity —
-    // the correlated per-group threshold as one extra hash aggregate
-    // joined back on the group key, compared in exact DECIMAL
-    // cross-multiplication (2*sq > tot)
-    "q208_dominant_supplier" -> ((s, d) => {
-      val sq = t(s, d, "lineitem")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("__sq"))
-      val tot = sq.groupBy(col("l_partkey"))
-        .agg(sum(col("__sq")).as("__tot"),
-          count(lit(1)).cast("long").as("__nsupp"))
-      sq.join(tot, "l_partkey")
-        .filter(col("__nsupp") >= 2 && col("__sq") * 2 > col("__tot"))
-        .select(col("l_partkey"), col("l_suppkey"),
-          round(col("__sq").cast("double"), 2).as("supp_qty"),
-          round(col("__tot").cast("double"), 2).as("part_qty"))
-    }),
-
-    // TPC-H Q2 shape: the cheapest supplier per part — correlated MIN
-    // decorrelated to a struct-min aggregate under the total
-    // (unit price, suppkey) order; unit price is one IEEE division,
-    // identical in any engine, so the argmin is deterministic
-    "q209_min_cost_supplier" -> ((s, d) => {
-      val unit = t(s, d, "lineitem")
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(col("l_extendedprice") / col("l_quantity")).as("__mp"))
-      unit.groupBy(col("l_partkey"))
-        .agg(min(struct(col("__mp"), col("l_suppkey"))).as("__m"))
-        .select(col("l_partkey"),
-          col("__m.l_suppkey").as("best_suppkey"),
-          pround(col("__m.__mp"), 4).as("unit_price"))
-    }),
-
-    // graph-density screen over the near-dup candidate graph: local
-    // clustering coefficient — cliques (coeff 10000) are boilerplate
-    // families, low-coeff hubs are hot-bucket noise (q126's subject,
-    // measured per node instead of per bucket)
-    "q210_clustering_coeff" -> ((s, d) =>
-      operators.Triangles.localClusteringBp(
-        Dedup.minhashCandidates(t(s, d, "documents"), "text", "doc_id",
-          bands = 3, rowsPerBand = 2),
-        "id_a", "id_b")),
-
-    // market-basket pair affinity over order lineitems: top-30
-    // co-purchased part pairs by support, lift in exact basis points;
-    // the head cut is a TakeOrderedAndProject under a total
-    // (support desc, pair) order
-    "q211_basket_affinity" -> ((s, d) =>
-      operators.Basket.pairAffinity(t(s, d, "lineitem"),
-          "l_orderkey", "l_partkey", minPairs = 2L)
-        .orderBy(col("n_ab").desc, col("item_a"), col("item_b"))
-        .limit(30)),
-
-    // gaps-and-islands: longest consecutive-active-day streak per user
-    // — the island key is day minus per-user row_number (constant
-    // within a run, strictly dropping across a gap); two hash
-    // aggregates after one per-user window, all integer arithmetic
-    "q212_user_streaks" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("day"))
-      t(s, d, "events")
-        .select(col("user_id"), unix_date(to_date(col("ts"))).cast("long").as("day"))
-        .distinct()
-        .withColumn("__isl", col("day") - row_number().over(w))
-        .groupBy(col("user_id"), col("__isl"))
-        .agg(count(lit(1)).as("__len"))
-        .groupBy(col("user_id"))
-        .agg(sum(col("__len")).cast("long").as("n_active_days"),
-          max(col("__len")).cast("long").as("longest_streak"))
-    }),
-
-    // relational division (the FOR-ALL query): customers with orders
-    // in EVERY priority class — per-customer distinct-class count
-    // matched against the one-row global class count, broadcast; no
-    // per-class EXISTS chain, one aggregate each side
-    "q213_all_priorities" -> ((s, d) => {
-      val np = t(s, d, "orders")
-        .agg(count_distinct(col("o_orderpriority")).as("__np"))
-      t(s, d, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(count_distinct(col("o_orderpriority")).as("__c"),
-          count(lit(1)).cast("long").as("n_orders"))
-        .crossJoin(broadcast(np))
-        .filter(col("__c") === col("__np"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("n_orders"))
-    }),
-
-    // bag-semantics set ops: (user, type) occurrence MULTISETS of the
-    // first vs second half-month, EXCEPT ALL (per-pair surplus kept
-    // with multiplicity) and INTERSECT ALL (common multiplicity) —
-    // then folded per type; the final stitch is a full outer join
-    "q214_bag_ops" -> ((s, d) => {
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_type"), to_date(col("ts")).as("__d"))
-      val first = ev.filter(col("__d") < lit("2024-01-16"))
-        .select(col("user_id"), col("event_type"))
-      val second = ev.filter(col("__d") >= lit("2024-01-16"))
-        .select(col("user_id"), col("event_type"))
-      val surplus = first.exceptAll(second)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).cast("long").as("n_surplus"))
-      val common = first.intersectAll(second)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).cast("long").as("n_common"))
-      surplus.join(common, Seq("event_type"), "full_outer")
-        .select(col("event_type"),
-          coalesce(col("n_surplus"), lit(0L)).as("n_surplus"),
-          coalesce(col("n_common"), lit(0L)).as("n_common"))
-    }),
-
-    // bipartite influence: HITS hubs (customers) / authorities
-    // (suppliers) over the who-buys-from-whom graph, two integer
-    // power-iteration rounds — q127's engine-exact discipline on a
-    // DIRECTED bipartite graph
-    "q215_hits" -> ((s, d) =>
-      operators.Hits.bipartiteHits(
-        t(s, d, "lineitem")
-          .join(t(s, d, "orders").select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey"), col("l_suppkey")),
-        "o_custkey", "l_suppkey", iterations = 2)),
-
-    // TPC-H Q3 shape: top-10 not-yet-shipped orders of one segment by
-    // revenue — ranked on the EXACT decimal sum (ties broken by key)
-    // so the head cut is engine-portable, rounded only for output
-    "q216_unshipped_topk" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .filter(col("c_mktsegment") === "BUILDING" &&
-          col("o_orderdate") < lit("1998-01-01") &&
-          col("l_shipdate") > lit("1998-01-01"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).as("__rev"))
-        .orderBy(col("__rev").desc, col("l_orderkey"))
-        .limit(10)
-        .select(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"),
-          round(col("__rev").cast("double"), 4).as("revenue"))),
-
-    // TPC-H Q6 shape: the forecast-revenue-change scalar — one
-    // filter-only scan, one global aggregate, filters pushed to parquet
-    "q217_forecast_revenue" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01") &&
-          col("l_shipdate") < lit("1997-01-01") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24.0)
-        .agg(count(lit(1)).cast("long").as("n_items"),
-          dsum(col("l_extendedprice") * col("l_discount"), 4).as("revenue"))),
-
-    // TPC-H Q8 shape: one nation's share of a region's spend on one
-    // part type, per year — conditional numerator over the eight-way
-    // star; the share is ONE double division of two exact decimal
-    // sums, identically ordered in both engines
-    "q218_market_share" -> ((s, d) => {
-      val vol = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast("decimal(18,4)")
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation"))
-          .select(col("n_nationkey").as("__cnk"), col("n_regionkey")),
-          col("c_nationkey") === col("__cnk"))
-        .join(broadcast(t(s, d, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, d, "nation"))
-          .select(col("n_nationkey").as("__snk"), col("n_name").as("__sn")),
-          col("s_nationkey") === col("__snk"))
-        .join(broadcast(t(s, d, "part")
-          .filter(col("p_type") === "STANDARD").select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"))
-        .filter(col("r_name") === "ASIA")
-        .groupBy(year(col("o_orderdate")).cast("long").as("year"))
-        .agg(sum(vol).as("__tot"),
-          sum(when(col("__sn") === "NATION_5", vol)
-            .otherwise(lit(0.0).cast("decimal(18,4)"))).as("__nat"))
-        .select(col("year"),
-          round(col("__tot").cast("double"), 4).as("total_volume"),
-          round(col("__nat").cast("double"), 4).as("nation_volume"),
-          pround(col("__nat").cast("double") / col("__tot").cast("double"), 6)
-            .as("share"))
-    }),
-
-    // TPC-H Q9 shape: per (supplier nation, year) profit on one part
-    // family — profit proxy keeps Q9's two-term form (revenue minus a
-    // cost rate) with p_retailprice standing in for ps_supplycost
-    "q219_product_profit" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(t(s, d, "part").filter(col("p_name").contains("widget")),
-          col("l_partkey") === col("p_partkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, d, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(t(s, d, "orders").select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).cast("long").as("year"))
-        .agg(count(lit(1)).cast("long").as("n_items"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) -
-            col("l_quantity") * col("p_retailprice") * lit(0.1), 4)
-            .as("profit"))),
-
-    // TPC-H Q10 shape: top-20 customers by returned revenue in one
-    // quarter — q216's exact-decimal rank discipline
-    "q220_returned_customers" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .join(t(s, d, "orders")
-          .filter(col("o_orderdate") >= lit("1997-01-01") &&
-            col("o_orderdate") < lit("1997-04-01")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).as("__lost"))
-        .orderBy(col("__lost").desc, col("c_custkey"))
-        .limit(20)
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
-          round(col("__lost").cast("double"), 4).as("lost_revenue"))),
-
-    // TPC-H Q12 shape: priority mix per ship-delay band — the
-    // conditional two-counter aggregate over a derived band (the
-    // testdata has no shipmode column; the delay band is its analog)
-    "q221_shipdelay_mix" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders").select(col("o_orderkey"), col("o_orderdate"),
-          col("o_orderpriority")), col("l_orderkey") === col("o_orderkey"))
-        .withColumn("__delay", datediff(col("l_shipdate"), col("o_orderdate")))
-        .groupBy(when(col("__delay") <= 30, "fast")
-          .when(col("__delay") <= 60, "medium")
-          .otherwise("slow").as("delay_band"))
-        .agg(sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-          .otherwise(0L)).cast("long").as("n_high"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
-            .otherwise(1L)).cast("long").as("n_low"))),
-
-    // label-noise screen: per-vector same-label agreement with its
-    // SRP-bucket neighbors (q26's banding config), exact basis points
-    // — low agree_bp flags mislabeling candidates for relabel triage
-    "q222_label_consistency" -> ((s, d) =>
-      operators.Similarity.labelConsistency(t(s, d, "embeddings"),
-        "embedding", "vec_id", "label",
-        bands = 4, planesPerBand = 8, dims = 64, minNeighbors = 3)),
-
-    // streaming basket pair counts: additive (item_a, item_b) state
-    // across two ORDER-whole batches ≡ the one-shot pair table
-    // (additivity under the baskets-arrive-whole contract,
-    // spec-pinned), then the same (support desc, pair) head as q211.
-    // The committed even-orderkey batch-0 state is a per-(session,dir)
-    // fixture built ONCE: repeated invocations (Bench runs this three
-    // times) each perform one REAL cross-batch merge against it via
-    // mergeBatch — which never writes — instead of rebuilding and
-    // re-committing both ticks from a fresh temp dir every run. The
-    // full accept→commit→replay protocol stays spec-pinned in
-    // StreamingBasketSpec.
-    "q223_streaming_baskets" -> ((s, d) => {
-      val st = stateFixture("q223", s, d) { p =>
-        streaming.StreamingBasket.acceptBatch(
-          t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-            .filter(col("l_orderkey") % 2 === 0),
-          "l_orderkey", "l_partkey", p)
-      }
-      val merged = streaming.StreamingBasket.mergeBatch(
-        t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-          .filter(col("l_orderkey") % 2 === 1),
-        "l_orderkey", "l_partkey", st)
-      merged.filter(col("n_ab") >= 2)
-        .orderBy(col("n_ab").desc, col("item_a"), col("item_b"))
-        .limit(30)
-    }),
-
-    // mixture-design diagnostic: pairwise Jensen–Shannon divergence
-    // between source unigram distributions, in bits — near-0 pairs are
-    // duplicate voices whose q93 mixture weights compete; pround6
-    // contributions, DECIMAL-exact sum (the q146 discipline)
-    "q224_source_divergence" -> ((s, d) =>
-      operators.Profile.jsDivergence(t(s, d, "documents"), "text", "source")
-        .withColumn("js_bits", pround(col("js_bits"), 4))),
-
-    // k-anonymity release-risk audit over the (nation, segment)
-    // quasi-identifier: equivalence-class size histogram with per-size
-    // violation flags at k=10 — two hash aggregates (q173's
-    // counts-of-counts shape), all integers
-    "q226_k_anonymity" -> ((s, d) =>
-      operators.Audit.kAnonymity(t(s, d, "customer"),
-        Seq("c_nationkey", "c_mktsegment"), k = 10L)),
-
-    // rank-WITH-ties per group: the two most common order priorities
-    // per nation by dense_rank over the count alone — ties all
-    // survive the cut, so the result SET is deterministic without a
-    // tie-break column (q09's row_number/limit family drops ties)
-    "q231_dense_topk" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("n_name")).orderBy(col("n_orders").desc)
-      t(s, d, "orders")
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"), col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).cast("long").as("n_orders"))
-        .withColumn("rnk", dense_rank().over(w).cast("long"))
-        .filter(col("rnk") <= 2)
-    }),
-
-    // co-purchase centrality: weighted PageRank over the basket-pair
-    // graph (edge weight = pair support) — which parts anchor the
-    // catalog; q127's BIGINT discipline with strength-normalized
-    // weighted mass, 3 rounds unrolled in the oracle
-    "q230_weighted_pagerank" -> ((s, d) =>
-      operators.PageRank.weightedRanks(
-        operators.Basket.pairAffinity(t(s, d, "lineitem"),
-            "l_orderkey", "l_partkey", minPairs = 2L)
-          .select(col("item_a").as("id_a"), col("item_b").as("id_b"),
-            col("n_ab").as("w")),
-        iterations = 3)),
-
-    // sentence-respecting ~64-token chunks (the RAG-prep shape): the
-    // chunk id is floor(exact-prefix-sum / budget), so no sentence is
-    // ever split and the assignment is engine-replayable
-    "q229_sentence_chunks" -> ((s, d) =>
-      operators.Packing.sentenceChunks(t(s, d, "documents"),
-        "text", "doc_id", tokenBudget = 64L)),
-
-    // the skewness-attack companion (privacy trio with q226/q227):
-    // per-class total-variation distance of the priority distribution
-    // from the global one, pround6+DECIMAL-summed, flagged above 0.05
-    "q228_t_closeness" -> ((s, d) =>
-      operators.Audit.tCloseness(
-        t(s, d, "customer")
-          .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey")),
-        Seq("c_nationkey", "c_mktsegment"), "o_orderpriority", maxTv = 0.05)
-        .withColumn("tv", pround(col("tv"), 4))),
-
-    // the homogeneity-attack companion: per (nation, segment) class,
-    // distinct order-priority diversity — big-but-homogeneous classes
-    // surface as (large class_size, diversity < l) rows
-    "q227_l_diversity" -> ((s, d) =>
-      operators.Audit.lDiversity(
-        t(s, d, "customer")
-          .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey")),
-        Seq("c_nationkey", "c_mktsegment"), "o_orderpriority", l = 3L)),
-
-    // positional phrase search via the inverted-index join: postings
-    // filtered to the phrase's terms, adjacency = equi-join on
-    // (doc, pos − offset); exact occurrence counts per matching doc
-    "q238_phrase_search" -> ((s, d) =>
-      operators.TextIndex.phraseMatches(t(s, d, "documents"),
-        "text", "doc_id", "value table")),
-
-    // offline CUSUM change-point per event type: the day where the
-    // observed prefix deviates most from the uniform-rate line —
-    // |D·P_k − k·T| kept exact BIGINT by cross-multiplication, tie to
-    // the earliest day
-    "q239_cusum_changepoint" -> ((s, d) =>
-      operators.Profile.cusumChangePoint(
-        t(s, d, "events")
-          .select(col("event_type"), to_date(col("ts")).as("day")),
-        "event_type", "day")
-        .select(col("grp").as("event_type"),
-          col("change_day").cast("string").as("change_day"),
-          col("cusum"), col("n_days"), col("n_total"))),
-
-    // cohort LTV triangle: customers by first-purchase month, revenue
-    // by integer months-since-cohort age — exact DECIMAL sums, month
-    // arithmetic as year*12+month (no fractional intervals)
-    "q240_cohort_ltv" -> ((s, d) =>
-      operators.Cohorts.cohortLtv(t(s, d, "orders"),
-        "o_custkey", "o_orderdate", "o_totalprice")),
-
-    // greedy coverage-maximizing selection: the 3 docs that jointly
-    // cover the most 3-shingles (facility-location greedy, the
-    // diverse-subset selector) — exact integer gains, (gain desc, id)
-    // tie order, unrolled-round oracle
-    "q247_greedy_coverage" -> ((s, d) =>
-      operators.Selection.greedyCoverage(t(s, d, "documents"),
-        "text", "doc_id", k = 3, shingleN = 3)
-        .withColumnRenamed("doc", "doc_id")),
-
-    // exact AUC (Mann–Whitney with midrank ties): does the event value
-    // separate purchases from the rest? Bucketed global prefix of
-    // per-distinct-score negative counts — no single-partition window;
-    // U accumulates as DECIMAL(38,0)
-    "q248_rank_auc" -> ((s, d) =>
-      operators.Metrics.rankAuc(
-        t(s, d, "events").withColumn("is_purchase",
-          (col("event_type") === "purchase").cast("long")),
-        "value", "is_purchase", bucketWidth = 16.0)),
-
-    // decile gains/lift: documents ranked desc by n_chars (doc_id
-    // tie-break), 10 equal-rank tiles, per-tile concentration of
-    // English docs — exact bp rates, one fixed-order double lift
-    "q249_gains_table" -> ((s, d) =>
-      operators.Metrics.gainsTable(
-        t(s, d, "documents").withColumn("is_en",
-          (col("lang") === "en").cast("long")),
-        "n_chars", "doc_id", "is_en", tiles = 10, bucketWidth = 16.0)),
-
-    // calibration/reliability bins of event value vs purchase rate:
-    // one hash aggregate, DECIMAL-exact bin means, floor-division bp
-    "q250_calibration_bins" -> ((s, d) =>
-      operators.Metrics.calibrationBins(
-        t(s, d, "events").withColumn("is_purchase",
-          (col("event_type") === "purchase").cast("long")),
-        "value", "is_purchase", binWidth = 50.0)),
-
-    // first-order Markov transition matrix of event types within each
-    // (user, day) sequence ordered by (ts, event_id): one partitioned
-    // window pass + two hash aggs; prob_bp exact floor division
-    "q251_markov_transitions" -> ((s, d) =>
-      operators.Markov.transitions(
-        t(s, d, "events").withColumn("__day",
-          date_format(col("ts"), "yyyy-MM-dd")),
-        Seq("user_id", "__day"), Seq("ts", "event_id"), "event_type")),
-
-    // Pearson chi-square independence of language vs source: the
-    // contingency grid with per-cell (o-e)^2/e contributions (pround6
-    // + DECIMAL sum) and the total statistic + dof on every row
-    "q252_chi_square" -> ((s, d) =>
-      operators.Profile.chiSquare(t(s, d, "documents"), "lang", "source")),
-
-    // mutual information (nats) between language and source with both
-    // marginal entropies — dependence STRENGTH next to q252's test
-    "q253_mutual_info" -> ((s, d) =>
-      operators.Profile.mutualInfo(t(s, d, "documents"), "lang", "source")),
-
-    // approximate-FD audit source -> lang: per source the majority
-    // language, g3 violation count, and strength in basis points;
-    // majority ties break to the smallest value (min(struct(-c, dep)))
-    "q254_fd_strength" -> ((s, d) =>
-      operators.Audit.fdStrength(t(s, d, "documents"),
-        Seq("source"), "lang")),
-
-    // Zipf-law OLS fit on (ln rank, ln count) of the top-60 terms:
-    // exact (count desc, term) ranks via a K-row broadcast self-join
-    // (no single-partition window), pround6 + DECIMAL(18,6) sums
-    "q255_zipf_fit" -> ((s, d) =>
-      operators.TfIdf.zipfFit(t(s, d, "documents"), "text", topK = 60)),
-
-    // reciprocal-rank fusion of cosine and inner-product top-10
-    // rankings for the first 10 query vectors — the hybrid-retrieval
-    // combiner; fused order = (pround6 RRF score desc, neighbor)
-    "q256_rrf_fusion" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      operators.Similarity.rrfFuse(
-        operators.Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 10),
-        operators.Similarity.dotTopK(q, emb, "vec_id", "embedding",
-          k = 10),
-        k0 = 60, topN = 5)
-    }),
-
-    // streaming first-touch funnel card: per-(user, step) earliest
-    // micros merge additively across two batches (min-merge), the
-    // card derives reached-through-step counts from the state alone
-    "q257_streaming_funnel" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val steps = Seq("view", "click", "signup", "purchase")
-      val st = stateFixture("q257", s, d) { p =>
-        streaming.StreamingFunnel.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0), "user_id", "ts",
-          "event_type", steps, p)
-      }
-      val merged = streaming.StreamingFunnel.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1), "user_id", "ts",
-        "event_type", steps, st)
-      streaming.StreamingFunnel.funnelView(merged, steps)
-    }),
-
-    // maximal-marginal-relevance pick of 3 vectors against query
-    // vec 0 (lambda 0.7): relevance vs redundancy greedy, every
-    // cosine bit-exact (q24 contract), unrolled-round oracle
-    "q258_mmr_selection" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      operators.Selection.mmr(emb.filter(col("vec_id") =!= 0),
-        emb.filter(col("vec_id") === 0), "vec_id", "embedding",
-        k = 3, lambda = 0.7)
-    }),
-
-    // deterministic weighted sample without replacement: 50 docs by
-    // Efraimidis-Spirakis keys with md5-derived u — ln(u)/w top-n,
-    // no RNG, engine-replayable
-    "q259_weighted_sample" -> ((s, d) =>
-      operators.Sampling.weightedSample(
-        t(s, d, "documents")
-          .select(col("doc_id"),
-            size(functions.TextFns.tokens(col("text"))).cast("long")
-              .as("n_tok")),
-        "doc_id", "n_tok", n = 50)),
-
-    // recency-weighted engagement leaderboard: top-10 users by
-    // half-life-decayed value sum (T = corpus max ts, 7-day half
-    // life); pround6 contributions, DECIMAL-exact totals
-    "q260_decayed_scores" -> ((s, d) =>
-      operators.Resample.decayedScores(t(s, d, "events"),
-        "user_id", "ts", "value", halfLifeDays = 7.0)
-        .orderBy(col("decayed").desc, col("user_id"))
-        .limit(10)),
-
-    // Theil-Sen robust daily-volume trend per event type — median of
-    // pairwise slopes over the day-bounded series, next to q163's OLS
-    "q261_theil_sen" -> ((s, d) =>
-      operators.Resample.theilSen(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            expr("unix_micros(ts) div 86400000000").as("x"))
-          .agg(count(lit(1)).cast("long").as("y")),
-        "event_type", "x", "y")),
-
-    // view -> purchase conversion latency: first purchase strictly
-    // after the first view, exact micros; p50/p90 via the q136
-    // percentile ≡ quantile_cont parity
-    "q262_conversion_latency" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val first = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"))
-        .agg(min(unix_micros(col("ts"))).as("t0"))
-      ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("tp"))
-        .join(first, "user_id")
-        .filter(col("tp") > col("t0"))
-        .groupBy(col("user_id"))
-        .agg(min(col("tp") - col("t0")).as("lat_us"))
-        .agg(count(lit(1)).cast("long").as("n_converted"),
-          pround(expr("percentile(lat_us, 0.5)"), 1).as("p50_us"),
-          pround(expr("percentile(lat_us, 0.9)"), 1).as("p90_us"))
-    }),
-
-    // last-touch revenue attribution: each purchase credited to the
-    // user's latest preceding non-purchase event type via the verified
-    // as-of backward join; exact DECIMAL revenue
-    "q263_last_touch" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      operators.AsOfJoin.backward(
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("value")),
-        ev.filter(col("event_type") =!= "purchase")
-          .select(col("user_id"), col("ts"), col("event_type")),
-        Seq("user_id"), "ts", Map("event_type" -> "channel"))
-        .groupBy(coalesce(col("channel"), lit("none")).as("channel"))
-        .agg(count(lit(1)).cast("long").as("n_purchases"),
-          dsum(col("value")).as("revenue"))
-    }),
-
-    // order-to-ship lead-time SLA: exact p50/p90/p99 of shipping days
-    // through the bucketed-rank quantile path on a join output
-    // Round 15: the value domain is INTEGER days spanning ~a year, so
-    // the join output reduces to a (value, count) table of a few
-    // hundred rows in ONE pass — exactQuantiles would re-execute the
-    // lineitem⋈orders join on every pass (counts + refinement + rank:
-    // 3 executions; its snapshot contract re-reads the input).
-    // quantilesFromCounts shares the R-7 positions + interpolation, so
-    // the output is bit-identical; the checkpoint bounds the reduced
-    // table (≤ |day vocabulary| rows), never the join.
-    "q277_lead_time" -> ((s, d) =>
-      operators.Metrics.quantilesFromCounts(
-        t(s, d, "lineitem")
-          .select(col("l_orderkey"), col("l_shipdate"))
-          .join(t(s, d, "orders")
-            .select(col("o_orderkey"), col("o_orderdate")),
-            col("l_orderkey") === col("o_orderkey"))
-          // lineitem/orders dates read as TIMESTAMP_NTZ; the session
-          // is UTC so the cast is a no-op relabeling for unix_micros
-          .select((expr("unix_micros(cast(l_shipdate as timestamp)) " +
-            "div 86400000000") -
-            expr("unix_micros(cast(o_orderdate as timestamp)) " +
-              "div 86400000000")).as("lead_days"))
-          .groupBy(col("lead_days"))
-          .agg(count(lit(1)).cast("long").as("__c"))
-          .localCheckpoint(true),
-        "lead_days", "__c", Seq(0.5, 0.9, 0.99), bucketWidth = 8.0)),
-
-    // revenue concentration card: share of total order value held by
-    // the top 1% / 5% / 10% of customers — the Lorenz/whale view,
-    // cent-scaled BIGINT shares over the bucketed desc rank
-    "q278_revenue_whales" -> ((s, d) =>
-      operators.Pareto.topShares(t(s, d, "orders"),
-        "o_custkey", "o_totalprice", pctsBp = Seq(100L, 500L, 1000L))),
-
-    // Herfindahl market concentration per supplier nation — exact
-    // DECIMAL(38,0) share-square arithmetic, 0–10000 points
-    "q279_market_hhi" -> ((s, d) =>
-      operators.Profile.hhi(
-        t(s, d, "lineitem")
-          .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-          .join(broadcast(t(s, d, "nation")),
-            col("s_nationkey") === col("n_nationkey"))
-          .select(col("n_name"),
-            col("s_suppkey"),
-            (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-              .as("rev")),
-        "n_name", "s_suppkey", "rev")),
-
-    // "also bought" shelf: item-item cosine² top-5 over order-basket
-    // co-occurrence — rational score, exact-integer ranking
-    "q280_item_cosine" -> ((s, d) =>
-      operators.Basket.cosineTopK(t(s, d, "lineitem"),
-        "l_orderkey", "l_partkey", k = 5, minPairs = 2L)),
-
-    // supplier return-rate leaderboard by Wilson lower bound — the
-    // small-n-aware worst-offender ranking
-    "q281_wilson_returns" -> ((s, d) =>
-      operators.Metrics.wilsonLowerBound(
-        t(s, d, "lineitem")
-          .select(col("l_suppkey").as("supp_key"),
-            when(col("l_returnflag") === "R", 1L).otherwise(0L)
-              .as("returned")),
-        "supp_key", "returned", minN = 20L)),
-
-    // lead-lag discovery: cross-correlation of daily order placements
-    // against daily shipments at lags -7..7 — |r| peaks at the
-    // order-to-ship lead time
-    "q282_cross_corr" -> ((s, d) => {
-      val xs = t(s, d, "orders")
-        .groupBy(unix_date(to_date(col("o_orderdate"))).cast("long")
-          .as("d"))
-        .agg(count(lit(1)).cast("long").as("x"))
-      val ys = t(s, d, "lineitem")
-        .groupBy(unix_date(to_date(col("l_shipdate"))).cast("long")
-          .as("d"))
-        .agg(count(lit(1)).cast("long").as("y"))
-      operators.Resample.crossCorr(xs, ys, "d", "x", "y", maxLag = 7)
-        .select(col("lag"), col("n_pairs"), pround(col("r"), 6).as("r"))
-    }),
-
-    // credit-scoring feature screen: weight-of-evidence / information
-    // value of the quantity bin against the returned label
-    "q283_woe_iv" -> ((s, d) =>
-      operators.Metrics.woeIv(
-        t(s, d, "lineitem")
-          .select(col("l_quantity").cast("long").as("qty_bin"),
-            when(col("l_returnflag") === "R", 1L).otherwise(0L)
-              .as("returned")),
-        "qty_bin", "returned")
-        .select(col("bin"), col("n_pos"), col("n_neg"),
-          pround(col("woe"), 6).as("woe"),
-          pround(col("iv_contrib"), 6).as("iv_contrib"))),
-
-    // SPC p-chart over the daily returned-line proportion — all-integer
-    // control card, variable-n Shewhart limits around the global rate
-    "q284_p_chart" -> ((s, d) =>
-      operators.Audit.pChart(
-        t(s, d, "lineitem")
-          .select(unix_date(to_date(col("l_shipdate"))).cast("long")
-            .as("ship_day"),
-            when(col("l_returnflag") === "R", 1L)
-              .otherwise(0L).as("ret")),
-        "ship_day", "ret")
-        .withColumn("out_of_control",
-          col("out_of_control").cast("long"))),
-
-    // revenue-inequality card: exact per-nation Gini over customer
-    // spend (zero-order customers included via the left join) — the
-    // bucketed-rank Σ r·x form, BIGINT-bp output
-    "q285_gini" -> ((s, d) =>
-      operators.Pareto.gini(
-        t(s, d, "customer")
-          .join(t(s, d, "orders"),
-            col("c_custkey") === col("o_custkey"), "left"),
-        "c_nationkey", "c_custkey", "o_totalprice")),
-
-    // live feature screen: the additive per-bin class-count state
-    // built from the even-orderkey half, merged with the odd half,
-    // read through the shared WoE/IV closing — additivity makes it
-    // equal q283's one-shot screen over the full table
-    "q286_streaming_woe" -> ((s, d) => {
-      val rows = t(s, d, "lineitem")
-        .select(col("l_orderkey"),
-          col("l_quantity").cast("long").as("qty_bin"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L)
-            .as("returned"))
-      val st = stateFixture("q286", s, d) { p =>
-        streaming.StreamingWoe.acceptBatch(
-          rows.filter(col("l_orderkey") % 2 === 0),
-          "qty_bin", "returned", p)
-      }
-      val merged = streaming.StreamingWoe.mergeBatch(
-        rows.filter(col("l_orderkey") % 2 === 1), "qty_bin", "returned", st)
-      streaming.StreamingWoe.woeView(merged)
-        .select(col("bin"), col("n_pos"), col("n_neg"),
-          pround(col("woe"), 6).as("woe"),
-          pround(col("iv_contrib"), 6).as("iv_contrib"))
-    }),
-
-    // A/B card: pooled two-proportion z per ship year (arms = line
-    // number parity — a null experiment, so significance should be
-    // rare), significance decided by exact cross-multiplied integers
-    "q287_ab_test" -> ((s, d) =>
-      operators.Metrics.twoProportionZ(
-        t(s, d, "lineitem").select(
-          year(to_date(col("l_shipdate"))).cast("long").as("ship_year"),
-          (col("l_linenumber") % 2).cast("long").as("arm"),
-          when(col("l_returnflag") === "R", 1L).otherwise(0L).as("ret")),
-        "ship_year", "arm", "ret")),
-
-    // burstiness screen: Fano factor of per-customer order arrivals
-    // over 30-day periods, zero periods included via the global M —
-    // 10^4 = Poisson-like, above = clumped ("bursty buyers")
-    "q288_dispersion" -> ((s, d) =>
-      operators.Profile.dispersionIndex(
-        t(s, d, "orders").select(col("o_custkey"),
-          expr("CAST(unix_date(CAST(o_orderdate AS DATE)) AS BIGINT) DIV 30")
-            .as("per")),
-        "o_custkey", "per")),
-
-    // demand elasticity per brand: log-log OLS of daily quantity on
-    // the daily average unit price (e4-cent units — slope and r² are
-    // scale-invariant), the zipfFit discipline grouped
-    "q289_price_elasticity" -> ((s, d) => {
-      val daily = t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), to_date(col("l_shipdate")).as("__day"))
-        .agg((sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .cast("decimal(18,4)")) * 10000).cast("long").as("__rev"),
-          sum(col("l_quantity").cast("long")).cast("long").as("__qty"))
-      operators.Resample.logLogSlope(
-        daily.select(col("p_brand"),
-          (col("__rev").cast("double") / col("__qty").cast("double"))
-            .as("price"),
-          col("__qty").cast("double").as("qty")),
-        "p_brand", "price", "qty")
-        .select(col("p_brand"), col("n_points"),
-          col("slope").as("elasticity"), col("r2"))
-    }),
-
-    // period-over-period movement matrix: order-frequency bands
-    // before/after the 1995 wall, churn (to 0) and acquisition
-    // (from 0) cells included — deterministic integer cuts, no
-    // quantile boundary
-    "q290_segment_migration" -> ((s, d) =>
-      operators.Cohorts.segmentMigration(
-        t(s, d, "orders").select(col("o_custkey"),
-          to_date(col("o_orderdate")).as("od")),
-        "o_custkey", "od", lit("1995-01-01").cast("date"))),
-
-    // operational in-flight card: open order lines (placed, not yet
-    // shipped) per delta day via the bucketed sweep-line prefix
-    "q291_open_orders" -> ((s, d) =>
-      operators.Resample.concurrency(
-        t(s, d, "lineitem")
-          .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .select(unix_date(to_date(col("o_orderdate"))).cast("long")
-            .as("start_day"),
-            unix_date(to_date(col("l_shipdate"))).cast("long")
-              .as("end_day")),
-        "start_day", "end_day")),
-
-    // repeat-purchase velocity: days from first to second DISTINCT
-    // order day per customer, read through the exact-quantile path
-    "q292_second_order_lag" -> ((s, d) => {
-      val ords = t(s, d, "orders").select(col("o_custkey").as("k"),
-        to_date(col("o_orderdate")).as("od"))
-      val f = ords.groupBy(col("k")).agg(min(col("od")).as("m1"))
-      val second = ords.join(f, "k").filter(col("od") > col("m1"))
-        .groupBy(col("k"))
-        .agg(min(col("m1")).as("m1"), min(col("od")).as("m2"))
-      operators.Metrics.exactQuantiles(
-        second.select(datediff(col("m2"), col("m1")).cast("long")
-          .as("lag")),
-        "lag", Seq(0.5, 0.9, 0.99), bucketWidth = 16.0)
-    }),
-
-    // live A/B significance watch: the additive arm-count state built
-    // from the even-orderkey half, merged with the odd half, read
-    // through the shared two-proportion closing — equals q287's
-    // one-shot test over the full table
-    "q293_streaming_ab" -> ((s, d) => {
-      val rows = t(s, d, "lineitem").select(col("l_orderkey"),
-        year(to_date(col("l_shipdate"))).cast("long").as("ship_year"),
-        (col("l_linenumber") % 2).cast("long").as("arm"),
-        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("ret"))
-      val st = stateFixture("q293", s, d) { p =>
-        streaming.StreamingAbTest.acceptBatch(
-          rows.filter(col("l_orderkey") % 2 === 0),
-          "ship_year", "arm", "ret", p)
-      }
-      val merged = streaming.StreamingAbTest.mergeBatch(
-        rows.filter(col("l_orderkey") % 2 === 1),
-        "ship_year", "arm", "ret", st)
-      streaming.StreamingAbTest.abView(merged, "ship_year")
-    }),
-
-    // TextRank keyword centrality: weighted PageRank over the
-    // adjacent-token co-occurrence graph (undirected, pair-count
-    // weights, singleton pairs pruned) — q230's integer fixpoint on
-    // a text-derived graph
-    "q294_textrank" -> ((s, d) => {
-      val bi = t(s, d, "documents")
-        .select(functions.TextFns.tokens(col("text")).as("__t"))
-        .select(explode(functions.TextFns.wordShingles(col("__t"), 2))
-          .as("s"))
-        .select(split(col("s"), " ").as("p"))
-        .select(least(element_at(col("p"), 1), element_at(col("p"), 2))
-          .as("id_a"),
-          greatest(element_at(col("p"), 1), element_at(col("p"), 2))
-            .as("id_b"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).cast("long").as("w"))
-        .filter(col("w") >= 2L)
-      operators.PageRank.weightedRanks(bi, iterations = 3)
-    }),
-
-    // NRR waterfall: month-over-month customer revenue decomposed into
-    // new / expansion / contraction / churned cents — the bridge
-    // identity reconciles adjacent month totals exactly
-    "q295_revenue_bridge" -> ((s, d) =>
-      operators.Cohorts.revenueBridge(
-        t(s, d, "orders").select(col("o_custkey"),
-          (year(to_date(col("o_orderdate"))) * 12 +
-            month(to_date(col("o_orderdate")))).cast("long").as("mon"),
-          col("o_totalprice")),
-        "o_custkey", "mon", "o_totalprice")),
-
-    // double-billing screen: line pairs with the SAME (part, quantity)
-    // shipped within 7 days of each other — banded by day bucket, so
-    // the join never goes quadratic in the calendar
-    "q296_double_billing" -> ((s, d) =>
-      operators.FuzzyJoin.proximatePairs(
-        t(s, d, "lineitem").select(
-          (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
-            .as("line_id"),
-          col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-          unix_date(to_date(col("l_shipdate"))).cast("long").as("day")),
-        Seq("l_partkey", "qty"), "line_id", "day", window = 7L)),
-
-    // live in-flight monitor: the additive per-day delta state built
-    // from even-orderkey lines, merged with the odd half, read through
-    // the shared sweep-line closing — equals q291's one-shot card
-    "q297_streaming_concurrency" -> ((s, d) => {
-      val iv = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"),
-          unix_date(to_date(col("o_orderdate"))).cast("long").as("s0"),
-          unix_date(to_date(col("l_shipdate"))).cast("long").as("e0"))
-      val st = stateFixture("q297", s, d) { p =>
-        streaming.StreamingConcurrency.acceptBatch(
-          iv.filter(col("l_orderkey") % 2 === 0), "s0", "e0", p)
-      }
-      val merged = streaming.StreamingConcurrency.mergeBatch(
-        iv.filter(col("l_orderkey") % 2 === 1), "s0", "e0", st)
-      streaming.StreamingConcurrency.concurrencyView(merged)
-    }),
-
-    // live exact value quantiles: the additive class-count merge
-    // (q233's machinery — a (value, n) state bounded by the 2-decimal
-    // value vocabulary) read through weighted R-7 order statistics;
-    // two batches ≡ the one-shot quantiles by additivity
-    "q276_streaming_quantiles" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val st = stateFixture("q276", s, d) { p =>
-        streaming.StreamingKAnonymity.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0).select(col("value")),
-          Seq("value"), p)
-      }
-      val merged = streaming.StreamingKAnonymity.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1).select(col("value")),
-        Seq("value"), st)
-      operators.Metrics.quantilesFromCounts(merged, "value", "n",
-        Seq(0.5, 0.9, 0.99), bucketWidth = 16.0)
-    }),
-
-    // exact global price quantiles WITHOUT a single-node sort or a
-    // memory-bound percentile buffer: bucketed-rank order statistics,
-    // R-7 interpolation — agrees with quantile_cont to the rounding
-    "q275_exact_quantiles" -> ((s, d) =>
-      operators.Metrics.exactQuantiles(t(s, d, "lineitem"),
-        "l_extendedprice", Seq(0.5, 0.95, 0.99), bucketWidth = 4096.0)),
-
-    // live rolling-actives card: the q267 state machinery at DAY grain
-    // read through the q270 coverage view — additive presence makes
-    // the two-batch card equal the one-shot WAU curve
-    "q274_streaming_actives" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val st = stateFixture("q274", s, d) { p =>
-        streaming.StreamingRetention.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0), "user_id", "ts", p,
-          grainDays = 1)
-      }
-      val merged = streaming.StreamingRetention.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1), "user_id", "ts", st,
-        grainDays = 1)
-      streaming.StreamingRetention.activesView(merged, window = 7)
-    }),
-
-    // live volume-deviation monitor: q241's maintained daily-count
-    // state read through the q268 trailing screen — the streaming
-    // anomaly view with zero extra state
-    "q272_streaming_deviation" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val st = stateFixture("q272", s, d) { p =>
-        streaming.StreamingAgg.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0), "ts", "event_type",
-          "value", p)
-      }
-      val merged = streaming.StreamingAgg.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1), "ts", "event_type",
-        "value", st)
-      operators.Resample.trailingDeviation(merged, "event_type", "day",
-        "n", window = 7)
-    }),
-
-    // leakage-safe temporal training table: features strictly before
-    // the 2024-01-21 wall, purchase label in the following week,
-    // label-window-only users excluded
-    "q273_temporal_labels" -> ((s, d) =>
-      operators.Cohorts.temporalLabels(t(s, d, "events"),
-        "user_id", "ts", "event_type", "purchase",
-        "2024-01-21", "2024-01-28")
-        .withColumnRenamed("user", "user_id")),
-
-    // ABC x XYZ inventory-policy matrix: q243's exact value ranking
-    // crossed with monthly-demand variability (zero months counted via
-    // the closed form sqrt(M*Sq2 - Sq^2)/Sq) — 9-cell policy grid
-    "q269_abc_xyz" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val abc = operators.Pareto.abcClassification(li,
-        "l_partkey", "l_extendedprice", bucketWidth = 65536.0)
-      val xyz = operators.Pareto.xyzClassification(
-        li.withColumn("__mon",
-          year(col("l_shipdate")) * 12 + month(col("l_shipdate"))),
-        "l_partkey", "__mon", "l_quantity")
-      abc.join(xyz, "l_partkey")
-        .groupBy(col("abc_class"), col("xyz_class"))
-        .agg(count(lit(1)).cast("long").as("n_parts"),
-          dsum(col("value")).as("total_value"))
-    }),
-
-    // exact rolling 7-day active users per day — the WAU curve by the
-    // coverage explode (no sketch, no self-join, no per-day rescan)
-    "q270_rolling_actives" -> ((s, d) =>
-      operators.Cohorts.rollingActives(t(s, d, "events"),
-        "user_id", "ts", window = 7)),
-
-    // per-day session conversion: share of 30-min sessions containing
-    // a purchase, by session-start day — exact bp floor division
-    "q271_session_conversion" -> ((s, d) =>
-      operators.Sessionize.withSessionIds(
-        t(s, d, "events"), "user_id", "ts", gapSeconds = 1800)
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(unix_micros(col("ts"))).as("__t0"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("__cv"))
-        .groupBy(call_function("div", col("__t0"), lit(86400000000L))
-          .as("day"))
-        .agg(count(lit(1)).cast("long").as("n_sessions"),
-          sum(col("__cv")).cast("long").as("n_converting"))
-        .withColumn("rate_bp", call_function("div",
-          col("n_converting") * 10000L, col("n_sessions")))),
-
-    // streaming retention card: (user, active-week) presence merges
-    // additively across two batches; cohort = min week DERIVED in the
-    // view, so late data re-cohorts correctly; exact bp retention
-    "q267_streaming_retention" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val st = stateFixture("q267", s, d) { p =>
-        streaming.StreamingRetention.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0), "user_id", "ts", p)
-      }
-      val merged = streaming.StreamingRetention.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1), "user_id", "ts", st)
-      streaming.StreamingRetention.retentionView(merged)
-    }),
-
-    // trailing-7-day volume deviation per event type: exact integer
-    // basis points vs the preceding week's sum — the no-doubles
-    // anomaly screen over the day-bounded daily series
-    "q268_volume_deviation" -> ((s, d) =>
-      operators.Resample.trailingDeviation(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).cast("long").as("c")),
-        "event_type", "day", "c", window = 7)),
-
-    // deterministic negative sampling: 2 md5-drawn candidate parts per
-    // (customer, bought-part) positive, user-positives rejected by
-    // anti-join — the reproducible training-pair generator
-    "q265_negative_samples" -> ((s, d) => {
-      val pos = t(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, d, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_partkey"))
-      operators.Sampling.negativeSamples(pos, "o_custkey", "l_partkey",
-        t(s, d, "part"), "p_partkey", k = 2)
-        .withColumnRenamed("o_custkey", "custkey")
-    }),
-
-    // sessions-as-baskets affinity: which event types co-occur within
-    // one 30-min session beyond their base rates (q211's machinery on
-    // the q101 session grain; exact bp lift)
-    "q266_session_affinity" -> ((s, d) =>
-      operators.Basket.pairAffinity(
-        operators.Sessionize.withSessionIds(
-          t(s, d, "events"), "user_id", "ts", gapSeconds = 1800)
-          .select(concat_ws("#", col("user_id"), col("session_id"))
-            .as("basket"), col("event_type")),
-        "basket", "event_type", minPairs = 2L)),
-
-    // RFM segmentation: per-user recency/frequency/monetary, quintile
-    // indexes by counting strict quantile-boundary crossings (q136
-    // percentile parity; idx 5 = largest values), segment-grid counts
-    "q264_rfm_segments" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val rfm = ev.groupBy(col("user_id"))
-        .agg(max(expr("unix_micros(ts) div 86400000000")).as("__ld"),
-          count(lit(1)).cast("long").as("freq"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as("monetary"))
-        .crossJoin(broadcast(ev.agg(
-          max(expr("unix_micros(ts) div 86400000000")).as("__gd"))))
-        .withColumn("recency", (col("__gd") - col("__ld")).cast("long"))
-      val qs = rfm.agg(
-        expr("percentile(recency, array(0.2D,0.4D,0.6D,0.8D))").as("__rq"),
-        expr("percentile(freq, array(0.2D,0.4D,0.6D,0.8D))").as("__fq"),
-        expr("percentile(monetary, array(0.2D,0.4D,0.6D,0.8D))").as("__mq"))
-      def idx(bounds: String, v: Column) =
-        (size(filter(col(bounds), x => x < v)) + 1).cast("long")
-      rfm.crossJoin(broadcast(qs))
-        .select(idx("__rq", col("recency").cast("double")).as("r_idx"),
-          idx("__fq", col("freq").cast("double")).as("f_idx"),
-          idx("__mq", col("monetary")).as("m_idx"), col("monetary"))
-        .groupBy(col("r_idx"), col("f_idx"), col("m_idx"))
-        .agg(count(lit(1)).cast("long").as("n_users"),
-          dsum(col("monetary")).as("total_value"))
-    }),
-
-    // multi-source BFS layers over the near-dup candidate graph: how
-    // far a seed cohort (doc_id % 13 == 0 graph nodes) spreads through
-    // q21's banding in <= 3 hops — exact set computation, unrolled
-    // oracle rounds
-    "q245_bfs_layers" -> ((s, d) => {
-      val pairs = Dedup.minhashCandidates(t(s, d, "documents"),
-        "text", "doc_id", bands = 3, rowsPerBand = 2)
-      val nodes = pairs.select(col("id_a").as("n"))
-        .unionAll(pairs.select(col("id_b").as("n"))).distinct()
-      operators.Bfs.layers(pairs, "id_a", "id_b",
-        nodes.filter(col("n") % 13 === 0), "n", maxDepth = 3)
-        .withColumnRenamed("node", "doc_id")
-    }),
-
-    // top user-day event paths: the first three event types of each
-    // (user, day), ordered by (ts, event_id) — the sankey/funnel
-    // discovery view; top-20 by (count desc, path)
-    "q246_top_paths" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd").as("__day"))
-        .agg(array_sort(collect_list(struct(
-          unix_micros(col("ts")).as("us"), col("event_id").as("eid"),
-          col("event_type").as("et")))).as("__evs"))
-        .select(concat_ws(">",
-          slice(transform(col("__evs"), x => x.getField("et")), 1, 3))
-          .as("path"))
-        .groupBy(col("path"))
-        .agg(count(lit(1)).cast("long").as("n_user_days"))
-        .orderBy(col("n_user_days").desc, col("path"))
-        .limit(20)),
-
-    // deterministic PPS systematic sample: ~100 docs proportional to
-    // token count — content-stable hash order, BIGINT stride-boundary
-    // crossings, no RNG (the reproducible "sample by size" primitive)
-    "q244_pps_sample" -> ((s, d) =>
-      operators.Sampling.ppsSample(
-        t(s, d, "documents")
-          .select(col("doc_id"),
-            size(functions.TextFns.tokens(col("text"))).cast("long")
-              .as("n_tok")),
-        "doc_id", "n_tok", n = 100L)),
-
-    // ABC/Pareto classification of parts by total extended price:
-    // global DESC-ordered running share via the bucketed driver-prefix
-    // (no single-partition window), BIGINT-cent boundary cuts at
-    // 80%/95% inclusive
-    "q243_abc_parts" -> ((s, d) =>
-      operators.Pareto.abcClassification(t(s, d, "lineitem"),
-        "l_partkey", "l_extendedprice", bucketWidth = 65536.0)
-        .withColumnRenamed("l_partkey", "partkey")),
-
-    // live change-point view over the q142 streaming MV state: the
-    // additive (day, type) counts merge across two batches, then
-    // cusumFromCounts scores the maintained series ≡ the one-shot
-    // q239 statistic (day strings sort as days)
-    "q241_streaming_cusum" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val st = stateFixture("q241", s, d) { p =>
-        streaming.StreamingAgg.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0), "ts", "event_type",
-          "value", p)
-      }
-      val merged = streaming.StreamingAgg.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1), "ts", "event_type",
-        "value", st)
-      operators.Profile.cusumFromCounts(merged, "event_type", "day", "n")
-        .select(col("grp").as("event_type"), col("change_day"),
-          col("cusum"), col("n_days"), col("n_total"))
-    }),
-
-    // Holt double-exponential forecast per event type over the q156
-    // daily series: level + trend fold (alpha = beta = 0.5, exact
-    // halvings in one fixed op order), one-step forecast = level+trend
-    "q242_holt_forecast" -> ((s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("dv"))
-      operators.Resample.holt(daily, "event_type", "day", "dv")
-        .select(col("event_type"), col("n_points").as("n_days"),
-          pround(col("level"), 4).as("level"),
-          pround(col("trend"), 4).as("trend"),
-          pround(col("forecast"), 4).as("forecast"))
-    }),
-
-    // Nelson–Aalen cumulative hazard over the SAME churn observations
-    // as q232 — the additive companion curve (no exp, no infinity
-    // path): cum_hazard = exact DECIMAL sum of pround6'd d/n steps
-    "q235_nelson_aalen" -> ((s, d) =>
-      operators.Survival.nelsonAalen(
-        t(s, d, "orders")
-          .groupBy(col("o_custkey"))
-          .agg(min(col("o_orderdate")).as("__first"),
-            max(col("o_orderdate")).as("__last"))
-          .select(
-            datediff(col("__last"), col("__first")).cast("long").as("dur"),
-            when(col("__last") < lit("1998-03-01").cast("date"), 1L)
-              .otherwise(0L).as("churned")),
-        "dur", "churned", bucketWidth = 256L)),
-
-    // streaming survival state: additive per-duration (d, c) counts
-    // across two customer-whole batches (custkey parity), live KM
-    // curve derived from the state ≡ q232's one-shot curve
-    // (additivity spec-pinned; batch-0 state is a per-session fixture)
-    "q236_streaming_survival" -> ((s, d) => {
-      def batch(parity: Int) = t(s, d, "orders")
-        .filter(col("o_custkey") % 2 === parity)
-        .groupBy(col("o_custkey"))
-        .agg(min(col("o_orderdate")).as("__first"),
-          max(col("o_orderdate")).as("__last"))
-        .select(
-          datediff(col("__last"), col("__first")).cast("long").as("dur"),
-          when(col("__last") < lit("1998-03-01").cast("date"), 1L)
-            .otherwise(0L).as("churned"))
-      val st = stateFixture("q236", s, d) { p =>
-        streaming.StreamingSurvival.acceptBatch(batch(0), "dur", "churned", p)
-      }
-      val merged = streaming.StreamingSurvival.mergeBatch(
-        batch(1), "dur", "churned", st)
-      streaming.StreamingSurvival.kmView(merged, bucketWidth = 256L)
-    }),
-
-    // directed association rules over the q211 baskets: both
-    // orientations of every co-occurrence pair with asymmetric
-    // confidence (n_ab/n_antecedent in exact basis points) — the
-    // cross-sell view where A→B strong / B→A weak IS the signal;
-    // head = top-40 by (confidence desc, rule), a total order
-    "q237_association_rules" -> ((s, d) =>
-      operators.Basket.associationRules(t(s, d, "lineitem"),
-          "l_orderkey", "l_partkey", minPairs = 2L)
-        .orderBy(col("confidence_bp").desc, col("antecedent"),
-          col("consequent"))
-        .limit(40)),
-
-    // boilerplate-hub ranking over the near-dup candidate graph: HITS
-    // on the doc <-> LSH-band-bucket bipartite graph (q21's banding
-    // config), restricted to buckets holding >= 2 docs — the template
-    // families the q126 skew audit only counts get ranked (bucket
-    // authority = how boilerplate-central the family is, doc hub = how
-    // template-saturated the doc is). Node ids are strings (docs cast)
-    // so both roles share one column; same BIGINT fixpoint as q215
-    "q234_neardup_hits" -> ((s, d) => {
-      val keyed = Dedup.minhashBandKeys(
-        Dedup.minhashSignatures(t(s, d, "documents"), "text", "doc_id", 6),
-        bands = 3, rowsPerBand = 2)
-      val crowded = keyed.groupBy(col("band_key"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") >= 2).select("band_key")
-      val edges = keyed.join(crowded, Seq("band_key"), "left_semi")
-        .select(col("doc").cast("string").as("doc_id"), col("band_key"))
-      operators.Hits.bipartiteHits(edges, "doc_id", "band_key",
-        iterations = 2)
-    }),
-
-    // streaming k-anonymity monitor: additive (nation, segment) class
-    // counts across two customer batches (split on c_custkey parity),
-    // then the derived release gate at k=10 ≡ q226's one-shot card
-    // (additivity spec-pinned; batch-0 state is a per-session fixture,
-    // the q223 pattern)
-    "q233_streaming_k_anonymity" -> ((s, d) => {
-      val st = stateFixture("q233", s, d) { p =>
-        streaming.StreamingKAnonymity.acceptBatch(
-          t(s, d, "customer").filter(col("c_custkey") % 2 === 0)
-            .select(col("c_nationkey"), col("c_mktsegment")),
-          Seq("c_nationkey", "c_mktsegment"), p)
-      }
-      val merged = streaming.StreamingKAnonymity.mergeBatch(
-        t(s, d, "customer").filter(col("c_custkey") % 2 === 1)
-          .select(col("c_nationkey"), col("c_mktsegment")),
-        Seq("c_nationkey", "c_mktsegment"), st)
-      streaming.StreamingKAnonymity.kAnonymityView(merged, k = 10L)
-    }),
-
-    // Kaplan–Meier churn curve over customer active lifetimes:
-    // duration = days between a customer's first and last order,
-    // churned (event=1) iff the last order predates 1998-03-01 (a
-    // fixed cutoff ~5 months before the dataset's edge), else
-    // right-censored. Log-space pround6 contributions, DECIMAL-summed
-    // (the q146 discipline applied to a product); bucketWidth 256
-    // exercises the cross-bucket driver-prefix path on ~2.4k distinct
-    // day durations
-    "q232_kaplan_meier" -> ((s, d) =>
-      operators.Survival.kaplanMeier(
-        t(s, d, "orders")
-          .groupBy(col("o_custkey"))
-          .agg(min(col("o_orderdate")).as("__first"),
-            max(col("o_orderdate")).as("__last"))
-          .select(
-            datediff(col("__last"), col("__first")).cast("long").as("dur"),
-            when(col("__last") < lit("1998-03-01").cast("date"), 1L)
-              .otherwise(0L).as("churned")),
-        "dur", "churned", bucketWidth = 256L)),
-
-    // day-of-week seasonality index per event type: each weekday's
-    // event share against the uniform 1/7, in exact basis points by
-    // integer cross-multiplication (index 10000 = no weekly pattern)
-    "q225_weekday_seasonality" -> ((s, d) =>
-      t(s, d, "events")
-        .select(col("event_type"), dayofweek(col("ts")).cast("long").as("dow"))
-        .groupBy(col("event_type"), col("dow"))
-        .agg(count(lit(1)).cast("long").as("n"))
-        .withColumn("__tot",
-          sum(col("n")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("event_type"))))
-        .select(col("event_type"), col("dow"), col("n"),
-          expr("CAST(n * 7 * 10000 DIV __tot AS BIGINT)").as("index_bp"))),
-
-    // ---- resampling inference (round-12) -------------------------------
-
-    // how sure are we of each segment's mean order value? Poisson
-    // bootstrap (Chamandy et al.): 32 hash-seeded replicates from one
-    // fanned scan — never a resampled copy of the data — giving the
-    // bootstrap SE and a nearest-rank 90% interval beside the
-    // observed mean
-    "q355_poisson_bootstrap" -> ((s, d) =>
-      operators.Bootstrap.poissonBootstrapMean(
-        t(s, d, "orders")
-          .join(t(s, d, "customer"),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment"), col("o_orderkey"),
-            col("o_totalprice")),
-        "c_mktsegment", "o_orderkey", "o_totalprice")),
-
-    // is the per-unit price stable if any one ship MONTH vanishes?
-    // delete-one-group jackknife of the ratio estimator
-    // Σ(price)/Σ(quantity) per return flag, leave-out blocks = ship
-    // months — block totals only, two group-bys end to end
-    "q356_jackknife" -> ((s, d) =>
-      operators.Bootstrap.jackknifeRatio(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          date_format(col("l_shipdate"), "yyyy-MM").as("blk"),
-          col("l_extendedprice"), col("l_quantity")),
-        "l_returnflag", "blk", "l_extendedprice", "l_quantity")),
-
-    // does a deep discount MOVE quantity, or is the gap noise? 32
-    // hash-coin relabelings of the discount arm in one scan; the
-    // Monte-Carlo p-value counts replicates whose |mean difference|
-    // reaches the observed one
-    "q357_randomization_test" -> ((s, d) =>
-      operators.Bootstrap.randomizationTest(
-        t(s, d, "lineitem").select(col("l_linestatus"),
-          concat_ws(":", col("l_orderkey"), col("l_linenumber")).as("k"),
-          when(col("l_discount") >= 0.05, 1L).otherwise(0L).as("arm"),
-          col("l_quantity")),
-        "l_linestatus", "k", "arm", "l_quantity")),
-
-    // ---- series diagnostics (round-12) ---------------------------------
-
-    // is each event type's daily volume white noise, or does it
-    // remember yesterday? Ljung–Box Q over lags 1..7 of the
-    // row-indexed daily-count series; exact DECIMAL autocovariances,
-    // decided against the shared χ²₇ 95% literal
-    "q361_ljung_box" -> ((s, d) =>
-      operators.SeriesTests.ljungBox(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).cast("long").as("y")),
-        "event_type", "day", "y", maxLag = 7)),
-
-    // does daily revenue FLIP randomly around its mean, or wander in
-    // regimes? Wald–Wolfowitz runs test per order priority — signs
-    // from the exact n·y vs S cross-multiplication, normal-z closing
-    "q362_runs_test" -> ((s, d) =>
-      operators.SeriesTests.runsTest(
-        t(s, d, "orders")
-          .groupBy(col("o_orderpriority"),
-            date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-          .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)").as("rev")),
-        "o_orderpriority", "day", "rev")),
-
-    // if daily order volume level-shifted, WHEN? Pettitt rank
-    // changepoint per priority — doubled-midrank integer U_t,
-    // earliest argmax, the classic 2·exp(−6K²/(n³+n²)) significance
-    "q363_pettitt" -> ((s, d) =>
-      operators.SeriesTests.pettitt(
-        t(s, d, "orders")
-          .groupBy(col("o_orderpriority"),
-            date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).cast("long").as("y")),
-        "o_orderpriority", "day", "y")),
-
-    // ---- variance & ordered-trend tier (round-12) ----------------------
-
-    // did price DISPERSION change across ship years? Levene's test
-    // (mean-centered) per line status: one-way ANOVA F on |x − mean|,
-    // deviations exact by n·x − S cross-multiplication
-    "q358_levene" -> ((s, d) =>
-      operators.Hypothesis.levene(
-        t(s, d, "lineitem").select(col("l_linestatus"),
-          year(col("l_shipdate")).cast("long").as("yr"),
-          col("l_extendedprice")),
-        "l_linestatus", "yr", "l_extendedprice")),
-
-    // do priorities differ in mean order value WITHOUT assuming equal
-    // variances? Welch's heteroscedastic one-way ANOVA per market
-    // segment — per-arm moments exact, order-free DECIMAL reductions
-    "q359_welch_anova" -> ((s, d) =>
-      operators.Hypothesis.welchAnova(
-        t(s, d, "orders")
-          .join(t(s, d, "customer"),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment"), col("o_orderpriority"),
-            col("o_totalprice")),
-        "c_mktsegment", "o_orderpriority", "o_totalprice")),
-
-    // does quantity rise MONOTONICALLY with the discount tier?
-    // Jonckheere–Terpstra ordered-trend test per return flag over six
-    // 2%-wide tiers — dominance counts from one fan-out window, the
-    // full Hollander–Wolfe tie-corrected variance
-    "q360_jonckheere" -> ((s, d) =>
-      operators.Hypothesis.jonckheere(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          expr("CAST(floor(l_discount * 100 + 0.5) AS BIGINT) DIV 2")
-            .as("tier"),
-          col("l_quantity")),
-        "l_returnflag", "tier", "l_quantity", maxArm = 5)),
-
-    // ---- retrieval & record-linkage tier (round-12) ---------------------
-
-    // which docs best answer a multi-term query? Okapi BM25 top-10
-    // for the fixed query {hash, join, stream}: scan-resident term
-    // filter, broadcast df/(N,T) attach, p6 per-term contributions
-    "q364_bm25" -> ((s, d) =>
-      operators.TfIdf.bm25(t(s, d, "documents"), "text", "doc_id",
-        Seq("hash", "join", "stream"), k = 10)),
-
-    // which catalog names are probable typo twins? blocked
-    // sorted-neighborhood over normalized part names: lead()-window
-    // neighborhoods (O(keys·w), never a pair join), edit distance <= 3
-    "q365_sorted_neighborhood" -> ((s, d) =>
-      operators.FuzzyJoin.sortedNeighborhood(t(s, d, "part"),
-        "p_name", "p_partkey", window = 5, maxDist = 3)),
-
-    // how many users exist beyond the ones we SAW? Chapman
-    // capture-recapture per event type from the even-day/odd-day
-    // observation windows — exact floored estimate, p6 SE
-    "q366_capture_recapture" -> ((s, d) =>
-      operators.Profile.captureRecapture(
-        t(s, d, "events").select(col("event_type"), col("user_id"),
-          (expr("unix_micros(ts) div 86400000000") % 2 === 0)
-            .cast("long").as("in_a"),
-          (expr("unix_micros(ts) div 86400000000") % 2 === 1)
-            .cast("long").as("in_b")),
-        "event_type", "user_id", "in_a", "in_b")),
-
-    // ---- reliability & tail tier (round-12) -----------------------------
-
-    // is "1995 order cadence" ONE trait, or four unrelated quarters?
-    // Cronbach's alpha per segment over per-customer quarterly order
-    // counts (missing quarters = 0) — two hash aggregates, no pivot
-    "q367_cronbach_alpha" -> ((s, d) =>
-      operators.Metrics.cronbachAlpha(
-        t(s, d, "orders")
-          .filter(year(col("o_orderdate")) === 1995)
-          .join(t(s, d, "customer"),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_mktsegment"), col("o_custkey"),
-            concat(lit("q"), quarter(col("o_orderdate"))).as("item"))
-          .agg(count(lit(1)).cast("long").as("x")),
-        "c_mktsegment", "o_custkey", "item", "x")),
-
-    // HOW heavy is the price tail above each threshold? mean-excess
-    // plot plus the GPD method-of-moments (ξ, σ) per return flag —
-    // the measured companion to q335's assumed-Pareto Hill fit
-    "q368_mean_excess" -> ((s, d) =>
-      operators.Pareto.meanExcess(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          col("l_extendedprice")),
-        "l_returnflag", "l_extendedprice",
-        Seq(20000.0, 40000.0, 60000.0, 80000.0))),
-
-    // rich vocabulary, or one token worn out? Simpson λ, effective
-    // vocabulary 1/λ, and Berger–Parker dominance per source — the
-    // evenness companion to q324's richness card
-    "q369_simpson_diversity" -> ((s, d) =>
-      operators.TfIdf.simpsonDiversity(t(s, d, "documents"),
-        "text", "source")),
-
-    // ---- series structure tier (round-12) -------------------------------
-
-    // what does Monday LOOK like once the trend is removed? classical
-    // additive decomposition: centered 7-day MA trend, exact 7y − Σ7
-    // detrending, centered day-of-week indices
-    "q370_seasonal_decompose" -> ((s, d) =>
-      operators.SeriesTests.seasonalDecompose(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).cast("long").as("y"))
-          .withColumn("dow", dayofweek(to_date(col("day")))),
-        "event_type", "day", "dow", "y")),
-
-    // the full memory profile behind q361's single verdict: the ACF
-    // at lags 1..14 per event type, exact DECIMAL autocovariances
-    "q371_acf_table" -> ((s, d) =>
-      operators.SeriesTests.acf(
-        t(s, d, "events")
-          .groupBy(col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).cast("long").as("y")),
-        "event_type", "day", "y", maxLag = 14)),
-
-    // random walk or long memory? Hurst exponent by rescaled-range
-    // analysis over block sizes 8/16/32/64 of the daily order-count
-    // series — exact in-block algebra, one closing log-log fit
-    "q372_hurst" -> ((s, d) =>
-      operators.SeriesTests.hurstRS(
-        t(s, d, "orders")
-          .groupBy(col("o_orderpriority"),
-            date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).cast("long").as("y")),
-        "o_orderpriority", "day", "y")),
-
-    // q366's population gauge kept live: per-(type, user) capture
-    // indicators max-merged across batches, card via the shared
-    // chapmanFromIndicators closing. Batch 0 is a read-only
-    // per-session fixture (the q223 lesson): each invocation times ONE
-    // real merge against committed state, not the fixture rebuild.
-    "q373_streaming_capture" -> ((s, d) => {
-      def ev = t(s, d, "events").select(col("event_type"), col("user_id"),
-        col("event_id"),
-        (expr("unix_micros(ts) div 86400000000") % 2 === 0)
-          .cast("long").as("in_a"),
-        (expr("unix_micros(ts) div 86400000000") % 2 === 1)
-          .cast("long").as("in_b"))
-      val st = stateFixture("q373", s, d) { p =>
-        streaming.StreamingCapture.acceptBatch(
-          ev.filter(col("event_id") % 2 === 0), "event_type", "user_id",
-          "in_a", "in_b", p)
-      }
-      val merged = streaming.StreamingCapture.mergeBatch(
-        ev.filter(col("event_id") % 2 === 1), "event_type", "user_id",
-        "in_a", "in_b", st)
-      streaming.StreamingCapture.captureView(merged, "event_type")
-    }),
-
-    // ---- association & concordance tier (round-12) ----------------------
-
-    // does priority PREDICT status, or the reverse? Theil's
-    // uncertainty coefficient per segment — the asymmetric
-    // information-flow companion to q343's Cramér's V
-    "q374_theil_u" -> ((s, d) =>
-      operators.Profile.theilU(
-        t(s, d, "orders")
-          .join(t(s, d, "customer"),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment"), col("o_orderpriority"),
-            col("o_orderstatus")),
-        "c_mktsegment", "o_orderpriority", "o_orderstatus")),
-
-    // do discount and tax tiers agree BEYOND chance, counting how far
-    // apart they land? linear-weighted Cohen's kappa per return flag
-    // over the six 2%-wide tiers — one exact DECIMAL division
-    "q375_weighted_kappa" -> ((s, d) =>
-      operators.Metrics.weightedKappa(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          expr("CAST(floor(l_discount * 100 + 0.5) AS BIGINT) DIV 2")
-            .as("a"),
-          expr("CAST(floor(l_tax * 100 + 0.5) AS BIGINT) DIV 2")
-            .as("b")),
-        "l_returnflag", "a", "b", maxLevel = 5)),
-
-    // do all event types share one hourly rhythm? Kendall's W per
-    // weekday: each type ranks the 24 hours by volume, doubled
-    // midranks, the tie-corrected Legendre closing
-    "q376_kendalls_w" -> ((s, d) =>
-      operators.Metrics.kendallsW(
-        t(s, d, "events").select(
-          dayofweek(col("ts")).cast("long").as("dow"),
-          col("event_type"), hour(col("ts")).cast("long").as("hr"),
-          lit(1L).as("one")),
-        "dow", "event_type", "hr", "one")),
-
-    // ---- keywording & vocabulary-growth tier (round-12) -----------------
-
-    // what PHRASES define this corpus? RAKE top-20: stopword-free
-    // runs by window cumsum, word degree/frequency scores, phrase =
-    // sum of member words — the multi-word companion to q77's tf-idf
-    "q377_rake_keywords" -> ((s, d) =>
-      operators.TfIdf.rakeKeywords(t(s, d, "documents"),
-        "text", "doc_id", k = 20, minWords = 2)),
-
-    // will the vocabulary SATURATE? Heaps'-law fit per source over 8
-    // id-order checkpoints — β near 1 means every new doc brings new
-    // tokens (and the tokenizer budget never stabilizes)
-    "q378_heaps_law" -> ((s, d) =>
-      operators.TfIdf.heapsLaw(t(s, d, "documents"),
-        "text", "doc_id", "source", points = 8)),
-
-    // q368's tail gauge kept live: additive (n, Σe, Σe²) per
-    // (flag, threshold), card via the shared meanExcessFromMoments
-    // closing. Batch 0 is a read-only per-session fixture (q223
-    // lesson): one real merge per invocation.
-    "q379_streaming_tail" -> ((s, d) => {
-      def li = t(s, d, "lineitem").select(col("l_returnflag"),
-        col("l_extendedprice"), col("l_orderkey"))
-      val th = Seq(20000.0, 40000.0, 60000.0, 80000.0)
-      val st = stateFixture("q379", s, d) { p =>
-        streaming.StreamingTail.acceptBatch(
-          li.filter(col("l_orderkey") % 2 === 0), "l_returnflag",
-          "l_extendedprice", th, p)
-      }
-      val merged = streaming.StreamingTail.mergeBatch(
-        li.filter(col("l_orderkey") % 2 === 1), "l_returnflag",
-        "l_extendedprice", th, st)
-      streaming.StreamingTail.tailView(merged, "l_returnflag")
-    }),
-
-    // ---- explained-variance & index tier (round-12) ---------------------
-
-    // how much of the PRICE spread does the discount tier explain?
-    // correlation ratio η² per line status — the cat→numeric
-    // association lens beside q343 (cat↔cat) and q374 (directional)
-    "q380_eta_squared" -> ((s, d) =>
-      operators.Profile.etaSquared(
-        t(s, d, "lineitem").select(col("l_linestatus"),
-          expr("CAST(floor(l_discount * 100 + 0.5) AS BIGINT) DIV 2")
-            .as("tier"),
-          col("l_extendedprice")),
-        "l_linestatus", "tier", "l_extendedprice")),
-
-    // which feature PREDICTS order status? decision-stump information
-    // gain + Quinlan gain ratio over priority / segment / order year —
-    // the first-pass feature audit before any model sees the table
-    "q381_info_gain" -> ((s, d) =>
-      operators.Profile.infoGain(
-        t(s, d, "orders")
-          .join(t(s, d, "customer"),
-            col("o_custkey") === col("c_custkey"))
-          .select(col("o_orderstatus"), col("o_orderpriority"),
-            col("c_mktsegment"),
-            year(col("o_orderdate")).cast("string").as("yr")),
-        Seq("o_orderpriority", "c_mktsegment", "yr"), "o_orderstatus")),
-
-    // did PRICES move, or did the basket? Laspeyres/Paasche/Fisher
-    // indices per return flag between the pre-/post-1995 eras over
-    // parts sold in both — p6 unit prices, exact DECIMAL baskets
-    "q382_price_index" -> ((s, d) =>
-      operators.Pareto.priceIndices(
-        t(s, d, "lineitem").select(col("l_returnflag"),
-          col("l_partkey"),
-          when(year(col("l_shipdate")) >= 1995, 1L).otherwise(0L)
-            .as("era"),
-          col("l_extendedprice"), col("l_quantity")),
-        "l_returnflag", "l_partkey", "era", "l_extendedprice",
-        "l_quantity")),
-
-    // ---- multiple testing & collocation tier (round-12) -----------------
-
-    // 42 segment tests, how many SURVIVE correction? BH / Holm /
-    // q-values over per-(type, weekday) randomization p's — exact
-    // micro-unit cross-multiplied decisions, never the rounded double
-    "q383_multiple_testing" -> ((s, d) => {
-      val tests = operators.Bootstrap.randomizationTest(
-        t(s, d, "events").select(
-          concat_ws("|", col("event_type"),
-            dayofweek(col("ts")).cast("long")).as("g"),
-          col("event_id").cast("string").as("k"),
-          (col("user_id") % 2).cast("long").as("arm"), col("value")),
-        "g", "k", "arm", "value")
-      operators.Hypothesis.multipleTesting(
-        tests.select(split(col("g"), "\\|").getItem(0).as("family"),
-          split(col("g"), "\\|").getItem(1).as("dow"), col("p_value")),
-        "family", "dow", "p_value")
-    }),
-
-    // which word pairs are GLUED together? adjacency-collocation
-    // t-score + Dice over corpus bigrams — the fixed-distance
-    // companion to q145's document-cooccurrence PMI
-    "q384_collocations" -> ((s, d) =>
-      operators.TfIdf.collocations(t(s, d, "documents"), "text",
-        k = 30, minCount = 5)),
-
-    // which words mark each source, with rare words SHRUNK instead of
-    // exploding? Monroe weighted log-odds with the corpus-frequency
-    // Dirichlet prior — the regularized keyness beside q350's G²
-    "q385_log_odds" -> ((s, d) =>
-      operators.TfIdf.logOddsDirichlet(t(s, d, "documents"),
-        "text", "source", k = 10)),
-
-    // ---- live-index & predictability tier (round-12) --------------------
-
-    // q382's mix-shift-free price gauge kept live: additive
-    // per-(flag, part, era) revenue/quantity cells, card via the
-    // shared priceIndicesFromCells closing
-    // Batch 0 is a read-only per-session fixture (q223 lesson): one
-    // real merge per invocation.
-    "q386_streaming_price_index" -> ((s, d) => {
-      def li = t(s, d, "lineitem").select(col("l_returnflag"),
-        col("l_partkey"), col("l_orderkey"),
-        when(year(col("l_shipdate")) >= 1995, 1L).otherwise(0L)
-          .as("era"),
-        col("l_extendedprice"), col("l_quantity"))
-      val st = stateFixture("q386", s, d) { p =>
-        streaming.StreamingPriceIndex.acceptBatch(
-          li.filter(col("l_orderkey") % 2 === 0), "l_returnflag",
-          "l_partkey", "era", "l_extendedprice", "l_quantity", p)
-      }
-      val merged = streaming.StreamingPriceIndex.mergeBatch(
-        li.filter(col("l_orderkey") % 2 === 1), "l_returnflag",
-        "l_partkey", "era", "l_extendedprice", "l_quantity", st)
-      streaming.StreamingPriceIndex.indexView(merged, "l_returnflag")
-    }),
-
-    // given a word, how many NEXT words? bigram entropy rate +
-    // conditional perplexity per source — the predictability lens
-    // that craters on template corpora before unigram stats move
-    "q387_entropy_rate" -> ((s, d) =>
-      operators.TfIdf.entropyRate(t(s, d, "documents"),
-        "text", "source")),
-
-    // q355's uncertainty card kept live: the hash weights are a pure
-    // function of the row key, so per-replicate sums add across
-    // batches; card via the shared poissonBootstrapFromReplicates
-    // closing
-    // Batch 0 is a read-only per-session fixture (q223 lesson): one
-    // real merge per invocation.
-    "q388_streaming_bootstrap" -> ((s, d) => {
-      def o = t(s, d, "orders")
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment"), col("o_orderkey"),
-          col("o_totalprice"))
-      val st = stateFixture("q388", s, d) { p =>
-        streaming.StreamingBootstrap.acceptBatch(
-          o.filter(col("o_orderkey") % 2 === 0), "c_mktsegment",
-          "o_orderkey", "o_totalprice", p)
-      }
-      val merged = streaming.StreamingBootstrap.mergeBatch(
-        o.filter(col("o_orderkey") % 2 === 1), "c_mktsegment",
-        "o_orderkey", "o_totalprice", st)
-      streaming.StreamingBootstrap.bootstrapView(merged, "c_mktsegment")
-    })
-  )
+  /** Built once per JVM. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
 
   /** DuckDB-equivalent SQL per query (driver runs these on the same
-    * parquet tables and hash-compares). Omitted keys are driver
-    * rows-only checks, each genuinely un-oracle-able: q29 (binary media
-    * payloads) and q56 (engine-specific sketch estimates). Three former
-    * rows-only queries are now hash-verified by construction: q35
-    * regenerates the replay source's LCG rows in SQL (`range()` +
-    * chained Park–Miller steps, see ReplaySource.row), q18 replays the
-    * greedy packing loop as a recursive CTE, and q34 (round 11)
-    * switched to the replayable spherical-Lloyd fit whose rounds
-    * unroll as CTEs — the seeded MLlib path remains recall-gated in
-    * SimilaritySpec as the production alternative.
+    * parquet tables and hash-compares). The one omitted key is a
+    * driver rows-only check that is genuinely un-oracle-able: q56
+    * (engine-specific sketch estimates). Former rows-only queries are
+    * now hash-verified by construction: q35 regenerates the replay
+    * source's LCG rows in SQL (`range()` + chained Park–Miller steps,
+    * see ReplaySource.row), q18 replays the greedy packing loop as a
+    * recursive CTE, q34 (round 11) switched to the replayable
+    * spherical-Lloyd fit whose rounds unroll as CTEs — the seeded MLlib
+    * path remains recall-gated in SimilaritySpec as the production
+    * alternative — and q29 (round 15) replays its generation recipe.
     */
-  def oracleSql: Map[String, String] = {
-    val toksSql = "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> len(x) > 0)"
-    val shinglesSql = // 3-word shingles over t (token list)
-      "list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])"
-    val slotSql = "CAST(floor((floor(epoch(ts)) + 450) / 900) * 900 AS BIGINT)"
-    def slotFmt(fmt: String) = s"strftime(make_timestamp($slotSql * 1000000), '$fmt')"
-    val markerValues = TextFns.langMarkers.toSeq.sortBy(_._1)
-      .flatMap { case (l, ws) => ws.map(w => s"('$l','$w')") }.mkString(", ")
-    val stopwordList = TextFns.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-    // portable double rounding — must mirror SparkEntry.pround exactly
-    def pround(x: String, s: Int) = { val f = "1" + "0" * s; s"floor(($x) * $f + 0.5) / $f" }
-    // MinHash two-halves scheme — must mirror Dedup.minhashSignatures:
-    // h1/h2 = first/second 60 bits of md5(shingle), hash_i = h1 + i*h2
-    val h1Sql = "CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)"
-    val h2Sql = "CAST(('0x' || substr(md5(s), 17, 15)) AS BIGINT)"
-    def sigColsSql(k: Int) =
-      (0 until k).map(i => s"min(h1 + $i * h2) AS mh$i").mkString(", ")
-    def bandKeysSql(bands: Int, r: Int) = (0 until bands).map { b =>
-      val parts = (0 until r).map(i => s"mh${b * r + i}").mkString(", '|', ")
-      s"concat('b$b', '|', $parts)"
-    }.mkString("[", ", ", "]")
-
-    // mirrors CurationPipeline.run: quality gate -> marker-LID 'en' gate
-    // -> min-id exact dedup -> MinHash-LSH candidates (q21's CTE shape
-    // over the surviving set) -> near-dup losers under either keep
-    // policy. transitive=true is run()'s default: one survivor (the min
-    // id) per connected COMPONENT of the candidate graph, expressed as
-    // the unrolled hash-to-min contraction (ccUnrolledSql — the
-    // recursive walk cost 236/216 s for q46/q64 at sf1.0).
-    // transitive=false is the greedy pairwise policy (drop the larger id
-    // of every candidate pair) — what the per-batch streaming screen
-    // implements, since a stream never sees the whole candidate graph.
-    // corpusWhere restricts the screened corpus; evalWhere (when set)
-    // inserts the decontamination stage between the language gate and
-    // exact dedup — same position as StreamingCuration.screenBatch —
-    // dropping docs that share any distinct 3-word shingle with the
-    // eval slice (registerEvalSet n=3 / decontMinShared=1)
-    def curationSql(transitive: Boolean, corpusWhere: String = "TRUE",
-                    evalWhere: Option[String] = None): String = {
-      val losersSql =
-        if (transitive)
-          s"""cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-            |edges AS MATERIALIZED (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-            |${ccUnrolledSql("edges", "cu")},
-            |losers AS (SELECT node AS doc_id FROM cum WHERE node <> root)""".stripMargin
-        else
-          "losers AS (SELECT DISTINCT b.doc_id FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id)"
-      val decontStage = evalWhere.map { w =>
-        s"""eg AS (SELECT DISTINCT unnest(list_distinct($shinglesSql)) AS s
-           |       FROM (SELECT $toksSql AS t FROM documents WHERE $w)),
-           |lg AS (SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |       FROM (SELECT doc_id, t FROM langkept)),
-           |contaminated AS (SELECT doc_id FROM lg JOIN eg USING (s) GROUP BY doc_id),
-           |decont AS (SELECT * FROM langkept
-           |           WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),""".stripMargin
-      }.getOrElse("")
-      val exactSrc = if (evalWhere.isDefined) "decont" else "langkept"
-      s"""WITH RECURSIVE base AS (SELECT doc_id, text, lang, n_chars, $toksSql AS t FROM documents WHERE $corpusWhere),
-         |feat AS (
-         |  SELECT doc_id, text, lang, n_chars, t, len(t) AS n_tokens,
-         |    CASE WHEN len(t) > 0 THEN CAST(len(list_filter(t, x -> list_contains($stopwordList, x))) AS DOUBLE) / len(t) ELSE 0.0 END AS swr,
-         |    CASE WHEN len(t) > 0 THEN CAST(list_aggregate(list_transform(t, x -> len(x)), 'sum') AS DOUBLE) / len(t) ELSE 0.0 END AS atl,
-         |    CASE WHEN len(text) > 0 THEN CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE) / len(text) ELSE 0.0 END AS pr
-         |  FROM base),
-         |quality AS (
-         |  SELECT * FROM feat
-         |  WHERE n_tokens >= 5 AND pr <= 0.3
-         |    AND greatest(least(least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-         |      + (1.0 - abs(swr - 0.25) * 2.0) * 0.3
-         |      + (1.0 - least(abs(atl - 5.0) / 5.0, 1.0)) * 0.3, 1.0), 0.0) >= 0.2),
-         |qt AS (SELECT doc_id, unnest(t) AS token FROM quality),
-         |m(ml, w) AS (VALUES $markerValues),
-         |scores AS (SELECT qt.doc_id, m.ml, count(*) AS sc FROM qt JOIN m ON qt.token = m.w GROUP BY qt.doc_id, m.ml),
-         |best AS (SELECT doc_id, ml FROM scores
-         |         QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sc DESC, ml ASC) = 1),
-         |langkept AS (SELECT q.* FROM quality q JOIN best b ON q.doc_id = b.doc_id AND b.ml = 'en'),
-         |$decontStage
-         |exact AS (SELECT * FROM $exactSrc
-         |          QUALIFY row_number() OVER (PARTITION BY md5(lower(text)) ORDER BY doc_id) = 1),
-         |sh AS (SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-         |       FROM (SELECT doc_id, t FROM exact)),
-         |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-         |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-         |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-         |$losersSql
-         |SELECT doc_id, lang, n_chars FROM exact
-         |WHERE doc_id NOT IN (SELECT doc_id FROM losers)""".stripMargin
-    }
-
-    // mirrors Dedup.embeddingNearDups (banded SRP): per-band packed
-    // sign bits with the literal plane constants (VectorFns.srpCoef —
-    // same md5 derivation, plane index b*r+j), candidates = DISTINCT
-    // pairs sharing any band key, verified by unrounded cosine in `p`.
-    // Shared prefix for q26 (the pair list) and q70 (transitive
-    // components over those pairs).
-    // the [band keys] list shared by q26/q70 (pairs) and q108 (stream):
-    // per-band packed sign bits with the literal plane constants
-    lazy val embBandKeyList: String = {
-      def bandKeySql(b: Int, r: Int) = {
-        val value = (0 until r).map { j =>
-          val plane = (0 until 64).map(d => VectorFns.srpCoef(b * r + j, d))
-            .mkString("[", ", ", "]")
-          s"(CASE WHEN list_dot_product(v, $plane) >= 0 THEN ${1L << j} ELSE 0 END)"
-        }.mkString(" + ")
-        s"'$b:' || CAST(($value) AS VARCHAR)"
-      }
-      (0 until 4).map(b => bandKeySql(b, 8)).mkString(", ")
-    }
-    lazy val embeddingPairsSql: String = {
-      val keys = embBandKeyList
-      s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, unnest([$keys]) AS band_key FROM e),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.vec_id < b.vec_id),
-         |p AS (
-         |  SELECT c.id_a, c.id_b,
-         |    list_dot_product(ea.v, eb.v) / (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) AS c2
-         |  FROM cand c JOIN e ea ON ea.vec_id = c.id_a JOIN e eb ON eb.vec_id = c.id_b)""".stripMargin
-    }
-
-    /** Unrolled hash-to-min contraction connected components over a
-      * symmetric `edges(src, dst)` CTE — the sf1.0-feasible
-      * replacement for the transitive-closure walk (whose row count
-      * is O(Σ component²) BY CONSTRUCTION and blows up when SRP
-      * buckets percolate). Plain min-label propagation was measured
-      * at +1..2 hops/round on the percolated chain topology (41
-      * rounds at sf0.1 — labels stall at local-minimum basin
-      * boundaries), so each round instead:
-      *
-      *  1. hooks every super-node to the min of itself and its
-      *     neighbors (h),
-      *  2. flattens h by `comps` self-compositions (h ↦ h∘h squares
-      *     the jump, so sorted pointer chains compress 2^comps per
-      *     round — the one topology hooking alone walks linearly),
-      *  3. contracts the edge set to (h(src), h(dst)) distinct pairs
-      *     (basins MERGE, so per-component cluster count drops
-      *     geometrically — 5 rounds on the real sf0.1 graph, 8 on a
-      *     4,000-node shuffled path), and
-      *  4. composes h into the original-node root mapping.
-      *
-      * A fixpoint of hook+contract on symmetric edges is exactly the
-      * per-component min (hook-stability across an edge forces equal
-      * labels; labels never leave the component and never exceed own
-      * id), and a round shortfall can only MISMATCH the hash gate —
-      * never silently pass — so the static bound is self-diagnosing.
-      * Work per round is |E_r| + comps·|V_r| join rows, both
-      * shrinking geometrically; once the edge set is empty, the
-      * remaining rounds are no-ops on empty relations.
-      *
-      * Every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and each
-      * round references its predecessor several times — inlining
-      * would expand the plan exponentially in the round count.
-      *
-      * Emits CTE text; final mapping in `<p>m`(node, root), which
-      * GUARDS convergence: if the contracted edge relation is still
-      * non-empty after the static round budget, every mapping row
-      * raises error() naming the shortfall. Without the sentinel a
-      * too-coarse mapping surfaced as a generic hash-gate mismatch —
-      * hard to attribute to non-convergence vs a real defect
-      * (round-13 advisor); with it the failure mode is an explicit
-      * "raise rounds" message.
-      */
-    def ccUnrolledSql(edgesCte: String, p: String, rounds: Int = 10,
-                      comps: Int = 10): String = {
-      val init = Seq(
-        s"${p}e0 AS MATERIALIZED (SELECT src, dst FROM $edgesCte)",
-        s"${p}m0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS root FROM $edgesCte)")
-      val rs = (1 to rounds).flatMap { r =>
-        val hook =
-          s"""${p}h${r}_0 AS MATERIALIZED (
-             |  SELECT u.node, least(u.node, coalesce(nb.mn, u.node)) AS lab
-             |  FROM (SELECT DISTINCT src AS node FROM ${p}e${r - 1}) u
-             |  LEFT JOIN (SELECT src AS node, min(dst) AS mn
-             |             FROM ${p}e${r - 1} GROUP BY src) nb
-             |    ON nb.node = u.node)""".stripMargin
-        val flat = (1 to comps).map { c =>
-          s"""${p}h${r}_$c AS MATERIALIZED (
-             |  SELECT a.node, coalesce(b.lab, a.lab) AS lab
-             |  FROM ${p}h${r}_${c - 1} a
-             |  LEFT JOIN ${p}h${r}_${c - 1} b ON b.node = a.lab)""".stripMargin
-        }
-        val compose =
-          s"""${p}m$r AS MATERIALIZED (
-             |  SELECT m.node, coalesce(h.lab, m.root) AS root
-             |  FROM ${p}m${r - 1} m
-             |  LEFT JOIN ${p}h${r}_$comps h ON h.node = m.root)""".stripMargin
-        val contract =
-          s"""${p}e$r AS MATERIALIZED (
-             |  SELECT DISTINCT hu.lab AS src, hv.lab AS dst
-             |  FROM ${p}e${r - 1} e
-             |  JOIN ${p}h${r}_$comps hu ON hu.node = e.src
-             |  JOIN ${p}h${r}_$comps hv ON hv.node = e.dst
-             |  WHERE hu.lab <> hv.lab)""".stripMargin
-        (hook +: flat) :+ compose :+ contract
-      }
-      // convergence sentinel: consumers read <p>m, whose rows error()
-      // when <p>e<rounds> is non-empty — the CASE keeps error() lazy
-      // so a converged run never evaluates it
-      val guard =
-        s"""${p}m AS MATERIALIZED (
-           |  SELECT node,
-           |    CASE WHEN (SELECT count(*) FROM ${p}e$rounds) = 0 THEN root
-           |         ELSE error('cc oracle $p: edges remain after $rounds contraction rounds - raise rounds') END AS root
-           |  FROM ${p}m$rounds)""".stripMargin
-      (init ++ rs :+ guard).mkString(",\n")
-    }
-
-    val base = Map(
-      // midrank ties via the per-value count table; z text mirrors the
-      // operator's fixed double order; significance via HUGEINT
-      // cross-multiplication (the engine uses DECIMAL(38,0) — same
-      // exact integers)
-      "q298_mann_whitney" ->
-        s"""WITH cells AS (
-           |  SELECT event_type AS g, value AS v,
-           |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS na,
-           |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS nb
-           |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-           |r AS (
-           |  SELECT g, na, nb, na + nb AS f,
-           |    COALESCE(CAST(sum(na + nb) OVER (PARTITION BY g ORDER BY v
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |      AS BIGINT), 0) AS cum
-           |  FROM cells),
-           |a AS (
-           |  SELECT g, CAST(sum(na) AS BIGINT) AS n_a,
-           |    CAST(sum(nb) AS BIGINT) AS n_b,
-           |    CAST(sum(CAST(nb AS HUGEINT) * (2 * cum + f + 1))
-           |      AS HUGEINT) AS r2b,
-           |    CAST(sum(CAST(f AS HUGEINT) * f * f - f) AS HUGEINT) AS t
-           |  FROM r GROUP BY 1),
-           |b AS (
-           |  SELECT g, n_a, n_b,
-           |    r2b - CAST(n_b AS HUGEINT) * (n_b + 1)
-           |      - CAST(n_a AS HUGEINT) * n_b AS a2,
-           |    CAST(n_a + n_b AS HUGEINT) * (n_a + n_b - 1)
-           |      * (n_a + n_b + 1) - t AS v
-           |  FROM a WHERE n_a > 0 AND n_b > 0)
-           |SELECT g AS event_type, n_a, n_b,
-           |  CAST(a2 + CAST(n_a AS HUGEINT) * n_b AS BIGINT) AS u_x2,
-           |  ${pround("CASE WHEN v = 0 THEN 0.0 ELSE CAST(a2 AS DOUBLE) / (2.0 * sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * CAST(v AS DOUBLE) / (12.0 * CAST(n_a + n_b AS DOUBLE) * CAST(n_a + n_b - 1 AS DOUBLE)))) END", 6)} AS z,
-           |  CASE WHEN v = 0 THEN false
-           |    ELSE 1875 * a2 * a2 * (n_a + n_b) * (n_a + n_b - 1)
-           |      > 2401 * CAST(n_a AS HUGEINT) * n_b * v END AS significant
-           |FROM b""".stripMargin,
-
-      // the cells self-join computes C−D exactly; tie terms stay
-      // doubled (D2x = n(n−1) − Σ t(t−1)) so no division precedes the
-      // one double expression
-      "q299_kendall_tau" ->
-        s"""WITH cells AS (
-           |  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS x,
-           |    CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS y,
-           |    CAST(count(*) AS BIGINT) AS f
-           |  FROM lineitem GROUP BY 1, 2, 3),
-           |meta AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS m,
-           |    CAST(sum(f) AS BIGINT) AS n
-           |  FROM cells GROUP BY 1),
-           |sx AS (
-           |  SELECT g, CAST(sum(CAST(tx AS HUGEINT) * (tx - 1)) AS HUGEINT)
-           |    AS sxv
-           |  FROM (SELECT g, x, CAST(sum(f) AS BIGINT) AS tx
-           |        FROM cells GROUP BY 1, 2) GROUP BY 1),
-           |sy AS (
-           |  SELECT g, CAST(sum(CAST(ty AS HUGEINT) * (ty - 1)) AS HUGEINT)
-           |    AS syv
-           |  FROM (SELECT g, y, CAST(sum(f) AS BIGINT) AS ty
-           |        FROM cells GROUP BY 1, 2) GROUP BY 1),
-           |s AS (
-           |  SELECT a.g,
-           |    CAST(sum((CASE WHEN a.y < b.y THEN 1 ELSE -1 END)
-           |      * CAST(a.f AS HUGEINT) * b.f) AS HUGEINT) AS sv
-           |  FROM cells a JOIN cells b
-           |    ON a.g = b.g AND a.x < b.x AND a.y <> b.y
-           |  GROUP BY 1),
-           |j AS (
-           |  SELECT meta.g, n, m, COALESCE(sv, 0) AS sv,
-           |    CAST(n AS HUGEINT) * (n - 1) - sxv AS d2x,
-           |    CAST(n AS HUGEINT) * (n - 1) - syv AS d2y
-           |  FROM meta JOIN sx ON meta.g = sx.g JOIN sy ON meta.g = sy.g
-           |  LEFT JOIN s ON meta.g = s.g)
-           |SELECT g AS l_returnflag, n, m AS n_cells,
-           |  CAST(sv AS BIGINT) AS s,
-           |  ${pround("CASE WHEN d2x = 0 OR d2y = 0 THEN 0.0 ELSE 2.0 * CAST(sv AS DOUBLE) / sqrt(CAST(d2x AS DOUBLE) * CAST(d2y AS DOUBLE)) END", 6)} AS tau_b
-           |FROM j""".stripMargin,
-
-      // the q298 midrank shape minus the variance: A = 2U−n_a·n_b
-      // exact, delta one double, magnitude via HUGEINT
-      // cross-multiplication against the ×1000 Romano thresholds
-      "q300_cliffs_delta" ->
-        s"""WITH cells AS (
-           |  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v,
-           |    CAST(sum(CASE WHEN l_discount >= 0.05 THEN 0 ELSE 1 END)
-           |      AS BIGINT) AS na,
-           |    CAST(sum(CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS nb
-           |  FROM lineitem GROUP BY 1, 2),
-           |r AS (
-           |  SELECT g, na, nb, na + nb AS f,
-           |    COALESCE(CAST(sum(na + nb) OVER (PARTITION BY g ORDER BY v
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |      AS BIGINT), 0) AS cum
-           |  FROM cells),
-           |a AS (
-           |  SELECT g, CAST(sum(na) AS BIGINT) AS n_a,
-           |    CAST(sum(nb) AS BIGINT) AS n_b,
-           |    CAST(sum(CAST(nb AS HUGEINT) * (2 * cum + f + 1))
-           |      AS HUGEINT) AS r2b
-           |  FROM r GROUP BY 1),
-           |b AS (
-           |  SELECT g, n_a, n_b,
-           |    r2b - CAST(n_b AS HUGEINT) * (n_b + 1)
-           |      - CAST(n_a AS HUGEINT) * n_b AS a2
-           |  FROM a WHERE n_a > 0 AND n_b > 0)
-           |SELECT g AS l_returnflag, n_a, n_b,
-           |  ${pround("CAST(a2 AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))", 6)} AS delta,
-           |  CASE
-           |    WHEN 1000 * abs(a2) < 147 * CAST(n_a AS HUGEINT) * n_b
-           |      THEN 'negligible'
-           |    WHEN 1000 * abs(a2) < 330 * CAST(n_a AS HUGEINT) * n_b
-           |      THEN 'small'
-           |    WHEN 1000 * abs(a2) < 474 * CAST(n_a AS HUGEINT) * n_b
-           |      THEN 'medium'
-           |    ELSE 'large' END AS magnitude
-           |FROM b""".stripMargin,
-
-      // the exact micro-unit quotient split mirrored in HUGEINT //:
-      // S6u is bit-identical to the engine's DECIMAL(38,0), the h
-      // text shares the one fixed double order, and the three-way
-      // significance CASE (low bound / high bound / error on the
-      // borderline band) is the same decision procedure
-      "q301_kruskal_wallis" ->
-        s"""WITH cells AS (
-           |  SELECT event_type AS g, user_id % 3 AS arm, value AS v,
-           |    CAST(count(*) AS BIGINT) AS c
-           |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2, 3),
-           |perv AS (
-           |  SELECT g, v, CAST(sum(c) AS BIGINT) AS f
-           |  FROM cells GROUP BY 1, 2),
-           |ranked AS (
-           |  SELECT g, v, f,
-           |    COALESCE(CAST(sum(f) OVER (PARTITION BY g ORDER BY v
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |      AS BIGINT), 0) AS cum
-           |  FROM perv),
-           |ties AS (
-           |  SELECT g, CAST(sum(CAST(f AS HUGEINT) * f * f - f)
-           |    AS HUGEINT) AS t
-           |  FROM ranked GROUP BY 1),
-           |perarm AS (
-           |  SELECT c.g, c.arm, CAST(sum(c.c) AS BIGINT) AS ng,
-           |    CAST(sum(CAST(c.c AS HUGEINT) * (2 * r.cum + r.f + 1))
-           |      AS HUGEINT) AS r2g
-           |  FROM cells c JOIN ranked r ON c.g = r.g AND c.v = r.v
-           |  GROUP BY 1, 2),
-           |qsplit AS (
-           |  SELECT g, arm, ng,
-           |    (r2g * r2g) % ng AS rem,
-           |    (r2g * r2g) // ng AS q
-           |  FROM perarm),
-           |s6 AS (
-           |  SELECT g,
-           |    CAST(sum(q * 1000000 + (rem * 1000000) // ng) AS HUGEINT)
-           |      AS s6u,
-           |    CAST(sum(ng) AS BIGINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS k_arms
-           |  FROM qsplit GROUP BY 1),
-           |j AS (
-           |  SELECT s6.g, s6u, n, k_arms, t,
-           |    CAST(n AS HUGEINT) * (n - 1) * (n + 1) - t AS w,
-           |    3 * CAST(n - 1 AS HUGEINT) * s6u
-           |      - 3000000 * CAST(n AS HUGEINT) * (n - 1) * (n + 1)
-           |        * (n + 1) AS lhslow,
-           |    CASE k_arms WHEN 2 THEN 3841459 WHEN 3 THEN 5991465
-           |      WHEN 4 THEN 7814728 WHEN 5 THEN 9487729
-           |      WHEN 6 THEN 11070498 WHEN 7 THEN 12591587
-           |      WHEN 8 THEN 14067140 WHEN 9 THEN 15507313
-           |      ELSE error('more than 9 arms') END AS c6
-           |  FROM s6 JOIN ties ON s6.g = ties.g WHERE k_arms >= 2)
-           |SELECT g AS event_type, n, k_arms,
-           |  ${pround("CASE WHEN w = 0 THEN 0.0 ELSE (3.0 * CAST(n - 1 AS DOUBLE) * (CAST(s6u AS DOUBLE) / 1000000.0) - 3.0 * CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE) * CAST(n + 1 AS DOUBLE) * CAST(n + 1 AS DOUBLE)) / CAST(w AS DOUBLE) END", 6)} AS h,
-           |  CASE WHEN w = 0 THEN false
-           |    WHEN lhslow > CAST(c6 AS HUGEINT) * w THEN true
-           |    WHEN lhslow + 3 * CAST(n - 1 AS HUGEINT) * k_arms
-           |      <= CAST(c6 AS HUGEINT) * w THEN false
-           |    ELSE error('borderline beyond exact resolution')
-           |  END AS significant
-           |FROM j""".stripMargin,
-
-      // at-risk chains as suffix counts over the per-duration arm
-      // table; E and V contributions pround6 into DECIMAL(18,6) sums,
-      // the flag decided on the exact decimals
-      "q302_logrank" ->
-        s"""WITH per AS (
-           |  SELECT date_diff('day', min(o_orderdate), max(o_orderdate))
-           |      AS dur,
-           |    CASE WHEN max(o_orderdate) < DATE '1998-03-01'
-           |      THEN 1 ELSE 0 END AS e,
-           |    o_custkey
-           |  FROM orders GROUP BY o_custkey),
-           |j AS (
-           |  SELECT CAST(dur AS BIGINT) AS duration, e,
-           |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS arm
-           |  FROM per JOIN customer ON o_custkey = c_custkey),
-           |cnt AS (
-           |  SELECT duration,
-           |    CAST(sum(CASE WHEN arm = 0 AND e = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS d_a,
-           |    CAST(sum(CASE WHEN arm = 0 AND e = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS c_a,
-           |    CAST(sum(CASE WHEN arm = 1 AND e = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS d_b,
-           |    CAST(sum(CASE WHEN arm = 1 AND e = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS c_b
-           |  FROM j GROUP BY 1),
-           |tot AS (SELECT CAST(sum(d_a + c_a) AS BIGINT) AS ta,
-           |  CAST(sum(d_b + c_b) AS BIGINT) AS tb FROM cnt),
-           |r AS (
-           |  SELECT duration, d_a, d_b,
-           |    ta - COALESCE(CAST(sum(d_a + c_a) OVER (ORDER BY duration
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |      AS BIGINT), 0) AS na,
-           |    tb - COALESCE(CAST(sum(d_b + c_b) OVER (ORDER BY duration
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |      AS BIGINT), 0) AS nb
-           |  FROM cnt, tot),
-           |k AS (
-           |  SELECT d_a, d_b, na, nb, d_a + d_b AS d, na + nb AS n FROM r),
-           |ag AS (
-           |  SELECT CAST(sum(d_a) AS BIGINT) AS o_a,
-           |    CAST(sum(d_b) AS BIGINT) AS o_b,
-           |    sum(CAST(${pround("CASE WHEN d = 0 THEN 0.0 ELSE CAST(d AS DOUBLE) * CAST(na AS DOUBLE) / CAST(n AS DOUBLE) END", 6)} AS DECIMAL(18,6))) AS ea,
-           |    sum(CAST(${pround("CASE WHEN d = 0 OR n <= 1 THEN 0.0 ELSE CAST(d AS DOUBLE) * (CAST(na AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(nb AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(n - d AS DOUBLE) / CAST(n - 1 AS DOUBLE)) END", 6)} AS DECIMAL(18,6))) AS v
-           |  FROM k)
-           |SELECT ta AS n_a, tb AS n_b, o_a, o_b,
-           |  CAST(ea AS DOUBLE) AS e_a,
-           |  ${pround("CASE WHEN v = 0 THEN 0.0 ELSE CAST(CAST(o_a AS DECIMAL(18,6)) - ea AS DOUBLE) * CAST(CAST(o_a AS DECIMAL(18,6)) - ea AS DOUBLE) / CAST(v AS DOUBLE) END", 6)} AS chi2,
-           |  CASE WHEN v = 0 THEN false
-           |    ELSE (CAST(o_a AS DECIMAL(18,6)) - ea)
-           |        * (CAST(o_a AS DECIMAL(18,6)) - ea)
-           |      > CAST(3.841459 AS DECIMAL(7,6)) * v END AS significant
-           |FROM ag, tot""".stripMargin,
-
-      // q30's marker-token prediction chain feeding the exact
-      // rational kappa: A = n·agree − Σ ra·rb, B = n² − Σ ra·rb in
-      // HUGEINT, the Landis–Koch band by 5·A vs k·B
-      "q303_cohens_kappa" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS token FROM documents),
-           |m(lang, w) AS (VALUES $markerValues),
-           |scores AS (
-           |  SELECT t.doc_id, m.lang, count(*) AS sc
-           |  FROM toks t JOIN m ON t.token = m.w GROUP BY t.doc_id, m.lang),
-           |best AS (
-           |  SELECT doc_id, lang FROM scores
-           |  QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sc DESC, lang ASC) = 1),
-           |pred AS (
-           |  SELECT d.source, d.lang AS a, COALESCE(b.lang, 'und') AS b
-           |  FROM documents d LEFT JOIN best b ON d.doc_id = b.doc_id
-           |  WHERE d.source IS NOT NULL AND d.lang IS NOT NULL),
-           |cells AS (
-           |  SELECT source AS g, a, b, CAST(count(*) AS BIGINT) AS c
-           |  FROM pred GROUP BY 1, 2, 3),
-           |per AS (
-           |  SELECT g, CAST(sum(c) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT)
-           |      AS agree
-           |  FROM cells GROUP BY 1),
-           |ra AS (SELECT g, a AS l, CAST(sum(c) AS BIGINT) AS rra
-           |  FROM cells GROUP BY 1, 2),
-           |rb AS (SELECT g, b AS l, CAST(sum(c) AS BIGINT) AS rrb
-           |  FROM cells GROUP BY 1, 2),
-           |pe AS (
-           |  SELECT ra.g, CAST(sum(CAST(rra AS HUGEINT) * rrb) AS HUGEINT)
-           |    AS pev
-           |  FROM ra JOIN rb ON ra.g = rb.g AND ra.l = rb.l GROUP BY 1),
-           |j AS (
-           |  SELECT per.g, n, agree,
-           |    CAST(n AS HUGEINT) * agree - pev AS a2,
-           |    CAST(n AS HUGEINT) * n - pev AS b2
-           |  FROM per JOIN pe ON per.g = pe.g)
-           |SELECT g AS source, n, agree,
-           |  ${pround("CASE WHEN b2 = 0 THEN 0.0 ELSE CAST(a2 AS DOUBLE) / CAST(b2 AS DOUBLE) END", 6)} AS kappa,
-           |  CASE WHEN b2 = 0 THEN 'degenerate'
-           |    WHEN 5 * a2 <= 0 THEN 'poor'
-           |    WHEN 5 * a2 <= 1 * b2 THEN 'slight'
-           |    WHEN 5 * a2 <= 2 * b2 THEN 'fair'
-           |    WHEN 5 * a2 <= 3 * b2 THEN 'moderate'
-           |    WHEN 5 * a2 <= 4 * b2 THEN 'substantial'
-           |    ELSE 'almost perfect' END AS strength
-           |FROM j""".stripMargin,
-
-      // discrete EMD closed form on the shared quantity grid; the
-      // per-step term text mirrors the engine's one fixed double
-      // order, summed as DECIMAL(18,6)
-      "q304_wasserstein" ->
-        s"""WITH cells AS (
-           |  SELECT l_returnflag AS g, CAST(l_quantity AS DOUBLE) AS v,
-           |    CAST(sum(CASE WHEN l_linestatus = 'O' THEN 0 ELSE 1 END)
-           |      AS BIGINT) AS na,
-           |    CAST(sum(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS nb
-           |  FROM lineitem GROUP BY 1, 2),
-           |st AS (
-           |  SELECT g, v, na, nb,
-           |    CAST(sum(na) OVER (PARTITION BY g) AS BIGINT) AS ta,
-           |    CAST(sum(nb) OVER (PARTITION BY g) AS BIGINT) AS tb,
-           |    CAST(sum(na) OVER (PARTITION BY g ORDER BY v
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           |      AS BIGINT) AS cuma,
-           |    CAST(sum(nb) OVER (PARTITION BY g ORDER BY v
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           |      AS BIGINT) AS cumb,
-           |    lead(v) OVER (PARTITION BY g ORDER BY v) - v AS gap
-           |  FROM cells)
-           |SELECT g AS l_returnflag,
-           |  CAST(max(ta) AS BIGINT) AS n_a, CAST(max(tb) AS BIGINT) AS n_b,
-           |  CAST(CAST(sum(CAST(CASE WHEN gap IS NOT NULL AND ta > 0 AND tb > 0 THEN ${pround("CAST(abs(CAST(cuma AS HUGEINT) * tb - CAST(cumb AS HUGEINT) * ta) AS DOUBLE) / (CAST(ta AS DOUBLE) * CAST(tb AS DOUBLE)) * gap", 6)} ELSE 0.0 END AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS emd
-           |FROM st GROUP BY 1
-           |HAVING max(ta) > 0 AND max(tb) > 0""".stripMargin,
-
-      // q127's candidate-graph CTEs with restart mass confined to the
-      // doc_id % 7 seeds, 4 unrolled rounds
-      "q305_personalized_pagerank" -> {
-        val rounds = (1 to 4).map { k =>
-          s"""r$k AS (
-             |  SELECT n.node, n.deg, n.is_seed,
-             |    CAST((CASE WHEN n.is_seed THEN 150000 ELSE 0 END)
-             |      + COALESCE(s.inflow, 0) AS BIGINT) AS rank
-             |  FROM (SELECT node, deg, is_seed FROM r0) n
-             |  LEFT JOIN (
-             |    SELECT e.dst AS node, CAST(sum((r.rank * 85) // (100 * r.deg)) AS BIGINT) AS inflow
-             |    FROM edges e JOIN r${k - 1} r ON r.node = e.src
-             |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-           |seeds AS (SELECT DISTINCT doc_id AS node FROM documents WHERE doc_id % 7 = 0),
-           |r0 AS (
-           |  SELECT e.src AS node, CAST(count(*) AS BIGINT) AS deg,
-           |    s.node IS NOT NULL AS is_seed,
-           |    CAST(CASE WHEN s.node IS NOT NULL THEN 1000000 ELSE 0 END AS BIGINT) AS rank
-           |  FROM edges e LEFT JOIN seeds s ON e.src = s.node
-           |  GROUP BY e.src, s.node),
-           |$rounds
-           |SELECT node, deg, is_seed, rank FROM r4""".stripMargin
-      },
-
-      // gains exact via << ; the per-position discounts are the SAME
-      // literal strings the engine embeds (Metrics.dcgDiscounts), so
-      // no engine log is ever compared against another engine's
-      "q306_ndcg" -> {
-        val disc = "CASE rn " + operators.Metrics.dcgDiscounts(10)
-          .zipWithIndex.map { case (dv, i) =>
-            s"WHEN ${i + 1} THEN CAST($dv AS DOUBLE) "
-          }.mkString + "END"
-        val term = pround(
-          s"CAST((CAST(1 AS BIGINT) << CAST(rel AS INT)) - 1 AS DOUBLE) * ($disc)", 6)
-        s"""WITH base AS (
-           |  SELECT event_type AS q, value AS s, event_id AS id,
-           |    CAST(user_id % 4 AS BIGINT) AS rel
-           |  FROM events WHERE value IS NOT NULL),
-           |sc AS (SELECT q, id, rel,
-           |    row_number() OVER (PARTITION BY q ORDER BY s DESC, id ASC) AS rn
-           |  FROM base),
-           |idl AS (SELECT q, id, rel,
-           |    row_number() OVER (PARTITION BY q ORDER BY rel DESC, id ASC) AS rn
-           |  FROM base),
-           |nq AS (SELECT q, CAST(count(*) AS BIGINT) AS n FROM base GROUP BY 1),
-           |dcg AS (
-           |  SELECT q, CAST(sum(CAST($term AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS dcg
-           |  FROM sc WHERE rn <= 10 GROUP BY 1),
-           |idcg AS (
-           |  SELECT q, CAST(sum(CAST($term AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS idcg
-           |  FROM idl WHERE rn <= 10 GROUP BY 1)
-           |SELECT nq.q AS event_type, n,
-           |  CAST(dcg AS DOUBLE) AS dcg, CAST(idcg AS DOUBLE) AS idcg,
-           |  ${pround("CASE WHEN idcg = 0 THEN 0.0 ELSE CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE) END", 6)} AS ndcg
-           |FROM nq JOIN dcg ON nq.q = dcg.q JOIN idcg ON nq.q = idcg.q""".stripMargin
-      },
-
-      // first relevant rank exact per (group, query); misses are 0
-      // terms in the DECIMAL(18,6) reciprocal sum
-      "q307_mrr" ->
-        s"""WITH base AS (
-           |  SELECT event_type AS g, user_id % 50 AS qq, value AS s,
-           |    event_id AS id,
-           |    CASE WHEN event_id % 7 = 0 THEN 1 ELSE 0 END AS hit
-           |  FROM events WHERE value IS NOT NULL),
-           |r AS (SELECT g, qq, hit,
-           |    row_number() OVER (PARTITION BY g, qq ORDER BY s DESC, id ASC) AS rn
-           |  FROM base),
-           |pq AS (SELECT g, qq,
-           |    min(CASE WHEN hit = 1 THEN rn END) AS frst
-           |  FROM r GROUP BY 1, 2)
-           |SELECT g AS event_type, CAST(count(*) AS BIGINT) AS n_queries,
-           |  CAST(sum(CASE WHEN frst IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-           |  ${pround("CAST(CAST(sum(CAST(CASE WHEN frst IS NOT NULL THEN " + pround("1.0 / CAST(frst AS DOUBLE)", 6) + " ELSE 0.0 END AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS mrr
-           |FROM pq GROUP BY 1""".stripMargin,
-
-      // the q30 marker chain and q57 trigram chain as two of three
-      // raters beside the stored tag; cubic Fleiss rationals in
-      // HUGEINT mirror the engine's DECIMAL(38,0)
-      "q308_fleiss_kappa" -> {
-        val langs = TextFns.langTrigramProfiles.keys.toSeq.sorted
-        def profile(l: String) =
-          TextFns.langTrigramProfiles(l).map(g => "'" + g + "'").mkString("[", ", ", "]")
-        val scoreCols = langs.map(l =>
-          s"len(list_filter(grams, g -> list_contains(${profile(l)}, g))) AS s_$l").mkString(",\n  ")
-        val caseExpr = langs.zipWithIndex.map { case (l, i) =>
-          val laterGe = langs.drop(i + 1).map(o => s"s_$l >= s_$o")
-          val conds = (laterGe :+ s"s_$l > 0").mkString(" AND ")
-          s"WHEN $conds THEN '$l'"
-        }.mkString("\n    ")
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS token FROM documents),
-           |mk(lang, w) AS (VALUES $markerValues),
-           |msc AS (
-           |  SELECT t.doc_id, mk.lang, count(*) AS sc
-           |  FROM toks t JOIN mk ON t.token = mk.w GROUP BY t.doc_id, mk.lang),
-           |best AS (
-           |  SELECT doc_id, lang FROM msc
-           |  QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sc DESC, lang ASC) = 1),
-           |gr AS (
-           |  SELECT doc_id,
-           |    list_transform(range(1, len(' ' || lower(text) || ' ') - 1),
-           |      i -> substr(' ' || lower(text) || ' ', i, 3)) AS grams
-           |  FROM documents),
-           |sc2 AS (SELECT doc_id, $scoreCols FROM gr),
-           |pred AS (
-           |  SELECT d.source, d.doc_id, d.lang AS r1,
-           |    COALESCE(b.lang, 'und') AS r2,
-           |    CASE $caseExpr ELSE 'und' END AS r3
-           |  FROM documents d
-           |  LEFT JOIN best b ON d.doc_id = b.doc_id
-           |  JOIN sc2 ON sc2.doc_id = d.doc_id
-           |  WHERE d.source IS NOT NULL AND d.lang IS NOT NULL),
-           |cells AS (
-           |  SELECT source AS g, doc_id AS i, unnest([r1, r2, r3]) AS r
-           |  FROM pred),
-           |cnt AS (SELECT g, i, r, CAST(count(*) AS BIGINT) AS c
-           |  FROM cells GROUP BY 1, 2, 3),
-           |per AS (SELECT g, CAST(sum(c) // 3 AS BIGINT) AS n_items,
-           |    CAST(sum(CAST(c AS HUGEINT) * c) AS HUGEINT) AS ss
-           |  FROM cnt GROUP BY 1),
-           |tc AS (SELECT g, CAST(sum(CAST(t AS HUGEINT) * t) AS HUGEINT) AS t2
-           |  FROM (SELECT g, r, CAST(sum(c) AS BIGINT) AS t
-           |        FROM cnt GROUP BY 1, 2) GROUP BY 1),
-           |f AS (
-           |  SELECT per.g, n_items,
-           |    (ss - CAST(n_items AS HUGEINT) * 3)
-           |      * (CAST(n_items AS HUGEINT) * 3) * (CAST(n_items AS HUGEINT) * 3)
-           |      - (CAST(n_items AS HUGEINT) * 3) * 2 * t2 AS num,
-           |    (CAST(n_items AS HUGEINT) * 3) * 2
-           |      * ((CAST(n_items AS HUGEINT) * 3) * (CAST(n_items AS HUGEINT) * 3) - t2) AS den
-           |  FROM per JOIN tc ON per.g = tc.g)
-           |SELECT g AS source, n_items, CAST(3 AS BIGINT) AS k_raters,
-           |  ${pround("CASE WHEN den = 0 THEN 0.0 ELSE CAST(num AS DOUBLE) / CAST(den AS DOUBLE) END", 6)} AS kappa,
-           |  CASE WHEN den = 0 THEN 'degenerate'
-           |    WHEN 5 * num <= 0 THEN 'poor'
-           |    WHEN 5 * num <= 1 * den THEN 'slight'
-           |    WHEN 5 * num <= 2 * den THEN 'fair'
-           |    WHEN 5 * num <= 3 * den THEN 'moderate'
-           |    WHEN 5 * num <= 4 * den THEN 'substantial'
-           |    ELSE 'almost perfect' END AS strength
-           |FROM f""".stripMargin
-      },
-
-      // the kruskalWallis micro-unit split over 7 weekday groups;
-      // HUGEINT // mirrors the engine's DECIMAL floor division
-      "q309_weekday_seasonality" ->
-        s"""WITH daily AS (
-           |  SELECT event_type AS k,
-           |    date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-           |    CAST(count(*) AS BIGINT) AS c
-           |  FROM events GROUP BY 1, 2),
-           |perw AS (
-           |  SELECT k, ((day % 7) + 7) % 7 AS w,
-           |    CAST(count(*) AS BIGINT) AS mw,
-           |    CAST(sum(c) AS HUGEINT) AS sw
-           |  FROM daily GROUP BY 1, 2),
-           |qs AS (
-           |  SELECT k, mw, (sw * sw) % mw AS rem, (sw * sw) // mw AS qq
-           |  FROM perw),
-           |t6 AS (
-           |  SELECT k,
-           |    CAST(sum(qq * 1000000 + (rem * 1000000) // mw) AS HUGEINT)
-           |      AS t6u,
-           |    CAST(count(*) AS BIGINT) AS nw
-           |  FROM qs GROUP BY 1),
-           |tot AS (
-           |  SELECT k, CAST(count(*) AS BIGINT) AS n_days,
-           |    CAST(sum(c) AS HUGEINT) AS s,
-           |    CAST(sum(CAST(c AS HUGEINT) * c) AS HUGEINT) AS q2
-           |  FROM daily GROUP BY 1),
-           |j AS (
-           |  SELECT tot.k, n_days, s, t6u, nw,
-           |    CAST(n_days AS HUGEINT) * q2 - s * s AS d,
-           |    CAST(n_days AS HUGEINT) * t6u - s * s * 1000000 AS numlow
-           |  FROM tot JOIN t6 ON tot.k = t6.k)
-           |SELECT k AS event_type, n_days,
-           |  ${pround("CASE WHEN d = 0 THEN 0.0 ELSE (CAST(n_days AS DOUBLE) * (CAST(t6u AS DOUBLE) / 1000000.0) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / CAST(d AS DOUBLE) END", 6)} AS eta2,
-           |  CASE WHEN d = 0 THEN false
-           |    WHEN 5 * numlow >= d * 1000000 THEN true
-           |    WHEN 5 * (numlow + CAST(nw AS HUGEINT) * n_days)
-           |      < d * 1000000 THEN false
-           |    ELSE error('borderline beyond exact resolution')
-           |  END AS seasonal
-           |FROM j""".stripMargin,
-
-      // day±lag self equi-joins — missing days form no pair; both
-      // error sums BIGINT, one closing double
-      "q310_seasonal_naive" ->
-        s"""WITH daily AS (
-           |  SELECT event_type AS k,
-           |    date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-           |    CAST(count(*) AS BIGINT) AS c
-           |  FROM events GROUP BY 1, 2),
-           |l1 AS (
-           |  SELECT a.k, CAST(count(*) AS BIGINT) AS n_pairs1,
-           |    CAST(sum(abs(a.c - b.c)) AS BIGINT) AS sae1
-           |  FROM daily a JOIN daily b ON a.k = b.k AND a.day = b.day + 1
-           |  GROUP BY 1),
-           |l7 AS (
-           |  SELECT a.k, CAST(count(*) AS BIGINT) AS n_pairs7,
-           |    CAST(sum(abs(a.c - b.c)) AS BIGINT) AS sae7
-           |  FROM daily a JOIN daily b ON a.k = b.k AND a.day = b.day + 7
-           |  GROUP BY 1),
-           |n AS (SELECT k, CAST(count(*) AS BIGINT) AS n_days
-           |  FROM daily GROUP BY 1),
-           |j AS (
-           |  SELECT n.k, n_days,
-           |    COALESCE(n_pairs1, 0) AS n_pairs1, COALESCE(sae1, 0) AS sae1,
-           |    COALESCE(n_pairs7, 0) AS n_pairs7, COALESCE(sae7, 0) AS sae7
-           |  FROM n LEFT JOIN l1 ON n.k = l1.k LEFT JOIN l7 ON n.k = l7.k)
-           |SELECT k AS event_type, n_days, n_pairs1, sae1, n_pairs7, sae7,
-           |  ${pround("CASE WHEN n_pairs1 = 0 OR n_pairs7 = 0 OR sae1 = 0 THEN NULL ELSE (CAST(sae7 AS DOUBLE) / CAST(n_pairs7 AS DOUBLE)) / (CAST(sae1 AS DOUBLE) / CAST(n_pairs1 AS DOUBLE)) END", 6)} AS ratio
-           |FROM j""".stripMargin,
-
-      // cent-exact revenue totals, (total desc, key asc) top-50 per
-      // (flag, era), then pure set arithmetic — no doubles
-      "q311_topk_drift" ->
-        """WITH perkey AS (
-          |  SELECT l_returnflag AS g,
-          |    CASE WHEN year(l_shipdate) >= 1995 THEN 1 ELSE 0 END AS arm,
-          |    l_partkey AS key,
-          |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-          |      AS DECIMAL(38,2)) AS tot
-          |  FROM lineitem GROUP BY 1, 2, 3),
-          |top AS (
-          |  SELECT g, arm, key FROM perkey
-          |  QUALIFY row_number() OVER (PARTITION BY g, arm
-          |    ORDER BY tot DESC, key ASC) <= 50),
-          |sizes AS (
-          |  SELECT g,
-          |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS n_top_a,
-          |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS n_top_b
-          |  FROM top GROUP BY 1),
-          |com AS (
-          |  SELECT a.g, CAST(count(*) AS BIGINT) AS n_common
-          |  FROM (SELECT g, key FROM top WHERE arm = 0) a
-          |  JOIN (SELECT g, key FROM top WHERE arm = 1) b
-          |    ON a.g = b.g AND a.key = b.key
-          |  GROUP BY 1)
-          |SELECT s.g AS l_returnflag, n_top_a, n_top_b,
-          |  COALESCE(n_common, 0) AS n_common,
-          |  CAST(COALESCE(n_common, 0) * 1000000
-          |    // (n_top_a + n_top_b - COALESCE(n_common, 0)) AS BIGINT)
-          |    AS jaccard_ppm,
-          |  n_top_b - COALESCE(n_common, 0) AS n_new
-          |FROM sizes s LEFT JOIN com ON s.g = com.g
-          |WHERE n_top_a + n_top_b > 0""".stripMargin,
-
-      // discordant cells only; 10^6-scaled HUGEINT cross-mult
-      "q312_mcnemar" ->
-        s"""WITH g AS (
-           |  SELECT l_returnflag,
-           |    CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN l_tax >= 0.05 THEN 1 ELSE 0 END AS b
-           |  FROM lineitem),
-           |agg AS (
-           |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS b01,
-           |    CAST(sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS b10
-           |  FROM g GROUP BY 1)
-           |SELECT l_returnflag, n, b01, b10,
-           |  ${pround("CASE WHEN b01 + b10 = 0 THEN 0.0 ELSE CAST(b01 - b10 AS DOUBLE) * CAST(b01 - b10 AS DOUBLE) / CAST(b01 + b10 AS DOUBLE) END", 6)} AS chi2,
-           |  CASE WHEN b01 + b10 = 0 THEN false
-           |    ELSE 1000000 * CAST(b01 - b10 AS HUGEINT) * (b01 - b10)
-           |      > 3841459 * CAST(b01 + b10 AS HUGEINT) END AS significant
-           |FROM agg""".stripMargin,
-
-      // binary data keeps Q's terms integral: T_c sums and row-sum
-      // squares in HUGEINT, chi2_2 critical value x10^6
-      "q313_cochran_q" ->
-        s"""WITH g AS (
-           |  SELECT source,
-           |    CASE WHEN n_chars > 200 THEN 1 ELSE 0 END AS t1,
-           |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t2,
-           |    CASE WHEN len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) > 40 THEN 1 ELSE 0 END AS t3
-           |  FROM documents WHERE source IS NOT NULL),
-           |agg AS (
-           |  SELECT source, CAST(count(*) AS BIGINT) AS n_items,
-           |    CAST(sum(t1) AS HUGEINT) AS ta,
-           |    CAST(sum(t2) AS HUGEINT) AS tb,
-           |    CAST(sum(t3) AS HUGEINT) AS tc,
-           |    CAST(sum(t1 + t2 + t3) AS HUGEINT) AS sr,
-           |    CAST(sum(CAST(t1 + t2 + t3 AS HUGEINT) * (t1 + t2 + t3))
-           |      AS HUGEINT) AS sr2
-           |  FROM g GROUP BY 1),
-           |f AS (
-           |  SELECT source, n_items,
-           |    3 * (ta * ta + tb * tb + tc * tc)
-           |      - (ta + tb + tc) * (ta + tb + tc) AS num,
-           |    3 * sr - sr2 AS den
-           |  FROM agg)
-           |SELECT source, n_items, CAST(3 AS BIGINT) AS k_treatments,
-           |  ${pround("CASE WHEN den = 0 THEN 0.0 ELSE 2.0 * CAST(num AS DOUBLE) / CAST(den AS DOUBLE) END", 6)} AS q,
-           |  CASE WHEN den = 0 THEN false
-           |    ELSE 1000000 * CAST(2 AS HUGEINT) * num
-           |      > 5991465 * CAST(den AS HUGEINT) END AS significant
-           |FROM f""".stripMargin,
-
-      // bucket weights = the cent value itself; N*A^2 vs K(N-K)B in
-      // HUGEINT, 3.841459 x10^6
-      "q314_cochran_armitage" ->
-        s"""WITH per AS (
-           |  SELECT l_linestatus AS g,
-           |    CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS w,
-           |    CAST(count(*) AS BIGINT) AS nb,
-           |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS kb
-           |  FROM lineitem GROUP BY 1, 2),
-           |agg AS (
-           |  SELECT g, CAST(sum(nb) AS BIGINT) AS n,
-           |    CAST(sum(kb) AS BIGINT) AS k_succ,
-           |    CAST(sum(CAST(w AS HUGEINT) * kb) AS HUGEINT) AS swk,
-           |    CAST(sum(CAST(w AS HUGEINT) * nb) AS HUGEINT) AS swn,
-           |    CAST(sum(CAST(w AS HUGEINT) * w * nb) AS HUGEINT) AS sw2n
-           |  FROM per GROUP BY 1),
-           |f AS (
-           |  SELECT g, n, k_succ,
-           |    CAST(n AS HUGEINT) * swk - CAST(k_succ AS HUGEINT) * swn AS a2,
-           |    CAST(n AS HUGEINT) * sw2n - swn * swn AS b2,
-           |    CAST(k_succ AS HUGEINT) * (n - k_succ) AS kk
-           |  FROM agg)
-           |SELECT g AS l_linestatus, n, k_succ,
-           |  ${pround("CASE WHEN kk = 0 OR b2 = 0 THEN 0.0 ELSE CAST(n AS DOUBLE) * CAST(a2 AS DOUBLE) * CAST(a2 AS DOUBLE) / (CAST(kk AS DOUBLE) * CAST(b2 AS DOUBLE)) END", 6)} AS chi2,
-           |  CASE WHEN kk = 0 OR b2 = 0 THEN false
-           |    ELSE 1000000 * CAST(n AS HUGEINT) * a2 * a2
-           |      > 3841459 * kk * b2 END AS significant
-           |FROM f""".stripMargin,
-
-      // q148's session CTE chain, folded to per-state entropy with
-      // the labelEntropy per-term pround6 discipline
-      "q321_next_entropy" ->
-        s"""WITH g AS (
-           |  SELECT user_id, ts, event_id, event_type,
-           |    CASE WHEN lag(ts) OVER w IS NULL
-           |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 3600
-           |         THEN 1 ELSE 0 END AS ns
-           |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-           |s AS (
-           |  SELECT user_id, ts, event_id, event_type,
-           |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-           |                  ROWS UNBOUNDED PRECEDING) AS sid
-           |  FROM g),
-           |t2 AS (
-           |  SELECT event_type AS from_type,
-           |    lead(event_type) OVER (PARTITION BY user_id, sid
-           |                           ORDER BY ts, event_id) AS to_type
-           |  FROM s),
-           |p AS (
-           |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-           |  FROM t2 WHERE to_type IS NOT NULL GROUP BY 1, 2),
-           |tot AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS ft,
-           |    CAST(count(*) AS BIGINT) AS nt
-           |  FROM p GROUP BY 1)
-           |SELECT p.from_type, max(ft) AS n_out, max(nt) AS n_to_types,
-           |  CAST(CAST(sum(CAST(${pround("(CAST(n AS DOUBLE) / CAST(ft AS DOUBLE)) * log10(CAST(ft AS DOUBLE) / CAST(n AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS h_next
-           |FROM p JOIN tot USING (from_type) GROUP BY 1""".stripMargin,
-
-      // epoch-second gaps along one per-user order; B from one sqrt
-      // over the exact nQ−S²
-      "q322_burstiness" ->
-        s"""WITH e AS (
-           |  SELECT user_id AS k, CAST(floor(epoch(ts)) AS BIGINT) AS tus,
-           |    event_id
-           |  FROM events),
-           |gp AS (
-           |  SELECT k,
-           |    lead(tus) OVER (PARTITION BY k ORDER BY tus, event_id)
-           |      - tus AS gap
-           |  FROM e),
-           |agg AS (
-           |  SELECT k, CAST(count(*) AS BIGINT) AS n_events,
-           |    CAST(sum(CASE WHEN gap IS NOT NULL THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS n_gaps,
-           |    CAST(sum(COALESCE(gap, 0)) AS HUGEINT) AS s,
-           |    CAST(sum(CAST(COALESCE(gap, 0) AS HUGEINT)
-           |      * COALESCE(gap, 0)) AS HUGEINT) AS q
-           |  FROM gp GROUP BY 1)
-           |SELECT k AS user_id, n_events, n_gaps,
-           |  CASE WHEN n_gaps = 0 THEN NULL
-           |    ELSE CAST(s // n_gaps AS BIGINT) END AS mean_gap_s,
-           |  CASE WHEN n_gaps = 0 OR s = 0 THEN NULL
-           |    ELSE ${pround("(sqrt(CAST(n_gaps * q - s * s AS DOUBLE)) - CAST(s AS DOUBLE)) / (sqrt(CAST(n_gaps * q - s * s AS DOUBLE)) + CAST(s AS DOUBLE))", 6)} END AS b
-           |FROM agg""".stripMargin,
-
-      // gaps-and-islands with the SAME total order on both rankings;
-      // champion tie-break (len desc, action asc, island asc)
-      "q323_streaks" ->
-        """WITH e AS (
-          |  SELECT user_id AS k, ts, event_id, event_type AS a
-          |  FROM events),
-          |r AS (
-          |  SELECT k, a,
-          |    row_number() OVER (PARTITION BY k ORDER BY ts, event_id)
-          |      - row_number() OVER (PARTITION BY k, a ORDER BY ts, event_id)
-          |      AS isl
-          |  FROM e),
-          |runs AS (SELECT k, a, isl, CAST(count(*) AS BIGINT) AS len
-          |  FROM r GROUP BY 1, 2, 3),
-          |tot AS (SELECT k, CAST(sum(len) AS BIGINT) AS n_events
-          |  FROM runs GROUP BY 1),
-          |best AS (
-          |  SELECT k, a, len FROM runs
-          |  QUALIFY row_number() OVER (PARTITION BY k
-          |    ORDER BY len DESC, a ASC, isl ASC) = 1)
-          |SELECT best.k AS user_id, n_events, len AS max_streak,
-          |  a AS streak_action
-          |FROM best JOIN tot ON best.k = tot.k""".stripMargin,
-
-      // spectrum integers exact; chao1/coverage/simpson fixed-order
-      // doubles; shannon mirrors q321's per-term pround6 sum
-      "q324_vocab_richness" ->
-        s"""WITH toks AS (
-           |  SELECT source, unnest($toksSql) AS term
-           |  FROM documents WHERE source IS NOT NULL),
-           |c AS (SELECT source, term, CAST(count(*) AS BIGINT) AS c
-           |  FROM toks GROUP BY 1, 2),
-           |tot AS (
-           |  SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-           |    CAST(count(*) AS BIGINT) AS n_types,
-           |    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-           |    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-           |    sum(CAST(c AS HUGEINT) * (c - 1)) AS m2
-           |  FROM c GROUP BY 1),
-           |sh AS (
-           |  SELECT c.source,
-           |    CAST(sum(CAST(${pround("(CAST(c AS DOUBLE) / CAST(n_tokens AS DOUBLE)) * log10(CAST(n_tokens AS DOUBLE) / CAST(c AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS hs
-           |  FROM c JOIN tot USING (source) GROUP BY 1)
-           |SELECT tot.source, n_tokens, n_types, f1, f2,
-           |  ${pround("CAST(n_types AS DOUBLE) + CAST(f1 AS DOUBLE) * CAST(f1 - 1 AS DOUBLE) / CAST(2 * (f2 + 1) AS DOUBLE)", 6)} AS chao1,
-           |  ${pround("1.0 - CAST(f1 AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 6)} AS coverage,
-           |  CASE WHEN n_tokens >= 2
-           |    THEN ${pround("CAST(m2 AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens - 1 AS DOUBLE))", 6)} END AS simpson,
-           |  CAST(hs AS DOUBLE) AS shannon
-           |FROM tot JOIN sh ON tot.source = sh.source""".stripMargin,
-
-      // q42's exact decimal moment sums per arm, finished by ONE
-      // fixed-order double chain for d and the Hedges J correction
-      "q325_effect_size" -> {
-        val mt = "(CAST(st AS DOUBLE) / CAST(n_t AS DOUBLE))"
-        val mc = "(CAST(sc AS DOUBLE) / CAST(n_c AS DOUBLE))"
-        val ssT = "(CAST(qt AS DOUBLE)" +
-          " - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(n_t AS DOUBLE))"
-        val ssC = "(CAST(qc AS DOUBLE)" +
-          " - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE) / CAST(n_c AS DOUBLE))"
-        val s2p = s"(($ssT + $ssC) / CAST(n_t + n_c - 2 AS DOUBLE))"
-        val dRaw = s"(($mt - $mc) / sqrt($s2p))"
-        val jFac = "(1.0 - 3.0 / CAST(4 * (n_t + n_c) - 9 AS DOUBLE))"
-        s"""WITH g AS (
-           |  SELECT event_type, ((user_id % 2) + 2) % 2 AS arm, value
-           |  FROM events WHERE value IS NOT NULL),
-           |agg AS (
-           |  SELECT event_type,
-           |    CAST(sum(CASE WHEN arm <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
-           |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_c,
-           |    sum(CASE WHEN arm <> 0 THEN CAST(value AS DECIMAL(28,2))
-           |      ELSE CAST(0 AS DECIMAL(28,2)) END) AS st,
-           |    sum(CASE WHEN arm = 0 THEN CAST(value AS DECIMAL(28,2))
-           |      ELSE CAST(0 AS DECIMAL(28,2)) END) AS sc,
-           |    sum(CASE WHEN arm <> 0 THEN CAST(value * value AS DECIMAL(28,4))
-           |      ELSE CAST(0 AS DECIMAL(28,4)) END) AS qt,
-           |    sum(CASE WHEN arm = 0 THEN CAST(value * value AS DECIMAL(28,4))
-           |      ELSE CAST(0 AS DECIMAL(28,4)) END) AS qc
-           |  FROM g GROUP BY 1)
-           |SELECT event_type, n_t, n_c,
-           |  CASE WHEN n_t = 0 THEN NULL ELSE ${pround(mt, 6)} END AS mean_t,
-           |  CASE WHEN n_c = 0 THEN NULL ELSE ${pround(mc, 6)} END AS mean_c,
-           |  CASE WHEN n_t < 2 OR n_c < 2 OR $s2p <= 0.0 THEN NULL
-           |    ELSE ${pround(dRaw, 6)} END AS cohens_d,
-           |  CASE WHEN n_t < 2 OR n_c < 2 OR $s2p <= 0.0 THEN NULL
-           |    ELSE ${pround(s"$jFac * $dRaw", 6)} END AS hedges_g
-           |FROM agg""".stripMargin
-      },
-
-      // every ratio an exact floored micro-unit quotient over HUGEINT
-      // cross-products; zero denominators report NULL per ratio
-      "q326_risk_card" ->
-        """WITH g AS (
-          |  SELECT l_linestatus,
-          |    CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END AS e,
-          |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS o
-          |  FROM lineitem),
-          |agg AS (
-          |  SELECT l_linestatus, CAST(count(*) AS BIGINT) AS n,
-          |    CAST(sum(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n11,
-          |    CAST(sum(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n10,
-          |    CAST(sum(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n01,
-          |    CAST(sum(CASE WHEN e = 0 AND o = 0 THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n00
-          |  FROM g GROUP BY 1)
-          |SELECT l_linestatus, n, n11, n10, n01, n00,
-          |  CASE WHEN n10 = 0 OR n01 = 0 THEN NULL
-          |    ELSE CAST(1000000 * CAST(n11 AS HUGEINT) * n00
-          |      // (CAST(n10 AS HUGEINT) * n01) AS BIGINT) END AS or_ppm,
-          |  CASE WHEN n11 + n10 = 0 OR n01 = 0 THEN NULL
-          |    ELSE CAST(1000000 * CAST(n11 AS HUGEINT) * (n01 + n00)
-          |      // (CAST(n11 + n10 AS HUGEINT) * n01) AS BIGINT) END AS rr_ppm,
-          |  CASE WHEN n11 + n10 = 0 OR n01 + n00 = 0 THEN NULL
-          |    ELSE CAST(1000000 * CAST(n11 AS HUGEINT) // (n11 + n10)
-          |        AS BIGINT)
-          |      - CAST(1000000 * CAST(n01 AS HUGEINT) // (n01 + n00)
-          |        AS BIGINT) END AS risk_diff_ppm
-          |FROM agg""".stripMargin,
-
-      // q232's CTE chain kept one step further: S_prev = exp(csum −
-      // contrib), jump terms pround6'd into a DECIMAL(28,6) sum,
-      // rmst = tau − that sum (exact decimal subtraction)
-      "q327_rmst" ->
-        s"""WITH per AS (
-           |  SELECT date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
-           |    CASE WHEN max(o_orderdate) < DATE '1998-03-01' THEN 1 ELSE 0 END AS e
-           |  FROM orders GROUP BY o_custkey),
-           |g AS (
-           |  SELECT CAST(dur AS BIGINT) AS duration,
-           |    CAST(sum(e) AS BIGINT) AS n_events,
-           |    CAST(count(*) - sum(e) AS BIGINT) AS n_censored
-           |  FROM per GROUP BY 1),
-           |tot AS (SELECT CAST(sum(n_events + n_censored) AS BIGINT) AS n FROM g),
-           |r AS (
-           |  SELECT g.*, t.n - CAST(COALESCE(sum(n_events + n_censored) OVER (
-           |    ORDER BY duration ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-           |    0) AS BIGINT) AS n_risk
-           |  FROM g, tot t),
-           |c AS (
-           |  SELECT *,
-           |    CASE WHEN n_risk = n_events THEN CAST(0 AS DECIMAL(18,6))
-           |      ELSE CAST(floor(ln(CAST(n_risk - n_events AS DOUBLE) /
-           |        CAST(n_risk AS DOUBLE)) * 1000000 + 0.5) / 1000000
-           |        AS DECIMAL(18,6)) END AS contrib,
-           |    CASE WHEN n_risk = n_events THEN 1 ELSE 0 END AS z
-           |  FROM r),
-           |f AS (
-           |  SELECT duration, n_events, n_censored, contrib, z,
-           |    sum(contrib) OVER (ORDER BY duration) AS csum,
-           |    max(z) OVER (ORDER BY duration) AS zany
-           |  FROM c),
-           |s AS (
-           |  SELECT duration, n_events, n_censored,
-           |    CASE WHEN zany = 1 AND z = 0 THEN 0.0
-           |      ELSE floor(exp(CAST(csum - contrib AS DOUBLE)) * 1000000 + 0.5)
-           |        / 1000000 END AS s_prev,
-           |    CASE WHEN zany = 1 THEN 0.0
-           |      ELSE floor(exp(CAST(csum AS DOUBLE)) * 1000000 + 0.5)
-           |        / 1000000 END AS s_cur
-           |  FROM f)
-           |SELECT CAST(1000 AS BIGINT) AS tau,
-           |  CAST(sum(n_events + n_censored) AS BIGINT) AS n_obs,
-           |  CAST(sum(n_events) AS BIGINT) AS n_events,
-           |  CAST(CAST(1000 AS DECIMAL(28,6)) - sum(CASE WHEN duration < 1000
-           |    THEN CAST(floor((s_prev - s_cur)
-           |      * CAST(1000 - duration AS DOUBLE) * 1000000 + 0.5) / 1000000
-           |      AS DECIMAL(28,6))
-           |    ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) AS rmst
-           |FROM s""".stripMargin,
-
-      // doubled midranks keep every Friedman term integral; the /4
-      // cancels in the tie-corrected ratio, significance vs chi2_2 x10^6
-      "q328_friedman" ->
-        s"""WITH piv AS (
-           |  SELECT l_orderkey,
-           |    max(CASE WHEN l_linenumber = 1 THEN l_quantity END) AS t1,
-           |    max(CASE WHEN l_linenumber = 2 THEN l_quantity END) AS t2,
-           |    max(CASE WHEN l_linenumber = 3 THEN l_quantity END) AS t3
-           |  FROM lineitem GROUP BY 1),
-           |b AS (
-           |  SELECT ((l_orderkey % 4) + 4) % 4 AS slice,
-           |    (CASE WHEN t1 < t1 THEN 2 ELSE 0 END + CASE WHEN t1 = t1 THEN 1 ELSE 0 END
-           |     + CASE WHEN t2 < t1 THEN 2 ELSE 0 END + CASE WHEN t2 = t1 THEN 1 ELSE 0 END
-           |     + CASE WHEN t3 < t1 THEN 2 ELSE 0 END + CASE WHEN t3 = t1 THEN 1 ELSE 0 END
-           |     + 1) AS r0,
-           |    (CASE WHEN t1 < t2 THEN 2 ELSE 0 END + CASE WHEN t1 = t2 THEN 1 ELSE 0 END
-           |     + CASE WHEN t2 < t2 THEN 2 ELSE 0 END + CASE WHEN t2 = t2 THEN 1 ELSE 0 END
-           |     + CASE WHEN t3 < t2 THEN 2 ELSE 0 END + CASE WHEN t3 = t2 THEN 1 ELSE 0 END
-           |     + 1) AS r1,
-           |    (CASE WHEN t1 < t3 THEN 2 ELSE 0 END + CASE WHEN t1 = t3 THEN 1 ELSE 0 END
-           |     + CASE WHEN t2 < t3 THEN 2 ELSE 0 END + CASE WHEN t2 = t3 THEN 1 ELSE 0 END
-           |     + CASE WHEN t3 < t3 THEN 2 ELSE 0 END + CASE WHEN t3 = t3 THEN 1 ELSE 0 END
-           |     + 1) AS r2
-           |  FROM piv
-           |  WHERE t1 IS NOT NULL AND t2 IS NOT NULL AND t3 IS NOT NULL),
-           |agg AS (
-           |  SELECT slice, CAST(count(*) AS BIGINT) AS n_blocks,
-           |    CAST(sum(CAST(r0 AS HUGEINT) * r0 + CAST(r1 AS HUGEINT) * r1
-           |      + CAST(r2 AS HUGEINT) * r2) AS HUGEINT) AS sr2,
-           |    CAST(sum(r0) AS HUGEINT) AS s0,
-           |    CAST(sum(r1) AS HUGEINT) AS s1,
-           |    CAST(sum(r2) AS HUGEINT) AS s2
-           |  FROM b GROUP BY 1),
-           |fin AS (
-           |  SELECT slice, n_blocks,
-           |    (s0 * s0 + s1 * s1 + s2 * s2
-           |      - CAST(n_blocks AS HUGEINT) * n_blocks * 48) AS num,
-           |    (sr2 - CAST(n_blocks AS HUGEINT) * 48) AS den
-           |  FROM agg)
-           |SELECT slice, n_blocks, CAST(3 AS BIGINT) AS k_treatments,
-           |  ${pround("CASE WHEN den = 0 THEN 0.0 ELSE 2.0 * CAST(num AS DOUBLE) / CAST(den AS DOUBLE) END", 6)} AS chi2,
-           |  CASE WHEN den = 0 THEN false
-           |    ELSE 1000000 * 2 * num > 5991465 * den END AS significant
-           |FROM fin""".stripMargin,
-
-      // q157's candidate-edge chain; hub-capped middles, wedge pairs
-      // anti-joined against existing edges, per-middle 1/log10(deg)
-      // pround6 into a DECIMAL sum
-      "q329_link_prediction" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |e AS (
-           |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |sym AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-           |deg AS (SELECT a AS z, CAST(count(*) AS BIGINT) AS deg_z
-           |  FROM sym GROUP BY 1),
-           |kept AS (SELECT z, deg_z FROM deg WHERE deg_z <= 64),
-           |adj AS (SELECT sym.a AS z, sym.b AS u, deg_z
-           |  FROM sym JOIN kept ON sym.a = kept.z),
-           |wd AS (
-           |  SELECT x.z, x.deg_z, x.u, y.u AS w
-           |  FROM adj x JOIN adj y ON x.z = y.z WHERE x.u < y.u),
-           |nc AS (
-           |  SELECT u, w, deg_z FROM wd
-           |  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = wd.u AND e.b = wd.w))
-           |SELECT u AS id_a, w AS id_b,
-           |  CAST(count(*) AS BIGINT) AS common_neighbors,
-           |  CAST(CAST(sum(CAST(${pround("1.0 / log10(CAST(deg_z AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS aa_score
-           |FROM nc GROUP BY 1, 2""".stripMargin,
-
-      // row-local regexp counts pooled per source; both scores one
-      // fixed-order double over exact BIGINTs, constants CAST AS DOUBLE
-      "q330_readability" ->
-        s"""WITH c AS (
-           |  SELECT source,
-           |    CAST(COALESCE(len($toksSql), 0) AS BIGINT) AS w,
-           |    CAST(COALESCE(len(regexp_extract_all(text, '[.!?]+')), 0)
-           |      AS BIGINT) AS s,
-           |    CAST(COALESCE(len(regexp_extract_all(lower(text),
-           |      '[aeiouy]+')), 0) AS BIGINT) AS y
-           |  FROM documents WHERE source IS NOT NULL),
-           |agg AS (
-           |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(sum(w) AS BIGINT) AS n_words,
-           |    CAST(sum(s) AS BIGINT) AS n_sentences,
-           |    CAST(sum(y) AS BIGINT) AS n_syllables
-           |  FROM c GROUP BY 1)
-           |SELECT source, n_docs, n_words, n_sentences, n_syllables,
-           |  CASE WHEN n_sentences > 0 AND n_words > 0
-           |    THEN ${pround("CAST(206.835 AS DOUBLE) - CAST(1.015 AS DOUBLE) * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) - CAST(84.6 AS DOUBLE) * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))", 6)}
-           |    END AS flesch,
-           |  CASE WHEN n_sentences > 0 AND n_words > 0
-           |    THEN ${pround("CAST(0.39 AS DOUBLE) * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) + CAST(11.8 AS DOUBLE) * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)) - CAST(15.59 AS DOUBLE)", 6)}
-           |    END AS fk_grade
-           |FROM agg""".stripMargin,
-
-      // per-customer revenue exact DECIMAL; per-entity Theil/MLD terms
-      // pround6 into DECIMAL(18,6) sums (the labelEntropy discipline)
-      "q332_theil_index" ->
-        s"""WITH per AS (
-           |  SELECT c_mktsegment AS g,
-           |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-           |  FROM orders JOIN customer ON o_custkey = c_custkey
-           |  GROUP BY o_custkey, c_mktsegment),
-           |kept AS (SELECT g, x FROM per WHERE g IS NOT NULL AND x > 0),
-           |tot AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS xx
-           |  FROM kept GROUP BY 1)
-           |SELECT g AS c_mktsegment, CAST(max(n) AS BIGINT) AS n,
-           |  CAST(CAST(sum(CAST(${pround("(CAST(x AS DOUBLE) / CAST(xx AS DOUBLE)) * ln(CAST(n AS DOUBLE) * CAST(x AS DOUBLE) / CAST(xx AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS theil,
-           |  CAST(CAST(sum(CAST(${pround("ln(CAST(xx AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(x AS DOUBLE))) / CAST(n AS DOUBLE)", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS mld
-           |FROM kept JOIN tot USING (g) GROUP BY 1""".stripMargin,
-
-      // per-bin sqrt(p*q) terms pround6 into a DECIMAL sum; 1-BC
-      // clamped at 0 before the final sqrt (both engines mirror)
-      "q333_hellinger" ->
-        s"""WITH g AS (
-           |  SELECT event_type,
-           |    CASE WHEN ((user_id % 2) + 2) % 2 <> 0 THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN value > 0
-           |      THEN CAST(length(bin(CAST(floor(value) AS BIGINT))) - 1
-           |        AS BIGINT)
-           |      ELSE -1 END AS b
-           |  FROM events),
-           |cells AS (
-           |  SELECT event_type, b,
-           |    CAST(sum(CASE WHEN a = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-           |    CAST(sum(CASE WHEN a = 0 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-           |  FROM g GROUP BY 1, 2),
-           |tot AS (
-           |  SELECT event_type, CAST(sum(ca) AS BIGINT) AS n_a,
-           |    CAST(sum(cb) AS BIGINT) AS n_b
-           |  FROM cells GROUP BY 1),
-           |agg AS (
-           |  SELECT cells.event_type, max(n_a) AS na, max(n_b) AS nb,
-           |    CAST(sum(CAST(${pround("sqrt((CAST(ca AS DOUBLE) / CAST(n_a AS DOUBLE)) * (CAST(cb AS DOUBLE) / CAST(n_b AS DOUBLE)))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS bcs
-           |  FROM cells JOIN tot USING (event_type) GROUP BY 1)
-           |SELECT event_type, CAST(na AS BIGINT) AS n_a,
-           |  CAST(nb AS BIGINT) AS n_b,
-           |  CASE WHEN na > 0 AND nb > 0 THEN CAST(bcs AS DOUBLE) END AS bc,
-           |  CASE WHEN na > 0 AND nb > 0
-           |    THEN ${pround("sqrt(greatest(0.0, 1.0 - CAST(bcs AS DOUBLE)))", 6)}
-           |    END AS hellinger
-           |FROM agg""".stripMargin,
-
-      // four entropies as pround6 DECIMAL sums over one contingency;
-      // h/c/v fixed-order doubles with the sklearn edge conventions
-      "q334_v_measure" -> {
-        val hX = "CASE WHEN CAST(hl AS DOUBLE) = 0.0 THEN 1.0" +
-          " ELSE 1.0 - CAST(hlc AS DOUBLE) / CAST(hl AS DOUBLE) END"
-        val cX = "CASE WHEN CAST(hc AS DOUBLE) = 0.0 THEN 1.0" +
-          " ELSE 1.0 - CAST(hcl AS DOUBLE) / CAST(hc AS DOUBLE) END"
-        def entSql(num: String, den: String) =
-          s"CAST(${pround(s"(CAST($num AS DOUBLE) / CAST(tn AS DOUBLE)) * log10(CAST($den AS DOUBLE) / CAST($num AS DOUBLE))", 6)} AS DECIMAL(18,6))"
-        s"""WITH cells AS (
-           |  SELECT CASE WHEN n_chars > 250 THEN 'long' ELSE 'short' END
-           |      AS band,
-           |    source AS c, lang AS l, CAST(count(*) AS BIGINT) AS n
-           |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
-           |  GROUP BY 1, 2, 3),
-           |wt AS (
-           |  SELECT band, c, l, n,
-           |    CAST(sum(n) OVER (PARTITION BY band) AS BIGINT) AS tn,
-           |    CAST(sum(n) OVER (PARTITION BY band, c) AS BIGINT) AS ac,
-           |    CAST(sum(n) OVER (PARTITION BY band, l) AS BIGINT) AS bl
-           |  FROM cells),
-           |cond AS (
-           |  SELECT band, CAST(max(tn) AS BIGINT) AS n,
-           |    CAST(sum(${entSql("n", "ac")}) AS DECIMAL(38,6)) AS hlc,
-           |    CAST(sum(${entSql("n", "bl")}) AS DECIMAL(38,6)) AS hcl
-           |  FROM wt GROUP BY 1),
-           |hcx AS (
-           |  SELECT band,
-           |    CAST(sum(${entSql("ac", "tn")}) AS DECIMAL(38,6)) AS hc
-           |  FROM (SELECT DISTINCT band, c, ac, tn FROM wt) GROUP BY 1),
-           |hlx AS (
-           |  SELECT band,
-           |    CAST(sum(${entSql("bl", "tn")}) AS DECIMAL(38,6)) AS hl
-           |  FROM (SELECT DISTINCT band, l, bl, tn FROM wt) GROUP BY 1)
-           |SELECT band, n,
-           |  ${pround(hX, 6)} AS homogeneity,
-           |  ${pround(cX, 6)} AS completeness,
-           |  ${pround(s"CASE WHEN ($hX) + ($cX) = 0.0 THEN 0.0 ELSE 2.0 * ($hX) * ($cX) / (($hX) + ($cX)) END", 6)} AS v_measure
-           |FROM cond JOIN hcx USING (band) JOIN hlx USING (band)""".stripMargin
-      },
-
-      // SAME shortest-roundtrip constants as the engine (computed once
-      // in Scala); decision compares the raw LLR double
-      "q336_sprt" -> {
-        val c1 = math.log(0.35 / 0.25)
-        val c0 = math.log((1.0 - 0.35) / (1.0 - 0.25))
-        val up = math.log((1.0 - 0.2) / 0.05)
-        val lo = math.log(0.2 / (1.0 - 0.05))
-        val llr = s"(CAST(k AS DOUBLE) * ($c1) + CAST(n - k AS DOUBLE) * ($c0))"
-        s"""WITH g AS (
-           |  SELECT event_type,
-           |    CASE WHEN value > 100.0 THEN 1 ELSE 0 END AS hi
-           |  FROM events),
-           |agg AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(hi) AS BIGINT) AS k
-           |  FROM g GROUP BY 1)
-           |SELECT event_type, n, k, ${pround(llr, 6)} AS llr,
-           |  CASE WHEN $llr >= ($up) THEN 'accept_h1'
-           |    WHEN $llr <= ($lo) THEN 'accept_h0'
-           |    ELSE 'continue' END AS decision
-           |FROM agg""".stripMargin
-      },
-
-      // micro-unit E/V floors in HUGEINT; bracketed significance with
-      // the K-strata slack band (raises borderline — none at these SFs)
-      "q337_cmh" -> {
-        val eMu = "(CAST(a + b AS HUGEINT) * (a + c) * 1000000 // n)"
-        val vMu = "(CAST(a + b AS HUGEINT) * (n - a - b) * (a + c)" +
-          " * (n - a - c) * 1000000 // (CAST(n AS HUGEINT) * n * (n - 1)))"
-        s"""WITH g AS (
-           |  SELECT l_returnflag AS grp, l_linestatus AS st,
-           |    CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END AS e,
-           |    CASE WHEN l_tax >= 0.05 THEN 1 ELSE 0 END AS o
-           |  FROM lineitem),
-           |cells AS (
-           |  SELECT grp, st, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS a,
-           |    CAST(sum(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS b,
-           |    CAST(sum(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS c
-           |  FROM g GROUP BY 1, 2 HAVING count(*) >= 2),
-           |agg AS (
-           |  SELECT grp, CAST(sum(n) AS BIGINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS k_strata,
-           |    CAST(sum(CAST(a AS HUGEINT) * 1000000 - $eMu) AS HUGEINT)
-           |      AS dd,
-           |    CAST(sum($vMu) AS HUGEINT) AS vv
-           |  FROM cells GROUP BY 1)
-           |SELECT grp AS l_returnflag, n, k_strata,
-           |  CASE WHEN vv = 0 THEN 0.0
-           |    ELSE ${pround("CAST(dd AS DOUBLE) * CAST(dd AS DOUBLE) / (CAST(vv AS DOUBLE) * 1.0e6)", 6)} END AS chi2,
-           |  CASE WHEN vv = 0 THEN false
-           |    WHEN abs(dd) > k_strata AND (abs(dd) - k_strata)
-           |        * (abs(dd) - k_strata) > 3841459 * (vv + k_strata)
-           |      THEN true
-           |    WHEN (abs(dd) + k_strata) * (abs(dd) + k_strata)
-           |        <= 3841459 * vv THEN false
-           |    ELSE error('cmh oracle borderline') END AS significant
-           |FROM agg""".stripMargin
-      },
-
-      // daily series is <= 31 points/group: the pairwise S re-derives
-      // by a plain self-join; 18V stays integral, z continuity-corrected
-      "q338_mann_kendall" ->
-        s"""WITH d AS (
-           |  SELECT event_type AS g,
-           |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS x,
-           |    CAST(count(*) AS BIGINT) AS y
-           |  FROM events GROUP BY 1, 2),
-           |meta AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1),
-           |ties AS (
-           |  SELECT g, CAST(sum(CAST(t AS HUGEINT) * (t - 1) * (2 * t + 5))
-           |    AS HUGEINT) AS ty
-           |  FROM (SELECT g, y, CAST(count(*) AS BIGINT) AS t
-           |        FROM d GROUP BY 1, 2) GROUP BY 1),
-           |s AS (
-           |  SELECT a.g, CAST(sum(CASE WHEN a.y < b.y THEN 1 ELSE -1 END)
-           |    AS HUGEINT) AS s
-           |  FROM d a JOIN d b ON a.g = b.g AND a.x < b.x AND a.y <> b.y
-           |  GROUP BY 1),
-           |f AS (
-           |  SELECT meta.g, n, COALESCE(s.s, 0) AS s,
-           |    CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5) - ty AS v18
-           |  FROM meta JOIN ties USING (g) LEFT JOIN s ON meta.g = s.g)
-           |SELECT g AS event_type, n, CAST(s AS BIGINT) AS s_stat,
-           |  CASE WHEN v18 = 0 OR s = 0 THEN 0.0
-           |    ELSE ${pround("(CAST(s AS DOUBLE) - CAST(sign(CAST(s AS DOUBLE)) AS DOUBLE)) / sqrt(CAST(v18 AS DOUBLE) / 18.0)", 6)} END AS z,
-           |  CASE WHEN v18 = 0 OR s = 0 THEN false
-           |    ELSE 18000000 * (abs(s) - 1) * (abs(s) - 1)
-           |      > 3841459 * v18 END AS significant
-           |FROM f""".stripMargin,
-
-      // fully integral score test; rates/ratio exact floored
-      // micro-units over the fixed design exposures
-      "q339_rate_test" -> {
-        val e0 = 14L * 86400L; val e1 = 17L * 86400L
-        val dX = s"(CAST(k1 AS HUGEINT) * $e0 - CAST(k0 AS HUGEINT) * $e1)"
-        val vX = s"(CAST($e0 AS HUGEINT) * $e1 * (k0 + k1))"
-        s"""WITH g AS (
-           |  SELECT event_type,
-           |    CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00'
-           |      THEN 1 ELSE 0 END AS arm
-           |  FROM events),
-           |agg AS (
-           |  SELECT event_type,
-           |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS k0,
-           |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS k1
-           |  FROM g GROUP BY 1)
-           |SELECT event_type, k0, k1,
-           |  CAST(CAST(k0 AS HUGEINT) * 1000000 // $e0 AS BIGINT)
-           |    AS rate0_upm,
-           |  CAST(CAST(k1 AS HUGEINT) * 1000000 // $e1 AS BIGINT)
-           |    AS rate1_upm,
-           |  CASE WHEN k0 = 0 THEN NULL
-           |    ELSE CAST(CAST(k1 AS HUGEINT) * $e0 * 1000000
-           |      // (CAST(k0 AS HUGEINT) * $e1) AS BIGINT) END AS ratio_ppm,
-           |  CASE WHEN k0 + k1 = 0 THEN 0.0
-           |    ELSE ${pround(s"CAST($dX AS DOUBLE) * CAST($dX AS DOUBLE) / CAST($vX AS DOUBLE)", 6)} END AS chi2,
-           |  CASE WHEN k0 + k1 = 0 THEN false
-           |    ELSE 1000000 * $dX * $dX > 3841459 * $vX END AS significant
-           |FROM agg""".stripMargin
-      },
-
-      // q42 moment discipline per stratum; w_h pround6 -> DECIMAL sum,
-      // shares/counts half-up-rounded doubles of exact operands
-      "q340_neyman_allocation" -> {
-        val sdX = "sqrt(greatest(CAST(0.0 AS DOUBLE)," +
-          " CAST(q AS DOUBLE) / CAST(n_pop AS DOUBLE)" +
-          " - (CAST(s AS DOUBLE) / CAST(n_pop AS DOUBLE))" +
-          " * (CAST(s AS DOUBLE) / CAST(n_pop AS DOUBLE))))"
-        val share = "(CAST(w AS DOUBLE) / CAST(sw AS DOUBLE))"
-        s"""WITH per AS (
-           |  SELECT o_orderstatus, o_orderpriority,
-           |    CAST(count(*) AS BIGINT) AS n_pop,
-           |    sum(CAST(o_totalprice AS DECIMAL(28,2))) AS s,
-           |    sum(CAST(o_totalprice * o_totalprice AS DECIMAL(28,4))) AS q
-           |  FROM orders GROUP BY 1, 2),
-           |wt AS (
-           |  SELECT *, CAST(${pround(s"CAST(n_pop AS DOUBLE) * $sdX", 6)}
-           |    AS DECIMAL(18,6)) AS w
-           |  FROM per),
-           |tot AS (
-           |  SELECT o_orderstatus, CAST(sum(w) AS DECIMAL(38,6)) AS sw
-           |  FROM wt GROUP BY 1)
-           |SELECT wt.o_orderstatus, o_orderpriority, n_pop,
-           |  ${pround(sdX, 6)} AS sd,
-           |  CASE WHEN sw = 0 THEN NULL
-           |    ELSE CAST(floor($share * 1000000 + 0.5) AS BIGINT)
-           |    END AS alloc_ppm,
-           |  CASE WHEN sw = 0 THEN NULL
-           |    ELSE CAST(floor(CAST(1000 AS DOUBLE) * $share + 0.5)
-           |      AS BIGINT) END AS n_alloc
-           |FROM wt JOIN tot USING (o_orderstatus)""".stripMargin
-      },
-
-      // per-arm quantile_cont mirrors percentile (q136 parity); shift
-      // is the fixed-order raw difference, each output pround6
-      "q345_qq_shift" -> {
-        val qs = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
-        val perQ = qs.zipWithIndex.map { case (q, i) =>
-          s"""SELECT event_type, CAST($q AS DOUBLE) AS q, n_0, n_1,
-             |  ${pround(s"p0_$i", 6)} AS v0, ${pround(s"p1_$i", 6)} AS v1,
-             |  ${pround(s"p1_$i - p0_$i", 6)} AS shift
-             |FROM agg""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""WITH g AS (
-           |  SELECT event_type, ((user_id % 2) + 2) % 2 AS arm, value
-           |  FROM events WHERE value IS NOT NULL),
-           |agg AS (
-           |  SELECT event_type,
-           |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS n_0,
-           |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS n_1,
-           |    ${qs.zipWithIndex.map { case (q, i) =>
-                s"quantile_cont(CASE WHEN arm = 0 THEN value END, $q) AS p0_$i, " +
-                s"quantile_cont(CASE WHEN arm = 1 THEN value END, $q) AS p1_$i"
-              }.mkString(",\n|    ")}
-           |  FROM g GROUP BY 1)
-           |$perQ""".stripMargin
-      },
-
-      // q42 moment sums per pair; r one fixed-order double chain;
-      // listwise NULL deletion mirrored
-      "q346_pearson_matrix" -> {
-        val pc = Seq("l_quantity", "l_extendedprice", "l_discount")
-        def d(k: Int) = s"(CAST(n AS DOUBLE) * CAST(q$k AS DOUBLE)" +
-          s" - CAST(s$k AS DOUBLE) * CAST(s$k AS DOUBLE))"
-        val pairSelects = (for {
-          i <- pc.indices; j <- pc.indices if i < j
-        } yield {
-          val num = s"(CAST(n AS DOUBLE) * CAST(x${i}_$j AS DOUBLE)" +
-            s" - CAST(s$i AS DOUBLE) * CAST(s$j AS DOUBLE))"
-          s"""SELECT l_returnflag, '${pc(i)}' AS col_a, '${pc(j)}' AS col_b,
-             |  n, CASE WHEN mn$i = mx$i OR mn$j = mx$j THEN NULL
-             |    WHEN ${d(i)} <= 0.0 OR ${d(j)} <= 0.0 THEN NULL
-             |    ELSE ${pround(s"$num / sqrt(${d(i)} * ${d(j)})", 6)}
-             |    END AS r
-             |FROM agg""".stripMargin
-        }).mkString("\nUNION ALL\n")
-        s"""WITH sc AS (
-           |  SELECT l_returnflag,
-           |    ${pc.zipWithIndex.map { case (c, i) =>
-                s"CAST(CAST($c AS DECIMAL(18,2)) * 100 AS BIGINT) AS v$i"
-              }.mkString(",\n|    ")}
-           |  FROM lineitem),
-           |agg AS (
-           |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           |    ${pc.indices.map { i =>
-                s"sum(v$i) AS s$i, " +
-                s"sum(CAST(v$i AS HUGEINT) * v$i) AS q$i, " +
-                s"min(v$i) AS mn$i, max(v$i) AS mx$i"
-              }.mkString(",\n|    ")},
-           |    ${(for { i <- pc.indices; j <- pc.indices if i < j } yield
-                s"sum(CAST(v$i AS HUGEINT) * v$j) AS x${i}_$j")
-                .mkString(",\n|    ")}
-           |  FROM sc GROUP BY 1)
-           |$pairSelects""".stripMargin
-      },
-
-      // the q349 grid re-read: per-word cv over exact decimal sums,
-      // D = 1 − cv/sqrt(G−1) one fixed-order double
-      "q353_lexical_dispersion" -> {
-        // same clamped-radicand sigma as q349 (TfIdf.sigSql mirror)
-        val sig = "sqrt(greatest(CAST(0.0 AS DOUBLE)," +
-          " CAST(ng AS DOUBLE) * CAST(qf AS DOUBLE)" +
-          " - CAST(sf AS DOUBLE) * CAST(sf AS DOUBLE)))" +
-          " / CAST(ng AS DOUBLE)"
-        val mu = "(CAST(sf AS DOUBLE) / CAST(ng AS DOUBLE))"
-        s"""WITH cnt AS (
-           |  SELECT source AS g, unnest($toksSql) AS t
-           |  FROM documents WHERE source IS NOT NULL),
-           |c AS (SELECT g, t, CAST(count(*) AS BIGINT) AS c
-           |  FROM cnt GROUP BY 1, 2),
-           |gt AS (SELECT g, CAST(sum(c) AS BIGINT) AS gtot
-           |  FROM c GROUP BY 1),
-           |top AS (SELECT t FROM (
-           |    SELECT t, CAST(sum(c) AS BIGINT) AS tc FROM c GROUP BY 1)
-           |  ORDER BY tc DESC, t LIMIT 50),
-           |grid AS (
-           |  SELECT gt.g, gt.gtot, top.t, COALESCE(c.c, 0) AS c
-           |  FROM gt CROSS JOIN top
-           |  LEFT JOIN c ON c.g = gt.g AND c.t = top.t),
-           |f AS (
-           |  SELECT g, t, c,
-           |    CAST(${pround("CAST(c AS DOUBLE) / CAST(gtot AS DOUBLE)", 6)} AS DECIMAL(18,6)) AS f6
-           |  FROM grid),
-           |stats AS (
-           |  SELECT t AS term, CAST(count(*) AS BIGINT) AS ng,
-           |    CAST(sum(c) AS BIGINT) AS n_total,
-           |    CAST(sum(f6) AS DECIMAL(28,6)) AS sf,
-           |    CAST(sum(CAST(CAST(f6 AS DOUBLE) * CAST(f6 AS DOUBLE)
-           |      AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS qf
-           |  FROM f GROUP BY 1)
-           |SELECT term, ng AS n_groups, n_total,
-           |  CASE WHEN ng < 2 OR $mu <= 0.0 THEN NULL
-           |    ELSE ${pround(s"1.0 - (($sig) / ($mu)) / sqrt(CAST(ng - 1 AS DOUBLE))", 6)}
-           |    END AS d
-           |FROM stats""".stripMargin
-      },
-
-      // engine-neutral hour buckets; per-key totals from a <=24-row
-      // window; labelEntropy per-term pround6 discipline
-      "q354_hour_entropy" ->
-        s"""WITH h AS (
-           |  SELECT user_id,
-           |    ((CAST(floor(epoch(ts)) AS BIGINT) // 3600) % 24 + 24) % 24
-           |      AS hr
-           |  FROM events),
-           |c AS (SELECT user_id, hr, CAST(count(*) AS BIGINT) AS c
-           |  FROM h GROUP BY 1, 2),
-           |t2 AS (
-           |  SELECT user_id, hr, c,
-           |    CAST(sum(c) OVER (PARTITION BY user_id) AS BIGINT) AS n
-           |  FROM c)
-           |SELECT user_id, CAST(max(n) AS BIGINT) AS n_events,
-           |  CAST(count(*) AS BIGINT) AS n_hours,
-           |  CAST(CAST(sum(CAST(${pround("(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * log10(CAST(n AS DOUBLE) / CAST(c AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS h_hour
-           |FROM t2 GROUP BY 1""".stripMargin,
-
-      // per-stratum ad/n and bc/n micro-unit floors in HUGEINT; the
-      // closing ratio one exact floored ppm division
-      "q351_mh_odds_ratio" ->
-        s"""WITH g AS (
-           |  SELECT l_returnflag AS grp, l_linestatus AS st,
-           |    CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END AS e,
-           |    CASE WHEN l_tax >= 0.05 THEN 1 ELSE 0 END AS o
-           |  FROM lineitem),
-           |cells AS (
-           |  SELECT grp, st, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS a,
-           |    CAST(sum(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS b,
-           |    CAST(sum(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS c
-           |  FROM g GROUP BY 1, 2),
-           |agg AS (
-           |  SELECT grp, CAST(sum(n) AS BIGINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS k_strata,
-           |    CAST(sum(CAST(a AS HUGEINT) * (n - a - b - c) * 1000000
-           |      // n) AS HUGEINT) AS sn,
-           |    CAST(sum(CAST(b AS HUGEINT) * c * 1000000 // n)
-           |      AS HUGEINT) AS sd
-           |  FROM cells GROUP BY 1)
-           |SELECT grp AS l_returnflag, n, k_strata,
-           |  CASE WHEN sd = 0 THEN NULL
-           |    ELSE CAST(sn * 1000000 // sd AS BIGINT) END AS or_mh_ppm
-           |FROM agg""".stripMargin,
-
-      // identical rankings, identical suffix-sum constants (computed
-      // by the same Scala fold), per-item pround6 terms
-      "q352_rbo" -> {
-        val k = 50; val p = 0.9
-        val weights = Array.tabulate(k + 1)(d =>
-          if (d == 0) 0.0 else math.pow(p, d - 1) / d)
-        val suffix = (1 to k).map(m => (m, (m to k).map(weights).sum))
-        val sufValues = suffix.map { case (m, s) =>
-          s"($m, CAST($s AS DOUBLE))" }.mkString(", ")
-        s"""WITH scored AS (
-           |  SELECT l_linestatus AS g,
-           |    CASE WHEN year(l_shipdate) >= 1995 THEN 1 ELSE 0 END AS arm,
-           |    l_partkey AS i,
-           |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS sc
-           |  FROM lineitem GROUP BY 1, 2, 3),
-           |ranked AS (
-           |  SELECT g, arm, i,
-           |    row_number() OVER (PARTITION BY g, arm
-           |                       ORDER BY sc DESC, i) AS r
-           |  FROM scored QUALIFY r <= $k),
-           |counts AS (
-           |  SELECT g,
-           |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS n_a,
-           |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           |      AS n_b
-           |  FROM ranked GROUP BY 1),
-           |suf(m, sfx) AS (VALUES $sufValues),
-           |joint AS (
-           |  SELECT a.g, CAST(count(*) AS BIGINT) AS n_common,
-           |    CAST(sum(CAST(${pround("sfx", 6)} AS DECIMAL(18,6)))
-           |      AS DECIMAL(28,6)) AS ss
-           |  FROM ranked a JOIN ranked b
-           |    ON a.g = b.g AND a.i = b.i AND a.arm = 0 AND b.arm = 1
-           |  JOIN suf ON suf.m = greatest(a.r, b.r)
-           |  GROUP BY 1)
-           |SELECT counts.g AS l_linestatus, n_a, n_b,
-           |  COALESCE(n_common, 0) AS n_common,
-           |  CASE WHEN n_a > 0 AND n_b > 0
-           |    THEN ${pround(s"CAST(${1.0 - p} AS DOUBLE) * CAST(COALESCE(ss, 0) AS DOUBLE)", 6)}
-           |    END AS rbo
-           |FROM counts LEFT JOIN joint ON counts.g = joint.g""".stripMargin
-      },
-
-      // three raw r's and the partial in one fixed-order double chain
-      // over exact moment sums; pround6 only at output
-      "q348_partial_correlation" -> {
-        def d(kk: Int) = s"(CAST(n AS DOUBLE) * CAST(q$kk AS DOUBLE)" +
-          s" - CAST(s$kk AS DOUBLE) * CAST(s$kk AS DOUBLE))"
-        def r(i: Int, j: Int) =
-          s"((CAST(n AS DOUBLE) * CAST(x${i}_$j AS DOUBLE)" +
-            s" - CAST(s$i AS DOUBLE) * CAST(s$j AS DOUBLE))" +
-            s" / sqrt(${d(i)} * ${d(j)}))"
-        val den = s"((1.0 - ${r(0, 2)} * ${r(0, 2)})" +
-          s" * (1.0 - ${r(1, 2)} * ${r(1, 2)}))"
-        val defined = "(mn0 <> mx0 AND mn1 <> mx1 AND mn2 <> mx2" +
-          s" AND ${d(0)} > 0.0 AND ${d(1)} > 0.0 AND ${d(2)} > 0.0)"
-        val pc = Seq("l_extendedprice", "l_discount", "l_quantity")
-        s"""WITH sc AS (
-           |  SELECT l_returnflag,
-           |    ${pc.zipWithIndex.map { case (c, i) =>
-                s"CAST(CAST($c AS DECIMAL(18,2)) * 100 AS BIGINT) AS v$i"
-              }.mkString(",\n|    ")}
-           |  FROM lineitem),
-           |agg AS (
-           |  SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           |    ${pc.indices.map { i =>
-                s"sum(v$i) AS s$i, " +
-                s"sum(CAST(v$i AS HUGEINT) * v$i) AS q$i, " +
-                s"min(v$i) AS mn$i, max(v$i) AS mx$i"
-              }.mkString(",\n|    ")},
-           |    ${Seq((0, 1), (0, 2), (1, 2)).map { case (i, j) =>
-                s"sum(CAST(v$i AS HUGEINT) * v$j) AS x${i}_$j"
-              }.mkString(",\n|    ")}
-           |  FROM sc GROUP BY 1)
-           |SELECT l_returnflag, n,
-           |  ${pround(s"CASE WHEN $defined THEN ${r(0, 1)} END", 6)} AS r_xy,
-           |  ${pround(s"CASE WHEN $defined AND $den > 0.0 THEN (${r(0, 1)} - ${r(0, 2)} * ${r(1, 2)}) / sqrt($den) END", 6)} AS r_xy_z
-           |FROM agg""".stripMargin
-      },
-
-      // canonical pround6 frequency features; per-word mean/sigma over
-      // exact decimal sums; z pround6 so pair gaps are exact decimals
-      "q349_burrows_delta" -> {
-        // radicand clamped at 0 (evenly-dispersed word = exact-zero
-        // variance one ulp negative; DuckDB sqrt RAISES on it) —
-        // mirrors TfIdf.sigSql
-        val sig = "sqrt(greatest(CAST(0.0 AS DOUBLE)," +
-          " CAST(ng AS DOUBLE) * CAST(qf AS DOUBLE)" +
-          " - CAST(sf AS DOUBLE) * CAST(sf AS DOUBLE)))" +
-          " / CAST(ng AS DOUBLE)"
-        val mu = "(CAST(sf AS DOUBLE) / CAST(ng AS DOUBLE))"
-        s"""WITH cnt AS (
-           |  SELECT source AS g, unnest($toksSql) AS t
-           |  FROM documents WHERE source IS NOT NULL),
-           |c AS (SELECT g, t, CAST(count(*) AS BIGINT) AS c
-           |  FROM cnt GROUP BY 1, 2),
-           |gt AS (SELECT g, CAST(sum(c) AS BIGINT) AS gtot
-           |  FROM c GROUP BY 1),
-           |top AS (SELECT t FROM (
-           |    SELECT t, CAST(sum(c) AS BIGINT) AS tc FROM c GROUP BY 1)
-           |  ORDER BY tc DESC, t LIMIT 50),
-           |grid AS (
-           |  SELECT gt.g, gt.gtot, top.t, COALESCE(c.c, 0) AS c
-           |  FROM gt CROSS JOIN top
-           |  LEFT JOIN c ON c.g = gt.g AND c.t = top.t),
-           |f AS (
-           |  SELECT g, t, CAST(${pround("CAST(c AS DOUBLE) / CAST(gtot AS DOUBLE)", 6)} AS DECIMAL(18,6)) AS f6
-           |  FROM grid),
-           |stats AS (
-           |  SELECT t, CAST(count(*) AS BIGINT) AS ng,
-           |    CAST(sum(f6) AS DECIMAL(28,6)) AS sf,
-           |    CAST(sum(CAST(CAST(f6 AS DOUBLE) * CAST(f6 AS DOUBLE)
-           |      AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS qf
-           |  FROM f GROUP BY 1),
-           |z AS (
-           |  SELECT g, f.t,
-           |    CAST(${pround(s"CASE WHEN $sig <= 0.0 THEN 0.0 ELSE (CAST(f6 AS DOUBLE) - $mu) / ($sig) END", 6)} AS DECIMAL(18,6)) AS z
-           |  FROM f JOIN stats ON f.t = stats.t)
-           |SELECT a.g AS group_a, b.g AS group_b,
-           |  CAST(count(*) AS BIGINT) AS n_terms,
-           |  ${pround("CAST(CAST(sum(abs(a.z - b.z)) AS DECIMAL(28,6)) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS delta
-           |FROM z a JOIN z b ON a.t = b.t AND a.g < b.g
-           |GROUP BY 1, 2""".stripMargin
-      },
-
-      // the same 2x2 margin algebra; over-representation gate by exact
-      // HUGEINT cross-multiplication; rank on the RAW g2 double
-      "q350_keyness" -> {
-        def t(o: String, e: String) =
-          s"(CASE WHEN $o > 0 THEN CAST($o AS DOUBLE)" +
-            s" * ln(CAST($o AS DOUBLE) / ($e)) ELSE 0.0 END)"
-        val o12 = "(tt - c)"; val o21 = "(gtot - c)"
-        val o22 = "(nn - tt - gtot + c)"
-        val nD = "CAST(nn AS DOUBLE)"
-        val e11 = s"(CAST(tt AS DOUBLE) * CAST(gtot AS DOUBLE) / $nD)"
-        val e12 = s"(CAST(tt AS DOUBLE) * CAST(nn - gtot AS DOUBLE) / $nD)"
-        val e21 = s"(CAST(nn - tt AS DOUBLE) * CAST(gtot AS DOUBLE) / $nD)"
-        val e22 =
-          s"(CAST(nn - tt AS DOUBLE) * CAST(nn - gtot AS DOUBLE) / $nD)"
-        val g2 = s"(2.0 * (${t("c", e11)} + ${t(o12, e12)}" +
-          s" + ${t(o21, e21)} + ${t(o22, e22)}))"
-        s"""WITH cnt AS (
-           |  SELECT source AS g, unnest($toksSql) AS t
-           |  FROM documents WHERE source IS NOT NULL),
-           |c AS (SELECT g, t, CAST(count(*) AS BIGINT) AS c
-           |  FROM cnt GROUP BY 1, 2),
-           |tt AS (SELECT t, CAST(sum(c) AS BIGINT) AS tt FROM c GROUP BY 1),
-           |gt AS (SELECT g, CAST(sum(c) AS BIGINT) AS gtot FROM c GROUP BY 1),
-           |nn AS (SELECT CAST(sum(gtot) AS BIGINT) AS nn FROM gt),
-           |scored AS (
-           |  SELECT g, c.t, c, $g2 AS g2d
-           |  FROM c JOIN tt USING (t) JOIN gt USING (g) CROSS JOIN nn
-           |  WHERE CAST(c AS HUGEINT) * nn > CAST(tt AS HUGEINT) * gtot),
-           |r AS (
-           |  SELECT *, row_number() OVER (
-           |    PARTITION BY g ORDER BY g2d DESC, t) AS rk
-           |  FROM scored)
-           |SELECT g AS source, t AS term, c AS n_in,
-           |  ${pround("g2d", 6)} AS g2, CAST(rk AS BIGINT) AS rank
-           |FROM r WHERE rk <= 10""".stripMargin
-      },
-
-      // per-cell (o-e)^2/e terms pround6 into a DECIMAL sum; V one
-      // closing sqrt; degenerate single-level tables NULL
-      "q343_cramers_v" ->
-        s"""WITH j AS (
-           |  SELECT l_returnflag AS g, o_orderpriority AS a,
-           |    l_linestatus AS b
-           |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-           |cells AS (
-           |  SELECT g, a, b, CAST(count(*) AS BIGINT) AS o
-           |  FROM j GROUP BY 1, 2, 3),
-           |meta AS (
-           |  SELECT g, CAST(count(DISTINCT a) AS BIGINT) AS r_levels,
-           |    CAST(count(DISTINCT b) AS BIGINT) AS c_levels,
-           |    CAST(sum(o) AS BIGINT) AS tn
-           |  FROM cells GROUP BY 1),
-           |ra AS (SELECT g, a, CAST(sum(o) AS BIGINT) AS ra
-           |  FROM cells GROUP BY 1, 2),
-           |cb AS (SELECT g, b, CAST(sum(o) AS BIGINT) AS cb
-           |  FROM cells GROUP BY 1, 2),
-           |grid AS (
-           |  SELECT ra.g, ra.a, cb.b, ra.ra, cb.cb, tn,
-           |    COALESCE(o, 0) AS o
-           |  FROM ra JOIN cb ON ra.g = cb.g
-           |  JOIN meta ON ra.g = meta.g
-           |  LEFT JOIN cells ON cells.g = ra.g AND cells.a = ra.a
-           |    AND cells.b = cb.b),
-           |agg AS (
-           |  SELECT g, CAST(max(tn) AS BIGINT) AS n,
-           |    CAST(sum(CAST(${pround("(CAST(o AS DOUBLE) - (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tn AS DOUBLE))) * (CAST(o AS DOUBLE) - (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tn AS DOUBLE))) / (CAST(ra AS DOUBLE) * CAST(cb AS DOUBLE) / CAST(tn AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS chi
-           |  FROM grid GROUP BY 1)
-           |SELECT agg.g AS l_returnflag, n, r_levels, c_levels,
-           |  CAST(chi AS DOUBLE) AS chi2,
-           |  CASE WHEN least(r_levels - 1, c_levels - 1) > 0
-           |    THEN ${pround("sqrt(CAST(chi AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(least(r_levels - 1, c_levels - 1) AS DOUBLE)))", 6)}
-           |    END AS cramers_v
-           |FROM agg JOIN meta ON agg.g = meta.g""".stripMargin,
-
-      // q42 moment discipline on the weights; ESS one fixed-order
-      // double, efficiency a half-up ppm of exact operands
-      "q344_ess" -> {
-        val essX = "(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)" +
-          " / CAST(q AS DOUBLE))"
-        s"""WITH g AS (
-           |  SELECT source, n_chars FROM documents
-           |  WHERE source IS NOT NULL AND n_chars > 0),
-           |agg AS (
-           |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-           |    sum(CAST(n_chars AS DECIMAL(28,6))) AS s,
-           |    sum(CAST(n_chars * n_chars AS DECIMAL(38,6))) AS q
-           |  FROM g GROUP BY 1)
-           |SELECT source, n, ${pround(essX, 6)} AS ess,
-           |  CAST(floor($essX / CAST(n AS DOUBLE) * 1000000 + 0.5)
-           |    AS BIGINT) AS efficiency_ppm
-           |FROM agg""".stripMargin
-      },
-
-      // the q232 chain's headline number: min duration with S <= 0.5
-      "q341_median_survival" ->
-        """WITH per AS (
-          |  SELECT date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
-          |    CASE WHEN max(o_orderdate) < DATE '1998-03-01' THEN 1 ELSE 0 END AS e
-          |  FROM orders GROUP BY o_custkey),
-          |g AS (
-          |  SELECT CAST(dur AS BIGINT) AS duration,
-          |    CAST(sum(e) AS BIGINT) AS n_events,
-          |    CAST(count(*) - sum(e) AS BIGINT) AS n_censored
-          |  FROM per GROUP BY 1),
-          |tot AS (SELECT CAST(sum(n_events + n_censored) AS BIGINT) AS n FROM g),
-          |r AS (
-          |  SELECT g.*, t.n - CAST(COALESCE(sum(n_events + n_censored) OVER (
-          |    ORDER BY duration ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-          |    0) AS BIGINT) AS n_risk
-          |  FROM g, tot t),
-          |c AS (
-          |  SELECT *,
-          |    CASE WHEN n_risk = n_events THEN CAST(0 AS DECIMAL(18,6))
-          |      ELSE CAST(floor(ln(CAST(n_risk - n_events AS DOUBLE) /
-          |        CAST(n_risk AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |        AS DECIMAL(18,6)) END AS contrib,
-          |    CASE WHEN n_risk = n_events THEN 1 ELSE 0 END AS z
-          |  FROM r),
-          |f AS (
-          |  SELECT duration, n_events, n_censored,
-          |    CAST(sum(contrib) OVER (ORDER BY duration) AS DOUBLE) AS csum,
-          |    max(z) OVER (ORDER BY duration) AS zany
-          |  FROM c),
-          |s AS (
-          |  SELECT duration, n_events, n_censored,
-          |    CASE WHEN zany = 1 THEN 0.0
-          |      ELSE floor(exp(csum) * 1000000 + 0.5) / 1000000 END AS surv
-          |  FROM f)
-          |SELECT CAST(COALESCE(sum(n_events + n_censored), 0) AS BIGINT)
-          |    AS n_obs,
-          |  CAST(COALESCE(sum(n_events), 0) AS BIGINT) AS n_events,
-          |  CAST(min(CASE WHEN surv <= 0.5 THEN duration END) AS BIGINT)
-          |    AS median_duration
-          |FROM s""".stripMargin,
-
-      // top-(k+1) under (value desc, tie asc); the threshold ROW drops
-      // (min value, max tie), terms read values only
-      "q335_hill_tail" ->
-        s"""WITH top AS (
-           |  SELECT CAST(o_totalprice AS DECIMAL(18,2)) AS x,
-           |    o_orderkey AS tie
-           |  FROM orders WHERE o_totalprice > 0
-           |  ORDER BY x DESC, tie ASC LIMIT 501),
-           |mn AS (SELECT min(x) AS xmin FROM top),
-           |dt AS (SELECT max(tie) AS dropt FROM top, mn WHERE x = xmin),
-           |kept AS (
-           |  SELECT x, xmin FROM top, mn, dt
-           |  WHERE NOT (x = xmin AND tie = dropt))
-           |SELECT CAST(500 AS BIGINT) AS k,
-           |  CAST(count(*) AS BIGINT) AS n_top,
-           |  max(CAST(xmin AS DOUBLE)) AS x_min,
-           |  CASE WHEN count(*) > 0 AND CAST(CAST(sum(CAST(${pround("ln(CAST(x AS DOUBLE) / CAST(xmin AS DOUBLE))", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) > 0.0
-           |    THEN ${pround("CAST(count(*) AS DOUBLE) / CAST(CAST(sum(CAST(" + pround("ln(CAST(x AS DOUBLE) / CAST(xmin AS DOUBLE))", 6) + " AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE)", 6)}
-           |    END AS alpha
-           |FROM kept""".stripMargin,
-
-      // the same minimax chain: rates are quotients of exact prefix
-      // differences, so min/max see identical doubles
-      "q318_isotonic_calibration" ->
-        s"""WITH bins AS (
-           |  SELECT event_type AS g,
-           |    CAST(floor(value / 25.0) AS BIGINT) AS b,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN user_id % 3 = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS p
-           |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-           |cum AS (
-           |  SELECT g, b, n, p,
-           |    CAST(sum(n) OVER w AS BIGINT) AS cn,
-           |    CAST(sum(p) OVER w AS BIGINT) AS cp,
-           |    COALESCE(CAST(sum(n) OVER wp AS BIGINT), 0) AS en,
-           |    COALESCE(CAST(sum(p) OVER wp AS BIGINT), 0) AS ep
-           |  FROM bins
-           |  WINDOW w AS (PARTITION BY g ORDER BY b
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-           |    wp AS (PARTITION BY g ORDER BY b
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-           |grid AS (
-           |  SELECT j.g, j.b AS jb, k.b AS kb,
-           |    CAST(k.cp - j.ep AS DOUBLE) / CAST(k.cn - j.en AS DOUBLE)
-           |      AS rate
-           |  FROM cum j JOIN cum k ON j.g = k.g AND j.b <= k.b),
-           |mn AS (
-           |  SELECT g, jb, kb AS i,
-           |    min(rate) OVER (PARTITION BY g, jb ORDER BY kb DESC
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mnr
-           |  FROM grid),
-           |iso AS (SELECT g, i, max(mnr) AS iso FROM mn GROUP BY 1, 2)
-           |SELECT bins.g AS event_type, bins.b AS bin, n, p AS n_pos,
-           |  CAST(p * 1000000 // n AS BIGINT) AS raw_rate_ppm,
-           |  ${pround("iso", 6)} AS iso_rate
-           |FROM bins JOIN iso ON bins.g = iso.g AND bins.b = iso.i""".stripMargin,
-
-      // per-bin fixed-order doubles over exact DECIMAL(18,6)/BIGINT
-      // sums, pround6 into DECIMAL(18,6) — the dsum discipline
-      "q319_calibration_card" -> {
-        val conf = "(CAST(ss AS DOUBLE) / CAST(n AS DOUBLE))"
-        val rate = "(CAST(p AS DOUBLE) / CAST(n AS DOUBLE))"
-        val wt = "(CAST(n AS DOUBLE) / CAST(nn AS DOUBLE))"
-        val bs = "(CAST(kk AS DOUBLE) / CAST(nn AS DOUBLE))"
-        s"""WITH bins AS (
-           |  SELECT event_type AS g,
-           |    CAST(floor(value / 25.0) AS BIGINT) AS b,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN user_id % 3 = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS p,
-           |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(38,6))
-           |      AS ss
-           |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-           |tot AS (
-           |  SELECT g, b, n, p, ss,
-           |    CAST(sum(n) OVER (PARTITION BY g) AS BIGINT) AS nn,
-           |    CAST(sum(p) OVER (PARTITION BY g) AS BIGINT) AS kk
-           |  FROM bins)
-           |SELECT g AS event_type,
-           |  CAST(max(nn) AS BIGINT) AS n, CAST(max(kk) AS BIGINT) AS n_pos,
-           |  CAST(CAST(sum(CAST(${pround(s"$wt * abs($conf - $rate)", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS ece,
-           |  CAST(CAST(sum(CAST(${pround(s"$wt * ($conf - $rate) * ($conf - $rate)", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS brier_rel,
-           |  CAST(CAST(sum(CAST(${pround(s"$wt * ($rate - $bs) * ($rate - $bs)", 6)} AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS brier_res,
-           |  max(${pround(s"$bs * (1.0 - $bs)", 6)}) AS unc
-           |FROM tot GROUP BY 1""".stripMargin
-      },
-
-      // thresholds unnest from the same literal list; all counts
-      // conditional BIGINTs, rates ppm floor divisions
-      "q320_pr_curve" ->
-        s"""WITH base AS (
-           |  SELECT event_type AS g, value AS s,
-           |    CASE WHEN user_id % 3 = 0 THEN 1 ELSE 0 END AS y
-           |  FROM events WHERE value IS NOT NULL),
-           |x AS (SELECT g, s, y, unnest([50, 100, 200, 300, 400]) AS th
-           |  FROM base),
-           |agg AS (
-           |  SELECT g, CAST(th AS BIGINT) AS threshold,
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CASE WHEN s >= th AND y = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS tp,
-           |    CAST(sum(CASE WHEN s >= th AND y = 0 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS fp,
-           |    CAST(sum(CASE WHEN s < th AND y = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS fn
-           |  FROM x GROUP BY 1, 2)
-           |SELECT g AS event_type, threshold, n, tp, fp, fn,
-           |  CASE WHEN tp + fp = 0 THEN NULL
-           |    ELSE CAST(tp * 1000000 // (tp + fp) AS BIGINT) END
-           |    AS precision_ppm,
-           |  CASE WHEN tp + fn = 0 THEN NULL
-           |    ELSE CAST(tp * 1000000 // (tp + fn) AS BIGINT) END
-           |    AS recall_ppm,
-           |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
-           |    ELSE CAST(tp * 2000000 // (2 * tp + fp + fn) AS BIGINT) END
-           |    AS f1_ppm
-           |FROM agg""".stripMargin,
-
-      // the q21 banding chain as predictions, md5-equality pairs as
-      // truth; pure set counts and ppm floor divisions
-      "q316_linkage_quality" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b
-           |    ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |truth AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM documents a JOIN documents b
-           |    ON md5(lower(a.text)) = md5(lower(b.text))
-           |      AND a.doc_id < b.doc_id),
-           |np AS (SELECT CAST(count(*) AS BIGINT) AS n_pred FROM cand),
-           |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth),
-           |tpc AS (SELECT CAST(count(*) AS BIGINT) AS tp
-           |  FROM cand JOIN truth USING (id_a, id_b))
-           |SELECT n_pred, n_true, tp,
-           |  n_pred - tp AS fp, n_true - tp AS fn,
-           |  CASE WHEN n_pred = 0 THEN NULL
-           |    ELSE CAST(tp * 1000000 // n_pred AS BIGINT) END
-           |    AS precision_ppm,
-           |  CASE WHEN n_true = 0 THEN NULL
-           |    ELSE CAST(tp * 1000000 // n_true AS BIGINT) END
-           |    AS recall_ppm,
-           |  CASE WHEN n_pred + n_true = 0 THEN NULL
-           |    ELSE CAST(tp * 2000000 // (n_pred + n_true) AS BIGINT) END
-           |    AS f1_ppm
-           |FROM np, nt, tpc""".stripMargin,
-
-      // same md5 house hash, same (weight, shard) lexicographic
-      // winner; churn as exact ppm floor divisions
-      "q317_reshard_churn" ->
-        """WITH keys AS (
-          |  SELECT DISTINCT CAST(doc_id AS VARCHAR) AS key
-          |  FROM documents WHERE doc_id IS NOT NULL),
-          |kh AS (
-          |  SELECT key,
-          |    CAST(('0x' || substr(md5(key), 1, 15)) AS BIGINT) AS h
-          |  FROM keys),
-          |w AS (
-          |  SELECT key, r.s,
-          |    CAST(('0x' || substr(md5(key || ':' || CAST(r.s AS VARCHAR)), 1, 15)) AS BIGINT) AS wt
-          |  FROM kh, unnest(range(0, 20)) AS r(s)),
-          |fa AS (
-          |  SELECT key, CAST(s AS BIGINT) AS ha FROM w WHERE s < 16
-          |  QUALIFY row_number() OVER (PARTITION BY key
-          |    ORDER BY wt DESC, s DESC) = 1),
-          |fb AS (
-          |  SELECT key, CAST(s AS BIGINT) AS hb FROM w WHERE s < 20
-          |  QUALIFY row_number() OVER (PARTITION BY key
-          |    ORDER BY wt DESC, s DESC) = 1),
-          |j AS (
-          |  SELECT kh.key, kh.h % 16 AS ma, kh.h % 20 AS mb, ha, hb
-          |  FROM kh JOIN fa ON kh.key = fa.key JOIN fb ON kh.key = fb.key),
-          |agg AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n_keys,
-          |    CAST(sum(CASE WHEN ma <> mb THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS moved_mod,
-          |    CAST(sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) AS BIGINT)
-          |      AS moved_hrw
-          |  FROM j)
-          |SELECT n_keys, moved_mod,
-          |  CASE WHEN n_keys = 0 THEN NULL
-          |    ELSE CAST(moved_mod * 1000000 // n_keys AS BIGINT) END
-          |    AS churn_mod_ppm,
-          |  moved_hrw,
-          |  CASE WHEN n_keys = 0 THEN NULL
-          |    ELSE CAST(moved_hrw * 1000000 // n_keys AS BIGINT) END
-          |    AS churn_hrw_ppm
-          |FROM agg""".stripMargin,
-
-      "q01_pricing_summary" ->
-        s"""SELECT l_returnflag, l_linestatus,
-          |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
-          |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_base_price,
-          |  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_disc_price,
-          |  ${pround("CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(*)", 4)} AS avg_disc,
-          |  count(*) AS count_order
-          |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-      "q02_filter_project" ->
-        """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-          |FROM lineitem WHERE l_returnflag = 'R' AND l_quantity > 45""".stripMargin,
-
-      "q03_star_join" ->
-        """SELECT r_name, n_name, count(o_orderkey) AS n_orders,
-          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_spend
-          |FROM orders
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY r_name, n_name""".stripMargin,
-
-      "q04_left_join_agg" ->
-        """SELECT c_custkey, c_name, count(o_orderkey) AS num_orders,
-          |  round(CAST(COALESCE(sum(CAST(o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE), 2) AS total_spend
-          |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |GROUP BY c_custkey, c_name""".stripMargin,
-
-      "q05_anti_join" ->
-        """SELECT c_custkey, c_name FROM customer
-          |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-
-      "q06_semi_join" ->
-        """SELECT c_custkey, c_mktsegment FROM customer
-          |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin,
-
-      "q07_distinct" ->
-        "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders",
-
-      "q08_keep_first" ->
-        """SELECT user_id, event_id, event_type, value FROM events
-          |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) = 1""".stripMargin,
-
-      "q09_topk" ->
-        """SELECT p_brand,
-          |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_qty
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |GROUP BY p_brand ORDER BY total_qty DESC, p_brand ASC LIMIT 10""".stripMargin,
-
-      "q10_running_sum" ->
-        """SELECT o_custkey, o_orderkey,
-          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-          |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS running_spend
-          |FROM orders""".stripMargin,
-
-      "q11_sentinel_fill" ->
-        """SELECT doc_id,
-          |  CASE WHEN lang IS NULL OR lang = '' THEN 'notavailable' ELSE lang END AS lang_id
-          |FROM documents""".stripMargin,
-
-      "q12_explode_tokens" ->
-        s"""SELECT u.token, count(*) AS n
-           |FROM documents, unnest($toksSql) AS u(token)
-           |GROUP BY u.token ORDER BY n DESC, u.token ASC LIMIT 20""".stripMargin,
-
-      "q13_snapshot_slots" ->
-        s"""SELECT ${slotFmt("%Y%m%d")} AS day_date_id, ${slotFmt("%H%M")} AS time_of_day_id,
-           |  count(*) AS n_events
-           |FROM events GROUP BY 1, 2""".stripMargin,
-
-      // mirrors TimeFns.snapshotDayId/snapshotTimeId(ts, tz): integer-
-      // microsecond seconds-of-day, half-down nearest (ceil of a double
-      // on both engines), slot-95 clamp, 23:53+ next-day rollover
-      "q62_pacific_slots" ->
-        """WITH loc AS (
-          |  SELECT timezone('US/Pacific', timezone('UTC', ts::TIMESTAMP)) AS lt FROM events),
-          |s AS (
-          |  SELECT lt, epoch_us(lt) % 86400000000 AS sodus,
-          |    (hour(lt) = 23 AND minute(lt) > 52) AS roll
-          |  FROM loc),
-          |i AS (
-          |  SELECT lt, roll,
-          |    least(CAST(ceil((sodus - 450000000) / 900000000.0) AS BIGINT), 95) AS idx
-          |  FROM s)
-          |SELECT
-          |  CASE WHEN roll THEN strftime(CAST(lt AS DATE) + INTERVAL 1 DAY, '%Y%m%d')
-          |       ELSE strftime(CAST(lt AS DATE), '%Y%m%d') END AS day_date_id,
-          |  CASE WHEN roll THEN '0000'
-          |       ELSE printf('%02d%02d', (idx * 15) // 60, (idx * 15) % 60) END AS time_of_day_id,
-          |  count(*) AS n_events
-          |FROM i GROUP BY 1, 2""".stripMargin,
-
-      "q14_union_na" ->
-        "SELECT DISTINCT lang AS lang_id FROM documents UNION ALL SELECT 'NA' AS lang_id",
-
-      "q15_positional_zip" ->
-        """WITH ct AS (SELECT c_name, row_number() OVER (ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-          |            FROM (SELECT * FROM customer ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 100)),
-          |     st AS (SELECT s_name, row_number() OVER (ORDER BY s_acctbal DESC, s_suppkey ASC) AS rn
-          |            FROM (SELECT * FROM supplier ORDER BY s_acctbal DESC, s_suppkey ASC LIMIT 100))
-          |SELECT ct.rn AS rn, c_name, s_name FROM ct JOIN st ON ct.rn = st.rn""".stripMargin,
-
-      "q16_upsert_delta" ->
-        """SELECT DISTINCT user_id FROM events WHERE ts >= TIMESTAMP '2024-01-15'
-          |AND user_id NOT IN (SELECT user_id FROM events WHERE ts < TIMESTAMP '2024-01-15')""".stripMargin,
-
-      "q17_tumbling_window" ->
-        """SELECT CAST(floor(floor(epoch(ts)) / 900) * 900 AS BIGINT) AS win_start,
-          |  event_type, count(*) AS n
-          |FROM events GROUP BY 1, 2""".stripMargin,
-
-      "q19_snapshot_chain" ->
-        s"""WITH p AS (
-           |  SELECT event_id, user_id,
-           |    CASE WHEN event_type IS NULL OR event_type = '' THEN 'notavailable' ELSE event_type END AS event_type,
-           |    ${slotFmt("%Y%m%d")} AS day_date_id, ${slotFmt("%H%M")} AS time_of_day_id
-           |  FROM events
-           |  WHERE event_id IS NOT NULL AND user_id IS NOT NULL AND user_id >= 0),
-           |c AS (SELECT event_id, event_type FROM p
-           |      QUALIFY row_number() OVER (PARTITION BY user_id, day_date_id, time_of_day_id ORDER BY event_id ASC) = 1)
-           |SELECT event_type, count(event_id) AS num_of_streamers FROM c GROUP BY event_type""".stripMargin,
-
-      // Replays BinPacking.pack's greedy loop as a recursive CTE: one
-      // recursion step per item in (weight desc, id asc) order, carrying
-      // the 5 running group totals as a list. The choice expression
-      // mirrors the scan exactly — first group whose total stays <= cap
-      // OR whose total is 0 (over-cap singleton), else the LAST group at
-      // the minimum total (the reference scans with <=). numGroups=5 /
-      // cap=10000 must track the q18 query's arguments.
-      "q18_bin_packing" -> {
-        val choose =
-          """CASE WHEN len(list_filter(range(1, 6), j -> s.totals[j] + i.w <= 10000 OR s.totals[j] = 0)) > 0
-            |     THEN list_filter(range(1, 6), j -> s.totals[j] + i.w <= 10000 OR s.totals[j] = 0)[1]
-            |     ELSE list_filter(range(1, 6), j -> s.totals[j] = list_min(s.totals))[-1]
-            |END""".stripMargin
-        s"""WITH RECURSIVE agg AS (
-           |  SELECT p_brand, count(*) AS cnt
-           |  FROM lineitem JOIN part ON l_partkey = p_partkey
-           |  GROUP BY p_brand),
-           |items AS (
-           |  SELECT p_brand, CAST(cnt AS BIGINT) AS w,
-           |         CAST(row_number() OVER (ORDER BY cnt DESC, p_brand ASC) AS BIGINT) AS rn
-           |  FROM agg),
-           |st AS (
-           |  SELECT CAST(0 AS BIGINT) AS rn, CAST(NULL AS VARCHAR) AS p_brand,
-           |         CAST(NULL AS BIGINT) AS weight, CAST(NULL AS INT) AS group_id,
-           |         [CAST(0 AS BIGINT), 0, 0, 0, 0] AS totals
-           |  UNION ALL
-           |  SELECT i.rn, i.p_brand, i.w, CAST(($choose) - 1 AS INT) AS group_id,
-           |         list_transform(range(1, 6), k -> CASE WHEN k = ($choose) THEN s.totals[k] + i.w ELSE s.totals[k] END) AS totals
-           |  FROM st s
-           |  JOIN items i ON i.rn = s.rn + 1)
-           |SELECT p_brand, weight, group_id FROM st WHERE rn > 0""".stripMargin
-      },
-
-      // Regenerates ReplaySource.row's chained Park–Miller LCG in SQL
-      // (seed 42, 20000 rows — must track the q35 query's options), then
-      // applies the same process→curate→popularity chain as q19.
-      "q35_replay_pipeline" ->
-        s"""WITH g0 AS (
-           |  SELECT id, (42 * 1000003 + id) % 2147483647 AS h0 FROM range(0, 20000) t(id)),
-           |g1 AS (SELECT id, (h0 * 48271) % 2147483647 AS h1 FROM g0),
-           |g2 AS (SELECT id, h1, (h1 * 48271) % 2147483647 AS h2 FROM g1),
-           |g3 AS (SELECT id, h1, h2, (h2 * 48271) % 2147483647 AS h3 FROM g2),
-           |events AS (
-           |  SELECT id AS event_id,
-           |    make_timestamp(1704067200000000 + id * 900 + h1 % 1000000) AS ts,
-           |    h2 % 1000 AS user_id,
-           |    ['click','purchase','error','signup','view'][CAST(h3 % 5 AS INT) + 1] AS event_type
-           |  FROM g3),
-           |p AS (
-           |  SELECT event_id, user_id, event_type,
-           |    ${slotFmt("%Y%m%d")} AS day_date_id, ${slotFmt("%H%M")} AS time_of_day_id
-           |  FROM events
-           |  WHERE event_id IS NOT NULL AND user_id IS NOT NULL AND user_id >= 0),
-           |c AS (SELECT event_id, event_type FROM p
-           |      QUALIFY row_number() OVER (PARTITION BY user_id, day_date_id, time_of_day_id ORDER BY event_id ASC) = 1)
-           |SELECT event_type, count(event_id) AS num_of_streamers FROM c GROUP BY event_type""".stripMargin,
-
-      "q36_json_extract" ->
-        """SELECT event_id, CAST(json_extract(props, '$.k') AS INTEGER) AS prop_k
-          |FROM events""".stripMargin,
-
-      "q37_upsert_keep_first" ->
-        """WITH cur AS (
-          |  SELECT user_id, event_type FROM events WHERE ts < TIMESTAMP '2024-01-15'
-          |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id) = 1),
-          |inc AS (
-          |  SELECT user_id, event_type FROM events WHERE ts >= TIMESTAMP '2024-01-15'
-          |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id) = 1)
-          |SELECT user_id, event_type FROM cur
-          |UNION ALL
-          |SELECT user_id, event_type FROM inc
-          |WHERE user_id NOT IN (SELECT user_id FROM cur)""".stripMargin,
-
-      "q38_day_dates_dim" ->
-        """SELECT strftime(g, '%Y%m%d') AS day_date_id,
-          |  CAST(g AS DATE) AS the_date,
-          |  strftime(g, '%m/%d/%Y') AS date_MMDDYYYY,
-          |  dayname(g) AS day_of_week,
-          |  strftime(g, '%m') AS month,
-          |  strftime(g, '%d') AS day,
-          |  strftime(g, '%Y') AS year,
-          |  monthname(g) AS month_name,
-          |  upper(strftime(g, '%b')) AS month_abbrev,
-          |  strftime(g, '%y') AS year_YY
-          |FROM generate_series(DATE '2025-01-01', DATE '2027-12-31', INTERVAL 1 DAY) t(g)""".stripMargin,
-
-      "q39_time_of_day_dim" ->
-        """SELECT lpad(CAST(i // 4 AS VARCHAR), 2, '0') || lpad(CAST((i % 4) * 15 AS VARCHAR), 2, '0') AS time_of_day_id,
-          |  lpad(CAST(i // 4 AS VARCHAR), 2, '0') || ':' || lpad(CAST((i % 4) * 15 AS VARCHAR), 2, '0') AS time_24h,
-          |  lpad(CAST(((i // 4 + 11) % 12) + 1 AS VARCHAR), 2, '0') || ':' || lpad(CAST((i % 4) * 15 AS VARCHAR), 2, '0')
-          |    || (CASE WHEN i // 4 < 12 THEN ' AM' ELSE ' PM' END) AS time_12h,
-          |  CAST(i // 4 AS INTEGER) AS hour,
-          |  CAST((i % 4) * 15 AS INTEGER) AS minute,
-          |  CASE WHEN i // 4 < 12 THEN 'AM' ELSE 'PM' END AS AM_PM,
-          |  CASE WHEN i // 4 < 5 THEN 'night' WHEN i // 4 < 12 THEN 'morning'
-          |       WHEN i // 4 < 17 THEN 'afternoon' WHEN i // 4 < 21 THEN 'evening'
-          |       ELSE 'night' END AS part_of_day
-          |FROM range(0, 96) t(i)""".stripMargin,
-
-      "q40_sessions" ->
-        """WITH g AS (
-          |  SELECT user_id, ts,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 3600
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, ts,
-          |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          |  FROM g)
-          |SELECT user_id, session_id,
-          |  CAST(floor(epoch(min(ts))) AS BIGINT) AS start_s,
-          |  CAST(floor(epoch(max(ts))) AS BIGINT) AS end_s,
-          |  count(*) AS n_events
-          |FROM s GROUP BY user_id, session_id""".stripMargin,
-
-      // open version closes only on an attribute CHANGE; unchanged
-      // keys keep their open row, new keys open their first version
-      "q109_scd2_dim" ->
-        """WITH cur AS (
-          |  SELECT user_id, event_type, epoch_us(ts) AS vf FROM events
-          |  WHERE ts < TIMESTAMP '2024-01-15'
-          |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id) = 1),
-          |inc AS (
-          |  SELECT user_id, event_type, epoch_us(ts) AS vf FROM events
-          |  WHERE ts >= TIMESTAMP '2024-01-15'
-          |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id) = 1)
-          |SELECT c.user_id, c.event_type, c.vf AS valid_from,
-          |  CASE WHEN i.user_id IS NOT NULL AND i.event_type IS DISTINCT FROM c.event_type
-          |       THEN i.vf END AS valid_to
-          |FROM cur c LEFT JOIN inc i USING (user_id)
-          |UNION ALL
-          |SELECT i.user_id, i.event_type, i.vf AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-          |FROM inc i LEFT JOIN cur c USING (user_id)
-          |WHERE c.user_id IS NULL OR i.event_type IS DISTINCT FROM c.event_type""".stripMargin,
-
-      // q109's versions as CTEs + the half-open range attribution
-      "q110_point_in_time" ->
-        """WITH cur AS (
-          |  SELECT user_id, event_type, epoch_us(ts) AS vf FROM events
-          |  WHERE ts < TIMESTAMP '2024-01-15'
-          |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id) = 1),
-          |inc AS (
-          |  SELECT user_id, event_type, epoch_us(ts) AS vf FROM events
-          |  WHERE ts >= TIMESTAMP '2024-01-15'
-          |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id) = 1),
-          |v AS (
-          |  SELECT c.user_id, c.event_type, c.vf AS valid_from,
-          |    CASE WHEN i.user_id IS NOT NULL AND i.event_type IS DISTINCT FROM c.event_type
-          |         THEN i.vf END AS valid_to
-          |  FROM cur c LEFT JOIN inc i USING (user_id)
-          |  UNION ALL
-          |  SELECT i.user_id, i.event_type, i.vf, CAST(NULL AS BIGINT)
-          |  FROM inc i LEFT JOIN cur c USING (user_id)
-          |  WHERE c.user_id IS NULL OR i.event_type IS DISTINCT FROM c.event_type)
-          |SELECT v.event_type AS dim_type, count(*) AS n_events
-          |FROM events e LEFT JOIN v
-          |  ON e.user_id = v.user_id AND epoch_us(e.ts) >= v.valid_from
-          |     AND (v.valid_to IS NULL OR epoch_us(e.ts) < v.valid_to)
-          |GROUP BY 1""".stripMargin,
-
-      // duplicate-line halves of the Gopher screens over the
-      // line-ified corpus (space runs -> '\n'); thresholds compare the
-      // prounded fractions, mirroring the Spark side exactly
-      "q111_line_dup_screen" ->
-        s"""WITH l AS (
-           |  SELECT doc_id,
-           |    unnest(list_filter(string_split(regexp_replace(text, ' +', chr(10), 'g'), chr(10)), x -> len(x) > 0)) AS line
-           |  FROM documents),
-           |lc AS (SELECT doc_id, line, count(*) AS c, len(line) AS ln
-           |       FROM l GROUP BY doc_id, line),
-           |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_lines,
-           |        count(*) AS n_distinct,
-           |        sum(c * ln) AS line_chars, sum((c - 1) * ln) AS dup_chars
-           |      FROM lc GROUP BY doc_id),
-           |f AS (SELECT d.doc_id,
-           |        COALESCE(a.n_lines, 0) AS n_lines,
-           |        ${pround("CASE WHEN a.n_lines > 0 THEN CAST(a.n_lines - a.n_distinct AS DOUBLE) / a.n_lines ELSE 0.0 END", 4)} AS dup_line_frac,
-           |        ${pround("CASE WHEN a.line_chars > 0 THEN CAST(a.dup_chars AS DOUBLE) / a.line_chars ELSE 0.0 END", 4)} AS dup_char_frac
-           |      FROM documents d LEFT JOIN a USING (doc_id))
-           |SELECT doc_id, n_lines, dup_line_frac, dup_char_frac,
-           |  CAST(CASE WHEN dup_line_frac <= 0.3 AND dup_char_frac <= 0.2
-           |       THEN 1 ELSE 0 END AS BIGINT) AS keep
-           |FROM f""".stripMargin,
-
-      // tau=2 temperature mixture: sqrt + division only (IEEE-exact on
-      // both engines); epochs mirrors the Spark operand order
-      // ((w/wtot)*ntot)/n
-      "q112_temperature_mix" ->
-        s"""WITH s AS (
-           |  SELECT source,
-           |    CAST(sum(CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT)) AS BIGINT) AS n_tokens
-           |  FROM documents GROUP BY source),
-           |t AS (SELECT sum(sqrt(CAST(n_tokens AS DOUBLE))) AS wtot,
-           |        CAST(sum(n_tokens) AS DOUBLE) AS ntot FROM s)
-           |SELECT source, n_tokens,
-           |  ${pround("sqrt(CAST(n_tokens AS DOUBLE)) / t.wtot", 4)} AS p,
-           |  ${pround("CASE WHEN n_tokens > 0 THEN sqrt(CAST(n_tokens AS DOUBLE)) / t.wtot * t.ntot / n_tokens ELSE 0.0 END", 4)} AS epochs
-           |FROM s, t""".stripMargin,
-
-      // integer sums finished in one IEEE division per ratio
-      "q113_fertility_by_lang" ->
-        s"""WITH a AS (
-           |  SELECT lang, count(*) AS n_docs,
-           |    CAST(sum(CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT)) AS BIGINT) AS ws_tokens,
-           |    CAST(sum(CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT)) AS BIGINT) AS bpe_tokens,
-           |    CAST(sum(n_chars) AS BIGINT) AS sum_chars
-           |  FROM documents GROUP BY lang)
-           |SELECT lang, n_docs, ws_tokens, bpe_tokens,
-           |  ${pround("CASE WHEN ws_tokens > 0 THEN CAST(bpe_tokens AS DOUBLE) / ws_tokens ELSE 0.0 END", 4)} AS fertility,
-           |  ${pround("CASE WHEN bpe_tokens > 0 THEN CAST(sum_chars AS DOUBLE) / bpe_tokens ELSE 0.0 END", 4)} AS chars_per_token
-           |FROM a""".stripMargin,
-
-      // interpolated quartile bounds (quantile_cont ≡ Spark percentile,
-      // the q41/q107 parity) + strict-greater phase arithmetic
-      "q114_curriculum_phases" ->
-        """WITH tok AS (
-          |  SELECT doc_id,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens
-          |  FROM documents),
-          |b AS (SELECT quantile_cont(n_tokens, 0.25) AS q1,
-          |        quantile_cont(n_tokens, 0.5) AS q2,
-          |        quantile_cont(n_tokens, 0.75) AS q3 FROM tok)
-          |SELECT doc_id, n_tokens,
-          |  CAST(CASE WHEN n_tokens > b.q1 THEN 1 ELSE 0 END
-          |     + CASE WHEN n_tokens > b.q2 THEN 1 ELSE 0 END
-          |     + CASE WHEN n_tokens > b.q3 THEN 1 ELSE 0 END AS BIGINT) AS phase
-          |FROM tok, b""".stripMargin,
-
-      // q31's quality formula re-aggregated per source; the mean runs
-      // over DECIMAL(18,8) casts of bit-identical doubles so partial-
-      // agg order can't perturb it (q42/q107 discipline)
-      "q115_source_report" ->
-        s"""WITH base AS (SELECT doc_id, source, lang, text, $toksSql AS t FROM documents),
-           |feat AS (
-           |  SELECT source, lang, md5(lower(text)) AS h,
-           |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n,
-           |    len(t) AS n_tokens,
-           |    CASE WHEN len(t) > 0 THEN CAST(len(list_filter(t, x -> list_contains($stopwordList, x))) AS DOUBLE) / len(t) ELSE 0.0 END AS swr,
-           |    CASE WHEN len(t) > 0 THEN CAST(list_aggregate(list_transform(t, x -> len(x)), 'sum') AS DOUBLE) / len(t) ELSE 0.0 END AS atl
-           |  FROM base),
-           |q AS (
-           |  SELECT source, lang, h, n,
-           |    greatest(least(least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-           |      + (1.0 - abs(swr - 0.25) * 2.0) * 0.3
-           |      + (1.0 - least(abs(atl - 5.0) / 5.0, 1.0)) * 0.3, 1.0), 0.0) AS quality
-           |  FROM feat),
-           |agg AS (
-           |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(sum(n) AS BIGINT) AS n_tokens,
-           |    sum(CAST(quality AS DECIMAL(18,8))) AS qsum,
-           |    count(DISTINCT h) AS nd
-           |  FROM q GROUP BY source),
-           |lt AS (
-           |  SELECT source, max(c) AS top FROM (
-           |    SELECT source, lang, count(*) AS c FROM base GROUP BY 1, 2)
-           |  GROUP BY source)
-           |SELECT a.source, a.n_docs, a.n_tokens,
-           |  ${pround("CAST(a.qsum AS DOUBLE) / a.n_docs", 4)} AS mean_quality,
-           |  ${pround("CAST(a.n_docs - a.nd AS DOUBLE) / a.n_docs", 4)} AS dup_rate,
-           |  ${pround("CAST(lt.top AS DOUBLE) / a.n_docs", 4)} AS top_lang_share
-           |FROM agg a JOIN lt USING (source)""".stripMargin,
-
-      // q21's band CTE -> q65's recursive labeling -> q48's bucket
-      // arithmetic keyed on the component representative
-      "q116_leakage_safe_splits" ->
-        s"""WITH RECURSIVE sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM cand UNION SELECT id_b, id_a FROM cand),
-           |${ccUnrolledSql("edges", "lk")},
-           |comp AS (SELECT node, root AS component FROM lkm),
-           |r AS (
-           |  SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS rep
-           |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id)
-           |SELECT doc_id, rep,
-           |  CASE
-           |    WHEN (CAST(('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100 < 80 THEN 'train'
-           |    WHEN (CAST(('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100 < 90 THEN 'val'
-           |    ELSE 'test' END AS split
-           |FROM r""".stripMargin,
-
-      // q93's unrounded keep_frac chain -> basis-point threshold
-      // (floor(x*10^4 + 0.5), the pround form as an integer) -> q47's
-      // bucket predicate per doc
-      "q117_mixture_apply" ->
-        s"""WITH tokd AS (
-           |  SELECT doc_id, source,
-           |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n
-           |  FROM documents),
-           |s AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens FROM tokd GROUP BY source),
-           |t(src, w) AS (VALUES ('src0', 4.0), ('src1', 2.0), ('src2', 1.0), ('src3', 1.0)),
-           |j AS (
-           |  SELECT s.source, s.n_tokens,
-           |    CAST(s.n_tokens AS DOUBLE) / (SELECT sum(n_tokens) FROM s) AS share,
-           |    COALESCE(t.w / (SELECT sum(w) FROM t), 0.0) AS target_share
-           |  FROM s LEFT JOIN t ON s.source = t.src),
-           |sc AS (SELECT min(share / target_share) AS scale FROM j WHERE target_share > 0),
-           |kb AS (
-           |  SELECT source,
-           |    CAST(floor((CASE WHEN target_share > 0
-           |      THEN least(1.0, target_share * (SELECT scale FROM sc) / share)
-           |      ELSE 0.0 END) * 10000 + 0.5) AS BIGINT) AS keep_bp
-           |  FROM j)
-           |SELECT source, count(*) AS n_kept, CAST(sum(n) AS BIGINT) AS tok_kept
-           |FROM tokd JOIN kb USING (source)
-           |WHERE (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 10000 + 10000) % 10000 < keep_bp
-           |GROUP BY source""".stripMargin,
-
-      // distinct-gram document frequencies; df = 1 means corpus-unique
-      "q118_gram_novelty" ->
-        s"""WITH g AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |df AS (SELECT s, count(*) AS df FROM g GROUP BY s),
-           |a AS (
-           |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-           |    CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
-           |  FROM g JOIN df USING (s) GROUP BY doc_id)
-           |SELECT d.doc_id,
-           |  COALESCE(a.n_grams, 0) AS n_grams,
-           |  COALESCE(a.n_unique, 0) AS n_unique,
-           |  ${pround("CASE WHEN a.n_grams > 0 THEN CAST(a.n_unique AS DOUBLE) / a.n_grams ELSE 0.0 END", 4)} AS novelty
-           |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-
-      // char explode reproduces the native one-pass counts; derived
-      // screens are rational (no libm log) so doubles match exactly,
-      // operand order mirrored (1.0 − sum_sq/(n·n), division first)
-      "q119_char_stats" ->
-        s"""WITH c AS (
-           |  SELECT doc_id, unnest(regexp_extract_all(text, '[\\s\\S]')) AS ch
-           |  FROM documents),
-           |cc AS (SELECT doc_id, ch, count(*) AS c FROM c GROUP BY doc_id, ch),
-           |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_cp,
-           |        CAST(count(*) AS BIGINT) AS n_distinct,
-           |        max(c) AS top_cnt, sum(c * c) AS sum_sq
-           |      FROM cc GROUP BY doc_id),
-           |f AS (SELECT d.doc_id,
-           |        COALESCE(a.n_cp, 0) AS n_cp,
-           |        COALESCE(a.n_distinct, 0) AS n_distinct,
-           |        ${pround("CASE WHEN a.n_cp > 0 THEN CAST(a.top_cnt AS DOUBLE) / a.n_cp ELSE 0.0 END", 4)} AS top_share,
-           |        ${pround("CASE WHEN a.n_cp > 0 THEN 1.0 - CAST(a.sum_sq AS DOUBLE) / (CAST(a.n_cp AS DOUBLE) * a.n_cp) ELSE 0.0 END", 4)} AS simpson
-           |      FROM documents d LEFT JOIN a USING (doc_id))
-           |SELECT doc_id, n_cp, n_distinct, top_share, simpson,
-           |  CAST(CASE WHEN top_share <= 0.4 AND simpson >= 0.5
-           |       THEN 1 ELSE 0 END AS BIGINT) AS keep
-           |FROM f""".stripMargin,
-
-      // top-10 cut tie-breaks (cnt DESC, term ASC) exactly as the
-      // Spark window; ratios are single IEEE divisions
-      "q120_token_concentration" ->
-        s"""WITH tok AS (SELECT source, unnest($toksSql) AS term FROM documents),
-           |c AS (SELECT source, term, count(*) AS cnt FROM tok GROUP BY source, term),
-           |r AS (SELECT source, cnt,
-           |        row_number() OVER (PARTITION BY source ORDER BY cnt DESC, term) AS rn
-           |      FROM c),
-           |top AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS top_tokens
-           |        FROM r WHERE rn <= 10 GROUP BY source),
-           |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-           |          CAST(count(*) AS BIGINT) AS n_types
-           |        FROM c GROUP BY source)
-           |SELECT t.source, n_tokens, n_types,
-           |  ${pround("CAST(n_types AS DOUBLE) / n_tokens", 4)} AS ttr,
-           |  ${pround("CAST(COALESCE(top.top_tokens, 0) AS DOUBLE) / n_tokens", 4)} AS top_share
-           |FROM tot t LEFT JOIN top USING (source)""".stripMargin,
-
-      // last emitted start is stride*ceil((n-size)/stride): the first
-      // window covering the end; list_slice caps at the list's length
-      "q121_token_windows" ->
-        s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |n AS (SELECT doc_id, t, len(t) AS n FROM d WHERE len(t) > 0),
-           |s AS (SELECT doc_id, t, n,
-           |        unnest(range(0,
-           |          CASE WHEN n <= 32 THEN 1
-           |               ELSE ((n - 32 + 23) // 24) * 24 + 1 END, 24)) AS start_tok
-           |      FROM n)
-           |SELECT doc_id,
-           |  CAST(start_tok / 24 AS BIGINT) AS win_idx,
-           |  CAST(start_tok AS BIGINT) AS start_tok,
-           |  CAST(len(list_slice(t, start_tok + 1, start_tok + 32)) AS BIGINT) AS win_tokens,
-           |  md5(array_to_string(list_slice(t, start_tok + 1, start_tok + 32), ' ')) AS win_md5
-           |FROM s""".stripMargin,
-
-      // ranks are row_number with doc_id tie-break on both engines;
-      // rho = 1 - 6*sumd2/(n(n^2-1)) mirrored operand-for-operand
-      "q122_rank_correlation" ->
-        s"""WITH p AS (
-           |  SELECT source, doc_id, n_chars,
-           |    CASE WHEN len(t) > 0
-           |         THEN CAST(len(list_distinct(t)) AS DOUBLE) / len(t)
-           |         ELSE 0.0 END AS ttr
-           |  FROM (SELECT source, doc_id, n_chars, $toksSql AS t FROM documents)),
-           |r AS (SELECT source,
-           |        row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS ra,
-           |        row_number() OVER (PARTITION BY source ORDER BY ttr, doc_id) AS rb
-           |      FROM p),
-           |a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |        CAST(sum((ra - rb) * (ra - rb)) AS BIGINT) AS sumd2
-           |      FROM r GROUP BY source)
-           |SELECT source, n_docs,
-           |  ${pround("CASE WHEN n_docs > 1 THEN 1.0 - 6.0 * CAST(sumd2 AS DOUBLE) / (CAST(n_docs AS DOUBLE) * (CAST(n_docs AS DOUBLE) * n_docs - 1.0)) ELSE 0.0 END", 4)} AS rho
-           |FROM a""".stripMargin,
-
-      // fixed-point x2^20 quantization (exact in IEEE: power-of-two
-      // multiply + 0.5 floor), HUGEINT integer sums, then the same
-      // double conversion and division chain as the Spark side
-      "q123_embed_diversity" ->
-        s"""WITH q AS (
-           |  SELECT label,
-           |    list_transform(CAST(embedding AS DOUBLE[]),
-           |      x -> CAST(floor(x * 1048576.0 + 0.5) AS BIGINT)) AS qv
-           |  FROM embeddings),
-           |s2 AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-           |         sum(CAST(list_aggregate(list_transform(qv, x -> x * x), 'sum') AS HUGEINT)) AS s2
-           |       FROM q GROUP BY label),
-           |dims AS (SELECT label, k, sum(qv[k]) AS sk
-           |         FROM q, (SELECT unnest(range(1, 65)) AS k) ks
-           |         GROUP BY label, k),
-           |ss AS (SELECT label,
-           |         sum(CAST(sk AS HUGEINT) * CAST(sk AS HUGEINT)) AS ss
-           |       FROM dims GROUP BY label)
-           |SELECT s2.label, n_vecs,
-           |  ${pround("CAST(CAST(n_vecs AS HUGEINT) * s2 - ss AS DOUBLE) * 2.0 / n_vecs / n_vecs / 1099511627776.0", 6)} AS mean_sq_dist
-           |FROM s2 JOIN ss USING (label)""".stripMargin,
-
-      // session_window boundary semantics match q40's lag form: only a
-      // gap STRICTLY greater than 3600s starts a new session (verified
-      // by the exact-boundary spec); end = last event + gap
-      "q101_session_window" ->
-        """WITH g AS (
-          |  SELECT user_id, epoch_us(ts) AS t,
-          |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-          |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 3600000000
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, t,
-          |    sum(ns) OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM g)
-          |SELECT user_id, min(t) AS start_us, max(t) + 3600000000 AS end_us,
-          |  count(*) AS n_events
-          |FROM s GROUP BY user_id, sid""".stripMargin,
-
-      "q41_median" ->
-        s"""SELECT event_type, ${pround("quantile_cont(value, 0.5)", 4)} AS median_value
-           |FROM events GROUP BY event_type""".stripMargin,
-
-      "q42_stats_exact" ->
-        s"""SELECT event_type, count(*) AS n,
-           |  ${pround("CAST(sum(CAST(value AS DECIMAL(28,2))) AS DOUBLE) / count(*)", 4)} AS mean_value,
-           |  ${pround(
-             """sqrt(CAST(sum(CAST(value * value AS DECIMAL(28,4))) AS DOUBLE) / count(*)
-               |    - (CAST(sum(CAST(value AS DECIMAL(28,2))) AS DOUBLE) / count(*))
-               |      * (CAST(sum(CAST(value AS DECIMAL(28,2))) AS DOUBLE) / count(*)))""".stripMargin, 4)} AS stddev_pop
-           |FROM events GROUP BY event_type""".stripMargin,
-
-      "q43_histogram" ->
-        """SELECT CAST(floor(value / 10) AS BIGINT) AS bucket, count(*) AS n
-          |FROM events GROUP BY 1""".stripMargin,
-
-      "q47_hash_sample" ->
-        """SELECT doc_id, lang FROM documents
-          |WHERE (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100 < 25""".stripMargin,
-
-      "q48_dataset_split" ->
-        """SELECT CASE
-          |    WHEN (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100 < 80 THEN 'train'
-          |    WHEN (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100 < 90 THEN 'val'
-          |    ELSE 'test' END AS split,
-          |  count(*) AS n
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      "q49_lag_delta" ->
-        s"""SELECT event_id, user_id,
-           |  ${pround("value - lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)", 4)} AS delta
-           |FROM events""".stripMargin,
-
-      "q50_ntile" ->
-        """SELECT event_id, event_type,
-          |  ntile(4) OVER (PARTITION BY event_type ORDER BY value, event_id) AS quartile
-          |FROM events""".stripMargin,
-
-      "q51_first_last" ->
-        """SELECT event_id, user_id,
-          |  first_value(event_type) OVER w AS first_type,
-          |  last_value(event_type) OVER w AS last_type
-          |FROM events
-          |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-          |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-
-      "q52_collect" ->
-        """SELECT user_id,
-          |  array_to_string(list_sort(list_distinct(list(event_type))), ',') AS types,
-          |  count(*) AS n
-          |FROM events GROUP BY user_id""".stripMargin,
-
-      "q53_intersect" ->
-        """SELECT user_id FROM events WHERE event_type = 'click'
-          |INTERSECT
-          |SELECT user_id FROM events WHERE event_type = 'purchase'""".stripMargin,
-
-      "q59_except" ->
-        """SELECT user_id FROM events WHERE event_type = 'view'
-          |EXCEPT
-          |SELECT user_id FROM events WHERE event_type = 'purchase'""".stripMargin,
-
-      "q60_union_distinct" ->
-        """SELECT user_id FROM events WHERE value > 180
-          |UNION
-          |SELECT user_id FROM events WHERE event_type = 'signup'""".stripMargin,
-
-      "q61_grouping_sets" ->
-        """SELECT COALESCE(event_type, 'ALL') AS event_type,
-          |  COALESCE(strftime(ts, '%Y-%m-%d'), 'ALL') AS day,
-          |  count(*) AS n
-          |FROM events
-          |GROUP BY GROUPING SETS ((event_type), (strftime(ts, '%Y-%m-%d')))""".stripMargin,
-
-      "q54_monthly_orders" ->
-        """SELECT strftime(o_orderdate, '%Y-%m') AS month, count(*) AS n_orders,
-          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total
-          |FROM orders GROUP BY 1""".stripMargin,
-
-      "q55_cube" ->
-        """SELECT COALESCE(event_type, 'ALL') AS event_type,
-          |  COALESCE(strftime(ts, '%Y-%m-%d'), 'ALL') AS day,
-          |  count(*) AS n
-          |FROM events GROUP BY CUBE(event_type, strftime(ts, '%Y-%m-%d'))""".stripMargin,
-
-      "q44_pivot" ->
-        """SELECT user_id,
-          |  count(*) FILTER (WHERE event_type = 'click') AS click,
-          |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-          |  count(*) FILTER (WHERE event_type = 'error') AS error,
-          |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
-          |  count(*) FILTER (WHERE event_type = 'view') AS view
-          |FROM events GROUP BY user_id""".stripMargin,
-
-      "q45_rollup" ->
-        """SELECT COALESCE(event_type, 'ALL') AS event_type, count(*) AS n,
-          |  round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-          |FROM events GROUP BY ROLLUP(event_type)""".stripMargin,
-
-      "q20_exact_dedup" ->
-        """SELECT md5(lower(text)) AS content_hash, count(*) AS n_docs, min(doc_id) AS keep_id
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      "q21_minhash_pairs" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig)
-           |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id""".stripMargin,
-
-      "q22_simhash" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS token FROM documents),
-           |votes AS (
-           |  SELECT doc_id, r.j,
-           |    sum(CASE WHEN substr(md5(token), r.j, 1) IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v
-           |  FROM toks, unnest(range(1, 17)) AS r(j) GROUP BY doc_id, r.j)
-           |SELECT doc_id, CAST(sum(CASE WHEN v >= 0 THEN 1 << (16 - j) ELSE 0 END) AS BIGINT) AS simhash
-           |FROM votes GROUP BY doc_id""".stripMargin,
-
-      "q23_jaccard_verify" ->
-        s"""WITH shs AS (
-           |  SELECT doc_id, list_distinct($shinglesSql) AS sset
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, unnest(sset) AS s FROM shs),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN sh ea ON ea.doc_id = c.id_a JOIN sh eb ON eb.doc_id = c.id_b AND eb.s = ea.s
-           |  GROUP BY c.id_a, c.id_b)
-           |SELECT c.id_a, c.id_b,
-           |  CAST(COALESCE(i.i, 0) AS DOUBLE) / (sa.n + sb.n - CAST(COALESCE(i.i, 0) AS DOUBLE)) AS jaccard
-           |FROM cand c
-           |LEFT JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-           |JOIN (SELECT doc_id, len(sset) AS n FROM shs) sa ON sa.doc_id = c.id_a
-           |JOIN (SELECT doc_id, len(sset) AS n FROM shs) sb ON sb.doc_id = c.id_b""".stripMargin,
-
-      // q21's candidate CTE + the unrolled hash-to-min contraction
-      // (ccUnrolledSql) for clusters (the recursive walk cost 199 s at
-      // sf1.0 on the percolated LSH graph), then the q31 quality
-      // formula picks each cluster's
-      // representative (quality DESC, doc_id ASC); docs in no pair are
-      // their own cluster via the LEFT JOIN coalesce
-      "q124_canonical_reps" ->
-        s"""WITH RECURSIVE sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-           |${ccUnrolledSql("edges", "cr")},
-           |comp AS (SELECT node, root AS component FROM crm),
-           |q AS (
-           |  SELECT doc_id,
-           |    greatest(least(least(CAST(len(t) AS DOUBLE) / 50.0, 1.0) * 0.4
-           |      + (1.0 - abs((CASE WHEN len(t) > 0 THEN CAST(len(list_filter(t, x -> list_contains($stopwordList, x))) AS DOUBLE) / len(t) ELSE 0.0 END) - 0.25) * 2.0) * 0.3
-           |      + (1.0 - least(abs((CASE WHEN len(t) > 0 THEN CAST(list_aggregate(list_transform(t, x -> len(x)), 'sum') AS DOUBLE) / len(t) ELSE 0.0 END) - 5.0) / 5.0, 1.0)) * 0.3, 1.0), 0.0) AS quality
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |cl AS (
-           |  SELECT COALESCE(c.component, q.doc_id) AS cluster, q.doc_id, q.quality
-           |  FROM q LEFT JOIN comp c ON c.node = q.doc_id),
-           |sel AS (
-           |  SELECT cluster, doc_id, quality,
-           |    count(*) OVER (PARTITION BY cluster) AS n_members,
-           |    row_number() OVER (PARTITION BY cluster ORDER BY quality DESC, doc_id ASC) AS rn
-           |  FROM cl)
-           |SELECT cluster, doc_id AS rep_id, CAST(n_members AS BIGINT) AS n_members,
-           |  ${pround("quality", 4)} AS rep_quality
-           |FROM sel WHERE rn = 1""".stripMargin,
-
-      // q23's verified-pair CTE extended with containment over the
-      // smaller shingle set — the doc-inside-doc statistic
-      "q125_containment" ->
-        s"""WITH shs AS (
-           |  SELECT doc_id, list_distinct($shinglesSql) AS sset
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, unnest(sset) AS s FROM shs),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN sh ea ON ea.doc_id = c.id_a JOIN sh eb ON eb.doc_id = c.id_b AND eb.s = ea.s
-           |  GROUP BY c.id_a, c.id_b),
-           |j AS (
-           |  SELECT c.id_a, c.id_b,
-           |    CAST(COALESCE(i.i, 0) AS DOUBLE) AS inter,
-           |    CAST(sa.n AS DOUBLE) AS na, CAST(sb.n AS DOUBLE) AS nb
-           |  FROM cand c
-           |  LEFT JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-           |  JOIN (SELECT doc_id, len(sset) AS n FROM shs) sa ON sa.doc_id = c.id_a
-           |  JOIN (SELECT doc_id, len(sset) AS n FROM shs) sb ON sb.doc_id = c.id_b),
-           |m AS (
-           |  SELECT id_a, id_b,
-           |    CASE WHEN least(na, nb) > 0 THEN inter / least(na, nb) ELSE 0.0 END AS containment,
-           |    CASE WHEN na + nb - inter > 0 THEN inter / (na + nb - inter) ELSE 0.0 END AS jaccard
-           |  FROM j)
-           |SELECT id_a, id_b, ${pround("containment", 4)} AS containment,
-           |  ${pround("jaccard", 4)} AS jaccard,
-           |  CAST(CASE WHEN containment >= 0.8 AND jaccard < 0.5 THEN 1 ELSE 0 END AS BIGINT) AS contained
-           |FROM m""".stripMargin,
-
-      // bucket sizes per band key, then per-band rollup; n*(n-1) is
-      // even so integer // 2 is exact on both engines
-      "q126_band_buckets" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |bu AS (
-           |  SELECT split_part(band_key, '|', 1) AS band, count(*) AS n
-           |  FROM bk GROUP BY band_key)
-           |SELECT band, CAST(count(*) AS BIGINT) AS n_buckets,
-           |  CAST(sum(n) AS BIGINT) AS n_docs,
-           |  CAST(max(n) AS BIGINT) AS max_bucket,
-           |  CAST(sum(n * (n - 1) // 2) AS BIGINT) AS candidate_pairs
-           |FROM bu GROUP BY band""".stripMargin,
-
-      // the same 5 integer-surfer rounds as PageRank.ranks, unrolled
-      // (aggregation inside a recursive term is not portable); `//` on
-      // positive BIGINTs = Spark's `div`
-      "q127_pagerank" -> {
-        val rounds = (1 to 5).map { k =>
-          s"""r$k AS (
-             |  SELECT n.node, n.deg, CAST(150000 + COALESCE(s.inflow, 0) AS BIGINT) AS rank
-             |  FROM (SELECT node, deg FROM r0) n
-             |  LEFT JOIN (
-             |    SELECT e.dst AS node, CAST(sum((r.rank * 85) // (100 * r.deg)) AS BIGINT) AS inflow
-             |    FROM edges e JOIN r${k - 1} r ON r.node = e.src
-             |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-           |r0 AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg, CAST(1000000 AS BIGINT) AS rank FROM edges GROUP BY src),
-           |$rounds
-           |SELECT node, deg, rank FROM r5""".stripMargin
-      },
-
-      // q40's session CTE + a (ts, event_id)-ordered lead window per
-      // session; ORDER+LIMIT ties broken by the trigram string so the
-      // top-20 SET is engine-exact
-      "q128_behavior_grams" ->
-        """WITH g AS (
-          |  SELECT user_id, event_id, event_type, ts,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 3600
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, event_id, event_type, ts,
-          |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          |  FROM g),
-          |led AS (
-          |  SELECT event_type AS a1,
-          |    lead(event_type, 1) OVER w AS a2,
-          |    lead(event_type, 2) OVER w AS a3
-          |  FROM s WINDOW w AS (PARTITION BY user_id, session_id ORDER BY ts, event_id)),
-          |tri AS (
-          |  SELECT a1 || '>' || a2 || '>' || a3 AS trigram FROM led
-          |  WHERE a3 IS NOT NULL)
-          |SELECT trigram, count(*) AS n FROM tri GROUP BY trigram
-          |ORDER BY n DESC, trigram ASC LIMIT 20""".stripMargin,
-
-      // same integer basis-point features and weights as
-      // TextFns.linearQualityScore; `//` on non-negative BIGINTs =
-      // Spark `div`, so the score is exact
-      "q129_linear_quality" ->
-        s"""WITH f AS (
-           |  SELECT doc_id,
-           |    CAST(len($toksSql) AS BIGINT) AS n_tok,
-           |    CAST(len(list_filter($toksSql, x -> list_contains($stopwordList, x))) AS BIGINT) AS stop_cnt,
-           |    CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS punct_cnt,
-           |    CAST(len(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS non_ws,
-           |    CAST(len(text) AS BIGINT) AS n_chars
-           |  FROM documents),
-           |b AS (
-           |  SELECT doc_id,
-           |    (stop_cnt * 10000) // greatest(n_tok, 1) AS stop_bp,
-           |    (punct_cnt * 10000) // greatest(n_chars, 1) AS punct_bp,
-           |    (non_ws * 100) // greatest(n_tok, 1) AS atl_centi,
-           |    least(n_tok, 50) AS len_cap
-           |  FROM f),
-           |sc AS (
-           |  SELECT doc_id,
-           |    CAST(80 * len_cap - abs(stop_bp - 2500) - 2 * punct_bp
-           |      - abs(atl_centi - 500) AS BIGINT) AS score
-           |  FROM b)
-           |SELECT doc_id, score,
-           |  CAST(CASE WHEN score >= 1000 THEN 1 ELSE 0 END AS BIGINT) AS keep
-           |FROM sc""".stripMargin,
-
-      "q130_attribution" ->
-        """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
-          |FROM events c JOIN events p
-          |  ON c.user_id = p.user_id
-          | AND c.event_type = 'click' AND p.event_type = 'purchase'
-          | AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 3600 SECONDS""".stripMargin,
-
-      // q23's verified-Jaccard CTEs + a signature self-join for the
-      // agreement count; decile capped at 9 so jaccard = 1.0 lands in
-      // the top bucket on both engines
-      "q131_minhash_calibration" ->
-        s"""WITH shs AS (
-           |  SELECT doc_id, list_distinct($shinglesSql) AS sset
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, unnest(sset) AS s FROM shs),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN sh ea ON ea.doc_id = c.id_a JOIN sh eb ON eb.doc_id = c.id_b AND eb.s = ea.s
-           |  GROUP BY c.id_a, c.id_b),
-           |jac AS (
-           |  SELECT c.id_a, c.id_b,
-           |    CAST(COALESCE(i.i, 0) AS DOUBLE) / (sa.n + sb.n - CAST(COALESCE(i.i, 0) AS DOUBLE)) AS jaccard
-           |  FROM cand c
-           |  LEFT JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-           |  JOIN (SELECT doc_id, len(sset) AS n FROM shs) sa ON sa.doc_id = c.id_a
-           |  JOIN (SELECT doc_id, len(sset) AS n FROM shs) sb ON sb.doc_id = c.id_b),
-           |cal AS (
-           |  SELECT
-           |    CAST(${(0 until 6).map(i => s"(CASE WHEN sa.mh$i = sb.mh$i THEN 1 ELSE 0 END)").mkString(" + ")} AS BIGINT) AS sig_matches,
-           |    least(CAST(floor(jaccard * 10) AS BIGINT), 9) AS jaccard_decile
-           |  FROM jac JOIN sig sa ON sa.doc_id = jac.id_a JOIN sig sb ON sb.doc_id = jac.id_b)
-           |SELECT sig_matches, jaccard_decile, count(*) AS n_pairs
-           |FROM cal GROUP BY sig_matches, jaccard_decile""".stripMargin,
-
-      // q24's scoring CTE constrained to cross-label pairs, rank 1,
-      // thresholded
-      "q132_cross_mining" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, label AS query_group, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 10),
-           |c AS (SELECT vec_id AS neighbor_id, label AS neighbor_group, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-           |scored AS (
-           |  SELECT query_id, query_group, neighbor_id, neighbor_group,
-           |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos_sim
-           |  FROM q, c WHERE query_group <> neighbor_group),
-           |kept AS (SELECT * FROM scored WHERE cos_sim >= 0.1),
-           |ranked AS (
-           |  SELECT query_id, query_group, neighbor_id, neighbor_group, cos_sim,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-           |  FROM kept)
-           |SELECT query_id, query_group, rank, neighbor_id, neighbor_group,
-           |  ${pround("cos_sim", 4)} AS cos_sim
-           |FROM ranked WHERE rank <= 1""".stripMargin,
-
-      // integer cross-multiplication share test; // = Spark div on
-      // non-negative BIGINTs
-      "q134_heavy_hitters" ->
-        s"""WITH tok AS (
-           |  SELECT source, unnest($toksSql) AS term FROM documents),
-           |cnt AS (SELECT source, term, count(*) AS cnt FROM tok GROUP BY source, term),
-           |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS total FROM cnt GROUP BY source)
-           |SELECT c.source, c.term, c.cnt, t.total,
-           |  CAST((c.cnt * 10000) // t.total AS BIGINT) AS share_bp
-           |FROM cnt c JOIN tot t ON c.source = t.source
-           |WHERE c.cnt * 10000 >= t.total * 300""".stripMargin,
-
-      // the epoch-salted saltedOrderKey derivation, mirrored
-      // byte-for-byte: md5('epoch<e>' || '|' || key)
-      "q135_epoch_shuffle" ->
-        """WITH e AS (SELECT doc_id, unnest([CAST(0 AS BIGINT), CAST(1 AS BIGINT)]) AS epoch FROM documents),
-          |k AS (SELECT doc_id, epoch,
-          |        md5('epoch' || CAST(epoch AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)) AS order_key
-          |      FROM e)
-          |SELECT doc_id, epoch,
-          |  CAST(('0x' || substr(order_key, 1, 15)) AS BIGINT) % 8 AS shard,
-          |  order_key
-          |FROM k""".stripMargin,
-
-      "q136_daily_bands" ->
-        s"""SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n,
-           |  ${pround("quantile_cont(value, 0.5)", 4)} AS p50,
-           |  ${pround("quantile_cont(value, 0.95)", 4)} AS p95
-           |FROM events GROUP BY 1, 2""".stripMargin,
-
-      "q137_attribution_rate" ->
-        """WITH a AS (
-          |  SELECT DISTINCT p.event_id
-          |  FROM events c JOIN events p
-          |    ON c.user_id = p.user_id
-          |   AND c.event_type = 'click' AND p.event_type = 'purchase'
-          |   AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 3600 SECONDS),
-          |d AS (
-          |  SELECT strftime(p.ts, '%Y-%m-%d') AS day, count(*) AS n_purchases,
-          |    CAST(sum(CASE WHEN a.event_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_attributed
-          |  FROM events p LEFT JOIN a ON p.event_id = a.event_id
-          |  WHERE p.event_type = 'purchase' GROUP BY 1)
-          |SELECT day, n_purchases, n_attributed,
-          |  CAST((n_attributed * 10000) // n_purchases AS BIGINT) AS rate_bp
-          |FROM d""".stripMargin,
-
-      // len(bin(n)) - 1 is floor(log2(n)) exactly — integer on both
-      // engines, no libm near power-of-two boundaries
-      "q138_length_histogram" ->
-        s"""WITH f AS (
-           |  SELECT source, CAST(len($toksSql) AS BIGINT) AS n_tok FROM documents)
-           |SELECT source,
-           |  CAST(CASE WHEN n_tok > 0 THEN len(bin(n_tok)) - 1 ELSE -1 END AS BIGINT) AS log2_bucket,
-           |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-           |FROM f GROUP BY 1, 2""".stripMargin,
-
-      // same rarest-first prefix scheme over word 3-shingles:
-      // lpad(df)|shingle keys sort identically on both engines;
-      // ks[1:p] is DuckDB's inclusive slice = Spark's slice(ks, 1, p)
-      "q143_prefix_join" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(t) >= 3
-           |    THEN list_transform(range(1, len(t) - 1),
-           |      i -> list_aggregate(t[i : i + 2], 'string_agg', ' '))
-           |    ELSE CAST([] AS VARCHAR[]) END)) AS token
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |freq AS (SELECT token, count(*) AS df FROM toks GROUP BY token),
-           |keyed AS (
-           |  SELECT doc_id, lpad(CAST(df AS VARCHAR), 10, '0') || '|' || token AS k
-           |  FROM toks JOIN freq USING (token)),
-           |sets AS (SELECT doc_id, list_sort(list(k)) AS ks FROM keyed GROUP BY doc_id),
-           |pfx AS (
-           |  SELECT doc_id,
-           |    unnest(ks[1 : CAST(len(ks) - ceil(0.5 * len(ks)) + 1 AS BIGINT)]) AS k
-           |  FROM sets),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM pfx a JOIN pfx b ON a.k = b.k AND a.doc_id < b.doc_id),
-           |hsets AS (
-           |  SELECT doc_id, list_distinct(list_transform(ks,
-           |    x -> CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT))) AS hs
-           |  FROM sets),
-           |j AS (
-           |  SELECT c.id_a, c.id_b,
-           |    CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) AS i,
-           |    CAST(len(sa.hs) AS DOUBLE) AS na, CAST(len(sb.hs) AS DOUBLE) AS nb
-           |  FROM cand c
-           |  JOIN hsets sa ON sa.doc_id = c.id_a
-           |  JOIN hsets sb ON sb.doc_id = c.id_b),
-           |v AS (SELECT id_a, id_b, i / (na + nb - i) AS jaccard FROM j)
-           |SELECT id_a, id_b, ${pround("jaccard", 4)} AS jaccard
-           |FROM v WHERE jaccard >= 0.5""".stripMargin,
-
-      // same decimal spends + (spend desc, custkey) rank cut at
-      // ceil(n/100); share via floor of the exact double ratio
-      "q169_revenue_concentration" ->
-        """WITH sp AS (
-          |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS spend
-          |  FROM orders GROUP BY 1),
-          |bn AS (
-          |  SELECT n_name, o_custkey, spend
-          |  FROM sp JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey),
-          |r AS (
-          |  SELECT n_name, o_custkey, spend,
-          |    row_number() OVER (PARTITION BY n_name
-          |                       ORDER BY spend DESC, o_custkey) AS rk,
-          |    CAST(count(*) OVER (PARTITION BY n_name) AS BIGINT) AS n
-          |  FROM bn),
-          |k AS (
-          |  SELECT n_name, spend, rk, n,
-          |    greatest(CAST(ceil(n / 100.0) AS BIGINT), 1) AS kk
-          |  FROM r)
-          |SELECT n_name, max(n) AS n_customers, max(kk) AS n_top,
-          |  CAST(floor(CAST(sum(CASE WHEN rk <= kk THEN spend ELSE 0 END) AS DOUBLE)
-          |    * 10000 / CAST(sum(spend) AS DOUBLE)) AS BIGINT) AS top_share_bp
-          |FROM k GROUP BY n_name""".stripMargin,
-
-      // weeks = epoch-day // 7; delta via floor of the exact double
-      // ratio (negative-safe on both engines)
-      "q167_wow_delta" ->
-        """WITH w AS (
-          |  SELECT event_type,
-          |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) // 7 AS BIGINT) AS week,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM events GROUP BY 1, 2)
-          |SELECT c.event_type, c.week, c.n, p.n AS n_prev,
-          |  CAST(floor(CAST((c.n - p.n) * 10000 AS DOUBLE)
-          |    / CAST(greatest(p.n, 1) AS DOUBLE)) AS BIGINT) AS delta_bp
-          |FROM w c JOIN w p
-          |  ON p.event_type = c.event_type AND p.week = c.week - 1""".stripMargin,
-
-      // q40's session assignment; distinct (session, type) pairs with
-      // a < b; support over ALL sessions by integer floor division
-      "q168_type_affinity" ->
-        """WITH g AS (
-          |  SELECT user_id, ts, event_type,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 3600
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, event_type,
-          |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-          |                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          |  FROM g),
-          |d AS (
-          |  SELECT DISTINCT
-          |    CAST(user_id AS VARCHAR) || '#' || CAST(session_id AS VARCHAR) AS sid,
-          |    event_type
-          |  FROM s),
-          |tot AS (SELECT CAST(count(DISTINCT sid) AS BIGINT) AS t FROM d),
-          |p AS (
-          |  SELECT a.event_type AS type_a, b.event_type AS type_b
-          |  FROM d a JOIN d b ON b.sid = a.sid AND a.event_type < b.event_type),
-          |c AS (
-          |  SELECT type_a, type_b, CAST(count(*) AS BIGINT) AS n_both
-          |  FROM p GROUP BY 1, 2)
-          |SELECT type_a, type_b, n_both,
-          |  CAST((n_both * 10000) // t AS BIGINT) AS support_bp
-          |FROM c CROSS JOIN tot""".stripMargin,
-
-      // q129's integer score swept over the literal threshold grid;
-      // acceptance in basis points by floor division
-      "q165_quality_sweep" ->
-        s"""WITH f AS (
-           |  SELECT source,
-           |    CAST(len($toksSql) AS BIGINT) AS n_tok,
-           |    CAST(len(list_filter($toksSql, x -> list_contains($stopwordList, x))) AS BIGINT) AS stop_cnt,
-           |    CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS punct_cnt,
-           |    CAST(len(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS non_ws,
-           |    CAST(len(text) AS BIGINT) AS n_chars
-           |  FROM documents),
-           |s AS (
-           |  SELECT source,
-           |    80 * least(n_tok, 50)
-           |      - abs((stop_cnt * 10000) // greatest(n_tok, 1) - 2500)
-           |      - 2 * ((punct_cnt * 10000) // greatest(n_chars, 1))
-           |      - abs((non_ws * 100) // greatest(n_tok, 1) - 500) AS score
-           |  FROM f),
-           |t2 AS (SELECT CAST(unnest([0, 500, 1000, 1500, 2000, 2500]) AS BIGINT) AS threshold)
-           |SELECT source, threshold, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(CASE WHEN score >= threshold THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-           |  CAST((sum(CASE WHEN score >= threshold THEN 1 ELSE 0 END) * 10000)
-           |    // count(*) AS BIGINT) AS keep_bp
-           |FROM s CROSS JOIN t2 GROUP BY 1, 2""".stripMargin,
-
-      // in-order norm accumulation (q105's parity); mean via x2^20
-      // fixed-point BIGINT sum, bands via quantile_cont parity
-      "q166_norm_bands" ->
-        s"""WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |n AS (
-           |  SELECT label,
-           |    sqrt(list_aggregate(list_transform(v, x -> x * x), 'sum')) AS nrm
-           |  FROM e)
-           |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-           |  ${pround("CAST(sum(CAST(floor(nrm * 1048576 + 0.5) AS BIGINT)) AS DOUBLE) / (count(*) * 1048576.0)", 4)} AS mean_norm,
-           |  ${pround("quantile_cont(nrm, 0.5)", 4)} AS p50_norm,
-           |  ${pround("quantile_cont(nrm, 0.95)", 4)} AS p95_norm
-           |FROM n GROUP BY label""".stripMargin,
-
-      // same five exact sums; x = days-since-epoch integer on both
-      // engines; slope is one division of exact operands
-      "q163_trend_slope" ->
-        """WITH daily AS (
-          |  SELECT event_type,
-          |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
-          |    sum(CAST(value AS DECIMAL(18,2))) AS y
-          |  FROM events GROUP BY 1, 2),
-          |a AS (
-          |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-          |    CAST(sum(x) AS BIGINT) AS sx, sum(y) AS sy,
-          |    sum(y * x) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-          |  FROM daily GROUP BY 1)
-          |SELECT event_type, n AS n_days,
-          |  CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) <> 0.0
-          |    THEN floor(CAST(n * sxy - sx * sy AS DOUBLE)
-          |           / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000 + 0.5) / 1000000
-          |    ELSE 0.0 END AS slope
-          |FROM a""".stripMargin,
-
-      // q130's trailing-hour join reduced to the nearest click per
-      // purchase, then percentile == quantile_cont lag bands
-      "q164_conversion_lag" ->
-        s"""WITH j AS (
-           |  SELECT p.event_id AS purchase_id, p.ts AS p_ts, max(c.ts) AS c_ts
-           |  FROM events p JOIN events c
-           |    ON c.user_id = p.user_id
-           |   AND p.event_type = 'purchase' AND c.event_type = 'click'
-           |   AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 3600 SECONDS
-           |  GROUP BY 1, 2),
-           |l AS (
-           |  SELECT strftime(p_ts, '%Y-%m-%d') AS day,
-           |    floor(epoch(p_ts)) - floor(epoch(c_ts)) AS lag_s
-           |  FROM j)
-           |SELECT day, count(*) AS n_conv,
-           |  ${pround("quantile_cont(lag_s, 0.5)", 4)} AS p50_lag,
-           |  ${pround("quantile_cont(lag_s, 0.95)", 4)} AS p95_lag
-           |FROM l GROUP BY day""".stripMargin,
-
-      // same 1/2/3-gram position sets; ratios by integer floor division
-      "q161_distinct_n" ->
-        s"""WITH t AS (SELECT source, $toksSql AS tk FROM documents),
-           |g1 AS (SELECT source, unnest(tk) AS g FROM t),
-           |g2 AS (
-           |  SELECT source, unnest(CASE WHEN len(tk) >= 2
-           |    THEN list_transform(range(1, len(tk)),
-           |      i -> list_aggregate(tk[i : i + 1], 'string_agg', ' '))
-           |    ELSE CAST([] AS VARCHAR[]) END) AS g FROM t),
-           |g3 AS (
-           |  SELECT source, unnest(CASE WHEN len(tk) >= 3
-           |    THEN list_transform(range(1, len(tk) - 1),
-           |      i -> list_aggregate(tk[i : i + 2], 'string_agg', ' '))
-           |    ELSE CAST([] AS VARCHAR[]) END) AS g FROM t),
-           |u AS (
-           |  SELECT source, 1 AS n, g FROM g1
-           |  UNION ALL SELECT source, 2, g FROM g2
-           |  UNION ALL SELECT source, 3, g FROM g3)
-           |SELECT source, CAST(n AS BIGINT) AS n,
-           |  CAST(count(*) AS BIGINT) AS total,
-           |  CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
-           |  (count(DISTINCT g) * 10000) // greatest(count(*), 1) AS distinct_bp
-           |FROM u GROUP BY source, n""".stripMargin,
-
-      // percentile == quantile_cont parity (q41/q86/q136); dims are
-      // 1-based generate_subscripts on both engines
-      "q162_embed_robust" ->
-        s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |x AS (SELECT generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM e),
-           |m AS (
-           |  SELECT dim, quantile_cont(x, 0.5) AS med,
-           |    CAST(count(*) AS BIGINT) AS n
-           |  FROM x GROUP BY dim)
-           |SELECT CAST(x.dim AS BIGINT) AS dim, max(m.n) AS n,
-           |  ${pround("max(m.med)", 4)} AS med,
-           |  ${pround("quantile_cont(abs(x.x - m.med), 0.5)", 4)} AS mad
-           |FROM x JOIN m USING (dim) GROUP BY x.dim""".stripMargin,
-
-      // IDENTICAL to q154's oracle — split-invariance is the property:
-      // two-tick streaming state must equal one-shot compaction
-      "q159_streaming_cdc" ->
-        """WITH r AS (
-          |  SELECT user_id, event_id, event_type, value, ts,
-          |    row_number() OVER (PARTITION BY user_id
-          |                       ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM events)
-          |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-          |  CAST(epoch_us(ts) AS BIGINT) AS ts_us, value
-          |FROM r WHERE rn = 1 AND event_type <> 'purchase'""".stripMargin,
-
-      // q01's per-row decimal(18,4) disc-price discipline over the
-      // six-way join; date bounds as timestamp literals
-      "q160_region_volume" ->
-        """SELECT n_name, count(*) AS n_items,
-          |  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          |JOIN nation ON s_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |WHERE r_name = 'ASIA'
-          |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-          |  AND o_orderdate < TIMESTAMP '1997-01-01'
-          |GROUP BY n_name""".stripMargin,
-
-      // five unrolled merge rounds: pair stats over the sep-encoded
-      // vocab, best by (total desc, s1, s2), applied via literal
-      // replace("s1␁s2␁" -> "s1s2␁") — greedy left-to-right on both
-      // engines; chr(1) is the separator
-      "q158_bpe_merges" -> {
-        def rnd(r: Int): String = {
-          val prev = s"v${r - 1}"
-          s"""p$r AS (
-             |  SELECT ss[CAST(t.i AS INT)] AS s1, ss[CAST(t.i AS INT) + 1] AS s2,
-             |    CAST(sum(cnt) AS BIGINT) AS total
-             |  FROM (SELECT list_filter(string_split(enc, chr(1)), x -> len(x) > 0) AS ss, cnt
-             |        FROM $prev) s,
-             |    LATERAL (SELECT unnest(range(1, len(ss))) AS i) t
-             |  GROUP BY 1, 2),
-             |b$r AS (SELECT s1, s2, total FROM p$r
-             |        ORDER BY total DESC, s1, s2 LIMIT 1),
-             |v$r AS (
-             |  SELECT replace(enc, b$r.s1 || chr(1) || b$r.s2 || chr(1),
-             |                 b$r.s1 || b$r.s2 || chr(1)) AS enc, cnt
-             |  FROM v${r - 1}, b$r)""".stripMargin
-        }
-        s"""WITH w0 AS (
-           |  SELECT w, CAST(count(*) AS BIGINT) AS cnt
-           |  FROM (SELECT unnest(t) AS w FROM (SELECT $toksSql AS t FROM documents))
-           |  GROUP BY w HAVING len(w) >= 2),
-           |v0 AS (
-           |  SELECT regexp_replace(w, '(.)', '\\1' || chr(1), 'g') AS enc, cnt
-           |  FROM w0),
-           |${(1 to 5).map(rnd).mkString(",\n")}
-           |${(1 to 5).map(r =>
-              s"SELECT CAST($r AS BIGINT) AS round, s1, s2, total FROM b$r")
-             .mkString("\nUNION ALL\n")}""".stripMargin
-      },
-
-      // same ordered fold: list(dv ORDER BY day) + list_reduce seeded
-      // with the first element — identical IEEE ops in identical order
-      "q156_ewma" ->
-        """WITH daily AS (
-          |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-          |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS dv
-          |  FROM events GROUP BY 1, 2),
-          |v AS (
-          |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-          |    list(dv ORDER BY day) AS l
-          |  FROM daily GROUP BY 1)
-          |SELECT event_type, n_days,
-          |  floor(l[-1] * 100 + 0.5) / 100 AS last_day,
-          |  floor(list_reduce(CAST(l AS DOUBLE[]),
-          |    (acc, x) -> acc * 0.5 + x * 0.5) * 10000 + 0.5) / 10000 AS ewma
-          |FROM v""".stripMargin,
-
-      // q21's banded-candidate chain + the sorted-order wedge close:
-      // (a,b)x(b,c) semi-joined against (a,c) finds each triangle once
-      "q157_triangles" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |e AS (
-           |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |tri AS (
-           |  SELECT ab.a, ab.b, bc.b AS c
-           |  FROM e ab JOIN e bc ON bc.a = ab.b
-           |  WHERE EXISTS (SELECT 1 FROM e ac WHERE ac.a = ab.a AND ac.b = bc.b)),
-           |n AS (
-           |  SELECT unnest([a, b, c]) AS node FROM tri)
-           |SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-           |FROM n GROUP BY node""".stripMargin,
-
-      // bigrams re-derived positionally (pos + 1 self-join = Spark's
-      // per-doc lead window); probabilities are ratios of exact
-      // integer counts, V attaches as the one-row vocab aggregate
-      "q152_bigram_lm" ->
-        s"""WITH t AS (
-           |  SELECT doc_id, generate_subscripts(tk, 1) AS pos, unnest(tk) AS tok
-           |  FROM (SELECT doc_id, $toksSql AS tk FROM documents)),
-           |bg AS (
-           |  SELECT a.doc_id, a.tok AS ta, b.tok AS tb
-           |  FROM t a JOIN t b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1),
-           |c2 AS (SELECT ta, tb, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1, 2),
-           |c1 AS (SELECT ta, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1),
-           |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vv FROM t)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           |  ${pround("avg(log10(CAST(c2 + 1 AS DOUBLE) / CAST(c1 + vv AS DOUBLE)))", 4)} AS lm2_score
-           |FROM bg JOIN c2 USING (ta, tb) JOIN c1 USING (ta) CROSS JOIN v
-           |GROUP BY doc_id""".stripMargin,
-
-      // per-dim means rebuilt in index order (q105's shape) for both
-      // the global and per-label centroids; the difference vector and
-      // its norm accumulate in dimension order on both engines
-      "q153_centroid_drift" ->
-        s"""WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |x AS (SELECT label, generate_subscripts(v, 1) AS i, unnest(v) AS x FROM e),
-           |g AS (SELECT i, avg(x) AS gx FROM x GROUP BY i),
-           |m AS (SELECT label, i, avg(x) AS mx FROM x GROUP BY 1, 2),
-           |d AS (
-           |  SELECT label, list(mx - gx ORDER BY i) AS dv
-           |  FROM m JOIN g USING (i) GROUP BY label),
-           |c AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs FROM e GROUP BY label)
-           |SELECT label, n_vecs,
-           |  ${pround("sqrt(list_aggregate(list_transform(dv, z -> z * z), 'sum'))", 4)} AS drift
-           |FROM d JOIN c USING (label)""".stripMargin,
-
-      // last-writer-wins under (ts DESC, event_id DESC); a trailing
-      // 'purchase' op tombstones the key out of the final state
-      "q154_cdc_compact" ->
-        """WITH r AS (
-          |  SELECT user_id, event_id, event_type, value, ts,
-          |    row_number() OVER (PARTITION BY user_id
-          |                       ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM events)
-          |SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-          |  CAST(epoch_us(ts) AS BIGINT) AS ts_us, value
-          |FROM r WHERE rn = 1 AND event_type <> 'purchase'""".stripMargin,
-
-      // integer-exact weighted-median selection: running BIGINT weight
-      // under the (val, doc_id) total order, pick min val at 2*cum>=tot
-      "q155_weighted_median" ->
-        s"""WITH b AS (
-           |  SELECT source, doc_id, CAST(n_chars AS BIGINT) AS val,
-           |    CAST(len($toksSql) AS BIGINT) AS wgt
-           |  FROM documents),
-           |t2 AS (
-           |  SELECT source, CAST(sum(wgt) AS BIGINT) AS tot,
-           |    CAST(count(*) AS BIGINT) AS n_rows
-           |  FROM b GROUP BY 1),
-           |c AS (
-           |  SELECT source, val, wgt,
-           |    CAST(sum(wgt) OVER (PARTITION BY source ORDER BY val, doc_id
-           |                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-           |  FROM b)
-           |SELECT c.source, max(t2.n_rows) AS n_rows, max(t2.tot) AS w_total,
-           |  min(CASE WHEN cum * 2 >= tot THEN val END) AS w_median
-           |FROM c JOIN t2 USING (source) GROUP BY c.source""".stripMargin,
-
-      // q146's binning/smoothing over the UNION bin domain (batch
-      // full-join baseline); batches are doc_id % 4 = 1 and 3, the
-      // baseline doc_id % 2 = 0 — labels derived as 'b' || (id % 4)
-      "q151_streaming_drift" ->
-        s"""WITH v AS (
-           |  SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS val FROM documents),
-           |b AS (
-           |  SELECT doc_id,
-           |    CASE WHEN val > 0 THEN CAST(len(bin(val)) - 1 AS BIGINT)
-           |         ELSE -1 END AS bin
-           |  FROM v),
-           |base AS (
-           |  SELECT bin, CAST(count(*) AS BIGINT) AS cb FROM b
-           |  WHERE doc_id % 2 = 0 GROUP BY 1),
-           |bh AS (
-           |  SELECT 'b' || CAST(doc_id % 4 AS VARCHAR) AS batch, bin,
-           |    CAST(count(*) AS BIGINT) AS ca
-           |  FROM b WHERE doc_id % 2 = 1 GROUP BY 1, 2),
-           |labels AS (SELECT DISTINCT batch FROM bh),
-           |lb AS (SELECT l.batch, bb.bin, bb.cb FROM labels l CROSS JOIN base bb),
-           |g AS (
-           |  SELECT COALESCE(lb.batch, bh.batch) AS batch,
-           |    COALESCE(lb.bin, bh.bin) AS bin,
-           |    COALESCE(lb.cb, 0) AS cb, COALESCE(bh.ca, 0) AS ca
-           |  FROM lb FULL JOIN bh ON bh.batch = lb.batch AND bh.bin = lb.bin),
-           |tots AS (
-           |  SELECT batch, CAST(sum(ca) AS BIGINT) AS na,
-           |    CAST(sum(cb) AS BIGINT) AS nb,
-           |    CAST(count(*) AS BIGINT) AS nbins
-           |  FROM g GROUP BY 1),
-           |c AS (
-           |  SELECT g.batch, t.na, t.nbins,
-           |    CAST(${pround(
-               "(CAST(ca + 1 AS DOUBLE) / CAST(na + nbins AS DOUBLE) - " +
-               "CAST(cb + 1 AS DOUBLE) / CAST(nb + nbins AS DOUBLE)) * " +
-               "log10(CAST((ca + 1) * (nb + nbins) AS DOUBLE) / " +
-               "CAST((cb + 1) * (na + nbins) AS DOUBLE))", 6)} AS DECIMAL(18,6)) AS contrib
-           |  FROM g JOIN tots t USING (batch))
-           |SELECT batch, max(na) AS n_rows, max(nbins) AS n_bins,
-           |  CAST(sum(contrib) AS DOUBLE) AS psi
-           |FROM c GROUP BY batch""".stripMargin,
-
-      // q129's integer linear score vs the n_tok >= 20 heuristic;
-      // kappa rearranged over a common denominator = one division of
-      // exact BIGINTs (den = 0 i.e. constant rater -> 0)
-      "q149_rater_kappa" ->
-        s"""WITH f AS (
-           |  SELECT doc_id, source,
-           |    CAST(len($toksSql) AS BIGINT) AS n_tok,
-           |    CAST(len(list_filter($toksSql, x -> list_contains($stopwordList, x))) AS BIGINT) AS stop_cnt,
-           |    CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS punct_cnt,
-           |    CAST(len(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS non_ws,
-           |    CAST(len(text) AS BIGINT) AS n_chars
-           |  FROM documents),
-           |r AS (
-           |  SELECT source,
-           |    CASE WHEN 80 * least(n_tok, 50)
-           |      - abs((stop_cnt * 10000) // greatest(n_tok, 1) - 2500)
-           |      - 2 * ((punct_cnt * 10000) // greatest(n_chars, 1))
-           |      - abs((non_ws * 100) // greatest(n_tok, 1) - 500) >= 1000
-           |      THEN 1 ELSE 0 END AS ra,
-           |    CASE WHEN n_tok >= 20 THEN 1 ELSE 0 END AS rb
-           |  FROM f),
-           |k AS (
-           |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(ra * rb) AS BIGINT) AS a,
-           |    CAST(sum(ra * (1 - rb)) AS BIGINT) AS b,
-           |    CAST(sum((1 - ra) * rb) AS BIGINT) AS c,
-           |    CAST(sum((1 - ra) * (1 - rb)) AS BIGINT) AS d
-           |  FROM r GROUP BY source),
-           |e AS (
-           |  SELECT source, n, a, d,
-           |    n * (a + d) - ((a + b) * (a + c) + (c + d) * (b + d)) AS num,
-           |    n * n - ((a + b) * (a + c) + (c + d) * (b + d)) AS den
-           |  FROM k)
-           |SELECT source, n, a AS n_both_keep, d AS n_both_drop,
-           |  CASE WHEN den <> 0 THEN CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-           |       ELSE 0.0 END AS kappa
-           |FROM e""".stripMargin,
-
-      // same distinct (day, user) base; DATE + 1 is next-day on both
-      // engines; jaccard by integer floor division
-      "q150_dau_overlap" ->
-        """WITH du AS (
-          |  SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS day, user_id FROM events),
-          |c AS (SELECT day, CAST(count(*) AS BIGINT) AS n FROM du GROUP BY 1),
-          |nx AS (
-          |  SELECT a.day, CAST(count(*) AS BIGINT) AS n_both
-          |  FROM du a JOIN du b ON b.user_id = a.user_id
-          |    AND b.day = strftime(CAST(a.day AS DATE) + 1, '%Y-%m-%d')
-          |  GROUP BY 1)
-          |SELECT c.day, c.n AS n_day, c2.n AS n_next,
-          |  COALESCE(nx.n_both, 0) AS n_both,
-          |  (COALESCE(nx.n_both, 0) * 10000)
-          |    // (c.n + c2.n - COALESCE(nx.n_both, 0)) AS jaccard_bp
-          |FROM c JOIN c c2 ON c2.day = strftime(CAST(c.day AS DATE) + 1, '%Y-%m-%d')
-          |LEFT JOIN nx ON nx.day = c.day""".stripMargin,
-
-      // same log2 binning (len(bin(v))-1 — integer on both engines),
-      // +1 Laplace smoothing from exact integer counts, per-bin
-      // contribution pround6 -> DECIMAL(18,6) summed exactly
-      "q146_psi_drift" ->
-        s"""WITH v AS (SELECT source AS grp, CAST(len($toksSql) AS BIGINT) AS val FROM documents),
-           |b AS (
-           |  SELECT grp,
-           |    CASE WHEN val > 0 THEN CAST(len(bin(val)) - 1 AS BIGINT)
-           |         ELSE -1 END AS bin
-           |  FROM v),
-           |gb AS (SELECT grp, bin, CAST(count(*) AS BIGINT) AS ca FROM b GROUP BY 1, 2),
-           |bb AS (SELECT bin, CAST(count(*) AS BIGINT) AS cb FROM b GROUP BY 1),
-           |gt AS (SELECT grp, CAST(count(*) AS BIGINT) AS na FROM b GROUP BY 1),
-           |bt AS (SELECT CAST(count(*) AS BIGINT) AS nb,
-           |              CAST(count(DISTINCT bin) AS BIGINT) AS nbins FROM b),
-           |grid AS (
-           |  SELECT gt.grp, gt.na, bb.bin, bb.cb, bt.nb, bt.nbins
-           |  FROM gt CROSS JOIN bb CROSS JOIN bt),
-           |j AS (
-           |  SELECT g.grp, g.na, g.bin, g.cb, g.nb, g.nbins,
-           |    COALESCE(gb.ca, 0) AS ca
-           |  FROM grid g LEFT JOIN gb ON gb.grp = g.grp AND gb.bin = g.bin),
-           |c AS (
-           |  SELECT grp, na,
-           |    CAST(${pround(
-               "(CAST(ca + 1 AS DOUBLE) / CAST(na + nbins AS DOUBLE) - " +
-               "CAST(cb + 1 AS DOUBLE) / CAST(nb + nbins AS DOUBLE)) * " +
-               "log10(CAST((ca + 1) * (nb + nbins) AS DOUBLE) / " +
-               "CAST((cb + 1) * (na + nbins) AS DOUBLE))", 6)} AS DECIMAL(18,6)) AS contrib
-           |  FROM j)
-           |SELECT grp AS source, max(na) AS n_rows,
-           |  CAST(sum(contrib) AS DOUBLE) AS psi
-           |FROM c GROUP BY grp""".stripMargin,
-
-      // same k=8 grams / w=4 windows / min-md5 selection, ROW-BASED:
-      // one row per gram position, the window min as a frame aggregate
-      // (ROWS CURRENT..3 FOLLOWING ordered by position within doc).
-      // The former list form — list_min(hs[j : j+3]) inside a
-      // list_transform — copied a fresh 4-slice per window, O(n·w)
-      // allocations that made this the ratchet's worst oracle
-      // (1,307 s at sf1.0; the row form is ~70× cheaper at sf0.1 with
-      // identical output). Docs shorter than 4 grams keep only the
-      // i=1 window, whose frame covers the whole gram stream = the
-      // old list_min(hs) fallback; docs under k=8 chars emit nothing.
-      "q147_winnow_pairs" ->
-        """WITH pos AS (
-          |  SELECT doc_id, unnest(range(1, len(text) - 6)) AS i,
-          |    lower(text) AS lt
-          |  FROM documents WHERE len(text) >= 8),
-          |h AS (SELECT doc_id, i, md5(substr(lt, i, 8)) AS hv FROM pos),
-          |w AS (
-          |  SELECT doc_id, i,
-          |    min(hv) OVER (PARTITION BY doc_id ORDER BY i
-          |                  ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mn,
-          |    count(*) OVER (PARTITION BY doc_id) AS ng
-          |  FROM h),
-          |s AS (
-          |  SELECT DISTINCT doc_id, mn AS fp FROM w
-          |  WHERE (ng < 4 AND i = 1) OR (ng >= 4 AND i <= ng - 3)),
-          |keep AS (
-          |  SELECT fp FROM s GROUP BY fp HAVING count(*) BETWEEN 2 AND 20),
-          |p AS (
-          |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          |  FROM s a JOIN s b USING (fp) JOIN keep USING (fp)
-          |  WHERE a.doc_id < b.doc_id)
-          |SELECT id_a, id_b, CAST(count(*) AS BIGINT) AS n_shared
-          |FROM p GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-      // q40's session assignment (gap > 3600 splits, second-truncated
-      // timestamps), lead within (user, session) under the (ts,
-      // event_id) total order; p_bp by integer floor division
-      "q148_transitions" ->
-        """WITH g AS (
-          |  SELECT user_id, ts, event_id, event_type,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 3600
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, ts, event_id, event_type,
-          |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-          |                  ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM g),
-          |t2 AS (
-          |  SELECT event_type AS from_type,
-          |    lead(event_type) OVER (PARTITION BY user_id, sid
-          |                           ORDER BY ts, event_id) AS to_type
-          |  FROM s),
-          |p AS (
-          |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-          |  FROM t2 WHERE to_type IS NOT NULL GROUP BY 1, 2),
-          |tot AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM p GROUP BY 1)
-          |SELECT p.from_type, p.to_type, p.n, (p.n * 10000) // tot.tot AS p_bp
-          |FROM p JOIN tot USING (from_type)""".stripMargin,
-
-      // same first-token blocking + per-record best (dist, match_id)
-      // order; DuckDB levenshtein is the same unit-cost edit distance
-      // Spark computes (threshold arg only short-circuits the DP).
-      // Pairs over DISTINCT NAMES, mirroring the operator — the
-      // record-level self-join this replaced was quadratic in block
-      // DENSITY (100× pairs for 10× rows at sf1.0, where every name
-      // exists ×10) while the distinct-name pair space is constant.
-      // Record-level best decomposes exactly: a duplicated name's best
-      // is its min other id at dist 0 (cross-name dist ≥ 1 can never
-      // win); a unique name's best is the min (dist, id1) cross-name.
-      "q144_fuzzy_match" ->
-        """WITH p AS (
-          |  SELECT p_partkey AS id, lower(trim(p_name)) AS nm FROM part),
-          |d AS (
-          |  SELECT nm, min(id) AS id1,
-          |    min(CASE WHEN rn = 2 THEN id END) AS id2,
-          |    count(*) AS c
-          |  FROM (SELECT nm, id,
-          |          row_number() OVER (PARTITION BY nm ORDER BY id) AS rn
-          |        FROM p)
-          |  GROUP BY nm),
-          |dn AS (SELECT d.*, regexp_split_to_array(nm, '\s+')[1] AS blk FROM d),
-          |x AS (
-          |  SELECT a.nm, b.id1 AS xid, levenshtein(a.nm, b.nm) AS dist
-          |  FROM dn a JOIN dn b ON a.blk = b.blk AND a.nm <> b.nm),
-          |bx AS (
-          |  SELECT nm, xid, dist,
-          |    row_number() OVER (PARTITION BY nm ORDER BY dist, xid) AS rn
-          |  FROM x WHERE dist <= 3)
-          |SELECT p.id,
-          |  CASE WHEN d.c > 1
-          |       THEN (CASE WHEN p.id = d.id1 THEN d.id2 ELSE d.id1 END)
-          |       ELSE bx.xid END AS match_id,
-          |  CASE WHEN d.c > 1 THEN 0 ELSE bx.dist END AS dist
-          |FROM p JOIN d USING (nm)
-          |LEFT JOIN (SELECT nm, xid, dist FROM bx WHERE rn = 1) bx USING (nm)
-          |WHERE d.c > 1 OR bx.xid IS NOT NULL""".stripMargin,
-
-      // document-cooccurrence PMI; ORDER BY the raw rational ratio
-      // (one IEEE division of exact integers — bit-identical on both
-      // engines) so the LIMIT boundary cannot flip on a libm-log ulp
-      "q145_pmi_pairs" ->
-        s"""WITH tok AS (
-           |  SELECT doc_id, unnest(list_distinct($toksSql)) AS term FROM documents),
-           |dfc AS (
-           |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tok
-           |  GROUP BY term HAVING count(*) >= 5),
-           |kept AS (SELECT doc_id, term, df FROM tok JOIN dfc USING (term)),
-           |n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM documents),
-           |pr AS (
-           |  SELECT a.term AS term_a, b.term AS term_b,
-           |    CAST(count(*) AS BIGINT) AS n_both,
-           |    max(a.df) AS df_a, max(b.df) AS df_b
-           |  FROM kept a JOIN kept b ON a.doc_id = b.doc_id AND a.term < b.term
-           |  GROUP BY 1, 2),
-           |r AS (
-           |  SELECT term_a, term_b, n_both,
-           |    CAST(n_both * n_docs AS DOUBLE) / CAST(df_a * df_b AS DOUBLE) AS ratio
-           |  FROM pr CROSS JOIN n)
-           |SELECT term_a, term_b, n_both, ${pround("log10(ratio)", 4)} AS pmi
-           |FROM r ORDER BY ratio DESC, term_a, term_b LIMIT 40""".stripMargin,
-
-      // q31's quality formula ranked within source; integer basis
-      // points via // over greatest(n-1, 1) so singleton sources land
-      // at 0 instead of dividing by zero
-      "q141_quality_percentile" ->
-        s"""WITH q AS (
-           |  SELECT doc_id, source,
-           |    greatest(least(least(CAST(len(t) AS DOUBLE) / 50.0, 1.0) * 0.4
-           |      + (1.0 - abs((CASE WHEN len(t) > 0 THEN CAST(len(list_filter(t, x -> list_contains($stopwordList, x))) AS DOUBLE) / len(t) ELSE 0.0 END) - 0.25) * 2.0) * 0.3
-           |      + (1.0 - least(abs((CASE WHEN len(t) > 0 THEN CAST(list_aggregate(list_transform(t, x -> len(x)), 'sum') AS DOUBLE) / len(t) ELSE 0.0 END) - 5.0) / 5.0, 1.0)) * 0.3, 1.0), 0.0) AS ql
-           |  FROM (SELECT doc_id, source, text, $toksSql AS t FROM documents)),
-           |r AS (
-           |  SELECT doc_id, source,
-           |    row_number() OVER (PARTITION BY source ORDER BY ql, doc_id) AS rn,
-           |    count(*) OVER (PARTITION BY source) AS n
-           |  FROM q)
-           |SELECT doc_id, source,
-           |  CAST(((rn - 1) * 10000) // greatest(n - 1, 1) AS BIGINT) AS pct_bp
-           |FROM r""".stripMargin,
-
-      // the MV maintained over two ticks must equal the one-shot
-      // aggregate — q54's decimal-sum discipline
-      "q142_streaming_daily_agg" ->
-        s"""SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n,
-           |  ${pround("CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)", 2)} AS total
-           |FROM events GROUP BY 1, 2""".stripMargin,
-
-      // the same bit surgery, generated for 31 levels; >>, &, << are
-      // BIGINT-exact on both engines
-      "q139_zorder_key" -> {
-        val terms = (0 until 31).map { i =>
-          s"(((l_orderkey >> $i) & 1) << ${2 * i}) | (((l_partkey >> $i) & 1) << ${2 * i + 1})"
-        }.mkString(" | ")
-        s"""SELECT l_orderkey, l_partkey, l_linenumber,
-           |  CAST($terms AS BIGINT) AS zkey
-           |FROM lineitem""".stripMargin
-      },
-
-      // every event lies in exactly 4 epoch-aligned (1h, 15min)
-      // windows: starts (t//900 - k) * 900 for k = 0..3 — Spark's
-      // window() semantics restated with unnest
-      "q140_sliding_window" ->
-        """WITH e AS (
-          |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events),
-          |w AS (SELECT user_id, t, unnest([0, 1, 2, 3]) AS k FROM e),
-          |win AS (SELECT user_id, ((t // 900) - k) * 900 AS window_start FROM w)
-          |SELECT window_start, count(*) AS n_events,
-          |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-          |FROM win GROUP BY window_start""".stripMargin,
-
-      // same md5-half prime fold; every aggregate output cast so the
-      // engines agree on BIGINT
-      "q133_shard_checksums" ->
-        """SELECT doc_id % 16 AS shard, count(*) AS n_docs,
-          |  CAST(sum(CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) % 1000000007) AS BIGINT) AS content_checksum,
-          |  CAST(sum(n_chars) AS BIGINT) AS char_checksum,
-          |  min(doc_id) AS min_id, max(doc_id) AS max_id
-          |FROM documents GROUP BY doc_id % 16""".stripMargin,
-
-      // per-dim means rebuilt in index order; centered list via the
-      // (x, i) index lambda; norm = in-order list_aggregate sum, same
-      // accumulation order as the Spark HOF
-      "q105_embed_center" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |m AS (SELECT i, avg(x) AS mx
-           |      FROM (SELECT generate_subscripts(v, 1) AS i, unnest(v) AS x FROM e)
-           |      GROUP BY i),
-           |mv AS (SELECT list(mx ORDER BY i) AS mvec FROM m),
-           |c AS (
-           |  SELECT vec_id,
-           |    list_transform(v, (x, i) -> x - mvec[i]) AS cv
-           |  FROM e, mv),
-           |n AS (
-           |  SELECT vec_id, cv,
-           |    sqrt(list_aggregate(list_transform(cv, x -> x * x), 'sum')) AS nrm
-           |  FROM c)
-           |SELECT vec_id, ${pround("nrm", 4)} AS center_dist,
-           |  ${pround("CASE WHEN nrm > 0 THEN cv[1] / nrm ELSE cv[1] END", 4)} AS first_dim
-           |FROM n""".stripMargin,
-
-      // two-phase restatement of the stream doctrine: tick-1 evens
-      // resolve transitively among themselves; tick-2 odds drop on ANY
-      // band collision with an accepted even OR lose the intra-tick
-      // transitive resolution among all odds
-      // both per-tick dedup closures use the unrolled relax+shortcut
-      // label propagation (ccUnrolledSql) — see q70
-      "q108_streaming_embed_dedup" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |bk AS (SELECT vec_id, unnest([$embBandKeyList]) AS band_key FROM e),
-           |bk1 AS (SELECT * FROM bk WHERE vec_id % 2 = 0),
-           |cand1 AS (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-           |          FROM bk1 a JOIN bk1 b ON a.band_key = b.band_key AND a.vec_id < b.vec_id),
-           |edges1 AS MATERIALIZED (SELECT src, dst FROM cand1 UNION SELECT dst, src FROM cand1),
-           |${ccUnrolledSql("edges1", "wa")},
-           |losers1 AS (SELECT node AS vec_id FROM wam WHERE node <> root),
-           |acc1 AS (SELECT vec_id FROM e WHERE vec_id % 2 = 0
-           |         AND vec_id NOT IN (SELECT vec_id FROM losers1)),
-           |bk2 AS (SELECT * FROM bk WHERE vec_id % 2 = 1),
-           |hits2 AS (SELECT DISTINCT b2.vec_id FROM bk2 b2
-           |          JOIN (SELECT band_key FROM bk1 WHERE vec_id IN (SELECT vec_id FROM acc1)) k
-           |          ON b2.band_key = k.band_key),
-           |cand2 AS (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-           |          FROM bk2 a JOIN bk2 b ON a.band_key = b.band_key AND a.vec_id < b.vec_id),
-           |edges2 AS MATERIALIZED (SELECT src, dst FROM cand2 UNION SELECT dst, src FROM cand2),
-           |${ccUnrolledSql("edges2", "wb")},
-           |losers2 AS (SELECT node AS vec_id FROM wbm WHERE node <> root),
-           |acc2 AS (SELECT vec_id FROM e WHERE vec_id % 2 = 1
-           |         AND vec_id NOT IN (SELECT vec_id FROM hits2)
-           |         AND vec_id NOT IN (SELECT vec_id FROM losers2))
-           |SELECT vec_id FROM acc1 UNION ALL SELECT vec_id FROM acc2""".stripMargin,
-
-      // token-for-token mirror of quantizeError8's arithmetic tree
-      "q106_quantize_error" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |b AS (SELECT i, min(x) AS lo, max(x) AS hi
-           |      FROM (SELECT generate_subscripts(v, 1) AS i, unnest(v) AS x FROM e)
-           |      GROUP BY i),
-           |bl AS (SELECT list(lo ORDER BY i) AS lo, list(hi ORDER BY i) AS hi FROM b),
-           |r AS (
-           |  SELECT vec_id,
-           |    list_transform(v, (x, i) ->
-           |      x - (lo[i] + (CASE WHEN hi[i] > lo[i]
-           |                    THEN floor((x - lo[i]) / (hi[i] - lo[i]) * 255.0 + 0.5)
-           |                    ELSE 0.0 END) / 255.0 * (hi[i] - lo[i]))) AS err
-           |  FROM e, bl)
-           |SELECT vec_id,
-           |  ${pround("sqrt(list_aggregate(list_transform(err, x -> x * x), 'sum') / len(err))", 6)} AS rmse,
-           |  ${pround("list_max(list_transform(err, x -> abs(x)))", 6)} AS max_abs_err
-           |FROM r""".stripMargin,
-
-      "q24_ann_bruteforce" ->
-        s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 10),
-          |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-          |scored AS (
-          |  SELECT query_id, neighbor_id,
-          |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos_sim
-          |  FROM q, c WHERE query_id <> neighbor_id),
-          |ranked AS (
-          |  SELECT query_id, neighbor_id, cos_sim,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-          |  FROM scored)
-          |SELECT query_id, rank, neighbor_id, ${pround("cos_sim", 4)} AS cos_sim
-          |FROM ranked WHERE rank <= 3""".stripMargin,
-
-      // mirrors Dedup.simhashSignatures64/simhashPairs: 64-bit signature
-      // as four 16-bit band values (band b = hex digits [4b+1, 4b+4] of
-      // md5(token)), band equi-join, Hamming = sum of per-band popcounts
-      "q27_simhash_pairs" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS token FROM documents),
-           |votes AS (
-           |  SELECT doc_id, r1.b, r2.j,
-           |    sum(CASE WHEN (CAST(('0x' || substr(md5(token), r1.b * 4 + 1, 4)) AS BIGINT) >> r2.j) & 1 = 1
-           |             THEN 1 ELSE -1 END) AS v
-           |  FROM toks, unnest(range(0, 4)) AS r1(b), unnest(range(0, 16)) AS r2(j)
-           |  GROUP BY doc_id, r1.b, r2.j),
-           |bandsig AS (
-           |  SELECT doc_id, b, CAST(sum(CASE WHEN v >= 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS s
-           |  FROM votes GROUP BY doc_id, b),
-           |sigs AS (
-           |  SELECT doc_id,
-           |    max(CASE WHEN b = 0 THEN s END) AS s0, max(CASE WHEN b = 1 THEN s END) AS s1,
-           |    max(CASE WHEN b = 2 THEN s END) AS s2, max(CASE WHEN b = 3 THEN s END) AS s3
-           |  FROM bandsig GROUP BY doc_id),
-           |banded AS (
-           |  SELECT doc_id, s0, s1, s2, s3,
-           |    CAST(r.b AS VARCHAR) || ':' || CAST((CASE r.b WHEN 0 THEN s0 WHEN 1 THEN s1 WHEN 2 THEN s2 ELSE s3 END) AS VARCHAR) AS band
-           |  FROM sigs, unnest(range(0, 4)) AS r(b))
-           |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-           |  CAST(bit_count(xor(a.s0, b.s0)) + bit_count(xor(a.s1, b.s1))
-           |    + bit_count(xor(a.s2, b.s2)) + bit_count(xor(a.s3, b.s3)) AS INTEGER) AS hamming
-           |FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-           |WHERE bit_count(xor(a.s0, b.s0)) + bit_count(xor(a.s1, b.s1))
-           |    + bit_count(xor(a.s2, b.s2)) + bit_count(xor(a.s3, b.s3)) <= 3""".stripMargin,
-
-      // mirrors Similarity.ivfTopK with the label as the coarse cell:
-      // element-wise-mean centroids, nprobe=2 routing (ties to cell asc),
-      // per-cell scan, top-3 by cosine (ties to neighbor_id asc)
-      "q25_ann_ivf" ->
-        s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |ex AS (SELECT label, unnest(v) AS x, unnest(range(1, 1 + len(v))) AS pos FROM e),
-           |cent AS (SELECT label AS cell, pos, avg(x) AS m FROM ex GROUP BY label, pos),
-           |centroid AS (SELECT cell, list(m ORDER BY pos) AS c FROM cent GROUP BY cell),
-           |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-           |routed AS (
-           |  SELECT query_id, qv, cell,
-           |    list_dot_product(qv, c) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c, c))) AS c_sim
-           |  FROM q, centroid),
-           |probes AS (
-           |  SELECT query_id, qv, cell FROM routed
-           |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY c_sim DESC, cell ASC) <= 2),
-           |scored AS (
-           |  SELECT p.query_id, e.vec_id AS neighbor_id,
-           |    list_dot_product(p.qv, e.v) / (sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(e.v, e.v))) AS cos_sim
-           |  FROM probes p JOIN e ON e.label = p.cell
-           |  WHERE p.query_id <> e.vec_id),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos_sim,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-           |  FROM scored)
-           |SELECT query_id, rank, neighbor_id, ${pround("cos_sim", 4)} AS cos_sim
-           |FROM ranked WHERE rank <= 3""".stripMargin,
-
-      // the replayable spherical-Lloyd fit unrolled round-by-round
-      // (the PageRank discipline): smallest-id init, argmax-cosine
-      // assignment (ties -> smallest cell, same order as the engine's
-      // max(struct(sim, -cell))), per-dim mean rebuild, then the q25
-      // routing/scan body over the final assignment
-      "q34_ann_kmeans" ->
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |init AS (
-           |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS c
-           |  FROM e QUALIFY row_number() OVER (ORDER BY vec_id) <= 8),
-           |a0 AS (
-           |  SELECT vec_id, v, cell FROM (
-           |    SELECT e.vec_id, e.v, i.cell,
-           |      list_dot_product(e.v, i.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(i.c, i.c))) AS s
-           |    FROM e, init i)
-           |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) = 1),
-           |cx1 AS (
-           |  SELECT cell, pos, avg(x) AS m
-           |  FROM (SELECT cell, unnest(v) AS x,
-           |          unnest(range(1, 1 + len(v))) AS pos FROM a0)
-           |  GROUP BY cell, pos),
-           |cent1 AS (SELECT cell, list(m ORDER BY pos) AS c FROM cx1 GROUP BY cell),
-           |a1 AS (
-           |  SELECT vec_id, v, cell FROM (
-           |    SELECT e.vec_id, e.v, c1.cell,
-           |      list_dot_product(e.v, c1.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c1.c, c1.c))) AS s
-           |    FROM e, cent1 c1)
-           |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) = 1),
-           |cx2 AS (
-           |  SELECT cell, pos, avg(x) AS m
-           |  FROM (SELECT cell, unnest(v) AS x,
-           |          unnest(range(1, 1 + len(v))) AS pos FROM a1)
-           |  GROUP BY cell, pos),
-           |cent2 AS (SELECT cell, list(m ORDER BY pos) AS c FROM cx2 GROUP BY cell),
-           |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-           |routed AS (
-           |  SELECT query_id, qv, cell,
-           |    list_dot_product(qv, c) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c, c))) AS c_sim
-           |  FROM q, cent2),
-           |probes AS (
-           |  SELECT query_id, qv, cell FROM routed
-           |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY c_sim DESC, cell ASC) <= 3),
-           |scored AS (
-           |  SELECT p.query_id, a1.vec_id AS neighbor_id,
-           |    list_dot_product(p.qv, a1.v) / (sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(a1.v, a1.v))) AS cos_sim
-           |  FROM probes p JOIN a1 ON a1.cell = p.cell
-           |  WHERE p.query_id <> a1.vec_id),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos_sim,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-           |  FROM scored)
-           |SELECT query_id, rank, neighbor_id, ${pround("cos_sim", 4)} AS cos_sim
-           |FROM ranked WHERE rank <= 3""".stripMargin,
-
-      "q26_embedding_neardup" ->
-        s"""$embeddingPairsSql
-           |SELECT id_a, id_b, ${pround("c2", 4)} AS cosine FROM p WHERE c2 >= 0.3""".stripMargin,
-
-      // transitive clusters over the embedding near-dup graph: q26's
-      // pair list as edges, resolved by the same recursive
-      // min-reachable-id walk as q65's oracle
-      // unrolled relax+shortcut label propagation (ccUnrolledSql) in
-      // place of the former transitive-closure walk, whose
-      // O(Σ component²) row count blew up at sf1.0 when SRP buckets
-      // percolate — this form is rounds × |E| and sf1.0-feasible
-      "q70_embedding_components" ->
-        s"""$embeddingPairsSql,
-           |half AS (SELECT id_a, id_b FROM p WHERE c2 >= 0.3),
-           |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM half
-           |          UNION SELECT id_b, id_a FROM half),
-           |${ccUnrolledSql("edges", "l")}
-           |SELECT node, root AS component FROM lm""".stripMargin,
-
-      // the transitive-closure (connected-component) keep policy —
-      // run()'s default; see curationSql above
-      "q46_curation_pipeline" -> curationSql(transitive = true),
-
-      "q28_asof_join" ->
-        """SELECT c.event_id AS event_id, c.user_id AS user_id, p.event_id AS purchase_id
-          |FROM (SELECT * FROM events WHERE event_type = 'click') c
-          |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-          |  ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin,
-
-      // nearest = closer of the backward and forward as-of matches inside
-      // the ±450s band, backward on ties; the forward leg reuses the
-      // backward ASOF operator on negated epoch micros
-      "q63_asof_nearest" ->
-        """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-          |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-          |b AS (
-          |  SELECT c.event_id, c.user_id, c.ts, p.event_id AS b_id,
-          |    epoch_us(c.ts) - epoch_us(p.ts) AS b_diff
-          |  FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts),
-          |f AS (
-          |  SELECT c2.event_id, p2.event_id AS f_id, c2.nts - p2.nts AS f_diff
-          |  FROM (SELECT event_id, user_id, -epoch_us(ts) AS nts FROM c) c2
-          |  ASOF LEFT JOIN (SELECT event_id, user_id, -epoch_us(ts) AS nts FROM p) p2
-          |    ON c2.user_id = p2.user_id AND c2.nts >= p2.nts)
-          |SELECT b.event_id, b.user_id,
-          |  CASE
-          |    WHEN b_id IS NOT NULL AND b_diff <= 450000000
-          |      AND (f_id IS NULL OR f_diff > 450000000 OR b_diff <= f_diff)
-          |      THEN b_id
-          |    WHEN f_id IS NOT NULL AND f_diff <= 450000000 THEN f_id
-          |    ELSE NULL
-          |  END AS purchase_id
-          |FROM b JOIN f USING (event_id)""".stripMargin,
-
-      // q29 is self-generating (no input table): the oracle REPLAYS the
-      // generation recipe and checks the DECODED values against it.
-      // java.util.Random(i)'s two nextInt(64) draws are the 48-bit LCG
-      // (x*25214903917+11 mod 2^48; nextInt of a power of two takes the
-      // top bits: (64*(seed>>17))>>31) — HUGEINT keeps the 2^82 products
-      // exact. PNG luminance is lossless, so bin-0 mass is the exact
-      // pixel-formula count ((x*31+y*17+7i) mod 256 < 16). WAV samples
-      // replay the 64-bit LCG under mod 2^64 (recursive CTE, one state
-      // step per sample; bin 0 = state < 2^60 since the emitted short is
-      // the state's top 16 bits). The float32 ratio is reproduced with
-      // REAL arithmetic before the portable pround. AVI dims/duration
-      // come straight from the generator's avih formulas. Codec-private
-      // bytes (deflate size, lossy JPEG pixels) are NULL on both sides.
-      "q29_media_features" ->
-        """WITH RECURSIVE ids AS (SELECT unnest(generate_series(0,199)) AS i),
-          |rnd AS (
-          |  SELECT i, (xor(CAST(i AS HUGEINT), 25214903917) % 281474976710656) AS s0 FROM ids),
-          |rnd1 AS (SELECT i, ((s0*25214903917+11) % 281474976710656) AS s1 FROM rnd),
-          |rnd2 AS (SELECT i, s1, ((s1*25214903917+11) % 281474976710656) AS s2 FROM rnd1),
-          |dims AS (SELECT i,
-          |    16 + CAST((64 * (s1 // 131072)) // 2147483648 AS INTEGER) AS w,
-          |    16 + CAST((64 * (s2 // 131072)) // 2147483648 AS INTEGER) AS h
-          |  FROM rnd2),
-          |px AS (
-          |  SELECT i, h, unnest(generate_series(0, w-1)) AS x
-          |  FROM dims WHERE i % 3 = 0),
-          |pxy AS (
-          |  SELECT i, x, unnest(generate_series(0, h-1)) AS y FROM px),
-          |pix AS (
-          |  SELECT i,
-          |    count(*) FILTER (WHERE ((x*31 + y*17 + i*7) % 256) < 16) AS c0,
-          |    count(*) AS n
-          |  FROM pxy GROUP BY i),
-          |lcg AS (
-          |  SELECT i, 0 AS k,
-          |    CAST(i AS HUGEINT)*2654435761 + 1 AS s,
-          |    16*40*(1 + i%5) AS n
-          |  FROM ids WHERE i % 3 = 1
-          |  UNION ALL
-          |  SELECT i, k+1, (s*6364136223846793005 + 1442695040888963407) % 18446744073709551616, n
-          |  FROM lcg WHERE k < n),
-          |aud AS (
-          |  SELECT i,
-          |    count(*) FILTER (WHERE s < 1152921504606846976) AS c0,
-          |    count(*) AS n
-          |  FROM lcg WHERE k >= 1 GROUP BY i)
-          |SELECT
-          |  CAST(d.i AS BIGINT) AS media_id,
-          |  CASE d.i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-          |  CASE WHEN d.i % 3 = 1 THEN 0 ELSE d.w END AS width,
-          |  CASE WHEN d.i % 3 = 1 THEN 0 ELSE d.h END AS height,
-          |  CASE WHEN d.i % 3 = 1 THEN 16000 ELSE 0 END AS sample_rate,
-          |  CAST(CASE d.i % 3 WHEN 0 THEN 0 WHEN 1 THEN 40*(1 + d.i%5)
-          |       ELSE 1000*(1 + d.i%5) END AS BIGINT) AS duration_ms,
-          |  CAST(CASE WHEN d.i % 3 = 1 THEN 44 + 2*16*40*(1 + d.i%5) END AS BIGINT) AS wav_bytes,
-          |  CASE WHEN d.i % 3 = 2 THEN NULL
-          |       ELSE floor(CAST(CAST(coalesce(p.c0, a.c0) AS REAL) /
-          |                       CAST(coalesce(p.n, a.n) AS REAL) AS DOUBLE)*10000 + 0.5)/10000
-          |  END AS f0
-          |FROM dims d LEFT JOIN pix p ON p.i = d.i LEFT JOIN aud a ON a.i = d.i""".stripMargin,
-
-      "q30_lang_id" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS token FROM documents),
-           |m(lang, w) AS (VALUES $markerValues),
-           |scores AS (
-           |  SELECT t.doc_id, m.lang, count(*) AS sc
-           |  FROM toks t JOIN m ON t.token = m.w GROUP BY t.doc_id, m.lang),
-           |best AS (
-           |  SELECT doc_id, lang FROM scores
-           |  QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sc DESC, lang ASC) = 1)
-           |SELECT d.doc_id, d.lang AS lang_actual, COALESCE(b.lang, 'und') AS lang_pred
-           |FROM documents d LEFT JOIN best b ON d.doc_id = b.doc_id""".stripMargin,
-
-      "q57_lang_id_ngram" -> {
-        val langs = TextFns.langTrigramProfiles.keys.toSeq.sorted
-        def profile(l: String) =
-          TextFns.langTrigramProfiles(l).map(g => "'" + g + "'").mkString("[", ", ", "]")
-        val scoreCols = langs.map(l =>
-          s"len(list_filter(grams, g -> list_contains(${profile(l)}, g))) AS s_$l").mkString(",\n  ")
-        // tie-break: >= against later languages = alphabetically first wins
-        val caseExpr = langs.zipWithIndex.map { case (l, i) =>
-          val laterGe = langs.drop(i + 1).map(o => s"s_$l >= s_$o")
-          val conds = (laterGe :+ s"s_$l > 0").mkString(" AND ")
-          s"WHEN $conds THEN '$l'"
-        }.mkString("\n    ")
-        s"""WITH g AS (
-           |  SELECT doc_id, lang,
-           |    list_transform(range(1, len(' ' || lower(text) || ' ') - 1),
-           |      i -> substr(' ' || lower(text) || ' ', i, 3)) AS grams
-           |  FROM documents),
-           |sc AS (SELECT doc_id, lang, $scoreCols FROM g)
-           |SELECT doc_id, lang AS lang_actual,
-           |  CASE $caseExpr ELSE 'und' END AS lang_pred
-           |FROM sc""".stripMargin
-      },
-
-      "q58_pii_counts" ->
-        """SELECT doc_id,
-          |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-          |  CAST(len(regexp_extract_all(text, 'https?://[^\s]+')) AS BIGINT) AS n_urls
-          |FROM documents""".stripMargin,
-
-      // concat-and-chunk packing: q32's tokenizer + a per-source
-      // running sum; window floor/mod arithmetic is engine-neutral
-      "q71_pack_windows" ->
-        """WITH tok AS (
-          |  SELECT doc_id, source,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens
-          |  FROM documents),
-          |c AS (
-          |  SELECT doc_id, source, n_tokens,
-          |    COALESCE(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-          |  FROM tok)
-          |SELECT doc_id, source, n_tokens,
-          |  CAST(floor(cum_before / 256) AS BIGINT) AS pack_seq,
-          |  CAST(cum_before % 256 AS BIGINT) AS pack_offset
-          |FROM c""".stripMargin,
-
-      "q72_chunk_docs" ->
-        """WITH s AS (
-          |  SELECT doc_id, text, unnest(range(0, len(text), 150)) AS start
-          |  FROM documents WHERE len(text) > 0)
-          |SELECT doc_id,
-          |  CAST(start / 150 AS BIGINT) AS chunk_idx,
-          |  CAST(start AS BIGINT) AS start,
-          |  CAST(len(substr(text, CAST(start AS INT) + 1, 200)) AS BIGINT) AS chunk_len,
-          |  md5(substr(text, CAST(start AS INT) + 1, 200)) AS chunk_md5
-          |FROM s""".stripMargin,
-
-      "q73_domain_caps" ->
-        """WITH r AS (
-          |  SELECT doc_id, source,
-          |    row_number() OVER (PARTITION BY source
-          |      ORDER BY md5('cap' || '|' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-          |  FROM documents)
-          |SELECT doc_id, source FROM r WHERE rn <= 15""".stripMargin,
-
-      "q74_pii_redaction" ->
-        """SELECT doc_id,
-          |  regexp_replace(
-          |    regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |    'https?://[^\s]+', '<URL>', 'g') AS redacted
-          |FROM documents""".stripMargin,
-
-      "q75_token_budget" ->
-        """WITH tok AS (
-          |  SELECT doc_id, source,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens
-          |  FROM documents),
-          |c AS (
-          |  SELECT doc_id, source, n_tokens,
-          |    COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-          |      ORDER BY md5('budget' || '|' || CAST(doc_id AS VARCHAR)), doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-          |  FROM tok)
-          |SELECT doc_id, source FROM c WHERE cum_before < 1000""".stripMargin,
-
-      "q76_shuffle_rank" ->
-        """SELECT doc_id,
-          |  row_number() OVER (
-          |    ORDER BY md5('shuffle' || '|' || CAST(doc_id AS VARCHAR)), doc_id)
-          |    - 1 AS shuffle_rank
-          |FROM documents""".stripMargin,
-
-      // two-phase admission: tick-1 rows (even ids) budget from zero;
-      // their accepted token sums become tick-2's per-source offsets
-      "q82_streaming_budget" ->
-        """WITH tok AS (
-          |  SELECT doc_id, source,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n
-          |  FROM documents),
-          |b1 AS (
-          |  SELECT doc_id, source, n,
-          |    COALESCE(SUM(n) OVER (PARTITION BY source
-          |      ORDER BY md5('budget' || '|' || CAST(doc_id AS VARCHAR)), doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-          |  FROM tok WHERE doc_id % 2 = 0),
-          |a1 AS (SELECT doc_id, source, n FROM b1 WHERE cb < 1000),
-          |sp AS (SELECT source, SUM(n) AS spent FROM a1 GROUP BY source),
-          |b2 AS (
-          |  SELECT t.doc_id, t.source,
-          |    COALESCE(s.spent, 0) + COALESCE(SUM(t.n) OVER (PARTITION BY t.source
-          |      ORDER BY md5('budget' || '|' || CAST(t.doc_id AS VARCHAR)), t.doc_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-          |  FROM (SELECT * FROM tok WHERE doc_id % 2 = 1) t
-          |  LEFT JOIN sp s ON t.source = s.source)
-          |SELECT doc_id, source FROM a1
-          |UNION ALL
-          |SELECT doc_id, source FROM b2 WHERE cb < 1000""".stripMargin,
-
-      // per-user epoch-aligned daily slots, value carried forward by
-      // DuckDB's ASOF on the same microsecond epochs
-      "q83_gap_fill" -> {
-        val step = "86400000000"
-        s"""WITH e AS (SELECT user_id, epoch_us(ts) AS tus, value FROM events),
-           |b AS (SELECT user_id, min(tus) AS mn, max(tus) AS mx FROM e GROUP BY user_id),
-           |g AS (
-           |  SELECT user_id,
-           |    unnest(generate_series(mn - ((mn % $step) + $step) % $step,
-           |                           mx - ((mx % $step) + $step) % $step, $step)) AS tus
-           |  FROM b),
-           |f AS (
-           |  SELECT g.user_id, g.tus, e.value
-           |  FROM g ASOF LEFT JOIN e ON g.user_id = e.user_id AND g.tus >= e.tus)
-           |SELECT user_id, tus // 1000000 AS slot,
-           |  ${pround("value", 4)} AS value_filled
-           |FROM f""".stripMargin
-      },
-
-      "q84_ri_audit" -> {
-        def rel(name: String, child: String, ck: String,
-                parent: String, pk: String) =
-          s"""SELECT '$name' AS relation,
-             |  (SELECT count(*) FROM $child) AS n_child,
-             |  (SELECT count(*) - count($ck) FROM $child) AS n_null_keys,
-             |  (SELECT count(*) FROM $child c
-             |   LEFT JOIN (SELECT DISTINCT $pk FROM $parent) p ON c.$ck = p.$pk
-             |   WHERE c.$ck IS NOT NULL AND p.$pk IS NULL) AS n_orphans""".stripMargin
-        Seq(
-          rel("lineitem.orderkey", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-          rel("lineitem.partkey", "lineitem", "l_partkey", "part", "p_partkey"),
-          rel("lineitem.suppkey", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-          rel("orders.custkey", "orders", "o_custkey", "customer", "c_custkey"),
-          rel("customer.nationkey", "customer", "c_nationkey", "nation", "n_nationkey"),
-          rel("supplier.nationkey", "supplier", "s_nationkey", "nation", "n_nationkey"),
-          rel("nation.regionkey", "nation", "n_regionkey", "region", "r_regionkey")
-        ).mkString("\nUNION ALL\n")
-      },
-
-      "q85_oov_rates" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-           |cnt AS (SELECT term, count(*) AS c FROM toks GROUP BY 1),
-           |vocab AS (SELECT term FROM cnt ORDER BY c DESC, term LIMIT 50),
-           |j AS (
-           |  SELECT t.doc_id,
-           |    CASE WHEN v.term IS NULL THEN 1 ELSE 0 END AS oov
-           |  FROM toks t LEFT JOIN vocab v USING (term))
-           |SELECT doc_id, count(*) AS n_tokens,
-           |  CAST(sum(oov) AS BIGINT) AS n_oov,
-           |  ${pround("sum(oov) * 1.0 / count(*)", 4)} AS oov_rate
-           |FROM j GROUP BY doc_id""".stripMargin,
-
-      // q65's recursive closure + two bounded aggregations
-      "q95_cluster_sizes" ->
-        """WITH RECURSIVE
-          |e AS (SELECT doc_id AS src, doc_id + 1 AS dst FROM documents WHERE doc_id % 8 < 5),
-          |edges AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-          |walk(node, lab) AS (
-          |  SELECT src, src FROM edges
-          |  UNION
-          |  SELECT e.src, w.lab FROM edges e JOIN walk w ON w.node = e.dst),
-          |comp AS (SELECT node, min(lab) AS component FROM walk GROUP BY node),
-          |sz AS (SELECT component, count(*) AS size FROM comp GROUP BY component)
-          |SELECT size, count(*) AS n_clusters FROM sz GROUP BY size""".stripMargin,
-
-      // exact interpolated quantiles (q41's verified primitive) per
-      // source, unnested to one row per (source, q)
-      "q97_quantile_table" ->
-        s"""WITH tok AS (
-           |  SELECT source,
-           |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS DOUBLE) AS n_tok
-           |  FROM documents),
-           |qt AS (
-           |  SELECT source, quantile_cont(n_tok, [0.1, 0.5, 0.9]) AS p
-           |  FROM tok GROUP BY source)
-           |SELECT source, unnest([0.1, 0.5, 0.9]) AS q,
-           |  ${pround("unnest(p)", 4)} AS value
-           |FROM qt""".stripMargin,
-
-      // q21's candidates -> transitive components -> per-cluster
-      // survivor and token savings
-      "q98_dedup_roi" ->
-        s"""WITH RECURSIVE sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM cand UNION SELECT id_b, id_a FROM cand),
-           |${ccUnrolledSql("edges", "dr")},
-           |comp AS (SELECT node, root AS component FROM drm),
-           |tok AS (
-           |  SELECT doc_id,
-           |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n
-           |  FROM documents)
-           |SELECT component, count(*) AS n_docs, min(node) AS survivor_id,
-           |  CAST(sum(CASE WHEN node <> component THEN n ELSE 0 END) AS BIGINT) AS tokens_dropped
-           |FROM comp JOIN tok ON tok.doc_id = comp.node
-           |GROUP BY component""".stripMargin,
-
-      // exact percentile bounds, clamp, decimal-summed mean.
-      // The bounds mirror Spark's Percentile ARITHMETIC, not just its
-      // R-7 convention: when both neighbor ranks land in one tie run
-      // Spark short-circuits to the stored value, while quantile_cont
-      // computes v·(1−f)+v·f which can round ONE ULP off it — and a
-      // cutoff used in a strict < flips the whole run (50 rows at
-      // sf1.0, where every value exists ×10; caught by the scale
-      // ratchet, invisible at SFs whose cutoffs miss tie runs). The
-      // explicit (ceil−pos)·lo + (pos−floor)·hi form below is
-      // Spark's exact expression tree, so the doubles agree bitwise.
-      "q107_winsorize" ->
-        s"""WITH r AS (
-           |  SELECT event_type, value,
-           |    row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-           |    count(*) OVER (PARTITION BY event_type) AS n
-           |  FROM events WHERE value IS NOT NULL),
-           |b AS (
-           |  SELECT event_type,
-           |    CASE WHEN min(CASE WHEN rn = CAST(floor(CAST(n-1 AS DOUBLE)*0.05) AS BIGINT)+1 THEN value END)
-           |            = min(CASE WHEN rn = CAST(ceiling(CAST(n-1 AS DOUBLE)*0.05) AS BIGINT)+1 THEN value END)
-           |      THEN min(CASE WHEN rn = CAST(floor(CAST(n-1 AS DOUBLE)*0.05) AS BIGINT)+1 THEN value END)
-           |      ELSE (ceiling(CAST(n-1 AS DOUBLE)*0.05) - CAST(n-1 AS DOUBLE)*0.05)
-           |             * min(CASE WHEN rn = CAST(floor(CAST(n-1 AS DOUBLE)*0.05) AS BIGINT)+1 THEN value END)
-           |           + (CAST(n-1 AS DOUBLE)*0.05 - floor(CAST(n-1 AS DOUBLE)*0.05))
-           |             * min(CASE WHEN rn = CAST(ceiling(CAST(n-1 AS DOUBLE)*0.05) AS BIGINT)+1 THEN value END)
-           |      END AS lo,
-           |    CASE WHEN min(CASE WHEN rn = CAST(floor(CAST(n-1 AS DOUBLE)*0.95) AS BIGINT)+1 THEN value END)
-           |            = min(CASE WHEN rn = CAST(ceiling(CAST(n-1 AS DOUBLE)*0.95) AS BIGINT)+1 THEN value END)
-           |      THEN min(CASE WHEN rn = CAST(floor(CAST(n-1 AS DOUBLE)*0.95) AS BIGINT)+1 THEN value END)
-           |      ELSE (ceiling(CAST(n-1 AS DOUBLE)*0.95) - CAST(n-1 AS DOUBLE)*0.95)
-           |             * min(CASE WHEN rn = CAST(floor(CAST(n-1 AS DOUBLE)*0.95) AS BIGINT)+1 THEN value END)
-           |           + (CAST(n-1 AS DOUBLE)*0.95 - floor(CAST(n-1 AS DOUBLE)*0.95))
-           |             * min(CASE WHEN rn = CAST(ceiling(CAST(n-1 AS DOUBLE)*0.95) AS BIGINT)+1 THEN value END)
-           |      END AS hi
-           |  FROM r GROUP BY event_type, n),
-           |w AS (
-           |  SELECT e.event_type, e.value, least(greatest(e.value, b.lo), b.hi) AS vw,
-           |    CASE WHEN e.value < b.lo THEN -1 WHEN e.value > b.hi THEN 1 ELSE 0 END AS c
-           |  FROM events e JOIN b USING (event_type))
-           |SELECT event_type, count(*) AS n,
-           |  CAST(sum(CASE WHEN c = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-           |  CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-           |  ${pround("CAST(sum(CAST(vw AS DECIMAL(18,6))) AS DOUBLE) / count(*)", 4)} AS mean_w
-           |FROM w GROUP BY event_type""".stripMargin,
-
-      // modified z-score |v - med| / (1.4826 * mad) > 2; zero-MAD
-      // groups report no outliers (score undefined)
-      "q96_robust_outliers" ->
-        """WITH m AS (
-          |  SELECT event_type, quantile_cont(value, 0.5) AS med
-          |  FROM events GROUP BY event_type),
-          |d AS (
-          |  SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
-          |  FROM events e JOIN m USING (event_type) GROUP BY e.event_type)
-          |SELECT e.event_type, count(*) AS n,
-          |  CAST(sum(CASE WHEN d.mad > 0
-          |    AND abs(e.value - m.med) / (1.4826 * d.mad) > 2.0
-          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-          |FROM events e JOIN m USING (event_type) JOIN d USING (event_type)
-          |GROUP BY e.event_type""".stripMargin,
-
-      // lower -> control chars to spaces -> collapse runs -> trim;
-      // \x escapes are RE2- and java.util.regex-identical here
-      "q104_normalize" ->
-        """SELECT doc_id,
-          |  CAST(len(trim(regexp_replace(regexp_replace(lower(text), '[\x00-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g'))) AS BIGINT) AS norm_len,
-          |  md5(trim(regexp_replace(regexp_replace(lower(text), '[\x00-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g'))) AS norm_md5
-          |FROM documents""".stripMargin,
-
-      // whole-word alternation, RE2-compatible; len(extract_all) is
-      // the portable form of the native tally
-      "q102_blocklist_screen" ->
-        """WITH h AS (
-          |  SELECT source,
-          |    CAST(len(regexp_extract_all(text, '\b(?:slow|dup|error)\b')) AS BIGINT) AS hits
-          |  FROM documents)
-          |SELECT source, count(*) AS n_docs,
-          |  CAST(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked,
-          |  CAST(sum(hits) AS BIGINT) AS n_hits
-          |FROM h GROUP BY source""".stripMargin,
-
-      // identical IEEE share arithmetic on both sides, so the
-      // unrounded |delta| cut picks the same 20 terms
-      "q100_vocab_drift" ->
-        s"""WITH ca AS (
-           |  SELECT term, count(*) AS c
-           |  FROM (SELECT unnest(t) AS term FROM (SELECT $toksSql AS t FROM documents WHERE doc_id % 2 = 0))
-           |  GROUP BY term),
-           |cb AS (
-           |  SELECT term, count(*) AS c
-           |  FROM (SELECT unnest(t) AS term FROM (SELECT $toksSql AS t FROM documents WHERE doc_id % 2 = 1))
-           |  GROUP BY term),
-           |j AS (
-           |  SELECT COALESCE(ca.term, cb.term) AS term,
-           |    CAST(COALESCE(ca.c, 0) AS DOUBLE) / (SELECT sum(c) FROM ca) AS share_a,
-           |    CAST(COALESCE(cb.c, 0) AS DOUBLE) / (SELECT sum(c) FROM cb) AS share_b
-           |  FROM ca FULL OUTER JOIN cb ON ca.term = cb.term)
-           |SELECT term, ${pround("share_a", 6)} AS share_a,
-           |  ${pround("share_b", 6)} AS share_b,
-           |  ${pround("share_b - share_a", 6)} AS delta
-           |FROM j
-           |ORDER BY abs(share_b - share_a) DESC, term ASC LIMIT 20""".stripMargin,
-
-      // prior-max over arrival order as a plain window (fine for an
-      // oracle); lateness 0 or first event = on_time
-      "q99_lateness_audit" ->
-        """WITH e AS (SELECT event_id, epoch_us(ts) AS t FROM events WHERE ts IS NOT NULL),
-          |m AS (
-          |  SELECT t, max(t) OVER (
-          |    ORDER BY event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-          |  FROM e)
-          |SELECT CASE
-          |    WHEN pm IS NULL OR pm - t <= 0 THEN 'on_time'
-          |    WHEN pm - t <= 60000000 THEN 'le_60s'
-          |    WHEN pm - t <= 900000000 THEN 'le_900s'
-          |    ELSE 'gt_900s' END AS bucket,
-          |  count(*) AS n
-          |FROM m GROUP BY 1""".stripMargin,
-
-      "q86_mad" ->
-        s"""WITH m AS (
-           |  SELECT event_type, quantile_cont(value, 0.5) AS med
-           |  FROM events GROUP BY event_type)
-           |SELECT e.event_type,
-           |  ${pround("quantile_cont(abs(e.value - m.med), 0.5)", 4)} AS mad
-           |FROM events e JOIN m USING (event_type)
-           |GROUP BY e.event_type""".stripMargin,
-
-      "q77_tfidf_terms" ->
-        s"""WITH toks AS (
-           |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-           |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |n AS (SELECT count(*) AS n FROM documents),
-           |scored AS (
-           |  SELECT doc_id, term, tf, df, tf * (n + 1.0) / (df + 1.0) AS score
-           |  FROM tf JOIN idf USING (term) CROSS JOIN n),
-           |r AS (SELECT *, row_number() OVER (
-           |  PARTITION BY doc_id ORDER BY score DESC, term) AS rk FROM scored)
-           |SELECT doc_id, term, CAST(tf AS BIGINT) AS tf,
-           |  CAST(df AS BIGINT) AS df, ${pround("score", 4)} AS score
-           |FROM r WHERE rk <= 3""".stripMargin,
-
-      "q78_dup_spans" ->
-        s"""WITH t AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |g AS (
-           |  SELECT doc_id, unnest(list_distinct(list_transform(
-           |    range(1, len(t) - 3),
-           |    i -> list_aggregate(t[i:i+4], 'string_agg', ' ')))) AS span
-           |  FROM t WHERE len(t) >= 5)
-           |SELECT span, count(*) AS n_docs, min(doc_id) AS min_doc
-           |FROM g GROUP BY span HAVING count(*) >= 2""".stripMargin,
-
-      "q79_retention" ->
-        """WITH act AS (
-          |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day FROM events),
-          |f AS (SELECT u, min(day) AS cohort_day FROM act GROUP BY u),
-          |j AS (
-          |  SELECT a.u, f.cohort_day,
-          |    date_diff('day', f.cohort_day, a.day) AS off
-          |  FROM act a JOIN f ON a.u = f.u)
-          |SELECT cohort_day,
-          |  count(DISTINCT u) AS cohort_size,
-          |  count(DISTINCT CASE WHEN off = 1 THEN u END) AS d1,
-          |  count(DISTINCT CASE WHEN off = 7 THEN u END) AS d7
-          |FROM j GROUP BY cohort_day""".stripMargin,
-
-      "q80_funnel" ->
-        """WITH e AS (
-          |  SELECT user_id AS u, event_type AS et, epoch_us(ts) AS t FROM events),
-          |s1 AS (SELECT u, min(t) AS t FROM e WHERE et = 'signup' GROUP BY u),
-          |s2 AS (SELECT e.u, min(e.t) AS t FROM e JOIN s1 ON e.u = s1.u
-          |       WHERE e.et = 'click' AND e.t > s1.t GROUP BY e.u),
-          |s3 AS (SELECT e.u, min(e.t) AS t FROM e JOIN s2 ON e.u = s2.u
-          |       WHERE e.et = 'purchase' AND e.t > s2.t GROUP BY e.u)
-          |SELECT 1 AS step, 'signup' AS step_name,
-          |  (SELECT count(*) FROM s1) AS n_users
-          |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-          |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)""".stripMargin,
-
-      "q81_profile" -> {
-        // the Spark side profiles o_totalprice AFTER the DECIMAL cast,
-        // so the oracle stats (distinct included) apply the same cast
-        def prow(c: String, expr: String) =
-          s"""SELECT '$c' AS column_name,
-             |  count(*) - count($expr) AS n_null, count($expr) AS n_present,
-             |  count(DISTINCT $expr) AS n_distinct,
-             |  CAST(min($expr) AS VARCHAR) AS min_value,
-             |  CAST(max($expr) AS VARCHAR) AS max_value
-             |FROM orders""".stripMargin
-        Seq(
-          prow("o_orderkey", "o_orderkey"),
-          prow("o_custkey", "o_custkey"),
-          prow("o_orderstatus", "o_orderstatus"),
-          prow("o_totalprice", "CAST(o_totalprice AS DECIMAL(18,2))"),
-          prow("o_orderdate", "o_orderdate"),
-          prow("o_orderpriority", "o_orderpriority")
-        ).mkString("\nUNION ALL\n")
-      },
-
-      "q31_quality_score" ->
-        s"""WITH base AS (SELECT doc_id, text, $toksSql AS t FROM documents),
-           |feat AS (
-           |  SELECT doc_id, text, len(t) AS n_tokens,
-           |    CASE WHEN len(t) > 0 THEN CAST(len(list_filter(t, x -> list_contains($stopwordList, x))) AS DOUBLE) / len(t) ELSE 0.0 END AS swr,
-           |    CASE WHEN len(t) > 0 THEN CAST(list_aggregate(list_transform(t, x -> len(x)), 'sum') AS DOUBLE) / len(t) ELSE 0.0 END AS atl,
-           |    CASE WHEN len(text) > 0 THEN CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE) / len(text) ELSE 0.0 END AS pr
-           |  FROM base)
-           |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-           |  ${pround("swr", 4)} AS stopword_ratio,
-           |  ${pround("atl", 4)} AS avg_token_len,
-           |  ${pround("pr", 4)} AS punct_ratio,
-           |  ${pround(
-             """greatest(least(least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-               |    + (1.0 - abs(swr - 0.25) * 2.0) * 0.3
-               |    + (1.0 - least(abs(atl - 5.0) / 5.0, 1.0)) * 0.3, 1.0), 0.0)""".stripMargin, 4)} AS quality
-           |FROM feat""".stripMargin,
-
-      "q32_token_count" ->
-        s"""SELECT doc_id,
-           |  CAST(len($toksSql) AS BIGINT) AS ws_tokens,
-           |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpeish_tokens
-           |FROM documents""".stripMargin,
-
-      "q33_fingerprint" ->
-        """WITH g AS (
-          |  SELECT doc_id,
-          |    list_transform(range(1, len(text) - 6), i -> substr(lower(text), i, 8)) AS grams
-          |  FROM documents)
-          |SELECT doc_id, list_min(list_transform(grams, x -> md5(x))) AS fp,
-          |  CAST(len(list_distinct(grams)) AS BIGINT) AS n_grams
-          |FROM g""".stripMargin,
-
-      // min reachable id IS the component id on an undirected graph —
-      // the recursive walk enumerates (node, reachable id) pairs and the
-      // aggregate takes the fixpoint's minimum, independently of how the
-      // Spark side's pointer jumping converges
-      "q65_components" ->
-        """WITH RECURSIVE
-          |e AS (SELECT doc_id AS src, doc_id + 1 AS dst FROM documents WHERE doc_id % 8 < 5),
-          |edges AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-          |walk(node, lab) AS (
-          |  SELECT src, src FROM edges
-          |  UNION
-          |  SELECT e.src, w.lab FROM edges e JOIN walk w ON w.node = e.dst)
-          |SELECT node, min(lab) AS component FROM walk GROUP BY node""".stripMargin,
-
-      "q66_decontamination" ->
-        s"""WITH cg AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents WHERE doc_id % 10 <> 0)),
-           |eg AS (
-           |  SELECT DISTINCT unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT $toksSql AS t FROM documents WHERE doc_id % 10 = 0))
-           |SELECT doc_id, count(*) AS n_shared
-           |FROM cg JOIN eg USING (s) GROUP BY doc_id""".stripMargin,
-
-      // q21's pair CTE + two id joins for attribution; (least,
-      // greatest) canonicalizes the unordered source pair
-      "q94_source_overlap" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id)
-           |SELECT least(da.source, db.source) AS source_a,
-           |       greatest(da.source, db.source) AS source_b,
-           |       count(*) AS n_pairs
-           |FROM cand
-           |JOIN documents da ON da.doc_id = cand.id_a
-           |JOIN documents db ON db.doc_id = cand.id_b
-           |GROUP BY 1, 2""".stripMargin,
-
-      // per-source shares vs the normalized 4:2:1:1 recipe; the scale
-      // is the binding constraint min(share/target) over recipe rows
-      "q93_mixture_plan" ->
-        s"""WITH tok AS (
-           |  SELECT source,
-           |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n
-           |  FROM documents),
-           |s AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens FROM tok GROUP BY source),
-           |t(src, w) AS (VALUES ('src0', 4.0), ('src1', 2.0), ('src2', 1.0), ('src3', 1.0)),
-           |j AS (
-           |  SELECT s.source, s.n_tokens,
-           |    CAST(s.n_tokens AS DOUBLE) / (SELECT sum(n_tokens) FROM s) AS share,
-           |    COALESCE(t.w / (SELECT sum(w) FROM t), 0.0) AS target_share
-           |  FROM s LEFT JOIN t ON s.source = t.src),
-           |sc AS (SELECT min(share / target_share) AS scale FROM j WHERE target_share > 0)
-           |SELECT source, n_tokens, ${pround("share", 4)} AS share,
-           |  ${pround("target_share", 4)} AS target_share,
-           |  ${pround("CASE WHEN target_share > 0 THEN least(1.0, target_share * (SELECT scale FROM sc) / share) ELSE 0.0 END", 4)} AS keep_frac
-           |FROM j""".stripMargin,
-
-      // pair expansion over the word-frequency table (not the corpus);
-      // the top-30 cut is deterministic via the (total, pair) order
-      "q92_bpe_pairs" ->
-        s"""WITH w AS (
-           |  SELECT w, count(*) AS cnt
-           |  FROM (SELECT unnest(t) AS w FROM (SELECT $toksSql AS t FROM documents))
-           |  GROUP BY w HAVING len(w) >= 2),
-           |p AS (
-           |  SELECT substr(w.w, CAST(t.i AS INT), 2) AS pair, w.w, w.cnt
-           |  FROM w, LATERAL (SELECT unnest(range(1, len(w.w))) AS i) t)
-           |SELECT pair, count(DISTINCT w) AS n_words, CAST(sum(cnt) AS BIGINT) AS total
-           |FROM p GROUP BY pair
-           |ORDER BY total DESC, pair ASC LIMIT 30""".stripMargin,
-
-      // q76's rank order sliced into 64-row shards; sums use the same
-      // bpe-ish token count as q32/q71
-      "q91_shard_balance" ->
-        """WITH r AS (
-          |  SELECT doc_id,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n,
-          |    row_number() OVER (
-          |      ORDER BY md5('shuffle' || '|' || CAST(doc_id AS VARCHAR)), doc_id)
-          |      - 1 AS rk
-          |  FROM documents)
-          |SELECT rk // 64 AS shard_id, count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS tok_total
-          |FROM r GROUP BY 1""".stripMargin,
-
-      // unigram counts re-join the exploded tokens; per-doc mean of
-      // log10(count) — both engines' log10 are correctly rounded on
-      // small-integer inputs, and pround absorbs ulp noise
-      "q90_lm_score" ->
-        s"""WITH tok AS (
-           |  SELECT doc_id, unnest(t) AS term
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |c AS (SELECT term, count(*) AS cnt FROM tok GROUP BY term)
-           |SELECT doc_id, count(*) AS n_tokens,
-           |  ${pround("avg(log10(cnt))", 4)} AS lm_score
-           |FROM tok JOIN c USING (term)
-           |GROUP BY doc_id""".stripMargin,
-
-      // per-eval-example leak table: each eval trigram left-joins the
-      // corpus' matched-gram set; count(hit) over the left join = how
-      // many of the example's grams leaked
-      "q89_eval_contamination" ->
-        s"""WITH eg AS (
-           |  SELECT doc_id AS eval_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents WHERE doc_id % 10 = 0)),
-           |hit AS (
-           |  SELECT DISTINCT cg.s FROM (
-           |    SELECT unnest(list_distinct($shinglesSql)) AS s
-           |    FROM (SELECT $toksSql AS t FROM documents WHERE doc_id % 10 <> 0)) cg
-           |  JOIN (SELECT DISTINCT s FROM eg) e USING (s))
-           |SELECT eval_id, count(*) AS n_grams, count(hit.s) AS n_contaminated,
-           |  ${pround("CAST(count(hit.s) AS DOUBLE) / count(*)", 4)} AS contamination_rate
-           |FROM eg LEFT JOIN hit USING (s)
-           |GROUP BY eval_id""".stripMargin,
-
-      // keep-first = min over (doc_id, idx) — stated as a row_number
-      // window here (fine for an oracle), while the engine uses the
-      // skew-safe min(struct) aggregation; reassembly re-joins kept
-      // paragraphs in position order with the separator
-      "q88_paragraph_dedup" ->
-        """WITH p AS (
-          |  SELECT doc_id, u.para, u.idx
-          |  FROM (SELECT doc_id, string_split(text, ' line ') AS l FROM documents) d,
-          |  LATERAL (SELECT unnest(l) AS para, unnest(range(1, len(l)+1)) AS idx) u
-          |  WHERE trim(u.para) <> ''),
-          |kept AS (
-          |  SELECT doc_id, idx, para FROM p
-          |  QUALIFY row_number() OVER (PARTITION BY md5(para) ORDER BY doc_id, idx) = 1)
-          |SELECT doc_id, string_agg(para, ' line ' ORDER BY idx) AS text_dedup,
-          |       count(*) AS n_paras_kept
-          |FROM kept GROUP BY doc_id""".stripMargin,
-
-      // q88's shape with the winner key scoped per document
-      "q103_paragraph_dedup_local" ->
-        """WITH p AS (
-          |  SELECT doc_id, u.para, u.idx
-          |  FROM (SELECT doc_id, string_split(text, ' line ') AS l FROM documents) d,
-          |  LATERAL (SELECT unnest(l) AS para, unnest(range(1, len(l)+1)) AS idx) u
-          |  WHERE trim(u.para) <> ''),
-          |kept AS (
-          |  SELECT doc_id, idx, para FROM p
-          |  QUALIFY row_number() OVER (PARTITION BY doc_id, md5(para) ORDER BY idx) = 1)
-          |SELECT doc_id, string_agg(para, ' line ' ORDER BY idx) AS text_dedup,
-          |       count(*) AS n_paras_kept
-          |FROM kept GROUP BY doc_id""".stripMargin,
-
-      // the relational explode->count form WordGramStats collapses into
-      // one per-row pass; docs with < 3 tokens have zero grams -> (0,0,0)
-      "q67_word_gram_stats" ->
-        s"""WITH g AS (
-           |  SELECT doc_id, unnest($shinglesSql) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |pc AS (SELECT doc_id, s, count(*) AS c FROM g GROUP BY doc_id, s),
-           |agg AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-           |          CAST(count(*) AS BIGINT) AS n_distinct,
-           |          CAST(max(c) AS BIGINT) AS top_count
-           |        FROM pc GROUP BY doc_id)
-           |SELECT d.doc_id,
-           |  COALESCE(a.n_grams, 0) AS n_grams,
-           |  COALESCE(a.n_distinct, 0) AS n_distinct,
-           |  COALESCE(a.top_count, 0) AS top_count
-           |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id""".stripMargin,
-
-      // NULL lang falls through every stratum arm to the default on both
-      // engines (Spark: null predicate skips the when; SQL: CASE -> ELSE)
-      "q68_stratified_sample" ->
-        """SELECT doc_id, lang FROM documents
-          |WHERE (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100
-          |  < CASE WHEN lang = 'en' THEN 60 WHEN lang = 'de' THEN 20 ELSE 5 END""".stripMargin,
-
-      // two-level aggregate: per-customer order counts, then the
-      // counts-of-counts distribution
-      "q170_custdist" ->
-        """WITH pc AS (
-          |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-          |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |  GROUP BY 1)
-          |SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-          |FROM pc GROUP BY 1""".stripMargin,
-
-      // decimal-exact revenue; share = floor of the exact double ratio
-      "q171_promo_share" ->
-        s"""WITH r AS (
-           |  SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-           |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS rev,
-           |    p_type
-           |  FROM lineitem JOIN part ON l_partkey = p_partkey)
-           |SELECT ship_month,
-           |  ${pround("CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS DOUBLE)", 2)} AS promo_rev,
-           |  ${pround("CAST(sum(rev) AS DOUBLE)", 2)} AS total_rev,
-           |  CAST(floor(CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) AS DOUBLE)
-           |    * 10000 / CAST(sum(rev) AS DOUBLE)) AS BIGINT) AS promo_bp
-           |FROM r GROUP BY 1""".stripMargin,
-
-      // six BIGINT-exact sums over the (day, day+1) pairs; operand
-      // order of the final expression mirrored exactly
-      "q172_autocorr" ->
-        s"""WITH ds AS (
-           |  SELECT event_type,
-           |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS x,
-           |    CAST(count(*) AS BIGINT) AS y
-           |  FROM events GROUP BY 1, 2),
-           |p AS (
-           |  SELECT c.event_type, c.y AS a, n.y AS b
-           |  FROM ds c JOIN ds n
-           |    ON n.event_type = c.event_type AND n.x = c.x + 1),
-           |g AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-           |    CAST(sum(a) AS BIGINT) AS sa, CAST(sum(b) AS BIGINT) AS sb,
-           |    CAST(sum(a * b) AS BIGINT) AS sab,
-           |    CAST(sum(a * a) AS BIGINT) AS saa,
-           |    CAST(sum(b * b) AS BIGINT) AS sbb
-           |  FROM p GROUP BY 1)
-           |SELECT event_type, n_pairs,
-           |  ${pround("CASE WHEN CAST(n_pairs * saa - sa * sa AS DOUBLE) > 0 AND CAST(n_pairs * sbb - sb * sb AS DOUBLE) > 0 THEN CAST(n_pairs * sab - sa * sb AS DOUBLE) / (sqrt(CAST(n_pairs * saa - sa * sa AS DOUBLE)) * sqrt(CAST(n_pairs * sbb - sb * sb AS DOUBLE))) ELSE 0.0 END", 6)} AS r1
-           |FROM g""".stripMargin,
-
-      // counts-of-counts Gini: rank-weighted sum T from the histogram
-      // cumulative; f(f+1) is even so the integer halving is exact
-      "q173_key_skew" ->
-        """WITH kc AS (
-          |  SELECT o_orderpriority AS grp, o_custkey,
-          |    CAST(count(*) AS BIGINT) AS c
-          |  FROM orders GROUP BY 1, 2),
-          |h AS (SELECT grp, c, CAST(count(*) AS BIGINT) AS f
-          |      FROM kc GROUP BY 1, 2),
-          |cu AS (
-          |  SELECT a.grp, a.c, a.f,
-          |    COALESCE(CAST(sum(b.f) AS BIGINT), 0) AS cum
-          |  FROM h a LEFT JOIN h b ON b.grp = a.grp AND b.c < a.c
-          |  GROUP BY 1, 2, 3),
-          |g AS (
-          |  SELECT grp, CAST(sum(f) AS BIGINT) AS n_keys,
-          |    CAST(sum(c * f) AS BIGINT) AS n_rows,
-          |    CAST(max(c) AS BIGINT) AS max_per_key,
-          |    CAST(sum(c * (f * cum + f * (f + 1) // 2)) AS BIGINT) AS t
-          |  FROM cu GROUP BY 1)
-          |SELECT grp AS o_orderpriority, n_keys, n_rows, max_per_key,
-          |  CAST(floor(CAST(2 * t - (n_keys + 1) * n_rows AS DOUBLE) * 10000.0
-          |    / (CAST(n_keys AS DOUBLE) * CAST(n_rows AS DOUBLE))) AS BIGINT) AS gini_bp
-          |FROM g""".stripMargin,
-
-      // (source, term) counts -> power-of-two class rollup; the class
-      // is len(bin(c))-1, integer on both engines
-      "q174_freq_spectrum" ->
-        s"""WITH c AS (
-           |  SELECT source, term, CAST(count(*) AS BIGINT) AS c
-           |  FROM (SELECT source, unnest($toksSql) AS term FROM documents)
-           |  GROUP BY 1, 2)
-           |SELECT source,
-           |  CAST(len(bin(c)) - 1 AS BIGINT) AS freq_class,
-           |  CAST(count(*) AS BIGINT) AS n_types,
-           |  CAST(sum(c) AS BIGINT) AS token_mass
-           |FROM c GROUP BY 1, 2""".stripMargin,
-
-      // q129's exact integer score, banded by floor of the exact
-      // double ratio (negative-safe on both engines); dup membership
-      // by md5(text) multiplicity
-      "q175_dup_lift" ->
-        s"""WITH f AS (
-           |  SELECT doc_id, md5(text) AS h,
-           |    CAST(len($toksSql) AS BIGINT) AS n_tok,
-           |    CAST(len(list_filter($toksSql, x -> list_contains($stopwordList, x))) AS BIGINT) AS stop_cnt,
-           |    CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS punct_cnt,
-           |    CAST(len(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS non_ws,
-           |    CAST(len(text) AS BIGINT) AS n_chars
-           |  FROM documents),
-           |sc AS (
-           |  SELECT doc_id, h,
-           |    CAST(80 * least(n_tok, 50)
-           |      - abs((stop_cnt * 10000) // greatest(n_tok, 1) - 2500)
-           |      - 2 * ((punct_cnt * 10000) // greatest(n_chars, 1))
-           |      - abs((non_ws * 100) // greatest(n_tok, 1) - 500) AS BIGINT) AS score
-           |  FROM f),
-           |m AS (SELECT h, CAST(count(*) AS BIGINT) AS n FROM sc GROUP BY 1),
-           |b AS (
-           |  SELECT CAST(floor(CAST(score AS DOUBLE) / 500.0) AS BIGINT) AS band,
-           |    CASE WHEN m.n > 1 THEN 1 ELSE 0 END AS is_dup
-           |  FROM sc JOIN m USING (h))
-           |SELECT band, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(is_dup) AS BIGINT) AS n_dup,
-           |  (CAST(sum(is_dup) AS BIGINT) * 10000) // CAST(count(*) AS BIGINT) AS dup_bp
-           |FROM b GROUP BY 1""".stripMargin,
-
-      // q127's candidate-graph CTEs + four unrolled peeling rounds:
-      // each round keeps nodes with degree >= 2 and induces the
-      // subgraph — integer-only, so round-for-round engine-exact
-      "q176_kcore" -> {
-        val rounds = (1 to 4).map { i =>
-          s"""k$i AS (SELECT src AS node FROM e${i - 1}
-             |  GROUP BY src HAVING count(*) >= 2),
-             |e$i AS (SELECT e.src, e.dst FROM e${i - 1} e
-             |  JOIN k$i a ON a.node = e.src
-             |  JOIN k$i b ON b.node = e.dst)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |  FROM bk a JOIN bk b
-           |  ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |e0 AS (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-           |$rounds
-           |SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-           |FROM e4 GROUP BY src""".stripMargin
-      },
-
-      // the streaming state is the one-shot count table by additivity,
-      // so the oracle is the plain batch restatement of the top-5 view
-      "q177_streaming_topk" ->
-        s"""WITH c AS (
-           |  SELECT source, term, CAST(count(*) AS BIGINT) AS n
-           |  FROM (SELECT source, unnest($toksSql) AS term FROM documents)
-           |  GROUP BY 1, 2),
-           |r AS (
-           |  SELECT source, term, n,
-           |    CAST(row_number() OVER (PARTITION BY source
-           |      ORDER BY n DESC, term) AS BIGINT) AS rk
-           |  FROM c)
-           |SELECT source, rk, term, n FROM r WHERE rk <= 5""".stripMargin,
-
-      // 6-plane SRP bucket (srpCoef-mirrored), probes = home bucket
-      // XOR one-bit masks; corpus keeps ONE bucket per vector
-      "q178_multiprobe_srp" -> {
-        val bucketExpr = (0 until 6).map { p =>
-          val plane = (0 until 64).map(d => VectorFns.srpCoef(p, d))
-            .mkString("[", ", ", "]")
-          s"(CASE WHEN list_dot_product(v, $plane) >= 0 THEN ${1L << p} ELSE 0 END)"
-        }.mkString(" + ")
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |b AS (SELECT vec_id, v, CAST($bucketExpr AS BIGINT) AS b0 FROM e),
-           |q AS (SELECT vec_id, v, b0 FROM b WHERE vec_id < 10),
-           |probes AS (
-           |  SELECT vec_id, v,
-           |    xor(b0, CAST(unnest([0, 1, 2, 4, 8, 16, 32]) AS BIGINT)) AS bucket
-           |  FROM q),
-           |scored AS (
-           |  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |    list_dot_product(p.v, c.v) / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v))) AS cos_sim
-           |  FROM probes p JOIN b c ON c.b0 = p.bucket AND c.vec_id <> p.vec_id),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos_sim,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-           |  FROM scored)
-           |SELECT query_id, rank, neighbor_id, ${pround("cos_sim", 4)} AS cos_sim
-           |FROM ranked WHERE rank <= 3""".stripMargin
-      },
-
-      // decorrelated avg-threshold: qty*5*n < sum_qty over DECIMALs —
-      // exact, divisionless
-      "q179_small_order_parts" ->
-        """WITH a AS (
-          |  SELECT l_partkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM lineitem GROUP BY 1)
-          |SELECT p_brand, CAST(count(*) AS BIGINT) AS n_small,
-          |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS small_revenue
-          |FROM lineitem
-          |JOIN a USING (l_partkey)
-          |JOIN part ON p_partkey = l_partkey
-          |WHERE CAST(l_quantity AS DECIMAL(18,2)) * 5 * n < sq
-          |GROUP BY 1""".stripMargin,
-
-      // q21's candidate CTEs + the unrolled hash-to-min contraction
-      // (ccUnrolledSql — the recursive walk is O(Σ component²) and
-      // cost 207 s at sf1.0 on the percolated LSH graph) + the q129
-      // integer score — per-cluster audit aggregates
-      "q180_cluster_audit" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |  FROM bk a JOIN bk b
-           |  ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS MATERIALIZED (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-           |${ccUnrolledSql("edges", "ca")},
-           |comp AS (SELECT node, root AS component FROM cam),
-           |f AS (
-           |  SELECT doc_id,
-           |    CAST(len($toksSql) AS BIGINT) AS n_tok,
-           |    CAST(len(list_filter($toksSql, x -> list_contains($stopwordList, x))) AS BIGINT) AS stop_cnt,
-           |    CAST(len(text) - len(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS BIGINT) AS punct_cnt,
-           |    CAST(len(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS non_ws,
-           |    CAST(len(text) AS BIGINT) AS n_chars_t
-           |  FROM documents),
-           |sc AS (
-           |  SELECT doc_id,
-           |    CAST(80 * least(n_tok, 50)
-           |      - abs((stop_cnt * 10000) // greatest(n_tok, 1) - 2500)
-           |      - 2 * ((punct_cnt * 10000) // greatest(n_chars_t, 1))
-           |      - abs((non_ws * 100) // greatest(n_tok, 1) - 500) AS BIGINT) AS score
-           |  FROM f)
-           |SELECT component, CAST(count(*) AS BIGINT) AS size,
-           |  CAST(min(c.node) AS BIGINT) AS keeper,
-           |  CAST(min(s.score) AS BIGINT) AS min_quality,
-           |  CAST(max(s.score) AS BIGINT) AS max_quality,
-           |  CAST(min(d.n_chars) AS BIGINT) AS min_chars,
-           |  CAST(max(d.n_chars) AS BIGINT) AS max_chars
-           |FROM comp c
-           |JOIN sc s ON s.doc_id = c.node
-           |JOIN documents d ON d.doc_id = c.node
-           |GROUP BY component""".stripMargin,
-
-      // q135's epoch/shard assignment joined back to token counts —
-      // the per-(epoch, shard) training manifest
-      "q181_epoch_manifest" ->
-        """WITH e AS (SELECT doc_id, unnest([CAST(0 AS BIGINT), CAST(1 AS BIGINT)]) AS epoch FROM documents),
-          |k AS (SELECT doc_id, epoch,
-          |        md5('epoch' || CAST(epoch AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)) AS order_key
-          |      FROM e),
-          |a AS (SELECT doc_id, epoch,
-          |        CAST(('0x' || substr(order_key, 1, 15)) AS BIGINT) % 8 AS shard
-          |      FROM k),
-          |tok AS (SELECT doc_id,
-          |        CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS t
-          |      FROM documents)
-          |SELECT epoch, shard, CAST(count(*) AS BIGINT) AS n_docs,
-          |  CAST(sum(t) AS BIGINT) AS n_tokens
-          |FROM a JOIN tok USING (doc_id)
-          |GROUP BY 1, 2""".stripMargin,
-
-      // mirrors Pca.dominantDirection: quantize -> BIGINT second-moment
-      // matrix -> five unrolled max-abs-normalized matvec rounds
-      "q182_dominant_direction" -> {
-        val rounds = (1 to 5).map { r =>
-          s"""w$r AS (SELECT p.i, CAST(sum(p.c * v${r - 1}.v) AS BIGINT) AS w
-             |  FROM p JOIN v${r - 1} ON v${r - 1}.i = p.j GROUP BY p.i),
-             |m$r AS (SELECT max(abs(w)) AS m FROM w$r),
-             |v$r AS (SELECT w$r.i,
-             |  CAST(CASE WHEN m$r.m > 0
-             |    THEN floor(CAST(w$r.w AS DOUBLE) * 4096.0 / CAST(m$r.m AS DOUBLE))
-             |    ELSE 0 END AS BIGINT) AS v
-             |  FROM w$r, m$r)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |q AS (SELECT list_transform(v, x -> CAST(floor(x * 128.0 + 0.5) AS BIGINT)) AS xq FROM e),
-           |idx AS (SELECT CAST(range AS BIGINT) AS i FROM range(1, 65)),
-           |p AS (SELECT i.i, j.i AS j,
-           |    CAST(sum(q.xq[i.i] * q.xq[j.i]) AS BIGINT) AS c
-           |  FROM q, idx i, idx j GROUP BY 1, 2),
-           |v0 AS (SELECT i, CAST(4096 AS BIGINT) AS v FROM idx),
-           |$rounds
-           |SELECT v5.i AS dim, v5.v AS loading, p.c AS energy
-           |FROM v5 JOIN p ON p.i = v5.i AND p.j = v5.i""".stripMargin
-      },
-
-      // scalar-subquery threshold decorrelated: bal*n > sum over
-      // exact DECIMALs; NOT EXISTS is the anti-join
-      "q197_idle_balances" ->
-        """WITH t AS (
-          |  SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) AS s,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM customer WHERE c_acctbal > 0)
-          |SELECT substr(c_name, len(c_name), 1) AS name_digit,
-          |  CAST(count(*) AS BIGINT) AS n_cust,
-          |  round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_bal
-          |FROM customer, t
-          |WHERE CAST(c_acctbal AS DECIMAL(18,2)) * t.n > t.s
-          |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-          |GROUP BY 1""".stripMargin,
-
-      // the two-path skew join is result-preserving — the oracle is
-      // the plain enrichment join
-      "q198_skew_enriched" ->
-        """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_events,
-          |  round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-          |FROM events JOIN customer ON user_id = c_custkey
-          |GROUP BY 1""".stripMargin,
-
-      // trailing-window distinct restated as the day-grid range join
-      "q199_rolling_wau" ->
-        """WITH du AS (
-          |  SELECT DISTINCT
-          |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-          |    user_id
-          |  FROM events),
-          |days AS (SELECT DISTINCT day FROM du)
-          |SELECT g.day AS report_day,
-          |  CAST(count(DISTINCT u.user_id) AS BIGINT) AS wau
-          |FROM days g JOIN du u ON u.day BETWEEN g.day - 6 AND g.day
-          |GROUP BY 1""".stripMargin,
-
-      // q21 candidates -> symmetric edges -> per-edge endpoint degrees
-      // -> the six exact sums; operand order mirrored
-      "q195_assortativity" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-           |  FROM bk a JOIN bk b
-           |  ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |edges AS (SELECT src, dst FROM cand UNION SELECT dst, src FROM cand),
-           |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
-           |g AS (
-           |  SELECT CAST(count(*) AS BIGINT) AS n_edges,
-           |    CAST(sum(a.deg) AS BIGINT) AS sx, CAST(sum(b.deg) AS BIGINT) AS sy,
-           |    CAST(sum(a.deg * b.deg) AS BIGINT) AS sxy,
-           |    CAST(sum(a.deg * a.deg) AS BIGINT) AS sxx,
-           |    CAST(sum(b.deg * b.deg) AS BIGINT) AS syy
-           |  FROM edges e JOIN deg a ON a.src = e.src JOIN deg b ON b.src = e.dst)
-           |SELECT n_edges,
-           |  ${pround("CASE WHEN CAST(n_edges * sxx - sx * sx AS DOUBLE) > 0 AND CAST(n_edges * syy - sy * sy AS DOUBLE) > 0 THEN CAST(n_edges * sxy - sx * sy AS DOUBLE) / (sqrt(CAST(n_edges * sxx - sx * sx AS DOUBLE)) * sqrt(CAST(n_edges * syy - sy * sy AS DOUBLE))) ELSE 0.0 END", 6)} AS assortativity
-           |FROM g""".stripMargin,
-
-      // q144's nearest-match pairs as edges + the q65 recursive
-      // min-label walk; canonical = lexicographic min member name.
-      // The edge CTE uses q144's distinct-name form (same rationale:
-      // the record-level self-join was quadratic in block density)
-      // the per-tick closure is the unrolled hash-to-min contraction
-      // (ccUnrolledSql) — the former WITH RECURSIVE transitive-closure
-      // walk is O(Σ component²) rows by construction, and edit-
-      // distance chains over TPC-H's 5-color part names percolate
-      // large components at sf1.0 (731 s; the contraction is bounded
-      // by rounds × |E|)
-      "q196_golden_record" ->
-        s"""WITH p AS (
-          |  SELECT p_partkey AS id, lower(trim(p_name)) AS nm FROM part),
-          |d AS (
-          |  SELECT nm, min(id) AS id1,
-          |    min(CASE WHEN rn = 2 THEN id END) AS id2,
-          |    count(*) AS c
-          |  FROM (SELECT nm, id,
-          |          row_number() OVER (PARTITION BY nm ORDER BY id) AS rn
-          |        FROM p)
-          |  GROUP BY nm),
-          |dn AS (SELECT d.*, regexp_split_to_array(nm, '\\s+')[1] AS blk FROM d),
-          |x AS (
-          |  SELECT a.nm, b.id1 AS xid, levenshtein(a.nm, b.nm) AS dist
-          |  FROM dn a JOIN dn b ON a.blk = b.blk AND a.nm <> b.nm),
-          |bx AS (
-          |  SELECT nm, xid, dist,
-          |    row_number() OVER (PARTITION BY nm ORDER BY dist, xid) AS rn
-          |  FROM x WHERE dist <= 3),
-          |e0 AS (
-          |  SELECT p.id AS src,
-          |    CASE WHEN d.c > 1
-          |         THEN (CASE WHEN p.id = d.id1 THEN d.id2 ELSE d.id1 END)
-          |         ELSE bx.xid END AS dst
-          |  FROM p JOIN d USING (nm)
-          |  LEFT JOIN (SELECT nm, xid FROM bx WHERE rn = 1) bx USING (nm)
-          |  WHERE d.c > 1 OR bx.xid IS NOT NULL),
-          |edges AS MATERIALIZED (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-          |${ccUnrolledSql("edges", "gr")},
-          |comp AS (SELECT node, root AS component FROM grm)
-          |SELECT component, CAST(count(*) AS BIGINT) AS n_records,
-          |  min(p.nm) AS canonical_name
-          |FROM comp JOIN p ON p.id = comp.node
-          |GROUP BY 1""".stripMargin,
-
-      // q40's session CTE rolled up to daily bounce shares
-      "q192_bounce_rate" ->
-        """WITH g AS (
-          |  SELECT user_id, ts,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 3600
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, ts,
-          |    CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          |  FROM g),
-          |se AS (
-          |  SELECT user_id, session_id, min(ts) AS session_start,
-          |    CAST(count(*) AS BIGINT) AS n_events
-          |  FROM s GROUP BY 1, 2)
-          |SELECT strftime(session_start, '%Y-%m-%d') AS day,
-          |  CAST(count(*) AS BIGINT) AS n_sessions,
-          |  CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounce,
-          |  (CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) * 10000)
-          |    // CAST(count(*) AS BIGINT) AS bounce_bp
-          |FROM se GROUP BY 1""".stripMargin,
-
-      // rank the vocabulary once, sweep the three cuts
-      "q193_vocab_coverage" ->
-        s"""WITH c AS (
-           |  SELECT term, CAST(count(*) AS BIGINT) AS c
-           |  FROM (SELECT unnest($toksSql) AS term FROM documents)
-           |  GROUP BY 1),
-           |t AS (SELECT CAST(sum(c) AS BIGINT) AS tot FROM c),
-           |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, term) AS rk FROM c),
-           |k AS (SELECT unnest([100, 1000, 5000]) AS vocab_size),
-           |cov AS (
-           |  SELECT k.vocab_size,
-           |    CAST(sum(CASE WHEN r.rk <= k.vocab_size THEN r.c ELSE 0 END) AS BIGINT) AS covered
-           |  FROM r, k GROUP BY 1)
-           |SELECT CAST(vocab_size AS BIGINT) AS vocab_size, covered,
-           |  covered * 10000 // t.tot AS coverage_bp
-           |FROM cov, t""".stripMargin,
-
-      // quantile_cont parity at octile cuts
-      "q194_range_boundaries" ->
-        s"""WITH q AS (
-           |  SELECT quantile_cont(l_orderkey, [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) AS b
-           |  FROM lineitem)
-           |SELECT CAST(i AS BIGINT) AS bucket,
-           |  ${pround("b[i]", 4)} AS boundary
-           |FROM q, unnest(range(1, 8)) AS t(i)""".stripMargin,
-
-      // q68's hash-bucket split + q66's distinct-shingle overlap as
-      // the train-side anti-join
-      "q189_firewalled_split" ->
-        s"""WITH s AS (
-           |  SELECT doc_id, text,
-           |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
-           |         ELSE 'test' END AS split
-           |  FROM (SELECT doc_id, text,
-           |          (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 + 100) % 100 AS b
-           |        FROM documents)),
-           |g3 AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS sgl
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |ev AS (
-           |  SELECT DISTINCT g3.sgl FROM g3
-           |  JOIN s ON s.doc_id = g3.doc_id AND s.split = 'test'),
-           |bad AS (
-           |  SELECT DISTINCT g3.doc_id FROM g3
-           |  JOIN ev USING (sgl)
-           |  JOIN s ON s.doc_id = g3.doc_id AND s.split = 'train'),
-           |base AS (SELECT split, CAST(count(*) AS BIGINT) AS n_docs
-           |         FROM s GROUP BY 1),
-           |cl AS (SELECT CAST(count(*) AS BIGINT) AS c FROM s
-           |       WHERE split = 'train'
-           |         AND doc_id NOT IN (SELECT doc_id FROM bad))
-           |SELECT split, n_docs,
-           |  CASE WHEN split = 'train' THEN (SELECT c FROM cl)
-           |       ELSE n_docs END AS n_after_firewall
-           |FROM base""".stripMargin,
-
-      // q21 candidates + q23 intersection sizes + q27's 64-bit simhash
-      // sigs; all three flags integer-exact (cross-multiplied)
-      "q190_verifier_matrix" ->
-        s"""WITH shs AS (
-           |  SELECT doc_id, list_distinct($shinglesSql) AS sset
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, unnest(sset) AS s FROM shs),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS i
-           |  FROM cand c JOIN sh ea ON ea.doc_id = c.id_a JOIN sh eb ON eb.doc_id = c.id_b AND eb.s = ea.s
-           |  GROUP BY c.id_a, c.id_b),
-           |toks AS (SELECT doc_id, unnest($toksSql) AS token FROM documents),
-           |votes AS (
-           |  SELECT doc_id, r1.b, r2.j,
-           |    sum(CASE WHEN (CAST(('0x' || substr(md5(token), r1.b * 4 + 1, 4)) AS BIGINT) >> r2.j) & 1 = 1
-           |             THEN 1 ELSE -1 END) AS v
-           |  FROM toks, unnest(range(0, 4)) AS r1(b), unnest(range(0, 16)) AS r2(j)
-           |  GROUP BY doc_id, r1.b, r2.j),
-           |bandsig AS (
-           |  SELECT doc_id, b, CAST(sum(CASE WHEN v >= 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS s
-           |  FROM votes GROUP BY doc_id, b),
-           |sigs4 AS (
-           |  SELECT doc_id,
-           |    max(CASE WHEN b = 0 THEN s END) AS s0, max(CASE WHEN b = 1 THEN s END) AS s1,
-           |    max(CASE WHEN b = 2 THEN s END) AS s2, max(CASE WHEN b = 3 THEN s END) AS s3
-           |  FROM bandsig GROUP BY doc_id),
-           |flags AS (
-           |  SELECT
-           |    CASE WHEN COALESCE(i.i, 0) * 3 >= sa.n + sb.n THEN 1 ELSE 0 END AS jaccard_05,
-           |    CASE WHEN bit_count(xor(pa.s0, pb.s0)) + bit_count(xor(pa.s1, pb.s1))
-           |            + bit_count(xor(pa.s2, pb.s2)) + bit_count(xor(pa.s3, pb.s3)) <= 3
-           |         THEN 1 ELSE 0 END AS hamming_3,
-           |    CASE WHEN COALESCE(i.i, 0) * 5 >= least(sa.n, sb.n) * 4 THEN 1 ELSE 0 END AS containment_08
-           |  FROM cand c
-           |  LEFT JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-           |  JOIN (SELECT doc_id, CAST(len(sset) AS BIGINT) AS n FROM shs) sa ON sa.doc_id = c.id_a
-           |  JOIN (SELECT doc_id, CAST(len(sset) AS BIGINT) AS n FROM shs) sb ON sb.doc_id = c.id_b
-           |  JOIN sigs4 pa ON pa.doc_id = c.id_a
-           |  JOIN sigs4 pb ON pb.doc_id = c.id_b)
-           |SELECT CAST(jaccard_05 AS BIGINT) AS jaccard_05,
-           |  CAST(hamming_3 AS BIGINT) AS hamming_3,
-           |  CAST(containment_08 AS BIGINT) AS containment_08,
-           |  CAST(count(*) AS BIGINT) AS n_pairs
-           |FROM flags GROUP BY 1, 2, 3""".stripMargin,
-
-      // OR-of-ANDs predicate groups over the broadcast part dim
-      "q191_disjunctive_pricing" ->
-        """SELECT CAST(count(*) AS BIGINT) AS n_items,
-          |  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-          |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 5 AND 25 AND l_quantity BETWEEN 10 AND 30)
-          |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 40 AND l_quantity BETWEEN 20 AND 45)""".stripMargin,
-
-      // RANGE frame on the integer day axis — value-based framing on
-      // both engines
-      "q187_rolling_7d" ->
-        """WITH daily AS (
-          |  SELECT event_type,
-          |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM events GROUP BY 1, 2)
-          |SELECT event_type, day, n,
-          |  CAST(sum(n) OVER (PARTITION BY event_type ORDER BY day
-          |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_7d
-          |FROM daily""".stripMargin,
-
-      // q23's verified jaccard per candidate pair, swept at four
-      // thresholds; docs counted once per threshold via the pair
-      // explode (count(*)/2 pairs is exact — every pair adds 2 rows)
-      "q188_threshold_sweep" ->
-        s"""WITH shs AS (
-           |  SELECT doc_id, list_distinct($shinglesSql) AS sset
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, unnest(sset) AS s FROM shs),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS i
-           |  FROM cand c JOIN sh ea ON ea.doc_id = c.id_a JOIN sh eb ON eb.doc_id = c.id_b AND eb.s = ea.s
-           |  GROUP BY c.id_a, c.id_b),
-           |j AS (
-           |  SELECT c.id_a, c.id_b,
-           |    CAST(COALESCE(i.i, 0) AS DOUBLE) / (sa.n + sb.n - CAST(COALESCE(i.i, 0) AS DOUBLE)) AS jaccard
-           |  FROM cand c
-           |  LEFT JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-           |  JOIN (SELECT doc_id, len(sset) AS n FROM shs) sa ON sa.doc_id = c.id_a
-           |  JOIN (SELECT doc_id, len(sset) AS n FROM shs) sb ON sb.doc_id = c.id_b),
-           |sw AS (
-           |  SELECT unnest([0.3, 0.5, 0.7, 0.9]) AS threshold, id_a, id_b, jaccard
-           |  FROM j),
-           |f AS (
-           |  SELECT threshold, unnest([id_a, id_b]) AS doc
-           |  FROM sw WHERE jaccard >= threshold)
-           |SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
-           |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
-           |FROM f GROUP BY 1""".stripMargin,
-
-      // cumulatives over the bounded value histogram (the oracle may
-      // window them); gap maximized in BIGINT cross-multiplication
-      "q183_ks_drift" ->
-        """WITH tok AS (
-          |  SELECT source,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS v
-          |  FROM documents),
-          |gb AS (SELECT source, v, CAST(count(*) AS BIGINT) AS c
-          |       FROM tok GROUP BY 1, 2),
-          |b AS (SELECT v, CAST(count(*) AS BIGINT) AS cb FROM tok GROUP BY 1),
-          |bcum AS (SELECT v, CAST(sum(cb) OVER (ORDER BY v) AS BIGINT) AS cumb FROM b),
-          |gt AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1),
-          |nn AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM tok),
-          |grid AS (SELECT gt.source, gt.n, bc.v, bc.cumb, nn.nn
-          |         FROM gt CROSS JOIN bcum bc CROSS JOIN nn),
-          |gc AS (
-          |  SELECT g.source, g.n, g.v, g.cumb, g.nn,
-          |    COALESCE(CAST(sum(gb.c) AS BIGINT), 0) AS cumg
-          |  FROM grid g LEFT JOIN gb
-          |    ON gb.source = g.source AND gb.v <= g.v
-          |  GROUP BY 1, 2, 3, 4, 5),
-          |m AS (
-          |  SELECT source, max(n) AS n_rows, max(nn) AS nn,
-          |    max(abs(cumg * nn - cumb * n)) AS mg
-          |  FROM gc GROUP BY 1)
-          |SELECT source, n_rows,
-          |  CAST(floor(CAST(mg AS DOUBLE) * 10000.0
-          |    / (CAST(n_rows AS DOUBLE) * CAST(nn AS DOUBLE))) AS BIGINT) AS ks_bp
-          |FROM m""".stripMargin,
-
-      // (c/n)·log10(n/c) from exact integer ratios, pround6 per
-      // contribution, DECIMAL-exact sum (the q146 discipline)
-      "q184_lang_purity" ->
-        s"""WITH cl AS (
-           |  SELECT source, lang, CAST(count(*) AS BIGINT) AS c
-           |  FROM documents GROUP BY 1, 2),
-           |gt AS (SELECT source, CAST(sum(c) AS BIGINT) AS n,
-           |         CAST(count(*) AS BIGINT) AS nl
-           |       FROM cl GROUP BY 1),
-           |x AS (
-           |  SELECT cl.source, gt.n, gt.nl,
-           |    CAST(${pround(
-                 "(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * log10(CAST(n AS DOUBLE) / CAST(c AS DOUBLE))",
-                 6)} AS DECIMAL(18,6)) AS h
-           |  FROM cl JOIN gt ON gt.source = cl.source)
-           |SELECT source, max(n) AS n_rows, max(nl) AS n_labels,
-           |  CAST(sum(h) AS DOUBLE) AS h_label
-           |FROM x GROUP BY 1""".stripMargin,
-
-      // same total (date, orderkey) per-customer order; quantile_cont
-      // parity for the day-gap bands
-      "q185_order_cadence" ->
-        s"""WITH o AS (
-           |  SELECT c_mktsegment, o_custkey, o_orderkey,
-           |    CAST(o_orderdate AS DATE) AS d,
-           |    lag(CAST(o_orderdate AS DATE)) OVER (
-           |      PARTITION BY o_custkey
-           |      ORDER BY o_orderdate, o_orderkey) AS prev
-           |  FROM orders JOIN customer ON o_custkey = c_custkey),
-           |g AS (
-           |  SELECT c_mktsegment,
-           |    CAST(date_diff('day', prev, d) AS BIGINT) AS gap
-           |  FROM o WHERE prev IS NOT NULL)
-           |SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_gaps,
-           |  ${pround("quantile_cont(gap, 0.5)", 4)} AS p50_days,
-           |  ${pround("quantile_cont(gap, 0.9)", 4)} AS p90_days
-           |FROM g GROUP BY 1""".stripMargin,
-
-      // expected shares are exact integer constants summing to 10000
-      "q186_benford" ->
-        """WITH d AS (
-          |  SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit
-          |  FROM orders),
-          |n AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1),
-          |t AS (SELECT CAST(sum(n) AS BIGINT) AS nn FROM n),
-          |e(digit, exp_bp) AS (VALUES
-          |  (1, CAST(3010 AS BIGINT)), (2, 1761), (3, 1249), (4, 969),
-          |  (5, 792), (6, 669), (7, 580), (8, 512), (9, 458))
-          |SELECT n.digit, n.n, (n.n * 10000) // t.nn AS obs_bp,
-          |  CAST(e.exp_bp AS BIGINT) AS exp_bp,
-          |  (n.n * 10000) // t.nn - e.exp_bp AS dev_bp
-          |FROM n, t JOIN e ON e.digit = n.digit""".stripMargin,
-
-      "q200_rank_suite" ->
-        s"""SELECT c_mktsegment AS segment, c_custkey, c_acctbal,
-           |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-           |  ${pround("percent_rank() OVER w", 6)} AS pct_rank,
-           |  ${pround("cume_dist() OVER w", 6)} AS cume
-           |FROM customer
-           |WINDOW w AS (PARTITION BY c_mktsegment
-           |             ORDER BY c_acctbal DESC, c_custkey)""".stripMargin,
-
-      // the semi join IS the EXISTS
-      "q201_late_exists" ->
-        """SELECT o_orderpriority AS priority,
-          |  CAST(count(*) AS BIGINT) AS n_late_orders
-          |FROM orders
-          |WHERE EXISTS (SELECT 1 FROM lineitem
-          |  WHERE l_orderkey = o_orderkey
-          |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-          |GROUP BY 1""".stripMargin,
-
-      "q202_nation_volume" ->
-        """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-          |  CAST(year(o_orderdate) AS BIGINT) AS year,
-          |  count(*) AS n_items,
-          |  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 4) AS volume
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN supplier ON l_suppkey = s_suppkey
-          |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-          |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-          |WHERE s_nationkey <> c_nationkey
-          |GROUP BY 1, 2, 3""".stripMargin,
-
-      // scalar-subquery threshold cross-multiplied on exact DECIMALs:
-      // rev > 1.25 * (total/n)  ⟺  rev*n*4 > total*5
-      "q203_part_concentration" ->
-        """WITH pr AS (
-          |  SELECT l_partkey,
-          |    sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS rev
-          |  FROM lineitem GROUP BY 1),
-          |t AS (SELECT sum(rev) AS tot, CAST(count(*) AS BIGINT) AS n FROM pr)
-          |SELECT l_partkey, round(CAST(rev AS DOUBLE), 4) AS part_value
-          |FROM pr, t WHERE rev * n * 4 > tot * 5""".stripMargin,
-
-      // max as a one-row cross join; DECIMAL equality is exact
-      "q204_top_supplier" ->
-        """WITH rev AS (
-          |  SELECT l_suppkey,
-          |    sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS r
-          |  FROM lineitem
-          |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          |    AND l_shipdate < TIMESTAMP '1996-04-01'
-          |  GROUP BY 1),
-          |m AS (SELECT max(r) AS mx FROM rev)
-          |SELECT s_suppkey, s_name, round(CAST(r AS DOUBLE), 4) AS total_revenue
-          |FROM rev, m JOIN supplier ON l_suppkey = s_suppkey
-          |WHERE r = mx""".stripMargin,
-
-      "q205_big_orders" ->
-        """WITH oq AS (
-          |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-          |  FROM lineitem GROUP BY 1 HAVING qty > 250)
-          |SELECT c_custkey, c_name, o_orderkey, o_totalprice,
-          |  round(CAST(qty AS DOUBLE), 2) AS total_qty
-          |FROM oq JOIN orders ON o_orderkey = l_orderkey
-          |JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-      // per-(order,supplier) lateness flags, then the sole-late filter
-      "q206_sole_late_supplier" ->
-        """WITH ps AS (
-          |  SELECT l_orderkey, l_suppkey,
-          |    max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 45 DAY
-          |        THEN 1 ELSE 0 END) AS late
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |  GROUP BY 1, 2),
-          |po AS (
-          |  SELECT l_orderkey FROM ps
-          |  GROUP BY 1 HAVING count(*) >= 2 AND sum(late) = 1)
-          |SELECT s_name, CAST(count(*) AS BIGINT) AS n_orders
-          |FROM ps
-          |JOIN po USING (l_orderkey)
-          |JOIN supplier ON l_suppkey = s_suppkey
-          |WHERE late = 1
-          |GROUP BY 1""".stripMargin,
-
-      // NOT IN as the anti-join over distinct fact pairs
-      "q207_supplier_census" ->
-        """SELECT p_brand, p_size,
-          |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-          |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-          |JOIN part ON l_partkey = p_partkey
-          |WHERE l_suppkey NOT IN
-          |  (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-          |GROUP BY 1, 2""".stripMargin,
-
-      // per-group threshold cross-multiplied on exact DECIMALs
-      "q208_dominant_supplier" ->
-        """WITH sq AS (
-          |  SELECT l_partkey, l_suppkey,
-          |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS q
-          |  FROM lineitem GROUP BY 1, 2),
-          |tot AS (
-          |  SELECT l_partkey, sum(q) AS tq, CAST(count(*) AS BIGINT) AS ns
-          |  FROM sq GROUP BY 1)
-          |SELECT sq.l_partkey, l_suppkey,
-          |  round(CAST(q AS DOUBLE), 2) AS supp_qty,
-          |  round(CAST(tq AS DOUBLE), 2) AS part_qty
-          |FROM sq JOIN tot ON sq.l_partkey = tot.l_partkey
-          |WHERE ns >= 2 AND q * 2 > tq""".stripMargin,
-
-      // the struct-min replayed as a rank-1 cut under the identical
-      // (unit price, suppkey) total order
-      "q209_min_cost_supplier" ->
-        s"""WITH unit AS (
-           |  SELECT l_partkey, l_suppkey,
-           |    min(l_extendedprice / l_quantity) AS mp
-           |  FROM lineitem GROUP BY 1, 2),
-           |r AS (
-           |  SELECT l_partkey, l_suppkey, mp,
-           |    row_number() OVER (PARTITION BY l_partkey
-           |                       ORDER BY mp, l_suppkey) AS rn
-           |  FROM unit)
-           |SELECT l_partkey, l_suppkey AS best_suppkey,
-           |  ${pround("mp", 4)} AS unit_price
-           |FROM r WHERE rn = 1""".stripMargin,
-
-      // q157's candidate-edge CTE + symmetric degrees; the coefficient
-      // is the same BIGINT floor expression (// in DuckDB, DIV in Spark)
-      "q210_clustering_coeff" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |h AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM h GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |e AS (
-           |  SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-           |  FROM bk a JOIN bk b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |deg AS (
-           |  SELECT node, CAST(count(*) AS BIGINT) AS degree
-           |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-           |  GROUP BY 1),
-           |tri AS (
-           |  SELECT ab.a, ab.b, bc.b AS c
-           |  FROM e ab JOIN e bc ON bc.a = ab.b
-           |  WHERE EXISTS (SELECT 1 FROM e ac WHERE ac.a = ab.a AND ac.b = bc.b)),
-           |nt AS (
-           |  SELECT node, CAST(count(*) AS BIGINT) AS n_tri
-           |  FROM (SELECT unnest([a, b, c]) AS node FROM tri)
-           |  GROUP BY 1)
-           |SELECT deg.node, degree, CAST(coalesce(n_tri, 0) AS BIGINT) AS n_tri,
-           |  coalesce(n_tri, 0) * 20000 // (degree * (degree - 1)) AS coeff_bp
-           |FROM deg LEFT JOIN nt ON deg.node = nt.node
-           |WHERE degree >= 2""".stripMargin,
-
-      // pair supports from per-order distinct part pairs; lift by the
-      // identical BIGINT floor formula; same (support desc, pair) head
-      "q211_basket_affinity" ->
-        """WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-          |nb AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n FROM b),
-          |ic AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS ni FROM b GROUP BY 1),
-          |p AS (
-          |  SELECT x.l_partkey AS item_a, y.l_partkey AS item_b,
-          |    CAST(count(*) AS BIGINT) AS n_ab
-          |  FROM b x JOIN b y ON x.l_orderkey = y.l_orderkey
-          |    AND x.l_partkey < y.l_partkey
-          |  GROUP BY 1, 2 HAVING n_ab >= 2)
-          |SELECT item_a, item_b, n_ab,
-          |  ia.ni AS n_a, ib.ni AS n_b,
-          |  n_ab * nb.n * 10000 // (ia.ni * ib.ni) AS lift_bp
-          |FROM p
-          |JOIN ic ia ON ia.l_partkey = item_a
-          |JOIN ic ib ON ib.l_partkey = item_b, nb
-          |ORDER BY n_ab DESC, item_a, item_b LIMIT 30""".stripMargin,
-
-      // same island key: day - row_number is constant within a run
-      "q212_user_streaks" ->
-        """WITH du AS (
-          |  SELECT DISTINCT user_id,
-          |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day
-          |  FROM events),
-          |isl AS (
-          |  SELECT user_id, day,
-          |    day - row_number() OVER (PARTITION BY user_id ORDER BY day) AS k
-          |  FROM du),
-          |runs AS (
-          |  SELECT user_id, CAST(count(*) AS BIGINT) AS len
-          |  FROM isl GROUP BY user_id, k)
-          |SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
-          |  CAST(max(len) AS BIGINT) AS longest_streak
-          |FROM runs GROUP BY 1""".stripMargin,
-
-      // division via distinct-count match against the global class count
-      "q213_all_priorities" ->
-        """WITH np AS (
-          |  SELECT CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS n FROM orders),
-          |pc AS (
-          |  SELECT o_custkey,
-          |    CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS c,
-          |    CAST(count(*) AS BIGINT) AS n_orders
-          |  FROM orders GROUP BY 1)
-          |SELECT c_custkey, c_name, n_orders
-          |FROM pc, np
-          |JOIN customer ON o_custkey = c_custkey
-          |WHERE pc.c = np.n""".stripMargin,
-
-      // EXCEPT ALL / INTERSECT ALL carry multiplicities in both engines
-      "q214_bag_ops" ->
-        """WITH fst AS (
-          |  SELECT user_id, event_type FROM events
-          |  WHERE CAST(ts AS DATE) < DATE '2024-01-16'),
-          |snd AS (
-          |  SELECT user_id, event_type FROM events
-          |  WHERE CAST(ts AS DATE) >= DATE '2024-01-16'),
-          |ex AS (
-          |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_surplus
-          |  FROM (SELECT * FROM fst EXCEPT ALL SELECT * FROM snd)
-          |  GROUP BY 1),
-          |ix AS (
-          |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_common
-          |  FROM (SELECT * FROM fst INTERSECT ALL SELECT * FROM snd)
-          |  GROUP BY 1)
-          |SELECT coalesce(ex.event_type, ix.event_type) AS event_type,
-          |  CAST(coalesce(n_surplus, 0) AS BIGINT) AS n_surplus,
-          |  CAST(coalesce(n_common, 0) AS BIGINT) AS n_common
-          |FROM ex FULL JOIN ix ON ex.event_type = ix.event_type""".stripMargin,
-
-      // two HITS rounds unrolled; round-1 hub inflow is deg * unit
-      // because every authority starts at unit
-      "q215_hits" ->
-        """WITH e AS (
-          |  SELECT DISTINCT o_custkey AS h, l_suppkey AS a
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-          |h1 AS (SELECT h, CAST(count(*) AS BIGINT) * 1000000 AS raw FROM e GROUP BY 1),
-          |hm1 AS (SELECT max(raw) AS m FROM h1),
-          |h1n AS (SELECT h, raw * 1000000 // m AS score FROM h1, hm1),
-          |a1 AS (SELECT a, CAST(sum(score) AS BIGINT) AS raw
-          |  FROM e JOIN h1n USING (h) GROUP BY 1),
-          |am1 AS (SELECT max(raw) AS m FROM a1),
-          |a1n AS (SELECT a, raw * 1000000 // m AS score FROM a1, am1),
-          |h2 AS (SELECT h, CAST(sum(score) AS BIGINT) AS raw
-          |  FROM e JOIN a1n USING (a) GROUP BY 1),
-          |hm2 AS (SELECT max(raw) AS m FROM h2),
-          |h2n AS (SELECT h, raw * 1000000 // m AS score FROM h2, hm2),
-          |a2 AS (SELECT a, CAST(sum(score) AS BIGINT) AS raw
-          |  FROM e JOIN h2n USING (h) GROUP BY 1),
-          |am2 AS (SELECT max(raw) AS m FROM a2),
-          |a2n AS (SELECT a, raw * 1000000 // m AS score FROM a2, am2)
-          |SELECT 'hub' AS role, h AS node, score FROM h2n
-          |UNION ALL
-          |SELECT 'auth' AS role, a AS node, score FROM a2n""".stripMargin,
-
-      // ranked on the exact DECIMAL sum, rounded after the cut
-      "q216_unshipped_topk" ->
-        """SELECT l_orderkey, o_orderdate, o_orderpriority,
-          |  round(CAST(rev AS DOUBLE), 4) AS revenue
-          |FROM (
-          |  SELECT l_orderkey, o_orderdate, o_orderpriority,
-          |    sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS rev
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  WHERE c_mktsegment = 'BUILDING'
-          |    AND o_orderdate < TIMESTAMP '1998-01-01'
-          |    AND l_shipdate > TIMESTAMP '1998-01-01'
-          |  GROUP BY 1, 2, 3)
-          |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
-
-      "q217_forecast_revenue" ->
-        """SELECT CAST(count(*) AS BIGINT) AS n_items,
-          |  round(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-          |FROM lineitem
-          |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          |  AND l_shipdate < TIMESTAMP '1997-01-01'
-          |  AND l_discount >= 0.05 AND l_discount <= 0.07
-          |  AND l_quantity < 24""".stripMargin,
-
-      // conditional numerator; the share division runs on the SAME two
-      // doubles in both engines
-      "q218_market_share" ->
-        s"""WITH j AS (
-           |  SELECT year(o_orderdate) AS yr,
-           |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS vol,
-           |    ns.n_name AS sn
-           |  FROM lineitem
-           |  JOIN orders ON l_orderkey = o_orderkey
-           |  JOIN customer ON o_custkey = c_custkey
-           |  JOIN nation nc ON c_nationkey = nc.n_nationkey
-           |  JOIN region ON nc.n_regionkey = r_regionkey
-           |  JOIN supplier ON l_suppkey = s_suppkey
-           |  JOIN nation ns ON s_nationkey = ns.n_nationkey
-           |  JOIN part ON l_partkey = p_partkey
-           |  WHERE r_name = 'ASIA' AND p_type = 'STANDARD'),
-           |g AS (
-           |  SELECT CAST(yr AS BIGINT) AS year, sum(vol) AS tot,
-           |    sum(CASE WHEN sn = 'NATION_5' THEN vol
-           |        ELSE CAST(0 AS DECIMAL(18,4)) END) AS nat
-           |  FROM j GROUP BY 1)
-           |SELECT year, round(CAST(tot AS DOUBLE), 4) AS total_volume,
-           |  round(CAST(nat AS DOUBLE), 4) AS nation_volume,
-           |  ${pround("CAST(nat AS DOUBLE) / CAST(tot AS DOUBLE)", 6)} AS share
-           |FROM g""".stripMargin,
-
-      // the two-term profit expression keeps Spark's operand order
-      "q219_product_profit" ->
-        """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS year,
-          |  CAST(count(*) AS BIGINT) AS n_items,
-          |  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-          |    - l_quantity * p_retailprice * 0.1 AS DECIMAL(18,4))) AS DOUBLE), 4) AS profit
-          |FROM lineitem
-          |JOIN part ON l_partkey = p_partkey
-          |JOIN supplier ON l_suppkey = s_suppkey
-          |JOIN nation ON s_nationkey = n_nationkey
-          |JOIN orders ON l_orderkey = o_orderkey
-          |WHERE p_name LIKE '%widget%'
-          |GROUP BY 1, 2""".stripMargin,
-
-      "q220_returned_customers" ->
-        """SELECT c_custkey, c_name, c_mktsegment,
-          |  round(CAST(lost AS DOUBLE), 4) AS lost_revenue
-          |FROM (
-          |  SELECT c_custkey, c_name, c_mktsegment,
-          |    sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS lost
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  WHERE l_returnflag = 'R'
-          |    AND o_orderdate >= TIMESTAMP '1997-01-01'
-          |    AND o_orderdate < TIMESTAMP '1997-04-01'
-          |  GROUP BY 1, 2, 3)
-          |ORDER BY lost DESC, c_custkey LIMIT 20""".stripMargin,
-
-      "q221_shipdelay_mix" ->
-        """SELECT CASE WHEN d <= 30 THEN 'fast'
-          |  WHEN d <= 60 THEN 'medium' ELSE 'slow' END AS delay_band,
-          |  CAST(sum(CASE WHEN hi THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-          |  CAST(sum(CASE WHEN hi THEN 0 ELSE 1 END) AS BIGINT) AS n_low
-          |FROM (
-          |  SELECT date_diff('day', CAST(o_orderdate AS DATE),
-          |      CAST(l_shipdate AS DATE)) AS d,
-          |    o_orderpriority IN ('1-URGENT', '2-HIGH') AS hi
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-          |GROUP BY 1""".stripMargin,
-
-      // q26's e/bk/cand CTE prefix (the trailing cosine CTE is unused
-      // and unevaluated); neighbors symmetrized, labels joined twice
-      "q222_label_consistency" ->
-        s"""$embeddingPairsSql,
-           |nb AS (SELECT id_a AS doc, id_b AS nbr FROM cand
-           |       UNION ALL SELECT id_b, id_a FROM cand),
-           |l AS (SELECT vec_id, label FROM embeddings),
-           |j AS (
-           |  SELECT nb.doc, la.label,
-           |    CASE WHEN la.label = lb.label THEN 1 ELSE 0 END AS same
-           |  FROM nb
-           |  JOIN l la ON la.vec_id = nb.doc
-           |  JOIN l lb ON lb.vec_id = nb.nbr)
-           |SELECT doc AS vec_id, label,
-           |  CAST(count(*) AS BIGINT) AS n_neighbors,
-           |  CAST(sum(same) AS BIGINT) AS n_same,
-           |  CAST(sum(same) * 10000 // count(*) AS BIGINT) AS agree_bp
-           |FROM j GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
-
-      // additive across basket-whole batches ≡ the one-shot pair table
-      "q223_streaming_baskets" ->
-        """WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-          |SELECT x.l_partkey AS item_a, y.l_partkey AS item_b,
-          |  CAST(count(*) AS BIGINT) AS n_ab
-          |FROM b x JOIN b y ON x.l_orderkey = y.l_orderkey
-          |  AND x.l_partkey < y.l_partkey
-          |GROUP BY 1, 2 HAVING count(*) >= 2
-          |ORDER BY n_ab DESC, item_a, item_b LIMIT 30""".stripMargin,
-
-      // identical contribution formula and operand order; per-pair
-      // term grid = union of either side's terms
-      "q224_source_divergence" ->
-        s"""WITH c AS (
-           |  SELECT src, term, CAST(count(*) AS BIGINT) AS c
-           |  FROM (SELECT source AS src, unnest($toksSql) AS term FROM documents)
-           |  GROUP BY 1, 2),
-           |t AS (SELECT src, CAST(sum(c) AS BIGINT) AS n FROM c GROUP BY 1),
-           |p AS (
-           |  SELECT a.src AS src_a, b.src AS src_b, a.n AS na, b.n AS nb
-           |  FROM t a JOIN t b ON a.src < b.src),
-           |u AS (
-           |  SELECT p.src_a, p.src_b, c.term FROM p JOIN c ON c.src = p.src_a
-           |  UNION
-           |  SELECT p.src_a, p.src_b, c.term FROM p JOIN c ON c.src = p.src_b),
-           |g AS (
-           |  SELECT u.src_a, u.src_b, u.term,
-           |    CAST(COALESCE(ca.c, 0) AS DOUBLE) AS ca,
-           |    CAST(COALESCE(cb.c, 0) AS DOUBLE) AS cb,
-           |    CAST(p.na AS DOUBLE) AS na, CAST(p.nb AS DOUBLE) AS nb
-           |  FROM u
-           |  JOIN p ON p.src_a = u.src_a AND p.src_b = u.src_b
-           |  LEFT JOIN c ca ON ca.src = u.src_a AND ca.term = u.term
-           |  LEFT JOIN c cb ON cb.src = u.src_b AND cb.term = u.term),
-           |j AS (
-           |  SELECT src_a, src_b,
-           |    CAST(floor((
-           |      CASE WHEN ca > 0 THEN 0.5 * (ca / na)
-           |        * log2(2.0 * ca * nb / (ca * nb + cb * na)) ELSE 0.0 END +
-           |      CASE WHEN cb > 0 THEN 0.5 * (cb / nb)
-           |        * log2(2.0 * cb * na / (ca * nb + cb * na)) ELSE 0.0 END
-           |      ) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS jc
-           |  FROM g)
-           |SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_terms,
-           |  ${pround("CAST(sum(jc) AS DOUBLE)", 4)} AS js_bits
-           |FROM j GROUP BY 1, 2""".stripMargin,
-
-      // DuckDB dayofweek is Sunday=0; +1 aligns with Spark's Sunday=1
-      "q225_weekday_seasonality" ->
-        """WITH c AS (
-          |  SELECT event_type,
-          |    CAST(dayofweek(CAST(ts AS DATE)) AS BIGINT) + 1 AS dow,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM events GROUP BY 1, 2),
-          |t AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS tot
-          |      FROM c GROUP BY 1)
-          |SELECT c.event_type, dow, n,
-          |  n * 7 * 10000 // tot AS index_bp
-          |FROM c JOIN t ON c.event_type = t.event_type""".stripMargin,
-
-      "q226_k_anonymity" ->
-        """WITH ec AS (
-          |  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS sz
-          |  FROM customer GROUP BY 1, 2)
-          |SELECT sz AS class_size, CAST(count(*) AS BIGINT) AS n_classes,
-          |  CAST(sz * count(*) AS BIGINT) AS n_rows,
-          |  sz < 10 AS violates_k
-          |FROM ec GROUP BY sz""".stripMargin,
-
-      // NULL sensitive values count as one distinct value (engine
-      // contract, matching t-closeness); o_orderpriority is NOT NULL
-      // so the correction term is 0 here, but the oracle carries it to
-      // keep the semantic contract aligned
-      "q227_l_diversity" ->
-        """WITH ec AS (
-          |  SELECT c_nationkey, c_mktsegment,
-          |    CAST(count(*) AS BIGINT) AS sz,
-          |    CAST(count(DISTINCT o_orderpriority)
-          |         + CASE WHEN count(*) > count(o_orderpriority) THEN 1 ELSE 0 END
-          |         AS BIGINT) AS div
-          |  FROM customer JOIN orders ON c_custkey = o_custkey
-          |  GROUP BY 1, 2)
-          |SELECT sz AS class_size, div AS diversity,
-          |  CAST(count(*) AS BIGINT) AS n_classes,
-          |  div < 3 AS violates_l
-          |FROM ec GROUP BY 1, 2""".stripMargin,
-
-      // identical contribution formula; the grid joins the
-      // nature-bounded sensitive-value table onto every class
-      "q228_t_closeness" ->
-        s"""WITH j AS (
-           |  SELECT c_nationkey, c_mktsegment, o_orderpriority
-           |  FROM customer JOIN orders ON c_custkey = o_custkey),
-           |cs AS (
-           |  SELECT c_nationkey, c_mktsegment, o_orderpriority,
-           |    CAST(count(*) AS BIGINT) AS c
-           |  FROM j GROUP BY 1, 2, 3),
-           |ct AS (
-           |  SELECT c_nationkey, c_mktsegment, CAST(sum(c) AS BIGINT) AS n
-           |  FROM cs GROUP BY 1, 2),
-           |gs AS (SELECT o_orderpriority, CAST(sum(c) AS BIGINT) AS cg
-           |       FROM cs GROUP BY 1),
-           |gt AS (SELECT CAST(sum(cg) AS BIGINT) AS nn FROM gs),
-           |grid AS (SELECT * FROM ct, gs, gt),
-           |tv AS (
-           |  SELECT g.c_nationkey, g.c_mktsegment, g.n,
-           |    CAST(floor(0.5 * abs(
-           |      CAST(COALESCE(cs.c, 0) AS DOUBLE) / CAST(g.n AS DOUBLE) -
-           |      CAST(g.cg AS DOUBLE) / CAST(g.nn AS DOUBLE)
-           |    ) * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS tvc
-           |  FROM grid g
-           |  LEFT JOIN cs ON cs.c_nationkey = g.c_nationkey
-           |    AND cs.c_mktsegment = g.c_mktsegment
-           |    AND cs.o_orderpriority = g.o_orderpriority)
-           |SELECT c_nationkey, c_mktsegment,
-           |  CAST(max(n) AS BIGINT) AS class_size,
-           |  ${pround("CAST(sum(tvc) AS DOUBLE)", 4)} AS tv,
-           |  CAST(sum(tvc) AS DOUBLE) > 0.05 AS violates_t
-           |FROM tv GROUP BY 1, 2""".stripMargin,
-
-      // the greedy rounds unrolled: argmax by (new-shingle count desc,
-      // id), covered set accumulates; a round with no positive-gain
-      // doc emits no row (the engine's early stop)
-      "q247_greedy_coverage" ->
-        s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |gr AS (SELECT doc_id, unnest(list_distinct($shinglesSql)) AS g FROM d),
-           |w1 AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nc FROM gr
-           |       GROUP BY 1 ORDER BY nc DESC, doc_id LIMIT 1),
-           |c1 AS (SELECT DISTINCT g FROM gr JOIN w1 USING (doc_id)),
-           |w2 AS (SELECT gr.doc_id, CAST(count(*) AS BIGINT) AS nc FROM gr
-           |       WHERE gr.g NOT IN (SELECT g FROM c1)
-           |         AND gr.doc_id NOT IN (SELECT doc_id FROM w1)
-           |       GROUP BY 1 ORDER BY nc DESC, doc_id LIMIT 1),
-           |c2 AS (SELECT g FROM c1
-           |       UNION SELECT gr.g FROM gr JOIN w2 USING (doc_id)),
-           |w3 AS (SELECT gr.doc_id, CAST(count(*) AS BIGINT) AS nc FROM gr
-           |       WHERE gr.g NOT IN (SELECT g FROM c2)
-           |         AND gr.doc_id NOT IN (SELECT doc_id FROM w1)
-           |         AND gr.doc_id NOT IN (SELECT doc_id FROM w2)
-           |       GROUP BY 1 ORDER BY nc DESC, doc_id LIMIT 1),
-           |c3 AS (SELECT g FROM c2
-           |       UNION SELECT gr.g FROM gr JOIN w3 USING (doc_id))
-           |SELECT CAST(1 AS BIGINT) AS round, doc_id, nc AS new_grams,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c1) AS covered_total
-           |FROM w1
-           |UNION ALL SELECT 2, doc_id, nc,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c2) FROM w2
-           |UNION ALL SELECT 3, doc_id, nc,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c3) FROM w3""".stripMargin,
-
-      // per-distinct-score class counts, global prefix of negatives
-      // (plain window on DuckDB's single node), DECIMAL(38,0) U, one
-      // fixed-order double division + pround6
-      "q248_rank_auc" ->
-        """WITH e AS (
-          |  SELECT value AS s,
-          |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-          |  FROM events WHERE value IS NOT NULL),
-          |ps AS (
-          |  SELECT s, CAST(sum(p) AS BIGINT) AS np,
-          |    CAST(count(*) - sum(p) AS BIGINT) AS nn
-          |  FROM e GROUP BY 1),
-          |pre AS (
-          |  SELECT s, np, nn,
-          |    CAST(coalesce(sum(nn) OVER (ORDER BY s
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-          |      AS BIGINT) AS below
-          |  FROM ps),
-          |tot AS (
-          |  SELECT CAST(sum(np) AS BIGINT) AS npt,
-          |    CAST(sum(nn) AS BIGINT) AS nnt
-          |  FROM ps),
-          |u AS (
-          |  SELECT sum(CAST(CAST(np AS DECIMAL(19,0)) * (2 * below + nn)
-          |    AS DECIMAL(38,0))) AS u2
-          |  FROM pre)
-          |SELECT npt AS n_pos, nnt AS n_neg,
-          |  floor(CAST(u2 AS DOUBLE) / (2.0 * npt * nnt) * 1000000 + 0.5)
-          |    / 1000000 AS auc
-          |FROM u, tot""".stripMargin,
-
-      // rank = row_number over (score desc, id) on the single node;
-      // tile = floor(rank*tiles/n); exact bp + one fixed-order lift
-      "q249_gains_table" ->
-        """WITH d AS (
-          |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS s,
-          |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS p
-          |  FROM documents),
-          |r AS (
-          |  SELECT doc_id, s, p,
-          |    CAST(row_number() OVER (ORDER BY s DESC, doc_id) - 1
-          |      AS BIGINT) AS rk
-          |  FROM d),
-          |tot AS (
-          |  SELECT CAST(count(*) AS BIGINT) AS n,
-          |    CAST(sum(p) AS BIGINT) AS np
-          |  FROM d),
-          |g AS (
-          |  SELECT CAST(rk * 10 // n AS BIGINT) AS tile,
-          |    CAST(count(*) AS BIGINT) AS n_rows,
-          |    CAST(sum(p) AS BIGINT) AS n_pos
-          |  FROM r, tot GROUP BY 1)
-          |SELECT tile, n_rows, n_pos,
-          |  CAST(n_pos * 10000 // n_rows AS BIGINT) AS pos_rate_bp,
-          |  floor((CAST(n_pos AS DOUBLE) * n) / (CAST(n_rows AS DOUBLE) * np)
-          |    * 1000000 + 0.5) / 1000000 AS lift
-          |FROM g, tot""".stripMargin,
-
-      // fixed-width score bins; DECIMAL(18,6) bin sums, one division +
-      // pround6, floor-division bp
-      "q250_calibration_bins" ->
-        """WITH e AS (
-          |  SELECT value AS s,
-          |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-          |  FROM events WHERE value IS NOT NULL),
-          |b AS (
-          |  SELECT CAST(floor(s / 50.0) AS BIGINT) AS bin,
-          |    CAST(count(*) AS BIGINT) AS n_rows,
-          |    CAST(sum(p) AS BIGINT) AS n_pos,
-          |    sum(CAST(s AS DECIMAL(18,6))) AS ss
-          |  FROM e GROUP BY 1)
-          |SELECT bin, CAST(bin AS DOUBLE) * 50.0 AS bin_lo, n_rows, n_pos,
-          |  floor(CAST(ss AS DOUBLE) / CAST(n_rows AS DOUBLE) * 1000000 + 0.5)
-          |    / 1000000 AS mean_score,
-          |  CAST(n_pos * 10000 // n_rows AS BIGINT) AS pos_rate_bp
-          |FROM b""".stripMargin,
-
-      // lead() within (user, day) ordered by (ts, event_id); pair
-      // counts + per-from totals; prob_bp exact floor division
-      "q251_markov_transitions" ->
-        """WITH s AS (
-          |  SELECT event_type,
-          |    lead(event_type) OVER (
-          |      PARTITION BY user_id, strftime(ts, '%Y-%m-%d')
-          |      ORDER BY ts, event_id) AS nxt
-          |  FROM events),
-          |p AS (
-          |  SELECT event_type AS from_type, nxt AS to_type,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM s WHERE nxt IS NOT NULL GROUP BY 1, 2),
-          |f AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS ft
-          |      FROM p GROUP BY 1)
-          |SELECT p.from_type, p.to_type, p.n,
-          |  CAST(p.n * 10000 // f.ft AS BIGINT) AS prob_bp
-          |FROM p JOIN f USING (from_type)""".stripMargin,
-
-      // observed cells + marginals; e and (o-e)^2/e in ONE fixed double
-      // order each, pround6 -> DECIMAL(18,6) sum for the statistic
-      "q252_chi_square" ->
-        """WITH c AS (
-          |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_obs
-          |  FROM documents GROUP BY 1, 2),
-          |ra AS (SELECT lang, CAST(sum(n_obs) AS BIGINT) AS r
-          |       FROM c GROUP BY 1),
-          |cb AS (SELECT source, CAST(sum(n_obs) AS BIGINT) AS cc
-          |       FROM c GROUP BY 1),
-          |t AS (
-          |  SELECT CAST(sum(n_obs) AS BIGINT) AS n,
-          |    CAST(count(DISTINCT lang) AS BIGINT) AS da,
-          |    CAST(count(DISTINCT source) AS BIGINT) AS db
-          |  FROM c),
-          |e AS (
-          |  SELECT c.lang, c.source, c.n_obs,
-          |    (CAST(r AS DOUBLE) * CAST(cc AS DOUBLE)) / CAST(n AS DOUBLE)
-          |      AS ex, da, db
-          |  FROM c JOIN ra USING (lang) JOIN cb USING (source), t),
-          |k AS (
-          |  SELECT lang, source, n_obs, ex, da, db,
-          |    CAST(floor(((CAST(n_obs AS DOUBLE) - ex) *
-          |      (CAST(n_obs AS DOUBLE) - ex)) / ex * 1000000 + 0.5)
-          |      / 1000000 AS DECIMAL(18,6)) AS c6
-          |  FROM e),
-          |tt AS (SELECT sum(c6) AS chi2 FROM k)
-          |SELECT lang, source, n_obs,
-          |  floor(ex * 1000000 + 0.5) / 1000000 AS expected,
-          |  CAST(c6 AS DOUBLE) AS contrib, CAST(chi2 AS DOUBLE) AS chi2,
-          |  CAST((da - 1) * (db - 1) AS BIGINT) AS dof
-          |FROM k, tt""".stripMargin,
-
-      // per-cell (o/n)*ln(o*n/(ra*cb)) and marginal -(r/n)*ln(r/n)
-      // contributions, pround6 -> DECIMAL(18,6) sums
-      "q253_mutual_info" ->
-        """WITH c AS (
-          |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_obs
-          |  FROM documents GROUP BY 1, 2),
-          |ra AS (SELECT lang, CAST(sum(n_obs) AS BIGINT) AS r
-          |       FROM c GROUP BY 1),
-          |cb AS (SELECT source, CAST(sum(n_obs) AS BIGINT) AS cc
-          |       FROM c GROUP BY 1),
-          |t AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n FROM c),
-          |mi AS (
-          |  SELECT CAST(sum(CAST(floor(
-          |      (CAST(n_obs AS DOUBLE) / CAST(n AS DOUBLE)) *
-          |      ln((CAST(n_obs AS DOUBLE) * CAST(n AS DOUBLE)) /
-          |         (CAST(r AS DOUBLE) * CAST(cc AS DOUBLE)))
-          |      * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)))
-          |      AS DOUBLE) AS mi_nats,
-          |    CAST(count(*) AS BIGINT) AS n_cells
-          |  FROM c JOIN ra USING (lang) JOIN cb USING (source), t),
-          |ha AS (
-          |  SELECT CAST(sum(CAST(floor(
-          |      -(CAST(r AS DOUBLE) / CAST(n AS DOUBLE)) *
-          |      ln(CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
-          |      * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)))
-          |      AS DOUBLE) AS h_a
-          |  FROM ra, t),
-          |hb AS (
-          |  SELECT CAST(sum(CAST(floor(
-          |      -(CAST(cc AS DOUBLE) / CAST(n AS DOUBLE)) *
-          |      ln(CAST(cc AS DOUBLE) / CAST(n AS DOUBLE))
-          |      * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)))
-          |      AS DOUBLE) AS h_b
-          |  FROM cb, t)
-          |SELECT n AS n_rows, n_cells, mi_nats, h_a, h_b
-          |FROM mi, ha, hb, t""".stripMargin,
-
-      // majority via row_number over (count desc, lang) — the same
-      // (max count, tie -> smallest value) order as min(struct(-c, d))
-      "q254_fd_strength" ->
-        """WITH p AS (
-          |  SELECT source, lang, CAST(count(*) AS BIGINT) AS c
-          |  FROM documents GROUP BY 1, 2),
-          |r AS (
-          |  SELECT source, lang, c,
-          |    row_number() OVER (PARTITION BY source
-          |      ORDER BY c DESC, lang) AS rn
-          |  FROM p),
-          |m AS (
-          |  SELECT source, CAST(sum(c) AS BIGINT) AS n_rows,
-          |    CAST(count(*) AS BIGINT) AS n_dep_values
-          |  FROM p GROUP BY 1)
-          |SELECT m.source, m.n_rows, m.n_dep_values,
-          |  r.lang AS majority_value, r.c AS n_majority,
-          |  CAST(m.n_rows - r.c AS BIGINT) AS n_violations,
-          |  CAST(r.c * 10000 // m.n_rows AS BIGINT) AS strength_bp
-          |FROM m JOIN r ON r.source = m.source AND r.rn = 1""".stripMargin,
-
-      // same (count desc, term) top-60 cut and rank; x/y/x2/xy/y2
-      // pround6 -> DECIMAL(18,6) sums; slope/intercept/r2 in the same
-      // fixed double operation order
-      "q255_zipf_fit" ->
-        s"""WITH tok AS (SELECT unnest($toksSql) AS term FROM documents),
-           |c AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
-           |      FROM tok GROUP BY 1),
-           |top AS (SELECT term, cnt FROM c ORDER BY cnt DESC, term LIMIT 60),
-           |r AS (SELECT cnt, CAST(row_number() OVER (
-           |        ORDER BY cnt DESC, term) AS BIGINT) AS rank FROM top),
-           |p AS (SELECT
-           |    floor(ln(CAST(rank AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS x,
-           |    floor(ln(CAST(cnt AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS y
-           |  FROM r),
-           |sm AS (SELECT CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-           |    CAST(sum(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-           |    CAST(sum(CAST(floor(x * x * 1000000 + 0.5) / 1000000
-           |      AS DECIMAL(18,6))) AS DOUBLE) AS sxx,
-           |    CAST(sum(CAST(floor(x * y * 1000000 + 0.5) / 1000000
-           |      AS DECIMAL(18,6))) AS DOUBLE) AS sxy,
-           |    CAST(sum(CAST(floor(y * y * 1000000 + 0.5) / 1000000
-           |      AS DECIMAL(18,6))) AS DOUBLE) AS syy
-           |  FROM p)
-           |SELECT n AS n_terms,
-           |  CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx <> 0.0 THEN
-           |    floor((CAST(n AS DOUBLE) * sxy - sx * sy) /
-           |      (CAST(n AS DOUBLE) * sxx - sx * sx) * 1000000 + 0.5)
-           |      / 1000000 END AS slope,
-           |  CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx <> 0.0 THEN
-           |    floor((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy) /
-           |      (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx) /
-           |      CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 END
-           |    AS intercept,
-           |  CASE WHEN CAST(n AS DOUBLE) * sxx - sx * sx <> 0.0
-           |        AND CAST(n AS DOUBLE) * syy - sy * sy <> 0.0 THEN
-           |    floor(((CAST(n AS DOUBLE) * sxy - sx * sy) *
-           |      (CAST(n AS DOUBLE) * sxy - sx * sy)) /
-           |      ((CAST(n AS DOUBLE) * sxx - sx * sx) *
-           |       (CAST(n AS DOUBLE) * syy - sy * sy)) * 1000000 + 0.5)
-           |      / 1000000 END AS r2
-           |FROM sm""".stripMargin,
-
-      // q24's bit-exact cosine and the raw list_dot_product ranking,
-      // full-outer fused on (query, neighbor); fused order =
-      // (pround6 score desc, neighbor)
-      "q256_rrf_fusion" ->
-        """WITH q AS (SELECT vec_id AS query_id,
-          |    CAST(embedding AS DOUBLE[]) AS qv
-          |  FROM embeddings WHERE vec_id < 10),
-          |c AS (SELECT vec_id AS neighbor_id,
-          |    CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-          |ra AS (SELECT * FROM (
-          |    SELECT query_id, neighbor_id,
-          |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY
-          |        list_dot_product(qv, cv) /
-          |        (sqrt(list_dot_product(qv, qv)) *
-          |         sqrt(list_dot_product(cv, cv))) DESC, neighbor_id)
-          |        AS BIGINT) AS rank_a
-          |    FROM q, c WHERE query_id <> neighbor_id)
-          |  WHERE rank_a <= 10),
-          |rb AS (SELECT * FROM (
-          |    SELECT query_id, neighbor_id,
-          |      CAST(row_number() OVER (PARTITION BY query_id ORDER BY
-          |        list_dot_product(qv, cv) DESC, neighbor_id)
-          |        AS BIGINT) AS rank_b
-          |    FROM q, c WHERE query_id <> neighbor_id)
-          |  WHERE rank_b <= 10),
-          |f AS (SELECT coalesce(ra.query_id, rb.query_id) AS query_id,
-          |    coalesce(ra.neighbor_id, rb.neighbor_id) AS neighbor_id,
-          |    ra.rank_a, rb.rank_b
-          |  FROM ra FULL OUTER JOIN rb
-          |    ON ra.query_id = rb.query_id
-          |   AND ra.neighbor_id = rb.neighbor_id),
-          |sc AS (SELECT query_id, neighbor_id, rank_a, rank_b,
-          |    floor((coalesce(1.0 / (60 + rank_a), 0.0) +
-          |           coalesce(1.0 / (60 + rank_b), 0.0)) * 1000000 + 0.5)
-          |      / 1000000 AS rrf_score
-          |  FROM f)
-          |SELECT * FROM (
-          |  SELECT query_id,
-          |    CAST(row_number() OVER (PARTITION BY query_id
-          |      ORDER BY rrf_score DESC, neighbor_id) AS BIGINT)
-          |      AS fused_rank,
-          |    neighbor_id, rank_a, rank_b, rrf_score
-          |  FROM sc)
-          |WHERE fused_rank <= 5""".stripMargin,
-
-      // one-shot first-occurrence funnel over ALL events — the state
-      // min-merge makes the two-batch streaming view equal to it
-      "q257_streaming_funnel" ->
-        """WITH m AS (
-          |  SELECT user_id AS u, event_type AS et, min(epoch_us(ts)) AS t
-          |  FROM events
-          |  WHERE event_type IN ('view', 'click', 'signup', 'purchase')
-          |  GROUP BY 1, 2),
-          |p AS (
-          |  SELECT u,
-          |    min(CASE WHEN et = 'view' THEN t END) AS t0,
-          |    min(CASE WHEN et = 'click' THEN t END) AS t1,
-          |    min(CASE WHEN et = 'signup' THEN t END) AS t2,
-          |    min(CASE WHEN et = 'purchase' THEN t END) AS t3
-          |  FROM m GROUP BY 1),
-          |r AS (
-          |  SELECT CASE WHEN t0 IS NULL THEN 0
-          |    WHEN t1 IS NULL OR t1 <= t0 THEN 1
-          |    WHEN t2 IS NULL OR t2 <= t1 THEN 2
-          |    WHEN t3 IS NULL OR t3 <= t2 THEN 3
-          |    ELSE 4 END AS reached
-          |  FROM p)
-          |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
-          |  CAST(count(*) FILTER (WHERE reached >= 1) AS BIGINT) AS n_users
-          |FROM r
-          |UNION ALL SELECT 2, 'click',
-          |  CAST(count(*) FILTER (WHERE reached >= 2) AS BIGINT) FROM r
-          |UNION ALL SELECT 3, 'signup',
-          |  CAST(count(*) FILTER (WHERE reached >= 3) AS BIGINT) FROM r
-          |UNION ALL SELECT 4, 'purchase',
-          |  CAST(count(*) FILTER (WHERE reached >= 4) AS BIGINT) FROM r"""
-        .stripMargin,
-
-      // three unrolled MMR rounds; every cosine is the q24 bit-exact
-      // formula, scores on UNROUNDED doubles, (score desc, id) ties
-      "q258_mmr_selection" ->
-        s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           |  FROM embeddings WHERE vec_id <> 0),
-           |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q
-           |  FROM embeddings WHERE vec_id = 0),
-           |r AS (SELECT vec_id, v,
-           |    list_dot_product(q, v) / (sqrt(list_dot_product(q, q)) *
-           |      sqrt(list_dot_product(v, v))) AS rel
-           |  FROM c, qv),
-           |w1 AS (SELECT vec_id, v, rel, 0.0 AS ms,
-           |    0.7 * rel - (1.0 - 0.7) * 0.0 AS score
-           |  FROM r ORDER BY score DESC, vec_id LIMIT 1),
-           |s2 AS (SELECT r.vec_id, r.v, r.rel,
-           |    list_dot_product(w1.v, r.v) /
-           |      (sqrt(list_dot_product(w1.v, w1.v)) *
-           |       sqrt(list_dot_product(r.v, r.v))) AS ms
-           |  FROM r, w1 WHERE r.vec_id <> w1.vec_id),
-           |w2 AS (SELECT vec_id, v, rel, ms,
-           |    0.7 * rel - (1.0 - 0.7) * ms AS score
-           |  FROM s2 ORDER BY score DESC, vec_id LIMIT 1),
-           |s3 AS (SELECT r.vec_id, r.rel,
-           |    greatest(
-           |      list_dot_product(w1.v, r.v) /
-           |        (sqrt(list_dot_product(w1.v, w1.v)) *
-           |         sqrt(list_dot_product(r.v, r.v))),
-           |      list_dot_product(w2.v, r.v) /
-           |        (sqrt(list_dot_product(w2.v, w2.v)) *
-           |         sqrt(list_dot_product(r.v, r.v)))) AS ms
-           |  FROM r, w1, w2
-           |  WHERE r.vec_id <> w1.vec_id AND r.vec_id <> w2.vec_id),
-           |w3 AS (SELECT vec_id, rel, ms,
-           |    0.7 * rel - (1.0 - 0.7) * ms AS score
-           |  FROM s3 ORDER BY score DESC, vec_id LIMIT 1)
-           |SELECT CAST(1 AS BIGINT) AS round, vec_id,
-           |  ${pround("rel", 6)} AS relevance, ${pround("ms", 6)} AS max_sim,
-           |  ${pround("score", 6)} AS mmr_score FROM w1
-           |UNION ALL SELECT 2, vec_id, ${pround("rel", 6)},
-           |  ${pround("ms", 6)}, ${pround("score", 6)} FROM w2
-           |UNION ALL SELECT 3, vec_id, ${pround("rel", 6)},
-           |  ${pround("ms", 6)}, ${pround("score", 6)} FROM w3""".stripMargin,
-
-      // same md5('wrs|key') 48-bit u and ln(u)/w score; plain global
-      // top-50 on DuckDB's single node
-      "q259_weighted_sample" ->
-        s"""WITH d AS (
-           |  SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS w
-           |  FROM documents),
-           |k AS (
-           |  SELECT doc_id, w,
-           |    CAST(('0x' || substr(md5('wrs' || '|' ||
-           |      CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) AS h
-           |  FROM d WHERE w > 0),
-           |s AS (
-           |  SELECT doc_id, w,
-           |    ln((CAST(h AS DOUBLE) + 1.0) / 281474976710656.0) /
-           |      CAST(w AS DOUBLE) AS sc
-           |  FROM k)
-           |SELECT doc_id, w AS weight, ${pround("sc", 6)} AS es_score
-           |FROM s ORDER BY sc DESC, doc_id LIMIT 50""".stripMargin,
-
-      // fixed T = max(ts); per-event pround6 contribution with the
-      // exact ln2 literal, DECIMAL(18,6) sums, top-10 total order
-      "q260_decayed_scores" ->
-        """WITH t AS (SELECT max(epoch_us(ts)) AS tmax FROM events),
-          |c AS (
-          |  SELECT user_id,
-          |    CAST(floor(value * exp(CAST(epoch_us(ts) - tmax AS DOUBLE) /
-          |      604800000000.0 * 0.6931471805599453) * 1000000 + 0.5)
-          |      / 1000000 AS DECIMAL(18,6)) AS c6
-          |  FROM events, t),
-          |g AS (
-          |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-          |    CAST(sum(c6) AS DOUBLE) AS decayed
-          |  FROM c GROUP BY 1)
-          |SELECT user_id, n_events, decayed
-          |FROM g ORDER BY decayed DESC, user_id LIMIT 10""".stripMargin,
-
-      // all pairwise slopes within each day-bounded series; median by
-      // row_number/count over (m+1)//2 and m//2+1; midpoint mean
-      "q261_theil_sen" ->
-        """WITH d AS (
-          |  SELECT event_type, epoch_us(ts) // 86400000000 AS x,
-          |    CAST(count(*) AS BIGINT) AS y
-          |  FROM events GROUP BY 1, 2),
-          |p AS (
-          |  SELECT a.event_type,
-          |    CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS s
-          |  FROM d a JOIN d b
-          |    ON a.event_type = b.event_type AND a.x < b.x),
-          |r AS (
-          |  SELECT event_type, s,
-          |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY s)
-          |      AS BIGINT) AS rn,
-          |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS m
-          |  FROM p)
-          |SELECT event_type, CAST(max(m) AS BIGINT) AS n_pairs,
-          |  floor(sum(s) / count(*) * 1000000 + 0.5) / 1000000 AS slope
-          |FROM r WHERE rn = (m + 1) // 2 OR rn = m // 2 + 1
-          |GROUP BY 1""".stripMargin,
-
-      // per-user min purchase-after-first-view delta in exact micros;
-      // quantile_cont ≡ percentile (q136 parity), pround 1
-      "q262_conversion_latency" ->
-        s"""WITH f AS (
-           |  SELECT user_id, min(epoch_us(ts)) AS t0 FROM events
-           |  WHERE event_type = 'view' GROUP BY 1),
-           |l AS (
-           |  SELECT p.user_id, min(epoch_us(p.ts) - f.t0) AS lat_us
-           |  FROM events p JOIN f ON p.user_id = f.user_id
-           |  WHERE p.event_type = 'purchase' AND epoch_us(p.ts) > f.t0
-           |  GROUP BY 1)
-           |SELECT CAST(count(*) AS BIGINT) AS n_converted,
-           |  ${pround("quantile_cont(lat_us, 0.5)", 1)} AS p50_us,
-           |  ${pround("quantile_cont(lat_us, 0.9)", 1)} AS p90_us
-           |FROM l""".stripMargin,
-
-      // DuckDB ASOF: latest non-purchase touch with ts <= purchase ts
-      "q263_last_touch" ->
-        """WITH p AS (SELECT user_id, ts, value FROM events
-          |  WHERE event_type = 'purchase'),
-          |tch AS (SELECT user_id, ts, event_type FROM events
-          |  WHERE event_type <> 'purchase'),
-          |a AS (
-          |  SELECT p.value, t.event_type AS channel
-          |  FROM p ASOF LEFT JOIN tch t
-          |    ON p.user_id = t.user_id AND p.ts >= t.ts)
-          |SELECT coalesce(channel, 'none') AS channel,
-          |  CAST(count(*) AS BIGINT) AS n_purchases,
-          |  round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
-          |    AS revenue
-          |FROM a GROUP BY 1""".stripMargin,
-
-      // quantile_cont over the joined lead-day multiset (R-7 parity)
-      "q277_lead_time" ->
-        s"""WITH ld AS (
-           |  SELECT epoch_us(l.l_shipdate) // 86400000000 -
-           |    epoch_us(o.o_orderdate) // 86400000000 AS lead_days
-           |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
-           |SELECT 0.5 AS q, CAST(count(*) AS BIGINT) AS n,
-           |  ${pround("quantile_cont(lead_days, 0.5)", 4)} AS value
-           |FROM ld
-           |UNION ALL SELECT 0.9, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(lead_days, 0.9)", 4)} FROM ld
-           |UNION ALL SELECT 0.99, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(lead_days, 0.99)", 4)} FROM ld"""
-        .stripMargin,
-
-      // same (value desc, key) rank, ceil(n*p/1e4) cuts, cent-scaled
-      // BIGINT shares
-      "q278_revenue_whales" ->
-        """WITH pk AS (
-          |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2)))
-          |    AS v
-          |  FROM orders GROUP BY 1),
-          |t AS (SELECT CAST(sum(v) * 100 AS BIGINT) AS totc,
-          |      CAST(count(*) AS BIGINT) AS n FROM pk),
-          |r AS (SELECT v, CAST(row_number() OVER (
-          |        ORDER BY v DESC, o_custkey) - 1 AS BIGINT) AS rk
-          |      FROM pk)
-          |SELECT CAST(p.p AS BIGINT) AS pct_bp,
-          |  CAST((n * p.p + 9999) // 10000 AS BIGINT) AS n_top,
-          |  CAST(CAST((SELECT sum(v) FROM r
-          |      WHERE rk < (n * p.p + 9999) // 10000) * 100 AS BIGINT)
-          |    * 10000 // totc AS BIGINT) AS share_bp
-          |FROM (SELECT unnest([100, 500, 1000]) AS p) p, t""".stripMargin,
-
-      "q279_market_hhi" ->
-        """WITH pf AS (
-          |  SELECT n_name AS market, s_suppkey,
-          |    sum(CAST(l_extendedprice * (1.0 - l_discount)
-          |      AS DECIMAL(18,4))) AS v
-          |  FROM lineitem
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN nation ON s_nationkey = n_nationkey
-          |  GROUP BY 1, 2)
-          |SELECT market, CAST(count(*) AS BIGINT) AS n_firms,
-          |  CAST(sum(CAST(v * 10000 AS HUGEINT)
-          |      * CAST(v * 10000 AS HUGEINT)) * 10000
-          |    // (sum(CAST(v * 10000 AS HUGEINT))
-          |      * sum(CAST(v * 10000 AS HUGEINT))) AS BIGINT) AS hhi
-          |FROM pf GROUP BY 1 HAVING sum(v) > 0""".stripMargin,
-
-      "q280_item_cosine" ->
-        """WITH bi AS (
-          |  SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-          |  FROM lineitem),
-          |ic AS (SELECT i, CAST(count(*) AS BIGINT) AS ni
-          |       FROM bi GROUP BY 1),
-          |p AS (SELECT a.i AS ia, bb.i AS ib,
-          |        CAST(count(*) AS BIGINT) AS nab
-          |      FROM bi a JOIN bi bb ON a.b = bb.b AND a.i < bb.i
-          |      GROUP BY 1, 2 HAVING count(*) >= 2),
-          |d AS (SELECT ia, ib, nab FROM p
-          |      UNION ALL SELECT ib, ia, nab FROM p),
-          |sc AS (SELECT d.ia AS item_id, d.ib AS partner, d.nab AS n_ab,
-          |        CAST(CAST(d.nab AS HUGEINT) * d.nab * 100000000
-          |          // (CAST(ca.ni AS HUGEINT) * cb.ni) AS BIGINT)
-          |          AS cos2_e8
-          |       FROM d JOIN ic ca ON d.ia = ca.i
-          |         JOIN ic cb ON d.ib = cb.i)
-          |SELECT item_id, partner, n_ab, cos2_e8,
-          |  CAST(rn AS BIGINT) AS rank
-          |FROM (SELECT *, row_number() OVER (PARTITION BY item_id
-          |        ORDER BY cos2_e8 DESC, n_ab DESC, partner) AS rn
-          |      FROM sc)
-          |WHERE rn <= 5""".stripMargin,
-
-      "q281_wilson_returns" ->
-        """WITH a AS (
-          |  SELECT l_suppkey AS supp_key,
-          |    CAST(count(*) AS BIGINT) AS n,
-          |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS k
-          |  FROM lineitem GROUP BY 1)
-          |SELECT supp_key, n, k,
-          |  CAST(CAST(k AS HUGEINT) * 10000 // n AS BIGINT) AS rate_bp,
-          |  floor(((CAST(k AS DOUBLE) / n
-          |    + CAST(1.959964 AS DOUBLE) * CAST(1.959964 AS DOUBLE)
-          |      / (2.0 * n)
-          |    - CAST(1.959964 AS DOUBLE) * sqrt(greatest(0.0,
-          |        (CAST(k AS DOUBLE) / n * (1.0 - CAST(k AS DOUBLE) / n)
-          |         + CAST(1.959964 AS DOUBLE) * CAST(1.959964 AS DOUBLE)
-          |           / (4.0 * n)) / n)))
-          |   / (1.0 + CAST(1.959964 AS DOUBLE) * CAST(1.959964 AS DOUBLE)
-          |     / n)) * 1e6 + 0.5) / 1e6
-          |    AS wilson_lb
-          |FROM a WHERE n >= 20""".stripMargin,
-
-      "q282_cross_corr" ->
-        s"""WITH xs AS (
-           |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-           |      CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-           |    CAST(count(*) AS BIGINT) AS x
-           |  FROM orders GROUP BY 1),
-           |ys AS (
-           |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-           |      CAST(l_shipdate AS DATE)) AS BIGINT) AS d,
-           |    CAST(count(*) AS BIGINT) AS y
-           |  FROM lineitem GROUP BY 1),
-           |l AS (SELECT CAST(unnest(range(-7, 8)) AS BIGINT) AS lag),
-           |g AS (
-           |  SELECT l.lag, CAST(count(*) AS BIGINT) AS n_pairs,
-           |    CAST(sum(xs.x) AS BIGINT) AS sa,
-           |    CAST(sum(ys.y) AS BIGINT) AS sb,
-           |    CAST(sum(xs.x * ys.y) AS BIGINT) AS sab,
-           |    CAST(sum(xs.x * xs.x) AS BIGINT) AS saa,
-           |    CAST(sum(ys.y * ys.y) AS BIGINT) AS sbb
-           |  FROM xs CROSS JOIN l JOIN ys ON ys.d = xs.d + l.lag
-           |  GROUP BY 1)
-           |SELECT lag, n_pairs,
-           |  ${pround("CASE WHEN CAST(n_pairs * saa - sa * sa AS DOUBLE) > 0 AND CAST(n_pairs * sbb - sb * sb AS DOUBLE) > 0 THEN CAST(n_pairs * sab - sa * sb AS DOUBLE) / (sqrt(CAST(n_pairs * saa - sa * sa AS DOUBLE)) * sqrt(CAST(n_pairs * sbb - sb * sb AS DOUBLE))) ELSE 0.0 END", 6)} AS r
-           |FROM g""".stripMargin,
-
-      "q283_woe_iv" ->
-        """WITH c AS (
-          |  SELECT CAST(l_quantity AS BIGINT) AS bin,
-          |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n_pos,
-          |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END)
-          |      AS BIGINT) AS n_neg
-          |  FROM lineitem GROUP BY 1),
-          |t AS (SELECT CAST(sum(n_pos) AS BIGINT) AS tp,
-          |      CAST(sum(n_neg) AS BIGINT) AS tn FROM c)
-          |SELECT bin, n_pos, n_neg,
-          |  floor(ln(CAST(n_neg AS DOUBLE) * tp
-          |      / (CAST(n_pos AS DOUBLE) * tn)) * 1e6 + 0.5) / 1e6 AS woe,
-          |  floor((CAST(n_neg AS DOUBLE) / tn - CAST(n_pos AS DOUBLE) / tp)
-          |    * ln(CAST(n_neg AS DOUBLE) * tp
-          |      / (CAST(n_pos AS DOUBLE) * tn)) * 1e6 + 0.5) / 1e6
-          |    AS iv_contrib
-          |FROM c, t WHERE n_pos > 0 AND n_neg > 0""".stripMargin,
-
-      "q284_p_chart" ->
-        """WITH pd AS (
-          |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-          |      CAST(l_shipdate AS DATE)) AS BIGINT) AS period,
-          |    CAST(count(*) AS BIGINT) AS n,
-          |    CAST(sum(CASE WHEN l_returnflag = 'R'
-          |      THEN 1 ELSE 0 END) AS BIGINT) AS k
-          |  FROM lineitem GROUP BY 1),
-          |t AS (SELECT CAST(sum(n) AS BIGINT) AS tn,
-          |      CAST(sum(k) AS BIGINT) AS tk FROM pd),
-          |sel AS (
-          |  SELECT period, n, k,
-          |    CAST(CAST(k AS HUGEINT) * 1000000 // n AS BIGINT) AS rate_e6,
-          |    CAST(floor((CAST(tk AS DOUBLE) / tn
-          |      + 3.0 * sqrt(CAST(tk AS DOUBLE) / tn
-          |        * (1.0 - CAST(tk AS DOUBLE) / tn) / n)) * 1e6 + 0.5)
-          |      AS BIGINT) AS ucl_e6,
-          |    CAST(floor(greatest(0.0, CAST(tk AS DOUBLE) / tn
-          |      - 3.0 * sqrt(CAST(tk AS DOUBLE) / tn
-          |        * (1.0 - CAST(tk AS DOUBLE) / tn) / n)) * 1e6 + 0.5)
-          |      AS BIGINT) AS lcl_e6
-          |  FROM pd, t)
-          |SELECT period, n, k, rate_e6, ucl_e6, lcl_e6,
-          |  CAST(CASE WHEN rate_e6 > ucl_e6 OR rate_e6 < lcl_e6
-          |    THEN 1 ELSE 0 END AS BIGINT) AS out_of_control
-          |FROM sel""".stripMargin,
-
-      // rank order within ties is arbitrary on both engines, but
-      // sum(rank * value) is tie-permutation-invariant; HUGEINT
-      // mirrors Spark's DECIMAL(38,0) and // mirrors DIV (numerator
-      // >= 0 by Chebyshev's sum inequality)
-      "q285_gini" ->
-        """WITH pk AS (
-          |  SELECT c.c_nationkey AS g, c.c_custkey AS k,
-          |    CAST(COALESCE(sum(CAST(o.o_totalprice AS DECIMAL(18,2))), 0)
-          |      * 100 AS BIGINT) AS cts
-          |  FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-          |  GROUP BY 1, 2),
-          |r AS (
-          |  SELECT g, cts, CAST(row_number() OVER (
-          |    PARTITION BY g ORDER BY cts) AS HUGEINT) AS rr
-          |  FROM pk),
-          |a AS (
-          |  SELECT g, CAST(count(*) AS BIGINT) AS n_keys,
-          |    CAST(sum(cts) AS HUGEINT) AS s,
-          |    CAST(sum(rr * cts) AS HUGEINT) AS srx
-          |  FROM r GROUP BY 1)
-          |SELECT g AS c_nationkey, n_keys,
-          |  CAST((20000 * srx - 10000 * (CAST(n_keys AS HUGEINT) + 1) * s)
-          |    // (CAST(n_keys AS HUGEINT) * s) AS BIGINT) AS gini_bp
-          |FROM a WHERE s > 0""".stripMargin,
-
-      // additivity makes the two-batch class-count state ≡ the raw
-      // table, so the card is q283's one-shot screen verbatim
-      "q286_streaming_woe" ->
-        """WITH c AS (
-          |  SELECT CAST(l_quantity AS BIGINT) AS bin,
-          |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-          |      AS BIGINT) AS n_pos,
-          |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END)
-          |      AS BIGINT) AS n_neg
-          |  FROM lineitem GROUP BY 1),
-          |t AS (SELECT CAST(sum(n_pos) AS BIGINT) AS tp,
-          |      CAST(sum(n_neg) AS BIGINT) AS tn FROM c)
-          |SELECT bin, n_pos, n_neg,
-          |  floor(ln(CAST(n_neg AS DOUBLE) * tp
-          |      / (CAST(n_pos AS DOUBLE) * tn)) * 1e6 + 0.5) / 1e6 AS woe,
-          |  floor((CAST(n_neg AS DOUBLE) / tn - CAST(n_pos AS DOUBLE) / tp)
-          |    * ln(CAST(n_neg AS DOUBLE) * tp
-          |      / (CAST(n_pos AS DOUBLE) * tn)) * 1e6 + 0.5) / 1e6
-          |    AS iv_contrib
-          |FROM c, t WHERE n_pos > 0 AND n_neg > 0""".stripMargin,
-
-      "q287_ab_test" ->
-        s"""WITH c AS (
-           |  SELECT CAST(year(CAST(l_shipdate AS DATE)) AS BIGINT)
-           |      AS ship_year,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 0
-           |      THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 0
-           |      AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS k_a,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 1
-           |      THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 1
-           |      AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS k_b
-           |  FROM lineitem GROUP BY 1)
-           |SELECT ship_year, n_a, k_a, n_b, k_b,
-           |  ${pround("CASE WHEN (k_a + k_b) = 0 OR (k_a + k_b) = (n_a + n_b) THEN 0.0 ELSE CAST(k_b * n_a - k_a * n_b AS DOUBLE) * sqrt(CAST(n_a + n_b AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * CAST(k_a + k_b AS DOUBLE) * CAST((n_a + n_b) - (k_a + k_b) AS DOUBLE))) END", 6)} AS z,
-           |  NOT ((k_a + k_b) = 0 OR (k_a + k_b) = (n_a + n_b))
-           |    AND 625 * CAST(k_b * n_a - k_a * n_b AS HUGEINT)
-           |          * CAST(k_b * n_a - k_a * n_b AS HUGEINT)
-           |          * (n_a + n_b)
-           |      > 2401 * CAST(n_a AS HUGEINT) * n_b * (k_a + k_b)
-           |          * ((n_a + n_b) - (k_a + k_b)) AS significant
-           |FROM c WHERE n_a > 0 AND n_b > 0""".stripMargin,
-
-      "q288_dispersion" ->
-        """WITH per AS (
-          |  SELECT o_custkey,
-          |    CAST(date_diff('day', DATE '1970-01-01',
-          |      CAST(o_orderdate AS DATE)) AS BIGINT) // 30 AS p,
-          |    CAST(count(*) AS BIGINT) AS c
-          |  FROM orders GROUP BY 1, 2),
-          |m AS (SELECT CAST(count(DISTINCT p) AS HUGEINT) AS m FROM per),
-          |a AS (
-          |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_periods,
-          |    CAST(sum(c) AS HUGEINT) AS s,
-          |    CAST(sum(CAST(c AS HUGEINT) * c) AS HUGEINT) AS q
-          |  FROM per GROUP BY 1)
-          |SELECT o_custkey, n_periods, CAST(s AS BIGINT) AS n_events,
-          |  CAST((10000 * (m * q - s * s)) // (m * s) AS BIGINT) AS fano_bp
-          |FROM a, m""".stripMargin,
-
-      "q289_price_elasticity" ->
-        """WITH daily AS (
-          |  SELECT p_brand, CAST(l_shipdate AS DATE) AS day,
-          |    CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-          |      AS DECIMAL(18,4))) * 10000 AS BIGINT) AS rev,
-          |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-          |  FROM lineitem JOIN part ON p_partkey = l_partkey
-          |  GROUP BY 1, 2),
-          |p AS (
-          |  SELECT p_brand,
-          |    floor(ln(CAST(rev AS DOUBLE) / CAST(qty AS DOUBLE))
-          |      * 1000000 + 0.5) / 1000000 AS x,
-          |    floor(ln(CAST(qty AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS y
-          |  FROM daily
-          |  WHERE CAST(rev AS DOUBLE) / CAST(qty AS DOUBLE) > 0
-          |    AND qty > 0),
-          |sm AS (
-          |  SELECT p_brand, CAST(count(*) AS BIGINT) AS n_points,
-          |    CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-          |    CAST(sum(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-          |    CAST(sum(CAST(floor(x * x * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(18,6))) AS DOUBLE) AS sxx,
-          |    CAST(sum(CAST(floor(x * y * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(18,6))) AS DOUBLE) AS sxy,
-          |    CAST(sum(CAST(floor(y * y * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(18,6))) AS DOUBLE) AS syy
-          |  FROM p GROUP BY 1)
-          |SELECT p_brand, n_points,
-          |  CASE WHEN CAST(n_points AS DOUBLE) * sxx - sx * sx <> 0.0 THEN
-          |    floor((CAST(n_points AS DOUBLE) * sxy - sx * sy) /
-          |      (CAST(n_points AS DOUBLE) * sxx - sx * sx)
-          |      * 1000000 + 0.5) / 1000000 END AS elasticity,
-          |  CASE WHEN CAST(n_points AS DOUBLE) * sxx - sx * sx <> 0.0
-          |        AND CAST(n_points AS DOUBLE) * syy - sy * sy <> 0.0 THEN
-          |    floor(((CAST(n_points AS DOUBLE) * sxy - sx * sy) *
-          |      (CAST(n_points AS DOUBLE) * sxy - sx * sy)) /
-          |      ((CAST(n_points AS DOUBLE) * sxx - sx * sx) *
-          |       (CAST(n_points AS DOUBLE) * syy - sy * sy))
-          |      * 1000000 + 0.5) / 1000000 END AS r2
-          |FROM sm""".stripMargin,
-
-      "q290_segment_migration" ->
-        """WITH a AS (
-          |  SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS c
-          |  FROM orders WHERE CAST(o_orderdate AS DATE) < DATE '1995-01-01'
-          |  GROUP BY 1),
-          |b AS (
-          |  SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS c
-          |  FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1995-01-01'
-          |  GROUP BY 1),
-          |j AS (
-          |  SELECT COALESCE(a.c, 0) AS ca, COALESCE(b.c, 0) AS cb
-          |  FROM a FULL OUTER JOIN b ON a.k = b.k)
-          |SELECT
-          |  CAST(CASE WHEN ca >= 1 THEN 1 ELSE 0 END
-          |    + CASE WHEN ca >= 2 THEN 1 ELSE 0 END
-          |    + CASE WHEN ca >= 4 THEN 1 ELSE 0 END
-          |    + CASE WHEN ca >= 7 THEN 1 ELSE 0 END AS BIGINT) AS seg_from,
-          |  CAST(CASE WHEN cb >= 1 THEN 1 ELSE 0 END
-          |    + CASE WHEN cb >= 2 THEN 1 ELSE 0 END
-          |    + CASE WHEN cb >= 4 THEN 1 ELSE 0 END
-          |    + CASE WHEN cb >= 7 THEN 1 ELSE 0 END AS BIGINT) AS seg_to,
-          |  CAST(count(*) AS BIGINT) AS n_keys
-          |FROM j GROUP BY 1, 2""".stripMargin,
-
-      "q291_open_orders" ->
-        """WITH iv AS (
-          |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-          |      CAST(o_orderdate AS DATE)) AS BIGINT) AS s,
-          |    CAST(date_diff('day', DATE '1970-01-01',
-          |      CAST(l_shipdate AS DATE)) AS BIGINT) AS e
-          |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey),
-          |d AS (
-          |  SELECT day, CAST(sum(dd) AS BIGINT) AS delta FROM (
-          |    SELECT s AS day, 1 AS dd FROM iv WHERE e > s
-          |    UNION ALL
-          |    SELECT e, -1 FROM iv WHERE e > s) u
-          |  GROUP BY 1)
-          |SELECT day, CAST(sum(delta) OVER (ORDER BY day
-          |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-          |  AS n_open
-          |FROM d""".stripMargin,
-
-      "q292_second_order_lag" ->
-        s"""WITH f AS (
-           |  SELECT o_custkey AS k, min(CAST(o_orderdate AS DATE)) AS m1
-           |  FROM orders GROUP BY 1),
-           |s2 AS (
-           |  SELECT o.o_custkey AS k,
-           |    min(CAST(o.o_orderdate AS DATE)) AS m2
-           |  FROM orders o JOIN f ON f.k = o.o_custkey
-           |    AND CAST(o.o_orderdate AS DATE) > f.m1
-           |  GROUP BY 1),
-           |lg AS (
-           |  SELECT CAST(date_diff('day', f.m1, s2.m2) AS BIGINT) AS lag
-           |  FROM s2 JOIN f ON f.k = s2.k)
-           |SELECT 0.5 AS q, CAST(count(*) AS BIGINT) AS n,
-           |  ${pround("quantile_cont(lag, 0.5)", 4)} AS value FROM lg
-           |UNION ALL SELECT 0.9, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(lag, 0.9)", 4)} FROM lg
-           |UNION ALL SELECT 0.99, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(lag, 0.99)", 4)} FROM lg""".stripMargin,
-
-      // additivity makes the two-batch arm-count state ≡ the raw
-      // table, so the card is q287's one-shot test verbatim
-      "q293_streaming_ab" ->
-        s"""WITH c AS (
-           |  SELECT CAST(year(CAST(l_shipdate AS DATE)) AS BIGINT)
-           |      AS ship_year,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 0
-           |      THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 0
-           |      AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS k_a,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 1
-           |      THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-           |    CAST(sum(CASE WHEN l_linenumber % 2 = 1
-           |      AND l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS k_b
-           |  FROM lineitem GROUP BY 1)
-           |SELECT ship_year, n_a, k_a, n_b, k_b,
-           |  ${pround("CASE WHEN (k_a + k_b) = 0 OR (k_a + k_b) = (n_a + n_b) THEN 0.0 ELSE CAST(k_b * n_a - k_a * n_b AS DOUBLE) * sqrt(CAST(n_a + n_b AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * CAST(k_a + k_b AS DOUBLE) * CAST((n_a + n_b) - (k_a + k_b) AS DOUBLE))) END", 6)} AS z,
-           |  NOT ((k_a + k_b) = 0 OR (k_a + k_b) = (n_a + n_b))
-           |    AND 625 * CAST(k_b * n_a - k_a * n_b AS HUGEINT)
-           |          * CAST(k_b * n_a - k_a * n_b AS HUGEINT)
-           |          * (n_a + n_b)
-           |      > 2401 * CAST(n_a AS HUGEINT) * n_b * (k_a + k_b)
-           |          * ((n_a + n_b) - (k_a + k_b)) AS significant
-           |FROM c WHERE n_a > 0 AND n_b > 0""".stripMargin,
-
-      "q294_textrank" -> {
-        val rounds = (1 to 3).map { k =>
-          s"""r$k AS (
-             |  SELECT n.node, n.strength,
-             |    CAST(150000 + COALESCE(s.inflow, 0) AS BIGINT) AS rank
-             |  FROM (SELECT node, strength FROM r0) n
-             |  LEFT JOIN (
-             |    SELECT e.dst AS node,
-             |      CAST(sum((r.rank * 85 * e.w) // (100 * r.strength)) AS BIGINT) AS inflow
-             |    FROM edges e JOIN r${k - 1} r ON r.node = e.src
-             |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH tk AS (SELECT $toksSql AS t FROM documents),
-           |bg AS (
-           |  SELECT unnest(list_transform(range(1, len(t)),
-           |    i -> {'w1': t[i], 'w2': t[i + 1]})) AS p
-           |  FROM tk),
-           |pr AS (
-           |  SELECT least(p.w1, p.w2) AS a, greatest(p.w1, p.w2) AS b2,
-           |    CAST(count(*) AS BIGINT) AS w
-           |  FROM bg WHERE p.w1 <> p.w2
-           |  GROUP BY 1, 2 HAVING count(*) >= 2),
-           |edges AS (SELECT a AS src, b2 AS dst, w FROM pr
-           |          UNION ALL SELECT b2, a, w FROM pr),
-           |r0 AS (SELECT src AS node, CAST(sum(w) AS BIGINT) AS strength,
-           |       CAST(1000000 AS BIGINT) AS rank FROM edges GROUP BY 1),
-           |$rounds
-           |SELECT node, strength, rank FROM r3""".stripMargin
-      },
-
-      "q295_revenue_bridge" ->
-        """WITH kv AS (
-          |  SELECT o_custkey AS k,
-          |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-          |      + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS p,
-          |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100
-          |      AS BIGINT) AS c
-          |  FROM orders GROUP BY 1, 2),
-          |j AS (
-          |  SELECT COALESCE(cur.p, prev.p + 1) AS period,
-          |    cur.c AS vc, prev.c AS vp
-          |  FROM kv cur FULL OUTER JOIN kv prev
-          |    ON cur.k = prev.k AND cur.p = prev.p + 1),
-          |m AS (SELECT CAST(max(p) AS BIGINT) AS mx FROM kv)
-          |SELECT period,
-          |  CAST(sum(CASE WHEN vp IS NULL THEN vc ELSE 0 END) AS BIGINT)
-          |    AS new_cents,
-          |  CAST(sum(CASE WHEN vc IS NOT NULL AND vp IS NOT NULL
-          |    AND vc > vp THEN vc - vp ELSE 0 END) AS BIGINT)
-          |    AS expansion_cents,
-          |  CAST(sum(CASE WHEN vc IS NOT NULL AND vp IS NOT NULL
-          |    AND vc < vp THEN vp - vc ELSE 0 END) AS BIGINT)
-          |    AS contraction_cents,
-          |  CAST(sum(CASE WHEN vc IS NULL THEN vp ELSE 0 END) AS BIGINT)
-          |    AS churned_cents,
-          |  CAST(sum(CASE WHEN vp IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS n_new,
-          |  CAST(sum(CASE WHEN vc IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          |    AS n_churned
-          |FROM j, m WHERE period <= mx GROUP BY 1""".stripMargin,
-
-      "q296_double_billing" ->
-        """SELECT a.l_partkey, CAST(a.l_quantity AS BIGINT) AS qty,
-          |  CAST(a.l_orderkey * 10 + a.l_linenumber AS BIGINT) AS id_a,
-          |  CAST(b.l_orderkey * 10 + b.l_linenumber AS BIGINT) AS id_b,
-          |  CAST(date_diff('day', DATE '1970-01-01',
-          |    CAST(a.l_shipdate AS DATE)) AS BIGINT) AS day_a,
-          |  CAST(date_diff('day', DATE '1970-01-01',
-          |    CAST(b.l_shipdate AS DATE)) AS BIGINT) AS day_b,
-          |  CAST(abs(date_diff('day', CAST(b.l_shipdate AS DATE),
-          |    CAST(a.l_shipdate AS DATE))) AS BIGINT) AS gap_days
-          |FROM lineitem a JOIN lineitem b
-          |  ON a.l_partkey = b.l_partkey
-          |  AND CAST(a.l_quantity AS BIGINT) = CAST(b.l_quantity AS BIGINT)
-          |  AND a.l_orderkey * 10 + a.l_linenumber
-          |    < b.l_orderkey * 10 + b.l_linenumber
-          |  AND abs(date_diff('day', CAST(b.l_shipdate AS DATE),
-          |    CAST(a.l_shipdate AS DATE))) <= 7""".stripMargin,
-
-      // additivity makes the two-batch delta state ≡ the one-shot
-      // delta table, so the card is q291's sweep line verbatim
-      "q297_streaming_concurrency" ->
-        """WITH iv AS (
-          |  SELECT CAST(date_diff('day', DATE '1970-01-01',
-          |      CAST(o_orderdate AS DATE)) AS BIGINT) AS s,
-          |    CAST(date_diff('day', DATE '1970-01-01',
-          |      CAST(l_shipdate AS DATE)) AS BIGINT) AS e
-          |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey),
-          |d AS (
-          |  SELECT day, CAST(sum(dd) AS BIGINT) AS delta FROM (
-          |    SELECT s AS day, 1 AS dd FROM iv WHERE e > s
-          |    UNION ALL
-          |    SELECT e, -1 FROM iv WHERE e > s) u
-          |  GROUP BY 1)
-          |SELECT day, CAST(sum(delta) OVER (ORDER BY day
-          |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-          |  AS n_open
-          |FROM d""".stripMargin,
-
-      // additivity makes the two-batch value-count state ≡ the raw
-      // multiset, so the card is quantile_cont over the raw values
-      "q276_streaming_quantiles" ->
-        s"""SELECT 0.5 AS q, CAST(count(*) AS BIGINT) AS n,
-           |  ${pround("quantile_cont(value, 0.5)", 4)} AS value
-           |FROM events WHERE value IS NOT NULL
-           |UNION ALL SELECT 0.9, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(value, 0.9)", 4)}
-           |FROM events WHERE value IS NOT NULL
-           |UNION ALL SELECT 0.99, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(value, 0.99)", 4)}
-           |FROM events WHERE value IS NOT NULL""".stripMargin,
-
-      // quantile_cont shares the R-7 convention with the bucketed-rank
-      // order statistics; pround4 absorbs interpolation ulps
-      "q275_exact_quantiles" ->
-        s"""SELECT 0.5 AS q, CAST(count(*) AS BIGINT) AS n,
-           |  ${pround("quantile_cont(l_extendedprice, 0.5)", 4)} AS value
-           |FROM lineitem WHERE l_extendedprice IS NOT NULL
-           |UNION ALL SELECT 0.95, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(l_extendedprice, 0.95)", 4)}
-           |FROM lineitem WHERE l_extendedprice IS NOT NULL
-           |UNION ALL SELECT 0.99, CAST(count(*) AS BIGINT),
-           |  ${pround("quantile_cont(l_extendedprice, 0.99)", 4)}
-           |FROM lineitem WHERE l_extendedprice IS NOT NULL""".stripMargin,
-
-      // additive day-grain presence ≡ one-shot distinct (user, day),
-      // so the card is exactly q270's coverage computation
-      "q274_streaming_actives" ->
-        """WITH du AS (
-          |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS d
-          |  FROM events),
-          |mx AS (SELECT max(d) AS m FROM du),
-          |cov AS (
-          |  SELECT DISTINCT user_id, d + g AS cd
-          |  FROM du, (SELECT unnest([0, 1, 2, 3, 4, 5, 6]) AS g) w)
-          |SELECT cd AS day, CAST(count(*) AS BIGINT) AS n_active
-          |FROM cov, mx WHERE cd <= m GROUP BY 1""".stripMargin,
-
-      // additivity makes the two-batch state ≡ one-shot daily counts;
-      // then q268's trailing screen over string days
-      "q272_streaming_deviation" ->
-        """WITH d AS (
-          |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-          |    CAST(count(*) AS BIGINT) AS c
-          |  FROM events GROUP BY 1, 2),
-          |w AS (
-          |  SELECT event_type, day, c,
-          |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY day
-          |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS BIGINT)
-          |      AS trailing_sum,
-          |    count(c) OVER (PARTITION BY event_type ORDER BY day
-          |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS tn
-          |  FROM d)
-          |SELECT event_type, day, c AS n, trailing_sum,
-          |  CAST(c * 7 * 10000 // trailing_sum - 10000 AS BIGINT) AS dev_bp
-          |FROM w WHERE tn = 7 AND trailing_sum > 0""".stripMargin,
-
-      // fixed timestamp walls; label-window-only users excluded by the
-      // inner feature aggregate
-      "q273_temporal_labels" ->
-        """WITH fw AS (
-          |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-          |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-          |      END) AS BIGINT) AS n_target,
-          |    CAST(count(DISTINCT epoch_us(ts) // 86400000000) AS BIGINT)
-          |      AS n_active_days,
-          |    max(epoch_us(ts) // 86400000000) AS ld
-          |  FROM events WHERE ts < TIMESTAMP '2024-01-21 00:00:00'
-          |  GROUP BY 1),
-          |lw AS (
-          |  SELECT DISTINCT user_id FROM events
-          |  WHERE ts >= TIMESTAMP '2024-01-21 00:00:00'
-          |    AND ts < TIMESTAMP '2024-01-28 00:00:00'
-          |    AND event_type = 'purchase')
-          |SELECT fw.user_id, fw.n_events, fw.n_target, fw.n_active_days,
-          |  CAST(date_diff('day', DATE '1970-01-01', DATE '2024-01-21')
-          |    - fw.ld AS BIGINT) AS recency_days,
-          |  CAST(CASE WHEN lw.user_id IS NULL THEN 0 ELSE 1 END AS BIGINT)
-          |    AS label
-          |FROM fw LEFT JOIN lw ON fw.user_id = lw.user_id""".stripMargin,
-
-      // q243's exact ABC ranking crossed with the closed-form CV
-      // (zero months counted through the global month count M)
-      "q269_abc_xyz" ->
-        """WITH pv AS (
-          |  SELECT l_partkey,
-          |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
-          |  FROM lineitem GROUP BY 1),
-          |t AS (SELECT CAST(sum(val) * 100 AS BIGINT) AS totc FROM pv),
-          |abc AS (
-          |  SELECT l_partkey, val,
-          |    CASE WHEN cumc * 5 <= totc * 4 THEN 'A'
-          |      WHEN cumc * 20 <= totc * 19 THEN 'B'
-          |      ELSE 'C' END AS abc_class
-          |  FROM (
-          |    SELECT l_partkey, val,
-          |      CAST(sum(val) OVER (ORDER BY val DESC, l_partkey
-          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100
-          |        AS BIGINT) AS cumc
-          |    FROM pv), t),
-          |per AS (
-          |  SELECT l_partkey, year(l_shipdate) * 12 + month(l_shipdate)
-          |      AS mon,
-          |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS q
-          |  FROM lineitem GROUP BY 1, 2),
-          |m AS (SELECT CAST(count(DISTINCT mon) AS BIGINT) AS mm FROM per),
-          |xyz AS (
-          |  SELECT l_partkey,
-          |    CASE WHEN cv < 0.5 THEN 'X' WHEN cv < 1.0 THEN 'Y'
-          |      ELSE 'Z' END AS xyz_class
-          |  FROM (
-          |    SELECT l_partkey,
-          |      sqrt(greatest(0.0, CAST(mm AS DOUBLE) * CAST(sqq AS DOUBLE)
-          |        - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))) /
-          |        CAST(sq AS DOUBLE) AS cv
-          |    FROM (
-          |      SELECT l_partkey, sum(q) AS sq,
-          |        sum(CAST(q * q AS DECIMAL(38,4))) AS sqq
-          |      FROM per GROUP BY 1) s, m
-          |    WHERE sq > 0))
-          |SELECT abc.abc_class, xyz.xyz_class,
-          |  CAST(count(*) AS BIGINT) AS n_parts,
-          |  round(CAST(sum(CAST(round(CAST(abc.val AS DOUBLE), 2)
-          |    AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_value
-          |FROM abc JOIN xyz USING (l_partkey)
-          |GROUP BY 1, 2""".stripMargin,
-
-      // each distinct (user, day) covers days [d, d+7); day-d actives
-      // are the distinct covering users, trimmed at the data's max day
-      "q270_rolling_actives" ->
-        """WITH du AS (
-          |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS d
-          |  FROM events),
-          |mx AS (SELECT max(d) AS m FROM du),
-          |cov AS (
-          |  SELECT DISTINCT user_id, d + g AS cd
-          |  FROM du, (SELECT unnest([0, 1, 2, 3, 4, 5, 6]) AS g) w)
-          |SELECT cd AS day, CAST(count(*) AS BIGINT) AS n_active
-          |FROM cov, mx WHERE cd <= m GROUP BY 1""".stripMargin,
-
-      // q148's session replication at 1800s; per-session purchase
-      // flag max-reduced, per-start-day exact bp
-      "q271_session_conversion" ->
-        """WITH g AS (
-          |  SELECT user_id, ts, event_type,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w))
-          |              > 1800
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, ts, event_type,
-          |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-          |                  ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM g),
-          |se AS (
-          |  SELECT user_id, sid, min(epoch_us(ts)) AS t0,
-          |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-          |      AS cv
-          |  FROM s GROUP BY 1, 2),
-          |dd AS (
-          |  SELECT t0 // 86400000000 AS day,
-          |    CAST(count(*) AS BIGINT) AS n_sessions,
-          |    CAST(sum(cv) AS BIGINT) AS n_converting
-          |  FROM se GROUP BY 1)
-          |SELECT day, n_sessions, n_converting,
-          |  CAST(n_converting * 10000 // n_sessions AS BIGINT) AS rate_bp
-          |FROM dd""".stripMargin,
-
-      // one-shot distinct (user, week) + min-week cohorts — the state
-      // min derives identically, so the two-batch view equals this
-      "q267_streaming_retention" ->
-        """WITH a AS (
-          |  SELECT DISTINCT user_id,
-          |    epoch_us(ts) // 86400000000 // 7 AS w
-          |  FROM events),
-          |f AS (SELECT user_id, min(w) AS cw FROM a GROUP BY 1),
-          |j AS (SELECT a.user_id, f.cw, a.w - f.cw AS o
-          |      FROM a JOIN f USING (user_id)),
-          |g AS (
-          |  SELECT CAST(cw AS BIGINT) AS cohort_week,
-          |    CAST(o AS BIGINT) AS offset_weeks,
-          |    CAST(count(*) AS BIGINT) AS n_active
-          |  FROM j GROUP BY 1, 2),
-          |sz AS (SELECT cohort_week, n_active AS s FROM g
-          |       WHERE offset_weeks = 0)
-          |SELECT g.cohort_week, g.offset_weeks, g.n_active,
-          |  CAST(g.n_active * 10000 // sz.s AS BIGINT) AS retention_bp
-          |FROM g JOIN sz USING (cohort_week)""".stripMargin,
-
-      // same ROWS BETWEEN window PRECEDING AND 1 PRECEDING trailing
-      // sum; integer bp, full-window + nonzero-sum rows only
-      "q268_volume_deviation" ->
-        """WITH d AS (
-          |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-          |    CAST(count(*) AS BIGINT) AS c
-          |  FROM events GROUP BY 1, 2),
-          |w AS (
-          |  SELECT event_type, day, c,
-          |    CAST(sum(c) OVER (PARTITION BY event_type ORDER BY day
-          |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS BIGINT)
-          |      AS trailing_sum,
-          |    count(c) OVER (PARTITION BY event_type ORDER BY day
-          |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING) AS tn
-          |  FROM d)
-          |SELECT event_type, day, c AS n, trailing_sum,
-          |  CAST(c * 7 * 10000 // trailing_sum - 10000 AS BIGINT) AS dev_bp
-          |FROM w WHERE tn = 7 AND trailing_sum > 0""".stripMargin,
-
-      // same md5('neg|u|i|j') 48-bit draw modulo the max part id;
-      // rejection by NOT EXISTS against the user's positives
-      "q265_negative_samples" ->
-        """WITH pos AS (
-          |  SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS i
-          |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-          |mx AS (SELECT CAST(max(p_partkey) AS BIGINT) AS m FROM part),
-          |c AS (
-          |  SELECT u, i, j,
-          |    CAST(('0x' || substr(md5('neg' || '|' ||
-          |      CAST(u AS VARCHAR) || '|' || CAST(i AS VARCHAR) || '|' ||
-          |      CAST(j AS VARCHAR)), 1, 12)) AS BIGINT) % m + 1 AS cand
-          |  FROM pos, mx, (SELECT unnest([1, 2]) AS j) dr)
-          |SELECT u AS custkey, CAST(cand AS BIGINT) AS neg_item,
-          |  CAST(j AS BIGINT) AS draw
-          |FROM c WHERE NOT EXISTS (
-          |  SELECT 1 FROM pos p WHERE p.u = c.u AND p.i = c.cand)"""
-        .stripMargin,
-
-      // q148's session replication at a 1800s gap; sessions become
-      // baskets (user#sid), q211's affinity SQL over event types
-      "q266_session_affinity" ->
-        """WITH g AS (
-          |  SELECT user_id, ts, event_type,
-          |    CASE WHEN lag(ts) OVER w IS NULL
-          |           OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w))
-          |              > 1800
-          |         THEN 1 ELSE 0 END AS ns
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-          |s AS (
-          |  SELECT user_id, event_type,
-          |    sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-          |                  ROWS UNBOUNDED PRECEDING) AS sid
-          |  FROM g),
-          |b AS (SELECT DISTINCT CAST(user_id AS VARCHAR) || '#' ||
-          |    CAST(sid AS VARCHAR) AS bk, event_type FROM s),
-          |nb AS (SELECT CAST(count(DISTINCT bk) AS BIGINT) AS n FROM b),
-          |ic AS (SELECT event_type, CAST(count(*) AS BIGINT) AS ni
-          |       FROM b GROUP BY 1),
-          |p AS (
-          |  SELECT x.event_type AS item_a, y.event_type AS item_b,
-          |    CAST(count(*) AS BIGINT) AS n_ab
-          |  FROM b x JOIN b y ON x.bk = y.bk
-          |    AND x.event_type < y.event_type
-          |  GROUP BY 1, 2 HAVING n_ab >= 2)
-          |SELECT item_a, item_b, n_ab, ia.ni AS n_a, ib.ni AS n_b,
-          |  CAST(n_ab * nb.n * 10000 // (ia.ni * ib.ni) AS BIGINT)
-          |    AS lift_bp
-          |FROM p JOIN ic ia ON ia.event_type = item_a
-          |JOIN ic ib ON ib.event_type = item_b, nb""".stripMargin,
-
-      // same strict boundary-crossing quintile indexes over
-      // quantile_cont boundaries; exact DECIMAL totals
-      "q264_rfm_segments" ->
-        """WITH g AS (
-          |  SELECT max(epoch_us(ts) // 86400000000) AS gd FROM events),
-          |u AS (
-          |  SELECT user_id,
-          |    CAST(gd - max(epoch_us(ts) // 86400000000) AS BIGINT)
-          |      AS recency,
-          |    CAST(count(*) AS BIGINT) AS freq,
-          |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS monetary
-          |  FROM events, g GROUP BY user_id, gd),
-          |q AS (
-          |  SELECT quantile_cont(CAST(recency AS DOUBLE),
-          |      [0.2, 0.4, 0.6, 0.8]) AS rq,
-          |    quantile_cont(CAST(freq AS DOUBLE),
-          |      [0.2, 0.4, 0.6, 0.8]) AS fq,
-          |    quantile_cont(monetary, [0.2, 0.4, 0.6, 0.8]) AS mq
-          |  FROM u),
-          |s AS (
-          |  SELECT
-          |    CAST(1 + len(list_filter(rq,
-          |      x -> x < CAST(recency AS DOUBLE))) AS BIGINT) AS r_idx,
-          |    CAST(1 + len(list_filter(fq,
-          |      x -> x < CAST(freq AS DOUBLE))) AS BIGINT) AS f_idx,
-          |    CAST(1 + len(list_filter(mq, x -> x < monetary)) AS BIGINT)
-          |      AS m_idx,
-          |    monetary
-          |  FROM u, q)
-          |SELECT r_idx, f_idx, m_idx, CAST(count(*) AS BIGINT) AS n_users,
-          |  round(CAST(sum(CAST(monetary AS DECIMAL(18,2))) AS DOUBLE), 2)
-          |    AS total_value
-          |FROM s GROUP BY 1, 2, 3""".stripMargin,
-
-      // q21's candidate pairs as a symmetric edge list, three unrolled
-      // frontier rounds (exact set computation — no scores, no ties)
-      "q245_bfs_layers" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |hh AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM hh GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |      FROM bk a JOIN bk b
-           |      ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-           |e AS (SELECT id_a AS src, id_b AS dst FROM p
-           |      UNION SELECT id_b, id_a FROM p),
-           |l0 AS (SELECT DISTINCT src AS node FROM e WHERE src % 13 = 0),
-           |l1 AS (SELECT DISTINCT e.dst AS node FROM e
-           |       JOIN l0 ON e.src = l0.node
-           |       WHERE e.dst NOT IN (SELECT node FROM l0)),
-           |l2 AS (SELECT DISTINCT e.dst AS node FROM e
-           |       JOIN l1 ON e.src = l1.node
-           |       WHERE e.dst NOT IN (SELECT node FROM l0)
-           |         AND e.dst NOT IN (SELECT node FROM l1)),
-           |l3 AS (SELECT DISTINCT e.dst AS node FROM e
-           |       JOIN l2 ON e.src = l2.node
-           |       WHERE e.dst NOT IN (SELECT node FROM l0)
-           |         AND e.dst NOT IN (SELECT node FROM l1)
-           |         AND e.dst NOT IN (SELECT node FROM l2))
-           |SELECT node AS doc_id, CAST(0 AS BIGINT) AS dist FROM l0
-           |UNION ALL SELECT node, 1 FROM l1
-           |UNION ALL SELECT node, 2 FROM l2
-           |UNION ALL SELECT node, 3 FROM l3""".stripMargin,
-
-      // per-(user, day) first-three event types in (ts, event_id)
-      // order; exact path counts, top-20 under a total order
-      "q246_top_paths" ->
-        """WITH s AS (
-          |  SELECT user_id, strftime(ts, '%Y-%m-%d') AS day,
-          |    list(event_type ORDER BY ts, event_id) AS evs
-          |  FROM events GROUP BY 1, 2),
-          |p AS (SELECT array_to_string(evs[1:3], '>') AS path FROM s)
-          |SELECT path, CAST(count(*) AS BIGINT) AS n_user_days
-          |FROM p GROUP BY 1
-          |ORDER BY n_user_days DESC, path LIMIT 20""".stripMargin,
-
-      // the same md5('pps|key') order and integer stride crossings —
-      // plain global window on DuckDB's single node
-      "q244_pps_sample" ->
-        s"""WITH d AS (
-           |  SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS w FROM documents),
-           |k AS (
-           |  SELECT doc_id, w, md5('pps' || '|' || CAST(doc_id AS VARCHAR)) AS sk
-           |  FROM d WHERE w > 0),
-           |t AS (SELECT CAST(sum(w) AS BIGINT) AS tot FROM k),
-           |c AS (
-           |  SELECT doc_id, w,
-           |    sum(w) OVER (ORDER BY sk, doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           |  FROM k)
-           |SELECT doc_id, w AS weight,
-           |  CAST(cum // (tot // 100) - (cum - w) // (tot // 100) AS BIGINT) AS n_hits
-           |FROM c, t
-           |WHERE cum // (tot // 100) > (cum - w) // (tot // 100)""".stripMargin,
-
-      // plain global window on the oracle side (DuckDB's single node
-      // is fine with it); DECIMAL cum, BIGINT-cent boundary compares
-      "q243_abc_parts" ->
-        """WITH pv AS (
-          |  SELECT l_partkey AS partkey,
-          |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
-          |  FROM lineitem GROUP BY 1),
-          |t AS (SELECT CAST(sum(val) * 100 AS BIGINT) AS totc FROM pv),
-          |c AS (
-          |  SELECT partkey, val,
-          |    CAST(sum(val) OVER (ORDER BY val DESC, partkey
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100
-          |      AS BIGINT) AS cumc
-          |  FROM pv)
-          |SELECT partkey, round(CAST(val AS DOUBLE), 2) AS value,
-          |  CASE WHEN totc = 0 THEN 0
-          |    ELSE CAST(cumc * 10000 // totc AS BIGINT) END AS share_bp,
-          |  CASE WHEN cumc * 5 <= totc * 4 THEN 'A'
-          |    WHEN cumc * 20 <= totc * 19 THEN 'B'
-          |    ELSE 'C' END AS abc_class
-          |FROM c, t""".stripMargin,
-
-      // the streaming MV state ≡ one-shot daily counts (additivity),
-      // so the oracle is q239's statistic over string days
-      "q241_streaming_cusum" ->
-        """WITH daily AS (
-          |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM events GROUP BY 1, 2),
-          |tot AS (
-          |  SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
-          |    CAST(sum(n) AS BIGINT) AS nt
-          |  FROM daily GROUP BY 1),
-          |s AS (
-          |  SELECT d.event_type, d.day, t.nd AS n_days, t.nt AS n_total,
-          |    abs(t.nd * sum(d.n) OVER (PARTITION BY d.event_type
-          |        ORDER BY d.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |      - (row_number() OVER (PARTITION BY d.event_type ORDER BY d.day)) * t.nt)
-          |      AS cusum
-          |  FROM daily d JOIN tot t USING (event_type))
-          |SELECT event_type, day AS change_day,
-          |  CAST(cusum AS BIGINT) AS cusum, n_days, n_total
-          |FROM s
-          |QUALIFY row_number() OVER (PARTITION BY event_type
-          |  ORDER BY cusum DESC, day) = 1""".stripMargin,
-
-      // the identical level/trend recurrence replayed as a recursive
-      // CTE — newLevel recomputed verbatim in the trend slot, exactly
-      // as the engine's fold does (deterministic IEEE ops, same order)
-      "q242_holt_forecast" ->
-        s"""WITH RECURSIVE daily AS (
-           |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-           |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS dv
-           |  FROM events GROUP BY 1, 2),
-           |v AS (
-           |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-           |    list(dv ORDER BY day) AS l
-           |  FROM daily GROUP BY 1),
-           |h AS (
-           |  SELECT event_type, n_days, l, 1 AS k,
-           |    CAST(l[1] AS DOUBLE) AS lev, CAST(0 AS DOUBLE) AS tr
-           |  FROM v
-           |  UNION ALL
-           |  SELECT event_type, n_days, l, k + 1,
-           |    0.5 * l[k+1] + 0.5 * (lev + tr),
-           |    0.5 * ((0.5 * l[k+1] + 0.5 * (lev + tr)) - lev) + 0.5 * tr
-           |  FROM h WHERE k < n_days)
-           |SELECT event_type, n_days,
-           |  ${pround("lev", 4)} AS level, ${pround("tr", 4)} AS trend,
-           |  ${pround("lev + tr", 4)} AS forecast
-           |FROM h WHERE k = n_days""".stripMargin,
-
-      // sliding bigram check over the SAME token list the engine
-      // indexes — occurrence counts are exact integers
-      "q238_phrase_search" ->
-        s"""WITH d AS (SELECT doc_id, $toksSql AS ts FROM documents),
-           |m AS (SELECT doc_id,
-           |  CAST(len(list_filter(range(1, len(ts)),
-           |    i -> ts[i] = 'value' AND ts[i+1] = 'table')) AS BIGINT) AS n_matches
-           |  FROM d)
-           |SELECT doc_id, n_matches FROM m WHERE n_matches >= 1""".stripMargin,
-
-      // the integer cross-multiplied CUSUM: |D*prefix - k*total| per
-      // day, argmax with earliest-day tie-break via QUALIFY
-      "q239_cusum_changepoint" ->
-        """WITH daily AS (
-          |  SELECT event_type, CAST(ts AS DATE) AS day,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM events GROUP BY 1, 2),
-          |tot AS (
-          |  SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
-          |    CAST(sum(n) AS BIGINT) AS nt
-          |  FROM daily GROUP BY 1),
-          |s AS (
-          |  SELECT d.event_type, d.day, t.nd AS n_days, t.nt AS n_total,
-          |    abs(t.nd * sum(d.n) OVER (PARTITION BY d.event_type
-          |        ORDER BY d.day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          |      - (row_number() OVER (PARTITION BY d.event_type ORDER BY d.day)) * t.nt)
-          |      AS cusum
-          |  FROM daily d JOIN tot t USING (event_type))
-          |SELECT event_type, strftime(day, '%Y-%m-%d') AS change_day,
-          |  CAST(cusum AS BIGINT) AS cusum, n_days, n_total
-          |FROM s
-          |QUALIFY row_number() OVER (PARTITION BY event_type
-          |  ORDER BY cusum DESC, day) = 1""".stripMargin,
-
-      // first-purchase month via one keyed aggregate; integer month
-      // age; exact DECIMAL revenue rounded only on output
-      "q240_cohort_ltv" ->
-        """WITH f AS (
-          |  SELECT o_custkey, min(o_orderdate) AS c FROM orders GROUP BY 1),
-          |j AS (
-          |  SELECT o.o_custkey, o.o_orderdate, o.o_totalprice, f.c
-          |  FROM orders o JOIN f USING (o_custkey))
-          |SELECT CAST(year(c) AS BIGINT) AS cohort_year,
-          |  CAST(month(c) AS BIGINT) AS cohort_month,
-          |  CAST(year(o_orderdate) * 12 + month(o_orderdate)
-          |    - year(c) * 12 - month(c) AS BIGINT) AS age_months,
-          |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_customers,
-          |  CAST(count(*) AS BIGINT) AS n_orders,
-          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS revenue
-          |FROM j GROUP BY 1, 2, 3""".stripMargin,
-
-      // q232's at-risk CTEs with the additive contribution d/n — the
-      // output is the exact decimal running sum, no exp
-      "q235_nelson_aalen" ->
-        """WITH per AS (
-          |  SELECT date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
-          |    CASE WHEN max(o_orderdate) < DATE '1998-03-01' THEN 1 ELSE 0 END AS e
-          |  FROM orders GROUP BY o_custkey),
-          |g AS (
-          |  SELECT CAST(dur AS BIGINT) AS duration,
-          |    CAST(sum(e) AS BIGINT) AS n_events,
-          |    CAST(count(*) - sum(e) AS BIGINT) AS n_censored
-          |  FROM per GROUP BY 1),
-          |tot AS (SELECT CAST(sum(n_events + n_censored) AS BIGINT) AS n FROM g),
-          |r AS (
-          |  SELECT g.*, t.n - CAST(COALESCE(sum(n_events + n_censored) OVER (
-          |    ORDER BY duration ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-          |    0) AS BIGINT) AS n_risk
-          |  FROM g, tot t),
-          |c AS (
-          |  SELECT *,
-          |    CAST(floor(CAST(n_events AS DOUBLE) / CAST(n_risk AS DOUBLE)
-          |      * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6)) AS contrib
-          |  FROM r)
-          |SELECT duration, n_risk, n_events, n_censored,
-          |  CAST(sum(contrib) OVER (ORDER BY duration) AS DOUBLE) AS cum_hazard
-          |FROM c""".stripMargin,
-
-      // the streaming state's two-batch merge ≡ the one-shot counts
-      // (additivity), so the oracle IS q232's KM curve
-      "q236_streaming_survival" ->
-        """WITH per AS (
-          |  SELECT date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
-          |    CASE WHEN max(o_orderdate) < DATE '1998-03-01' THEN 1 ELSE 0 END AS e
-          |  FROM orders GROUP BY o_custkey),
-          |g AS (
-          |  SELECT CAST(dur AS BIGINT) AS duration,
-          |    CAST(sum(e) AS BIGINT) AS n_events,
-          |    CAST(count(*) - sum(e) AS BIGINT) AS n_censored
-          |  FROM per GROUP BY 1),
-          |tot AS (SELECT CAST(sum(n_events + n_censored) AS BIGINT) AS n FROM g),
-          |r AS (
-          |  SELECT g.*, t.n - CAST(COALESCE(sum(n_events + n_censored) OVER (
-          |    ORDER BY duration ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-          |    0) AS BIGINT) AS n_risk
-          |  FROM g, tot t),
-          |c AS (
-          |  SELECT *,
-          |    CASE WHEN n_risk = n_events THEN CAST(0 AS DECIMAL(18,6))
-          |      ELSE CAST(floor(ln(CAST(n_risk - n_events AS DOUBLE) /
-          |        CAST(n_risk AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |        AS DECIMAL(18,6)) END AS contrib,
-          |    CASE WHEN n_risk = n_events THEN 1 ELSE 0 END AS z
-          |  FROM r),
-          |f AS (
-          |  SELECT duration, n_risk, n_events, n_censored,
-          |    CAST(sum(contrib) OVER (ORDER BY duration) AS DOUBLE) AS csum,
-          |    max(z) OVER (ORDER BY duration) AS zany
-          |  FROM c)
-          |SELECT duration, n_risk, n_events, n_censored,
-          |  CASE WHEN zany = 1 THEN 0.0
-          |    ELSE floor(exp(csum) * 1000000 + 0.5) / 1000000 END AS survival
-          |FROM f""".stripMargin,
-
-      // q211's pair CTEs, then both rule orientations with the
-      // asymmetric integer confidence; top-40 under a total order
-      "q237_association_rules" ->
-        """WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-          |nb AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n FROM b),
-          |ic AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS ni FROM b GROUP BY 1),
-          |p AS (
-          |  SELECT x.l_partkey AS item_a, y.l_partkey AS item_b,
-          |    CAST(count(*) AS BIGINT) AS n_ab
-          |  FROM b x JOIN b y ON x.l_orderkey = y.l_orderkey
-          |    AND x.l_partkey < y.l_partkey
-          |  GROUP BY 1, 2 HAVING n_ab >= 2),
-          |e AS (
-          |  SELECT item_a, item_b, n_ab, ia.ni AS n_a, ib.ni AS n_b,
-          |    n_ab * nb.n * 10000 // (ia.ni * ib.ni) AS lift_bp
-          |  FROM p
-          |  JOIN ic ia ON ia.l_partkey = item_a
-          |  JOIN ic ib ON ib.l_partkey = item_b, nb),
-          |r AS (
-          |  SELECT item_a AS antecedent, item_b AS consequent, n_ab,
-          |    n_a AS n_antecedent, n_b AS n_consequent,
-          |    n_ab * 10000 // n_a AS confidence_bp, lift_bp
-          |  FROM e
-          |  UNION ALL
-          |  SELECT item_b, item_a, n_ab, n_b, n_a,
-          |    n_ab * 10000 // n_b, lift_bp
-          |  FROM e)
-          |SELECT * FROM r
-          |ORDER BY confidence_bp DESC, antecedent, consequent
-          |LIMIT 40""".stripMargin,
-
-      // q21's banding CTEs feed the crowded-bucket bipartite edge
-      // list; then q215's unrolled 2-round HITS fixpoint (BIGINT
-      // renorm with integer flooring — bit-identical on any engine)
-      "q234_neardup_hits" ->
-        s"""WITH sh AS (
-           |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS s
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |hh AS (SELECT doc_id, $h1Sql AS h1, $h2Sql AS h2 FROM sh),
-           |sig AS (SELECT doc_id, ${sigColsSql(6)} FROM hh GROUP BY doc_id),
-           |bk AS (SELECT doc_id, unnest(${bandKeysSql(3, 2)}) AS band_key FROM sig),
-           |crowded AS (SELECT band_key FROM bk GROUP BY 1 HAVING count(*) >= 2),
-           |e AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS h, band_key AS a
-           |      FROM bk JOIN crowded USING (band_key)),
-           |s1h AS (SELECT h, CAST(count(*) AS BIGINT) * 1000000 AS raw FROM e GROUP BY 1),
-           |s1hm AS (SELECT max(raw) AS m FROM s1h),
-           |s1hn AS (SELECT h, raw * 1000000 // m AS score FROM s1h, s1hm),
-           |s1a AS (SELECT a, CAST(sum(score) AS BIGINT) AS raw
-           |  FROM e JOIN s1hn USING (h) GROUP BY 1),
-           |s1am AS (SELECT max(raw) AS m FROM s1a),
-           |s1an AS (SELECT a, raw * 1000000 // m AS score FROM s1a, s1am),
-           |s2h AS (SELECT h, CAST(sum(score) AS BIGINT) AS raw
-           |  FROM e JOIN s1an USING (a) GROUP BY 1),
-           |s2hm AS (SELECT max(raw) AS m FROM s2h),
-           |s2hn AS (SELECT h, raw * 1000000 // m AS score FROM s2h, s2hm),
-           |s2a AS (SELECT a, CAST(sum(score) AS BIGINT) AS raw
-           |  FROM e JOIN s2hn USING (h) GROUP BY 1),
-           |s2am AS (SELECT max(raw) AS m FROM s2a),
-           |s2an AS (SELECT a, raw * 1000000 // m AS score FROM s2a, s2am)
-           |SELECT 'hub' AS role, h AS node, score FROM s2hn
-           |UNION ALL
-           |SELECT 'auth' AS role, a AS node, score FROM s2an""".stripMargin,
-
-      // the streaming monitor's two-batch state ≡ the one-shot class
-      // table (additivity), so the oracle IS q226's card
-      "q233_streaming_k_anonymity" ->
-        """WITH ec AS (
-          |  SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS sz
-          |  FROM customer GROUP BY 1, 2)
-          |SELECT sz AS class_size, CAST(count(*) AS BIGINT) AS n_classes,
-          |  CAST(sz * count(*) AS BIGINT) AS n_rows,
-          |  sz < 10 AS violates_k
-          |FROM ec GROUP BY sz""".stripMargin,
-
-      // KM product re-expressed as exp(sum(ln)) with the SAME pround6 +
-      // DECIMAL(18,6) contribution discipline; windows run over distinct
-      // durations so RANGE/ROWS framing cannot diverge. DuckDB ln() is
-      // natural log (log() is base-10 there — the reverse of Spark).
-      "q232_kaplan_meier" ->
-        """WITH per AS (
-          |  SELECT date_diff('day', min(o_orderdate), max(o_orderdate)) AS dur,
-          |    CASE WHEN max(o_orderdate) < DATE '1998-03-01' THEN 1 ELSE 0 END AS e
-          |  FROM orders GROUP BY o_custkey),
-          |g AS (
-          |  SELECT CAST(dur AS BIGINT) AS duration,
-          |    CAST(sum(e) AS BIGINT) AS n_events,
-          |    CAST(count(*) - sum(e) AS BIGINT) AS n_censored
-          |  FROM per GROUP BY 1),
-          |tot AS (SELECT CAST(sum(n_events + n_censored) AS BIGINT) AS n FROM g),
-          |r AS (
-          |  SELECT g.*, t.n - CAST(COALESCE(sum(n_events + n_censored) OVER (
-          |    ORDER BY duration ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-          |    0) AS BIGINT) AS n_risk
-          |  FROM g, tot t),
-          |c AS (
-          |  SELECT *,
-          |    CASE WHEN n_risk = n_events THEN CAST(0 AS DECIMAL(18,6))
-          |      ELSE CAST(floor(ln(CAST(n_risk - n_events AS DOUBLE) /
-          |        CAST(n_risk AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |        AS DECIMAL(18,6)) END AS contrib,
-          |    CASE WHEN n_risk = n_events THEN 1 ELSE 0 END AS z
-          |  FROM r),
-          |f AS (
-          |  SELECT duration, n_risk, n_events, n_censored,
-          |    CAST(sum(contrib) OVER (ORDER BY duration) AS DOUBLE) AS csum,
-          |    max(z) OVER (ORDER BY duration) AS zany
-          |  FROM c)
-          |SELECT duration, n_risk, n_events, n_censored,
-          |  CASE WHEN zany = 1 THEN 0.0
-          |    ELSE floor(exp(csum) * 1000000 + 0.5) / 1000000 END AS survival
-          |FROM f""".stripMargin,
-
-      // same filtered-split order, same bpe-ish token count, same
-      // prefix-sum // budget chunk id
-      "q229_sentence_chunks" ->
-        """WITH s AS (
-          |  SELECT doc_id, generate_subscripts(parts, 1) - 1 AS sent_idx,
-          |    unnest(parts) AS sent
-          |  FROM (SELECT doc_id,
-          |          list_filter(regexp_split_to_array(text, '[.!?]\s+'),
-          |                      x -> len(x) > 0) AS parts
-          |        FROM documents)),
-          |t AS (
-          |  SELECT doc_id, sent_idx,
-          |    CAST(len(regexp_extract_all(sent, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS tok
-          |  FROM s),
-          |c AS (
-          |  SELECT doc_id, tok,
-          |    COALESCE(CAST(sum(tok) OVER (PARTITION BY doc_id ORDER BY sent_idx
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS bef
-          |  FROM t)
-          |SELECT doc_id, CAST(bef // 64 AS BIGINT) AS chunk_id,
-          |  CAST(count(*) AS BIGINT) AS n_sentences,
-          |  CAST(sum(tok) AS BIGINT) AS n_tokens
-          |FROM c GROUP BY 1, 2""".stripMargin,
-
-      // dense_rank over the bare count keeps every tied priority
-      "q231_dense_topk" ->
-        """WITH c AS (
-          |  SELECT n_name, o_orderpriority AS priority,
-          |    CAST(count(*) AS BIGINT) AS n_orders
-          |  FROM orders
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey
-          |  GROUP BY 1, 2)
-          |SELECT n_name, priority, n_orders,
-          |  CAST(dense_rank() OVER (PARTITION BY n_name
-          |    ORDER BY n_orders DESC) AS BIGINT) AS rnk
-          |FROM c QUALIFY rnk <= 2""".stripMargin,
-
-      // q211's pair supports as weights; 3 weighted rounds unrolled
-      "q230_weighted_pagerank" -> {
-        val rounds = (1 to 3).map { k =>
-          s"""r$k AS (
-             |  SELECT n.node, n.strength,
-             |    CAST(150000 + COALESCE(s.inflow, 0) AS BIGINT) AS rank
-             |  FROM (SELECT node, strength FROM r0) n
-             |  LEFT JOIN (
-             |    SELECT e.dst AS node,
-             |      CAST(sum((r.rank * 85 * e.w) // (100 * r.strength)) AS BIGINT) AS inflow
-             |    FROM edges e JOIN r${k - 1} r ON r.node = e.src
-             |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-           |p AS (
-           |  SELECT x.l_partkey AS a, y.l_partkey AS b2,
-           |    CAST(count(*) AS BIGINT) AS w
-           |  FROM b x JOIN b y ON x.l_orderkey = y.l_orderkey
-           |    AND x.l_partkey < y.l_partkey
-           |  GROUP BY 1, 2 HAVING count(*) >= 2),
-           |edges AS (SELECT a AS src, b2 AS dst, w FROM p
-           |          UNION ALL SELECT b2, a, w FROM p),
-           |r0 AS (SELECT src AS node, CAST(sum(w) AS BIGINT) AS strength,
-           |       CAST(1000000 AS BIGINT) AS rank FROM edges GROUP BY 1),
-           |$rounds
-           |SELECT node, strength, rank FROM r3""".stripMargin
-      },
-
-      // Poisson bootstrap: replicate b's uniform is the b-mod-5'th
-      // 24-bit hex slot of digest md5('pb|(b div 5)|key') over 2^24
-      // (exact in double — five independent uniforms per digest, so
-      // 32 replicates cost 7 md5s per row, mirroring
-      // Bootstrap.poissonReplicateSums); the Poisson(1) inverse-CDF
-      // thresholds are the literal constants mirrored from
-      // Bootstrap.poissonCdf1; replicate means pround6, SE from exact
-      // DECIMAL moment sums, CI = nearest-rank 5%/95% order statistics
-      "q355_poisson_bootstrap" -> {
-        val ladder = operators.Bootstrap.poissonCdf1.zipWithIndex
-          .map { case (c, i) => s"WHEN u < $c THEN $i" }.mkString(" ")
-        s"""WITH base AS (
-           |  SELECT c_mktsegment AS g, o_orderkey AS k,
-           |    CAST(o_totalprice AS DECIMAL(18,2)) AS x
-           |  FROM orders JOIN customer ON o_custkey = c_custkey),
-           |dig AS MATERIALIZED (
-           |  SELECT g, x, j,
-           |    md5('pb' || '|' || CAST(j AS VARCHAR) || '|' ||
-           |      CAST(k AS VARCHAR)) AS d
-           |  FROM base CROSS JOIN (SELECT unnest(range(7)) AS j)),
-           |uu AS (
-           |  SELECT g, x, j * 5 + i AS b,
-           |    CAST(CAST(('0x' || substr(d, 1 + 6 * CAST(i AS INTEGER), 6))
-           |      AS BIGINT) AS DOUBLE) / 16777216.0 AS u
-           |  FROM dig CROSS JOIN (SELECT unnest(range(5)) AS i)
-           |  WHERE j * 5 + i < 32),
-           |w AS (SELECT g, b, x, CASE $ladder ELSE 7 END AS w FROM uu),
-           |tot AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n_rows,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS sx
-           |  FROM base GROUP BY 1),
-           |rep AS (
-           |  SELECT g, b, CAST(sum(w) AS BIGINT) AS sw,
-           |    CAST(sum(w * x) AS DECIMAL(38,2)) AS swx
-           |  FROM w GROUP BY 1, 2),
-           |m AS (
-           |  SELECT g, b,
-           |    ${pround("CAST(swx AS DOUBLE) / CAST(sw AS DOUBLE)", 6)} AS m6
-           |  FROM rep WHERE sw > 0),
-           |ranked AS (
-           |  SELECT g, b, m6,
-           |    row_number() OVER (PARTITION BY g ORDER BY m6, b) AS r,
-           |    count(*) OVER (PARTITION BY g) AS used
-           |  FROM m),
-           |rr AS (
-           |  SELECT g, m6, r, used,
-           |    greatest(CAST(ceil(used * 0.05) AS BIGINT), 1) AS lo_r,
-           |    CAST(ceil(used * 0.95) AS BIGINT) AS hi_r
-           |  FROM ranked),
-           |agg AS (
-           |  SELECT g, CAST(max(used) AS BIGINT) AS reps_used,
-           |    CAST(sum(CAST(m6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sm,
-           |    CAST(sum(CAST(CAST(m6 AS DECIMAL(19,6)) *
-           |      CAST(m6 AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      AS DECIMAL(38,12)) AS sq,
-           |    max(CASE WHEN r = lo_r THEN m6 END) AS ci_lo,
-           |    max(CASE WHEN r = hi_r THEN m6 END) AS ci_hi
-           |  FROM rr GROUP BY 1)
-           |SELECT g AS c_mktsegment, t.n_rows,
-           |  ${pround("CAST(t.sx AS DOUBLE) / CAST(t.n_rows AS DOUBLE)", 6)}
-           |    AS mean_obs,
-           |  CAST(COALESCE(a.reps_used, 0) AS BIGINT) AS reps_used,
-           |  CASE WHEN a.reps_used IS NULL THEN NULL ELSE
-           |    ${pround("sqrt(greatest(CAST(0.0 AS DOUBLE), " +
-             "(CAST(a.sq AS DOUBLE) - CAST(a.sm AS DOUBLE) * " +
-             "CAST(a.sm AS DOUBLE) / CAST(a.reps_used AS DOUBLE)) / " +
-             "(CAST(a.reps_used AS DOUBLE) - 1.0)))", 6)} END AS boot_se,
-           |  a.ci_lo, a.ci_hi
-           |FROM tot t LEFT JOIN agg a USING (g)""".stripMargin
-      },
-
-      // leave-one-out estimates from block totals only; th_i pround6,
-      // SE and bias-corrected estimate from exact DECIMAL moment sums
-      "q356_jackknife" ->
-        s"""WITH b AS (
-           |  SELECT l_returnflag AS g, strftime(l_shipdate, '%Y-%m') AS blk,
-           |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4)))
-           |      AS DECIMAL(38,4)) AS sn,
-           |    CAST(sum(CAST(l_quantity AS DECIMAL(18,4)))
-           |      AS DECIMAL(38,4)) AS sd
-           |  FROM lineitem GROUP BY 1, 2),
-           |t AS (
-           |  SELECT g, sn, sd,
-           |    CAST(sum(sn) OVER (PARTITION BY g) AS DECIMAL(38,4)) AS tn,
-           |    CAST(sum(sd) OVER (PARTITION BY g) AS DECIMAL(38,4)) AS td
-           |  FROM b),
-           |loo AS (
-           |  SELECT g, tn, td,
-           |    ${pround("CAST(tn - sn AS DOUBLE) / CAST(td - sd AS DOUBLE)", 6)}
-           |      AS th
-           |  FROM t WHERE (td - sd) > 0),
-           |agg AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS g_blocks,
-           |    ${pround("CAST(max(tn) AS DOUBLE) / CAST(max(td) AS DOUBLE)", 6)}
-           |      AS theta,
-           |    CAST(sum(CAST(th AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sm,
-           |    CAST(sum(CAST(CAST(th AS DECIMAL(19,6)) *
-           |      CAST(th AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      AS DECIMAL(38,12)) AS sq
-           |  FROM loo GROUP BY 1)
-           |SELECT g AS l_returnflag, g_blocks, theta,
-           |  ${pround("CAST(g_blocks AS DOUBLE) * theta - " +
-             "(CAST(g_blocks AS DOUBLE) - 1.0) * " +
-             "(CAST(sm AS DOUBLE) / CAST(g_blocks AS DOUBLE))", 6)}
-           |    AS theta_jack,
-           |  ${pround("sqrt(greatest(CAST(0.0 AS DOUBLE), " +
-             "(CAST(g_blocks AS DOUBLE) - 1.0) / CAST(g_blocks AS DOUBLE) * " +
-             "(CAST(sq AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) / " +
-             "CAST(g_blocks AS DOUBLE))))", 6)} AS jack_se
-           |FROM agg""".stripMargin,
-
-      // unconditional randomization null: replicate b's coin is BIT b
-      // of the 48-bit md5 prefix of 'rt|0|key' (one digest carries 48
-      // replicate coins, mirroring Bootstrap.randomizationTest); both
-      // sides drop empty-arm replicates and count |d_b| >= |d_obs| on
-      // pround6 differences
-      "q357_randomization_test" -> {
-        s"""WITH base AS (
-           |  SELECT l_linestatus AS g,
-           |    CAST(l_orderkey AS VARCHAR) || ':' ||
-           |      CAST(l_linenumber AS VARCHAR) AS k,
-           |    CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END AS arm,
-           |    CAST(l_quantity AS DECIMAL(18,2)) AS x
-           |  FROM lineitem),
-           |obs AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(arm) AS BIGINT) AS n1,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS sx,
-           |    CAST(sum(arm * x) AS DECIMAL(38,2)) AS sx1
-           |  FROM base GROUP BY 1),
-           |hh AS MATERIALIZED (
-           |  SELECT g, x,
-           |    CAST(('0x' || substr(md5('rt' || '|' || '0' || '|' || k),
-           |      1, 12)) AS BIGINT) AS h
-           |  FROM base),
-           |lab AS (
-           |  SELECT g, b, x,
-           |    (h >> CAST(b AS INTEGER)) & 1 AS lb
-           |  FROM hh CROSS JOIN (SELECT unnest(range(32)) AS b)),
-           |rep AS (
-           |  SELECT g, b, CAST(sum(lb) AS BIGINT) AS nb,
-           |    CAST(sum(lb * x) AS DECIMAL(38,2)) AS sb
-           |  FROM lab GROUP BY 1, 2),
-           |d AS (
-           |  SELECT r.g, o.n, o.n1,
-           |    ${pround("CAST(o.sx1 AS DOUBLE) / CAST(o.n1 AS DOUBLE) - " +
-             "CAST(o.sx - o.sx1 AS DOUBLE) / CAST(o.n - o.n1 AS DOUBLE)", 6)}
-           |      AS d_obs,
-           |    ${pround("CAST(r.sb AS DOUBLE) / CAST(r.nb AS DOUBLE) - " +
-             "CAST(o.sx - r.sb AS DOUBLE) / CAST(o.n - r.nb AS DOUBLE)", 6)}
-           |      AS d_b
-           |  FROM rep r JOIN obs o ON o.g = r.g
-           |  WHERE r.nb > 0 AND r.nb < o.n),
-           |agg AS (
-           |  SELECT g, CAST(max(n) AS BIGINT) AS n,
-           |    CAST(max(n1) AS BIGINT) AS n1, max(d_obs) AS d_obs,
-           |    CAST(count(*) AS BIGINT) AS reps_used,
-           |    CAST(sum(CASE WHEN abs(d_b) >= abs(d_obs) THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS n_extreme
-           |  FROM d GROUP BY 1)
-           |SELECT g AS l_linestatus, n, n1, d_obs, reps_used, n_extreme,
-           |  ${pround("(CAST(n_extreme AS DOUBLE) + 1.0) / " +
-             "(CAST(reps_used AS DOUBLE) + 1.0)", 6)} AS p_value
-           |FROM agg""".stripMargin
-      },
-
-      // row_number-indexed daily series; HUGEINT autocovariance
-      // cross-multiplication mirrors the Spark DECIMAL(38,0) algebra;
-      // rho/terms pround6; the χ²₇ literal is SeriesTests.chi2Crit95(7)
-      "q361_ljung_box" ->
-        s"""WITH s AS (
-           |  SELECT event_type AS g, strftime(ts, '%Y-%m-%d') AS day,
-           |    CAST(count(*) AS BIGINT) AS y
-           |  FROM events GROUP BY 1, 2),
-           |i AS (
-           |  SELECT g, y, CAST(row_number() OVER (PARTITION BY g
-           |    ORDER BY day) AS BIGINT) AS t
-           |  FROM s),
-           |tot AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(y) AS HUGEINT) AS sy,
-           |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-           |  FROM i GROUP BY 1),
-           |lags AS (SELECT unnest(range(1, 8)) AS k),
-           |pl AS (
-           |  SELECT a.g, l.k,
-           |    CAST(sum(CAST(a.y AS HUGEINT) * b.y) AS HUGEINT) AS c,
-           |    CAST(sum(a.y) AS HUGEINT) AS head,
-           |    CAST(sum(b.y) AS HUGEINT) AS tail
-           |  FROM i a CROSS JOIN lags l
-           |  JOIN i b ON b.g = a.g AND b.t = a.t + l.k
-           |  GROUP BY 1, 2),
-           |rho AS (
-           |  SELECT pl.g, pl.k, tot.n,
-           |    CAST(tot.n AS HUGEINT) * tot.n * pl.c
-           |      - CAST(tot.n AS HUGEINT) * tot.sy * (pl.head + pl.tail)
-           |      + (tot.n - pl.k) * tot.sy * tot.sy AS covn2,
-           |    CAST(tot.n AS HUGEINT) * tot.n * tot.syy
-           |      - CAST(tot.n AS HUGEINT) * tot.sy * tot.sy AS varn2
-           |  FROM pl JOIN tot ON tot.g = pl.g),
-           |tm AS (
-           |  SELECT g, k, n,
-           |    ${pround("(CASE WHEN varn2 > 0 THEN " +
-             pround("CAST(covn2 AS DOUBLE) / CAST(varn2 AS DOUBLE)", 6) +
-             " ELSE 0.0 END) * (CASE WHEN varn2 > 0 THEN " +
-             pround("CAST(covn2 AS DOUBLE) / CAST(varn2 AS DOUBLE)", 6) +
-             " ELSE 0.0 END) / CAST(n - k AS DOUBLE)", 6)} AS term6
-           |  FROM rho),
-           |agg AS (
-           |  SELECT g, CAST(max(n) AS BIGINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS m_lags,
-           |    ${pround("CAST(max(n) AS DOUBLE) * " +
-             "(CAST(max(n) AS DOUBLE) + 2.0) * " +
-             "CAST(CAST(sum(CAST(term6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) " +
-             "AS DOUBLE)", 6)} AS q_stat
-           |  FROM tm GROUP BY 1)
-           |SELECT g AS event_type, n, m_lags, q_stat,
-           |  CAST(CASE WHEN q_stat >= 14.067140449340169 THEN 1 ELSE 0 END
-           |    AS BIGINT) AS reject
-           |FROM agg""".stripMargin,
-
-      // sign against the exact n·y > S cross-multiplication (equality
-      // counts below); E/Var products in HUGEINT, z pround6
-      "q362_runs_test" ->
-        s"""WITH s AS (
-           |  SELECT o_orderpriority AS g, strftime(o_orderdate, '%Y-%m-%d') AS d,
-           |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-           |      AS DECIMAL(18,2)) AS y
-           |  FROM orders GROUP BY 1, 2),
-           |w AS (
-           |  SELECT g, d, y,
-           |    CAST(count(*) OVER (PARTITION BY g) AS DECIMAL(19,0)) AS n,
-           |    CAST(sum(y) OVER (PARTITION BY g) AS DECIMAL(28,2)) AS sy
-           |  FROM s),
-           |sgn AS (
-           |  SELECT g, d,
-           |    CASE WHEN y * n > sy THEN 1 ELSE 0 END AS above
-           |  FROM w),
-           |fl AS (
-           |  SELECT g, above,
-           |    CASE WHEN lag(above) OVER (PARTITION BY g ORDER BY d)
-           |      IS NULL THEN 1
-           |      WHEN lag(above) OVER (PARTITION BY g ORDER BY d)
-           |        <> above THEN 1
-           |      ELSE 0 END AS flip
-           |  FROM sgn),
-           |agg AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(above) AS BIGINT) AS n_above,
-           |    CAST(sum(flip) AS BIGINT) AS runs
-           |  FROM fl GROUP BY 1),
-           |v AS (
-           |  SELECT g, n, n_above, runs,
-           |    CAST(2 AS HUGEINT) * n_above * (n - n_above) AS ern,
-           |    CAST(2 AS HUGEINT) * n_above * (n - n_above) *
-           |      (CAST(2 AS HUGEINT) * n_above * (n - n_above) - n) AS vn,
-           |    CAST(n AS HUGEINT) * n * (n - 1) AS vd
-           |  FROM agg)
-           |SELECT g AS o_orderpriority, n, n_above, runs,
-           |  CASE WHEN vd > 0 AND vn > 0 THEN
-           |    ${pround("(CAST(runs AS DOUBLE) - 1.0 - " +
-             "CAST(ern AS DOUBLE) / CAST(n AS DOUBLE)) / " +
-             "sqrt(CAST(vn AS DOUBLE) / CAST(vd AS DOUBLE))", 6)}
-           |    ELSE 0.0 END AS z
-           |FROM v""".stripMargin,
-
-      // doubled-midrank integer U_t; earliest argmax; the closing
-      // approximation's operand order mirrors SeriesTests.pettitt
-      "q363_pettitt" ->
-        s"""WITH s AS (
-           |  SELECT o_orderpriority AS g, strftime(o_orderdate, '%Y-%m-%d') AS d,
-           |    CAST(count(*) AS DECIMAL(18,2)) AS y
-           |  FROM orders GROUP BY 1, 2),
-           |r AS (
-           |  SELECT g, d,
-           |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n,
-           |    CAST(2 * rank() OVER (PARTITION BY g ORDER BY y)
-           |      + count(*) OVER (PARTITION BY g, y) - 1 AS BIGINT) AS mid2
-           |  FROM s),
-           |u AS (
-           |  SELECT g, d, n,
-           |    CAST(row_number() OVER (PARTITION BY g ORDER BY d)
-           |      AS BIGINT) AS t,
-           |    CAST(sum(mid2) OVER (PARTITION BY g ORDER BY d
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS w2
-           |  FROM r),
-           |uu AS (
-           |  SELECT g, d, n, t, w2 - t * (n + 1) AS u_t
-           |  FROM u WHERE t < n),
-           |best AS (
-           |  SELECT g, n, t, d, u_t,
-           |    row_number() OVER (PARTITION BY g
-           |      ORDER BY abs(u_t) DESC, t) AS rn
-           |  FROM uu)
-           |SELECT g AS o_orderpriority, n,
-           |  CAST(abs(u_t) AS BIGINT) AS k_stat, t AS t_star,
-           |  d AS ord_star,
-           |  ${pround("least(1.0, 2.0 * exp(-6.0 * CAST(u_t AS DOUBLE) * " +
-             "CAST(u_t AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * " +
-             "CAST(n AS DOUBLE) + CAST(n AS DOUBLE) * CAST(n AS DOUBLE))))", 6)}
-           |    AS p_approx
-           |FROM best WHERE rn = 1""".stripMargin,
-
-      // mean-centered deviations by exact n·x − S cross-multiplication;
-      // p6 deviations, then micro-unit HUGEINT moments with floored
-      // S²/n stations (p6 on squared-sum magnitudes saturates Spark's
-      // long-valued floor — the q380 lesson), Spark operand order in
-      // the closing F
-      "q358_levene" ->
-        s"""WITH base AS (
-           |  SELECT l_linestatus AS g, CAST(year(l_shipdate) AS BIGINT) AS a,
-           |    CAST(l_extendedprice AS DECIMAL(18,2)) AS x
-           |  FROM lineitem),
-           |arms AS (
-           |  SELECT g, a, CAST(count(*) AS BIGINT) AS na,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS sa
-           |  FROM base GROUP BY 1, 2),
-           |dev AS (
-           |  SELECT b.g, b.a,
-           |    ${pround("CAST(abs(b.x * CAST(ar.na AS DECIMAL(19,0)) - ar.sa)" +
-             " AS DOUBLE) / CAST(ar.na AS DOUBLE)", 6)} AS z6
-           |  FROM base b JOIN arms ar ON ar.g = b.g AND ar.a = b.a),
-           |pa AS (
-           |  SELECT g, a, CAST(count(*) AS BIGINT) AS na,
-           |    CAST(sum(CAST(CAST(z6 AS DECIMAL(18,6)) * 1000000
-           |      AS HUGEINT)) AS HUGEINT) AS szu,
-           |    CAST(sum(CAST(CAST(z6 AS DECIMAL(18,6)) * 1000000
-           |      AS HUGEINT) * CAST(CAST(z6 AS DECIMAL(18,6)) * 1000000
-           |      AS HUGEINT)) AS HUGEINT) AS szzu
-           |  FROM dev GROUP BY 1, 2),
-           |pb AS (SELECT g, na, szu, szzu, (szu * szu) // na AS bu FROM pa),
-           |cl AS (
-           |  SELECT g, CAST(sum(na) AS BIGINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS k_arms,
-           |    CAST(sum(szu) AS HUGEINT) AS tzu,
-           |    CAST(sum(szzu) AS HUGEINT) AS tzzu,
-           |    CAST(sum(bu) AS HUGEINT) AS bsu
-           |  FROM pb GROUP BY 1),
-           |c2 AS (
-           |  SELECT g, n, k_arms, tzzu, bsu, (tzu * tzu) // n AS t2n
-           |  FROM cl WHERE k_arms >= 2 AND n > k_arms)
-           |SELECT g AS l_linestatus, n, k_arms,
-           |  (k_arms - 1) AS df1, (n - k_arms) AS df2,
-           |  CASE WHEN tzzu - bsu = 0 THEN NULL ELSE
-           |    ${pround("(CAST(n - k_arms AS DOUBLE) * " +
-             "CAST(bsu - t2n AS DOUBLE)) / " +
-             "(CAST(k_arms - 1 AS DOUBLE) * " +
-             "CAST(tzzu - bsu AS DOUBLE))", 6)} END AS w_stat
-           |FROM c2""".stripMargin,
-
-      // per-arm exact moments -> p6 means/variances/weights; every
-      // cross-arm reduction is a DECIMAL sum of p6 values so
-      // accumulation order cannot show; arms with n < 2 or zero
-      // variance drop on both sides
-      "q359_welch_anova" ->
-        s"""WITH base AS (
-           |  SELECT c_mktsegment AS g, o_orderpriority AS a,
-           |    CAST(o_totalprice AS DECIMAL(18,2)) AS x
-           |  FROM orders JOIN customer ON o_custkey = c_custkey),
-           |arms0 AS (
-           |  SELECT g, a, CAST(count(*) AS BIGINT) AS na,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS sa,
-           |    CAST(sum(CAST(CAST(x AS DECIMAL(19,2)) *
-           |      CAST(x AS DECIMAL(19,2)) AS DECIMAL(38,4)))
-           |      AS DECIMAL(38,4)) AS qa
-           |  FROM base GROUP BY 1, 2 HAVING count(*) >= 2),
-           |arms1 AS (
-           |  SELECT g, a, na,
-           |    ${pround("CAST(sa AS DOUBLE) / CAST(na AS DOUBLE)", 6)} AS m6,
-           |    ${pround("(CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * " +
-             "CAST(sa AS DOUBLE) / CAST(na AS DOUBLE)) / " +
-             "(CAST(na AS DOUBLE) - 1.0)", 6)} AS v6
-           |  FROM arms0),
-           |arms2 AS (
-           |  SELECT g, a, na, m6, v6,
-           |    ${pround("CAST(na AS DOUBLE) / v6", 6)} AS w6
-           |  FROM arms1 WHERE v6 > 0.0),
-           |win AS (
-           |  SELECT g, a, na, m6, w6,
-           |    CAST(sum(CAST(w6 AS DECIMAL(18,6))) OVER (PARTITION BY g)
-           |      AS DECIMAL(38,6)) AS sw,
-           |    CAST(sum(CAST(CAST(w6 AS DECIMAL(19,6)) *
-           |      CAST(m6 AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      OVER (PARTITION BY g) AS DECIMAL(38,12)) AS swm,
-           |    CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS k
-           |  FROM arms2),
-           |terms AS (
-           |  SELECT g, na, m6, w6, sw, k,
-           |    ${pround("CAST(swm AS DOUBLE) / CAST(sw AS DOUBLE)", 6)}
-           |      AS grand6
-           |  FROM win WHERE k >= 2 AND sw > 0),
-           |t2 AS (
-           |  SELECT g, na, k,
-           |    ${pround("w6 * (m6 - grand6) * (m6 - grand6)", 6)} AS t6,
-           |    ${pround("(1.0 - w6 / CAST(sw AS DOUBLE)) * " +
-             "(1.0 - w6 / CAST(sw AS DOUBLE)) / (CAST(na AS DOUBLE) - 1.0)",
-             6)} AS u6
-           |  FROM terms),
-           |agg AS (
-           |  SELECT g, CAST(sum(na) AS BIGINT) AS n,
-           |    CAST(max(k) AS BIGINT) AS k_arms,
-           |    CAST(sum(CAST(t6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS st,
-           |    CAST(sum(CAST(u6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS su
-           |  FROM t2 GROUP BY 1)
-           |SELECT g AS c_mktsegment, n, k_arms,
-           |  ${pround("(CAST(st AS DOUBLE) / (CAST(k_arms AS DOUBLE) - 1.0))" +
-             " / (1.0 + 2.0 * (CAST(k_arms AS DOUBLE) - 2.0) / " +
-             "(CAST(k_arms AS DOUBLE) * CAST(k_arms AS DOUBLE) - 1.0) * " +
-             "CAST(su AS DOUBLE))", 6)} AS f_stat,
-           |  (k_arms - 1) AS df1,
-           |  CASE WHEN CAST(su AS DOUBLE) > 0.0 THEN
-           |    ${pround("(CAST(k_arms AS DOUBLE) * CAST(k_arms AS DOUBLE)" +
-             " - 1.0) / (3.0 * CAST(su AS DOUBLE))", 6)}
-           |    ELSE 0.0 END AS df2
-           |FROM agg""".stripMargin,
-
-      // the fan-out dominance-count shape mirrored: each value cell
-      // joins every target arm j >= a, one cumulative window per
-      // (group, j); moment ingredients and the Hollander-Wolfe
-      // tie-corrected variance in HUGEINT, the Spark operand order
-      "q360_jonckheere" ->
-        s"""WITH base AS (
-           |  SELECT l_returnflag AS g,
-           |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) // 2 AS a,
-           |    CAST(l_quantity AS DECIMAL(18,2)) AS v
-           |  FROM lineitem),
-           |cells AS (
-           |  SELECT g, a, v, CAST(count(*) AS BIGINT) AS c
-           |  FROM base GROUP BY 1, 2, 3),
-           |fan AS (
-           |  SELECT c.g, j.j, c.v,
-           |    CAST(sum(CASE WHEN c.a < j.j THEN c.c ELSE 0 END)
-           |      AS BIGINT) AS lc,
-           |    CAST(sum(CASE WHEN c.a = j.j THEN c.c ELSE 0 END)
-           |      AS BIGINT) AS sc
-           |  FROM cells c JOIN (SELECT unnest(range(0, 6)) AS j) j
-           |    ON j.j >= c.a
-           |  GROUP BY 1, 2, 3),
-           |ctr AS (
-           |  SELECT g, j, v, sc, lc,
-           |    COALESCE(CAST(sum(lc) OVER (PARTITION BY g, j ORDER BY v
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           |      AS BIGINT), 0) AS tlt
-           |  FROM fan),
-           |jt AS (
-           |  SELECT g, CAST(sum(CAST(sc AS HUGEINT) * (2 * tlt + lc))
-           |    AS HUGEINT) AS jt2
-           |  FROM ctr WHERE sc > 0 GROUP BY 1),
-           |pa AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS k_arms,
-           |    CAST(sum(ni) AS HUGEINT) AS n,
-           |    CAST(sum(CAST(ni AS HUGEINT) * ni) AS HUGEINT) AS sn2,
-           |    CAST(sum(CAST(ni AS HUGEINT) * (ni - 1) * (2 * ni + 5))
-           |      AS HUGEINT) AS sn25,
-           |    CAST(sum(CAST(ni AS HUGEINT) * (ni - 1)) AS HUGEINT) AS sn11,
-           |    CAST(sum(CAST(ni AS HUGEINT) * (ni - 1) * (ni - 2))
-           |      AS HUGEINT) AS sn12
-           |  FROM (SELECT g, a, CAST(sum(c) AS BIGINT) AS ni
-           |        FROM cells GROUP BY 1, 2)
-           |  GROUP BY 1),
-           |pv AS (
-           |  SELECT g,
-           |    CAST(sum(CAST(tv AS HUGEINT) * (tv - 1) * (2 * tv + 5))
-           |      AS HUGEINT) AS st25,
-           |    CAST(sum(CAST(tv AS HUGEINT) * (tv - 1)) AS HUGEINT) AS st11,
-           |    CAST(sum(CAST(tv AS HUGEINT) * (tv - 1) * (tv - 2))
-           |      AS HUGEINT) AS st12
-           |  FROM (SELECT g, v, CAST(sum(c) AS BIGINT) AS tv
-           |        FROM cells GROUP BY 1, 2)
-           |  GROUP BY 1),
-           |vv AS (
-           |  SELECT jt.g, pa.n, pa.k_arms, jt.jt2,
-           |    (pa.n * pa.n - pa.sn2) // 2 AS e2,
-           |    (CAST(pa.n AS DOUBLE) * (CAST(pa.n AS DOUBLE) - 1.0) *
-           |      (2.0 * CAST(pa.n AS DOUBLE) + 5.0)
-           |      - CAST(pa.sn25 AS DOUBLE) - CAST(pv.st25 AS DOUBLE)) / 72.0
-           |      + CAST(pa.sn12 AS DOUBLE) * CAST(pv.st12 AS DOUBLE) /
-           |        (36.0 * CAST(pa.n AS DOUBLE) *
-           |          (CAST(pa.n AS DOUBLE) - 1.0) *
-           |          (CAST(pa.n AS DOUBLE) - 2.0))
-           |      + CAST(pa.sn11 AS DOUBLE) * CAST(pv.st11 AS DOUBLE) /
-           |        (8.0 * CAST(pa.n AS DOUBLE) *
-           |          (CAST(pa.n AS DOUBLE) - 1.0)) AS vard
-           |  FROM jt JOIN pa ON pa.g = jt.g JOIN pv ON pv.g = jt.g
-           |  WHERE pa.k_arms >= 2)
-           |SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n, k_arms,
-           |  CAST(jt2 AS BIGINT) AS jt2, CAST(e2 AS BIGINT) AS e2,
-           |  CASE WHEN vard > 0.0 AND CAST(n AS DOUBLE) > 2.0 THEN
-           |    ${pround("(CAST(jt2 AS DOUBLE) - CAST(e2 AS DOUBLE)) / " +
-             "(2.0 * sqrt(vard))", 6)}
-           |    ELSE 0.0 END AS z
-           |FROM vv""".stripMargin,
-
-      // the BM25 constants are the SAME Scala doubles the Spark plan
-      // folds (shortest-repr round-trip), so both engines divide by
-      // bit-identical operands; df counted on matched docs
-      "q364_bm25" -> {
-        val k1 = 1.2; val b = 0.75
-        val cTop = (k1 + 1).toString
-        val cK = (k1 * (1 - b)).toString
-        val cB = (k1 * b).toString
-        s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |dd AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, t FROM d),
-           |tot AS (SELECT CAST(count(*) AS BIGINT) AS nd,
-           |  CAST(sum(dl) AS BIGINT) AS tl FROM dd),
-           |tm AS (
-           |  SELECT doc_id, dl, w, CAST(count(*) AS BIGINT) AS tf
-           |  FROM (SELECT doc_id, dl, unnest(t) AS w FROM dd)
-           |  WHERE w IN ('hash', 'join', 'stream') GROUP BY 1, 2, 3),
-           |dfs AS (SELECT w, CAST(count(*) AS BIGINT) AS df
-           |  FROM tm GROUP BY 1),
-           |sc AS (
-           |  SELECT tm.doc_id,
-           |    CAST(${pround("ln((CAST(nd AS DOUBLE) - CAST(df AS DOUBLE)" +
-             " + 0.5) / (CAST(df AS DOUBLE) + 0.5)) * " +
-             s"(CAST(tf AS DOUBLE) * $cTop) / " +
-             s"(CAST(tf AS DOUBLE) + $cK + $cB * " +
-             "(CAST(dl * nd AS DOUBLE) / CAST(tl AS DOUBLE)))", 6)}
-           |      AS DECIMAL(18,6)) AS c6
-           |  FROM tm JOIN dfs USING (w) CROSS JOIN tot)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-           |  CAST(CAST(sum(c6) AS DECIMAL(38,6)) AS DOUBLE) AS score
-           |FROM sc GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
-      },
-
-      // the oracle affords the per-block pair enumeration the Spark
-      // side avoids (lead()-window neighborhoods); same normalized
-      // keys, min-id representatives, binary key order
-      "q365_sorted_neighborhood" ->
-        s"""WITH keyed AS (
-           |  SELECT regexp_replace(lower(trim(p_name)), '[^a-z0-9 ]', '',
-           |      'g') AS key,
-           |    CAST(min(p_partkey) AS BIGINT) AS mid
-           |  FROM part WHERE p_name IS NOT NULL
-           |  GROUP BY 1 HAVING len(key) > 0),
-           |rn AS (
-           |  SELECT key, mid, substr(key, 1, 1) AS blk,
-           |    row_number() OVER (PARTITION BY substr(key, 1, 1)
-           |      ORDER BY key) AS r
-           |  FROM keyed)
-           |SELECT a.mid AS id_a, b.mid AS id_b, a.key AS key_a,
-           |  b.key AS key_b, CAST(b.r - a.r AS BIGINT) AS rank_gap,
-           |  CAST(levenshtein(a.key, b.key) AS BIGINT) AS dist
-           |FROM rn a JOIN rn b ON b.blk = a.blk AND b.r > a.r
-           |  AND b.r <= a.r + 5
-           |WHERE levenshtein(a.key, b.key) <= 3""".stripMargin,
-
-      // indicators fold per (group, key) first; Chapman estimate by
-      // exact floored HUGEINT division, SE the one p6 double
-      "q366_capture_recapture" ->
-        s"""WITH e AS (
-           |  SELECT event_type AS g, user_id AS k,
-           |    CASE WHEN (epoch_us(ts) // 86400000000) % 2 = 0
-           |      THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN (epoch_us(ts) // 86400000000) % 2 = 1
-           |      THEN 1 ELSE 0 END AS b
-           |  FROM events),
-           |pk AS (
-           |  SELECT g, k, CAST(max(a) AS BIGINT) AS ia,
-           |    CAST(max(b) AS BIGINT) AS ib
-           |  FROM e GROUP BY 1, 2),
-           |c AS (
-           |  SELECT g, CAST(sum(ia) AS BIGINT) AS n1,
-           |    CAST(sum(ib) AS BIGINT) AS n2,
-           |    CAST(sum(CASE WHEN ia = 1 AND ib = 1 THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS m
-           |  FROM pk WHERE ia = 1 OR ib = 1 GROUP BY 1)
-           |SELECT g AS event_type, n1, n2, m,
-           |  CASE WHEN m > 0 THEN
-           |    CAST((CAST(n1 + 1 AS HUGEINT) * (n2 + 1)) // (m + 1) - 1
-           |      AS BIGINT) END AS n_hat,
-           |  CASE WHEN m > 0 THEN
-           |    ${pround("sqrt(CAST(CAST(n1 + 1 AS HUGEINT) * (n2 + 1) * " +
-             "(n1 - m) * (n2 - m) AS DOUBLE) / " +
-             "CAST(CAST(m + 1 AS HUGEINT) * (m + 1) * (m + 2) AS DOUBLE))",
-             6)} END AS se
-           |FROM c""".stripMargin,
-
-      // zero-filled cells never materialize: item/person moments sum
-      // only present cells over the shared person universe N; p6
-      // variances, the Spark operand order in the closing alpha
-      "q367_cronbach_alpha" ->
-        s"""WITH base AS (
-           |  SELECT c_mktsegment AS g, o_custkey AS p,
-           |    'q' || CAST(quarter(o_orderdate) AS VARCHAR) AS i,
-           |    CAST(count(*) AS DECIMAL(18,2)) AS x
-           |  FROM orders JOIN customer ON o_custkey = c_custkey
-           |  WHERE year(o_orderdate) = 1995
-           |  GROUP BY 1, 2, 3),
-           |pp AS (SELECT g, p, CAST(sum(x) AS DECIMAL(38,2)) AS t
-           |  FROM base GROUP BY 1, 2),
-           |gt AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(t) AS DECIMAL(38,2)) AS st,
-           |    CAST(sum(CAST(CAST(t AS DECIMAL(19,2)) *
-           |      CAST(t AS DECIMAL(19,2)) AS DECIMAL(38,4)))
-           |      AS DECIMAL(38,4)) AS qt
-           |  FROM pp GROUP BY 1),
-           |pi AS (
-           |  SELECT g, i, CAST(sum(x) AS DECIMAL(38,2)) AS si,
-           |    CAST(sum(CAST(CAST(x AS DECIMAL(19,2)) *
-           |      CAST(x AS DECIMAL(19,2)) AS DECIMAL(38,4)))
-           |      AS DECIMAL(38,4)) AS qi
-           |  FROM base GROUP BY 1, 2),
-           |iv AS (
-           |  SELECT pi.g, gt.n, gt.st, gt.qt,
-           |    ${pround("(CAST(qi AS DOUBLE) - CAST(si AS DOUBLE) * " +
-             "CAST(si AS DOUBLE) / CAST(n AS DOUBLE)) / " +
-             "(CAST(n AS DOUBLE) - 1.0)", 6)} AS vi6
-           |  FROM pi JOIN gt USING (g)),
-           |ag AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS k_items,
-           |    CAST(max(n) AS BIGINT) AS n_persons,
-           |    max(st) AS st, max(qt) AS qt,
-           |    CAST(sum(CAST(vi6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sv
-           |  FROM iv GROUP BY 1),
-           |fin AS (
-           |  SELECT g, n_persons, k_items, sv,
-           |    ${pround("(CAST(qt AS DOUBLE) - CAST(st AS DOUBLE) * " +
-             "CAST(st AS DOUBLE) / CAST(n_persons AS DOUBLE)) / " +
-             "(CAST(n_persons AS DOUBLE) - 1.0)", 6)} AS vt6
-           |  FROM ag WHERE k_items >= 2 AND n_persons >= 2)
-           |SELECT g AS c_mktsegment, n_persons, k_items,
-           |  CASE WHEN vt6 > 0.0 THEN
-           |    ${pround("CAST(k_items AS DOUBLE) / " +
-             "(CAST(k_items AS DOUBLE) - 1.0) * " +
-             "(1.0 - CAST(sv AS DOUBLE) / vt6)", 6)}
-           |    END AS alpha
-           |FROM fin""".stripMargin,
-
-      // thresholds fanned before the aggregate; exact DECIMAL excess
-      // moments, p6 closings; NULL fit under 2 exceedances / zero s²
-      "q368_mean_excess" ->
-        s"""WITH fan AS (
-           |  SELECT l_returnflag AS g, u,
-           |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) -
-           |      CAST(u AS DECIMAL(18,2)) AS DECIMAL(18,2)) AS e
-           |  FROM lineitem CROSS JOIN
-           |    (SELECT unnest([20000.0, 40000.0, 60000.0, 80000.0]) AS u)
-           |  WHERE CAST(l_extendedprice AS DECIMAL(18,2)) > u),
-           |ag AS (
-           |  SELECT g, u, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(e) AS DECIMAL(38,2)) AS se,
-           |    CAST(sum(CAST(CAST(e AS DECIMAL(19,2)) *
-           |      CAST(e AS DECIMAL(19,2)) AS DECIMAL(38,4)))
-           |      AS DECIMAL(38,4)) AS sq
-           |  FROM fan GROUP BY 1, 2),
-           |m AS (
-           |  SELECT g, u, n,
-           |    ${pround("CAST(se AS DOUBLE) / CAST(n AS DOUBLE)", 6)} AS me,
-           |    CASE WHEN n >= 2 THEN
-           |      ${pround("(CAST(sq AS DOUBLE) - CAST(se AS DOUBLE) * " +
-             "CAST(se AS DOUBLE) / CAST(n AS DOUBLE)) / " +
-             "(CAST(n AS DOUBLE) - 1.0)", 6)} END AS s2
-           |  FROM ag)
-           |SELECT g AS l_returnflag, u, n AS n_exceed, me AS mean_excess,
-           |  CASE WHEN s2 > 0.0 THEN
-           |    ${pround("0.5 * (1.0 - me * me / s2)", 6)} END AS xi,
-           |  CASE WHEN s2 > 0.0 THEN
-           |    ${pround("0.5 * me * (me * me / s2 + 1.0)", 6)} END AS sigma
-           |FROM m""".stripMargin,
-
-      // exact HUGEINT pair counts; both ratios divide once, p6;
-      // Berger-Parker dominance by integer basis points
-      "q369_simpson_diversity" ->
-        s"""WITH c AS (
-           |  SELECT g, w, CAST(count(*) AS BIGINT) AS c
-           |  FROM (SELECT source AS g, unnest($toksSql) AS w
-           |        FROM documents WHERE source IS NOT NULL)
-           |  GROUP BY 1, 2),
-           |ag AS (
-           |  SELECT g, CAST(sum(c) AS HUGEINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS n_distinct,
-           |    CAST(sum(CAST(c AS HUGEINT) * (c - 1)) AS HUGEINT) AS num,
-           |    CAST(max(c) AS HUGEINT) AS top
-           |  FROM c GROUP BY 1)
-           |SELECT g AS source, CAST(n AS BIGINT) AS n_tokens, n_distinct,
-           |  CASE WHEN n > 1 THEN
-           |    ${pround("CAST(num AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE)",
-             6)} END AS simpson,
-           |  CASE WHEN num > 0 THEN
-           |    ${pround("CAST(n * (n - 1) AS DOUBLE) / CAST(num AS DOUBLE)",
-             6)} END AS inv_simpson,
-           |  CAST(top * 10000 // n AS BIGINT) AS top_share_bp
-           |FROM ag""".stripMargin,
-
-      // centered 7-point MA trend; detrended rows exact as 7y − Σ7;
-      // dow = DuckDB dayofweek+1 (the q225 convention)
-      "q370_seasonal_decompose" ->
-        s"""WITH s AS (
-           |  SELECT event_type AS g, strftime(ts, '%Y-%m-%d') AS day,
-           |    CAST(count(*) AS BIGINT) AS yc
-           |  FROM events GROUP BY 1, 2),
-           |b AS (
-           |  SELECT g, day,
-           |    CAST(dayofweek(CAST(day AS DATE)) AS BIGINT) + 1 AS dow,
-           |    CAST(yc AS DECIMAL(18,2)) AS y
-           |  FROM s),
-           |d7 AS (
-           |  SELECT g, dow, y,
-           |    count(*) OVER w AS c7,
-           |    CAST(sum(y) OVER w AS DECIMAL(28,2)) AS s7
-           |  FROM b WINDOW w AS (PARTITION BY g ORDER BY day
-           |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-           |det AS (
-           |  SELECT g, dow, CAST(y * 7 - s7 AS DECIMAL(38,2)) AS dd
-           |  FROM d7 WHERE c7 = 7),
-           |raw AS (
-           |  SELECT g, dow, CAST(count(*) AS BIGINT) AS n_obs,
-           |    ${pround("CAST(CAST(sum(dd) AS DECIMAL(38,2)) AS DOUBLE) / " +
-             "(7.0 * CAST(count(*) AS DOUBLE))", 6)} AS raw6
-           |  FROM det GROUP BY 1, 2),
-           |cen AS (
-           |  SELECT g, dow, n_obs, raw6,
-           |    ${pround("CAST(sum(CAST(raw6 AS DECIMAL(18,6))) " +
-             "OVER (PARTITION BY g) AS DOUBLE) / " +
-             "CAST(count(*) OVER (PARTITION BY g) AS DOUBLE)", 6)} AS m6
-           |  FROM raw)
-           |SELECT g AS event_type, dow, n_obs,
-           |  ${pround("raw6 - m6", 6)} AS seasonal
-           |FROM cen""".stripMargin,
-
-      // the q361 autocovariance algebra, rho exposed per lag
-      "q371_acf_table" ->
-        s"""WITH s AS (
-           |  SELECT event_type AS g, strftime(ts, '%Y-%m-%d') AS day,
-           |    CAST(count(*) AS BIGINT) AS y
-           |  FROM events GROUP BY 1, 2),
-           |i AS (
-           |  SELECT g, y, CAST(row_number() OVER (PARTITION BY g
-           |    ORDER BY day) AS BIGINT) AS t
-           |  FROM s),
-           |tot AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(y) AS HUGEINT) AS sy,
-           |    CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-           |  FROM i GROUP BY 1),
-           |lags AS (SELECT unnest(range(1, 15)) AS k),
-           |pl AS (
-           |  SELECT a.g, l.k,
-           |    CAST(sum(CAST(a.y AS HUGEINT) * b.y) AS HUGEINT) AS c,
-           |    CAST(sum(a.y) AS HUGEINT) AS head,
-           |    CAST(sum(b.y) AS HUGEINT) AS tail
-           |  FROM i a CROSS JOIN lags l
-           |  JOIN i b ON b.g = a.g AND b.t = a.t + l.k
-           |  GROUP BY 1, 2)
-           |SELECT pl.g AS event_type, pl.k, tot.n,
-           |  CASE WHEN CAST(tot.n AS HUGEINT) * tot.n * tot.syy
-           |      - CAST(tot.n AS HUGEINT) * tot.sy * tot.sy > 0 THEN
-           |    ${pround("CAST(CAST(tot.n AS HUGEINT) * tot.n * pl.c " +
-             "- CAST(tot.n AS HUGEINT) * tot.sy * (pl.head + pl.tail) " +
-             "+ (tot.n - pl.k) * tot.sy * tot.sy AS DOUBLE) / " +
-             "CAST(CAST(tot.n AS HUGEINT) * tot.n * tot.syy " +
-             "- CAST(tot.n AS HUGEINT) * tot.sy * tot.sy AS DOUBLE)", 6)}
-           |    ELSE 0.0 END AS rho
-           |FROM pl JOIN tot ON tot.g = pl.g""".stripMargin,
-
-      // full blocks only; in-block range and variance exact by the
-      // scaled m·cum − (k+1)·S / m·Q − S² algebra (DECIMAL(19) operand
-      // casts for the int128 multiply); order-free p6 reductions; one
-      // closing least-squares division
-      "q372_hurst" ->
-        s"""WITH s AS (
-           |  SELECT o_orderpriority AS g,
-           |    strftime(o_orderdate, '%Y-%m-%d') AS day,
-           |    CAST(count(*) AS DECIMAL(18,2)) AS y
-           |  FROM orders GROUP BY 1, 2),
-           |i AS (
-           |  SELECT g, y, CAST(row_number() OVER (PARTITION BY g
-           |    ORDER BY day) - 1 AS BIGINT) AS t
-           |  FROM s),
-           |np AS (SELECT g, CAST(count(*) AS BIGINT) AS n_points
-           |  FROM i GROUP BY 1),
-           |fan AS (
-           |  SELECT g, y, t, m, t // m AS blk, t % m AS k
-           |  FROM i CROSS JOIN (SELECT unnest([8, 16, 32, 64]) AS m)),
-           |wb AS (
-           |  SELECT g, m, blk, k, y,
-           |    count(*) OVER b AS cnt,
-           |    CAST(sum(y) OVER b AS DECIMAL(28,2)) AS sb,
-           |    CAST(sum(CAST(CAST(y AS DECIMAL(19,2)) *
-           |      CAST(y AS DECIMAL(19,2)) AS DECIMAL(38,4))) OVER b
-           |      AS DECIMAL(38,4)) AS qb,
-           |    CAST(sum(y) OVER (PARTITION BY g, m, blk ORDER BY k
-           |      ROWS UNBOUNDED PRECEDING) AS DECIMAL(28,2)) AS cum
-           |  FROM fan WINDOW b AS (PARTITION BY g, m, blk)),
-           |dd AS (
-           |  SELECT g, m, blk, sb, qb,
-           |    CAST(CAST(cum AS DECIMAL(19,2)) * m -
-           |      (k + 1) * CAST(sb AS DECIMAL(19,2)) AS DECIMAL(38,2)) AS d
-           |  FROM wb WHERE cnt = m),
-           |pb AS (
-           |  SELECT g, m, blk, max(d) AS dmax, min(d) AS dmin,
-           |    max(sb) AS sb, max(qb) AS qb
-           |  FROM dd GROUP BY 1, 2, 3),
-           |pv AS (
-           |  SELECT g, m, dmax, dmin,
-           |    CAST(CAST(qb AS DECIMAL(19,4)) * m -
-           |      CAST(CAST(sb AS DECIMAL(19,2)) * CAST(sb AS DECIMAL(19,2))
-           |      AS DECIMAL(38,4)) AS DECIMAL(38,4)) AS vm2
-           |  FROM pb),
-           |rs AS (
-           |  SELECT g, m,
-           |    ${pround("CAST(dmax - dmin AS DOUBLE) / " +
-             "sqrt(CAST(vm2 AS DOUBLE))", 6)} AS rs6
-           |  FROM pv WHERE vm2 > 0),
-           |ps AS (
-           |  SELECT g, m, CAST(count(*) AS BIGINT) AS nb,
-           |    CAST(sum(CAST(rs6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS srs
-           |  FROM rs GROUP BY 1, 2),
-           |mn AS (
-           |  SELECT g, m,
-           |    ${pround("CAST(srs AS DOUBLE) / CAST(nb AS DOUBLE)", 6)}
-           |      AS mean6
-           |  FROM ps),
-           |xy AS (
-           |  SELECT g, ${pround("ln(CAST(m AS DOUBLE))", 6)} AS x6,
-           |    ${pround("ln(mean6)", 6)} AS y6
-           |  FROM mn WHERE mean6 > 0.0),
-           |ft AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n_sizes,
-           |    CAST(sum(CAST(x6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sx,
-           |    CAST(sum(CAST(y6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sy,
-           |    CAST(sum(CAST(CAST(x6 AS DECIMAL(19,6)) *
-           |      CAST(y6 AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      AS DECIMAL(38,12)) AS sxy,
-           |    CAST(sum(CAST(CAST(x6 AS DECIMAL(19,6)) *
-           |      CAST(x6 AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      AS DECIMAL(38,12)) AS sxx
-           |  FROM xy GROUP BY 1 HAVING count(*) >= 2)
-           |SELECT ft.g AS o_orderpriority, np.n_points, ft.n_sizes,
-           |  ${pround("(CAST(n_sizes AS DOUBLE) * CAST(sxy AS DOUBLE) - " +
-             "CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / " +
-             "(CAST(n_sizes AS DOUBLE) * CAST(sxx AS DOUBLE) - " +
-             "CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))", 6)} AS hurst
-           |FROM ft JOIN np ON np.g = ft.g""".stripMargin,
-
-      // three entropies from one cell table; p6 per-level terms in
-      // order-free DECIMAL sums, ln the one transcendental per term
-      "q374_theil_u" -> {
-        def ent(src: String, out: String) =
-          s"""$out AS (
-             |  SELECT c.g, ${pround("CAST(CAST(sum(CAST(" +
-               pround("CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE) * " +
-                 "ln(CAST(n.n AS DOUBLE) / CAST(c AS DOUBLE))", 6) +
-               " AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE)", 6)} AS h
-             |  FROM $src c JOIN n ON n.g = c.g GROUP BY 1)""".stripMargin
-        s"""WITH cells AS (
-           |  SELECT c_mktsegment AS g, o_orderpriority AS x,
-           |    o_orderstatus AS y, CAST(count(*) AS BIGINT) AS c
-           |  FROM orders JOIN customer ON o_custkey = c_custkey
-           |  GROUP BY 1, 2, 3),
-           |n AS (SELECT g, CAST(sum(c) AS BIGINT) AS n
-           |  FROM cells GROUP BY 1),
-           |mx AS (SELECT g, x, CAST(sum(c) AS BIGINT) AS c
-           |  FROM cells GROUP BY 1, 2),
-           |my AS (SELECT g, y, CAST(sum(c) AS BIGINT) AS c
-           |  FROM cells GROUP BY 1, 2),
-           |${ent("mx", "hx")},
-           |${ent("my", "hy")},
-           |${ent("cells", "hxy")}
-           |SELECT n.g AS c_mktsegment, n.n, hx.h AS h_x, hy.h AS h_y,
-           |  CASE WHEN hx.h > 0.0 THEN
-           |    ${pround("(hx.h + hy.h - hxy.h) / hx.h", 6)}
-           |    END AS u_x_given_y,
-           |  CASE WHEN hy.h > 0.0 THEN
-           |    ${pround("(hx.h + hy.h - hxy.h) / hy.h", 6)}
-           |    END AS u_y_given_x,
-           |  CASE WHEN hx.h + hy.h > 0.0 THEN
-           |    ${pround("2.0 * (hx.h + hy.h - hxy.h) / (hx.h + hy.h)", 6)}
-           |    END AS u_sym
-           |FROM n JOIN hx ON hx.g = n.g JOIN hy ON hy.g = n.g
-           |JOIN hxy ON hxy.g = n.g""".stripMargin
-      },
-
-      // weight denominators cancel: kappa_w = 1 − N·Σ|i−j|n_ij /
-      // Σ|i−j|r_i·c_j, both operands exact HUGEINT
-      "q375_weighted_kappa" ->
-        s"""WITH b AS (
-           |  SELECT l_returnflag AS g,
-           |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) // 2 AS a,
-           |    CAST(floor(l_tax * 100 + 0.5) AS BIGINT) // 2 AS b2
-           |  FROM lineitem),
-           |cells AS (SELECT g, a, b2, CAST(count(*) AS BIGINT) AS c
-           |  FROM b GROUP BY 1, 2, 3),
-           |obs AS (
-           |  SELECT g, CAST(sum(c) AS HUGEINT) AS n,
-           |    CAST(sum(CASE WHEN a = b2 THEN c ELSE 0 END) AS BIGINT)
-           |      AS n_agree,
-           |    CAST(sum(CAST(abs(a - b2) AS HUGEINT) * c) AS HUGEINT) AS od
-           |  FROM cells GROUP BY 1),
-           |ra AS (SELECT g, a, CAST(sum(c) AS HUGEINT) AS ri
-           |  FROM cells GROUP BY 1, 2),
-           |cb AS (SELECT g, b2, CAST(sum(c) AS HUGEINT) AS cj
-           |  FROM cells GROUP BY 1, 2),
-           |ex AS (
-           |  SELECT ra.g,
-           |    CAST(sum(CAST(abs(ra.a - cb.b2) AS HUGEINT) * ra.ri * cb.cj)
-           |      AS HUGEINT) AS ed
-           |  FROM ra JOIN cb ON cb.g = ra.g GROUP BY 1)
-           |SELECT obs.g AS l_returnflag, CAST(obs.n AS BIGINT) AS n,
-           |  n_agree,
-           |  CASE WHEN ed > 0 THEN
-           |    ${pround("1.0 - CAST(obs.n AS DOUBLE) * " +
-             "CAST(od AS DOUBLE) / CAST(ed AS DOUBLE)", 6)}
-           |    END AS kappa_w
-           |FROM obs JOIN ex ON ex.g = obs.g""".stripMargin,
-
-      // common items only (every rater scored them); doubled midranks
-      // per rater; the tie-corrected Legendre form in exact HUGEINT
-      "q376_kendalls_w" ->
-        s"""WITH base AS (
-           |  SELECT CAST(dayofweek(CAST(ts AS DATE)) AS BIGINT) + 1 AS g,
-           |    event_type AS r, CAST(hour(ts) AS BIGINT) AS i,
-           |    CAST(count(*) AS DECIMAL(38,2)) AS sc
-           |  FROM events GROUP BY 1, 2, 3),
-           |m AS (SELECT g, CAST(count(DISTINCT r) AS BIGINT) AS m
-           |  FROM base GROUP BY 1),
-           |common AS (
-           |  SELECT c.g, c.i FROM
-           |    (SELECT g, i, CAST(count(*) AS BIGINT) AS nr
-           |     FROM base GROUP BY 1, 2) c
-           |  JOIN m ON m.g = c.g WHERE c.nr = m.m),
-           |kept AS (SELECT base.* FROM base JOIN common
-           |  ON common.g = base.g AND common.i = base.i),
-           |rk AS (
-           |  SELECT g, r, i, sc,
-           |    CAST(2 * rank() OVER (PARTITION BY g, r ORDER BY sc)
-           |      + count(*) OVER (PARTITION BY g, r, sc) - 1 AS BIGINT)
-           |      AS mid2
-           |  FROM kept),
-           |r2 AS (
-           |  SELECT g, CAST(count(*) AS HUGEINT) AS n_items,
-           |    CAST(sum(CAST(r2i AS HUGEINT) * r2i) AS HUGEINT) AS sr2
-           |  FROM (SELECT g, i, CAST(sum(mid2) AS BIGINT) AS r2i
-           |        FROM rk GROUP BY 1, 2)
-           |  GROUP BY 1),
-           |tt AS (
-           |  SELECT g, CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT)
-           |    AS tt
-           |  FROM (SELECT g, r, sc, CAST(count(*) AS BIGINT) AS t
-           |        FROM rk GROUP BY 1, 2, 3)
-           |  GROUP BY 1),
-           |fin AS (
-           |  SELECT r2.g, m.m, r2.n_items,
-           |    3 * r2.sr2 - 3 * CAST(m.m AS HUGEINT) * m.m * r2.n_items *
-           |      (r2.n_items + 1) * (r2.n_items + 1) AS num,
-           |    CAST(m.m AS HUGEINT) * m.m * r2.n_items *
-           |      (r2.n_items * r2.n_items - 1) - m.m * tt.tt AS den
-           |  FROM r2 JOIN m ON m.g = r2.g JOIN tt ON tt.g = r2.g)
-           |SELECT g AS dow, CAST(m AS BIGINT) AS m_raters,
-           |  CAST(n_items AS BIGINT) AS n_items,
-           |  CASE WHEN den > 0 THEN
-           |    ${pround("CAST(num AS DOUBLE) / CAST(den AS DOUBLE)", 6)}
-           |    END AS w
-           |FROM fin""".stripMargin,
-
-      // phrase boundaries by the stopword-indicator cumsum (1-based
-      // positions here, 0-based in Spark — only the ORDER matters);
-      // word scores exact-rational p6, phrase scores DECIMAL sums of
-      // the member-word scores (duplicates within a phrase count)
-      "q377_rake_keywords" ->
-        s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |pos AS (
-           |  SELECT doc_id, pos, t[pos] AS w
-           |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS pos
-           |        FROM d)),
-           |st AS (
-           |  SELECT doc_id, pos, w,
-           |    CASE WHEN list_contains($stopwordList, w) THEN 1 ELSE 0 END
-           |      AS isstop
-           |  FROM pos),
-           |ph AS (
-           |  SELECT doc_id, pos, w, isstop,
-           |    CAST(sum(isstop) OVER (PARTITION BY doc_id ORDER BY pos
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS phid
-           |  FROM st),
-           |phr AS (
-           |  SELECT doc_id, phid,
-           |    string_agg(w, ' ' ORDER BY pos) AS phrase,
-           |    CAST(count(*) AS BIGINT) AS len
-           |  FROM ph WHERE isstop = 0 GROUP BY 1, 2),
-           |wstat AS (
-           |  SELECT w, CAST(count(*) AS BIGINT) AS freq,
-           |    CAST(sum(len) AS BIGINT) AS deg
-           |  FROM (SELECT unnest(string_split(phrase, ' ')) AS w, len
-           |        FROM phr)
-           |  GROUP BY 1),
-           |wsc AS (
-           |  SELECT w, ${pround("CAST(deg AS DOUBLE) / CAST(freq AS DOUBLE)",
-             6)} AS ws6
-           |  FROM wstat),
-           |dp AS (
-           |  SELECT phrase, CAST(max(len) AS BIGINT) AS n_words,
-           |    CAST(count(*) AS BIGINT) AS n_occurrences
-           |  FROM phr GROUP BY 1 HAVING max(len) >= 2),
-           |sc AS (
-           |  SELECT phrase, CAST(max(n_words) AS BIGINT) AS n_words,
-           |    CAST(max(n_occurrences) AS BIGINT) AS n_occurrences,
-           |    CAST(CAST(sum(CAST(ws6 AS DECIMAL(18,6))) AS DECIMAL(38,6))
-           |      AS DOUBLE) AS score
-           |  FROM (SELECT phrase, n_words, n_occurrences,
-           |          unnest(string_split(phrase, ' ')) AS w
-           |        FROM dp) x
-           |  JOIN wsc USING (w) GROUP BY 1)
-           |SELECT phrase, n_words, n_occurrences, score
-           |FROM sc ORDER BY score DESC, phrase LIMIT 20""".stripMargin,
-
-      // id-proportional checkpoints by exact integer division; V from
-      // token first-ids, N from per-doc totals; DISTINCT (x, y) pairs
-      // fit once (small ids repeat checkpoints); the hurst fit shape
-      "q378_heaps_law" ->
-        s"""WITH d AS (
-           |  SELECT source AS g, doc_id AS id, $toksSql AS t
-           |  FROM documents WHERE source IS NOT NULL),
-           |mx AS (SELECT g, CAST(max(id) AS BIGINT) AS mx FROM d GROUP BY 1),
-           |cps AS (
-           |  SELECT g, i, mx * i // 8 AS c
-           |  FROM mx CROSS JOIN (SELECT unnest(range(1, 9)) AS i)),
-           |fs AS (
-           |  SELECT g, w, CAST(min(id) AS BIGINT) AS fid
-           |  FROM (SELECT g, id, unnest(t) AS w FROM d) GROUP BY 1, 2),
-           |v AS (
-           |  SELECT fs.g, cps.c, CAST(count(*) AS BIGINT) AS v
-           |  FROM fs JOIN cps ON cps.g = fs.g WHERE fs.fid <= cps.c
-           |  GROUP BY 1, 2),
-           |pd AS (SELECT g, id, CAST(len(t) AS BIGINT) AS n FROM d),
-           |nt AS (
-           |  SELECT pd.g, cps.c, CAST(sum(n) AS BIGINT) AS nt
-           |  FROM pd JOIN cps ON cps.g = pd.g WHERE pd.id <= cps.c
-           |  GROUP BY 1, 2),
-           |xy AS (
-           |  SELECT DISTINCT v.g,
-           |    ${pround("ln(CAST(nt AS DOUBLE))", 6)} AS x6,
-           |    ${pround("ln(CAST(v AS DOUBLE))", 6)} AS y6
-           |  FROM v JOIN nt ON nt.g = v.g AND nt.c = v.c
-           |  WHERE v > 0 AND nt > 0),
-           |ft AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n_checkpoints,
-           |    CAST(sum(CAST(x6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sx,
-           |    CAST(sum(CAST(y6 AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS sy,
-           |    CAST(sum(CAST(CAST(x6 AS DECIMAL(19,6)) *
-           |      CAST(y6 AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      AS DECIMAL(38,12)) AS sxy,
-           |    CAST(sum(CAST(CAST(x6 AS DECIMAL(19,6)) *
-           |      CAST(x6 AS DECIMAL(19,6)) AS DECIMAL(38,12)))
-           |      AS DECIMAL(38,12)) AS sxx
-           |  FROM xy GROUP BY 1 HAVING count(*) >= 2),
-           |bt AS (
-           |  SELECT g, n_checkpoints, sx, sy,
-           |    ${pround("(CAST(n_checkpoints AS DOUBLE) * " +
-             "CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * " +
-             "CAST(sy AS DOUBLE)) / (CAST(n_checkpoints AS DOUBLE) * " +
-             "CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * " +
-             "CAST(sx AS DOUBLE))", 6)} AS beta
-           |  FROM ft)
-           |SELECT g AS source, n_checkpoints, beta,
-           |  ${pround("exp((CAST(sy AS DOUBLE) - beta * " +
-             "CAST(sx AS DOUBLE)) / CAST(n_checkpoints AS DOUBLE))", 6)}
-           |    AS k_coef
-           |FROM bt""".stripMargin,
-
-      // between/within sums of squares in exact INTEGER cent² units
-      // with floored S²/n stations (HUGEINT // — p6 on squared-sum
-      // magnitudes saturates Spark's long-valued floor)
-      "q380_eta_squared" ->
-        s"""WITH b AS (
-           |  SELECT l_linestatus AS g,
-           |    CAST(floor(l_discount * 100 + 0.5) AS BIGINT) // 2 AS v,
-           |    CAST(l_extendedprice AS DECIMAL(18,2)) AS x
-           |  FROM lineitem),
-           |lv AS (
-           |  SELECT g, v, CAST(count(*) AS BIGINT) AS ni,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS si,
-           |    CAST(sum(CAST(x * 100 AS HUGEINT) *
-           |      CAST(x * 100 AS HUGEINT)) AS HUGEINT) AS qi
-           |  FROM b GROUP BY 1, 2),
-           |l2 AS (
-           |  SELECT g, ni, si, qi,
-           |    (CAST(si * 100 AS HUGEINT) * CAST(si * 100 AS HUGEINT))
-           |      // ni AS bu
-           |  FROM lv),
-           |ag AS (
-           |  SELECT g, CAST(sum(ni) AS BIGINT) AS n,
-           |    CAST(count(*) AS BIGINT) AS k_levels,
-           |    CAST(sum(si) AS DECIMAL(38,2)) AS s,
-           |    CAST(sum(qi) AS HUGEINT) AS q,
-           |    CAST(sum(bu) AS HUGEINT) AS bs
-           |  FROM l2 GROUP BY 1),
-           |a2 AS (
-           |  SELECT g, n, k_levels, q, bs,
-           |    (CAST(s * 100 AS HUGEINT) * CAST(s * 100 AS HUGEINT)) // n
-           |      AS s2n
-           |  FROM ag)
-           |SELECT g AS l_linestatus, n, k_levels,
-           |  CASE WHEN (q - s2n) > 0 THEN
-           |    ${pround("CAST(bs - s2n AS DOUBLE) / CAST(q - s2n AS DOUBLE)",
-             6)}
-           |    END AS eta_sq
-           |FROM a2""".stripMargin,
-
-      // features unpivot by UNION ALL (the Spark stack's mirror);
-      // IG = H(T) + H(F) − H(F,T) from the q374 entropy stations
-      "q381_info_gain" -> {
-        def ent(src: String, out: String) =
-          s"""$out AS (
-             |  SELECT c.f, ${pround("CAST(CAST(sum(CAST(" +
-               pround("CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE) * " +
-                 "ln(CAST(n.n AS DOUBLE) / CAST(c AS DOUBLE))", 6) +
-               " AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE)", 6)} AS h
-             |  FROM $src c JOIN n ON n.f = c.f GROUP BY 1)""".stripMargin
-        s"""WITH j AS (
-           |  SELECT o_orderstatus AS t, o_orderpriority AS pri,
-           |    c_mktsegment AS seg,
-           |    CAST(year(o_orderdate) AS VARCHAR) AS yr
-           |  FROM orders JOIN customer ON o_custkey = c_custkey),
-           |stacked AS (
-           |  SELECT t, 'o_orderpriority' AS f, pri AS v FROM j
-           |  UNION ALL SELECT t, 'c_mktsegment', seg FROM j
-           |  UNION ALL SELECT t, 'yr', yr FROM j),
-           |cells AS (SELECT f, v, t, CAST(count(*) AS BIGINT) AS c
-           |  FROM stacked GROUP BY 1, 2, 3),
-           |n AS (SELECT f, CAST(sum(c) AS BIGINT) AS n
-           |  FROM cells GROUP BY 1),
-           |mt AS (SELECT f, t, CAST(sum(c) AS BIGINT) AS c
-           |  FROM cells GROUP BY 1, 2),
-           |mv AS (SELECT f, v, CAST(sum(c) AS BIGINT) AS c
-           |  FROM cells GROUP BY 1, 2),
-           |${ent("mt", "ht")},
-           |${ent("mv", "hf")},
-           |${ent("cells", "hj")},
-           |ig AS (
-           |  SELECT n.f, n.n, ht.h AS h_target,
-           |    ${pround("ht.h + hf.h - hj.h", 6)} AS info_gain, hf.h
-           |  FROM n JOIN ht ON ht.f = n.f JOIN hf ON hf.f = n.f
-           |  JOIN hj ON hj.f = n.f)
-           |SELECT f AS feature, n, h_target, info_gain,
-           |  CASE WHEN h > 0.0 THEN ${pround("info_gain / h", 6)}
-           |    END AS gain_ratio
-           |FROM ig""".stripMargin
-      },
-
-      // common-basket items only; p6 unit prices; (18,6)x(19,2)
-      // products keep the exact scale-8 both engines
-      "q382_price_index" ->
-        s"""WITH cells AS (
-           |  SELECT l_returnflag AS g, l_partkey AS i,
-           |    CASE WHEN year(l_shipdate) >= 1995 THEN 1 ELSE 0 END AS e,
-           |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-           |      AS DECIMAL(38,2)) AS rev,
-           |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-           |      AS DECIMAL(38,2)) AS qty
-           |  FROM lineitem GROUP BY 1, 2, 3),
-           |c2 AS (
-           |  SELECT g, i, e, qty,
-           |    ${pround("CAST(rev AS DOUBLE) / CAST(qty AS DOUBLE)", 6)}
-           |      AS p6
-           |  FROM cells WHERE qty > 0),
-           |b AS (SELECT g, i, p6 AS p0, qty AS q0 FROM c2 WHERE e = 0),
-           |c AS (SELECT g, i, p6 AS p1, qty AS q1 FROM c2 WHERE e = 1),
-           |j AS (SELECT b.g, b.i, p0, q0, p1, q1
-           |  FROM b JOIN c ON c.g = b.g AND c.i = b.i),
-           |ag AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n_items,
-           |    CAST(sum(CAST(CAST(p1 AS DECIMAL(18,6)) *
-           |      CAST(q0 AS DECIMAL(19,2)) AS DECIMAL(38,8)))
-           |      AS DECIMAL(38,8)) AS lnum,
-           |    CAST(sum(CAST(CAST(p0 AS DECIMAL(18,6)) *
-           |      CAST(q0 AS DECIMAL(19,2)) AS DECIMAL(38,8)))
-           |      AS DECIMAL(38,8)) AS lden,
-           |    CAST(sum(CAST(CAST(p1 AS DECIMAL(18,6)) *
-           |      CAST(q1 AS DECIMAL(19,2)) AS DECIMAL(38,8)))
-           |      AS DECIMAL(38,8)) AS pnum,
-           |    CAST(sum(CAST(CAST(p0 AS DECIMAL(18,6)) *
-           |      CAST(q1 AS DECIMAL(19,2)) AS DECIMAL(38,8)))
-           |      AS DECIMAL(38,8)) AS pden
-           |  FROM j GROUP BY 1),
-           |fin AS (
-           |  SELECT g, n_items,
-           |    ${pround("CAST(lnum AS DOUBLE) / CAST(lden AS DOUBLE)", 6)}
-           |      AS laspeyres,
-           |    ${pround("CAST(pnum AS DOUBLE) / CAST(pden AS DOUBLE)", 6)}
-           |      AS paasche
-           |  FROM ag WHERE lden > 0 AND pden > 0)
-           |SELECT g AS l_returnflag, n_items, laspeyres, paasche,
-           |  ${pround("sqrt(laspeyres * paasche)", 6)} AS fisher
-           |FROM fin""".stripMargin,
-
-      // the q357 randomization machinery on (type|dow) families, then
-      // BH/Holm/q-values by exact HUGEINT micro-unit comparisons
-      "q383_multiple_testing" -> {
-        s"""WITH base AS (
-           |  SELECT event_type || '|' ||
-           |      CAST(CAST(dayofweek(CAST(ts AS DATE)) AS BIGINT) + 1
-           |        AS VARCHAR) AS g,
-           |    CAST(event_id AS VARCHAR) AS k,
-           |    CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS arm,
-           |    CAST(value AS DECIMAL(18,2)) AS x
-           |  FROM events),
-           |obs AS (
-           |  SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(arm) AS BIGINT) AS n1,
-           |    CAST(sum(x) AS DECIMAL(38,2)) AS sx,
-           |    CAST(sum(arm * x) AS DECIMAL(38,2)) AS sx1
-           |  FROM base GROUP BY 1),
-           |hh AS MATERIALIZED (
-           |  SELECT g, x,
-           |    CAST(('0x' || substr(md5('rt' || '|' || '0' || '|' || k),
-           |      1, 12)) AS BIGINT) AS h
-           |  FROM base),
-           |lab AS (
-           |  SELECT g, b, x,
-           |    (h >> CAST(b AS INTEGER)) & 1 AS lb
-           |  FROM hh CROSS JOIN (SELECT unnest(range(32)) AS b)),
-           |rep AS (
-           |  SELECT g, b, CAST(sum(lb) AS BIGINT) AS nb,
-           |    CAST(sum(lb * x) AS DECIMAL(38,2)) AS sb
-           |  FROM lab GROUP BY 1, 2),
-           |dd AS (
-           |  SELECT r.g, o.n, o.n1,
-           |    ${pround("CAST(o.sx1 AS DOUBLE) / CAST(o.n1 AS DOUBLE) - " +
-             "CAST(o.sx - o.sx1 AS DOUBLE) / CAST(o.n - o.n1 AS DOUBLE)", 6)}
-           |      AS d_obs,
-           |    ${pround("CAST(r.sb AS DOUBLE) / CAST(r.nb AS DOUBLE) - " +
-             "CAST(o.sx - r.sb AS DOUBLE) / CAST(o.n - r.nb AS DOUBLE)", 6)}
-           |      AS d_b
-           |  FROM rep r JOIN obs o ON o.g = r.g
-           |  WHERE r.nb > 0 AND r.nb < o.n),
-           |pv AS (
-           |  SELECT g,
-           |    ${pround("(CAST(sum(CASE WHEN abs(d_b) >= abs(d_obs) " +
-             "THEN 1 ELSE 0 END) AS DOUBLE) + 1.0) / " +
-             "(CAST(count(*) AS DOUBLE) + 1.0)", 6)} AS p_value
-           |  FROM dd GROUP BY 1),
-           |split_g AS (
-           |  SELECT string_split(g, '|')[1] AS family,
-           |    string_split(g, '|')[2] AS dow, p_value
-           |  FROM pv),
-           |rk AS (
-           |  SELECT family, dow, p_value,
-           |    CAST(p_value * 1000000 AS HUGEINT) AS pu,
-           |    CAST(row_number() OVER (PARTITION BY family
-           |      ORDER BY CAST(p_value * 1000000 AS HUGEINT), dow)
-           |      AS BIGINT) AS r,
-           |    CAST(count(*) OVER (PARTITION BY family) AS BIGINT) AS m
-           |  FROM split_g),
-           |st AS (
-           |  SELECT family, dow, p_value, pu, r, m,
-           |    CASE WHEN pu * m <= r * 50000 THEN r ELSE 0 END AS bhok,
-           |    CASE WHEN pu * (m - r + 1) <= 50000 THEN 1 ELSE 0 END
-           |      AS hok,
-           |    least((pu * m) // r, 1000000) AS qu
-           |  FROM rk),
-           |fin AS (
-           |  SELECT family, dow, p_value, r, m,
-           |    max(bhok) OVER (PARTITION BY family) AS cut,
-           |    min(hok) OVER (PARTITION BY family ORDER BY pu, dow
-           |      ROWS UNBOUNDED PRECEDING) AS holmall,
-           |    min(qu) OVER (PARTITION BY family ORDER BY pu, dow
-           |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS qmin
-           |  FROM st)
-           |SELECT family, dow, p_value, r AS rank, m,
-           |  CAST(CASE WHEN r <= cut THEN 1 ELSE 0 END AS BIGINT)
-           |    AS bh_reject,
-           |  CAST(CASE WHEN holmall = 1 THEN 1 ELSE 0 END AS BIGINT)
-           |    AS holm_reject,
-           |  CAST(qmin AS DOUBLE) / 1000000.0 AS q_value
-           |FROM fin""".stripMargin
-      },
-
-      // adjacency bigrams (the 2-gram shingle form); exact counts,
-      // one t-score division + sqrt, Dice an exact ratio p6'd
-      "q384_collocations" ->
-        s"""WITH d AS (SELECT $toksSql AS t FROM documents),
-           |uni AS (
-           |  SELECT w, CAST(count(*) AS BIGINT) AS f
-           |  FROM (SELECT unnest(t) AS w FROM d) GROUP BY 1),
-           |n AS (SELECT CAST(sum(len(t)) AS BIGINT) AS n FROM d),
-           |bi AS (
-           |  SELECT b AS bigram, CAST(count(*) AS BIGINT) AS f_xy
-           |  FROM (SELECT unnest(list_transform(range(1, len(t)),
-           |    i -> t[i] || ' ' || t[i+1])) AS b FROM d)
-           |  GROUP BY 1 HAVING count(*) >= 5),
-           |j AS (
-           |  SELECT bigram, f_xy, u1.f AS f_x, u2.f AS f_y
-           |  FROM bi
-           |  JOIN uni u1 ON u1.w = string_split(bigram, ' ')[1]
-           |  JOIN uni u2 ON u2.w = string_split(bigram, ' ')[2])
-           |SELECT bigram, f_xy, f_x, f_y,
-           |  ${pround("(CAST(f_xy AS DOUBLE) - CAST(f_x AS DOUBLE) * " +
-             "CAST(f_y AS DOUBLE) / CAST(n.n AS DOUBLE)) / " +
-             "sqrt(CAST(f_xy AS DOUBLE))", 6)} AS t_score,
-           |  ${pround("2.0 * CAST(f_xy AS DOUBLE) / " +
-             "CAST(f_x + f_y AS DOUBLE)", 6)} AS dice
-           |FROM j CROSS JOIN n
-           |ORDER BY t_score DESC, bigram LIMIT 30""".stripMargin,
-
-      // the corpus-frequency prior divides once; ln per term, z p6;
-      // top-10 per source by (z desc, word)
-      "q385_log_odds" ->
-        s"""WITH cells AS (
-           |  SELECT g, w, CAST(count(*) AS BIGINT) AS y
-           |  FROM (SELECT source AS g, unnest($toksSql) AS w
-           |        FROM documents WHERE source IS NOT NULL)
-           |  GROUP BY 1, 2),
-           |pw AS (SELECT w, CAST(sum(y) AS BIGINT) AS yw
-           |  FROM cells GROUP BY 1),
-           |pg AS (SELECT g, CAST(sum(y) AS BIGINT) AS na
-           |  FROM cells GROUP BY 1),
-           |n AS (SELECT CAST(sum(y) AS BIGINT) AS n FROM cells),
-           |sc AS (
-           |  SELECT c.g, c.w, c.y, pw.yw - c.y AS yb, pg.na,
-           |    n.n - pg.na AS nb,
-           |    500.0 * (CAST(pw.yw AS DOUBLE) / CAST(n.n AS DOUBLE)) AS aw
-           |  FROM cells c JOIN pw USING (w) JOIN pg ON pg.g = c.g
-           |  CROSS JOIN n),
-           |z AS (
-           |  SELECT g, w, y, yb,
-           |    ${pround("(ln((CAST(y AS DOUBLE) + aw) / " +
-             "(CAST(na AS DOUBLE) + 500.0 - CAST(y AS DOUBLE) - aw)) - " +
-             "ln((CAST(yb AS DOUBLE) + aw) / " +
-             "(CAST(nb AS DOUBLE) + 500.0 - CAST(yb AS DOUBLE) - aw))) / " +
-             "sqrt(1.0 / (CAST(y AS DOUBLE) + aw) + " +
-             "1.0 / (CAST(yb AS DOUBLE) + aw))", 6)} AS z_logodds
-           |  FROM sc)
-           |SELECT g AS source, w AS word, y AS y_source, yb AS y_rest,
-           |  z_logodds
-           |FROM (SELECT *, row_number() OVER (PARTITION BY g
-           |    ORDER BY z_logodds DESC, w) AS rr FROM z)
-           |WHERE rr <= 10""".stripMargin,
-
-      // both entropies over the SAME adjacent-bigram table; p6
-      // per-term stations in order-free DECIMAL sums; the closing
-      // subtraction and exp p6
-      "q387_entropy_rate" ->
-        s"""WITH bi AS (
-           |  SELECT g, string_split(bg, ' ')[1] AS w1, bg,
-           |    CAST(count(*) AS BIGINT) AS c
-           |  FROM (SELECT source AS g,
-           |          unnest(list_transform(range(1, len(t)),
-           |            i -> t[i] || ' ' || t[i+1])) AS bg
-           |        FROM (SELECT source, $toksSql AS t FROM documents
-           |              WHERE source IS NOT NULL))
-           |  GROUP BY 1, 2, 3),
-           |n AS (SELECT g, CAST(sum(c) AS BIGINT) AS n
-           |  FROM bi GROUP BY 1),
-           |hb AS (
-           |  SELECT c.g, ${pround("CAST(CAST(sum(CAST(" +
-             pround("CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE) * " +
-               "ln(CAST(n.n AS DOUBLE) / CAST(c AS DOUBLE))", 6) +
-             " AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE)", 6)} AS h
-           |  FROM bi c JOIN n ON n.g = c.g GROUP BY 1),
-           |pm AS (SELECT g, w1, CAST(sum(c) AS BIGINT) AS c
-           |  FROM bi GROUP BY 1, 2),
-           |hp AS (
-           |  SELECT c.g, ${pround("CAST(CAST(sum(CAST(" +
-             pround("CAST(c AS DOUBLE) / CAST(n.n AS DOUBLE) * " +
-               "ln(CAST(n.n AS DOUBLE) / CAST(c AS DOUBLE))", 6) +
-             " AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE)", 6)} AS h
-           |  FROM pm c JOIN n ON n.g = c.g GROUP BY 1),
-           |fin AS (
-           |  SELECT n.g, n.n AS n_bigrams, hb.h AS h_bigram,
-           |    hp.h AS h_prefix,
-           |    ${pround("hb.h - hp.h", 6)} AS entropy_rate
-           |  FROM n JOIN hb ON hb.g = n.g JOIN hp ON hp.g = n.g)
-           |SELECT g AS source, n_bigrams, h_bigram, h_prefix,
-           |  entropy_rate,
-           |  ${pround("exp(entropy_rate)", 6)} AS perplexity
-           |FROM fin""".stripMargin
-    )
-    // one-shot streaming curation (one batch from fresh state) is the
-    // batch pipeline by construction — shared gate predicates, shared
-    // transitive intra-batch keep policy — so it shares q46's oracle.
-    // (Only ACROSS batches does the stream screen degrade to pairwise;
-    // the greedy curationSql(false) variant pins that policy in
-    // StreamingCurationSpec.)
-    base + ("q64_streaming_curation" -> curationSql(transitive = true)) +
-      // the decontamination stage drops langkept docs sharing any
-      // distinct 3-shingle with the eval slice, then dedup proceeds on
-      // the survivors — the oracle restates the full five-stage screen
-      ("q87_streaming_decontamination" -> curationSql(transitive = true,
-        corpusWhere = "doc_id % 10 <> 0",
-        evalWhere = Some("doc_id % 10 = 0"))) +
-      // incremental maintenance over a batch split must end where the
-      // one-shot solve ends — same edge set, same oracle as q65
-      ("q69_streaming_components" -> base("q65_components")) +
-      // additive per-key totals under any batch split = the one-shot
-      // totals, and both cards read the shared FromTotals closing —
-      // so the live drift card shares q311's oracle verbatim
-      ("q315_streaming_topk_drift" -> base("q311_topk_drift")) +
-      // time-ordered batch split + one stitched boundary gap per key
-      // reproduces the one-shot gap statistics, and both cards read
-      // the shared burstinessFromStats closing — q322's oracle verbatim
-      ("q331_streaming_burstiness" -> base("q322_burstiness")) +
-      // additive 2x2 cells under any batch split = the one-shot cells,
-      // and both cards read the shared riskCardFromCells closing
-      ("q342_streaming_risk" -> base("q326_risk_card")) +
-      // additive (n, Σw, Σw²) under any batch split = the one-shot
-      // statistics, and both cards read the shared essFromStats closing
-      ("q347_streaming_ess" -> base("q344_ess")) +
-      // 0/1 capture indicators max-merge (associative, commutative,
-      // idempotent) under any batch split = the one-shot indicator
-      // table, and both cards read the shared chapmanFromIndicators
-      // closing
-      ("q373_streaming_capture" -> base("q366_capture_recapture")) +
-      // additive (n, Σe, Σe²) per fixed threshold under any batch
-      // split = the one-shot excess moments, and both cards read the
-      // shared meanExcessFromMoments closing
-      ("q379_streaming_tail" -> base("q368_mean_excess")) +
-      // additive per-(group, item, era) revenue/quantity cells under
-      // any batch split = the one-shot cell table, and both cards
-      // read the shared priceIndicesFromCells closing
-      ("q386_streaming_price_index" -> base("q382_price_index")) +
-      // the Poisson weights are a pure function of (key, replicate),
-      // so per-replicate sums add across any batch split; both cards
-      // read the shared poissonBootstrapFromReplicates closing
-      ("q388_streaming_bootstrap" -> base("q355_poisson_bootstrap"))
+  def oracleSql: Map[String, String] =
+    entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
+
+  /** The queries a harness run covers: all of them, or the
+    * comma-separated names in SPARK_GRAFT_QUERIES. A typo'd name fails
+    * loudly (the message carries the harness `tag`) — an all-miss
+    * filter would write an empty dump or a total of 0 that reads as
+    * success.
+    */
+  private[graft] def selectedQueries(
+      tag: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val only = requestedQueries
+    val unknown = only -- queries.keySet
+    if (unknown.nonEmpty)
+      sys.error(s"[$tag] unknown queries in SPARK_GRAFT_QUERIES: ${unknown.mkString(",")}")
+    if (only.isEmpty) queries
+    else queries.filter { case (n, _) => only(n) }
   }
+
+  /** The names SPARK_GRAFT_QUERIES lists; empty when it is unset. */
+  private[graft] def requestedQueries: Set[String] =
+    sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+
+  /** Delete the per-invocation streaming state dirs the queries have
+    * created since the last call (see `SparkSide.invocationStateDir`).
+    * NonFatal only (an InterruptedException must still cancel), and
+    * failures print under the harness `tag` — a silently dead cleanup
+    * would let the /tmp pile-up this hook exists to prevent come back
+    * unseen.
+    */
+  private[graft] def deleteInvocationStateDirs(spark: SparkSession, tag: String): Unit =
+    SparkSide.drainInvocationStateDirs().foreach { dir =>
+      try graft.sources.PathIO.deleteDir(spark, dir)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[$tag] state-dir cleanup failed for $dir: ${e.getMessage}")
+      }
+    }
 }

@@ -22,16 +22,7 @@ object Verify {
     // SPARK_GRAFT_QUERIES (comma-separated) restricts the dump while
     // iterating on one query; the driver never sets it, so its runs
     // always dump the full surface
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // a typo'd name must fail loudly (same contract as Bench) — an
-    // all-miss filter would write an empty dump that reads as success
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty)
-      sys.error(s"[verify] unknown queries in SPARK_GRAFT_QUERIES: ${unknown.mkString(",")}")
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
+    val selected = SparkEntry.selectedQueries("verify")
     val tasks = selected.toSeq.map { case (name, fn) =>
       pool.submit(new Runnable {
         override def run(): Unit =
@@ -46,15 +37,7 @@ object Verify {
     pool.shutdown()
     // all dumps are finished: delete the per-invocation streaming
     // state dirs before exit (same hygiene hook as Bench)
-    SparkEntry.drainInvocationStateDirs().foreach { dir =>
-      // NonFatal only (an InterruptedException must still cancel),
-      // and failures print — a silently dead cleanup would let the
-      // /tmp pile-up this hook exists to prevent come back unseen
-      try graft.sources.PathIO.deleteDir(spark, dir)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] state-dir cleanup failed for $dir: ${e.getMessage}")
-      }
-    }
+    SparkEntry.deleteInvocationStateDirs(spark, "verify")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -57,21 +57,6 @@ object TextFns {
   def minhash(shingles: Column, salt: Int): Column =
     array_min(transform(shingles, s => md5(concat(lit(s"$salt|"), s))))
 
-  /** k-position MinHash signature as an array of hex strings. */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    array((0 until k).map(minhash(shingles, _)): _*)
-
-  /** LSH band keys: a k = bands * rowsPerBand signature split into bands,
-    * each band's minhashes concatenated into one key string prefixed with
-    * the band id. Docs sharing any band key are near-dup candidates.
-    */
-  def lshBandKeys(shingles: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      val mins = (0 until rowsPerBand)
-        .map(r => minhash(shingles, b * rowsPerBand + r))
-      concat_ws("|", lit(s"b$b") +: mins: _*)
-    }: _*)
-
   /** 16-bit SimHash over a token bag, computed per-row with higher-order
     * aggregates (no explode, no shuffle).
     *
@@ -98,9 +83,6 @@ object TextFns {
     // rows and thus no signature
     when(size(toks) > 0, sig)
   }
-
-  /** Hamming distance between two simhash16 values. */
-  def hamming16(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   // ---- language ID -----------------------------------------------------
 

@@ -92,12 +92,6 @@ object TimeFns {
         (idx * 15 / 60).cast("int"), (idx * 15 % 60).cast("int")))
   }
 
-  /** Floor-aligned tumbling-window start (epoch seconds), for standard
-    * streaming windows where floor semantics are wanted instead of nearest.
-    */
-  def tumblingStartEpoch(ts: Column, seconds: Long): Column =
-    floor(unix_timestamp(ts) / seconds) * seconds
-
   /** `part_of_day` bucket used by the reference time dim (reference:
     * scripts/get_raw_data/get_raw_time_of_day_data.py:78-81 — the slot
     * list is 20x night + 28x morning + 20x afternoon + 16x evening +

@@ -150,8 +150,8 @@ object Decontamination {
       .agg(count(lit(1)).as("n_grams"),
         count(col("__hit")).as("n_contaminated"))
       // unrounded on purpose: query layers own presentation rounding
-      // (SparkEntry.pround — engine round() functions disagree one ulp
-      // from .5 boundaries across engines)
+      // (functions.Rounding.pround — engine round() functions disagree
+      // one ulp from .5 boundaries across engines)
       .withColumn("contamination_rate",
         col("n_contaminated").cast("double") / col("n_grams"))
   }

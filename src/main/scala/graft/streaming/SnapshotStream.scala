@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.functions.TimeFns
 import graft.operators.{Relational, SnapshotPipeline}
 import graft.sources.PathIO
 import org.apache.hadoop.fs.Path
@@ -69,14 +68,6 @@ object SnapshotStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(path)
   }
-
-  /** Snapshot-key assignment on a stream — same arithmetic expression as
-    * batch (nearest 15-min slot; no time-dim join, no state).
-    */
-  def withSnapshotKeys(events: DataFrame, tsCol: String = "ts"): DataFrame =
-    events
-      .withColumn("day_date_id", TimeFns.snapshotDayId(col(tsCol)))
-      .withColumn("time_of_day_id", TimeFns.snapshotTimeId(col(tsCol)))
 
   /** Stateful cross-shard dedup (reference D2 streaming: 25 concurrent
     * ingest workers emit overlapping shards; duplicates must be dropped

@@ -30,17 +30,18 @@ import org.apache.spark.sql.functions._
   * quadratic AND collapsing the screen into rejecting ~everything
   * (every vector collides). Measured at the sf10 probe: 8-bit bands
   * OOM at any heap and accept 2 of 200k vectors; 18-bit bands finish
-  * in 14.8 s at the default heap. BandOccupancySpec pins the math,
-  * PERF.md round 15 the measurements, `graft.EmbedDedupProbe` the
-  * harness.
+  * in 14.8 s at the default heap. BandOccupancySpec pins the math and
+  * PERF.md round 15 the measurements. The probe main that took them
+  * was deleted, unused, by the commit that split `SparkEntry` into the
+  * `graft.queries` families; that commit's parent still holds it.
   */
 object StreamingEmbedDedup {
 
   /** The corpus-sized band width: ceil(log2(n)) bits per band, floored
     * at 8 (the pre-round-15 contract width) and capped at the 63-bit
-    * key limit. THE one definition — `graft.EmbedDedupProbe`'s `auto`
-    * mode and deployments size from here, so the measured sf10 row and
-    * the shipped sizing can never drift apart.
+    * key limit. THE one definition — the round-15 sf10 probe and
+    * deployments size from here, so the measured sf10 row and the
+    * shipped sizing can never drift apart.
     */
   def planesPerBandFor(n: Long): Int = {
     require(n > 0, s"corpus size must be positive, got $n")

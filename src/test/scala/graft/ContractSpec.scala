@@ -46,6 +46,16 @@ class ContractSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("every family entry reaches the contract maps under a distinct name") {
+    // the maps are keyed by name: a repeated name would drop one entry
+    // (and its oracle) from the hash gate without failing anything
+    val names = SparkEntry.entries.map(_.name)
+    names.size shouldBe SparkEntry.queries.size
+    withClue("repeated entry names: ") {
+      names.diff(names.distinct) shouldBe empty
+    }
+  }
+
   test("oracle SQL never references the Spark-side bookkeeping prefix") {
     // a __-prefixed column leaking into an oracle means the Spark side
     // exposed internals the driver would then hash

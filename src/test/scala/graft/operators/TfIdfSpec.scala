@@ -124,6 +124,20 @@ class TfIdfSpec extends SparkSpec {
     out(2L)._2 shouldBe (math.log10(4.0 / 6) +- 1e-12)
   }
 
+  test("distinctNgramRatios: distinct n-grams per group and n, in basis points") {
+    val docs = Seq((1L, "alpha beta gamma delta", "s"),
+      (2L, "alpha beta gamma other", "s")).toDF("doc_id", "text", "source")
+    // one row per (group, n in 1..maxN)
+    TfIdf.distinctNgramRatios(docs, "text", "doc_id", 3).count() shouldBe 6L
+    val rows = TfIdf.distinctNgramRatios(docs, "text", "source", 3)
+      .collect().map(r => r.getLong(1) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
+      .toMap
+    // n=1: 8 positions, {alpha beta gamma delta other}; n=2: 6 positions,
+    // 4 distinct bigrams; n=3: 4 positions, 3 distinct trigrams
+    rows shouldBe Map(1L -> ((8L, 5L, 6250L)), 2L -> ((6L, 4L, 6666L)),
+      3L -> ((4L, 3L, 7500L)))
+  }
+
   test("pmiPairs ranks the always-together pair above independent pairs") {
     // "salt" and "pepper" co-occur in ALL their docs (df 2, both 2):
     // ratio = 4*2/(2*2) = 2. "bread" (df 2) meets "salt" once:
