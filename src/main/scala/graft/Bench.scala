@@ -173,6 +173,9 @@ object Bench {
         if (runs.exists(_ < 0)) -1.0 else runs.sorted.apply(nRuns / 2)
       name -> (median, runs)
     }
+    // every run is timed: delete the state fixtures, which a query's
+    // runs share, with the same drain
+    SparkEntry.deleteStateFixtures(spark, "bench")
     // The harness keeps only the LAST ~2000 chars of stdout, so the raw
     // per-run times (for spotting a contaminated run) go to STDERR —
     // round 7's totals line was lost because the runs line shared

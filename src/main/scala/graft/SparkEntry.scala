@@ -111,4 +111,14 @@ object SparkEntry {
         System.err.println(s"[$tag] state-dir cleanup failed for $dir: ${e.getMessage}")
       }
     }
+
+  /** End of a harness run: hand `spark`'s state fixtures (see
+    * `SparkSide.stateFixture`) to the same drain, and delete them with
+    * any per-invocation dirs still pending. A query run after this
+    * rebuilds its fixture.
+    */
+  private[graft] def deleteStateFixtures(spark: SparkSession, tag: String): Unit = {
+    SparkSide.releaseStateFixtures(spark)
+    deleteInvocationStateDirs(spark, tag)
+  }
 }

@@ -35,9 +35,10 @@ object Verify {
     }
     tasks.foreach(_.get())
     pool.shutdown()
-    // all dumps are finished: delete the per-invocation streaming
-    // state dirs before exit (same hygiene hook as Bench)
-    SparkEntry.deleteInvocationStateDirs(spark, "verify")
+    // all dumps are finished: delete the streaming state dirs, the
+    // per-invocation ones and the fixtures, before exit (same hygiene
+    // hook as Bench)
+    SparkEntry.deleteStateFixtures(spark, "verify")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

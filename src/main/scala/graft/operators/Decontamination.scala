@@ -92,7 +92,7 @@ object Decontamination {
     * silently drop most of a real corpus.
     */
   def decontaminate(corpus: DataFrame, evalSet: DataFrame, textCol: String,
-                    idCol: String, n: Int, minShared: Int = 1,
+                    n: Int, minShared: Int = 1,
                     maxEvalGrams: Int = 10000000): DataFrame = {
     import graft.expressions.GraftFunctions.sharedShingleCount
     val bc = broadcastEvalGrams(evalSet, textCol, n, maxEvalGrams)
@@ -127,7 +127,7 @@ object Decontamination {
     val spark = corpus.sparkSession
     // collected as generic Rows: the eval id keeps whatever type the
     // caller's idCol has (benchmark names and UUIDs are as common as
-    // numeric ids), same contract as overlap/decontaminate
+    // numeric ids), same contract as overlap
     val pairsFrame = evalSet
       .select(col(idCol).as("eval_id"),
         explode(distinctWordShingles(col(textCol), n)).as("gram"))

@@ -1,9 +1,8 @@
 package graft.plans
 
-import graft.operators.{Relational, SnapshotPipeline, StreamsEtl}
+import graft.operators.{Relational, SnapshotPipeline}
 import graft.sources.{Layers, PathIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Batch orchestration of one snapshot cycle — the driver-sequenced
   * restatement of the reference's Lambda/SNS/SQS choreography (reference
@@ -72,7 +71,7 @@ object Orchestrator {
       .localCheckpoint(true)
     if (!delta.isEmpty) {
       // shared durable state replacement: move-aside + checked renames
-      // (PathIO.writeSwap), same discipline as StreamingBudget.commit
+      // (PathIO.writeSwap), same discipline as MergeableState.swap
       val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
       val files = math.max(1L, (PathIO.dataBytes(spark, dimPath) + maxBytes - 1) / maxBytes)
       PathIO.writeSwap(current.unionByName(delta).coalesce(files.toInt), dimPath)

@@ -491,7 +491,7 @@ object PipelineSamplingQueries {
       val clean = operators.Decontamination.decontaminate(
         split.filter(col("split") === "train"),
         split.filter(col("split") === "test").select("doc_id", "text"),
-        "text", "doc_id", n = 3)
+        "text", n = 3)
       split.groupBy(col("split"))
         .agg(count(lit(1)).cast("long").as("n_docs"))
         .join(broadcast(clean

@@ -38,7 +38,9 @@ object SparkSide {
     * temp dir each run timed harness setup, not the operator
     * (round-9 tail audit on q223). A fixture is read-only after
     * construction — invocations merge against it with the operator's
-    * mergeBatch, which never writes.
+    * mergeBatch, which never writes. The map holds each fixture's temp
+    * dir; the harness deletes them when its run ends
+    * ([[releaseStateFixtures]]).
     */
   private val stateFixtures =
     new java.util.WeakHashMap[SparkSession,
@@ -58,11 +60,19 @@ object SparkSide {
       m
     }
     perSession.computeIfAbsent((tag, d), { _ =>
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft_${tag}_state").toString + "/state"
-      build(p)
-      p
-    })
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_${tag}_state").toString
+      build(dir + "/state")
+      dir
+    }) + "/state"
+  }
+
+  /** Forget `s`'s fixtures and queue their dirs on the per-invocation
+    * drain ([[drainInvocationStateDirs]]), which the harness deletes.
+    */
+  private[graft] def releaseStateFixtures(s: SparkSession): Unit = {
+    val m = stateFixtures.synchronized(stateFixtures.remove(s))
+    if (m != null) m.values.forEach(dir => invocationStateDirs.add(dir))
   }
 
   /** Per-invocation streaming state dirs created by entries since the

@@ -53,9 +53,10 @@ object PathIO {
     * not exception.
     *
     * The shared discipline for every whole-table state writer
-    * (`StreamingBudget.commit`, `Orchestrator` dims); bucket-wise
-    * writers (`StreamingComponents`) use dynamic partition overwrite
-    * instead, whose per-partition commit has its own replay story.
+    * (`MergeableState.swap` steps, `StreamingBudget`'s totals,
+    * `Orchestrator` dims); bucket-wise writers (`StreamingComponents`)
+    * use dynamic partition overwrite instead, whose per-partition
+    * commit has its own replay story.
     *
     * CONCURRENCY CONTRACT: writeSwap and readSwapState on the same
     * target must be strictly serialized (single writer, readers only

@@ -19,15 +19,19 @@ import org.apache.spark.sql.types.StructType
   * column with its merge's output type — `Max` stores BIGINT whatever
   * integral type the partial carries — and is read with it.
   *
-  * Commit protocol: merge → materialize (`localCheckpoint`) → sink →
-  * `PathIO.writeSwap`. A merge that is never committed leaves the
-  * state untouched, so a replayed batch after a failed sink merges
-  * against the same pre-batch totals and cannot double-count.
-  *
-  * Twins whose merge is not a per-column monoid (Budget's
-  * screen-then-spend, Burstiness's boundary gap, Drift's registered
-  * baseline) keep their own state logic and share only `accept` or
-  * `PathIO.writeSwap`.
+  * Commit protocol: every streaming state in this package — these
+  * twins and the states whose merge is not a per-column monoid
+  * (Budget's screen-then-spend, Curation/Dedup's append-only key
+  * tables, Burstiness's boundary gap, Drift's registered baseline) —
+  * commits through the one [[Step]] protocol below: a batch yields the
+  * rows to emit plus the commit that persists the new state; [[accept]]
+  * materializes (`localCheckpoint`) and commits, and [[sink]] — the one
+  * `foreachBatch` — materializes, emits, and only then commits. A step
+  * that is never committed leaves the state untouched, so a replayed
+  * batch after a failed emit screens or merges against the same
+  * pre-batch state and cannot double-count or drop its own rows.
+  * (Components' bucket-wise fold writes its state itself; its step's
+  * commit is empty, and a replay re-converges.)
   */
 object MergeableState {
 
@@ -92,26 +96,46 @@ object MergeableState {
     partial.select(keys.map(col) ++
       merges.map { case (c, m) => m(col(c), col(c)).as(c) }: _*).schema
 
-  /** Materialize `merged`, swap it in as the state, and return the
-    * materialized frame (which stays readable after the swap).
+  /** One batch's outcome: the `rows` to emit, and the `commit` that
+    * persists the new state. `commit` receives the materialized rows
+    * and runs only after they are materialized (and, in [[sink]],
+    * emitted): frames that lazily read the pre-batch state must not be
+    * re-evaluated after it. The default commit persists nothing.
     */
-  def accept(merged: DataFrame, statePath: String): DataFrame = {
-    val out = merged.localCheckpoint(true)
-    PathIO.writeSwap(out, statePath)
+  final case class Step(rows: DataFrame, commit: DataFrame => Unit = _ => ())
+
+  /** The swap-state step: the post-merge table is both the emitted
+    * rows and the new state (`PathIO.writeSwap`).
+    */
+  def swap(merged: DataFrame, statePath: String): Step =
+    Step(merged, PathIO.writeSwap(_, statePath))
+
+  /** Materialize the step's rows, commit, and return the materialized
+    * frame (which stays readable after the commit).
+    */
+  def accept(step: Step): DataFrame = {
+    val out = step.rows.localCheckpoint(true)
+    step.commit(out)
     out
   }
 
-  /** Streaming sink: per micro-batch, merge, hand the materialized
-    * state to `emit`, and commit only after `emit` succeeds.
+  /** Materialize `merged`, swap it in as the state, and return the
+    * materialized frame.
     */
-  def sink(stream: DataFrame, statePath: String)
-          (mergeBatch: DataFrame => DataFrame)
+  def accept(merged: DataFrame, statePath: String): DataFrame =
+    accept(swap(merged, statePath))
+
+  /** Streaming sink: per micro-batch, take its step, hand the
+    * materialized rows to `emit`, and commit only after `emit`
+    * succeeds.
+    */
+  def sink(stream: DataFrame)(step: DataFrame => Step)
           (emit: DataFrame => Unit): DataStreamWriter[Row] =
     stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeBatch(batch).localCheckpoint(true)
-        emit(merged)
-        PathIO.writeSwap(merged, statePath)
+        val s = step(batch)
+        accept(Step(s.rows, out => { emit(out); s.commit(out) }))
+        ()
       }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Relational, SnapshotPipeline}
+import graft.operators.SnapshotPipeline
 import graft.sources.PathIO
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * micro-batch cadence). Batch and streaming share the SAME transforms —
   * `SnapshotPipeline.processEvents/curateEvents` are stateless-narrow,
   * so they apply unchanged to a streaming DataFrame; only the stateful
-  * pieces (dedup, windowed aggregation, dimension upsert) differ and
+  * pieces (dedup, windowed aggregation, running counts) differ and
   * live here.
   *
   * Scale notes: state stores are keyed by the dedup/window keys and
@@ -24,10 +24,10 @@ import org.apache.spark.sql.types.StructType
   * 22-cycle backfill drained 4 snapshots per micro-batch ends with
   * 54,600 dedup rows (8 snapshots of 6,825 keys); a dedup that never
   * evicts held 150,150, every key of all 22 cycles. The dimension
-  * upsert holds NO stream state at all: it
-  * anti-joins each micro-batch against the persisted dim (foreachBatch),
-  * which keeps state inspectable and identical to the batch semantics
-  * (reference D3/J4).
+  * upsert holds NO stream state at all: each micro-batch runs the batch
+  * chain's `Orchestrator.upsertDim` (a `MergeableState.sink` step),
+  * which anti-joins it against the persisted dim — state stays
+  * inspectable and identical to the batch semantics (reference D3/J4).
   */
 object SnapshotStream {
 
@@ -69,16 +69,6 @@ object SnapshotStream {
       .json(path)
   }
 
-  /** Stateful cross-shard dedup (reference D2 streaming: 25 concurrent
-    * ingest workers emit overlapping shards; duplicates must be dropped
-    * within a snapshot). Watermark bounds the dedup state to the late-
-    * arrival window.
-    */
-  def dedupedEvents(events: DataFrame, keys: Seq[String],
-                    tsCol: String = "ts", watermark: String = "30 minutes"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicates(keys :+ tsCol)
-
   /** Tumbling-window popularity aggregate (reference A1 as a stream):
     * per-window per-key counts, emitted once the watermark passes —
     * the streaming form of the popularity feedback loop.
@@ -91,28 +81,6 @@ object SnapshotStream {
       .agg(count(lit(1)).as("num_of_streamers"))
       .select(col("window.start").as("win_start"), col(key),
         col("num_of_streamers"))
-
-  /** Incremental dimension upsert with delta emission (reference
-    * D3+J4 streaming: fold observed keys into the persisted "current"
-    * dim, emit only never-seen keys). foreachBatch + anti-join keeps
-    * semantics identical to batch and the state in a queryable table.
-    *
-    * @param loadDim   reads the current dim (empty DataFrame when none)
-    * @param saveDelta persists the delta (append) — the curated output
-    */
-  def dimUpsertSink(stream: DataFrame, keys: Seq[String],
-                    loadDim: SparkSession => DataFrame,
-                    saveDelta: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val current = loadDim(spark)
-        val delta = Relational.upsertDelta(
-          batch.dropDuplicates(keys), current, keys)
-        // reference F6: skip the write entirely on an empty delta
-        if (!delta.isEmpty) saveDelta(delta)
-      }
 
   /** The full streaming snapshot chain: process (shared stateless
     * transform) -> watermarked PK dedup -> curate projection.
@@ -139,20 +107,6 @@ object SnapshotStream {
       SnapshotPipeline.processEvents(events)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(Seq("user_id", "day_date_id", "time_of_day_id")))
-
-  /** Streaming gap-based sessions via Spark's native session_window —
-    * the streaming counterpart of operators.Sessionize (same gap
-    * semantics; state closes once the watermark passes the gap).
-    */
-  def sessionCounts(events: DataFrame, keyCol: String, gap: String,
-                    tsCol: String = "ts", watermark: String = "30 minutes"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col(keyCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
 
   /** Running per-key counts with explicit keyed state (reference §2.11
     * feedback loop: the popularity of snapshot N drives the partitioning

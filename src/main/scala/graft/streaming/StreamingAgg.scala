@@ -3,7 +3,6 @@ package graft.streaming
 import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Incremental materialized-view maintenance: a running keyed
   * aggregate table (here (day, event_type) -> count + exact DECIMAL
@@ -29,7 +28,7 @@ object StreamingAgg {
 
   /** Merge one batch of raw events into the MV state; returns the
     * post-merge MV. Caller must materialize the result before committing
-    * (acceptBatch/aggSink do).
+    * (`MergeableState.accept`/`sink` do).
     */
   def mergeBatch(batch: DataFrame, tsCol: String, typeCol: String,
                  valueCol: String, statePath: String): DataFrame = {
@@ -47,13 +46,4 @@ object StreamingAgg {
                   valueCol: String, statePath: String): DataFrame =
     MergeableState.accept(
       mergeBatch(batch, tsCol, typeCol, valueCol, statePath), statePath)
-
-  /** Streaming sink: maintain the MV per micro-batch, hand the
-    * post-merge MV to `sink`, commit only after it succeeds.
-    */
-  def aggSink(stream: DataFrame, tsCol: String, typeCol: String,
-              valueCol: String, statePath: String,
-              sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    MergeableState.sink(stream, statePath)(
-      mergeBatch(_, tsCol, typeCol, valueCol, statePath))(sink)
 }

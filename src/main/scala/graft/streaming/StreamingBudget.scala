@@ -5,7 +5,6 @@ import graft.sources.PathIO
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Cross-batch per-group TOKEN budgets over a document stream — the
   * incremental counterpart of `Sampling.tokenBudgetSample`: a
@@ -28,9 +27,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * small by construction — the skew argument that drives the bucketed
   * batch form does not apply at batch granularity.
   *
-  * Retry safety follows `StreamingCuration`: state is committed only
-  * AFTER the caller's sink succeeds, so a replayed batch re-screens
-  * identically against the unchanged totals. Durability is
+  * Retry safety is `MergeableState`'s step protocol: the totals are
+  * committed only AFTER the emit succeeds, so a replayed batch
+  * re-screens identically against the unchanged totals. Durability is
   * `PathIO.writeSwap` (move aside, rename in, checked renames) with
   * the healing `readSwapState` on the read side — a crash at any
   * point leaves the previous totals recoverable, never a silently
@@ -38,18 +37,19 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object StreamingBudget {
 
-  /** Screen one batch; pure — persists nothing. BOTH returned frames
-    * lazily read the current state files, so the caller MUST
-    * materialize `accepted` (sink it, or `localCheckpoint`) BEFORE
-    * calling `commit` — after the commit's swap they would silently
-    * re-screen against totals that already include this batch's spend
-    * and return fewer rows. `acceptBatch`/`budgetSink` do this.
-    *
-    * @return (accepted rows, updated per-group totals to commit)
+  /** Screen one batch; pure — persists nothing. The step's rows are
+    * the accepted rows; its commit swaps in the updated per-group
+    * totals. Both lazily read the current state files, so the rows must
+    * be materialized BEFORE the commit — after the swap they would
+    * silently re-screen against totals that already include this
+    * batch's spend and return fewer rows. `MergeableState.accept` and
+    * `MergeableState.sink` do this. `PathIO.writeSwap` keeps the
+    * previous totals recoverable at every instant; the paired
+    * `readSwapState` heals an interrupted swap on the next read.
     */
   def screenBatch(batch: DataFrame, keyCol: String, groupCol: String,
                   tokensCol: Column, budget: Long,
-                  statePath: String): (DataFrame, DataFrame) = {
+                  statePath: String): MergeableState.Step = {
     require(budget > 0, s"token budget must be positive: $budget")
     val reserved = Set("spent", "__grp", "__tok", "__before", "__g", "__add")
     val clash = batch.columns.toSet.intersect(reserved)
@@ -83,41 +83,13 @@ object StreamingBudget {
         coalesce(col("__grp"), col("__g")).as(groupCol),
         (coalesce(col("spent"), lit(0L)) + coalesce(col("__add"), lit(0L)))
           .as("spent"))
-    (accepted, newSpent)
+    MergeableState.Step(accepted, _ => PathIO.writeSwap(newSpent, statePath))
   }
-
-  /** Replace the state with the updated totals (call AFTER the sink
-    * succeeded, and AFTER `accepted` is materialized — see
-    * `screenBatch`). `PathIO.writeSwap` keeps the previous totals
-    * recoverable at every instant; the paired `readSwapState` in
-    * `screenBatch` heals an interrupted swap on the next read.
-    */
-  def commit(statePath: String, newSpent: DataFrame): Unit =
-    PathIO.writeSwap(newSpent, statePath)
 
   /** Screen + commit in one call for batch callers. */
   def acceptBatch(batch: DataFrame, keyCol: String, groupCol: String,
                   tokensCol: Column, budget: Long,
-                  statePath: String): DataFrame = {
-    val (accepted, newSpent) =
-      screenBatch(batch, keyCol, groupCol, tokensCol, budget, statePath)
-    val out = accepted.localCheckpoint(true)
-    commit(statePath, newSpent)
-    out
-  }
-
-  /** Streaming sink: budget each micro-batch, hand accepted rows to
-    * `sink`, commit totals only after it succeeds.
-    */
-  def budgetSink(stream: DataFrame, keyCol: String, groupCol: String,
-                 tokensCol: Column, budget: Long, statePath: String,
-                 sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (accepted, newSpent) =
-          screenBatch(batch, keyCol, groupCol, tokensCol, budget, statePath)
-        sink(accepted.localCheckpoint(true))
-        commit(statePath, newSpent)
-      }
+                  statePath: String): DataFrame =
+    MergeableState.accept(
+      screenBatch(batch, keyCol, groupCol, tokensCol, budget, statePath))
 }

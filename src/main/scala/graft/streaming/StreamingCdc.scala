@@ -4,7 +4,6 @@ import graft.operators.Relational
 import graft.sources.PathIO
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming CDC state maintenance — `Relational.cdcCompact` kept
   * current across micro-batches: the state table holds the LAST
@@ -32,7 +31,7 @@ object StreamingCdc {
 
   /** Merge one changelog batch into the CDC state; returns the merged
     * FULL state (tombstones included). Pure: `MergeableState.accept`
-    * or `sink` materializes and commits it.
+    * or `MergeableState.sink` materializes and commits it.
     */
   def mergeBatch(batch: DataFrame, keyCol: String, orderCols: Seq[String],
                  statePath: String): DataFrame = {
@@ -48,13 +47,4 @@ object StreamingCdc {
                   isDelete: Column, statePath: String): DataFrame =
     MergeableState.accept(mergeBatch(batch, keyCol, orderCols, statePath), statePath)
       .filter(!isDelete)
-
-  /** Streaming sink: maintain CDC state per micro-batch, hand the live
-    * view to `sink`, commit only after it succeeds.
-    */
-  def cdcSink(stream: DataFrame, keyCol: String, orderCols: Seq[String],
-              isDelete: Column, statePath: String,
-              sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    MergeableState.sink(stream, statePath)(
-      mergeBatch(_, keyCol, orderCols, statePath))(m => sink(m.filter(!isDelete)))
 }

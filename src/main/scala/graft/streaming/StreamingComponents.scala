@@ -4,7 +4,6 @@ import graft.operators.Components
 import graft.sources.PathIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /** Incrementally maintained connected components over a STREAM of
@@ -54,7 +53,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * duplicated across an old and a new bucket re-enters the solve from
   * both rows, the solve collapses it to one label, and both buckets are
   * rewritten. Single writer per state path, as with every state table
-  * here.
+  * here. So in a stream (`MergeableState.sink`) the micro-batch's step
+  * is `Step(acceptEdges(batch, …))`, with the empty commit: the fold
+  * has already written the state, and a replay re-converges.
   *
   * Determinism: `component` is the minimum node id of the cluster, so
   * incremental maintenance over any batch split of an edge set ends at
@@ -161,19 +162,4 @@ object StreamingComponents {
     PathIO.readSwapState(spark, statePath, new StructType()
         .add("node", idType).add("component", idType).add("bucket", IntegerType))
       .select("node", "component")
-
-  /** Streaming sink: fold each micro-batch of edges into the state
-    * table and hand the updated labels to `sink`. State is written as
-    * part of the fold (labels only coarsen — a replayed batch
-    * re-converges rather than corrupting, see object doc).
-    */
-  def componentSink(stream: DataFrame, statePath: String,
-                    sink: DataFrame => Unit,
-                    aCol: String = "id_a", bCol: String = "id_b",
-                    nBuckets: Int = 256): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(acceptEdges(batch, statePath, aCol, bCol, nBuckets))
-      }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.operators.{CurationPipeline, Dedup}
+import graft.operators.CurationPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** The full training-data curation pipeline as a STREAM filter: each
   * micro-batch runs the same stages, in the same cheapest-first order,
@@ -37,9 +36,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * magnitude smaller than the corpus, and the joins prune on their
   * hash keys.
   *
-  * Retry safety: state tables are appended only AFTER the caller's sink
-  * succeeds — a failed batch is re-screened identically on retry
-  * instead of colliding with its own keys and being dropped forever.
+  * Retry safety: state tables are appended only AFTER the emit
+  * succeeds (`MergeableState.sink`) — a failed batch is re-screened
+  * identically on retry instead of colliding with its own keys and
+  * being dropped forever.
   */
 object StreamingCuration {
 
@@ -132,13 +132,14 @@ object StreamingCuration {
     * among the gated docs fails the batch, checked inside the hash
     * projection (no extra pass).
     *
-    * @return (accepted rows, their content hashes, their band keys) —
-    *         the two key frames are what `commit` appends on success
+    * @return the step: accepted rows, and the commit that appends
+    *         their content hashes, then their band keys, to the state
+    *         tables
     */
   def screenBatch(batch: DataFrame, textCol: String, idCol: String,
                   statePath: String,
                   cfg: CurationPipeline.Config = CurationPipeline.Config())
-      : (DataFrame, DataFrame, DataFrame) = {
+      : MergeableState.Step = {
     val spark = batch.sparkSession
     val qlGated = batch
       .filter(CurationPipeline.qualityGate(textCol, cfg))
@@ -203,49 +204,22 @@ object StreamingCuration {
       .localCheckpoint(true)
 
     // ---- near dedup: shared batch/stream band-key screen ----
-    val (accepted, acceptedKeys) = StreamingDedup.screenBatch(
+    val near = StreamingDedup.screenBatch(
       exact.drop("__h"), textCol, idCol, s"$statePath/bands",
       cfg.minhashBands, cfg.minhashRowsPerBand, cfg.transitiveNearDup)
 
-    val acceptedHashes = exact
-      .join(accepted.select(col(idCol)), Seq(idCol), "left_semi")
-      .select(col("__h")).distinct()
-    (accepted, acceptedHashes, acceptedKeys)
-  }
-
-  /** Append the accepted keys to the state tables (call AFTER the sink
-    * succeeded).
-    */
-  def commit(statePath: String, acceptedHashes: DataFrame,
-             acceptedKeys: DataFrame): Unit = {
-    acceptedHashes.write.mode("append").parquet(s"$statePath/exact")
-    acceptedKeys.write.mode("append").parquet(s"$statePath/bands")
+    // the commit's hashes are those of the materialized accepted rows
+    MergeableState.Step(near.rows, out => {
+      exact.join(out.select(col(idCol)), Seq(idCol), "left_semi")
+        .select(col("__h")).distinct()
+        .write.mode("append").parquet(s"$statePath/exact")
+      near.commit(out)
+    })
   }
 
   /** Screen + commit in one call for batch callers. */
   def acceptBatch(batch: DataFrame, textCol: String, idCol: String,
                   statePath: String,
-                  cfg: CurationPipeline.Config = CurationPipeline.Config()): DataFrame = {
-    val (accepted, hashes, keys) = screenBatch(batch, textCol, idCol, statePath, cfg)
-    val out = accepted.localCheckpoint(true)
-    commit(statePath, hashes, keys)
-    out
-  }
-
-  /** Streaming sink: curate each micro-batch, hand accepted rows to
-    * `sink`, commit state only after it succeeds.
-    */
-  def curationSink(stream: DataFrame, textCol: String, idCol: String,
-                   statePath: String,
-                   sink: DataFrame => Unit,
-                   cfg: CurationPipeline.Config = CurationPipeline.Config())
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (accepted, hashes, keys) =
-          screenBatch(batch, textCol, idCol, statePath, cfg)
-        sink(accepted)
-        commit(statePath, hashes, keys)
-      }
+                  cfg: CurationPipeline.Config = CurationPipeline.Config()): DataFrame =
+    MergeableState.accept(screenBatch(batch, textCol, idCol, statePath, cfg))
 }

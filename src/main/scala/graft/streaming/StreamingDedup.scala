@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Incremental near-duplicate filtering for a document STREAM: each
   * micro-batch is deduplicated against everything ever accepted, using
@@ -39,12 +38,18 @@ object StreamingDedup {
     * component wins; per colliding bucket with `transitive = false`).
     * Pure — nothing is persisted.
     *
-    * @return (accepted rows of `batch`, their band keys)
+    * @return the step: accepted rows of `batch`, and the commit that
+    *         appends their band keys to the band table. The commit
+    *         runs only AFTER the rows are emitted (`MergeableState.sink`):
+    *         if the emit throws and the engine retries the batch, the
+    *         documents are not yet in the band table and are re-screened
+    *         identically instead of colliding with their own keys and
+    *         being dropped forever.
     */
   def screenBatch(batch: DataFrame, textCol: String, idCol: String,
                   bandTablePath: String,
                   bands: Int = 3, rowsPerBand: Int = 2,
-                  transitive: Boolean = true): (DataFrame, DataFrame) = {
+                  transitive: Boolean = true): MergeableState.Step = {
     val spark = batch.sparkSession
     // same band-key definition as the batch operator — shared code path
     val keys = Dedup.minhashBandKeys(
@@ -80,7 +85,8 @@ object StreamingDedup {
     val accepted = batch.join(rejected,
       batch(idCol) === col("__rejected"), "left_anti")
     val acceptedKeys = keys.join(rejected, col("doc") === col("__rejected"), "left_anti")
-    (accepted, acceptedKeys)
+    MergeableState.Step(accepted,
+      _ => acceptedKeys.write.mode("append").parquet(bandTablePath))
   }
 
   /** Screen + commit in one call, for batch callers that own the
@@ -89,30 +95,7 @@ object StreamingDedup {
   def acceptBatch(batch: DataFrame, textCol: String, idCol: String,
                   bandTablePath: String,
                   bands: Int = 3, rowsPerBand: Int = 2,
-                  transitive: Boolean = true): DataFrame = {
-    val (accepted, acceptedKeys) =
-      screenBatch(batch, textCol, idCol, bandTablePath, bands, rowsPerBand, transitive)
-    acceptedKeys.write.mode("append").parquet(bandTablePath)
-    accepted
-  }
-
-  /** Streaming sink: screen each micro-batch, hand accepted rows to
-    * `sink`, and append the band keys only AFTER the sink succeeds — if
-    * the sink throws and the engine retries the batch, the documents are
-    * not yet in the band table and are re-screened identically instead
-    * of colliding with their own keys and being dropped forever.
-    */
-  def dedupSink(stream: DataFrame, textCol: String, idCol: String,
-                bandTablePath: String,
-                sink: DataFrame => Unit,
-                bands: Int = 3, rowsPerBand: Int = 2,
-                transitive: Boolean = true): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (accepted, acceptedKeys) =
-          screenBatch(batch, textCol, idCol, bandTablePath, bands, rowsPerBand, transitive)
-        sink(accepted)
-        acceptedKeys.write.mode("append").parquet(bandTablePath)
-      }
+                  transitive: Boolean = true): DataFrame =
+    MergeableState.accept(
+      screenBatch(batch, textCol, idCol, bandTablePath, bands, rowsPerBand, transitive))
 }

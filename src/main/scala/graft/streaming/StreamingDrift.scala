@@ -3,7 +3,6 @@ package graft.streaming
 import graft.sources.PathIO
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming distribution-drift monitor: a REGISTERED baseline
   * histogram (power-of-two bins of a numeric feature, e.g. token
@@ -76,15 +75,4 @@ object StreamingDrift {
       .agg(max(col("na")).as("n_rows"), max(col("nbins")).as("n_bins"),
         sum(col("__c")).cast("double").as("psi"))
   }
-
-  /** Streaming sink: score every micro-batch against the baseline and
-    * hand the one-row report to `sink`.
-    */
-  def driftSink(stream: DataFrame, valCol: String, statePath: String,
-                sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(screenBatch(batch, valCol, statePath).localCheckpoint(true))
-      }
 }

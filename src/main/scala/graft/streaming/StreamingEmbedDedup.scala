@@ -50,12 +50,13 @@ object StreamingEmbedDedup {
   }
 
   /** Screen one batch. Pure — persists nothing.
-    * @return (accepted rows, their band keys to commit on success)
+    * @return the step: accepted rows, and the commit that appends their
+    *         band keys to the band table
     */
   def screenBatch(batch: DataFrame, vecCol: String, idCol: String,
                   bandTablePath: String,
                   bands: Int = 4, planesPerBand: Int = 16,
-                  dims: Int = 64): (DataFrame, DataFrame) = {
+                  dims: Int = 64): MergeableState.Step = {
     val spark = batch.sparkSession
     val keys = batch
       .select(col(idCol).as("doc"),
@@ -77,18 +78,15 @@ object StreamingEmbedDedup {
       batch(idCol) === col("__rejected"), "left_anti")
     val acceptedKeys = keys.join(rejected,
       col("doc") === col("__rejected"), "left_anti")
-    (accepted, acceptedKeys)
+    MergeableState.Step(accepted,
+      _ => acceptedKeys.write.mode("append").parquet(bandTablePath))
   }
 
   /** Screen + commit in one call (batch callers own failure handling). */
   def acceptBatch(batch: DataFrame, vecCol: String, idCol: String,
                   bandTablePath: String,
                   bands: Int = 4, planesPerBand: Int = 16,
-                  dims: Int = 64): DataFrame = {
-    val (accepted, acceptedKeys) =
-      screenBatch(batch, vecCol, idCol, bandTablePath, bands, planesPerBand, dims)
-    val out = accepted.localCheckpoint(true)
-    acceptedKeys.write.mode("append").parquet(bandTablePath)
-    out
-  }
+                  dims: Int = 64): DataFrame =
+    MergeableState.accept(
+      screenBatch(batch, vecCol, idCol, bandTablePath, bands, planesPerBand, dims))
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import org.apache.spark.sql.Row
 
 /** Gap-based sessionization as a STREAM operator — the Spark-first
   * answer is the built-in `session_window` (dynamic-gap session
@@ -45,15 +43,4 @@ object StreamingSessionize {
         col("__w.end").as("session_end"),
         col("n_events"))
   }
-
-  /** Append-mode sink: closed sessions (watermark-finalized) per
-    * micro-batch to `onBatch`.
-    */
-  def sessionSink(stream: DataFrame, keyCol: String, tsCol: String,
-                  gapSeconds: Long, watermarkDelay: String)
-                 (onBatch: DataFrame => Unit): DataStreamWriter[Row] =
-    sessions(stream, keyCol, tsCol, gapSeconds, Some(watermarkDelay))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
 }

@@ -5,7 +5,6 @@ import graft.streaming.MergeableState.Sum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming exact top-k terms per group — the live "what is trending
   * per source" card kept current across micro-batches WITHOUT
@@ -34,7 +33,7 @@ object StreamingTopK {
 
   /** Merge one batch's term counts into the state; returns the
     * post-merge count table (grp, term, n). Caller must materialize
-    * before committing (acceptBatch/topkSink do).
+    * before committing (`MergeableState.accept`/`sink` do).
     */
   def mergeBatch(batch: DataFrame, textCol: String, groupCol: String,
                  statePath: String): DataFrame = {
@@ -67,13 +66,4 @@ object StreamingTopK {
       .select(col("grp"), col("rk").cast("long").as("rk"),
         col("term"), col("n"))
   }
-
-  /** Streaming sink: maintain the count state per micro-batch, hand
-    * the fresh top-k view to `sink`, commit only after it succeeds.
-    */
-  def topkSink(stream: DataFrame, textCol: String, groupCol: String,
-               statePath: String, k: Int,
-               sink: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    MergeableState.sink(stream, statePath)(
-      mergeBatch(_, textCol, groupCol, statePath))(m => sink(topK(m, k)))
 }

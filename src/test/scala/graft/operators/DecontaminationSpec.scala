@@ -28,11 +28,11 @@ class DecontaminationSpec extends SparkSpec {
       1L -> "the quick brown fox jumps high",
       2L -> "a totally unrelated sentence here")
     val eval = docs(10L -> "the quick brown fox")
-    val kept = Decontamination.decontaminate(corpus, eval, "text", "doc_id",
+    val kept = Decontamination.decontaminate(corpus, eval, "text",
       n = 3, minShared = 1)
     kept.select("doc_id").as[Long].collect() shouldBe Array(2L)
     // a stricter threshold spares the partial overlap
-    val kept3 = Decontamination.decontaminate(corpus, eval, "text", "doc_id",
+    val kept3 = Decontamination.decontaminate(corpus, eval, "text",
       n = 3, minShared = 3)
     kept3.select("doc_id").as[Long].collect().sorted shouldBe Array(1L, 2L)
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.plans.Orchestrator
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -15,24 +16,6 @@ class SnapshotStreamSpec extends SparkSpec {
 
   private def ev(id: Long, t: String, u: Long, typ: String = "stream") =
     Ev(id, ts(t), u, typ, 4.0, """{"k": 1}""")
-
-  test("stateful dedup drops cross-batch duplicates within watermark") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Ev]
-    val deduped = SnapshotStream.dedupedEvents(
-      in.toDF(), Seq("event_id"), watermark = "1 hour")
-    val q = deduped.writeStream.format("memory")
-      .queryName("dedup_out").outputMode("append").start()
-    in.addData(ev(1, "2024-01-01 10:00:00", 1), ev(2, "2024-01-01 10:01:00", 2))
-    q.processAllAvailable()
-    in.addData(ev(1, "2024-01-01 10:00:00", 1), ev(3, "2024-01-01 10:02:00", 3))
-    q.processAllAvailable()
-    val ids = spark.table("dedup_out").select("event_id")
-      .collect().map(_.getLong(0)).sorted
-    q.stop()
-    ids shouldBe Array(1L, 2L, 3L)
-  }
 
   test("streaming curated chain equals the batch transform result") {
     implicit val sq = spark.sqlContext
@@ -136,49 +119,20 @@ class SnapshotStreamSpec extends SparkSpec {
     out shouldBe Map("a" -> 3L, "b" -> 1L)
   }
 
-  test("session_window groups events by gap, closing after the watermark") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Ev]
-    val q = SnapshotStream.sessionCounts(in.toDF(), "user_id", gap = "10 minutes",
-        watermark = "0 seconds")
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    in.addData(
-      ev(1, "2024-01-01 10:00:00", 1), ev(2, "2024-01-01 10:05:00", 1), // one session
-      ev(3, "2024-01-01 11:00:00", 1)) // new session after >10min gap
-    q.processAllAvailable()
-    in.addData(ev(9, "2024-01-01 13:00:00", 9)) // advance watermark
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("sess_out").filter("user_id = 1")
-      .orderBy("session_start").collect()
-    out.map(_.getAs[Long]("n_events")).toSeq shouldBe Seq(2L, 1L)
-  }
-
   test("dimension upsert sink emits only never-seen keys per batch") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val dimDir = Files.createTempDirectory("dim").toString
+    val dim = Files.createTempDirectory("dim").toString + "/current"
     val ckpt = Files.createTempDirectory("ckpt").toString
     @volatile var deltas = Vector.empty[Set[Long]]
 
-    def loadDim(s: org.apache.spark.sql.SparkSession) =
-      try s.read.parquet(s"$dimDir/current") catch {
-        case _: Throwable => s.range(0).select(col("id").as("user_id"))
-      }
-    def saveDelta(d: org.apache.spark.sql.DataFrame): Unit = {
-      deltas = deltas :+ d.select("user_id").collect().map(_.getLong(0)).toSet
-      val cur = loadDim(d.sparkSession).unionByName(d.select("user_id"))
-      cur.write.mode("overwrite").parquet(s"$dimDir/current_next")
-      // two-phase to avoid reading the dir being overwritten
-      d.sparkSession.read.parquet(s"$dimDir/current_next")
-        .write.mode("overwrite").parquet(s"$dimDir/current")
-    }
-
+    // each micro-batch runs the batch chain's upsert, which swaps the
+    // dim in itself, so the step's commit is empty
     val in = MemoryStream[Ev]
-    val w = SnapshotStream.dimUpsertSink(
-      in.toDF().select("user_id"), Seq("user_id"), loadDim, saveDelta)
+    val w = MergeableState.sink(in.toDF().select("user_id")) { b =>
+      MergeableState.Step(Orchestrator.upsertDim(
+        b.sparkSession, b.distinct(), dim, Seq("user_id")))
+    }(d => deltas = deltas :+ d.select("user_id").as[Long].collect().toSet)
     val q = w.option("checkpointLocation", ckpt).start()
     in.addData(ev(1, "2024-01-01 10:00:00", 10), ev(2, "2024-01-01 10:00:01", 11))
     q.processAllAvailable()
@@ -186,5 +140,6 @@ class SnapshotStreamSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     deltas shouldBe Vector(Set(10L, 11L), Set(12L))
+    spark.read.parquet(dim).as[Long].collect().toSet shouldBe Set(10L, 11L, 12L)
   }
 }

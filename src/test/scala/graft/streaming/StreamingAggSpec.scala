@@ -55,8 +55,9 @@ class StreamingAggSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("agg_ck").toString
     @volatile var last: Map[(String, String), (Long, Double)] = Map.empty
     val in = MemoryStream[AgEv]
-    val q = StreamingAgg.aggSink(toTs(in.toDF()), "ts", "event_type", "value", st,
-        b => last = mv(b))
+    val q = MergeableState.sink(toTs(in.toDF())) { b =>
+        MergeableState.swap(StreamingAgg.mergeBatch(b, "ts", "event_type", "value", st), st)
+      }(b => last = mv(b))
       .option("checkpointLocation", ckpt).start()
     in.addData(AgEv(1, 1000, "click", 1.50))
     q.processAllAvailable()

@@ -58,8 +58,8 @@ class StreamingBudgetSpec extends SparkSpec {
   test("a replayed batch re-screens identically against uncommitted state") {
     val state = tmp()
     val batch = docs((1L, "g", 40L), (2L, "g", 40L), (3L, "g", 40L))
-    val (a1, _) = StreamingBudget.screenBatch(batch, "id", "g", col("n"), 100L, state)
-    val (a2, _) = StreamingBudget.screenBatch(batch, "id", "g", col("n"), 100L, state)
+    val a1 = StreamingBudget.screenBatch(batch, "id", "g", col("n"), 100L, state).rows
+    val a2 = StreamingBudget.screenBatch(batch, "id", "g", col("n"), 100L, state).rows
     a1.exceptAll(a2).count() shouldBe 0L
     a2.exceptAll(a1).count() shouldBe 0L
   }
@@ -77,9 +77,9 @@ class StreamingBudgetSpec extends SparkSpec {
     StreamingBudget.acceptBatch(
       docs((1L, "g", 60L)), "id", "g", col("n"), 100L, state).count() shouldBe 1L
     // simulate a later failed cycle that never commits: state unchanged
-    val (_, newSpent) = StreamingBudget.screenBatch(
+    val failed = StreamingBudget.screenBatch(
       docs((2L, "g", 60L)), "id", "g", col("n"), 100L, state)
-    newSpent.count() // evaluated but NOT committed
+    failed.rows.count() // evaluated but NOT committed
     val t2 = StreamingBudget.acceptBatch(
       docs((3L, "g", 60L)), "id", "g", col("n"), 100L, state)
     t2.count() shouldBe 1L // before=60 < 100: only the first batch spent

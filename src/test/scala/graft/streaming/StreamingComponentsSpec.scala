@@ -75,8 +75,9 @@ class StreamingComponentsSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("cc_ck").toString
     @volatile var ticks = Vector.empty[Map[Long, Long]]
     val in = MemoryStream[(Long, Long)]
-    val w = StreamingComponents.componentSink(
-      in.toDF().toDF("id_a", "id_b"), st,
+    // the fold commits its own state: the step's commit is empty
+    val w = MergeableState.sink(in.toDF().toDF("id_a", "id_b"))(
+        b => MergeableState.Step(StreamingComponents.acceptEdges(b, st)))(
       b => ticks = ticks :+ resolve(b))
     val q = w.option("checkpointLocation", ckpt).start()
     in.addData(1L -> 2L, 5L -> 6L)

@@ -164,7 +164,8 @@ class StreamingCurationSpec extends SparkSpec {
     @volatile var accepted = Vector.empty[Long]
 
     val in = MemoryStream[Doc]
-    val w = StreamingCuration.curationSink(in.toDF(), "text", "doc_id", state,
+    val w = MergeableState.sink(in.toDF())(
+        StreamingCuration.screenBatch(_, "text", "doc_id", state))(
       b => accepted = accepted ++ b.select("doc_id").collect().map(_.getLong(0)))
     val q = w.option("checkpointLocation", ckpt).start()
     in.addData(Doc(10, good), Doc(11, junk))

@@ -59,7 +59,8 @@ class StreamingDedupSpec extends SparkSpec {
     @volatile var accepted = Vector.empty[Long]
 
     val in = MemoryStream[Doc]
-    val w = StreamingDedup.dedupSink(in.toDF(), "text", "doc_id", table,
+    val w = MergeableState.sink(in.toDF())(
+        StreamingDedup.screenBatch(_, "text", "doc_id", table))(
       b => accepted = accepted ++ b.select("doc_id").collect().map(_.getLong(0)))
     val q = w.option("checkpointLocation", ckpt).start()
     in.addData(Doc(10, base), Doc(11, other))

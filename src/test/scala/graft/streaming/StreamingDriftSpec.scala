@@ -69,7 +69,8 @@ class StreamingDriftSpec extends SparkSpec {
       (1L to 4L).map(i => DrRow(i, 1L)).toDF(), "v", st)
     @volatile var scores = Vector.empty[Double]
     val in = MemoryStream[DrRow]
-    val q = StreamingDrift.driftSink(in.toDF(), "v", st,
+    val q = MergeableState.sink(in.toDF())(
+        b => MergeableState.Step(StreamingDrift.screenBatch(b, "v", st)))(
         b => scores = scores :+ report(b)._3)
       .option("checkpointLocation", ckpt).start()
     try {

@@ -1,18 +1,20 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 
-/** Restart-from-checkpoint recovery for the curation sink: the stream
-  * stops (crash stand-in) after processing some input, a NEW query
-  * starts from the same checkpoint over the same source, and the
-  * union of sink outputs must be exactly the batch answer — no lost
-  * batches, no doubled docs. This is the property the retry-safe
-  * state-commit ordering (sink first, state append after) exists
-  * for; a file source + checkpointLocation is the restartable shape
-  * (MemoryStream cannot recover across query instances).
+/** Restart-from-checkpoint recovery through `MergeableState.sink`: the
+  * stream stops (a clean stop, or a failed emit) after processing some
+  * input, a NEW query starts from the same checkpoint over the same
+  * source, and the union of sink outputs must be exactly the batch
+  * answer — no lost batches, no doubled docs. This is the property the
+  * retry-safe state-commit ordering (emit first, state commit after)
+  * exists for; a file source + checkpointLocation is the restartable
+  * shape (MemoryStream cannot recover across query instances).
   */
 class StreamingRestartSpec extends SparkSpec {
 
@@ -43,7 +45,8 @@ class StreamingRestartSpec extends SparkSpec {
 
     def run(): Unit = {
       val in = spark.readStream.schema(schema).parquet(s"$dir/*.parquet")
-      val q = StreamingCuration.curationSink(in, "text", "doc_id", state,
+      val q = MergeableState.sink(in)(
+          StreamingCuration.screenBatch(_, "text", "doc_id", state))(
           b => accepted = accepted ++ b.select("doc_id").collect().map(_.getLong(0)))
         .option("checkpointLocation", ckpt)
         .start()
@@ -66,5 +69,60 @@ class StreamingRestartSpec extends SparkSpec {
     // phase 3: nothing new -> restart must not reprocess anything
     run()
     accepted.sorted shouldBe Vector(1L, 4L, 5L)
+  }
+
+  test("a state commits only after its emit succeeds: a failed emit replays cleanly") {
+    val implicits = spark.implicits; import implicits._
+    val dir = Files.createTempDirectory("emitfail_src").toString
+    val docs = Seq(
+      (1L, "a", 40L, good), (2L, "a", 40L, goodB), (3L, "a", 40L, goodC),
+      (4L, "b", 90L, good + " tail"), (5L, "b", 30L, goodB + " again"))
+      .toDF("doc_id", "g", "n", "text")
+    // one file, so the stream's one micro-batch is the whole input
+    docs.coalesce(1).write.parquet(s"$dir/staged")
+    new java.io.File(s"$dir/staged").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.move(f.toPath, java.nio.file.Paths.get(s"$dir/docs.parquet")))
+
+    // run the stream with an emit that throws on its first call, then
+    // restart it from its checkpoint; returns the emitted doc ids
+    def failThenResume(step: DataFrame => MergeableState.Step): Vector[Long] = {
+      val ckpt = Files.createTempDirectory("emitfail_ck").toString
+      @volatile var calls = 0
+      @volatile var emitted = Vector.empty[Long]
+      def run(): Unit = SnapshotStream.runOnce(
+        MergeableState.sink(spark.readStream.schema(docs.schema)
+            .parquet(s"$dir/*.parquet"))(step) { b =>
+          calls += 1
+          if (calls == 1) throw new IllegalStateException("emit fails once")
+          emitted = emitted ++ b.select("doc_id").as[Long].collect()
+        }, ckpt)
+      intercept[StreamingQueryException](run())
+      emitted shouldBe empty
+      run()
+      calls shouldBe 2
+      emitted.sorted
+    }
+    def tmp(leaf: String) = Files.createTempDirectory("emitfail_state").toString + "/" + leaf
+    def ids(df: DataFrame) = df.select("doc_id").as[Long].collect().toVector.sorted
+
+    // swap state: the token budget's per-group totals
+    val spent = tmp("spent")
+    val spentOnce = tmp("spent")
+    val budgeted = failThenResume(
+      StreamingBudget.screenBatch(_, "doc_id", "g", col("n"), 100L, spent))
+    budgeted shouldBe ids(StreamingBudget.acceptBatch(
+      docs, "doc_id", "g", col("n"), 100L, spentOnce))
+    def totals(p: String) = spark.read.parquet(p).as[(String, Long)].collect().toSet
+    totals(spent) shouldBe totals(spentOnce)
+
+    // append state: the near-dup band table
+    val bands = tmp("bands")
+    val bandsOnce = tmp("bands")
+    val deduped = failThenResume(StreamingDedup.screenBatch(_, "text", "doc_id", bands))
+    deduped shouldBe ids(StreamingDedup.acceptBatch(docs, "text", "doc_id", bandsOnce))
+    def bandRows(p: String) =
+      spark.read.parquet(p).as[(Long, String)].collect().toVector.sorted
+    bandRows(bands) shouldBe bandRows(bandsOnce)
   }
 }

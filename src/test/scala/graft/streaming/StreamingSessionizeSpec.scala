@@ -19,9 +19,9 @@ class StreamingSessionizeSpec extends SparkSpec {
     @volatile var emitted = Vector.empty[(Long, Long, Long, Long)]
 
     val in = MemoryStream[SEv]
-    val w = StreamingSessionize.sessionSink(
-      toTs(in.toDF()), "user_id", "ts", gapSeconds = 60,
-      watermarkDelay = "0 seconds") { b =>
+    val w = MergeableState.sink(StreamingSessionize.sessions(
+        toTs(in.toDF()), "user_id", "ts", gapSeconds = 60,
+        watermarkDelay = Some("0 seconds")))(MergeableState.Step(_)) { b =>
       emitted = emitted ++ b.collect().map(r => (r.getLong(0),
         r.getTimestamp(1).getTime / 1000, r.getTimestamp(2).getTime / 1000,
         r.getLong(3)))

@@ -70,8 +70,12 @@ class StreamingTopKSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("tk_ck").toString
     @volatile var last: Map[String, String] = Map.empty
     val in = MemoryStream[TkDoc]
-    val q = StreamingTopK.topkSink(in.toDF(), "text", "source", st, k = 1,
-        b => last = b.collect().map(r => r.getString(0) -> r.getString(2)).toMap)
+    val q = MergeableState.sink(in.toDF()) { b =>
+        MergeableState.swap(StreamingTopK.mergeBatch(b, "text", "source", st), st)
+      } { b =>
+        last = StreamingTopK.topK(b, 1).collect()
+          .map(r => r.getString(0) -> r.getString(2)).toMap
+      }
       .option("checkpointLocation", ckpt).start()
     in.addData(rows.take(2): _*)
     q.processAllAvailable()
